@@ -59,7 +59,9 @@ object FluFeeds {
       FluSchemas.fluview, transport)
 
   /** Cold-start pipeline: fetch all three feeds and build the five
-    * star-schema tables (reference task graph :749-764).
+    * star-schema tables (reference task graph :749-764) eagerly, once
+    * per batch: each feed is parsed once, the RHINO arrival order is
+    * pinned, every table comes back materialized ([[FluOps.buildAll]]).
     */
   def buildFromFeeds(spark: SparkSession,
                      transport: Fetch.Transport): Map[String, DataFrame] =

@@ -1,6 +1,7 @@
 package graft.flu
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,8 @@ import graft.operators.Relational._
   * Each builder is a pure DataFrame → DataFrame function mirroring one
   * table of the reference ETL (dags/flu_data_airflow_v2.py:319-459).
   * Dimension lookups broadcast; the only shuffles are the group-bys that
-  * the semantics require. Lazy composition means Catalyst sees the whole
-  * lineage (the reference materializes every intermediate eagerly).
+  * the semantics require. [[buildAll]] runs them eagerly, once per batch
+  * (as the reference does), so writes and checks never re-read the feed.
   */
 object FluOps {
 
@@ -103,8 +104,8 @@ object FluOps {
         col("Season").as("season"))
       .orderBy("epiweek_id")
 
-  /** Table 3 — illness (reference :365-387). `orderCol` carries the raw
-    * input order so the keep-first dedup (:376) is reproducible — at
+  /** Table 3 — illness (reference :365-387). `orderCol` carries the
+    * unique raw input order, so the keep-first dedup (:376) is exact — at
     * scale, zipWithIndexOrdered or a file+row-position column provides
     * it; pandas got it implicitly from single-process file order.
     */
@@ -126,9 +127,11 @@ object FluOps {
         col("epiweek_id") === col("epiweek"), "left")
       .withColumnRenamed("wili", "state_ili_percent")
       .drop("epiweek")
-    dedupKeepFirst(withState,
-        Seq("epiweek_id", "county_id", "Respiratory Illness Category", "Care Type"),
-        Seq(col(orderCol).asc))
+    val keys = Seq("epiweek_id", "county_id", "Respiratory Illness Category", "Care Type")
+    // key order within partitions: the written table and its capped
+    // export list rows by key, and report scans read clustered keys
+    dedupKeepFirstAgg(withState, keys, Seq(orderCol))
+      .sortWithinPartitions(keys.map(col): _*)
       .withColumn("deviation_from_state_average",
         col("1-Week Percent_cleaned") - col("state_ili_percent"))
       .select(
@@ -199,36 +202,54 @@ object FluOps {
   }
 
   /** Full pipeline: raw feeds → the five tables (reference task graph
-    * :749-764, collapsed into one lazy Catalyst lineage).
+    * :749-764), eager and once per batch: the shared intermediates
+    * (exploded RHINO, county_region) and every returned table are local
+    * checkpoints — single `LogicalRDD` leaves — so `orderCol` is pinned
+    * for the batch and no later scan re-reads the feed. The exploded
+    * frame is released before returning.
     */
   def buildAll(rawRhino: DataFrame, census: DataFrame, fluview: DataFrame,
                orderCol: String): Map[String, DataFrame] = {
-    val exploded = withEpiweekId(explodeRhino(rawRhino))
-    val countyRegion = buildCountyRegion(census, exploded)
-    Map(
+    def once(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    val exploded = once(withEpiweekId(explodeRhino(rawRhino)))
+    val countyRegion = once(buildCountyRegion(census, exploded))
+    val tables = Map(
       "county_region" -> countyRegion,
-      "temporal" -> buildTemporal(exploded),
-      "illness" -> buildIllness(exploded, countyRegion, fluview, orderCol),
-      "healthcare" -> buildHealthcare(countyRegion, exploded),
-      "historics" -> buildHistorics(fluview))
+      "temporal" -> once(buildTemporal(exploded)),
+      "illness" -> once(buildIllness(exploded, countyRegion, fluview, orderCol)),
+      "healthcare" -> once(buildHealthcare(countyRegion, exploded)),
+      "historics" -> once(buildHistorics(fluview)))
+    exploded.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.unpersist(false) }
+    tables
   }
 
   /** PK / FK / domain assertions standing in for the Postgres
     * constraints (reference DDL :486-546) — Spark doesn't enforce
-    * constraints, so violations are surfaced as counts.
+    * constraints, so violations are surfaced as counts: keys held by
+    * more than one row per PK, orphan rows for the FK. One query: every
+    * row becomes (check, key as exact strings, rows, refs), grouped per
+    * key, then per check.
     */
   def constraintViolations(tables: Map[String, DataFrame]): Map[String, Long] = {
-    def dupes(df: DataFrame, keys: String*): Long =
-      df.groupBy(keys.map(col): _*).count().filter(col("count") > 1).count()
-    val cr = tables("county_region")
-    val il = tables("illness")
-    Map(
-      "county_region.pk" -> dupes(cr, "county_id"),
-      "temporal.pk" -> dupes(tables("temporal"), "epiweek_id"),
-      "illness.pk" -> dupes(il, "epiweek_id", "county_id",
-        "respiratory_illness_type", "care_type"),
-      "healthcare.pk" -> dupes(tables("healthcare"), "county_id"),
-      "historics.pk" -> dupes(tables("historics"), "year"),
-      "illness.fk_county" -> il.join(cr, Seq("county_id"), "left_anti").count())
+    val fk = "illness.fk_county"
+    // (check, table, key columns, 1 for the rows the FK references)
+    val checks = Seq(
+      ("county_region.pk", "county_region", Seq("county_id"), 0),
+      ("temporal.pk", "temporal", Seq("epiweek_id"), 0),
+      ("illness.pk", "illness", Seq("epiweek_id", "county_id", "respiratory_illness_type", "care_type"), 0),
+      ("healthcare.pk", "healthcare", Seq("county_id"), 0),
+      ("historics.pk", "historics", Seq("year"), 0),
+      (fk, "illness", Seq("county_id"), 0),
+      (fk, "county_region", Seq("county_id"), 1))
+    val found = checks.map { case (check, t, keys, ref) =>
+        tables(t).select(lit(check).as("check"), array(keys.map(col(_).cast("string")): _*).as("key"),
+          lit(1 - ref).as("rows"), lit(ref).as("refs"))
+      }.reduce(_ union _)
+      .groupBy("check", "key").agg(sum("rows").as("rows"), sum("refs").as("refs"))
+      // a null key matches nothing, as in a SQL anti-join
+      .groupBy("check").agg(sum(when(col("check") =!= fk, (col("rows") > 1).cast("long"))
+        .when(col("refs") === 0 || col("key")(0).isNull, col("rows")).otherwise(0L)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    checks.map(c => c._1 -> found.getOrElse(c._1, 0L)).toMap
   }
 }

@@ -27,24 +27,6 @@ object FluSchemas {
     StructField("Demographic Category", StringType),
     StructField("1-Week Percent ", StringType)))
 
-  /** WA DOH RHINO feed after the ACH→county explosion (reference:
-    * dags/flu_data_airflow_v2.py:46-139). Column names preserved verbatim
-    * — including the trailing space in "1-Week Percent " (reference
-    * :154).
-    */
-  val rhinoExploded: StructType = StructType(Seq(
-    StructField("Location", StringType),
-    StructField("county", StringType),
-    StructField("Week Start", StringType),
-    StructField("Week End", StringType),
-    StructField("Week", IntegerType),
-    StructField("Season", StringType),
-    StructField("Respiratory Illness Category", StringType),
-    StructField("Care Type", StringType),
-    StructField("Demographic Category", StringType),
-    StructField("1-Week Percent ", StringType),
-    StructField("source", StringType)))
-
   /** WA census population-density feed (reference: :216-239). */
   val census: StructType = StructType(Seq(
     StructField("County Name", StringType),

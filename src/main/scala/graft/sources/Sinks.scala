@@ -44,12 +44,6 @@ object Sinks {
   def upsertKeepFirst(df: DataFrame, pk: Seq[String], arrivalOrder: Column): DataFrame =
     dedupKeepFirst(df, pk, Seq(arrivalOrder))
 
-  /** Overwrite-register as a temp view — the engine's analogue of the
-    * reference's DROP TABLE + CREATE + load cycle (K3).
-    */
-  def registerView(df: DataFrame, name: String): Unit =
-    df.createOrReplaceTempView(name)
-
   /** PK uniqueness check to run after a load (the constraint Postgres
     * enforced; reference DDL :486-546).
     */

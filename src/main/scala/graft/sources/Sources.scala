@@ -34,11 +34,7 @@ object Sources {
     spark.read.schema(schema).json(records.toDS())
   }
 
-  /** Parquet with pinned schema — the engine's preferred interchange. */
-  def parquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
-  /** ORC with pinned schema — the other columnar interchange a lake
+  /** ORC with pinned schema — the columnar interchange a lake
     * migration encounters (Hive-era tables). Same pushdown/pruning
     * properties as parquet through Spark's vectorized ORC reader.
     */

@@ -1,9 +1,13 @@
 package graft.flu
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.Sinks
 
 /** End-to-end star-schema build on a hand-computed fixture that
   * exercises every semantic corner SURVEY §7.4 flags: multi-ACH
@@ -92,5 +96,40 @@ class FluPipelineSpec extends SparkSpec {
   test("constraint suite: PKs, FKs hold on the fixture build") {
     val violations = FluOps.constraintViolations(tables)
     assert(violations.values.forall(_ == 0L), s"violations: $violations")
+  }
+
+  test("constraint suite: planted PK duplicates and FK orphans are counted exactly") {
+    val planted = rawRhino.union(Seq(
+      // Week 52 ending Jan 1 2022 takes 2022's year: id 202252, the same
+      // as the real week 52 of 2022 → two temporal rows, one key
+      (9L, "Healthier Here", "2021-12-26", "2022-01-01", 52, "2021-22", "Flu", "Hospitalizations", "Overall", "3.0"),
+      (10L, "Healthier Here", "2022-12-25", "2022-12-31", 52, "2022-23", "Flu", "Hospitalizations", "Overall", "4.0"),
+      // Yakima and Kittitas are not in the census → illness rows with no
+      // county_region row (two care types → two orphan rows)
+      (11L, "Elevate Health", "2023-12-31", "2024-01-06", 1, "2023-24", "Flu", "Hospitalizations", "Overall", "1.0"),
+      (12L, "Elevate Health", "2023-12-31", "2024-01-06", 1, "2023-24", "Flu", "Emergency Visits", "Overall", "1.0"))
+      .toDF(rawRhino.columns.toSeq: _*))
+    val built = FluOps.buildAll(planted, census, fluview, "_ord")
+    val cr = built("county_region")
+    val withDupId = built + ("county_region" -> cr.union(cr.filter(col("county_id") === 3)))
+    assert(FluOps.constraintViolations(withDupId) == Map(
+      "county_region.pk" -> 1L, "temporal.pk" -> 1L, "illness.pk" -> 0L,
+      "healthcare.pk" -> 0L, "historics.pk" -> 0L, "illness.fk_county" -> 2L))
+  }
+
+  test("buildAll computes the batch once: materialized tables, writes and checks never re-read the feed") {
+    val evaluated = spark.sparkContext.longAccumulator("rhino rows evaluated")
+    val probe = udf { () => evaluated.add(1L); true }.asNondeterministic()
+    val built = FluOps.buildAll(rawRhino.withColumn("_probe", probe()), census, fluview, "_ord")
+    assert(evaluated.value == rawRhino.count(), "the feed is evaluated exactly once per batch")
+    built.foreach { case (t, df) =>
+      assert(df.queryExecution.analyzed.isInstanceOf[LogicalRDD], s"$t is not materialized")
+    }
+    val dir = Files.createTempDirectory("flu-tables")
+    try {
+      built.foreach { case (t, df) => Sinks.parquet(df, s"$dir/$t") }
+      assert(FluOps.constraintViolations(built).values.forall(_ == 0L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    assert(evaluated.value == rawRhino.count(), "writes or checks re-read the feed")
   }
 }

@@ -83,6 +83,13 @@ class FetchSpec extends SparkSpec {
     assert(e.getMessage.contains("result=2") && e.getMessage.contains("no results"))
   }
 
+  test("buildFromFeeds returns every table materialized as a single LogicalRDD leaf") {
+    FluFeeds.buildFromFeeds(spark, transport).foreach { case (t, df) =>
+      assert(df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+        s"$t is still a lazy plan:\n${df.queryExecution.analyzed}")
+    }
+  }
+
   test("buildFromFeeds equals the in-memory fixture build for all five tables") {
     val fromFeeds = FluFeeds.buildFromFeeds(spark, transport)
     val fromFixture = FluOps.buildAll(fixtureRhino, fixtureCensus, fixtureFluview, "_ord")

@@ -37,22 +37,33 @@ object GraftSession {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite &&
           shm.getUsableSpace >= MinShmUsableBytes) {
-        val d = new java.io.File(shm, "graft_spark_local")
+        val root = new java.io.File(shm, "graft_spark_local")
+        // a crashed JVM leaks its scratch in RAM until reboot: each JVM
+        // works under its own <pid> subdir, and the dirs of JVMs that
+        // are gone are swept
+        sweepDeadOwners(root)
+        val d = new java.io.File(root, ProcessHandle.current().pid.toString)
         d.mkdirs()
-        // a crashed JVM leaks its spark-<uuid> scratch subdir in RAM
-        // until reboot; sweep anything untouched for a day (live
-        // sessions are hours at most here, and Spark removes its own
-        // dir on clean shutdown)
-        val dayAgo = System.currentTimeMillis() - 24L * 3600 * 1000
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.lastModified < dayAgo)
-          .foreach(deleteRecursively)
         d.getAbsolutePath
       } else System.getProperty("java.io.tmpdir", "/tmp")
     })
 
+  /** Delete the `<pid>` subdirs of `root` whose process is no longer
+    * running. Only the owner's liveness counts, never a dir's age: a
+    * long session's top-level mtime stops moving while it still writes
+    * deeper down. Entries not named by a pid are left alone. A pid is
+    * only meaningful in this PID namespace, so `root` must not be shared
+    * with JVMs in other containers.
+    */
+  private[graft] def sweepDeadOwners(root: java.io.File): Unit =
+    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
+      val pid = Some(f.getName).filter(n => n.nonEmpty && n.forall(_.isDigit)).flatMap(_.toLongOption)
+      if (f.isDirectory && pid.exists(p => !ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false)))
+        deleteRecursively(f)
+    }
+
   private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete()
     ()

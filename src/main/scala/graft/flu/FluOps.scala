@@ -1,9 +1,9 @@
 package graft.flu
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge.releaseCheckpoint
 
 import graft.functions.ScalarFunctions.cleanPercentage
 import graft.operators.Relational._
@@ -11,10 +11,14 @@ import graft.operators.Relational._
 /** The flu-surveillance star-schema build, re-expressed Spark-first.
   *
   * Each builder is a pure DataFrame → DataFrame function mirroring one
-  * table of the reference ETL (dags/flu_data_airflow_v2.py:319-459).
-  * Dimension lookups broadcast; the only shuffles are the group-bys that
-  * the semantics require. [[buildAll]] runs them eagerly, once per batch
-  * (as the reference does), so writes and checks never re-read the feed.
+  * table of the reference ETL (dags/flu_data_airflow_v2.py:319-459) and
+  * takes the explode-first frame the reference builds
+  * ([[withEpiweekId]] of [[explodeRhino]]). Dimension lookups broadcast.
+  * [[buildAll]] runs them eagerly, once per batch (as the reference
+  * does), so writes and checks never re-read the feed. It feeds them
+  * per-Location reductions of the feed and explodes only those, so the
+  * group-bys shuffle the feed's distinct keys, not its exploded
+  * demographic duplicates.
   */
 object FluOps {
 
@@ -50,17 +54,24 @@ object FluOps {
   }
 
   /** Statewide/Unassigned filter + ACH→county explosion + percent
-    * cleaning (reference :101-154). A LEFT broadcast join reproduces the
-    * pandas map-then-explode exactly: unmapped Locations keep one row
-    * with a null county.
+    * cleaning (reference :101-154).
     */
-  def explodeRhino(raw: DataFrame): DataFrame = {
-    val mapping = achMapping(raw.sparkSession)
+  def explodeRhino(raw: DataFrame): DataFrame = explodeAch(cleanRhino(raw))
+
+  /** The row-wise half of [[explodeRhino]]: drop the Statewide and
+    * Unassigned rows, add the cleaned percent.
+    */
+  private def cleanRhino(raw: DataFrame): DataFrame =
     raw
       .filter(!col("Location").isin("Statewide", "Unassigned ACH Region"))
-      .join(broadcast(mapping), Seq("Location"), "left")
       .withColumn("1-Week Percent_cleaned", cleanPercentage(col("1-Week Percent ")))
-  }
+
+  /** One row per (row, county of its ACH), a `county` column added. A
+    * LEFT broadcast join reproduces the pandas map-then-explode exactly:
+    * unmapped Locations keep one row with a null county.
+    */
+  private def explodeAch(rhino: DataFrame): DataFrame =
+    rhino.join(broadcast(achMapping(rhino.sparkSession)), Seq("Location"), "left")
 
   /** epiweek_id = year-from-week_end-string ++ zero-padded raw Week
     * column (reference :350 — the year-boundary quirk is the point:
@@ -202,24 +213,47 @@ object FluOps {
   }
 
   /** Full pipeline: raw feeds → the five tables (reference task graph
-    * :749-764), eager and once per batch: the shared intermediates
-    * (exploded RHINO, county_region) and every returned table are local
-    * checkpoints — single `LogicalRDD` leaves — so `orderCol` is pinned
-    * for the batch and no later scan re-reads the feed. The exploded
-    * frame is released before returning.
+    * :749-764), eager and once per batch. The filtered, cleaned,
+    * epiweek-tagged feed is checkpointed unexploded, and two per-Location
+    * reductions of it are exploded instead of the feed itself:
+    *
+    *  - `firstPerLoc`, the first row by `orderCol` per (Location, week,
+    *    illness, care), feeds temporal, county_region and illness;
+    *  - `pcts`, the distinct (Location, illness, care, percent) rows,
+    *    feeds healthcare.
+    *
+    * This is eager aggregation (Yan & Larson, VLDB 1995) and it is exact.
+    * The explode maps each row by its Location alone, so every exploded
+    * row's illness key (epiweek, county_id, illness, care) is a function
+    * of its pre-explode key and its county: the first row per illness
+    * key is the first of the per-Location firsts, even where one county
+    * sits in two ACHs (Spokane) or a null county_id merges counties.
+    * Distinct commutes with the explode, and temporal and county_region
+    * read only values every kept row's key group still carries.
+    *
+    * `orderCol` is pinned for the batch and no later scan re-reads the
+    * feed: the intermediates and every returned table are local
+    * checkpoints (single `LogicalRDD` leaves), and the intermediates'
+    * blocks are released before returning.
     */
   def buildAll(rawRhino: DataFrame, census: DataFrame, fluview: DataFrame,
                orderCol: String): Map[String, DataFrame] = {
     def once(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    val exploded = once(withEpiweekId(explodeRhino(rawRhino)))
-    val countyRegion = once(buildCountyRegion(census, exploded))
+    val (illness, care, pct) = ("Respiratory Illness Category", "Care Type", "1-Week Percent_cleaned")
+    val rhino = once(withEpiweekId(cleanRhino(rawRhino)))
+    val keys = Seq("Location", "epiweek_id", "Week Start", "Week End", "Season", illness, care)
+    val firstPerLoc = once(dedupKeepFirstAgg(
+      rhino.select((keys :+ pct :+ orderCol).map(col): _*), keys, Seq(orderCol)))
+    val pcts = rhino.select("Location", illness, care, pct).distinct()
+    val firsts = explodeAch(firstPerLoc)
+    val countyRegion = once(buildCountyRegion(census, firsts))
     val tables = Map(
       "county_region" -> countyRegion,
-      "temporal" -> once(buildTemporal(exploded)),
-      "illness" -> once(buildIllness(exploded, countyRegion, fluview, orderCol)),
-      "healthcare" -> once(buildHealthcare(countyRegion, exploded)),
+      "temporal" -> once(buildTemporal(firstPerLoc)),
+      "illness" -> once(buildIllness(firsts, countyRegion, fluview, orderCol)),
+      "healthcare" -> once(buildHealthcare(countyRegion, explodeAch(pcts))),
       "historics" -> once(buildHistorics(fluview)))
-    exploded.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.unpersist(false) }
+    Seq(rhino, firstPerLoc).foreach(releaseCheckpoint)
     tables
   }
 

@@ -8,7 +8,7 @@ import java.time.Duration
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -74,18 +74,19 @@ object Fetch {
     * @param orderCol if set, adds a strictly increasing arrival-order
     *   column (file line order) of that name — the determinism anchor
     *   keep-first dedup needs (pandas drop_duplicates keeps file order).
-    *   Line order survives because a parallelized body splits into
-    *   contiguous ordered chunks and monotonically_increasing_id is
+    *   Line order survives because the body's lines are parallelized
+    *   into contiguous ordered slices and monotonically_increasing_id is
     *   increasing across ordered partitions.
-    * @note the body is split on line breaks, so multiline (embedded
+    * @note the lines go in as an RDD ([[Sources.lines]]), not as a
+    *   `LocalRelation`, so planning cost does not grow with the feed.
+    *   The body is split on line breaks, so multiline (embedded
     *   newline) CSV records are not supported here — land those as
     *   files and use [[Sources.csv]] with `multiLine`.
     */
   def csvFeed(spark: SparkSession, url: String, schema: StructType,
               transport: Transport, orderCol: Option[String] = None): DataFrame = {
     val body = transport(url)
-    val lines = spark.createDataset(body.linesIterator.toSeq)(Encoders.STRING)
-    val raw = spark.read.option("header", "true").csv(lines)
+    val raw = spark.read.option("header", "true").csv(Sources.lines(spark, body.linesIterator.toSeq))
     val ordered = orderCol.fold(raw)(c => raw.withColumn(c, monotonically_increasing_id()))
     val typed = schema.fields.toSeq.map(f => ordered(f.name).cast(f.dataType).as(f.name))
     ordered.select(typed ++ orderCol.map(ordered(_)): _*)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Ingestion surface (reference §2.1: CSV feeds S1/S2/S4, REST-JSON
@@ -29,10 +29,18 @@ object Sources {
     * payloads beyond driver memory, land them as files and use
     * `jsonFile`.
     */
-  def jsonRecords(spark: SparkSession, records: Seq[String], schema: StructType): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(schema).json(records.toDS())
-  }
+  def jsonRecords(spark: SparkSession, records: Seq[String], schema: StructType): DataFrame =
+    spark.read.schema(schema).json(lines(spark, records))
+
+  /** Driver-held text lines as a Dataset for the CSV/JSON readers,
+    * parallelized as an RDD in `defaultParallelism` contiguous, ordered
+    * slices. `createDataset(Seq)` would embed every line in the logical
+    * plan as a `LocalRelation`, which each analyzer and optimizer rule
+    * walks and which the readers' line filter then evaluates on the
+    * driver.
+    */
+  private[sources] def lines(spark: SparkSession, xs: Seq[String]): Dataset[String] =
+    spark.createDataset(spark.sparkContext.parallelize(xs))(Encoders.STRING)
 
   /** ORC with pinned schema — the columnar interchange a lake
     * migration encounters (Hive-era tables). Same pushdown/pruning

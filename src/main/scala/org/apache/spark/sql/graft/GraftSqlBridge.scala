@@ -4,13 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Narrow bridge into Spark's `private[sql]` classic internals, needed
-  * by custom logical plans (the standard technique every Spark
-  * extension library uses — a one-file package shim, no behavior):
+/** Narrow bridge into Spark's `private[sql]`/`private[spark]`
+  * internals, needed by custom logical plans (the standard technique
+  * every Spark extension library uses — a one-file package shim, no
+  * behavior):
   *
   *  - `ofRows`: wrap a hand-built LogicalPlan in a DataFrame;
   *  - `expr`: recover the Catalyst expression behind a public Column
-  *    (Spark 4 moved `Column.expr` behind the classic module).
+  *    (Spark 4 moved `Column.expr` behind the classic module);
+  *  - `releaseCheckpoint`: free a local checkpoint's blocks quietly.
   */
 object GraftSqlBridge {
 
@@ -20,6 +22,20 @@ object GraftSqlBridge {
 
   def expr(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Drop the cached blocks of a local checkpoint (every `LogicalRDD`
+    * leaf of `df`'s plan) once nothing will read it again. Unlike
+    * `RDD.unpersist`, this does not log the "locally checkpointed …
+    * cannot be recomputed after unpersisting" WARN, which is noise for
+    * a frame its owner has finished with.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit = {
+    val sc = df.sparkSession.sparkContext
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => sc.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
+  }
 
   /** Local checkpoint that KEEPS a hash partitioning (and optionally a
     * per-partition sort) visible to the planner.

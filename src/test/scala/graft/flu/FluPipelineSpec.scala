@@ -132,4 +132,67 @@ class FluPipelineSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     assert(evaluated.value == rawRhino.count(), "writes or checks re-read the feed")
   }
+
+  test("buildAll equals the explode-first composition of the builders for all five tables") {
+    val rnd = new scala.util.Random(11)
+    // (Week Start, Week End, Week, Season)
+    val weeks = Seq(
+      ("2022-12-25", "2022-12-31", 52, "2022-23"),
+      ("2023-01-01", "2023-01-07", 1, "2022-23"))
+    val locations = FluOps.achToCounties.map(_._1) ++
+      Seq("Statewide", "Unassigned ACH Region", "Mystery ACH") // the last one is unmapped
+    val grid = for {
+      loc <- locations; (ws, we, wk, season) <- weeks
+      ill <- Seq("Flu", "COVID-19"); care <- Seq("Hospitalizations", "Emergency Visits")
+      demo <- Seq("Overall", "Age 0-4", "Age 5-17")
+    } yield (loc, ws, we, wk, season, ill, care, demo, Seq("1.5", "2.0", "3.25", "", "N/A")(rnd.nextInt(5)))
+    // several demographic rows per key, in shuffled arrival order
+    val shuffled = grid.zip(rnd.shuffle(grid.indices.toList)).map {
+      case ((loc, ws, we, wk, season, ill, care, demo, pct), ord) =>
+        (ord.toLong, loc, ws, we, wk, season, ill, care, demo, pct)
+    }
+    // week 52 ending Jan 1 2022 takes 2022's year, so it shares id 202252
+    // with the real week 52; its one row arrives last, so it is never
+    // the first row of its (Location, epiweek_id, illness, care) group
+    val collision = (grid.size.toLong, "Healthier Here", "2021-12-26", "2022-01-01", 52, "2021-22",
+      "Flu", "Hospitalizations", "Overall", "7.0")
+    val raw = (shuffled :+ collision).toDF(rawRhino.columns.toSeq: _*)
+    // Yakima and Kittitas (Elevate Health) are missing: their rows and
+    // the unmapped Location's all get a null county_id
+    val census = FluOps.waCounties.filterNot(Set("Yakima", "Kittitas"))
+      .zipWithIndex.map { case (c, i) => (c, 10.0 + i) }.toDF("County Name", "Population Density 2020")
+    val fluview = Seq((202201, 1.0), (202252, 2.0), (202301, 3.0)).toDF("epiweek", "wili")
+
+    // Spokane is reported by both its ACHs, the later ACH's row first
+    val spokaneFirsts = raw.filter(col("Location").isin("Better Health Together", "Greater Health Now"))
+      .groupBy("Week Start", "Respiratory Illness Category", "Care Type")
+      .agg(min_by(col("Location"), col("_ord")).as("first"))
+    assert(spokaneFirsts.filter(col("first") === "Greater Health Now").count() > 0)
+
+    val exploded = FluOps.withEpiweekId(FluOps.explodeRhino(raw))
+    val countyRegion = FluOps.buildCountyRegion(census, exploded)
+    val explodeFirst = Map(
+      "county_region" -> countyRegion,
+      "temporal" -> FluOps.buildTemporal(exploded),
+      "illness" -> FluOps.buildIllness(exploded, countyRegion, fluview, "_ord"),
+      "healthcare" -> FluOps.buildHealthcare(countyRegion, exploded),
+      "historics" -> FluOps.buildHistorics(fluview))
+    val built = FluOps.buildAll(raw, census, fluview, "_ord")
+    assert(built("illness").filter(col("county_id").isNull).count() > 0)
+    assert(built("illness").count() < exploded.count())
+    explodeFirst.foreach { case (t, expected) =>
+      val cols = expected.columns.toSeq.map(col)
+      assertRowsEqual(rows(built(t).sort(cols: _*)), rows(expected.sort(cols: _*)),
+        tol = if (t == "healthcare") 1e-12 else 0.0)
+    }
+  }
+
+  test("buildAll leaves only the five returned tables cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val built = FluOps.buildAll(rawRhino, census, fluview, "_ord")
+    val tableRdds = built.values.flatMap(_.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }).toSet
+    assert(tableRdds.size == 5)
+    assert(sc.getPersistentRDDs.keySet -- before == tableRdds)
+  }
 }

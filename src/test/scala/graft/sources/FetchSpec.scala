@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 import graft.flu.{FluFeeds, FluOps, FluSchemas}
@@ -59,6 +61,29 @@ class FetchSpec extends SparkSpec {
     assert(ords.map(_.getString(1)).take(3).toSeq ==
       Seq("Statewide", "Unassigned ACH Region", "Healthier Here"))
     assert(ords.map(_.getLong(0)).toSeq == ords.map(_.getLong(0)).toSeq.sorted)
+  }
+
+  private def kvFeed(body: String): DataFrame = Fetch.csvFeed(spark, "u",
+    StructType(Seq(StructField("k", IntegerType), StructField("v", StringType))),
+    Fetch.snapshots(Map("u" -> body)), Some("_ord"))
+
+  test("csvFeed: the body stays out of the plan; _ord follows line order across partitions") {
+    val body = ("k,v" +: (1 to 1000).map(i => s"$i,v$i")).mkString("\n")
+    val feed = kvFeed(body)
+    def localRelations(plan: LogicalPlan) = plan.collect { case l: LocalRelation => l }
+    assert(localRelations(Sources.lines(spark, body.linesIterator.toSeq).queryExecution.analyzed).isEmpty)
+    assert(localRelations(feed.queryExecution.analyzed).isEmpty)
+    assert(feed.rdd.getNumPartitions > 1)
+    val got = feed.collect()
+    assert(got.map(_.getInt(0)).toSeq == (1 to 1000))
+    val ords = got.map(_.getLong(2))
+    assert(ords.zip(ords.tail).forall { case (a, b) => a < b })
+  }
+
+  test("csvFeed: blank lines and a trailing newline add no rows") {
+    def parse(body: String) = rows(kvFeed(body).select("k", "v"))
+    assert(parse("k,v\n1,a\n\n2,\n3,c\n") == Seq(Seq(1, "a"), Seq(2, null), Seq(3, "c")))
+    assert(parse("k,v\n1,a\n2,\n3,c") == parse("k,v\n1,a\n\n2,\n3,c\n"))
   }
 
   test("csvFeed: extra / reordered feed columns are ignored by name-based selection") {

@@ -5,37 +5,7 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's real core count — an explicit env var can
-    // still pin it (e.g. for comparing scaling curves)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the Spark default) - pathological for
-      // this engine, whose collect_list/collect_set/top-k aggregates
-      // routinely see 10^4-10^5 bounded-size groups per task. 2^17
-      // entries of bounded per-group state (<= a few hundred bytes each)
-      // is tens of MB per task at ANY scale factor or cluster size; the
-      // fallback still protects truly unbounded group counts.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // Tiny iterative shuffles write R files PER MAP TASK on the
-      // bypass-merge path (default threshold 200 covers every reduce
-      // count this engine's fixpoint loops use); jstack sampling showed
-      // loop tasks inside BypassMergeSortShuffleWriter stream setup,
-      // not compute. Threshold 2 routes them to the serialized
-      // (Unsafe) writer: ONE file + index per map task. Shuffles with
-      // > 200 reducers (any real-scale exchange) never used bypass, so
-      // the setting is inert at cluster scale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_bench_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     // Encoding-drift canary (throws on drift) + the data fingerprint the
     // record is stamped with: per-table row counts, decoded ts year
     // range, and parquet file mtimes. A claim in BASELINE.md is only
@@ -819,7 +789,6 @@ object Bench {
       // 16x) and wall ~linearly.
       stampBlock("substring_scale")
       def runsAt(n: Long): (Double, Long) = {
-        graft.expressions.GraftExtensions.register(spark)
         val docs = spark.range(0L, n).select(col("id").as("doc_id"),
           concat_ws(" ",
             expr("concat_ws(' ', transform(sequence(0, 9), j -> concat('u', id, '_', j)))"),
@@ -852,7 +821,6 @@ object Bench {
       stampBlock("incdup")
       val incN = 4000L
       val incGrams = {
-        graft.expressions.GraftExtensions.register(spark)
         val docs = spark.range(0L, incN).select(col("id").as("doc_id"),
           concat_ws(" ",
             expr("concat_ws(' ', transform(sequence(0, 9), j -> concat('u', id, '_', j)))"),

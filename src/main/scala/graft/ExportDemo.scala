@@ -28,7 +28,6 @@ object ExportDemo {
 
   def run(spark: SparkSession, sfDir: String, outDir: String,
           numShards: Int = 8): Result = {
-    graft.expressions.GraftExtensions.register(spark)
     def timed[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[export] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -78,13 +77,7 @@ object ExportDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_export"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val r = run(spark, sfDir, outDir)
     println(s"[export] done: $r")
     spark.stop()

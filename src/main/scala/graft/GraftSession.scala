@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The engine targets multi-executor clusters; tests run `local[N]`.
   * Defaults chosen for 100 TB readiness:
-  *  - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
+  *  - AQE on (runtime re-plan, skew-join splitting, partition
+  *    coalescing) — Spark 4's defaults, so not restated here
   *  - shuffle partitions sized to cores locally (clusters override via
   *    `spark.sql.adaptive.coalescePartitions` + explicit conf)
   *  - UTC session timezone so date/time semantics are deployment-invariant
@@ -22,13 +23,14 @@ object GraftSession {
     * disks for spark.local.dir" deployment guidance, applied to a
     * RAM-rich single node; a cluster sets SPARK_LOCAL_DIRS to its
     * NVMe scratch instead and this default never engages.
-    */
-  /** tmpfs is only the default when it has real headroom: shuffle
-    * blocks and spill files on tmpfs consume RAM (typically capped at
-    * 50% of it), so on a RAM-tight host a big shuffle would hit ENOSPC
-    * or worsen OOM pressure where disk-backed /tmp succeeds. 16 GiB
-    * usable is far above anything the bench/verify workloads write and
-    * far below the cap on any host where the default makes sense.
+    *
+    * tmpfs is only the default when it has real headroom
+    * (`MinShmUsableBytes`): shuffle blocks and spill files on tmpfs
+    * consume RAM (typically capped at 50% of it), so on a RAM-tight
+    * host a big shuffle would hit ENOSPC or worsen OOM pressure where
+    * disk-backed /tmp succeeds. 16 GiB usable is far above anything the
+    * bench/verify workloads write and far below the cap on any host
+    * where the default makes sense.
     */
   private val MinShmUsableBytes = 16L << 30
 
@@ -69,18 +71,20 @@ object GraftSession {
     ()
   }
 
-  /** Build or reuse a session. `master` defaults to the env/driver-provided
-    * setting; callers inside Verify/Bench pass their own.
+  /** Build or reuse the session — the one place a `SparkSession` is
+    * built. `cores` sets both `local[cores]` and the shuffle partition
+    * count; it defaults to SPARK_GRAFT_CPUS, else the host's cores.
+    * The engine is installed through `spark.sql.extensions`, which
+    * also carries it into every `newSession()`.
     */
-  def create(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-             shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+  def create(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+               .getOrElse(Runtime.getRuntime.availableProcessors),
              appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", classOf[graft.expressions.GraftExtensions].getName)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       // ObjectHashAggregate falls back to SORT-BASED aggregation after
       // 128 distinct keys per task (the Spark default) - pathological for
       // this engine, whose collect_list/collect_set/top-k aggregates
@@ -98,13 +102,21 @@ object GraftSession {
       // > 200 reducers (any real-scale exchange) never used bypass, so
       // the setting is inert at cluster scale.
       .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.local.dir", fastLocalDir)
+      // static: saveAsTable tables land outside the working tree
+      .config("spark.sql.warehouse.dir",
+        new java.io.File(System.getProperty("java.io.tmpdir"), "graft_warehouse").getAbsolutePath)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Relational.denseIdBy numbers dimension-sized relations with an
+    // unpartitioned row_number on purpose (fact-scale callers use
+    // zipWithIndexOrdered); WindowExec warns about the single partition
+    // on every such plan, burying the WARNs that matter.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

@@ -48,7 +48,6 @@ object LakeAuditDemo {
       cardSources: Long, cardDocs: Long)
 
   def run(spark: SparkSession, sfDir: String, outDir: String): Result = {
-    graft.expressions.GraftExtensions.register(spark)
     import spark.implicits._
     def timed[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -220,13 +219,7 @@ object LakeAuditDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_lakeaudit"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val r = run(spark, sfDir, outDir)
     println(s"[lakeaudit] done: $r")
     spark.stop()

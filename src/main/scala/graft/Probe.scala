@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query profiler: times named queries (3 runs each) and
   * optionally prints the executed plan. Usage:
   *
@@ -24,34 +22,7 @@ object Probe {
     val explain = flags.contains("explain")
     val showJobs = flags.contains("jobs")
     val plansTo = flags.find(_.startsWith("plans=")).map(_.stripPrefix("plans="))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the Spark default) - pathological for
-      // this engine, whose collect_list/collect_set/top-k aggregates
-      // routinely see 10^4-10^5 bounded-size groups per task. 2^17
-      // entries of bounded per-group state (<= a few hundred bytes each)
-      // is tens of MB per task at ANY scale factor or cluster size; the
-      // fallback still protects truly unbounded group counts.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // Tiny iterative shuffles write R files PER MAP TASK on the
-      // bypass-merge path (default threshold 200 covers every reduce
-      // count this engine's fixpoint loops use); jstack sampling showed
-      // loop tasks inside BypassMergeSortShuffleWriter stream setup,
-      // not compute. Threshold 2 routes them to the serialized
-      // (Unsafe) writer: ONE file + index per map task. Shuffles with
-      // > 200 reducers (any real-scale exchange) never used bypass, so
-      // the setting is inert at cluster scale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     // per-job wall-clock listener: job id → (description-or-callsite, ms)
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long, Long, String)]()
     val jobLog = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long)]()

@@ -24,8 +24,9 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. Every fn
-    * self-registers the engine's native functions, so the map works on
-    * any caller-provided session (not just Verify/Bench's).
+    * installs the engine on the session first (a no-op on a session
+    * from `GraftSession.create`), so the map works on any
+    * caller-provided session.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map { q =>

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and failures.json (failing
+  * query name → message, `{}` when every query ran). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -11,34 +11,7 @@ object Verify {
     val nameFilter: String => Boolean =
       if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate falls back to SORT-BASED aggregation after
-      // 128 distinct keys per task (the Spark default) - pathological for
-      // this engine, whose collect_list/collect_set/top-k aggregates
-      // routinely see 10^4-10^5 bounded-size groups per task. 2^17
-      // entries of bounded per-group state (<= a few hundred bytes each)
-      // is tens of MB per task at ANY scale factor or cluster size; the
-      // fallback still protects truly unbounded group counts.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // Tiny iterative shuffles write R files PER MAP TASK on the
-      // bypass-merge path (default threshold 200 covers every reduce
-      // count this engine's fixpoint loops use); jstack sampling showed
-      // loop tasks inside BypassMergeSortShuffleWriter stream setup,
-      // not compute. Threshold 2 routes them to the serialized
-      // (Unsafe) writer: ONE file + index per map task. Shuffles with
-      // > 200 reducers (any real-scale exchange) never used bypass, so
-      // the setting is inert at cluster scale.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     // Fail loudly BEFORE dumping anything if the testdata encoding
     // drifted (round-6 lesson: a silent ts mis-decode red-flagged 16
     // queries). Throws IllegalStateException naming the drift.
@@ -52,14 +25,19 @@ object Verify {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futures = SparkEntry.queries.filter(kv => nameFilter(kv._1)).map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
         }
       }
     }
-    futures.foreach(f => scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
+    val failures = futures.toSeq
+      .flatMap(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      .sortBy(_._1)
     pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -76,6 +54,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failures.json"),
+      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    System.err.println(s"[verify] ${failures.size}/${futures.size} failed")
     spark.stop()
   }
 }

@@ -185,8 +185,6 @@ object CurationPipeline {
       // earlier-batch side, exactly what the one-shot pass would pick.
       // Kept docs come back token-reassembled with `n_runs_cut`
       // stamped; non-kept rows carry n_runs_cut = 0 and original text.
-      val spark = batch.sparkSession
-      graft.expressions.GraftExtensions.register(spark)
       val keptDocs = tagged.filter(col("outcome") === "kept")
         .select(col(idCol), col(textCol))
       val newGrams = keptDocs.select(col(idCol),
@@ -286,7 +284,6 @@ object CurationPipeline {
     kept.write.mode("append").parquet(outPath)
     kept.select("_fp").write.mode("append").parquet(storePath)
     if (cfg.cutDupRuns) {
-      graft.expressions.GraftExtensions.register(spark)
       batch.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
         .select(col(idCol),
           posexplode(call_function("graft_shingle_hash_list",

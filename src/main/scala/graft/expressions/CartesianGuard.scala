@@ -19,12 +19,11 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.graft.failOnCartesian=true` to turn sightings into plan-time
   * errors — CI can enforce what a review would have flagged.
   *
-  * Registered through BOTH extension routes: `injectOptimizerRule`
-  * from the `spark.sql.extensions` plugin class, and
-  * `spark.experimental.extraOptimizations` from the runtime
-  * `GraftExtensions.register` path — demonstrating the
-  * `Rule[LogicalPlan]` extension point alongside the native
-  * expressions.
+  * Installed once per session by [[GraftExtensions]]: through
+  * `injectOptimizerRule` on sessions from `GraftSession.create`, or
+  * through `spark.experimental.extraOptimizations` when
+  * `GraftExtensions.register` installs the engine on a session built
+  * elsewhere.
   */
 object CartesianGuard extends Rule[LogicalPlan] {
 

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Catalyst extension point: registers the engine's native expressions
-  * as SQL functions.
+/** Catalyst extension point: installs the engine's native expressions
+  * as SQL functions, the [[CartesianGuard]] optimizer rule and the
+  * [[graft.plans.TopKStrategy]] planner strategy.
   *
-  * Two registration paths:
-  *  - config: `spark.sql.extensions=graft.expressions.GraftExtensions`
-  *    (GraftSession sets this) — the standard plugin route;
-  *  - runtime: `GraftExtensions.register(spark)` for sessions built
-  *    elsewhere (Verify/Bench, tests).
+  * One registration path: `spark.sql.extensions` names this class
+  * (`GraftSession.create` sets it), so Spark applies it to the session
+  * and to every `newSession()` of it. `GraftExtensions.register` exists
+  * only for sessions built elsewhere, such as an external driver's; it
+  * is called from the public entry points in `SparkEntry`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -89,17 +90,22 @@ object GraftExtensions {
       new ExpressionInfo(classOf[MinAny].getName, "graft_min_any"),
       (children: Seq[Expression]) => MinAny(children.head)))
 
-  /** Idempotently register the functions (and the CartesianGuard
-    * optimizer rule, via the runtime `extraOptimizations` hook) on an
-    * existing session.
+  /** Install the engine on a session built without
+    * `spark.sql.extensions` (through the runtime `functionRegistry` and
+    * `experimental` hooks, which `newSession()` does not carry). A no-op
+    * on a session whose SparkContext conf names this class: Spark has
+    * already applied it there.
     */
-  def register(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+  def register(spark: SparkSession): Unit =
+    if (!spark.sparkContext.getConf.get("spark.sql.extensions", "").split(",")
+          .map(_.trim).contains(classOf[GraftExtensions].getName)) {
+      functions.foreach { case (ident, info, builder) =>
+        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+      }
+      val x = spark.experimental
+      if (!x.extraOptimizations.contains(CartesianGuard))
+        x.extraOptimizations = x.extraOptimizations :+ CartesianGuard
+      if (!x.extraStrategies.contains(graft.plans.TopKStrategy))
+        x.extraStrategies = x.extraStrategies :+ graft.plans.TopKStrategy
     }
-    if (!spark.experimental.extraOptimizations.contains(CartesianGuard))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CartesianGuard
-    graft.plans.TopKPerKey.registerStrategy(spark)
-  }
 }

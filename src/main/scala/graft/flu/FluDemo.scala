@@ -20,7 +20,7 @@ import java.nio.file.{Files, Paths}
   */
 object FluDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.create(master = "local[4]", shufflePartitions = 4)
+    val spark = graft.GraftSession.create(cores = 4)
 
     val (serveMode, port, rest) = args.toSeq.indexOf("--serve") match {
       case -1 => (false, 0, args.toSeq)

@@ -67,10 +67,8 @@ object Dedup {
 
   /** The conf-widened distinct-shingle-hash column (compiled kernel). */
   def shingleHashesWide(spark: org.apache.spark.sql.SparkSession,
-                        text: Column, n: Int): Column = {
-    graft.expressions.GraftExtensions.register(spark)
+                        text: Column, n: Int): Column =
     call_function("graft_shingle_hashes", text, lit(n), lit(shingleBits(spark)))
-  }
 
   /** Hash-family coefficients, md5-derived at plan-build time so the
     * per-row cost is one md5 per shingle plus k long multiply-adds
@@ -149,8 +147,7 @@ object Dedup {
   }
 
   /** jaccardDistinct for long arrays via the native intersect-count
-    * expression (no intersection array materialized per pair). Requires
-    * GraftExtensions registration.
+    * expression (no intersection array materialized per pair).
     */
   def jaccardLongDistinct(a: Column, b: Column): Column = {
     val inter = call_function("graft_intersect_count", a, b)
@@ -188,7 +185,6 @@ object Dedup {
       .filter(col("_bsz") > 1 && col("_bsz") <= maxBucket)
     val buckets = sized.groupBy(bucketCols.map(col): _*)
       .agg(sort_array(collect_list(col(idCol))).as("_ids"))
-    graft.expressions.GraftExtensions.register(df.sparkSession)
     // r16: pin the expansion stage's parallelism — the aggregated
     // bucket arrays are byte-small, so AQE coalesced the O(bucket²)
     // pair explode onto 2 tasks (q114: 757 ms CPU on 2 tasks measured)
@@ -239,7 +235,6 @@ object Dedup {
       .agg(sort_array(collect_list(col(idCol))).as("_ids"))
       .filter(size(col("_ids")) > 1)
       .withColumn("_nc", ((size(col("_ids")) + chunk - 1) / chunk).cast("int"))
-    graft.expressions.GraftExtensions.register(df.sparkSession)
     // compiled pair kernels (r15 opt) — tri for the diagonal cell,
     // cross for off-diagonal grid cells; both replace interpreted
     // transform/slice HOF chains that copied array tails per element
@@ -338,7 +333,6 @@ object Dedup {
                       threshold: Double,
                       blockCols: Seq[String] = Nil,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    graft.expressions.GraftExtensions.register(df.sparkSession)
     val keep = col(idCol) +: blockCols.map(col)
     // materialized once (lazy local checkpoint): referenced three times
     // below (band generation + both verification joins) — without it the
@@ -433,20 +427,9 @@ object Dedup {
     * elimination that higher-order CodegenFallback expressions don't
     * reliably get — q363's RDD-rank pipeline re-hashed every token
     * once per bit (measured 17 s vs ~2 s at sf0.1).
-    *
-    * Resolves `graft_simhash` via `call_function`, which needs
-    * [[graft.expressions.GraftExtensions.register]] to have run on the
-    * analyzing session. A bare Column cannot reach a session, so this
-    * registers defensively on `SparkSession.active` — the session that
-    * will analyze the plan in every call pattern this repo has (and in
-    * any single-session app). Multi-session callers analyzing on a
-    * NON-active session must call `register` on it themselves.
     */
-  def simhash(text: Column, bits: Int): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.expressions.GraftExtensions.register)
+  def simhash(text: Column, bits: Int): Column =
     call_function("graft_simhash", text, lit(bits))
-  }
 
   /** Per-train-doc shingle overlap against an eval corpus — the engine
     * behind the contamination checks (q62 delegates here) and the
@@ -469,7 +452,6 @@ object Dedup {
   def shingleOverlapVsEval(train: DataFrame, evalDocs: DataFrame,
                            idCol: String, textCol: String, n: Int,
                            maxBroadcastEvalDocs: Long): DataFrame = {
-    graft.expressions.GraftExtensions.register(train.sparkSession)
     // conf-widened hash space (ShingleBitsKey): both sides MUST use the
     // same width or overlap counts are meaningless
     val sh = (c: Column) => shingleHashesWide(train.sparkSession, c, n)
@@ -506,7 +488,6 @@ object Dedup {
     */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int, w: Int): DataFrame = {
-    graft.expressions.GraftExtensions.register(docs.sparkSession)
     winnowFromGrams(
       docs.select(col(idCol),
         posexplode(call_function("graft_shingle_hash_list", col(textCol), lit(k)))
@@ -715,8 +696,6 @@ object Dedup {
   def removeDuplicateRuns(docs: DataFrame, idCol: String, textCol: String,
                           k: Int, minTokens: Int,
                           maxOccurrences: Int = DefaultMaxBucket): DataFrame = {
-    val spark = docs.sparkSession
-    graft.expressions.GraftExtensions.register(spark)
     val grams = docs.select(col(idCol),
       posexplode(call_function("graft_shingle_hash_list", col(textCol), lit(k)))
         .as(Seq("pos", "h")))

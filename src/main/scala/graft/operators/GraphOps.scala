@@ -137,7 +137,6 @@ object GraphOps {
   def boruvkaMst(edges0: DataFrame, aCol: String, bCol: String, wCol: String,
                  maxRounds: Int = 48,
                  onRound: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
-    graft.expressions.GraftExtensions.register(edges0.sparkSession)
     val edges = edges0.select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b"), col(wCol).cast("long").as("w"))
       .filter(col("a") =!= col("b"))
@@ -325,7 +324,6 @@ object GraphOps {
     // graft_max_any: max(struct) is the deterministic argmax, but a
     // struct-typed buffer silently forces SortAggregate (two sorts per
     // round); the typed-imperative twin hash-aggregates it (r15 opt)
-    graft.expressions.GraftExtensions.register(edges0.sparkSession)
     FixpointLoop.iterateUntilFixpoint(
         nodes.select(col("id"), col("id").as("lab")),
         rounds, "labelPropagation", requireConvergence = false) { cur =>

@@ -27,7 +27,6 @@ object KMeansOps {
     */
   def lloydStep(vecs: DataFrame, idCol: String, vecCol: String,
                 cent: DataFrame): DataFrame = {
-    graft.expressions.GraftExtensions.register(vecs.sparkSession)
     val scored = vecs.crossJoin(broadcast(cent))
       .select(col(idCol).as("_id"), col("cid"),
         (Similarity.dotNative(col(vecCol), col(vecCol))

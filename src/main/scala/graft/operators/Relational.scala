@@ -42,7 +42,6 @@ object Relational {
     */
   def dedupKeepFirstAgg(df: DataFrame, keys: Seq[String],
                         orderCols: Seq[String]): DataFrame = {
-    graft.expressions.GraftExtensions.register(df.sparkSession)
     val payload = df.columns.toSeq.filterNot(c =>
       keys.contains(c) || orderCols.contains(c))
     val packed = struct((orderCols ++ payload).map(col): _*)

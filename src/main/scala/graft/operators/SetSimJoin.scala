@@ -113,7 +113,6 @@ object SetSimJoin {
     * @param num/den similarity threshold t = num/den in lowest terms
     */
   def pairs(spark: SparkSession, docs: DataFrame, num: Int, den: Int): DataFrame = {
-    graft.expressions.GraftExtensions.register(spark)
     val g = groups(spark, docs)
     val matched = matchedGroups(g, num, den)
     val cross = Dedup.expandMemberPairs(

@@ -35,9 +35,9 @@ object Similarity {
       lit(0.0), (acc, v) => acc + v)
 
   /** Same fold, as the native codegen'd expression (expressions.FloatDot)
-    * — bit-identical values, ~10× faster on wide embeddings. Requires
-    * `GraftExtensions.register(spark)` (GraftSession does it via
-    * spark.sql.extensions).
+    * — bit-identical values, ~10× faster on wide embeddings. Resolves
+    * on any session that has the engine installed (see
+    * `GraftExtensions`).
     */
   def dotNative(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
@@ -54,7 +54,6 @@ object Similarity {
     */
   def bruteForceTopK(vectors: DataFrame, idCol: String, vecCol: String,
                      query: DataFrame, k: Int): DataFrame = {
-    graft.expressions.GraftExtensions.register(vectors.sparkSession)
     val q = query.select(col(vecCol).as("_qvec"))
     vectors.crossJoin(broadcast(q))
       .select(col(idCol), cosine(col(vecCol), col("_qvec")).as("cos_sim"))
@@ -84,8 +83,7 @@ object Similarity {
       // r16: the compiled kernel (graft_dot now takes float|double
       // sides) — the interpreted zip_with/aggregate fold boxed two
       // lambdas per element, per plane, per row. Same left-to-right
-      // double fold, bit-identical projections; every call site
-      // registers GraftExtensions (checked).
+      // double fold, bit-identical projections.
       val proj = dotNative(vec, plane)
       when(proj > 0, lit(1 << p)).otherwise(lit(0))
     }
@@ -141,7 +139,6 @@ object Similarity {
   /** LSH-bucketed ANN: top-k within the query's bucket only. */
   def lshTopK(vectors: DataFrame, idCol: String, vecCol: String,
               query: DataFrame, dim: Int, planes: Int, k: Int): DataFrame = {
-    graft.expressions.GraftExtensions.register(vectors.sparkSession)
     val bucketed = vectors.withColumn("_bucket", hyperplaneBucket(col(vecCol), dim, planes))
     val q = query.select(
       col(vecCol).as("_qvec"),
@@ -239,7 +236,6 @@ object Similarity {
   def top1ExactFor(probes: DataFrame, vectors: DataFrame, idCol: String,
                    vecCol: String, chunkSize: Int = 256): DataFrame = {
     val spark = vectors.sparkSession
-    graft.expressions.GraftExtensions.register(spark)
     val n = vectors.count()
     // r16: floor the chunk count near the core count — the tile join
     // is keyed on _ck, so numChunks CAPS the stage's parallelism, and
@@ -338,7 +334,6 @@ object Similarity {
   def mutualNNShortlist(vectors: DataFrame, idCol: String, vecCol: String,
                         dim: Int, planes: Int, tables: Int,
                         maxBucket: Int = 500): DataFrame = {
-    graft.expressions.GraftExtensions.register(vectors.sparkSession)
     val withNorm = vectors.select(
       col(idCol).cast("long").as("_id"), col(vecCol).as("_vec"),
       sqrt(dotNative(col(vecCol), col(vecCol))).as("_nrm"))

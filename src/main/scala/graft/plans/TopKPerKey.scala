@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -158,7 +157,6 @@ object TopKPerKey {
             k: Int): org.apache.spark.sql.DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val spark = df.sparkSession
-    registerStrategy(spark)
     val analyzed = df.queryExecution.analyzed
     // resolve through the session's resolver (case-sensitivity per
     // spark.sql.caseSensitive, qualified names, ambiguity errors) —
@@ -190,11 +188,5 @@ object TopKPerKey {
       case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
         resolve(u.name)
     }
-
-  /** Idempotently add the planner strategy to a session. */
-  def registerStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
 }
 

@@ -560,7 +560,6 @@ object AnalyticsQueries {
   val q252 = Q("q252_retrieval_metrics",
     (s, dir) => {
       import s.implicits._
-      graft.expressions.GraftExtensions.register(s)
       val disc = Seq((1, 1000000L), (2, 630930L), (3, 500000L), (4, 430677L),
         (5, 386853L), (6, 356207L), (7, 333333L), (8, 315465L),
         (9, 301030L), (10, 289065L)).toDF("rnk", "disc_u")
@@ -680,7 +679,6 @@ object AnalyticsQueries {
     */
   val q253 = Q("q253_jw_fuzzy_join",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // pinned block-keyed repartition (r15 opt): the documents scan is
       // one split locally and AQE coalesces the blocked self-join to a
       // single task, serializing the O(pairs) Jaro-Winkler kernel; an
@@ -891,7 +889,6 @@ object AnalyticsQueries {
     */
   val q262 = Q("q262_fuzzy_entity_clusters",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val p = Tables.load(s, dir, "documents")
         .select(col("doc_id"), substring(col("text"), 1, 48).as("t"),
           element_at(split(col("text"), " "), 1).as("blk"))

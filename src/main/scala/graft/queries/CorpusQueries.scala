@@ -480,7 +480,6 @@ object CorpusQueries {
     */
   val q185 = Q("q185_cms_heavy_hitters",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("token"))
       val sketch = tok.agg(
@@ -546,7 +545,6 @@ object CorpusQueries {
     */
   val q187 = Q("q187_inverted_index",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val post = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.operators.TextAnalysis.tokens(col("text"))).as("token"))
@@ -1425,7 +1423,6 @@ object CorpusQueries {
     */
   val q322 = Q("q322_cdc_chunks",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), substring(col("text"), 1, 240).as("s"))
       val ch = d.select(col("doc_id"),
@@ -1810,7 +1807,6 @@ object CorpusQueries {
     */
   val q333 = Q("q333_blocklist_scan",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val arr = s"array(${blocklist.map(p => s"'$p'").mkString(",")})"
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), expr(s"graft_multi_match(text, $arr)").as("c"))
@@ -1917,7 +1913,6 @@ object CorpusQueries {
     */
   val q338 = Q("q338_curation_verdict",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       import graft.operators.PiiOps
       val k = (col("doc_id") % 50).cast("long")
       // q321's injection, verbatim — one source of PII-bearing text;
@@ -2634,7 +2629,6 @@ object CorpusQueries {
   val q372 = Q("q372_winnow_fingerprints",
     (s, dir) => {
       import graft.operators.Dedup
-      graft.expressions.GraftExtensions.register(s)
       // hash the corpus ONCE (md5 per gram is the dominant per-row
       // cost): the lazily-checkpointed relation feeds both the
       // winnowing pass and the per-doc gram counts
@@ -2717,7 +2711,6 @@ object CorpusQueries {
   val q383 = Q("q383_duplicate_runs",
     (s, dir) => {
       import graft.operators.Dedup
-      graft.expressions.GraftExtensions.register(s)
       val grams = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(call_function("graft_shingle_hash_list", col("text"), lit(8)))
@@ -2889,7 +2882,6 @@ object CorpusQueries {
   val q389 = Q("q389_duplicate_runs_incremental",
     (s, dir) => {
       import graft.operators.Dedup
-      graft.expressions.GraftExtensions.register(s)
       val grams = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(call_function("graft_shingle_hash_list", col("text"), lit(8)))
@@ -2950,7 +2942,6 @@ object CorpusQueries {
   val q391 = Q("q391_duplicate_span_removal",
     (s, dir) => {
       import graft.operators.Dedup
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
       Dedup.removeDuplicateRuns(docs, "doc_id", "text",
           k = 8, minTokens = 20, maxOccurrences = 64)

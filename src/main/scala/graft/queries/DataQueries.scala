@@ -279,7 +279,6 @@ object DataQueries {
     */
   val q40 = Q("q40_embed_neardup",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tables = 6; val planes = 3
       // materialized once (lazy local checkpoint): referenced by the
       // bucket generation and both verification joins
@@ -518,7 +517,6 @@ object DataQueries {
   val q48 = Q("q48_ann_ivf",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val cents = emb
         .select(col("label"), posexplode(col("embedding")).as(Seq("_pos", "_v")))
@@ -2122,7 +2120,6 @@ object DataQueries {
     */
   val q230 = Q("q230_reliability_brier",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           when(col("label") === 0, 1L).otherwise(0L).as("y"))
@@ -2222,7 +2219,6 @@ object DataQueries {
     */
   val q296 = Q("q296_mmr_rerank",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
         .withColumn("_norm", sqrt(Similarity.dotNative(col("embedding"), col("embedding"))))
         .localCheckpoint(false) // query pick + relevance scan + pair sims
@@ -3724,7 +3720,6 @@ object DataQueries {
     */
   val q362 = Q("q362_anisotropy",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val unit = emb.select(col("label").cast("long").as("label"), col("embedding"),
           expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
@@ -3863,7 +3858,6 @@ object DataQueries {
     */
   val q364 = Q("q364_source_containment",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // conf-widened hash space (Dedup.ShingleBitsKey — the scaladoc
       // there carries the birthday-bound arithmetic this query's own
       // NOTE used to state); the oracle replays the 31-bit default,

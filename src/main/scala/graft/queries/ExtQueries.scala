@@ -156,7 +156,6 @@ object ExtQueries {
     */
   val q128 = Q("q128_setsim_join",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // conf-widened hash space (Dedup.ShingleBitsKey): exact set
       // similarity is exactly where 31-bit collisions at >10M grams
       // show up as phantom intersections; the committed oracle replays
@@ -592,7 +591,6 @@ object ExtQueries {
     */
   val q137 = Q("q137_ann_multiprobe",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val planes = 8
       val emb = Tables.load(s, dir, "embeddings")
       val bucketed = emb.withColumn("_bucket",
@@ -1049,7 +1047,6 @@ object ExtQueries {
     */
   val q146 = Q("q146_rrf_fusion",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // r16: compiled kernel (graft_dot now accepts double arrays) —
       // the interpreted zip_with/aggregate fold was ~1.1 s of
       // single-task CPU here; same left-to-right double fold
@@ -1131,7 +1128,6 @@ object ExtQueries {
     */
   val q147 = Q("q147_feature_hash",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       Tables.load(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(97)) === 0)
         .select(col("doc_id"),
@@ -1168,7 +1164,6 @@ object ExtQueries {
     */
   val q148 = Q("q148_vocab_growth",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val first = Tables.load(s, dir, "documents")
         .select(expr("doc_id div 250").as("batch"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -1417,7 +1412,6 @@ object ExtQueries {
     */
   val q153 = Q("q153_source_similarity",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(12)
       val hashed = Tables.load(s, dir, "documents")
         .select(col("source"),
@@ -1490,7 +1484,6 @@ object ExtQueries {
     */
   val q154 = Q("q154_sketch_merge",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(12)
       val hashed = Tables.load(s, dir, "documents")
         .select(expr("doc_id div 100").as("shard"),
@@ -1668,7 +1661,6 @@ object ExtQueries {
     */
   val q158 = Q("q158_dedup_report",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val fams = Tables.load(s, dir, "documents")
         .select(graft.operators.TextAnalysis.contentFingerprint(col("text")).as("fp"))
         .groupBy("fp").agg(count(lit(1)).as("sz"))
@@ -1894,7 +1886,6 @@ object ExtQueries {
     */
   val q163 = Q("q163_triangle_count",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       val pairs = items.groupBy("l_orderkey")

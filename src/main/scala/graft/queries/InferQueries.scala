@@ -547,7 +547,6 @@ object InferQueries {
     */
   val q244 = Q("q244_js_divergence",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(when(col("source") === "src0", 1L).otherwise(0L).as("p"),
@@ -869,7 +868,6 @@ object InferQueries {
     */
   val q258 = Q("q258_capture_recapture",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"),
@@ -1025,7 +1023,6 @@ object InferQueries {
     */
   val q275 = Q("q275_weighted_jaccard",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val tok = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(when(col("source") === "src0", 1L).otherwise(0L).as("p"),
@@ -1230,7 +1227,6 @@ object InferQueries {
     */
   val q278 = Q("q278_apriori_triples",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .join(broadcast(Tables.load(s, dir, "part")), col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey"), col("p_brand")).distinct()

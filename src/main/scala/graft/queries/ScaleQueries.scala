@@ -308,7 +308,6 @@ object ScaleQueries {
     */
   val q98 = Q("q98_hard_negatives",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val anchors = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("anchor_id"), col("label").as("_al"),
@@ -614,7 +613,6 @@ object ScaleQueries {
     */
   val q105 = Q("q105_containment_pairs",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
       val g8 = docs.select(col("doc_id"),
         explode(call_function("graft_shingle_hashes", col("text"), lit(8))).as("gh"))

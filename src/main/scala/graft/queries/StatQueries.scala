@@ -48,7 +48,6 @@ object StatQueries {
     */
   val q107 = Q("q107_token_entropy",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val cnt = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -331,7 +330,6 @@ object StatQueries {
     */
   val q112 = Q("q112_domain_overlap",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       // four consumers (both join sides + two size lookups) — cut the
       // explode+distinct lineage once or the token pass runs four times
       val st = Tables.load(s, dir, "documents")
@@ -432,7 +430,6 @@ object StatQueries {
     */
   val q115 = Q("q115_countmin",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val coeffs = Dedup.minhashCoeffs(4)
       val toks = Tables.load(s, dir, "documents")
         .select(explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -1145,7 +1142,6 @@ object StatQueries {
     */
   val q202 = Q("q202_adamic_adar",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val cs = Tables.load(s, dir, "orders")
         .join(Tables.load(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
@@ -2027,7 +2023,6 @@ object StatQueries {
     */
   val q222 = Q("q222_basket_lift",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val op = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
@@ -2401,7 +2396,6 @@ object StatQueries {
     */
   val q306 = Q("q306_betweenness",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val items = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       val p0 = items.groupBy("l_orderkey")

@@ -57,7 +57,6 @@ object TrainQueries {
     */
   val q77 = Q("q77_bigram_lm",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
         .filter(TA.tokenCount(col("text")) >= 2)
         .select(col("doc_id"),
@@ -119,7 +118,6 @@ object TrainQueries {
     */
   val q78 = Q("q78_semdedup",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val emb = Tables.load(s, dir, "embeddings")
       val cent = emb.filter(col("vec_id") < 32)
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
@@ -184,7 +182,6 @@ object TrainQueries {
     */
   val q79 = Q("q79_dup_ngram_spans",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val gd = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(call_function("graft_shingle_hash_list", col("text"), lit(8))).as("gh"))
@@ -772,7 +769,6 @@ object TrainQueries {
     */
   val q91 = Q("q91_eval_containment",
     (s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val docs = Tables.load(s, dir, "documents")
       val hs = call_function("graft_shingle_hashes", col("text"), lit(3))
       val trainSet = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)

@@ -14,7 +14,7 @@ import graft.sources.Sinks
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.create(master = "local[4]", shufflePartitions = 4)
+    val spark = GraftSession.create(cores = 4)
     val stage = java.nio.file.Files.createTempDirectory("graft-stream-demo").toString
 
     val events = Tables.load(spark, sfDir, "events")

@@ -532,7 +532,6 @@ object StreamingOps {
                                  n: Int = 2, k: Int = 12, rowsPerBand: Int = 2,
                                  stateTtlMs: Long = 0L): Dataset[NearDupCand] = {
     val s = docs.sparkSession
-    graft.expressions.GraftExtensions.register(s)
     import s.implicits._
     val bands = docs.select(
         explode(call_function("graft_minhash_bands",
@@ -592,7 +591,6 @@ object StreamingOps {
                                 k: Int, w: Int,
                                 maxBucket: Int = 500): Dataset[WinnowCand] = {
     val s = docs.sparkSession
-    graft.expressions.GraftExtensions.register(s)
     import s.implicits._
     // per-ROW fingerprints ≡ Dedup.winnowFromGrams: window minima over
     // the gram list (slice + array_min), distinct; short docs (< w

@@ -3,10 +3,46 @@ package graft
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
-import org.scalatest.funsuite.AnyFunSuite
+/** The factory's contract — the confs every session gets, the engine
+  * installed once through `spark.sql.extensions` — and the RAM scratch
+  * sweep, which deletes only the dirs of JVMs that are gone.
+  */
+class GraftSessionSpec extends SparkSpec {
 
-/** The RAM scratch sweep deletes only the dirs of JVMs that are gone. */
-class GraftSessionSpec extends AnyFunSuite {
+  test("create: the engine defaults every session gets") {
+    val sql = spark.conf
+    assert(sql.get("spark.sql.adaptive.enabled") == "true")
+    assert(sql.get("spark.sql.adaptive.coalescePartitions.enabled") == "true")
+    assert(sql.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    assert(sql.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "131072")
+    assert(sql.get("spark.sql.session.timeZone") == "UTC")
+    assert(sql.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.master == "local[4]")
+    val core = spark.sparkContext.getConf
+    assert(core.get("spark.shuffle.sort.bypassMergeThreshold") == "2")
+    assert(core.get("spark.local.dir").nonEmpty)
+    assert(sql.get("spark.sql.warehouse.dir").contains(
+      new java.io.File(System.getProperty("java.io.tmpdir"), "graft_warehouse").getAbsolutePath))
+    assert(org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.window.WindowExec").getLevel ==
+      org.apache.logging.log4j.Level.ERROR)
+  }
+
+  test("create: engine functions resolve on the session and on newSession(), unregistered") {
+    for (s <- Seq(spark, spark.newSession())) {
+      val r = s.sql("""SELECT graft_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)),
+                              graft_min_any(v) FROM VALUES (3), (1), (2) AS t(v)""").head
+      assert(r.getDouble(0) == 11.0 && r.getInt(1) == 1, r)
+    }
+  }
+
+  test("register on a factory session installs nothing twice") {
+    val x = spark.experimental
+    val (rules, strategies) = (x.extraOptimizations, x.extraStrategies)
+    graft.expressions.GraftExtensions.register(spark)
+    assert(x.extraOptimizations == rules)
+    assert(x.extraStrategies == strategies)
+  }
 
   test("sweepDeadOwners: a live owner's dir survives however old, a dead owner's goes") {
     val root = Files.createTempDirectory("graft_spark_local")

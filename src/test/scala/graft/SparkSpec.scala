@@ -34,21 +34,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same engine defaults as GraftSession: hash-mode object
-      // aggregation at realistic group counts, RAM-backed scratch for
-      // the many small shuffles (see GraftSession.fastLocalDir)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.local.dir", GraftSession.fastLocalDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftExtensions.register(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession.create(cores = 4, appName = "graft-test")
 }

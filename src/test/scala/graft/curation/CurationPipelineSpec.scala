@@ -103,7 +103,6 @@ class CurationPipelineSpec extends SparkSpec {
 
   test("incremental substring stage: batch doc loses a span the STORE already holds") {
     import graft.operators.TextAnalysis
-    graft.expressions.GraftExtensions.register(spark)
     val storedText = "the a " + (1 to 10).map(i => s"w$i").mkString(" ") + " " + span10
     val stored = Seq((1L, storedText)).toDF("doc_id", "text")
     val storeFps = stored.select(

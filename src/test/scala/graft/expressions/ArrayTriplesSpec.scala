@@ -18,7 +18,6 @@ class ArrayTriplesSpec extends SparkSpec {
                 c AS c))))))"""
 
   test("kernel == HOF chain on seeded baskets of every small size") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val rows = (3 to 24).flatMap { n =>
@@ -33,7 +32,6 @@ class ArrayTriplesSpec extends SparkSpec {
   }
 
   test("shape: C(n,3) ordered triples; under-3 arrays yield nothing") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq(Seq("p", "q", "r", "s")).toDF("ids")
       .select(explode(call_function("graft_triples", col("ids"))).as("t"))
@@ -50,7 +48,6 @@ class ArrayTriplesSpec extends SparkSpec {
   }
 
   test("degenerate giant basket fails LOUDLY, never as an allocation") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val big = Seq((0 until ArrayTriplesKernel.MaxElems + 1).map(i => s"t$i"))
     val e = intercept[Exception] {

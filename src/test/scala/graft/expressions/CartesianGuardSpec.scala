@@ -6,67 +6,54 @@ import graft.SparkSpec
 
 class CartesianGuardSpec extends SparkSpec {
 
-  private def withGuard[T](f: => T): T = {
-    GraftExtensions.register(spark)
-    f
-  }
-
   test("plain cross join of unhinted sides is sighted") {
-    withGuard {
-      import spark.implicits._
-      val a = Seq(1, 2, 3).toDF("x")
-      val b = Seq(4, 5).toDF("y")
-      val before = CartesianGuard.seen.sum()
-      a.crossJoin(b).count()
-      assert(CartesianGuard.seen.sum() > before)
-    }
+    import spark.implicits._
+    val a = Seq(1, 2, 3).toDF("x")
+    val b = Seq(4, 5).toDF("y")
+    val before = CartesianGuard.seen.sum()
+    a.crossJoin(b).count()
+    assert(CartesianGuard.seen.sum() > before)
   }
 
   test("broadcast-hinted cross joins and equi-joins pass unsighted") {
-    withGuard {
-      import spark.implicits._
-      val a = Seq(1, 2, 3).toDF("x")
-      val b = Seq(4, 5).toDF("y")
-      val before = CartesianGuard.seen.sum()
-      a.crossJoin(broadcast(b)).count() // the engine's sanctioned pattern
-      a.join(b.withColumnRenamed("y", "x"), "x").count()
-      assert(CartesianGuard.seen.sum() == before,
-        s"sightings moved ${before} -> ${CartesianGuard.seen.sum()}")
-    }
+    import spark.implicits._
+    val a = Seq(1, 2, 3).toDF("x")
+    val b = Seq(4, 5).toDF("y")
+    val before = CartesianGuard.seen.sum()
+    a.crossJoin(broadcast(b)).count() // the engine's sanctioned pattern
+    a.join(b.withColumnRenamed("y", "x"), "x").count()
+    assert(CartesianGuard.seen.sum() == before,
+      s"sightings moved ${before} -> ${CartesianGuard.seen.sum()}")
   }
 
   test("fail mode turns an unsanctioned cartesian into a plan-time error") {
-    withGuard {
-      import spark.implicits._
-      val a = Seq(1, 2).toDF("x")
-      val b = Seq(3, 4).toDF("y")
-      spark.conf.set(CartesianGuard.FailFlag, "true")
-      try {
-        val e = intercept[Exception] { a.crossJoin(b).count() }
-        def messages(t: Throwable): Seq[String] =
-          if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-        assert(messages(e).exists(_.contains("CartesianGuard")), e.toString)
-        // the sanctioned form still runs with the flag on
-        assert(a.crossJoin(broadcast(b)).count() == 4)
-      } finally spark.conf.unset(CartesianGuard.FailFlag)
-    }
+    import spark.implicits._
+    val a = Seq(1, 2).toDF("x")
+    val b = Seq(3, 4).toDF("y")
+    spark.conf.set(CartesianGuard.FailFlag, "true")
+    try {
+      val e = intercept[Exception] { a.crossJoin(b).count() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(_.contains("CartesianGuard")), e.toString)
+      // the sanctioned form still runs with the flag on
+      assert(a.crossJoin(broadcast(b)).count() == 4)
+    } finally spark.conf.unset(CartesianGuard.FailFlag)
   }
 
   test("fail-mode sweep: every declared query plans clean (all engine cross joins are broadcast-hinted)") {
-    withGuard {
-      spark.conf.set(CartesianGuard.FailFlag, "true")
-      try {
-        graft.SparkEntry.allQueries.foreach { q =>
-          // Forcing the optimized plan runs the guard without executing
-          // the query; iterative queries (CC, k-means, BPE) execute their
-          // inner rounds during fn() — with the flag on, those plans are
-          // checked too.
-          try q.fn(spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
-          catch { case e: Throwable =>
-            fail(s"${q.name} failed to plan with $CartesianGuard fail mode on: ${e.getMessage}")
-          }
+    spark.conf.set(CartesianGuard.FailFlag, "true")
+    try {
+      graft.SparkEntry.allQueries.foreach { q =>
+        // Forcing the optimized plan runs the guard without executing
+        // the query; iterative queries (CC, k-means, BPE) execute their
+        // inner rounds during fn() — with the flag on, those plans are
+        // checked too.
+        try q.fn(spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
+        catch { case e: Throwable =>
+          fail(s"${q.name} failed to plan with $CartesianGuard fail mode on: ${e.getMessage}")
         }
-      } finally spark.conf.unset(CartesianGuard.FailFlag)
-    }
+      }
+    } finally spark.conf.unset(CartesianGuard.FailFlag)
   }
 }

@@ -14,7 +14,6 @@ class CmsEstimateSpec extends SparkSpec {
   import spark.implicits._
 
   test("estimates are one-sided: every estimate >= the true count") {
-    graft.expressions.GraftExtensions.register(spark)
     // zipfian-ish: token i appears 201-i times
     val rows = (1 to 200).flatMap(i => Seq.fill(201 - i)(s"tok$i"))
     val df = rows.toDF("t")
@@ -33,7 +32,6 @@ class CmsEstimateSpec extends SparkSpec {
   }
 
   test("long items probe the same sketch the aggregate built") {
-    graft.expressions.GraftExtensions.register(spark)
     val df = (1L to 1000L).map(i => i % 10).toDF("v")
     val sk = df.agg(expr("count_min_sketch(v, 0.01d, 0.99d, 7)").as("sk"))
     val est = df.distinct().join(broadcast(sk))
@@ -43,7 +41,6 @@ class CmsEstimateSpec extends SparkSpec {
   }
 
   test("rejects wrong argument types at analysis") {
-    graft.expressions.GraftExtensions.register(spark)
     val df = Seq((Array[Byte](1), 0.5)).toDF("sk", "x")
     val e = intercept[Exception](
       df.select(call_function("graft_cms_estimate", col("x"), col("x"))).collect())

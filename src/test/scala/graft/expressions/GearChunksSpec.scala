@@ -56,7 +56,6 @@ class GearChunksSpec extends SparkSpec {
   }
 
   test("SQL registration round-trips through the catalyst expression") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq("the quick brown fox jumps over the lazy dog " * 8)
       .toDF("t")
@@ -68,7 +67,6 @@ class GearChunksSpec extends SparkSpec {
   test("maskBits outside [1, 62] fails at analysis time, not silently") {
     // JVM long shifts are mod 64: maskBits=64 would make the mask 0 and
     // chunk after every byte; the expression must reject it up front
-    GraftExtensions.register(spark)
     import spark.implicits._
     for (bad <- Seq(0, -3, 63, 64, 100)) {
       val e = intercept[Exception] {

@@ -12,7 +12,6 @@ import graft.SparkSpec
 class Hash64Spec extends SparkSpec {
 
   test("compiled == declarative == local on corpus text and edge cases") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val edge = Seq("", "a", "bs|1|0", "unicode é ẹ́", "x" * 10000)
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -32,7 +31,6 @@ class Hash64Spec extends SparkSpec {
   }
 
   test("null propagates") {
-    GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_hash64(CAST(NULL AS STRING))").first().isNullAt(0))
   }
 }

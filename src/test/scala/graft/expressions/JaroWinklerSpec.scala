@@ -49,7 +49,6 @@ class JaroWinklerSpec extends SparkSpec {
 
   test("expression evaluates identically through codegen and interpreted paths") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     // parquet round-trip so ConvertToLocalRelation can't constant-fold
     // the expression at plan time — the collect below must go through
     // the generated code

@@ -21,7 +21,6 @@ class MultiMatchSpec extends SparkSpec {
     }
 
   private def run(text: String, phrases: Seq[String]): Seq[Int] = {
-    graft.expressions.GraftExtensions.register(spark)
     val arr = s"array(${phrases.map(p => s"'$p'").mkString(",")})"
     Seq(text).toDF("t")
       .select(expr(s"graft_multi_match(t, $arr)").as("c"))
@@ -62,7 +61,6 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("randomized agreement with the reference scan") {
-    graft.expressions.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(42)
     val alphabet = "abc "
     val phrases = Seq("ab", "abc", "ca b", "bb", "c a", "a")

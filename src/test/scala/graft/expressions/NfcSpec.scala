@@ -19,7 +19,6 @@ class NfcSpec extends SparkSpec {
   private val eDotBelow = "\u1EB9" // LATIN SMALL E WITH DOT BELOW
 
   private def nfc(s: String): String = {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq(s).toDF("t").selectExpr("graft_nfc(t) AS v").collect()(0).getString(0)
   }
@@ -47,7 +46,6 @@ class NfcSpec extends SparkSpec {
   }
 
   test("propagates null") {
-    GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_nfc(CAST(NULL AS STRING)) AS v")
       .collect()(0).isNullAt(0))
   }

@@ -18,7 +18,6 @@ class TriQuantProductsSpec extends SparkSpec {
                   * 1e9) AS BIGINT) AS pq))))"""
 
   test("kernel == HOF chain on the real embedding corpus") {
-    GraftExtensions.register(spark)
     val mismatches = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("embedding").as("v"))
       .select(expr(hof).as("a"),
@@ -29,7 +28,6 @@ class TriQuantProductsSpec extends SparkSpec {
   }
 
   test("kernel == HOF chain on seeded stress vectors incl. half-way products") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val rows = (0 until 200).map { _ =>
@@ -44,7 +42,6 @@ class TriQuantProductsSpec extends SparkSpec {
   }
 
   test("triangle shape: d*(d+1)/2 entries, i <= j, correct diagonal") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq(Array(1.0f, 2.0f, 3.0f)).toDF("v")
       .select(explode(call_function("graft_tri_products", col("v"))).as("p"))

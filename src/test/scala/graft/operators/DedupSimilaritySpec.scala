@@ -125,7 +125,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native minhash kernel is bit-identical to the declarative pipeline") {
-    graft.expressions.GraftExtensions.register(spark)
     // corner shapes: normal, shorter than n, repeated shingles, multiple
     // interior spaces, leading/trailing spaces, tab whitespace, empty
     val docs = Seq(
@@ -157,7 +156,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("shingle hash LIST kernel: every occurrence, in order, matching the hashed declarative grams") {
-    graft.expressions.GraftExtensions.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog",
       "solo",
@@ -263,7 +261,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("winnowPairs: a shared run >= w+k-1 tokens forces a candidate pair; boilerplate is capped") {
-    graft.expressions.GraftExtensions.register(spark)
     val span = (1 to 12).map(i => s"s$i").mkString(" ") // 12 >= w+k-1 = 8 shared tokens
     val docs = Seq(
       (1L, s"a1 a2 a3 a4 a5 $span a6 a7 a8"),
@@ -347,7 +344,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("duplicateRuns: end-to-end from text via the shingle-list kernel") {
-    graft.expressions.GraftExtensions.register(spark)
     val span = (1 to 12).map(i => s"s$i").mkString(" ") // 12 shared tokens
     val docs = Seq(
       (1L, s"a1 a2 a3 $span z1 z2"),
@@ -408,7 +404,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("removeDuplicateRuns end-to-end: first occurrence survives, copy loses the span") {
-    graft.expressions.GraftExtensions.register(spark)
     val span = (1 to 24).map(i => s"sp$i").mkString(" ")
     val docs = Seq(
       (1L, s"h1 h2 $span e1 e2"),

@@ -15,7 +15,6 @@ class SetSimJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private def shingleSets(df: org.apache.spark.sql.DataFrame) = {
-    graft.expressions.GraftExtensions.register(spark)
     df.select(col("doc_id"),
       sort_array(array_distinct(
         call_function("graft_shingle_hash_list", col("text"), lit(3)))).as("hs"))

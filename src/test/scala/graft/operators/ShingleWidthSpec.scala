@@ -81,7 +81,6 @@ class ShingleWidthSpec extends SparkSpec {
     finally spark.conf.unset(Dedup.ShingleBitsKey)
     // analysis-time failure, not a silent degenerate mask (JVM shifts
     // are mod 64 — the GearChunks maskBits lesson)
-    graft.expressions.GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq("a b c d").toDF("text")
     for (bad <- Seq(8, 61)) {

@@ -8,7 +8,6 @@ import graft.SparkSpec
 class CorpusQueriesSpec extends SparkSpec {
 
   test("contaminationOverlap: AQE converts the eval join to broadcast when it fits") {
-    graft.expressions.GraftExtensions.register(spark)
     import spark.implicits._
     // overlapping 7-word docs so trigram shingles collide across the
     // eval (doc_id % 10 == 0) / training split
@@ -31,7 +30,6 @@ class CorpusQueriesSpec extends SparkSpec {
   }
 
   test("q196 dup spans == brute-force maximal shared-window spans") {
-    graft.expressions.GraftExtensions.register(spark)
     val sf = "/root/testdata/sf0.001"
     // Brute force: literal 8-token windows (gram strings, no hashing),
     // windows shared by >=2 distinct docs, merged into maximal runs.
@@ -61,7 +59,6 @@ class CorpusQueriesSpec extends SparkSpec {
   }
 
   test("contaminationOverlap runs no job at plan construction") {
-    graft.expressions.GraftExtensions.register(spark)
     import spark.implicits._
     val docs = Seq((0L, "a b c d e"), (1L, "a b c d e")).toDF("doc_id", "text")
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length

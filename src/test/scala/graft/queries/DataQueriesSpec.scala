@@ -7,7 +7,6 @@ class DataQueriesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("q204: fused score is exactly the RRF of the two shortlist ranks") {
-    graft.expressions.GraftExtensions.register(spark)
     val out = DataQueries.q204.fn(spark, sf).collect()
     assert(out.length == 50)
     def contrib(rank: Any): Long = rank match {

@@ -365,7 +365,6 @@ class InferQueriesSpec extends SparkSpec {
     assert(jsd >= 0.0 && jsd <= math.log(2.0) + 1e-9, s"jsd $jsd")
     // swap: relabel src1 as the P side — identical pipeline, P/Q roles
     // exchanged; JSD must be unchanged (it is symmetric by definition)
-    graft.expressions.GraftExtensions.register(spark)
     val tok = Tables.load(spark, sf, "documents")
       .filter(col("source").isin("src0", "src1"))
       .select(when(col("source") === "src1", 1L).otherwise(0L).as("p"),

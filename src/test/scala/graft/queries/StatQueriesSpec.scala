@@ -28,7 +28,6 @@ class StatQueriesSpec extends SparkSpec {
 
   test("q107: single-token document has zero entropy") {
     import spark.implicits._
-    graft.expressions.GraftExtensions.register(spark)
     val one = Seq((1L, "spark spark spark spark")).toDF("doc_id", "text")
       .select(col("doc_id"),
         explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -187,7 +186,6 @@ class StatQueriesSpec extends SparkSpec {
   test("q110: ranks identical under a different input partitioning") {
     val base = rows(StatQueries.q110.fn(spark, sf))
     val sp2 = spark.newSession()
-    graft.expressions.GraftExtensions.register(sp2)
     sp2.conf.set("spark.sql.shuffle.partitions", "7")
     val alt = rows(StatQueries.q110.fn(sp2, sf))
     assert(base == alt, "q110 not partition-count independent")
@@ -202,7 +200,6 @@ class StatQueriesSpec extends SparkSpec {
     }
     // mergeability: counter tables of two halves sum to the whole's
     import spark.implicits._
-    graft.expressions.GraftExtensions.register(spark)
     val coeffs = graft.operators.Dedup.minhashCoeffs(4)
     def cms(df: org.apache.spark.sql.DataFrame) = df
       .select(explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))

@@ -341,7 +341,6 @@ class StreamingSpec extends SparkSpec {
 
   test("streamCurate with the substring stage: cross-micro-batch span cut equals one-shot") {
     import spark.implicits._
-    graft.expressions.GraftExtensions.register(spark)
     val dir = Files.createTempDirectory("graft-curate-runs").toFile
     val spanA = (1 to 10).map(i => s"aa$i").mkString(" ")
     val spanB = (1 to 10).map(i => s"bb$i").mkString(" ")
@@ -997,7 +996,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cmsSketch over a multi-trigger file stream equals the batch q115 counter table") {
-    graft.expressions.GraftExtensions.register(spark)
     val dir = Files.createTempDirectory("graft-cms").toFile
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     // two landing files → two micro-batches under maxFilesPerTrigger=1:

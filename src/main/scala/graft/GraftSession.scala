@@ -80,7 +80,7 @@ object GraftSession {
   def create(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
                .getOrElse(Runtime.getRuntime.availableProcessors),
              appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.extensions", classOf[graft.expressions.GraftExtensions].getName)
@@ -102,13 +102,15 @@ object GraftSession {
       // > 200 reducers (any real-scale exchange) never used bypass, so
       // the setting is inert at cluster scale.
       .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.local.dir", fastLocalDir)
       // static: saveAsTable tables land outside the working tree
       .config("spark.sql.warehouse.dir",
         new java.io.File(System.getProperty("java.io.tmpdir"), "graft_warehouse").getAbsolutePath)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_LOCAL_DIRS, when set, overrides spark.local.dir anyway, and
+    // Spark warns on every start that finds both
+    if (!sys.env.contains("SPARK_LOCAL_DIRS")) builder.config("spark.local.dir", fastLocalDir)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Relational.denseIdBy numbers dimension-sized relations with an
     // unpartitioned row_number on purpose (fact-scale callers use

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,24 +37,30 @@ object AudioCodec {
     */
   def encodePcmWav(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     require(channels >= 1, s"channels must be >= 1, got $channels")
-    val dataLen = samples.length * 2
-    val bos = new ByteArrayOutputStream(44 + dataLen)
-    def ascii(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff); bos.write((v >> 16) & 0xff); bos.write((v >> 24) & 0xff) }
-    def le16(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff) }
-    ascii("RIFF"); le32(36 + dataLen); ascii("WAVE")
-    ascii("fmt "); le32(16)
-    le16(1) // PCM
-    le16(channels)
-    le32(sampleRate)
-    le32(sampleRate * channels * 2) // byte rate
-    le16(channels * 2)              // block align
-    le16(16)                        // bits per sample
-    ascii("data"); le32(dataLen)
-    var i = 0
-    while (i < samples.length) { le16(samples(i) & 0xffff); i += 1 }
-    bos.toByteArray
+    val data = new ByteSink(samples.length * 2)
+    samples.foreach(v => data.le16(v))
+    wav(new ByteSink(16).le16(1) // PCM
+      .le16(channels)
+      .le32(sampleRate)
+      .le32(sampleRate * channels * 2) // byte rate
+      .le16(channels * 2)              // block align
+      .le16(16),                       // bits per sample
+      "data" -> data.toByteArray)
   }
+
+  /** RIFF/WAVE bytes: the `fmt ` body, then `chunks` in order. */
+  private def wav(fmt: ByteSink, chunks: (String, Array[Byte])*): Array[Byte] = {
+    val body = new ByteSink().ascii("WAVE").riffChunk("fmt ", fmt.toByteArray)
+    chunks.foreach { case (fourcc, b) => body.riffChunk(fourcc, b) }
+    new ByteSink(8 + body.size).riffChunk("RIFF", body.toByteArray).toByteArray
+  }
+
+  /** Walk a RIFF/WAVE file's chunks (see [[Bytes.riffChunks]]); false
+    * when the header is not RIFF/WAVE.
+    */
+  private def wavChunks(bytes: Array[Byte])(visit: (Int, Int) => Boolean): Boolean =
+    bytes.length >= 12 && Bytes.tag(bytes, 0, "RIFF") && Bytes.tag(bytes, 8, "WAVE") &&
+      Bytes.riffChunks(bytes, 12, bytes.length)(visit)
 
   /** Decode RIFF/WAVE bytes to (sampleRate, channels, interleaved
     * 16-bit samples). A real chunk-walk, not a fixed-offset read:
@@ -66,38 +70,29 @@ object AudioCodec {
     * or non-16-bit payloads → None (surfaced as rows, not exceptions).
     */
   def decodePcmWav(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    var pos = 12
     var sampleRate = -1
     var channels = -1
     var ok = false
-    while (pos + 8 <= bytes.length) {
-      val size = le32(pos + 4)
-      if (size < 0 || size > bytes.length - pos - 8) return None
-      if (tag(pos, "fmt ")) {
-        if (size < 16) return None
-        val fmt = le16(pos + 8)
-        channels = le16(pos + 10)
-        sampleRate = le32(pos + 12)
-        val bits = le16(pos + 22)
-        if (fmt != 1 || bits != 16 || channels < 1) return None
-        ok = true
-      } else if (tag(pos, "data")) {
-        if (!ok) return None // fmt must precede data
-        val n = size / 2
-        val out = new Array[Short](n)
-        var i = 0
-        while (i < n) { out(i) = le16(pos + 8 + 2 * i).toShort; i += 1 }
-        return Some((sampleRate, channels, out))
-      }
-      pos += 8 + size + (size & 1) // chunks are word-aligned: odd sizes carry a pad byte
+    var out: Option[(Int, Int, Array[Short])] = None
+    wavChunks(bytes) { (pos, size) =>
+      if (Bytes.tag(bytes, pos, "fmt ")) {
+        ok = size >= 16 && {
+          channels = Bytes.le16(bytes, pos + 10)
+          sampleRate = Bytes.le32(bytes, pos + 12)
+          Bytes.le16(bytes, pos + 8) == 1 && Bytes.le16(bytes, pos + 22) == 16 && channels >= 1
+        }
+        ok
+      } else if (Bytes.tag(bytes, pos, "data")) {
+        if (ok) { // fmt must precede data
+          val samples = new Array[Short](size / 2)
+          var i = 0
+          while (i < samples.length) { samples(i) = Bytes.le16(bytes, pos + 8 + 2 * i).toShort; i += 1 }
+          out = Some((sampleRate, channels, samples))
+        }
+        false
+      } else true
     }
-    None
+    out
   }
 
   // ------------------------------------------------------------------
@@ -166,37 +161,27 @@ object AudioCodec {
     val blockAlign = 4 + (nibblesPerBlock + 1) / 2
     val samplesPerBlock = nibblesPerBlock + 1
     val totalSamples = blocks.map(_._3.length + 1).sum
-    val dataLen = blocks.map(b => 4 + (b._3.length + 1) / 2).sum
-    val bos = new ByteArrayOutputStream(60 + dataLen)
-    def ascii(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff); bos.write((v >> 16) & 0xff); bos.write((v >> 24) & 0xff) }
-    def le16(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff) }
-    ascii("RIFF"); le32(4 + (8 + 20) + (8 + 4) + (8 + dataLen) + (dataLen & 1)); ascii("WAVE")
-    ascii("fmt "); le32(20)
-    le16(0x11) // IMA ADPCM
-    le16(1)    // mono
-    le32(sampleRate)
-    le32(sampleRate * blockAlign / samplesPerBlock) // nominal byte rate
-    le16(blockAlign)
-    le16(4)    // bits per (encoded) sample
-    le16(2)    // cbSize
-    le16(samplesPerBlock)
-    ascii("fact"); le32(4); le32(totalSamples)
-    ascii("data"); le32(dataLen)
+    val data = new ByteSink()
     blocks.foreach { case (pred0, idx0, nibbles) =>
-      le16(pred0 & 0xffff)
-      bos.write(idx0 & 0xff)
-      bos.write(0)
+      data.le16(pred0).u8(idx0).u8(0)
       var i = 0
       while (i < nibbles.length) {
         val lo = nibbles(i) & 0xf
         val hi = if (i + 1 < nibbles.length) nibbles(i + 1) & 0xf else 0
-        bos.write(lo | (hi << 4)) // low nibble first, per spec
+        data.u8(lo | (hi << 4)) // low nibble first, per spec
         i += 2
       }
     }
-    if ((dataLen & 1) != 0) bos.write(0) // RIFF word alignment
-    bos.toByteArray
+    wav(new ByteSink(20).le16(0x11) // IMA ADPCM
+      .le16(1)    // mono
+      .le32(sampleRate)
+      .le32(sampleRate * blockAlign / samplesPerBlock) // nominal byte rate
+      .le16(blockAlign)
+      .le16(4)    // bits per (encoded) sample
+      .le16(2)    // cbSize
+      .le16(samplesPerBlock),
+      "fact" -> new ByteSink(4).le32(totalSamples).toByteArray,
+      "data" -> data.toByteArray)
   }
 
   /** Decode a mono IMA ADPCM WAV (format tag 0x11): same chunk-walk
@@ -207,67 +192,68 @@ object AudioCodec {
     * (sampleRate, 1, samples); anything non-ADPCM/multichannel → None.
     */
   def decodeImaAdpcmWav(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def s16(i: Int): Int = le16(i).toShort.toInt
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    var pos = 12
     var sampleRate = -1
     var blockAlign = -1
     var samplesPerBlock = -1
     var factSamples = -1
     var ok = false
-    while (pos + 8 <= bytes.length) {
-      val size = le32(pos + 4)
-      if (size < 0 || size > bytes.length - pos - 8) return None
-      if (tag(pos, "fmt ")) {
-        if (size < 16) return None
-        val fmt = le16(pos + 8)
-        val channels = le16(pos + 10)
-        sampleRate = le32(pos + 12)
-        blockAlign = le16(pos + 20)
-        val bits = le16(pos + 22)
-        if (fmt != 0x11 || bits != 4 || channels != 1 || blockAlign < 5) return None
-        samplesPerBlock =
-          if (size >= 20) le16(pos + 26) else (blockAlign - 4) * 2 + 1
-        // a crafted samplesPerBlock of 0 would drive the per-block
-        // nibble count to −1 (NegativeArraySizeException) — fail closed
-        if (samplesPerBlock < 1) return None
-        ok = true
-      } else if (tag(pos, "fact")) {
-        if (size >= 4) factSamples = le32(pos + 8)
-      } else if (tag(pos, "data")) {
-        if (!ok) return None // fmt must precede data
-        val out = Array.newBuilder[Short]
-        var bp = pos + 8
-        val end = pos + 8 + size
-        while (bp + 4 <= end) {
-          val blockEnd = math.min(bp + blockAlign, end)
-          val pred0 = s16(bp)
-          val idx0 = u8(bp + 2)
-          if (idx0 > 88) return None
-          val nNibbles = math.min((blockEnd - bp - 4) * 2, samplesPerBlock - 1)
-          val nibbles = new Array[Int](nNibbles)
-          var i = 0
-          while (i < nNibbles) {
-            val b = u8(bp + 4 + i / 2)
-            nibbles(i) = if (i % 2 == 0) b & 0xf else (b >> 4) & 0xf
-            i += 1
-          }
-          out ++= adpcmDecodeNibbles(pred0, idx0, nibbles)
-          bp += blockAlign
+    var result: Option[(Int, Int, Array[Short])] = None
+    wavChunks(bytes) { (pos, size) =>
+      if (Bytes.tag(bytes, pos, "fmt ")) {
+        ok = size >= 16 && {
+          val channels = Bytes.le16(bytes, pos + 10)
+          sampleRate = Bytes.le32(bytes, pos + 12)
+          blockAlign = Bytes.le16(bytes, pos + 20)
+          Bytes.le16(bytes, pos + 8) == 0x11 && Bytes.le16(bytes, pos + 22) == 4 &&
+            channels == 1 && blockAlign >= 5
+        } && {
+          samplesPerBlock =
+            if (size >= 20) Bytes.le16(bytes, pos + 26) else (blockAlign - 4) * 2 + 1
+          // a crafted samplesPerBlock of 0 would drive the per-block
+          // nibble count to −1 (NegativeArraySizeException) — fail closed
+          samplesPerBlock >= 1
         }
-        val all = out.result()
-        val trimmed = if (factSamples >= 0 && factSamples < all.length)
-          java.util.Arrays.copyOf(all, factSamples) else all
-        return Some((sampleRate, 1, trimmed))
-      }
-      pos += 8 + size + (size & 1) // chunks are word-aligned: odd sizes carry a pad byte
+        ok
+      } else if (Bytes.tag(bytes, pos, "fact")) {
+        if (size >= 4) factSamples = Bytes.le32(bytes, pos + 8)
+        true
+      } else if (Bytes.tag(bytes, pos, "data")) {
+        if (ok) result = decodeAdpcmData(bytes, pos + 8, pos + 8 + size, blockAlign,
+          samplesPerBlock).map { all => // fmt must precede data
+          val trimmed = if (factSamples >= 0 && factSamples < all.length)
+            java.util.Arrays.copyOf(all, factSamples) else all
+          (sampleRate, 1, trimmed)
+        }
+        false
+      } else true
     }
-    None
+    result
+  }
+
+  /** The ADPCM `data` body [from, end): per-block state decode; None on
+    * an out-of-range step index.
+    */
+  private def decodeAdpcmData(bytes: Array[Byte], from: Int, end: Int,
+      blockAlign: Int, samplesPerBlock: Int): Option[Array[Short]] = {
+    val out = Array.newBuilder[Short]
+    var bp = from
+    while (bp + 4 <= end) {
+      val blockEnd = math.min(bp + blockAlign, end)
+      val pred0 = Bytes.le16(bytes, bp).toShort.toInt
+      val idx0 = bytes(bp + 2) & 0xff
+      if (idx0 > 88) return None
+      val nNibbles = math.min((blockEnd - bp - 4) * 2, samplesPerBlock - 1)
+      val nibbles = new Array[Int](nNibbles)
+      var i = 0
+      while (i < nNibbles) {
+        val b = bytes(bp + 4 + i / 2) & 0xff
+        nibbles(i) = if (i % 2 == 0) b & 0xf else (b >> 4) & 0xf
+        i += 1
+      }
+      out ++= adpcmDecodeNibbles(pred0, idx0, nibbles)
+      bp += blockAlign
+    }
+    Some(out.result())
   }
 
   // ------------------------------------------------------------------
@@ -364,25 +350,15 @@ object AudioCodec {
     */
   private def encodeG711Wav(fmtTag: Int, sampleRate: Int,
                             ulaw: Array[Int]): Array[Byte] = {
-    val dataLen = ulaw.length
-    val bos = new ByteArrayOutputStream(46 + dataLen)
-    def ascii(s: String): Unit = bos.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff); bos.write((v >> 16) & 0xff); bos.write((v >> 24) & 0xff) }
-    def le16(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff) }
-    ascii("RIFF"); le32(4 + (8 + 18) + (8 + 4) + (8 + dataLen) + (dataLen & 1)); ascii("WAVE")
-    ascii("fmt "); le32(18)
-    le16(fmtTag) // 6 = WAVE_FORMAT_ALAW, 7 = WAVE_FORMAT_MULAW
-    le16(1) // mono
-    le32(sampleRate)
-    le32(sampleRate) // byte rate: one byte per sample
-    le16(1)          // block align
-    le16(8)          // bits per sample
-    le16(0)          // cbSize
-    ascii("fact"); le32(4); le32(dataLen)
-    ascii("data"); le32(dataLen)
-    ulaw.foreach(b => bos.write(b & 0xff))
-    if ((dataLen & 1) != 0) bos.write(0) // RIFF word alignment
-    bos.toByteArray
+    wav(new ByteSink(18).le16(fmtTag) // 6 = WAVE_FORMAT_ALAW, 7 = WAVE_FORMAT_MULAW
+      .le16(1) // mono
+      .le32(sampleRate)
+      .le32(sampleRate) // byte rate: one byte per sample
+      .le16(1)          // block align
+      .le16(8)          // bits per sample
+      .le16(0),         // cbSize
+      "fact" -> new ByteSink(4).le32(ulaw.length).toByteArray,
+      "data" -> ulaw.map(_.toByte))
   }
 
   /** Decode a mono µ-law WAV (format tag 7): the [[decodePcmWav]]
@@ -398,36 +374,28 @@ object AudioCodec {
     */
   private def decodeG711Wav(fmtTag: Int, expand: Int => Short,
                             bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    var pos = 12
     var sampleRate = -1
     var ok = false
-    while (pos + 8 <= bytes.length) {
-      val size = le32(pos + 4)
-      if (size < 0 || size > bytes.length - pos - 8) return None
-      if (tag(pos, "fmt ")) {
-        if (size < 16) return None
-        val fmt = le16(pos + 8)
-        val channels = le16(pos + 10)
-        sampleRate = le32(pos + 12)
-        val bits = le16(pos + 22)
-        if (fmt != fmtTag || bits != 8 || channels != 1) return None
-        ok = true
-      } else if (tag(pos, "data")) {
-        if (!ok) return None // fmt must precede data
-        val out = new Array[Short](size)
-        var i = 0
-        while (i < size) { out(i) = expand(u8(pos + 8 + i)); i += 1 }
-        return Some((sampleRate, 1, out))
-      }
-      pos += 8 + size + (size & 1) // chunks are word-aligned: odd sizes carry a pad byte
+    var out: Option[(Int, Int, Array[Short])] = None
+    wavChunks(bytes) { (pos, size) =>
+      if (Bytes.tag(bytes, pos, "fmt ")) {
+        ok = size >= 16 && {
+          sampleRate = Bytes.le32(bytes, pos + 12)
+          Bytes.le16(bytes, pos + 8) == fmtTag && Bytes.le16(bytes, pos + 22) == 8 &&
+            Bytes.le16(bytes, pos + 10) == 1
+        }
+        ok
+      } else if (Bytes.tag(bytes, pos, "data")) {
+        if (ok) { // fmt must precede data
+          val samples = new Array[Short](size)
+          var i = 0
+          while (i < size) { samples(i) = expand(bytes(pos + 8 + i) & 0xff); i += 1 }
+          out = Some((sampleRate, 1, samples))
+        }
+        false
+      } else true
     }
-    None
+    out
   }
 
   /** Nearest-neighbor resample: output index `i` samples source

@@ -30,29 +30,11 @@ import org.apache.spark.sql.functions.col
   */
 object Av1Obu {
 
-  private object Malformed extends Exception with scala.util.control.NoStackTrace
-
-  /** MSB-first bit reader over [off, end) — the AV1 f(n) read. */
-  private final class Bits(b: Array[Byte], off: Int, val end: Int) {
-    var pos: Int = off * 8
-    private val limit = end * 8
-    def f(n: Int): Long = {
-      if (n < 0 || n > 63 || pos + n > limit) throw Malformed
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        v = (v << 1) | ((b(pos >> 3) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    /** §4.10.3 uvlc(): leading zeros k, marker 1, k literal bits. */
-    def uvlc(): Long = {
-      var k = 0
-      while (f(1) == 0) { k += 1; if (k > 31) throw Malformed }
-      if (k == 0) 0L else (1L << k) - 1 + f(k)
-    }
+  /** §4.10.3 uvlc(): leading zeros k, marker 1, k literal bits. */
+  private def uvlc(r: BitCursor): Long = {
+    var k = 0
+    while (r.bits(1) == 0) { k += 1; if (k > 31) throw Malformed }
+    if (k == 0) 0L else (1L << k) - 1 + r.bits(k)
   }
 
   /** The decoded sequence-header facets (zeroed unless ok = 1). */
@@ -65,83 +47,83 @@ object Av1Obu {
   /** Decode one sequence_header_obu payload (§5.5). */
   def parseSeqHdr(bytes: Array[Byte], off: Int, end: Int): SeqHdr = {
     try {
-      val r = new Bits(bytes, off, end)
-      val profile = r.f(3).toInt
+      val r = new BitCursor(bytes, off, end)
+      val profile = r.bits(3).toInt
       if (profile > 2) throw Malformed
-      val still = r.f(1).toInt
-      val reduced = r.f(1).toInt
+      val still = r.bits(1).toInt
+      val reduced = r.bits(1).toInt
       var level = 0
       var tier = 0
       var decoderModel = false
       var bufferDelayBits = 0
       if (reduced == 1) {
-        level = r.f(5).toInt
+        level = r.bits(5).toInt
       } else {
-        if (r.f(1) == 1) { // timing_info_present
-          r.f(32); r.f(32) // num_units_in_display_tick, time_scale
-          if (r.f(1) == 1) r.uvlc() // equal_picture_interval → ticks
-          if (r.f(1) == 1) { // decoder_model_info_present
+        if (r.bits(1) == 1) { // timing_info_present
+          r.bits(32); r.bits(32) // num_units_in_display_tick, time_scale
+          if (r.bits(1) == 1) uvlc(r) // equal_picture_interval → ticks
+          if (r.bits(1) == 1) { // decoder_model_info_present
             decoderModel = true
-            bufferDelayBits = r.f(5).toInt + 1
-            r.f(32); r.f(5); r.f(5)
+            bufferDelayBits = r.bits(5).toInt + 1
+            r.bits(32); r.bits(5); r.bits(5)
           }
         }
-        val initialDisplay = r.f(1) == 1
-        val nOps = r.f(5).toInt + 1
+        val initialDisplay = r.bits(1) == 1
+        val nOps = r.bits(5).toInt + 1
         var op = 0
         while (op < nOps) {
-          r.f(12) // operating_point_idc
-          val lv = r.f(5).toInt
-          val tr = if (lv > 7) r.f(1).toInt else 0
+          r.bits(12) // operating_point_idc
+          val lv = r.bits(5).toInt
+          val tr = if (lv > 7) r.bits(1).toInt else 0
           if (op == 0) { level = lv; tier = tr }
-          if (decoderModel && r.f(1) == 1) {
-            r.f(bufferDelayBits); r.f(bufferDelayBits); r.f(1)
+          if (decoderModel && r.bits(1) == 1) {
+            r.bits(bufferDelayBits); r.bits(bufferDelayBits); r.bits(1)
           }
-          if (initialDisplay && r.f(1) == 1) r.f(4)
+          if (initialDisplay && r.bits(1) == 1) r.bits(4)
           op += 1
         }
       }
-      val wBits = r.f(4).toInt + 1
-      val hBits = r.f(4).toInt + 1
-      val width = r.f(wBits) + 1
-      val height = r.f(hBits) + 1
-      if (reduced == 0 && r.f(1) == 1) { // frame_id_numbers_present
-        r.f(4); r.f(3)
+      val wBits = r.bits(4).toInt + 1
+      val hBits = r.bits(4).toInt + 1
+      val width = r.bits(wBits) + 1
+      val height = r.bits(hBits) + 1
+      if (reduced == 0 && r.bits(1) == 1) { // frame_id_numbers_present
+        r.bits(4); r.bits(3)
       }
-      val sb128 = r.f(1).toInt
-      r.f(1); r.f(1) // enable_filter_intra, enable_intra_edge_filter
+      val sb128 = r.bits(1).toInt
+      r.bits(1); r.bits(1) // enable_filter_intra, enable_intra_edge_filter
       if (reduced == 0) {
-        r.f(1); r.f(1); r.f(1); r.f(1) // interintra/masked/warped/dual
-        val orderHint = r.f(1) == 1
-        if (orderHint) { r.f(1); r.f(1) } // jnt_comp, ref_frame_mvs
-        val forceSct = if (r.f(1) == 1) 2L else r.f(1) // choose / force
-        if (forceSct > 0) { if (r.f(1) == 0) r.f(1) } // integer_mv
-        if (orderHint) r.f(3)
+        r.bits(1); r.bits(1); r.bits(1); r.bits(1) // interintra/masked/warped/dual
+        val orderHint = r.bits(1) == 1
+        if (orderHint) { r.bits(1); r.bits(1) } // jnt_comp, ref_frame_mvs
+        val forceSct = if (r.bits(1) == 1) 2L else r.bits(1) // choose / force
+        if (forceSct > 0) { if (r.bits(1) == 0) r.bits(1) } // integer_mv
+        if (orderHint) r.bits(3)
       }
-      r.f(1); r.f(1); r.f(1) // superres, cdef, restoration
+      r.bits(1); r.bits(1); r.bits(1) // superres, cdef, restoration
       // color_config (§5.5.2)
-      val high = r.f(1).toInt
+      val high = r.bits(1).toInt
       val bitDepth =
-        if (profile == 2 && high == 1) { if (r.f(1) == 1) 12 else 10 }
+        if (profile == 2 && high == 1) { if (r.bits(1) == 1) 12 else 10 }
         else if (high == 1) 10 else 8
-      val mono = if (profile == 1) 0 else r.f(1).toInt
+      val mono = if (profile == 1) 0 else r.bits(1).toInt
       val matrixIdentity =
-        if (r.f(1) == 1) { r.f(8); r.f(8); r.f(8) == 0L } else false
-      if (mono == 1) r.f(1) // color_range, subsampling implied
+        if (r.bits(1) == 1) { r.bits(8); r.bits(8); r.bits(8) == 0L } else false
+      if (mono == 1) r.bits(1) // color_range, subsampling implied
       else if (matrixIdentity) () // RGB: range/subsampling implied
       else {
-        r.f(1) // color_range
+        r.bits(1) // color_range
         val (sx, sy) = profile match {
           case 0 => (1L, 1L)
           case 1 => (0L, 0L)
           case _ =>
-            if (bitDepth == 12) { val x = r.f(1); (x, if (x == 1) r.f(1) else 0L) }
+            if (bitDepth == 12) { val x = r.bits(1); (x, if (x == 1) r.bits(1) else 0L) }
             else (1L, 0L)
         }
-        if (sx == 1 && sy == 1) r.f(2) // chroma_sample_position
+        if (sx == 1 && sy == 1) r.bits(2) // chroma_sample_position
       }
-      if (mono == 0) r.f(1) // separate_uv_delta_q
-      r.f(1) // film_grain_params_present
+      if (mono == 0) r.bits(1) // separate_uv_delta_q
+      r.bits(1) // film_grain_params_present
       SeqHdr(1, profile, level, tier, width, height, bitDepth, mono,
         sb128, still, reduced)
     } catch {
@@ -223,17 +205,13 @@ object Av1Obu {
 
   def parseIvf(bytes: Array[Byte]): IvfMeta = {
     val n = bytes.length
-    def le16(p: Int): Int = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
-    def le32(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
     if (n < 32 || bytes(0) != 'D' || bytes(1) != 'K' || bytes(2) != 'I' ||
       bytes(3) != 'F') return NoIvf
-    val hdrSize = le16(6)
+    val hdrSize = Bytes.le16(bytes, 6)
     if (hdrSize < 32 || hdrSize > n) return NoIvf
     if (!(bytes(8) == 'A' && bytes(9) == 'V' && bytes(10) == '0' &&
       bytes(11) == '1')) return NoIvf
-    val nFramesHdr = le32(24)
+    val nFramesHdr = Bytes.le32u(bytes, 24)
     var p = hdrSize
     var walked = 0; var nObus = 0; var nSeq = 0; var nFrameObus = 0
     var seq = NoSeq
@@ -242,7 +220,7 @@ object Av1Obu {
     while (!halted && p < n) {
       if (n - p < 12) { malformed = 1; halted = true }
       else {
-        val sz = le32(p)
+        val sz = Bytes.le32u(bytes, p)
         p += 12
         if (sz > n - p) { malformed = 1; halted = true }
         else walkObus(bytes, p, (p + sz).toInt, seq) match {
@@ -286,89 +264,64 @@ object Av1Obu {
   // ------------------------------------------------------------------
   // encoders (fixtures + the closed-form oracle)
 
-  private final class BitW {
-    private val buf = scala.collection.mutable.ArrayBuffer[Byte]()
-    private var cur = 0
-    private var nb = 0
-    def f(v: Long, n: Int): BitW = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1L).toInt
-        nb += 1
-        if (nb == 8) { buf += cur.toByte; cur = 0; nb = 0 }
-        i -= 1
-      }
-      this
-    }
-    def bytes: Array[Byte] = {
-      if (nb == 0) buf.toArray
-      else buf.toArray :+ (cur << (8 - nb)).toByte // zero-pad tail
-    }
-  }
-
   /** Encode a sequence header (the subset of knobs the census reads;
     * full-header path with no timing info, one operating point).
     */
   def encodeSeqHdr(profile: Int, level: Int, tier: Int, width: Long,
       height: Long, bitDepth: Int, mono: Boolean, sb128: Boolean,
       still: Boolean, reduced: Boolean): Array[Byte] = {
-    val w = new BitW
-    w.f(profile.toLong, 3)
-    w.f(if (still) 1 else 0, 1)
-    w.f(if (reduced) 1 else 0, 1)
-    if (reduced) w.f(level.toLong, 5)
+    val w = new BitSink
+    w.bits(profile.toLong, 3)
+    w.bits(if (still) 1 else 0, 1)
+    w.bits(if (reduced) 1 else 0, 1)
+    if (reduced) w.bits(level.toLong, 5)
     else {
-      w.f(0, 1) // no timing info
-      w.f(0, 1) // no initial display delay
-      w.f(0, 5) // one operating point
-      w.f(0, 12)
-      w.f(level.toLong, 5)
-      if (level > 7) w.f(tier.toLong, 1)
+      w.bits(0, 1) // no timing info
+      w.bits(0, 1) // no initial display delay
+      w.bits(0, 5) // one operating point
+      w.bits(0, 12)
+      w.bits(level.toLong, 5)
+      if (level > 7) w.bits(tier.toLong, 1)
     }
     def bits(v: Long): Int = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(v - 1))
     val wb = bits(width); val hb = bits(height)
-    w.f(wb.toLong - 1, 4).f(hb.toLong - 1, 4)
-    w.f(width - 1, wb).f(height - 1, hb)
-    if (!reduced) w.f(0, 1) // no frame ids
-    w.f(if (sb128) 1 else 0, 1)
-    w.f(0, 1).f(0, 1) // filter_intra, intra_edge_filter
+    w.bits(wb.toLong - 1, 4).bits(hb.toLong - 1, 4)
+    w.bits(width - 1, wb).bits(height - 1, hb)
+    if (!reduced) w.bits(0, 1) // no frame ids
+    w.bits(if (sb128) 1 else 0, 1)
+    w.bits(0, 1).bits(0, 1) // filter_intra, intra_edge_filter
     if (!reduced) {
-      w.f(0, 4) // interintra/masked/warped/dual
-      w.f(0, 1) // enable_order_hint
-      w.f(1, 1) // seq_choose_screen_content_tools = 1 → force = 2
-      w.f(1, 1) // seq_choose_integer_mv
+      w.bits(0, 4) // interintra/masked/warped/dual
+      w.bits(0, 1) // enable_order_hint
+      w.bits(1, 1) // seq_choose_screen_content_tools = 1 → force = 2
+      w.bits(1, 1) // seq_choose_integer_mv
     }
-    w.f(0, 3) // superres, cdef, restoration
+    w.bits(0, 3) // superres, cdef, restoration
     // color_config
     val high = if (bitDepth >= 10) 1 else 0
-    w.f(high.toLong, 1)
-    if (profile == 2 && high == 1) w.f(if (bitDepth == 12) 1 else 0, 1)
-    if (profile != 1) w.f(if (mono) 1 else 0, 1)
-    w.f(0, 1) // no color description
-    if (mono) w.f(0, 1) // color_range
+    w.bits(high.toLong, 1)
+    if (profile == 2 && high == 1) w.bits(if (bitDepth == 12) 1 else 0, 1)
+    if (profile != 1) w.bits(if (mono) 1 else 0, 1)
+    w.bits(0, 1) // no color description
+    if (mono) w.bits(0, 1) // color_range
     else {
-      w.f(0, 1) // color_range
-      if (profile == 0) w.f(0, 2) // chroma_sample_position (4:2:0)
-      else if (profile == 2 && bitDepth == 12) w.f(0, 1) // subsampling_x = 0
+      w.bits(0, 1) // color_range
+      if (profile == 0) w.bits(0, 2) // chroma_sample_position (4:2:0)
+      else if (profile == 2 && bitDepth == 12) w.bits(0, 1) // subsampling_x = 0
       // profile 1: 4:4:4, nothing to read
     }
-    if (!mono) w.f(0, 1) // separate_uv_delta_q
-    w.f(0, 1) // film_grain
-    w.bytes
+    if (!mono) w.bits(0, 1) // separate_uv_delta_q
+    w.bits(0, 1) // film_grain
+    w.toByteArray
   }
 
   /** One OBU: header (+ extension) + LEB128 size + payload. */
   def encodeObu(tpe: Int, payload: Array[Byte], withExt: Boolean = false,
                 withSize: Boolean = true): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(((tpe & 0xF) << 3) | (if (withExt) 4 else 0) |
-      (if (withSize) 2 else 0))
-    if (withExt) out.write(0x28) // temporal 1, spatial 1
-    if (withSize) {
-      var v = payload.length.toLong
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
-    }
+    val out = new ByteSink()
+    out.u8(((tpe & 0xF) << 3) | (if (withExt) 4 else 0) | (if (withSize) 2 else 0))
+    if (withExt) out.u8(0x28) // temporal 1, spatial 1
+    if (withSize) out.varint(payload.length.toLong)
     out.write(payload)
     out.toByteArray
   }
@@ -376,20 +329,15 @@ object Av1Obu {
   /** IVF file: 32-byte DKIF/AV01 header + (size, pts, payload) frames. */
   def encodeIvf(width: Int, height: Int,
                 frames: Seq[Array[Byte]]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt))
-    out.write("DKIF".getBytes("US-ASCII"))
-    le16(0); le16(32)
-    out.write("AV01".getBytes("US-ASCII"))
-    le16(width); le16(height)
-    le32(30L); le32(1L) // timebase
-    le32(frames.size.toLong); le32(0L)
+    val out = new ByteSink()
+    out.ascii("DKIF").le16(0).le16(32).ascii("AV01")
+    out.le16(width).le16(height)
+    out.le32(30L).le32(1L) // timebase
+    out.le32(frames.size.toLong).le32(0L)
     frames.zipWithIndex.foreach { case (f, i) =>
-      le32(f.length.toLong)
-      le32(i.toLong); le32(0L) // 8-byte pts
-      out.write(f)
+      out.le32(f.length.toLong)
+      out.le32(i.toLong).le32(0L) // 8-byte pts
+      out.raw(f)
     }
     out.toByteArray
   }

@@ -47,64 +47,48 @@ object AvroOps {
       syncMismatch: Int,    // 1 iff the walk halted on a bad block sync
       trailingBytes: Long)
 
-  private object Malformed extends Exception with scala.util.control.NoStackTrace
-
   private val Invalid = AvroMeta(0, 0, 0L, "", 0, 0L, 0L, 0, 0L)
   private val MaxMetaEntries = 10000
 
-  private final class Reader(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) throw Malformed
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    /** Avro long: zigzag varint, ≤10 bytes. */
-    def avroLong(): Long = {
-      var shift = 0; var out = 0L; var i = 0
-      while (i < 10) {
-        val v = u8()
-        out |= (v & 0x7fL) << shift
-        if ((v & 0x80) == 0) return (out >>> 1) ^ -(out & 1)
-        shift += 7; i += 1
+  private[operators] def isOcf(bytes: Array[Byte]): Boolean =
+    bytes.length >= 4 && Bytes.tag(bytes, 0, "Obj") && bytes(3) == 1
+
+  /** The OCF header after the magic: the metadata map's entries in file
+    * order (at most 10000 across its segments; a negative segment count
+    * is followed by a byte size, read and ignored) and the 16-byte sync
+    * marker. Throws Malformed.
+    */
+  private[operators] def readHeader(r: ByteCursor): (Seq[(String, Array[Byte])], Array[Byte]) = {
+    val meta = Seq.newBuilder[(String, Array[Byte])]
+    var nEntries = 0
+    var segCount = r.avroLong()
+    while (segCount != 0L) {
+      val items = if (segCount < 0L) { r.avroLong(); -segCount } else segCount
+      if (items < 0 || items > MaxMetaEntries - nEntries) throw Malformed
+      var i = 0L
+      while (i < items) {
+        meta += ((new String(r.take(r.avroLong()), "UTF-8"), r.take(r.avroLong())))
+        i += 1
       }
-      throw Malformed
+      nEntries += items.toInt
+      segCount = r.avroLong()
     }
-    def take(n: Long): Array[Byte] = {
-      if (n < 0 || n > end - pos) throw Malformed
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n.toInt)
-      pos += n.toInt; out
-    }
+    (meta.result(), r.take(16L))
   }
+
+  /** The last value of metadata `key`, as UTF-8. */
+  private[operators] def metaValue(meta: Seq[(String, Array[Byte])], key: String): Option[String] =
+    meta.reverseIterator.collectFirst { case (`key`, v) => new String(v, "UTF-8") }
 
   def parse(bytes: Array[Byte]): AvroMeta = {
     val n = bytes.length
-    if (n < 4 || bytes(0) != 'O' || bytes(1) != 'b' || bytes(2) != 'j' || bytes(3) != 1)
-      return Invalid.copy(trailingBytes = n.toLong)
+    if (!isOcf(bytes)) return Invalid.copy(trailingBytes = n.toLong)
     try {
-      val r = new Reader(bytes, 4, n)
-      // file metadata map
-      var nEntries = 0
-      var schemaLen = 0L
-      var codec = "null"
-      var segCount = r.avroLong()
-      while (segCount != 0L) {
-        val items = if (segCount < 0L) { r.avroLong(); -segCount } else segCount
-        if (items < 0 || items > MaxMetaEntries - nEntries) throw Malformed
-        var i = 0L
-        while (i < items) {
-          val key = new String(r.take(r.avroLong()), "UTF-8")
-          val valueLen = r.avroLong()
-          if (key == "avro.codec") codec = new String(r.take(valueLen), "UTF-8")
-          else {
-            if (valueLen < 0 || valueLen > r.end - r.pos) throw Malformed
-            if (key == "avro.schema") schemaLen = valueLen
-            r.pos += valueLen.toInt
-          }
-          nEntries += 1
-          i += 1
-        }
-        segCount = r.avroLong()
-      }
-      val sync = r.take(16L)
+      val r = new ByteCursor(bytes, 4, n)
+      val (meta, sync) = readHeader(r)
+      val schemaLen = meta.reverseIterator.collectFirst {
+        case ("avro.schema", v) => v.length.toLong }.getOrElse(0L)
+      val codec = metaValue(meta, "avro.codec").getOrElse("null")
       // block walk: halting faults keep the walked prefix
       var nBlocks = 0
       var totalRecords = 0L
@@ -116,8 +100,8 @@ object AvroOps {
         try {
           val cnt = r.avroLong()
           val size = r.avroLong()
-          if (cnt < 0 || size < 0 || size > r.end - r.pos) throw Malformed
-          r.pos += size.toInt
+          if (cnt < 0) throw Malformed
+          r.skip(size)
           val blockSync = r.take(16L)
           if (!java.util.Arrays.equals(blockSync, sync)) {
             syncMismatch = 1
@@ -144,7 +128,7 @@ object AvroOps {
             halted = true
         }
       }
-      AvroMeta(if (halted) 0 else 1, nEntries, schemaLen, codec,
+      AvroMeta(if (halted) 0 else 1, meta.size, schemaLen, codec,
         nBlocks, totalRecords, payloadBytes, syncMismatch,
         (n - r.pos).toLong)
     } catch {
@@ -159,15 +143,6 @@ object AvroOps {
   // ------------------------------------------------------------------
   // synthetic encoder (tests + the q378 oracle's closed-form replay)
 
-  private def zz(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = (v0 << 1) ^ (v0 >> 63)
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-  private def bin(out: java.io.ByteArrayOutputStream, b: Array[Byte]): Unit = {
-    zz(out, b.length.toLong); out.write(b)
-  }
-
   /** OCF with `extraMeta` entries beyond schema+codec, `blocks` of
     * (recordCount, payloadLen) with deterministic filler payloads, and
     * a sync marker derived from `syncSeed`.
@@ -175,20 +150,19 @@ object AvroOps {
   def encodeSynthetic(schema: String, codec: String,
       extraMeta: Seq[(String, String)], blocks: Seq[(Long, Int)],
       syncSeed: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array('O'.toByte, 'b'.toByte, 'j'.toByte, 1.toByte))
+    val out = new ByteSink().ascii("Obj").u8(1)
     val entries = Seq("avro.schema" -> schema, "avro.codec" -> codec) ++ extraMeta
-    zz(out, entries.size.toLong)
+    out.avroLong(entries.size.toLong)
     entries.foreach { case (k, v) =>
-      bin(out, k.getBytes("UTF-8")); bin(out, v.getBytes("UTF-8"))
+      out.avroBytes(k.getBytes("UTF-8")).avroBytes(v.getBytes("UTF-8"))
     }
-    zz(out, 0L)
+    out.avroLong(0L)
     val sync = Array.tabulate(16)(i => ((syncSeed >> ((i % 8) * 8)) + i * 37).toByte)
-    out.write(sync)
+    out.raw(sync)
     blocks.foreach { case (cnt, len) =>
-      zz(out, cnt); zz(out, len.toLong)
-      out.write(Array.tabulate(len)(i => ((i * 29 + 11) & 0xff).toByte))
-      out.write(sync)
+      out.avroLong(cnt).avroLong(len.toLong)
+      out.raw(Array.tabulate(len)(i => ((i * 29 + 11) & 0xff).toByte))
+      out.raw(sync)
     }
     out.toByteArray
   }

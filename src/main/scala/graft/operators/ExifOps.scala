@@ -55,16 +55,9 @@ object ExifOps {
   def encodeSynthetic(littleEndian: Boolean, orientation: Int,
       withGps: Boolean, withExifIfd: Boolean, withDateTime: Boolean,
       withMake: Boolean, imageLen: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def u16(v: Int, le: Boolean): Array[Byte] =
-      if (le) Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-      else Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def u32(v: Long, le: Boolean): Array[Byte] =
-      if (le) Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-      else Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     val le = littleEndian
+    def w16(s: ByteSink, v: Int): ByteSink = if (le) s.le16(v) else s.be16(v)
+    def w32(s: ByteSink, v: Long): ByteSink = if (le) s.le32(v) else s.be32(v)
     // IFD0 entries, ascending tag order per the TIFF spec
     final case class E(tag: Int, typ: Int, count: Long, value: Long)
     val entries = Seq(
@@ -78,7 +71,7 @@ object ExifOps {
     // TIFF-relative layout: header 8 · IFD0 2+12n+4 · value area
     val ifd0End = 8 + 2 + 12 * n + 4
     var valueOff = ifd0End.toLong
-    val valueArea = new java.io.ByteArrayOutputStream()
+    val valueArea = new ByteSink()
     val patched = entries.map { e =>
       val needsOffset =
         (e.typ == 2 && e.count > 4) || e.tag == 0x8769 || e.tag == 0x8825
@@ -92,29 +85,30 @@ object ExifOps {
             valueArea.write("2026:08:15 00:00:00 ".getBytes("ISO-8859-1"))
             valueOff += 20
           case _ => // a minimal empty sub-IFD: count 0 + next 0
-            valueArea.write(u16(0, le)); valueArea.write(u32(0L, le)); valueOff += 6
+            w32(w16(valueArea, 0), 0L); valueOff += 6
         }
         e.copy(value = off)
       }
     }
-    val tiff = new java.io.ByteArrayOutputStream()
+    val tiff = new ByteSink()
     tiff.write(if (le) "II".getBytes("ISO-8859-1") else "MM".getBytes("ISO-8859-1"))
-    tiff.write(u16(42, le))
-    tiff.write(u32(8L, le)) // IFD0 directly after the header
-    tiff.write(u16(n, le))
+    w16(tiff, 42)
+    w32(tiff, 8L) // IFD0 directly after the header
+    w16(tiff, n)
     patched.foreach { e =>
-      tiff.write(u16(e.tag, le)); tiff.write(u16(e.typ, le)); tiff.write(u32(e.count, le))
+      w16(tiff, e.tag); w16(tiff, e.typ); w32(tiff, e.count)
       // SHORT count-1 values sit left-justified in the 4-byte field
-      if (e.typ == 3 && e.count == 1) { tiff.write(u16(e.value.toInt, le)); tiff.write(u16(0, le)) }
-      else tiff.write(u32(e.value, le))
+      if (e.typ == 3 && e.count == 1) { w16(tiff, e.value.toInt); w16(tiff, 0) }
+      else w32(tiff, e.value)
     }
-    tiff.write(u32(0L, le)) // no IFD1
+    w32(tiff, 0L) // no IFD1
     tiff.write(valueArea.toByteArray)
     val tiffBytes = tiff.toByteArray
-    bos.write(0xFF); bos.write(0xD8) // SOI
-    bos.write(0xFF); bos.write(0xE1) // APP1
+    val bos = new ByteSink()
+    bos.u8(0xFF).u8(0xD8) // SOI
+    bos.u8(0xFF).u8(0xE1) // APP1
     val app1Len = 2 + 6 + tiffBytes.length // length field counts itself
-    bos.write((app1Len >> 8) & 0xff); bos.write(app1Len & 0xff)
+    bos.be16(app1Len)
     bos.write("Exif".getBytes("ISO-8859-1")); bos.write(0); bos.write(0)
     bos.write(tiffBytes)
     var i = 0
@@ -130,7 +124,7 @@ object ExifOps {
     // the APP1 length field needs bytes 4–5 to exist: a 4- or 5-byte
     // truncated `FF D8 FF E1` must fail closed, not crash the task
     if (n < 6) return fail(4)
-    val app1Len = ((bytes(4) & 0xff) << 8) | (bytes(5) & 0xff)
+    val app1Len = Bytes.be16(bytes, 4)
     // the length field counts itself: payload = app1Len - 2 bytes
     val segEnd = 4 + 2 + (app1Len - 2)
     if (app1Len < 2 + 6 + 8 || segEnd > n) return fail(4)
@@ -142,16 +136,8 @@ object ExifOps {
       if (bytes(t0) == 'I' && bytes(t0 + 1) == 'I') true
       else if (bytes(t0) == 'M' && bytes(t0 + 1) == 'M') false
       else return fail(t0)
-    def rd16(off: Int): Int = {
-      val a = bytes(off) & 0xff; val b = bytes(off + 1) & 0xff
-      if (le) a | (b << 8) else (a << 8) | b
-    }
-    def rd32(off: Int): Long = {
-      val a = (bytes(off) & 0xff).toLong; val b = (bytes(off + 1) & 0xff).toLong
-      val c = (bytes(off + 2) & 0xff).toLong; val d = (bytes(off + 3) & 0xff).toLong
-      if (le) a | (b << 8) | (c << 16) | (d << 24)
-      else (a << 24) | (b << 16) | (c << 8) | d
-    }
+    def rd16(off: Int): Int = if (le) Bytes.le16(bytes, off) else Bytes.be16(bytes, off)
+    def rd32(off: Int): Long = if (le) Bytes.le32u(bytes, off) else Bytes.be32u(bytes, off)
     if (rd16(t0 + 2) != 42) return fail(t0 + 2)
     val ifd0 = rd32(t0 + 4)
     if (!inSeg(ifd0, 2L)) return fail(t0 + 4)

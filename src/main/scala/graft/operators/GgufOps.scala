@@ -53,34 +53,32 @@ object GgufOps {
                       kvArrays: Seq[(String, Int)],
                       tensors: Seq[(String, Seq[Long], Int)],
                       dropTail: Int = 0, badTypeAt: Int = -1): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = { var i = 0; while (i < 4) { bos.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-    def u64(v: Long): Unit = { var i = 0; while (i < 8) { bos.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
+    val bos = new ByteSink()
     def str(s: String): Unit = {
       val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      u64(b.length.toLong); bos.write(b)
+      bos.le64(b.length.toLong).raw(b)
     }
-    bos.write('G'); bos.write('G'); bos.write('U'); bos.write('F')
-    u32(3L)
-    u64(tensors.size.toLong)
-    u64((kvStrings.size + kvScalars.size + kvArrays.size).toLong)
+    bos.ascii("GGUF")
+    bos.le32(3L)
+    bos.le64(tensors.size.toLong)
+    bos.le64((kvStrings.size + kvScalars.size + kvArrays.size).toLong)
     var kvIdx = 0
     def typeId(t: Int): Long = if (kvIdx == badTypeAt) 99L else t.toLong
     kvStrings.foreach { case (k, v) =>
-      str(k); u32(typeId(8)); kvIdx += 1; str(v)
+      str(k); bos.le32(typeId(8)); kvIdx += 1; str(v)
     }
     kvScalars.foreach { case (k, t) =>
-      str(k); u32(typeId(t)); kvIdx += 1
+      str(k); bos.le32(typeId(t)); kvIdx += 1
       (0L until ScalarWidth(t)).foreach(_ => bos.write(kvIdx % 256))
     }
     kvArrays.foreach { case (k, n) =>
-      str(k); u32(typeId(9)); kvIdx += 1
-      u32(4L); u64(n.toLong) // u32 elements
+      str(k); bos.le32(typeId(9)); kvIdx += 1
+      bos.le32(4L); bos.le64(n.toLong) // u32 elements
       (0 until n * 4).foreach(i => bos.write((i * 3 + 1) % 256))
     }
     tensors.foreach { case (name, dims, ggmlType) =>
-      str(name); u32(dims.size.toLong); dims.foreach(u64)
-      u32(ggmlType.toLong); u64(0L)
+      str(name); bos.le32(dims.size.toLong); dims.foreach(bos.le64)
+      bos.le32(ggmlType.toLong); bos.le64(0L)
     }
     val out = bos.toByteArray
     if (dropTail > 0) out.dropRight(dropTail) else out
@@ -92,80 +90,58 @@ object GgufOps {
       GgufMeta(0, 0, 0, 0, 0, 0, 0L, 0, 0L, 0L, trailing)
     if (n < 24 || bytes(0) != 'G' || bytes(1) != 'G' || bytes(2) != 'U' ||
       bytes(3) != 'F') return fail(n)
-    var pos = 4L
-    def u32(): Long = {
-      var v = 0L; var i = 3
-      while (i >= 0) { v = (v << 8) | (bytes((pos + i).toInt) & 0xffL); i -= 1 }
-      pos += 4; v
-    }
-    def u64(): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (bytes((pos + i).toInt) & 0xffL); i -= 1 }
-      pos += 8; v
-    }
-    val version = u32()
-    val nTensors = u64()
-    val nKv = u64()
-    if (version != 3L || nTensors < 0 || nKv < 0) return fail(n - 4)
+    val c = new ByteCursor(bytes, 4, bytes.length)
+    val version = c.le32()
+    val nTensors = c.le64()
+    val nKv = c.le64()
+    if (version != 3 || nTensors < 0 || nKv < 0) return fail(n - 4)
     var kvBytes = 0L; var nStr = 0; var nScal = 0; var nArr = 0
     var i = 0L
     var ok = true
-    def readStr(): Boolean = {
-      if (pos + 8 > n) { ok = false; false }
-      else {
-        val len = u64()
-        // `len > n - pos`, NOT `pos + len > n`: a huge u64 length would
-        // wrap the addition negative and desync every later read
-        if (len < 0 || len > n - pos) { ok = false; false }
-        else { pos += len; true }
-      }
-    }
+    // a string is a u64 length then its bytes; the cursor checks the
+    // length against what is left, so a huge u64 cannot wrap past it
+    def str(): Unit = c.skip(c.le64())
     while (ok && i < nKv) {
-      val start = pos
-      if (readStr() && pos + 4 <= n) {
-        val t = u32().toInt
-        if (t == 8) { if (readStr()) nStr += 1 }
+      val start = c.pos
+      try {
+        str()
+        val t = c.le32()
+        if (t == 8) { str(); nStr += 1 }
         else if (t == 9) {
-          if (pos + 12 <= n) {
-            val et = u32().toInt
-            val cnt = u64()
-            // divide instead of multiply: `cnt * width` overflows for a
-            // huge element count and would pass as a 0-byte payload
-            if (ScalarWidth.contains(et) && cnt >= 0 &&
-              cnt <= (n - pos) / ScalarWidth(et)) {
-              pos += cnt * ScalarWidth(et); nArr += 1
-            } else ok = false
-          } else ok = false
-        } else if (ScalarWidth.contains(t) && pos + ScalarWidth(t) <= n) {
-          pos += ScalarWidth(t); nScal += 1
-        } else ok = false
-      } else ok = false
-      if (ok) kvBytes += pos - start
-      else pos = start
+          val et = c.le32()
+          val cnt = c.le64()
+          // divide instead of multiply: `cnt * width` overflows for a
+          // huge element count and would pass as a 0-byte payload
+          if (!ScalarWidth.contains(et) || cnt < 0 ||
+            cnt > c.remaining / ScalarWidth(et)) throw Malformed
+          c.skip(cnt * ScalarWidth(et)); nArr += 1
+        } else { c.skip(ScalarWidth.getOrElse(t, throw Malformed)); nScal += 1 }
+        kvBytes += c.pos - start
+      } catch { case Malformed => ok = false; c.pos = start }
       i += 1
     }
-    if (!ok) return GgufMeta(0, version.toInt, (nStr + nScal + nArr),
-      nStr, nScal, nArr, kvBytes, 0, 0L, pos, n - pos)
+    if (!ok) return GgufMeta(0, version, (nStr + nScal + nArr),
+      nStr, nScal, nArr, kvBytes, 0, 0L, c.pos, n - c.pos)
     var params = 0L
     var t = 0L
     while (ok && t < nTensors) {
-      val start = pos
-      if (readStr() && pos + 4 <= n) {
-        val nd = u32()
-        if (nd >= 0 && nd <= 8 && pos + nd * 8 + 12 <= n) {
-          var p = 1L
-          (0L until nd).foreach(_ => p *= u64())
-          u32(); u64() // ggml type + offset
-          params += p
-        } else ok = false
-      } else ok = false
-      if (!ok) pos = start
+      val start = c.pos
+      try {
+        str()
+        val nd = c.le32()
+        if (nd < 0 || nd > 8 || nd * 8 + 12 > c.remaining) throw Malformed
+        var p = 1L
+        var d = 0
+        while (d < nd) { p *= c.le64(); d += 1 }
+        c.skip(12) // ggml type + offset
+        params += p
+      } catch { case Malformed => ok = false; c.pos = start }
       t += 1
     }
-    if (!ok) GgufMeta(0, version.toInt, (nStr + nScal + nArr), nStr, nScal,
-      nArr, kvBytes, t.toInt - 1, params, pos, n - pos)
-    else GgufMeta(1, version.toInt, (nStr + nScal + nArr), nStr, nScal, nArr,
-      kvBytes, nTensors.toInt, params, pos, n - pos)
+    if (!ok) GgufMeta(0, version, (nStr + nScal + nArr), nStr, nScal,
+      nArr, kvBytes, t.toInt - 1, params, c.pos, n - c.pos)
+    else GgufMeta(1, version, (nStr + nScal + nArr), nStr, nScal, nArr,
+      kvBytes, nTensors.toInt, params, c.pos, n - c.pos)
   }
 
   def ggufFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {

@@ -32,42 +32,6 @@ import org.apache.spark.sql.functions._
 object IcebergOps {
 
   // ------------------------------------------------------------------
-  // Avro binary primitives (writer + bounded reader)
-
-  private def zz(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = (v0 << 1) ^ (v0 >> 63)
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-  private def bin(out: java.io.ByteArrayOutputStream, b: Array[Byte]): Unit = {
-    zz(out, b.length.toLong); out.write(b)
-  }
-
-  private object Malformed extends Exception with scala.util.control.NoStackTrace
-
-  private final class Reader(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) throw Malformed
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    def avroLong(): Long = {
-      var shift = 0; var out = 0L; var i = 0
-      while (i < 10) {
-        val v = u8()
-        out |= (v & 0x7fL) << shift
-        if ((v & 0x80) == 0) return (out >>> 1) ^ -(out & 1)
-        shift += 7; i += 1
-      }
-      throw Malformed
-    }
-    def take(n: Long): Array[Byte] = {
-      if (n < 0 || n > end - pos) throw Malformed
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n.toInt)
-      pos += n.toInt; out
-    }
-  }
-
-  // ------------------------------------------------------------------
   // the pinned manifest_entry v1-subset
 
   final case class Bounds(min: Long, max: Long)
@@ -92,42 +56,38 @@ object IcebergOps {
       |{"name":"upper_bounds","type":["null",{"type":"array","items":"k_v1"}]}
       |]}}]}""".stripMargin.replace("\n", "")
 
-  private def le8(v: Long): Array[Byte] =
-    Array.tabulate(8)(i => ((v >>> (8 * i)) & 0xff).toByte)
   private def readLe8(b: Array[Byte]): Long = {
     if (b.length != 8) throw Malformed
-    var v = 0L; var i = 0
-    while (i < 8) { v |= (b(i) & 0xffL) << (8 * i); i += 1 }
-    v
+    Bytes.le64(b, 0)
   }
 
   def encodeEntry(e: Entry): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    zz(out, e.status.toLong)
+    val out = new ByteSink()
+    out.avroLong(e.status.toLong)
     e.snapshotId match {
-      case Some(id) => zz(out, 1L); zz(out, id)
-      case None => zz(out, 0L)
+      case Some(id) => out.avroLong(1L); out.avroLong(id)
+      case None => out.avroLong(0L)
     }
-    bin(out, e.path.getBytes("UTF-8"))
-    bin(out, e.format.getBytes("UTF-8"))
-    zz(out, e.partition.toLong)
-    zz(out, e.recordCount)
-    zz(out, e.fileSize)
+    out.avroBytes(e.path.getBytes("UTF-8"))
+    out.avroBytes(e.format.getBytes("UTF-8"))
+    out.avroLong(e.partition.toLong)
+    out.avroLong(e.recordCount)
+    out.avroLong(e.fileSize)
     def boundsMap(v: Option[Long]): Unit = v match {
       case Some(x) =>
-        zz(out, 1L) // union: the array branch
-        zz(out, 1L) // one array block of one k_v pair
-        zz(out, 1L) // key: column field id 1
-        bin(out, le8(x)) // single-value serialization: 8-byte LE long
-        zz(out, 0L) // array end
-      case None => zz(out, 0L)
+        out.avroLong(1L) // union: the array branch
+        out.avroLong(1L) // one array block of one k_v pair
+        out.avroLong(1L) // key: column field id 1
+        out.avroBytes(new ByteSink(8).le64(x).toByteArray) // single-value serialization: 8-byte LE long
+        out.avroLong(0L) // array end
+      case None => out.avroLong(0L)
     }
     boundsMap(e.bounds.map(_.min))
     boundsMap(e.bounds.map(_.max))
     out.toByteArray
   }
 
-  private def decodeEntry(r: Reader): Entry = {
+  private def decodeEntry(r: ByteCursor): Entry = {
     val status = r.avroLong().toInt
     if (status < 0 || status > 2) throw Malformed
     val snap = r.avroLong() match {
@@ -172,27 +132,85 @@ object IcebergOps {
   def encodeManifest(blocks: Seq[Seq[Entry]], syncSeed: Long,
                      schema: String = SchemaJson,
                      garbageTail: Boolean = false): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array('O'.toByte, 'b'.toByte, 'j'.toByte, 1.toByte))
-    zz(out, 2L)
-    bin(out, "avro.schema".getBytes("UTF-8")); bin(out, schema.getBytes("UTF-8"))
-    bin(out, "avro.codec".getBytes("UTF-8")); bin(out, "null".getBytes("UTF-8"))
-    zz(out, 0L)
     val sync = Array.tabulate(16)(i => ((syncSeed >> ((i % 8) * 8)) + i * 37).toByte)
-    out.write(sync)
-    blocks.foreach { es =>
-      val body = new java.io.ByteArrayOutputStream()
-      es.foreach(e => body.write(encodeEntry(e)))
-      zz(out, es.size.toLong); zz(out, body.size.toLong)
-      body.writeTo(out)
-      out.write(sync)
-    }
-    if (garbageTail) {
-      val junk = Array[Byte](-1, -1, -1, -1, -1)
-      zz(out, 1L); zz(out, junk.length.toLong)
-      out.write(junk); out.write(sync)
+    val junk = Array[Byte](-1, -1, -1, -1, -1)
+    encodeOcf(schema, sync,
+      blocks.map(es => (es.size.toLong, es.flatMap(encodeEntry).toArray)) ++
+        (if (garbageTail) Seq((1L, junk)) else Nil))
+  }
+
+  // ------------------------------------------------------------------
+  // the OCF container shared by manifests and manifest lists
+
+  /** An OCF: magic, a `schema` + null-codec metadata map, the sync
+    * marker, then one `(recordCount, body)` block per entry, each
+    * closed by the sync.
+    */
+  private def encodeOcf(schema: String, sync: Array[Byte],
+                        blocks: Seq[(Long, Array[Byte])]): Array[Byte] = {
+    val out = new ByteSink().ascii("Obj").u8(1).avroLong(2L)
+      .avroBytes("avro.schema".getBytes("UTF-8")).avroBytes(schema.getBytes("UTF-8"))
+      .avroBytes("avro.codec".getBytes("UTF-8")).avroBytes("null".getBytes("UTF-8"))
+      .avroLong(0L).raw(sync)
+    blocks.foreach { case (cnt, body) =>
+      out.avroLong(cnt).avroLong(body.length.toLong).raw(body).raw(sync)
     }
     out.toByteArray
+  }
+
+  /** A walked OCF: `valid` 0 iff a block's framing halted the walk
+    * (the remainder is `trailing`); `nMalformed` blocks failed to
+    * decode and contribute no records.
+    */
+  private final case class Ocf[T](valid: Int, schemaOk: Boolean, nBlocks: Int,
+      nMalformed: Int, records: Seq[T], trailing: Long)
+
+  /** Walk an OCF: the header ([[AvroOps.readHeader]]), then
+    * blocks until a framing break (negative count, size overrun, sync
+    * mismatch) halts the walk at that block's start. Records decode
+    * only when the schema names `recordName` and the codec is null,
+    * and a block whose payload `decode` does not consume EXACTLY is
+    * malformed. None when the magic or the header is malformed.
+    */
+  private def walkOcf[T](bytes: Array[Byte], recordName: String)(
+      decode: ByteCursor => T): Option[Ocf[T]] = {
+    val n = bytes.length
+    if (!AvroOps.isOcf(bytes)) return None
+    try {
+      val r = new ByteCursor(bytes, 4, n)
+      val (meta, sync) = AvroOps.readHeader(r)
+      val codec = AvroOps.metaValue(meta, "avro.codec").getOrElse("null")
+      val schemaOk = AvroOps.metaValue(meta, "avro.schema").exists(_.contains(recordName)) &&
+        (codec == "null" || codec.isEmpty)
+      var nBlocks = 0
+      var nMal = 0
+      val out = Seq.newBuilder[T]
+      var halted = false
+      while (!halted && r.hasMore) {
+        val blockStart = r.pos
+        try {
+          val cnt = r.avroLong()
+          val len = r.avroLong()
+          if (cnt < 0) throw Malformed
+          val br = r.slice(len)
+          val blockSync = r.take(16L)
+          if (!java.util.Arrays.equals(blockSync, sync)) { r.pos = blockStart; halted = true }
+          else {
+            nBlocks += 1
+            if (schemaOk) {
+              try {
+                val es = (0L until cnt).map(_ => decode(br))
+                if (br.hasMore) throw Malformed
+                out ++= es
+              } catch { case Malformed => nMal += 1 }
+            }
+          }
+        } catch { case Malformed => r.pos = blockStart; halted = true }
+      }
+      Some(Ocf(if (halted) 0 else 1, schemaOk, nBlocks, nMal, out.result(), (n - r.pos).toLong))
+    } catch {
+      case Malformed => None
+    }
   }
 
   // ------------------------------------------------------------------
@@ -204,69 +222,12 @@ object IcebergOps {
 
   private val Invalid = ManifestMeta(0, 0, 0, 0, Seq.empty, 0L)
 
-  def parseManifest(bytes: Array[Byte]): ManifestMeta = {
-    val n = bytes.length
-    if (n < 4 || bytes(0) != 'O' || bytes(1) != 'b' || bytes(2) != 'j' || bytes(3) != 1)
-      return Invalid.copy(trailingBytes = n.toLong)
-    try {
-      val r = new Reader(bytes, 4, n)
-      var schema = ""
-      var codec = "null"
-      var segCount = r.avroLong()
-      var nEntries = 0
-      while (segCount != 0L) {
-        val items = if (segCount < 0L) { r.avroLong(); -segCount } else segCount
-        if (items < 0 || items > 10000 - nEntries) throw Malformed
-        var i = 0L
-        while (i < items) {
-          val key = new String(r.take(r.avroLong()), "UTF-8")
-          val v = r.take(r.avroLong())
-          if (key == "avro.schema") schema = new String(v, "UTF-8")
-          else if (key == "avro.codec") codec = new String(v, "UTF-8")
-          i += 1
-        }
-        nEntries += items.toInt
-        segCount = r.avroLong()
-      }
-      val sync = r.take(16L)
-      val schemaOk = schema.contains("manifest_entry") &&
-        (codec == "null" || codec.isEmpty)
-      var nBlocks = 0
-      var nMal = 0
-      val out = Seq.newBuilder[Entry]
-      var halted = false
-      while (!halted && r.pos < n) {
-        val blockStart = r.pos
-        try {
-          val cnt = r.avroLong()
-          val len = r.avroLong()
-          if (cnt < 0 || len < 0 || len > r.end - r.pos) throw Malformed
-          val payloadStart = r.pos
-          val payloadEnd = payloadStart + len.toInt
-          r.pos = payloadEnd
-          val blockSync = r.take(16L)
-          if (!java.util.Arrays.equals(blockSync, sync)) { r.pos = blockStart; halted = true }
-          else {
-            nBlocks += 1
-            if (schemaOk) {
-              // decode cnt entries; EXACT consumption or the block is
-              // malformed and contributes nothing
-              try {
-                val br = new Reader(bytes, payloadStart, payloadEnd)
-                val es = (0L until cnt).map(_ => decodeEntry(br))
-                if (br.pos != payloadEnd) throw Malformed
-                out ++= es
-              } catch { case Malformed => nMal += 1 }
-            }
-          }
-        } catch { case Malformed => r.pos = blockStart; halted = true }
-      }
-      ManifestMeta(if (halted) 0 else 1, if (schemaOk) 1 else 0, nBlocks,
-        nMal, out.result(), (n - r.pos).toLong)
-    } catch {
-      case Malformed => Invalid.copy(trailingBytes = n.toLong)
+  def parseManifest(bytes: Array[Byte]): ManifestMeta =
+    walkOcf(bytes, "manifest_entry")(decodeEntry) match {
+      case Some(o) => ManifestMeta(o.valid, if (o.schemaOk) 1 else 0, o.nBlocks,
+        o.nMalformed, o.records, o.trailing)
+      case None => Invalid.copy(trailingBytes = bytes.length.toLong)
     }
-  }
 
   // ------------------------------------------------------------------
   // census DataFrames (map-only, zero shuffles)
@@ -358,20 +319,20 @@ object IcebergOps {
       .stripMargin.replace("\n", "")
 
   def encodeMFile(e: MFile): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    bin(out, e.path.getBytes("UTF-8"))
-    zz(out, e.length)
-    zz(out, e.specId.toLong)
+    val out = new ByteSink()
+    out.avroBytes(e.path.getBytes("UTF-8"))
+    out.avroLong(e.length)
+    out.avroLong(e.specId.toLong)
     e.addedSnapshotId match {
-      case Some(id) => zz(out, 1L); zz(out, id)
-      case None => zz(out, 0L)
+      case Some(id) => out.avroLong(1L); out.avroLong(id)
+      case None => out.avroLong(0L)
     }
-    def optInt(v: Int): Unit = { zz(out, 1L); zz(out, v.toLong) }
+    def optInt(v: Int): Unit = { out.avroLong(1L); out.avroLong(v.toLong) }
     optInt(e.nAdded); optInt(e.nExisting); optInt(e.nDeleted)
     out.toByteArray
   }
 
-  private def decodeMFile(r: Reader): MFile = {
+  private def decodeMFile(r: ByteCursor): MFile = {
     val path = new String(r.take(r.avroLong()), "UTF-8")
     val length = r.avroLong()
     val specId = r.avroLong().toInt
@@ -393,20 +354,8 @@ object IcebergOps {
     */
   def encodeManifestList(files: Seq[MFile], syncSeed: Long,
                          schema: String = ListSchemaJson): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array('O'.toByte, 'b'.toByte, 'j'.toByte, 1.toByte))
-    zz(out, 2L)
-    bin(out, "avro.schema".getBytes("UTF-8")); bin(out, schema.getBytes("UTF-8"))
-    bin(out, "avro.codec".getBytes("UTF-8")); bin(out, "null".getBytes("UTF-8"))
-    zz(out, 0L)
     val sync = Array.tabulate(16)(i => ((syncSeed >> ((i % 8) * 8)) + i * 41).toByte)
-    out.write(sync)
-    val body = new java.io.ByteArrayOutputStream()
-    files.foreach(f => body.write(encodeMFile(f)))
-    zz(out, files.size.toLong); zz(out, body.size.toLong)
-    body.writeTo(out)
-    out.write(sync)
-    out.toByteArray
+    encodeOcf(schema, sync, Seq((files.size.toLong, files.flatMap(encodeMFile).toArray)))
   }
 
   final case class ListMeta(valid: Int, schemaOk: Int, files: Seq[MFile])
@@ -416,61 +365,11 @@ object IcebergOps {
     * consumption per block or the block contributes nothing; any
     * framing break rolls the file back whole (fail-closed).
     */
-  def parseManifestList(bytes: Array[Byte]): ListMeta = {
-    val n = bytes.length
-    if (n < 4 || bytes(0) != 'O' || bytes(1) != 'b' || bytes(2) != 'j' || bytes(3) != 1)
-      return ListMeta(0, 0, Seq.empty)
-    try {
-      val r = new Reader(bytes, 4, n)
-      var schema = ""
-      var codec = "null"
-      var segCount = r.avroLong()
-      var nMeta = 0
-      while (segCount != 0L) {
-        val items = if (segCount < 0L) { r.avroLong(); -segCount } else segCount
-        if (items < 0 || items > 10000 - nMeta) throw Malformed
-        var i = 0L
-        while (i < items) {
-          val key = new String(r.take(r.avroLong()), "UTF-8")
-          val v = r.take(r.avroLong())
-          if (key == "avro.schema") schema = new String(v, "UTF-8")
-          else if (key == "avro.codec") codec = new String(v, "UTF-8")
-          i += 1
-        }
-        nMeta += items.toInt
-        segCount = r.avroLong()
-      }
-      val sync = r.take(16L)
-      val schemaOk = schema.contains("manifest_file") &&
-        (codec == "null" || codec.isEmpty)
-      val out = Seq.newBuilder[MFile]
-      var halted = false
-      while (!halted && r.pos < n) {
-        val blockStart = r.pos
-        try {
-          val cnt = r.avroLong()
-          val len = r.avroLong()
-          if (cnt < 0 || len < 0 || len > r.end - r.pos) throw Malformed
-          val payloadStart = r.pos
-          val payloadEnd = payloadStart + len.toInt
-          r.pos = payloadEnd
-          val blockSync = r.take(16L)
-          if (!java.util.Arrays.equals(blockSync, sync)) { r.pos = blockStart; halted = true }
-          else if (schemaOk) {
-            try {
-              val br = new Reader(bytes, payloadStart, payloadEnd)
-              val es = (0L until cnt).map(_ => decodeMFile(br))
-              if (br.pos != payloadEnd) throw Malformed
-              out ++= es
-            } catch { case Malformed => () } // malformed block: nothing
-          }
-        } catch { case Malformed => r.pos = blockStart; halted = true }
-      }
-      ListMeta(if (halted) 0 else 1, if (schemaOk) 1 else 0, out.result())
-    } catch {
-      case Malformed => ListMeta(0, 0, Seq.empty)
+  def parseManifestList(bytes: Array[Byte]): ListMeta =
+    walkOcf(bytes, "manifest_file")(decodeMFile) match {
+      case Some(o) => ListMeta(o.valid, if (o.schemaOk) 1 else 0, o.records)
+      case None => ListMeta(0, 0, Seq.empty)
     }
-  }
 
   /** The full table-root census: one row per TABLE, walked the way a
     * real reader starts — `vN.metadata.json` (current-snapshot-id

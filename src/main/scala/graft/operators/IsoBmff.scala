@@ -47,19 +47,16 @@ object IsoBmff {
     */
   def encodeSynthetic(brand: String, timescale: Int, duration: Int,
                       nTracks: Int, mdatLen: Int): Array[Byte] = {
-    def be32(v: Int): Array[Byte] =
-      Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def box(tp: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8) ++ tp.getBytes("US-ASCII") ++ payload
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be32(0) ++
-      "isom".getBytes("US-ASCII"))
+      new ByteSink(8 + payload.length).be32(payload.length + 8).ascii(tp).raw(payload).toByteArray
+    val ftyp = box("ftyp", new ByteSink(12).ascii(brand).be32(0).ascii("isom").toByteArray)
     // mvhd version 0: ver/flags, ctime, mtime, timescale, duration, then
     // the fixed 80-byte remainder (rate, volume, matrix, next_track_id)
-    val mvhd = box("mvhd", be32(0) ++ be32(1000) ++ be32(2000) ++
-      be32(timescale) ++ be32(duration) ++ Array.fill(80)(0.toByte))
+    val mvhd = box("mvhd", new ByteSink(100).be32(0).be32(1000).be32(2000)
+      .be32(timescale).be32(duration).raw(new Array[Byte](80)).toByteArray)
     val traks = (0 until nTracks).map { t =>
-      val tkhd = box("tkhd", be32(0) ++ be32(1000) ++ be32(2000) ++
-        be32(t + 1) ++ Array.fill(68)(0.toByte))
+      val tkhd = box("tkhd", new ByteSink(84).be32(0).be32(1000).be32(2000)
+        .be32(t + 1).raw(new Array[Byte](68)).toByteArray)
       box("trak", tkhd)
     }
     val moov = box("moov", mvhd ++ traks.flatten.toArray)
@@ -68,10 +65,6 @@ object IsoBmff {
   }
 
   def parse(bytes: Array[Byte]): BmffMeta = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
     var brand = ""; var nBoxes = 0; var nTracks = 0
     var timescale = 0L; var duration = 0L; var mdatBytes = 0L; var maxDepth = 0
     var halted = false
@@ -81,11 +74,11 @@ object IsoBmff {
       if (depth >= MaxDepth) { halted = true; haltPos = start; return start }
       var pos = start
       while (!halted && pos + 8 <= end) {
-        val size0 = be32(pos.toInt)
+        val size0 = Bytes.be32u(bytes, pos.toInt)
         val tp = new String(bytes, pos.toInt + 4, 4, "US-ASCII")
         var hdr = 8L
         var size = size0
-        if (size0 == 1 && pos + 16 <= end) { size = be64(pos.toInt + 8); hdr = 16L }
+        if (size0 == 1 && pos + 16 <= end) { size = Bytes.be64(bytes, pos.toInt + 8); hdr = 16L }
         else if (size0 == 0) size = end - pos // to end of enclosing space
         // overflow-proof: `pos + size` wraps for a 64-bit attacker
         // largesize near Long.MaxValue; compare against the remaining
@@ -102,9 +95,9 @@ object IsoBmff {
             case "ftyp" if payloadLen >= 4 && brand.isEmpty =>
               brand = new String(bytes, payload.toInt, 4, "US-ASCII")
             case "tkhd" => nTracks += 1
-            case "mvhd" if payloadLen >= 20 && u8(payload.toInt) == 0 =>
-              timescale = be32(payload.toInt + 12)
-              duration = be32(payload.toInt + 16)
+            case "mvhd" if payloadLen >= 20 && bytes(payload.toInt) == 0 =>
+              timescale = Bytes.be32u(bytes, payload.toInt + 12)
+              duration = Bytes.be32u(bytes, payload.toInt + 16)
             case "mdat" => mdatBytes += payloadLen
             case t if Containers(t) => walk(payload, pos + size, depth + 1)
             case _ => ()

@@ -44,9 +44,6 @@ object Lz4Ops {
   private val P5 = 0x165667B1
 
   def xxh32(bytes: Array[Byte], off: Int, len: Int, seed: Int = 0): Int = {
-    def le32(p: Int): Int =
-      (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) |
-        ((bytes(p + 2) & 0xff) << 16) | ((bytes(p + 3) & 0xff) << 24)
     var p = off
     val end = off + len
     var h =
@@ -57,17 +54,17 @@ object Lz4Ops {
         var v4 = seed - P1
         val limit = end - 16
         while (p <= limit) {
-          v1 = Integer.rotateLeft(v1 + le32(p) * P2, 13) * P1
-          v2 = Integer.rotateLeft(v2 + le32(p + 4) * P2, 13) * P1
-          v3 = Integer.rotateLeft(v3 + le32(p + 8) * P2, 13) * P1
-          v4 = Integer.rotateLeft(v4 + le32(p + 12) * P2, 13) * P1
+          v1 = Integer.rotateLeft(v1 + Bytes.le32(bytes, p) * P2, 13) * P1
+          v2 = Integer.rotateLeft(v2 + Bytes.le32(bytes, p + 4) * P2, 13) * P1
+          v3 = Integer.rotateLeft(v3 + Bytes.le32(bytes, p + 8) * P2, 13) * P1
+          v4 = Integer.rotateLeft(v4 + Bytes.le32(bytes, p + 12) * P2, 13) * P1
           p += 16
         }
         Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
           Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
       } else seed + P5
     h += len
-    while (p + 4 <= end) { h = Integer.rotateLeft(h + le32(p) * P3, 17) * P4; p += 4 }
+    while (p + 4 <= end) { h = Integer.rotateLeft(h + Bytes.le32(bytes, p) * P3, 17) * P4; p += 4 }
     while (p < end) { h = Integer.rotateLeft(h + (bytes(p) & 0xff) * P5, 11) * P1; p += 1 }
     h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
     h
@@ -88,14 +85,11 @@ object Lz4Ops {
     private val mem = new Array[Byte](16)
     private var memSize = 0
     private var totalLen = 0L
-    private def le32(b: Array[Byte], p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-        ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
     private def stripe(b: Array[Byte], p: Int): Unit = {
-      v1 = Integer.rotateLeft(v1 + le32(b, p) * P2, 13) * P1
-      v2 = Integer.rotateLeft(v2 + le32(b, p + 4) * P2, 13) * P1
-      v3 = Integer.rotateLeft(v3 + le32(b, p + 8) * P2, 13) * P1
-      v4 = Integer.rotateLeft(v4 + le32(b, p + 12) * P2, 13) * P1
+      v1 = Integer.rotateLeft(v1 + Bytes.le32(b, p) * P2, 13) * P1
+      v2 = Integer.rotateLeft(v2 + Bytes.le32(b, p + 4) * P2, 13) * P1
+      v3 = Integer.rotateLeft(v3 + Bytes.le32(b, p + 8) * P2, 13) * P1
+      v4 = Integer.rotateLeft(v4 + Bytes.le32(b, p + 12) * P2, 13) * P1
     }
     def update(b: Array[Byte], off: Int, len: Int): Unit = {
       totalLen += len
@@ -123,7 +117,7 @@ object Lz4Ops {
       h += totalLen.toInt
       var p = 0
       while (p + 4 <= memSize) {
-        h = Integer.rotateLeft(h + le32(mem, p) * P3, 17) * P4; p += 4
+        h = Integer.rotateLeft(h + Bytes.le32(mem, p) * P3, 17) * P4; p += 4
       }
       while (p < memSize) {
         h = Integer.rotateLeft(h + (mem(p) & 0xff) * P5, 11) * P1; p += 1
@@ -195,7 +189,7 @@ object Lz4Ops {
         return BlockResult(1, o, nSeq, java.util.Arrays.copyOf(buf, o))
       }
       if (p + 2 > end) return blockFail(o, nSeq)
-      val offset = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
+      val offset = Bytes.le16(bytes, p)
       p += 2
       if (offset == 0 || offset > o + hist.length) return blockFail(o, nSeq)
       var matchLen = (token & 0xf) + 4
@@ -258,10 +252,7 @@ object Lz4Ops {
 
   def parse(bytes: Array[Byte]): Lz4Meta = {
     val n = bytes.length
-    def u32(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
-    if (n < 7 || u32(0) != 0x184D2204L) return Invalid.copy(trailingBytes = n.toLong)
+    if (n < 7 || Bytes.le32u(bytes, 0) != 0x184D2204L) return Invalid.copy(trailingBytes = n.toLong)
     val flg = bytes(4) & 0xff
     if ((flg >> 6) != 1) return Invalid.copy(trailingBytes = n.toLong) // version
     val bIndep = (flg >> 5) & 1
@@ -276,7 +267,7 @@ object Lz4Ops {
     var contentSize = -1L
     if (cSize == 1) {
       if (n - pos < 8) return Invalid.copy(trailingBytes = n.toLong)
-      contentSize = u32(pos) | (u32(pos + 4) << 32)
+      contentSize = Bytes.le64(bytes, pos)
       if (contentSize < 0) return Invalid.copy(trailingBytes = n.toLong)
       pos += 8
     }
@@ -326,7 +317,7 @@ object Lz4Ops {
     while (!halted && !sawEnd) {
       if (n - pos < 4) { halted = true }
       else {
-        val raw = u32(pos)
+        val raw = Bytes.le32u(bytes, pos)
         pos += 4
         if (raw == 0L) sawEnd = true
         else {
@@ -365,7 +356,7 @@ object Lz4Ops {
               if (n - pos < 4) halted = true
               else {
                 // block checksum covers the STORED bytes
-                val want = u32(pos); pos += 4
+                val want = Bytes.le32u(bytes, pos); pos += 4
                 if ((xxh32(bytes, start, size.toInt) & 0xFFFFFFFFL) == want) crcOk += 1
                 else crcBad += 1
               }
@@ -379,7 +370,7 @@ object Lz4Ops {
     if (sawEnd) {
       if (cChecksum == 1) {
         if (n - pos >= 4) {
-          val want = u32(pos)
+          val want = Bytes.le32u(bytes, pos)
           contentCrc =
             if (!contentTracked) -1 // can't verify past a failed block
             else if ((contentHash.digest() & 0xFFFFFFFFL) == want) 1
@@ -438,19 +429,15 @@ object Lz4Ops {
                   declaredSize: Option[Long] = None,
                   bmCode: Int = 4,
                   blockIndep: Boolean = true): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(0x184D2204L)
+    val out = new ByteSink()
+    out.le32(0x184D2204L)
     val flg = (1 << 6) | (if (blockIndep) 1 << 5 else 0) |
       (if (blockChecksum) 1 << 4 else 0) |
       (declaredSize.map(_ => 1 << 3).getOrElse(0)) |
       (contentBytes.map(_ => 1 << 2).getOrElse(0))
     out.write(flg)
     out.write(bmCode << 4)
-    declaredSize.foreach { s => le32(s & 0xFFFFFFFFL); le32(s >>> 32) }
+    declaredSize.foreach(out.le64)
     val desc = out.toByteArray
     out.write((xxh32(desc, 4, desc.length - 4) >> 8) & 0xff)
     blocks.foreach { b =>
@@ -458,12 +445,12 @@ object Lz4Ops {
         case Left(comp) => (comp, false)
         case Right(raw) => (raw, true)
       }
-      le32(data.length.toLong | (if (stored) 0x80000000L else 0L))
+      out.le32(data.length.toLong | (if (stored) 0x80000000L else 0L))
       out.write(data)
-      if (blockChecksum) le32(xxh32(data, 0, data.length) & 0xFFFFFFFFL)
+      if (blockChecksum) out.le32(xxh32(data, 0, data.length))
     }
-    le32(0L) // EndMark
-    contentBytes.foreach(c => le32(xxh32(c, 0, c.length) & 0xFFFFFFFFL))
+    out.le32(0L) // EndMark
+    contentBytes.foreach(c => out.le32(xxh32(c, 0, c.length)))
     out.toByteArray
   }
 

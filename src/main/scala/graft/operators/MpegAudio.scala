@@ -88,12 +88,11 @@ object MpegAudio {
     * hop-by-computed-length is what makes this metadata-cheap.
     */
   def parse(bytes: Array[Byte]): Mp3Meta = {
-    def u8(i: Int): Int = bytes(i) & 0xff
     var pos = 0
     var id3 = 0
     if (bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D' && bytes(2) == '3' &&
-        u8(6) < 0x80 && u8(7) < 0x80 && u8(8) < 0x80 && u8(9) < 0x80) {
-      val size = (u8(6) << 21) | (u8(7) << 14) | (u8(8) << 7) | u8(9)
+        (bytes(6) & 0xff) < 0x80 && (bytes(7) & 0xff) < 0x80 && (bytes(8) & 0xff) < 0x80 && (bytes(9) & 0xff) < 0x80) {
+      val size = ((bytes(6) & 0xff) << 21) | ((bytes(7) & 0xff) << 14) | ((bytes(8) & 0xff) << 7) | (bytes(9) & 0xff)
       if (10L + size <= bytes.length) { id3 = 10 + size; pos = id3 }
     }
     var sampleRate = 0
@@ -103,7 +102,7 @@ object MpegAudio {
     val seen = new java.util.HashSet[Int]()
     var ok = true
     while (ok && pos + 4 <= bytes.length) {
-      val b1 = u8(pos); val b2 = u8(pos + 1); val b3 = u8(pos + 2)
+      val b1 = (bytes(pos) & 0xff); val b2 = (bytes(pos + 1) & 0xff); val b3 = (bytes(pos + 2) & 0xff)
       // sync (11 bits) + MPEG-1 + Layer III; CRC bit free
       if (b1 != 0xff || (b2 & 0xfe) != 0xfa) ok = false
       else {
@@ -188,17 +187,16 @@ object MpegAudio {
     * block.
     */
   def parseAdts(bytes: Array[Byte]): AdtsMeta = {
-    def u8(i: Int): Int = bytes(i) & 0xff
     var pos = 0
     var sr = 0; var prof = -1; var chan = -1
     var nFrames = 0; var rawBlocks = 0L; var sumBytes = 0L; var nCrc = 0
     var ok = true
     while (ok && pos + 7 <= bytes.length) {
-      val b0 = u8(pos); val b1 = u8(pos + 1)
+      val b0 = (bytes(pos) & 0xff); val b1 = (bytes(pos + 1) & 0xff)
       if (b0 != 0xff || (b1 & 0xf0) != 0xf0 || ((b1 >> 1) & 0x3) != 0) ok = false
       else {
         val noCrc = (b1 & 1) == 1
-        val b2 = u8(pos + 2); val b3 = u8(pos + 3); val b4 = u8(pos + 4); val b5 = u8(pos + 5)
+        val b2 = (bytes(pos + 2) & 0xff); val b3 = (bytes(pos + 3) & 0xff); val b4 = (bytes(pos + 4) & 0xff); val b5 = (bytes(pos + 5) & 0xff)
         val srIdx = (b2 >> 2) & 0xf
         if (srIdx >= AdtsSampleRateHz.length) ok = false
         else {
@@ -213,7 +211,7 @@ object MpegAudio {
               prof = (b2 >> 6) & 0x3
               chan = (((b2 & 1) << 2) | ((b3 >> 6) & 0x3))
             }
-            val rawM1 = u8(pos + 6) & 0x3
+            val rawM1 = (bytes(pos + 6) & 0xff) & 0x3
             nFrames += 1
             rawBlocks += rawM1 + 1
             sumBytes += frameLen

@@ -52,48 +52,45 @@ object NalCensus {
     bos.toByteArray
   }
 
-  def parse(bytes: Array[Byte]): NalMeta = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def startCodeLen(i: Int): Int =
-      if (i + 3 <= bytes.length && u8(i) == 0 && u8(i + 1) == 0 && u8(i + 2) == 1) 3
-      else if (i + 4 <= bytes.length && u8(i) == 0 && u8(i + 1) == 0 &&
-        u8(i + 2) == 0 && u8(i + 3) == 1) 4
-      else 0
+  /** The Annex-B walk shared by [[parse]] and [[spsFeatures]]:
+    * `visit(nalStart, nalEnd, startCodeLen)` per NAL unit, where a NAL
+    * ends at the next 3- or 4-byte start code or EOF. Stops at a byte
+    * that is not a start code, or a NAL whose forbidden bit is set or
+    * that is empty at EOF; returns the stop position.
+    */
+  private def walkNals(bytes: Array[Byte])(visit: (Int, Int, Int) => Unit): Int = {
+    val n = bytes.length
+    def sc3(i: Int): Boolean = n - i >= 3 && bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1
+    def sc4(i: Int): Boolean = n - i >= 4 && bytes(i) == 0 && sc3(i + 1)
     var pos = 0
+    while (pos < n) {
+      val sc = if (sc3(pos)) 3 else if (sc4(pos)) 4 else 0
+      val nalStart = pos + sc
+      if (sc == 0 || nalStart >= n || (bytes(nalStart) & 0x80) != 0) return pos
+      // find next start code (or EOF) — scan for 00 00 01 / 00 00 00 01
+      var e = nalStart
+      while (e + 3 <= n && !sc3(e) && !sc4(e)) e += 1
+      val nalEnd = if (e + 3 <= n) e else n
+      visit(nalStart, nalEnd, sc)
+      pos = nalEnd
+    }
+    pos
+  }
+
+  def parse(bytes: Array[Byte]): NalMeta = {
     var nNals = 0; var nIdr = 0; var nSlice = 0; var nSps = 0; var nPps = 0
     var nSei = 0; var nOther = 0; var n4 = 0; var sumBytes = 0L
-    var ok = true
-    while (ok && pos < bytes.length) {
-      val sc = startCodeLen(pos)
-      if (sc == 0) ok = false
-      else {
-        val nalStart = pos + sc
-        if (nalStart >= bytes.length || (u8(nalStart) & 0x80) != 0) ok = false
-        else {
-          // find next start code (or EOF) — scan for 00 00 01 / 00 00 00 01
-          var e = nalStart
-          var found = -1
-          while (found < 0 && e + 3 <= bytes.length) {
-            if (u8(e) == 0 && u8(e + 1) == 0 &&
-              (u8(e + 2) == 1 || (u8(e + 2) == 0 && e + 4 <= bytes.length && u8(e + 3) == 1)))
-              found = e
-            else e += 1
-          }
-          val nalEnd = if (found >= 0) found else bytes.length
-          val t = u8(nalStart) & 0x1f
-          nNals += 1
-          sumBytes += nalEnd - nalStart
-          if (sc == 4) n4 += 1
-          t match {
-            case 5 => nIdr += 1
-            case 1 => nSlice += 1
-            case 7 => nSps += 1
-            case 8 => nPps += 1
-            case 6 => nSei += 1
-            case _ => nOther += 1
-          }
-          pos = nalEnd
-        }
+    val pos = walkNals(bytes) { (nalStart, nalEnd, sc) =>
+      nNals += 1
+      sumBytes += nalEnd - nalStart
+      if (sc == 4) n4 += 1
+      bytes(nalStart) & 0x1f match {
+        case 5 => nIdr += 1
+        case 1 => nSlice += 1
+        case 7 => nSps += 1
+        case 8 => nPps += 1
+        case 6 => nSei += 1
+        case _ => nOther += 1
       }
     }
     NalMeta(nNals, nIdr, nSlice, nSps, nPps, nSei, nOther, n4, sumBytes,
@@ -108,37 +105,21 @@ object NalCensus {
   // triage gap without touching entropy-coded slice data (which stays
   // the honest MultimodalStub boundary).
 
-  private object Malformed extends Exception with scala.util.control.NoStackTrace
-
-  /** MSB-first bit reader over an RBSP (emulation-prevention already
-    * stripped). Fails closed: any read past the end throws.
+  /** Exp-Golomb unsigned: N zeros, 1, N info bits. 30 zeros is the
+    * widest value that still fits a non-negative Int ((1<<30)-1 +
+    * u(30) < 2^31); at 31, (1<<31)-1 + u(31) wraps negative instead of
+    * failing — fail closed like every other overrun, so an adversarial
+    * SPS can't smuggle negative-derived fields past downstream guards.
     */
-  private final class BitReader(b: Array[Byte]) {
-    private var pos = 0
-    def u(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) {
-        val bi = pos >> 3
-        if (bi >= b.length) throw Malformed
-        v = (v << 1) | ((b(bi) >> (7 - (pos & 7))) & 1)
-        pos += 1; i += 1
-      }
-      v
-    }
-    def ue(): Int = { // Exp-Golomb unsigned: N zeros, 1, N info bits
-      // 30 zeros is the widest value that still fits a non-negative
-      // Int ((1<<30)-1 + u(30) < 2^31); at 31, (1<<31)-1 + u(31)
-      // wraps negative instead of failing — fail closed like every
-      // other overrun, so an adversarial SPS can't smuggle
-      // negative-derived fields past downstream guards
-      var zeros = 0
-      while (u(1) == 0) { zeros += 1; if (zeros > 30) throw Malformed }
-      if (zeros == 0) 0 else ((1 << zeros) - 1) + u(zeros)
-    }
-    def se(): Int = { // signed mapping: 1,-1,2,-2,…
-      val k = ue()
-      if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
-    }
+  private def ue(r: BitCursor): Int = {
+    var zeros = 0
+    while (r.bits(1) == 0) { zeros += 1; if (zeros > 30) throw Malformed }
+    if (zeros == 0) 0 else ((1 << zeros) - 1) + r.bits(zeros).toInt
+  }
+  /** Exp-Golomb signed mapping: 1, -1, 2, -2, … */
+  private def se(r: BitCursor): Int = {
+    val k = ue(r)
+    if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
   }
 
   /** Strip emulation-prevention bytes: inside a NAL payload the
@@ -181,41 +162,41 @@ object NalCensus {
     * SubHeightC; field coding doubles the vertical unit).
     */
   def parseSps(rbsp: Array[Byte]): SpsMeta = try {
-    val r = new BitReader(rbsp)
-    val profile = r.u(8)
-    r.u(8) // constraint flags + reserved
-    val level = r.u(8)
-    r.ue() // seq_parameter_set_id
+    val r = new BitCursor(rbsp)
+    val profile = r.bits(8).toInt
+    r.bits(8).toInt // constraint flags + reserved
+    val level = r.bits(8).toInt
+    ue(r) // seq_parameter_set_id
     var chroma = 1 // inferred 4:2:0 when the extension block is absent
     var bd = 8
     if (HighProfiles(profile)) {
-      chroma = r.ue()
+      chroma = ue(r)
       if (chroma > 3) throw Malformed
-      if (chroma == 3) r.u(1) // separate_colour_plane_flag
-      bd = 8 + r.ue()
-      r.ue() // bit_depth_chroma_minus8
-      r.u(1) // qpprime_y_zero_transform_bypass_flag
-      if (r.u(1) == 1) return SpsFail.copy(gated = 1) // scaling matrices
+      if (chroma == 3) r.bits(1).toInt // separate_colour_plane_flag
+      bd = 8 + ue(r)
+      ue(r) // bit_depth_chroma_minus8
+      r.bits(1).toInt // qpprime_y_zero_transform_bypass_flag
+      if (r.bits(1).toInt == 1) return SpsFail.copy(gated = 1) // scaling matrices
     }
-    r.ue() // log2_max_frame_num_minus4
-    val poc = r.ue()
-    if (poc == 0) r.ue()
+    ue(r) // log2_max_frame_num_minus4
+    val poc = ue(r)
+    if (poc == 0) ue(r)
     else if (poc == 1) {
-      r.u(1); r.se(); r.se()
-      val n = r.ue()
+      r.bits(1).toInt; se(r); se(r)
+      val n = ue(r)
       if (n > 255) throw Malformed
       var i = 0
-      while (i < n) { r.se(); i += 1 }
+      while (i < n) { se(r); i += 1 }
     } else if (poc > 2) throw Malformed
-    r.ue() // max_num_ref_frames
-    r.u(1) // gaps_in_frame_num_value_allowed_flag
-    val pw = r.ue()
-    val ph = r.ue()
-    val fmo = r.u(1)
-    if (fmo == 0) r.u(1) // mb_adaptive_frame_field_flag
-    r.u(1) // direct_8x8_inference_flag
+    ue(r) // max_num_ref_frames
+    r.bits(1).toInt // gaps_in_frame_num_value_allowed_flag
+    val pw = ue(r)
+    val ph = ue(r)
+    val fmo = r.bits(1).toInt
+    if (fmo == 0) r.bits(1).toInt // mb_adaptive_frame_field_flag
+    r.bits(1).toInt // direct_8x8_inference_flag
     val (cl, cr, ct, cb) =
-      if (r.u(1) == 1) (r.ue(), r.ue(), r.ue(), r.ue()) else (0, 0, 0, 0)
+      if (r.bits(1).toInt == 1) (ue(r), ue(r), ue(r), ue(r)) else (0, 0, 0, 0)
     val (subW, subH) = chroma match {
       case 1 => (2, 2)
       case 2 => (2, 1)
@@ -233,10 +214,10 @@ object NalCensus {
     * the bit a transcoding fleet budgets decoder cost on.
     */
   def parsePps(rbsp: Array[Byte]): (Int, Int) = try {
-    val r = new BitReader(rbsp)
-    r.ue() // pic_parameter_set_id
-    r.ue() // seq_parameter_set_id
-    (1, r.u(1)) // (ok, entropy_coding_mode_flag)
+    val r = new BitCursor(rbsp)
+    ue(r) // pic_parameter_set_id
+    ue(r) // seq_parameter_set_id
+    (1, r.bits(1).toInt) // (ok, entropy_coding_mode_flag)
   } catch { case Malformed => (0, 0) }
 
   // ---------------------------------------------------- synthetic SPS
@@ -246,11 +227,8 @@ object NalCensus {
     * can round-trip values that force `00 00` runs.
     */
   private final class BitWriter {
-    private val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def u(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits += ((v >> i) & 1); i -= 1 }
-    }
+    private val bits = new BitSink
+    def u(v: Int, n: Int): Unit = bits.bits(v.toLong, n)
     def ue(v: Int): Unit = {
       val x = v + 1
       val len = 32 - Integer.numberOfLeadingZeros(x)
@@ -258,11 +236,10 @@ object NalCensus {
     }
     def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
     def rbsp(): Array[Byte] = {
-      u(1, 1) // rbsp_stop_one_bit
-      while (bits.size % 8 != 0) bits += 0
-      val raw = bits.grouped(8).map(_.foldLeft(0)((a, b) => (a << 1) | b).toByte).toArray
+      u(1, 1) // rbsp_stop_one_bit, then zero bits to the byte boundary
+      val raw = bits.toByteArray
       // emulation prevention: 00 00 followed by 00/01/02/03 gains a 03
-      val out = new java.io.ByteArrayOutputStream(raw.length)
+      val out = new ByteSink(raw.length)
       var zeros = 0
       raw.foreach { b =>
         val v = b & 0xff
@@ -341,41 +318,14 @@ object NalCensus {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          // reuse the structural walk to locate parameter-set NALs
-          def u8(i: Int): Int = bytes(i) & 0xff
-          var pos = 0
           var sps: Array[Byte] = null
           var pps: Array[Byte] = null
           var nNals = 0L
-          var ok = true
-          while (ok && pos < bytes.length) {
-            val sc =
-              if (pos + 3 <= bytes.length && u8(pos) == 0 && u8(pos + 1) == 0 &&
-                u8(pos + 2) == 1) 3
-              else if (pos + 4 <= bytes.length && u8(pos) == 0 && u8(pos + 1) == 0 &&
-                u8(pos + 2) == 0 && u8(pos + 3) == 1) 4
-              else 0
-            if (sc == 0) ok = false
-            else {
-              val ns = pos + sc
-              if (ns >= bytes.length || (u8(ns) & 0x80) != 0) ok = false
-              else {
-                var e = ns
-                var found = -1
-                while (found < 0 && e + 3 <= bytes.length) {
-                  if (u8(e) == 0 && u8(e + 1) == 0 &&
-                    (u8(e + 2) == 1 || (u8(e + 2) == 0 && e + 4 <= bytes.length && u8(e + 3) == 1)))
-                    found = e
-                  else e += 1
-                }
-                val nalEnd = if (found >= 0) found else bytes.length
-                nNals += 1
-                val t = u8(ns) & 0x1f
-                if (t == 7 && sps == null) sps = rbspUnescape(bytes, ns + 1, nalEnd)
-                if (t == 8 && pps == null) pps = rbspUnescape(bytes, ns + 1, nalEnd)
-                pos = nalEnd
-              }
-            }
+          walkNals(bytes) { (ns, nalEnd, _) =>
+            nNals += 1
+            val t = bytes(ns) & 0x1f
+            if (t == 7 && sps == null) sps = rbspUnescape(bytes, ns + 1, nalEnd)
+            if (t == 8 && pps == null) pps = rbspUnescape(bytes, ns + 1, nalEnd)
           }
           val s = if (sps == null) SpsFail else parseSps(sps)
           val (ppsOk, cabac) = if (pps == null) (0, 0) else parsePps(pps)

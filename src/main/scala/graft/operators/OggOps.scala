@@ -69,34 +69,10 @@ object OggOps {
     * (headerType, granule, segment lengths). CRCs are correct.
     */
   def encodeSynthetic(plan: Seq[(Int, Long, Seq[Int])], serial: Int = 0x1234): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
+    val bos = new ByteSink()
     plan.zipWithIndex.foreach { case ((hType, granule, segs), seq) =>
-      val payloadLen = segs.sum
-      val page = new Array[Byte](27 + segs.length + payloadLen)
-      page(0) = 'O'; page(1) = 'g'; page(2) = 'g'; page(3) = 'S'
-      page(4) = 0 // version
-      page(5) = hType.toByte
-      var g = granule
-      var i = 0
-      while (i < 8) { page(6 + i) = (g & 0xff).toByte; g >>>= 8; i += 1 }
-      var sr = serial
-      i = 0
-      while (i < 4) { page(14 + i) = (sr & 0xff).toByte; sr >>>= 8; i += 1 }
-      var sq = seq
-      i = 0
-      while (i < 4) { page(18 + i) = (sq & 0xff).toByte; sq >>>= 8; i += 1 }
-      // crc at 22..25 stays zero for the computation
-      page(26) = segs.length.toByte
-      segs.zipWithIndex.foreach { case (sl, si) => page(27 + si) = sl.toByte }
-      var p = 27 + segs.length
-      var b = 0
-      while (b < payloadLen) { page(p + b) = ((b * 17 + seq * 31) % 256).toByte; b += 1 }
-      val c = crc(page, 0, page.length)
-      page(22) = (c & 0xff).toByte
-      page(23) = ((c >>> 8) & 0xff).toByte
-      page(24) = ((c >>> 16) & 0xff).toByte
-      page(25) = ((c >>> 24) & 0xff).toByte
-      bos.write(page)
+      val payload = Array.tabulate(segs.sum)(b => ((b * 17 + seq * 31) % 256).toByte)
+      bos.raw(encodePage(hType, granule, serial, seq, segs, payload))
     }
     bos.toByteArray
   }
@@ -127,8 +103,7 @@ object OggOps {
           if (total > n - pos) ok = false
           else {
             // CRC with the stored field read as zeros (no input mutation)
-            val stored = (bytes(pos + 22) & 0xff) | ((bytes(pos + 23) & 0xff) << 8) |
-              ((bytes(pos + 24) & 0xff) << 16) | ((bytes(pos + 25) & 0xff) << 24)
+            val stored = Bytes.le32(bytes, pos + 22)
             var actual = 0
             var ci = pos
             val cEnd = pos + total
@@ -200,11 +175,6 @@ object OggOps {
       opusDurationMs: Long, // (lastGranule − preSkip)/48, ≥0, Opus first stream only
       trailingBytes: Long)
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
   private def hasMagic(b: Array[Byte], off: Int, m: String): Boolean = {
     var i = 0
     while (i < m.length) {
@@ -226,12 +196,12 @@ object OggOps {
     // OpusHead: magic(8) ver(1, major nibble 0) ch(1) preSkip(2 LE)
     //           inputRate(4 LE) gain(2) mappingFamily(1) = 19 bytes min
     if (len >= 19 && hasMagic(b, off, "OpusHead") && (b(off + 8) & 0xf0) == 0)
-      (CodecOpus, b(off + 9) & 0xff, le32(b, off + 10 + 2), le16(b, off + 10))
+      (CodecOpus, b(off + 9) & 0xff, Bytes.le32u(b, off + 10 + 2), Bytes.le16(b, off + 10))
     // Vorbis id: 0x01 "vorbis" version(4 LE, == 0) ch(1) rate(4 LE)
     //            bitrates(12) blocksizes(1) framing(1) = 30 bytes
     else if (len >= 30 && b(off) == 0x01 && hasMagic(b, off + 1, "vorbis") &&
-      le32(b, off + 7) == 0L)
-      (CodecVorbis, b(off + 11) & 0xff, le32(b, off + 12), 0)
+      Bytes.le32u(b, off + 7) == 0L)
+      (CodecVorbis, b(off + 11) & 0xff, Bytes.le32u(b, off + 12), 0)
     // Ogg-FLAC mapping: 0x7F "FLAC" major(1) minor(1) nHeaders(2) "fLaC"
     //                   STREAMINFO block — 13 + 4 + 38 bytes min
     else if (len >= 51 && (b(off) & 0xff) == 0x7f && hasMagic(b, off + 1, "FLAC") &&
@@ -326,28 +296,16 @@ object OggOps {
     require(segs.length <= 255, s"${segs.length} lacing values > 255")
     require(segs.sum == payload.length,
       s"lacing sum ${segs.sum} != payload ${payload.length}")
-    val page = new Array[Byte](27 + segs.length + payload.length)
-    page(0) = 'O'; page(1) = 'g'; page(2) = 'g'; page(3) = 'S'
-    page(4) = 0
-    page(5) = hType.toByte
-    var g = granule
-    var i = 0
-    while (i < 8) { page(6 + i) = (g & 0xff).toByte; g >>>= 8; i += 1 }
-    var sr = serial
-    i = 0
-    while (i < 4) { page(14 + i) = (sr & 0xff).toByte; sr >>>= 8; i += 1 }
-    var sq = pageSeq
-    i = 0
-    while (i < 4) { page(18 + i) = (sq & 0xff).toByte; sq >>>= 8; i += 1 }
-    page(26) = segs.length.toByte
-    segs.zipWithIndex.foreach { case (sl, si) => page(27 + si) = sl.toByte }
-    payload.copyToArray(page, 27 + segs.length)
-    val c = crc(page, 0, page.length)
-    page(22) = (c & 0xff).toByte
-    page(23) = ((c >>> 8) & 0xff).toByte
-    page(24) = ((c >>> 16) & 0xff).toByte
-    page(25) = ((c >>> 24) & 0xff).toByte
-    page
+    val page = new ByteSink(27 + segs.length + payload.length).ascii("OggS")
+      .u8(0) // version
+      .u8(hType).le64(granule).le32(serial).le32(pageSeq)
+      .le32(0) // crc: zero for the computation, patched below
+      .u8(segs.length)
+    segs.foreach(page.u8)
+    val out = page.raw(payload).toByteArray
+    val c = crc(out, 0, out.length)
+    System.arraycopy(new ByteSink(4).le32(c).toByteArray, 0, out, 22, 4)
+    out
   }
 
   /** Lacing values for one COMPLETE packet: ⌊len/255⌋ 255s plus the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import TfRecordOps.{ProtoReader, ProtoMalformed}
+import TfRecordOps.{lenDelimited, pbTag, skipValue}
 
 /** ORC column DATA decode — the layer below [[OrcOps]]'s tail /
   * stripe-stats walk, mirroring what [[ParquetPages]] did for
@@ -43,8 +43,6 @@ import TfRecordOps.{ProtoReader, ProtoMalformed}
   */
 object OrcData {
 
-  private object Malformed extends Exception with scala.util.control.NoStackTrace
-
   private val MaxOut = 1 << 26
 
   // ------------------------------------------------------------------
@@ -61,8 +59,7 @@ object OrcData {
     var p = off
     while (p < end) {
       if (end - p < 3) throw Malformed
-      val h = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) |
-        ((bytes(p + 2) & 0xff) << 16)
+      val h = Bytes.le24(bytes, p)
       p += 3
       val len = h >>> 1
       val original = (h & 1) != 0
@@ -134,36 +131,6 @@ object OrcData {
     1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16,
     17, 18, 19, 20, 21, 22, 23, 24, 26, 28, 30, 32, 40, 48, 56, 64)
 
-  private final class BitsMsb(val b: Array[Byte], var pos: Int, val end: Int) {
-    private var bitPos = 0
-    def bits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        if (pos >= end) throw Malformed
-        v = (v << 1) | ((b(pos) >> (7 - bitPos)) & 1)
-        bitPos += 1
-        if (bitPos == 8) { bitPos = 0; pos += 1 }
-        i += 1
-      }
-      v
-    }
-    def alignByte(): Unit = if (bitPos != 0) { bitPos = 0; pos += 1 }
-    def u8(): Int = { if (pos >= end) throw Malformed; val v = b(pos) & 0xff; pos += 1; v }
-    /** ORC base-128 varint (unsigned). */
-    def varint(): Long = {
-      var v = 0L; var shift = 0; var i = 0
-      while (i < 10) {
-        val x = u8()
-        v |= (x & 0x7fL) << shift
-        if ((x & 0x80) == 0) return v
-        shift += 7; i += 1
-      }
-      throw Malformed
-    }
-    def svarint(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1L) }
-  }
-
   /** RLEv2 decode: exactly `n` values from `buf`, zigzag-decoding
     * where the encoding carries sign (`signed` = an integer column;
     * LENGTH streams decode unsigned).
@@ -172,7 +139,7 @@ object OrcData {
       signed: Boolean): Array[Long] = {
     val out = new Array[Long](n)
     var produced = 0
-    val r = new BitsMsb(buf, 0, buf.length)
+    val r = new ByteCursor(buf)
     def unzig(v: Long): Long = if (signed) (v >>> 1) ^ -(v & 1L) else v
     while (produced < n) {
       val h = r.u8()
@@ -192,12 +159,14 @@ object OrcData {
           val w = WidthTable((h >>> 1) & 0x1f)
           val len = (((h & 1) << 8) | r.u8()) + 1
           if (produced + len > n) throw Malformed
+          val bits = new BitCursor(buf, r.pos, r.end)
           var i = 0
           while (i < len) {
-            out(produced + i) = unzig(r.bits(w))
+            out(produced + i) = unzig(bits.bits(w))
             i += 1
           }
-          r.alignByte()
+          bits.alignByte()
+          r.pos = bits.bytePos
           produced += len
         case 2 => // PATCHED BASE
           val w = WidthTable((h >>> 1) & 0x1f)
@@ -215,9 +184,10 @@ object OrcData {
           val signBit = 1L << (baseBytes * 8 - 1)
           if ((base & signBit) != 0) base = -(base & (signBit - 1))
           if (produced + len > n) throw Malformed
+          val bits = new BitCursor(buf, r.pos, r.end)
           i = 0
-          while (i < len) { out(produced + i) = r.bits(w); i += 1 }
-          r.alignByte()
+          while (i < len) { out(produced + i) = bits.bits(w); i += 1 }
+          bits.alignByte()
           // patch entries are packed at the closest ALIGNED width
           // (1,2,4,8,16,24,...,64) above gap+patch bits, value
           // right-aligned — the detail the java reader calls
@@ -232,14 +202,15 @@ object OrcData {
           var gap = 0
           i = 0
           while (i < patchLen) {
-            val entry = r.bits(entryW)
+            val entry = bits.bits(entryW)
             gap += (entry >>> patchWidth).toInt
             val patch = entry & ((1L << patchWidth) - 1)
             if (gap >= len) throw Malformed
             out(produced + gap) |= patch << w
             i += 1
           }
-          r.alignByte()
+          bits.alignByte()
+          r.pos = bits.bytePos
           i = 0
           while (i < len) { out(produced + i) = base + out(produced + i); i += 1 }
           produced += len
@@ -248,21 +219,23 @@ object OrcData {
           val w = if (encW == 0) 0 else WidthTable(encW)
           val len = (((h & 1) << 8) | r.u8()) + 1
           if (produced + len > n) throw Malformed
-          val base = if (signed) r.svarint() else r.varint()
+          val base = if (signed) r.zigzag() else r.varint()
           out(produced) = base
           if (len > 1) {
-            val deltaBase = r.svarint()
+            val deltaBase = r.zigzag()
             out(produced + 1) = base + deltaBase
             var prev = out(produced + 1)
             val sign = if (deltaBase < 0) -1L else 1L
+            val bits = new BitCursor(buf, r.pos, r.end)
             var i = 2
             while (i < len) {
-              val d = if (w == 0) math.abs(deltaBase) else r.bits(w)
+              val d = if (w == 0) math.abs(deltaBase) else bits.bits(w)
               prev += sign * d
               out(produced + i) = prev
               i += 1
             }
-            r.alignByte()
+            bits.alignByte()
+            r.pos = bits.bytePos
           }
           produced += len
       }
@@ -302,14 +275,14 @@ object OrcData {
       throw Malformed
     val psLen = bytes(n - 1) & 0xff
     if (psLen < 1 || psLen > n - 4) throw Malformed
-    val ps = new ProtoReader(bytes, n - 1 - psLen, n - 1)
+    val ps = new ByteCursor(bytes, n - 1 - psLen, n - 1)
     var footerLen = 0L; var codec = -1L
-    while (ps.pos < ps.end) {
+    while (ps.hasMore) {
       val t = ps.varint()
       (((t >>> 3).toInt, (t & 7).toInt)) match {
         case (1, 0) => footerLen = ps.varint()
         case (2, 0) => codec = ps.varint()
-        case (_, w) => ps.skipValue(w)
+        case (_, w) => skipValue(ps, w)
       }
     }
     if (codec < 0 || footerLen <= 0 ||
@@ -318,17 +291,16 @@ object OrcData {
       throw GatedSignal // lzo/lz4/other: declined
     val fRaw = deframe(bytes, n - 1 - psLen - footerLen.toInt,
       n - 1 - psLen, codec)
-    val f = new ProtoReader(fRaw, 0, fRaw.length)
+    val f = new ByteCursor(fRaw, 0, fRaw.length)
     val stripes = Vector.newBuilder[(Long, Long, Long, Long, Long)]
     val kinds = Vector.newBuilder[Long]
-    while (f.pos < f.end) {
+    while (f.hasMore) {
       val t = f.varint()
       (((t >>> 3).toInt, (t & 7).toInt)) match {
         case (3, 2) =>
-          val (off, len) = f.lenDelimited()
-          val s = new ProtoReader(fRaw, off, off + len)
+          val s = lenDelimited(f)
           var o = 0L; var il = 0L; var dl = 0L; var fl = 0L; var rows = 0L
-          while (s.pos < s.end) {
+          while (s.hasMore) {
             val st = s.varint()
             (((st >>> 3).toInt, (st & 7).toInt)) match {
               case (1, 0) => o = s.varint()
@@ -336,23 +308,22 @@ object OrcData {
               case (3, 0) => dl = s.varint()
               case (4, 0) => fl = s.varint()
               case (5, 0) => rows = s.varint()
-              case (_, w) => s.skipValue(w)
+              case (_, w) => skipValue(s, w)
             }
           }
           stripes += ((o, il, dl, fl, rows))
         case (4, 2) =>
-          val (off, len) = f.lenDelimited()
-          val ty = new ProtoReader(fRaw, off, off + len)
+          val ty = lenDelimited(f)
           var kind = 0L
-          while (ty.pos < ty.end) {
+          while (ty.hasMore) {
             val tt = ty.varint()
             (((tt >>> 3).toInt, (tt & 7).toInt)) match {
               case (1, 0) => kind = ty.varint()
-              case (_, w) => ty.skipValue(w)
+              case (_, w) => skipValue(ty, w)
             }
           }
           kinds += kind
-        case (_, w) => f.skipValue(w)
+        case (_, w) => skipValue(f, w)
       }
     }
     Tail(codec, stripes.result(), kinds.result())
@@ -363,40 +334,38 @@ object OrcData {
     */
   private def stripeDirectory(sfRaw: Array[Byte]):
       (Vector[(Long, Long, Long)], Vector[(Long, Long)]) = {
-    val sf = new ProtoReader(sfRaw, 0, sfRaw.length)
+    val sf = new ByteCursor(sfRaw, 0, sfRaw.length)
     val streams = Vector.newBuilder[(Long, Long, Long)]
     val encodings = Vector.newBuilder[(Long, Long)]
-    while (sf.pos < sf.end) {
+    while (sf.hasMore) {
       val t = sf.varint()
       (((t >>> 3).toInt, (t & 7).toInt)) match {
         case (1, 2) =>
-          val (off, len) = sf.lenDelimited()
-          val sr = new ProtoReader(sfRaw, off, off + len)
+          val sr = lenDelimited(sf)
           var kind = 0L; var colId = 0L; var length = 0L
-          while (sr.pos < sr.end) {
+          while (sr.hasMore) {
             val st = sr.varint()
             (((st >>> 3).toInt, (st & 7).toInt)) match {
               case (1, 0) => kind = sr.varint()
               case (2, 0) => colId = sr.varint()
               case (3, 0) => length = sr.varint()
-              case (_, w) => sr.skipValue(w)
+              case (_, w) => skipValue(sr, w)
             }
           }
           streams += ((kind, colId, length))
         case (2, 2) =>
-          val (off, len) = sf.lenDelimited()
-          val er = new ProtoReader(sfRaw, off, off + len)
+          val er = lenDelimited(sf)
           var ek = 0L; var ds = 0L
-          while (er.pos < er.end) {
+          while (er.hasMore) {
             val et = er.varint()
             (((et >>> 3).toInt, (et & 7).toInt)) match {
               case (1, 0) => ek = er.varint()
               case (2, 0) => ds = er.varint()
-              case (_, w) => er.skipValue(w)
+              case (_, w) => skipValue(er, w)
             }
           }
           encodings += ((ek, ds))
-        case (_, w) => sf.skipValue(w)
+        case (_, w) => skipValue(sf, w)
       }
     }
     (streams.result(), encodings.result())
@@ -478,7 +447,6 @@ object OrcData {
     } catch {
       case GatedSignal => Gated
       case Malformed => Bad
-      case ProtoMalformed => Bad
       case _: ArrayIndexOutOfBoundsException => Bad
       case _: NegativeArraySizeException => Bad
     }
@@ -568,7 +536,6 @@ object OrcData {
     } catch {
       case GatedSignal => BinGatedOrc
       case Malformed => BinBadOrc
-      case ProtoMalformed => BinBadOrc
       case _: ArrayIndexOutOfBoundsException => BinBadOrc
       case _: NegativeArraySizeException => BinBadOrc
     }
@@ -585,27 +552,14 @@ object OrcData {
     */
   def encodeRleV2Run(values: Seq[Long], signed: Boolean): Array[Byte] = {
     require(values.nonEmpty && values.size <= 512, s"run ${values.size}")
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     def zig(v: Long): Long = if (signed) (v << 1) ^ (v >> 63) else v
     def bitsOf(v: Long): Int = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(v))
     def encWidthIdx(bits: Int): Int = WidthTable.indexWhere(_ >= bits)
     def packMsb(vs: Seq[Long], w: Int): Unit = {
-      var cur = 0L; var nb = 0
-      vs.foreach { v =>
-        var i = w - 1
-        while (i >= 0) {
-          cur = (cur << 1) | ((v >> i) & 1L)
-          nb += 1
-          if (nb == 8) { out.write(cur.toInt & 0xff); cur = 0; nb = 0 }
-          i -= 1
-        }
-      }
-      if (nb > 0) out.write(((cur << (8 - nb)) & 0xff).toInt)
-    }
-    def svarint(v: Long): Unit = {
-      var x = (v << 1) ^ (v >> 63)
-      while ((x & ~0x7fL) != 0) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt)
+      val bits = new BitSink
+      vs.foreach(bits.bits(_, w))
+      out.raw(bits.toByteArray)
     }
     val n = values.size
     val allEqual = values.forall(_ == values.head)
@@ -629,8 +583,7 @@ object OrcData {
       val encW = if (fixed) 0 else encWidthIdx(bitsOf(math.max(abs.max, 1)))
       out.write(0xC0 | (encW << 1) | ((n - 1) >> 8))
       out.write((n - 1) & 0xff)
-      svarint(values.head)
-      svarint(deltas.head)
+      out.zigzag(values.head).zigzag(deltas.head)
       if (!fixed) packMsb(abs, WidthTable(encW))
     } else { // DIRECT
       val zs = values.map(zig)
@@ -669,57 +622,54 @@ object OrcData {
   private def buildOrcFile(streams: Seq[(Long, Array[Byte])], encKind: Long,
       dictSize: Long, typeKind: Long, nRows: Long, codecStamp: Long,
       truncate: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     out.write("ORC".getBytes("US-ASCII"))
     streams.foreach { case (_, b) => out.write(b) }
     val dataLen = streams.map(_._2.length.toLong).sum
-    def bTag(b: java.io.ByteArrayOutputStream, f: Int, w: Int): Unit =
-      TfRecordOps.pbVarint(b, (f.toLong << 3) | w)
-    def bSub(b: java.io.ByteArrayOutputStream, f: Int)(
-        body: java.io.ByteArrayOutputStream => Unit): Unit = {
-      val x = new java.io.ByteArrayOutputStream()
+    def bSub(b: ByteSink, f: Int)(body: ByteSink => Unit): Unit = {
+      val x = new ByteSink()
       body(x)
-      bTag(b, f, 2); TfRecordOps.pbVarint(b, x.size().toLong); x.writeTo(b)
+      TfRecordOps.pbLen(b, f, x.toByteArray)
     }
-    val sf = new java.io.ByteArrayOutputStream()
+    val sf = new ByteSink()
     streams.foreach { case (kind, bytes) =>
       bSub(sf, 1) { s =>
-        bTag(s, 1, 0); TfRecordOps.pbVarint(s, kind)
-        bTag(s, 2, 0); TfRecordOps.pbVarint(s, 1L)
-        bTag(s, 3, 0); TfRecordOps.pbVarint(s, bytes.length.toLong)
+        pbTag(s, 1, 0).varint(kind)
+        pbTag(s, 2, 0).varint(1L)
+        pbTag(s, 3, 0).varint(bytes.length.toLong)
       }
     }
     bSub(sf, 2) { s => // encoding col 0: DIRECT (struct)
-      bTag(s, 1, 0); TfRecordOps.pbVarint(s, 0L)
+      pbTag(s, 1, 0).varint(0L)
     }
     bSub(sf, 2) { s => // encoding col 1
-      bTag(s, 1, 0); TfRecordOps.pbVarint(s, encKind)
-      if (dictSize > 0) { bTag(s, 2, 0); TfRecordOps.pbVarint(s, dictSize) }
+      pbTag(s, 1, 0).varint(encKind)
+      if (dictSize > 0) { pbTag(s, 2, 0).varint(dictSize) }
     }
     val sfB = sf.toByteArray
     out.write(sfB)
-    val foot = new java.io.ByteArrayOutputStream()
+    val foot = new ByteSink()
     bSub(foot, 3) { s => // StripeInformation
-      bTag(s, 1, 0); TfRecordOps.pbVarint(s, 3L) // offset: after magic
-      bTag(s, 2, 0); TfRecordOps.pbVarint(s, 0L) // indexLength
-      bTag(s, 3, 0); TfRecordOps.pbVarint(s, dataLen)
-      bTag(s, 4, 0); TfRecordOps.pbVarint(s, sfB.length.toLong)
-      bTag(s, 5, 0); TfRecordOps.pbVarint(s, nRows)
+      pbTag(s, 1, 0).varint(3L) // offset: after magic
+      pbTag(s, 2, 0).varint(0L) // indexLength
+      pbTag(s, 3, 0).varint(dataLen)
+      pbTag(s, 4, 0).varint(sfB.length.toLong)
+      pbTag(s, 5, 0).varint(nRows)
     }
     bSub(foot, 4) { s => // root STRUCT type with one subtype
-      bTag(s, 1, 0); TfRecordOps.pbVarint(s, 12L)
-      bTag(s, 2, 0); TfRecordOps.pbVarint(s, 1L)
+      pbTag(s, 1, 0).varint(12L)
+      pbTag(s, 2, 0).varint(1L)
     }
     bSub(foot, 4) { s => // the leaf
-      bTag(s, 1, 0); TfRecordOps.pbVarint(s, typeKind)
+      pbTag(s, 1, 0).varint(typeKind)
     }
-    bTag(foot, 6, 0); TfRecordOps.pbVarint(foot, nRows)
+    pbTag(foot, 6, 0).varint(nRows)
     val footB = foot.toByteArray
     out.write(footB)
-    val ps = new java.io.ByteArrayOutputStream()
-    TfRecordOps.pbVarint(ps, (1L << 3) | 0); TfRecordOps.pbVarint(ps, footB.length.toLong)
-    TfRecordOps.pbVarint(ps, (2L << 3) | 0); TfRecordOps.pbVarint(ps, codecStamp)
-    TfRecordOps.pbVarint(ps, (8000L << 3) | 2); TfRecordOps.pbVarint(ps, 3L)
+    val ps = new ByteSink()
+    ps.varint((1L << 3) | 0); ps.varint(footB.length.toLong)
+    ps.varint((2L << 3) | 0); ps.varint(codecStamp)
+    ps.varint((8000L << 3) | 2); ps.varint(3L)
     ps.write("ORC".getBytes("US-ASCII"))
     val psB = ps.toByteArray
     out.write(psB)

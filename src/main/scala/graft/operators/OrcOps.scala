@@ -1,5 +1,7 @@
 package graft.operators
 
+import TfRecordOps.{lenDelimited, pbLen, pbTag, skipValue}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions.col
   * guessing at compressed bytes.
   *
   * Shares the protobuf wire machinery with the tf.Example census
-  * (TfRecordOps.ProtoReader): varint tags, structural skip of every
+  * (TfRecordOps.lenDelimited/skipValue over a ByteCursor): varint tags, structural skip of every
   * untargeted field — real writer footers carry statistics and
   * encodings this walker never pattern-matches. Stop-don't-guess:
   * missing magics, a postscript length outside the buffer, a declared
@@ -74,10 +76,10 @@ object OrcOps {
     // postscript must fit after the head magic (subtraction form)
     if (psLen < 1 || psLen > n - 4) return Invalid
     try {
-      val ps = new TfRecordOps.ProtoReader(bytes, n - 1 - psLen, n - 1)
+      val ps = new ByteCursor(bytes, n - 1 - psLen, n - 1)
       var footerLen = 0L; var comp = -1L; var metaLen = 0L
       var writerVer = 0L; var magicOk = false
-      while (ps.pos < ps.end) {
+      while (ps.hasMore) {
         val tag = ps.varint()
         val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
         (field, wire) match {
@@ -86,10 +88,9 @@ object OrcOps {
           case (5, 0) => metaLen = ps.varint()
           case (6, 0) => writerVer = ps.varint()
           case (8000, 2) =>
-            val (off, len) = ps.lenDelimited()
-            magicOk = len == 3 && bytes(off) == 'O' && bytes(off + 1) == 'R' &&
-              bytes(off + 2) == 'C'
-          case _ => ps.skipValue(wire)
+            val m = lenDelimited(ps)
+            magicOk = m.remaining == 3 && Bytes.tag(bytes, m.pos, "ORC")
+          case _ => skipValue(ps, wire)
         }
       }
       if (!magicOk || comp < 0) return Invalid
@@ -104,22 +105,19 @@ object OrcOps {
       var lastOffset = -1L; var monotonic = 1
       var nStats = 0; var statVals = 0L; var nNull = 0
       var nInt = 0; var iMin = Long.MaxValue; var iMax = Long.MinValue
-      // sint64 zigzag (IntegerStatistics min/max are sint64 on the wire)
-      def zz(v: Long): Long = (v >>> 1) ^ -(v & 1L)
       if (comp == 0L && footerLen > 0) {
         val fStart = n - 1 - psLen - footerLen.toInt
-        val f = new TfRecordOps.ProtoReader(bytes, fStart, fStart + footerLen.toInt)
-        while (f.pos < f.end) {
+        val f = new ByteCursor(bytes, fStart, fStart + footerLen.toInt)
+        while (f.hasMore) {
           val tag = f.varint()
           val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
           (field, wire) match {
             case (2, 0) => contentLen = f.varint()
             case (3, 2) => // StripeInformation
               nStripes += 1
-              val (off, len) = f.lenDelimited()
-              val s = new TfRecordOps.ProtoReader(bytes, off, off + len)
+              val s = lenDelimited(f)
               var rows = 0L
-              while (s.pos < s.end) {
+              while (s.hasMore) {
                 val st = s.varint()
                 ((st >>> 3).toInt, (st & 7).toInt) match {
                   case (1, 0) =>
@@ -130,39 +128,37 @@ object OrcOps {
                   case (3, 0) => dataBytes += s.varint()
                   case (4, 0) => sfBytes += s.varint()
                   case (5, 0) => rows = s.varint()
-                  case (_, w) => s.skipValue(w)
+                  case (_, w) => skipValue(s, w)
                 }
               }
               stripeRows += rows
               if (rows < rowsMin) rowsMin = rows
               if (rows > rowsMax) rowsMax = rows
-            case (4, 2) => nTypes += 1; f.lenDelimited(); ()
+            case (4, 2) => nTypes += 1; skipValue(f, 2)
             case (6, 0) => numRows = f.varint()
             case (7, 2) => // ColumnStatistics
               nStats += 1
-              val (off, len) = f.lenDelimited()
-              val c = new TfRecordOps.ProtoReader(bytes, off, off + len)
-              while (c.pos < c.end) {
+              val c = lenDelimited(f)
+              while (c.hasMore) {
                 val ct = c.varint()
                 ((ct >>> 3).toInt, (ct & 7).toInt) match {
                   case (1, 0) => statVals += c.varint()
                   case (2, 2) => // IntegerStatistics {1 min, 2 max, 3 sum: sint64}
                     nInt += 1
-                    val (io, il) = c.lenDelimited()
-                    val i = new TfRecordOps.ProtoReader(bytes, io, io + il)
-                    while (i.pos < i.end) {
+                    val i = lenDelimited(c)
+                    while (i.hasMore) {
                       val it = i.varint()
                       ((it >>> 3).toInt, (it & 7).toInt) match {
-                        case (1, 0) => val v = zz(i.varint()); if (v < iMin) iMin = v
-                        case (2, 0) => val v = zz(i.varint()); if (v > iMax) iMax = v
-                        case (_, w) => i.skipValue(w)
+                        case (1, 0) => val v = i.zigzag(); if (v < iMin) iMin = v
+                        case (2, 0) => val v = i.zigzag(); if (v > iMax) iMax = v
+                        case (_, w) => skipValue(i, w)
                       }
                     }
                   case (10, 0) => if (c.varint() != 0L) nNull += 1
-                  case (_, w) => c.skipValue(w)
+                  case (_, w) => skipValue(c, w)
                 }
               }
-            case _ => f.skipValue(wire)
+            case _ => skipValue(f, wire)
           }
         }
         footerParsed = 1
@@ -176,22 +172,13 @@ object OrcOps {
         if (nInt == 0 || iMin == Long.MaxValue) 0L else iMin,
         if (nInt == 0 || iMax == Long.MinValue) 0L else iMax)
     } catch {
-      case TfRecordOps.ProtoMalformed => Invalid
+      case Malformed => Invalid
       case _: ArrayIndexOutOfBoundsException => Invalid
     }
   }
 
   // ------------------------------------------------------------------
   // synthetic encoder (tests + the q381 oracle's closed-form replay)
-
-  // ONE varint encoder in the operators package (review-demanded dedup):
-  // the protobuf writer lives with the shared ProtoReader in TfRecordOps
-  private def vi(out: java.io.ByteArrayOutputStream, v0: Long): Unit =
-    TfRecordOps.pbVarint(out, v0)
-  private def tag(out: java.io.ByteArrayOutputStream, field: Int, wire: Int): Unit =
-    vi(out, (field.toLong << 3) | wire)
-  private def lenField(out: java.io.ByteArrayOutputStream, field: Int,
-      body: Array[Byte]): Unit = TfRecordOps.pbLen(out, field, body)
 
   /** Minimal-but-real ORC tail: head magic, filler "stripes", a raw
     * footer (always written; only parseable when `compression = 0`),
@@ -210,65 +197,63 @@ object OrcOps {
       compression: Long, writerVersion: Long, dataFiller: Int,
       colStats: Seq[ColStat] = Nil,
       stripeStats: Seq[Seq[ColStat]] = Nil): Array[Byte] = {
-    def sint(out: java.io.ByteArrayOutputStream, v: Long): Unit =
-      vi(out, (v << 1) ^ (v >> 63)) // sint64 zigzag
     def colStatBytes(cs: ColStat): Array[Byte] = {
-      val c = new java.io.ByteArrayOutputStream()
-      tag(c, 1, 0); vi(c, cs.numValues)
+      val c = new ByteSink()
+      pbTag(c, 1, 0).varint(cs.numValues)
       cs.intStats.foreach { case (mn, mx, sm) =>
-        val i = new java.io.ByteArrayOutputStream()
-        tag(i, 1, 0); sint(i, mn)
-        tag(i, 2, 0); sint(i, mx)
-        tag(i, 3, 0); sint(i, sm)
-        lenField(c, 2, i.toByteArray)
+        val i = new ByteSink()
+        pbTag(i, 1, 0).zigzag(mn)
+        pbTag(i, 2, 0).zigzag(mx)
+        pbTag(i, 3, 0).zigzag(sm)
+        pbLen(c, 2, i.toByteArray)
       }
-      tag(c, 10, 0); vi(c, if (cs.hasNull) 1L else 0L)
+      pbTag(c, 10, 0).varint(if (cs.hasNull) 1L else 0L)
       c.toByteArray
     }
     // Metadata section (precedes the footer): repeated StripeStatistics
     // (field 1), each a repeated ColumnStatistics (field 1)
     val metadata = {
-      val m = new java.io.ByteArrayOutputStream()
+      val m = new ByteSink()
       stripeStats.foreach { cols =>
-        val ss = new java.io.ByteArrayOutputStream()
-        cols.foreach(cs => lenField(ss, 1, colStatBytes(cs)))
-        lenField(m, 1, ss.toByteArray)
+        val ss = new ByteSink()
+        cols.foreach(cs => pbLen(ss, 1, colStatBytes(cs)))
+        pbLen(m, 1, ss.toByteArray)
       }
       m.toByteArray
     }
     val footer = {
-      val f = new java.io.ByteArrayOutputStream()
-      tag(f, 2, 0); vi(f, 3L + dataFiller) // contentLength
+      val f = new ByteSink()
+      pbTag(f, 2, 0).varint(3L + dataFiller) // contentLength
       (0 until nStripes).foreach { i =>
-        val s = new java.io.ByteArrayOutputStream()
-        tag(s, 1, 0); vi(s, 3L + i)        // offset
-        tag(s, 2, 0); vi(s, 10L)           // indexLength
-        tag(s, 3, 0); vi(s, 100L)          // dataLength
-        tag(s, 4, 0); vi(s, 20L)           // footerLength
-        tag(s, 5, 0); vi(s, rowsPerStripe) // numberOfRows
-        lenField(f, 3, s.toByteArray)
+        val s = new ByteSink()
+        pbTag(s, 1, 0).varint(3L + i)        // offset
+        pbTag(s, 2, 0).varint(10L)           // indexLength
+        pbTag(s, 3, 0).varint(100L)          // dataLength
+        pbTag(s, 4, 0).varint(20L)           // footerLength
+        pbTag(s, 5, 0).varint(rowsPerStripe) // numberOfRows
+        pbLen(f, 3, s.toByteArray)
       }
       (0 until nTypes).foreach { i =>
-        val t = new java.io.ByteArrayOutputStream()
-        tag(t, 1, 0); vi(t, (i % 4).toLong) // kind
-        lenField(f, 4, t.toByteArray)
+        val t = new ByteSink()
+        pbTag(t, 1, 0).varint((i % 4).toLong) // kind
+        pbLen(f, 4, t.toByteArray)
       }
-      tag(f, 6, 0); vi(f, nStripes * rowsPerStripe)
-      colStats.foreach(cs => lenField(f, 7, colStatBytes(cs)))
+      pbTag(f, 6, 0).varint(nStripes * rowsPerStripe)
+      colStats.foreach(cs => pbLen(f, 7, colStatBytes(cs)))
       f.toByteArray
     }
     val ps = {
-      val p = new java.io.ByteArrayOutputStream()
-      tag(p, 1, 0); vi(p, footer.length.toLong)
-      tag(p, 2, 0); vi(p, compression)
-      tag(p, 3, 0); vi(p, 262144L)
-      tag(p, 5, 0); vi(p, metadata.length.toLong)
-      tag(p, 6, 0); vi(p, writerVersion)
-      lenField(p, 8000, "ORC".getBytes("US-ASCII"))
+      val p = new ByteSink()
+      pbTag(p, 1, 0).varint(footer.length.toLong)
+      pbTag(p, 2, 0).varint(compression)
+      pbTag(p, 3, 0).varint(262144L)
+      pbTag(p, 5, 0).varint(metadata.length.toLong)
+      pbTag(p, 6, 0).varint(writerVersion)
+      pbLen(p, 8000, "ORC".getBytes("US-ASCII"))
       p.toByteArray
     }
     require(ps.length <= 255, "postscript must fit one length byte")
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteSink()
     out.write("ORC".getBytes("US-ASCII"))
     out.write(Array.tabulate(dataFiller)(i => ((i * 23 + 5) & 0xff).toByte))
     out.write(metadata)
@@ -348,81 +333,76 @@ object OrcOps {
     if (m.valid != 1 || m.footerParsed != 1 || m.metadataLen <= 0)
       return Vector.empty
     val n = bytes.length
-    def zz(v: Long): Long = (v >>> 1) ^ -(v & 1L)
     try {
       // footer stripe rows, in order (parse only kept the extrema)
       val fStart = n - 1 - m.psLen - m.footerLen.toInt
-      val f = new TfRecordOps.ProtoReader(bytes, fStart, fStart + m.footerLen.toInt)
+      val f = new ByteCursor(bytes, fStart, fStart + m.footerLen.toInt)
       val rows = Vector.newBuilder[Long]
-      while (f.pos < f.end) {
+      while (f.hasMore) {
         val tag = f.varint()
         ((tag >>> 3).toInt, (tag & 7).toInt) match {
           case (3, 2) =>
-            val (off, len) = f.lenDelimited()
-            val s = new TfRecordOps.ProtoReader(bytes, off, off + len)
+            val s = lenDelimited(f)
             var r = 0L
-            while (s.pos < s.end) {
+            while (s.hasMore) {
               val st = s.varint()
               if ((st >>> 3).toInt == 5 && (st & 7).toInt == 0) r = s.varint()
-              else s.skipValue((st & 7).toInt)
+              else skipValue(s, (st & 7).toInt)
             }
             rows += r
-          case (_, w) => f.skipValue(w)
+          case (_, w) => skipValue(f, w)
         }
       }
       // metadata section sits immediately before the footer
       if (m.metadataLen > fStart.toLong - 3) return Vector.empty
       val mdStart = fStart - m.metadataLen.toInt
-      val md = new TfRecordOps.ProtoReader(bytes, mdStart, fStart)
+      val md = new ByteCursor(bytes, mdStart, fStart)
       val stats = Vector.newBuilder[(Int, Long, Long)] // (has, min, max)
-      while (md.pos < md.end) {
+      while (md.hasMore) {
         val tag = md.varint()
         ((tag >>> 3).toInt, (tag & 7).toInt) match {
           case (1, 2) => // StripeStatistics
-            val (off, len) = md.lenDelimited()
-            val ss = new TfRecordOps.ProtoReader(bytes, off, off + len)
+            val ss = lenDelimited(md)
             var ci = 0
             var has = 0; var mn = 0L; var mx = 0L
-            while (ss.pos < ss.end) {
+            while (ss.hasMore) {
               val ct = ss.varint()
               ((ct >>> 3).toInt, (ct & 7).toInt) match {
                 case (1, 2) => // ColumnStatistics
-                  val (co, cl) = ss.lenDelimited()
+                  val c = lenDelimited(ss)
                   if (ci == colIdx) {
-                    val c = new TfRecordOps.ProtoReader(bytes, co, co + cl)
-                    while (c.pos < c.end) {
+                    while (c.hasMore) {
                       val t2 = c.varint()
                       ((t2 >>> 3).toInt, (t2 & 7).toInt) match {
                         case (2, 2) =>
-                          val (io, il) = c.lenDelimited()
-                          val i = new TfRecordOps.ProtoReader(bytes, io, io + il)
+                          val i = lenDelimited(c)
                           var sawMin = false; var sawMax = false
-                          while (i.pos < i.end) {
+                          while (i.hasMore) {
                             val it = i.varint()
                             ((it >>> 3).toInt, (it & 7).toInt) match {
-                              case (1, 0) => mn = zz(i.varint()); sawMin = true
-                              case (2, 0) => mx = zz(i.varint()); sawMax = true
-                              case (_, w) => i.skipValue(w)
+                              case (1, 0) => mn = i.zigzag(); sawMin = true
+                              case (2, 0) => mx = i.zigzag(); sawMax = true
+                              case (_, w) => skipValue(i, w)
                             }
                           }
                           if (sawMin && sawMax) has = 1
-                        case (_, w) => c.skipValue(w)
+                        case (_, w) => skipValue(c, w)
                       }
                     }
                   }
                   ci += 1
-                case (_, w) => ss.skipValue(w)
+                case (_, w) => skipValue(ss, w)
               }
             }
             stats += ((has, mn, mx))
-          case (_, w) => md.skipValue(w)
+          case (_, w) => skipValue(md, w)
         }
       }
       val rs = rows.result(); val st = stats.result()
       if (rs.length != st.length) Vector.empty
       else rs.zip(st).map { case (r, (h, mn, mx)) => (r, h, mn, mx) }
     } catch {
-      case TfRecordOps.ProtoMalformed => Vector.empty
+      case Malformed => Vector.empty
       case _: ArrayIndexOutOfBoundsException => Vector.empty
     }
   }

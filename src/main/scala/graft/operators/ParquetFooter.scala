@@ -65,36 +65,10 @@ object ParquetFooter {
       footerLen: Long,      // declared thrift length (not oracle-gated)
       dataBytes: Long)      // bytes between the magics minus the footer
 
-  private[operators] object Malformed extends Exception with scala.util.control.NoStackTrace
-
   private[operators] val MaxDepth = 24
 
-  private[operators] final class Reader(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) throw Malformed
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    /** ULEB128, ≤10 bytes (64-bit range). */
-    def varint(): Long = {
-      var shift = 0; var out = 0L; var i = 0
-      while (i < 10) {
-        val v = u8()
-        out |= (v & 0x7fL) << shift
-        if ((v & 0x80) == 0) return out
-        shift += 7; i += 1
-      }
-      throw Malformed
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
-    def skip(n: Long): Unit = {
-      // subtraction form: n may be a 64-bit attacker value
-      if (n < 0 || n > end - pos) throw Malformed
-      pos += n.toInt
-    }
-  }
-
   /** Skip one value of `tpe` without interpreting it. */
-  private[operators] def skipValue(r: Reader, tpe: Int, depth: Int): Unit = {
+  private[operators] def skipValue(r: ByteCursor, tpe: Int, depth: Int): Unit = {
     if (depth > MaxDepth) throw Malformed
     tpe match {
       case 1 | 2 =>            // bool as a list element: one byte
@@ -125,7 +99,7 @@ object ParquetFooter {
     }
   }
 
-  private[operators] def listHeader(r: Reader): (Long, Int) = {
+  private[operators] def listHeader(r: ByteCursor): (Long, Int) = {
     val h = r.u8()
     val elemType = h & 0xF
     val short = (h >> 4) & 0xF
@@ -139,7 +113,7 @@ object ParquetFooter {
     * consumed the value (bool fields carry their value in `tpe` and
     * never need consuming).
     */
-  private[operators] def walkStruct(r: Reader, depth: Int)(onField: (Int, Int) => Boolean): Unit = {
+  private[operators] def walkStruct(r: ByteCursor, depth: Int)(onField: (Int, Int) => Boolean): Unit = {
     if (depth > MaxDepth) throw Malformed
     var fieldId = 0
     var continue = true
@@ -167,16 +141,15 @@ object ParquetFooter {
     * subtraction-form fit check. None = not a parquet file / cut
     * footer — the callers' fail-closed zero.
     */
-  private[operators] def footerReader(bytes: Array[Byte]): Option[(Reader, Long)] = {
+  private[operators] def footerReader(bytes: Array[Byte]): Option[(ByteCursor, Long)] = {
     val n = bytes.length
     def magicAt(p: Int): Boolean =
       bytes(p) == 'P' && bytes(p + 1) == 'A' && bytes(p + 2) == 'R' && bytes(p + 3) == '1'
     if (n < 12 || !magicAt(0) || !magicAt(n - 4)) return None
-    val footerLen = (bytes(n - 8) & 0xffL) | ((bytes(n - 7) & 0xffL) << 8) |
-      ((bytes(n - 6) & 0xffL) << 16) | ((bytes(n - 5) & 0xffL) << 24)
+    val footerLen = Bytes.le32u(bytes, n - 8)
     // footer must fit between the magics (subtraction form)
     if (footerLen > n.toLong - 12) None
-    else Some((new Reader(bytes, n - 8 - footerLen.toInt, n - 8), footerLen))
+    else Some((new ByteCursor(bytes, n - 8 - footerLen.toInt, n - 8), footerLen))
   }
 
   def parse(bytes: Array[Byte]): FooterMeta = {
@@ -281,11 +254,6 @@ object ParquetFooter {
       case Some((rf, _)) => rf
       case None => return Vector.empty
     }
-    def le64(off: Int): Long = {
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (bytes(off + j) & 0xffL); j -= 1 }
-      v
-    }
     try {
       val out = Vector.newBuilder[(Long, Int, Long, Long, Long)]
       walkStruct(r, 0) { (id, tpe) =>
@@ -313,15 +281,13 @@ object ParquetFooter {
                                 case (3, 6) => nulls = r.zigzag(); true
                                 case (5, 8) => // max_value
                                   val len = r.varint()
-                                  if (len == 8 && len <= r.end - r.pos) {
-                                    maxV = le64(r.pos); r.pos += 8; sawMax = true
-                                  } else r.skip(len)
+                                  if (len == 8) { maxV = r.le64(); sawMax = true }
+                                  else r.skip(len)
                                   true
                                 case (6, 8) => // min_value
                                   val len = r.varint()
-                                  if (len == 8 && len <= r.end - r.pos) {
-                                    minV = le64(r.pos); r.pos += 8; sawMin = true
-                                  } else r.skip(len)
+                                  if (len == 8) { minV = r.le64(); sawMin = true }
+                                  else r.skip(len)
                                   true
                                 case _ => false
                               }
@@ -356,17 +322,8 @@ object ParquetFooter {
   // ------------------------------------------------------------------
   // Thrift compact writer + synthetic footer (tests and the q377 oracle)
 
-  final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def bytes: Array[Byte] = buf.toByteArray
-    def u8(v: Int): Writer = { buf.write(v & 0xff); this }
-    def varint(v0: Long): Writer = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { buf.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      buf.write(v.toInt); this
-    }
-    def zigzag(v: Long): Writer = varint((v << 1) ^ (v >> 63))
-    def raw(b: Array[Byte]): Writer = { buf.write(b); this }
+  final class Writer extends ByteSink {
+    def bytes: Array[Byte] = toByteArray
     /** Field header with delta encoding (callers pass ascending ids). */
     def field(lastId: Int, id: Int, tpe: Int): Writer = {
       val delta = id - lastId
@@ -567,7 +524,7 @@ object ParquetFooter {
   def parseOffsetIndex(bytes: Array[Byte], off: Long, len: Long): Option[Vector[Long]] = {
     if (off < 0 || len <= 0 || off > bytes.length.toLong - len) return None
     try {
-      val r = new Reader(bytes, off.toInt, (off + len).toInt)
+      val r = new ByteCursor(bytes, off.toInt, (off + len).toInt)
       var rows: Vector[Long] = null
       walkStruct(r, 0) { (id, tpe) =>
         if (id == 1 && tpe == 9) {
@@ -642,24 +599,17 @@ object ParquetFooter {
   def parseColumnIndex(bytes: Array[Byte], off: Long, len: Long): Option[Vector[PageEntry]] = {
     if (off < 0 || len <= 0 || off > bytes.length.toLong - len) return None
     try {
-      val r = new Reader(bytes, off.toInt, (off + len).toInt)
+      val r = new ByteCursor(bytes, off.toInt, (off + len).toInt)
       var nulls: Vector[Boolean] = null
       var mins: Vector[Option[Long]] = null
       var maxs: Vector[Option[Long]] = null
       var counts: Vector[Long] = null
-      def le64(p: Int): Long = {
-        var v = 0L; var j = 7
-        while (j >= 0) { v = (v << 8) | (bytes(p + j) & 0xffL); j -= 1 }
-        v
-      }
       def binVals(): Vector[Option[Long]] = {
         val (size, elemType) = listHeader(r)
         if (elemType != 8) throw Malformed
         (0L until size).map { _ =>
           val n = r.varint()
-          if (n == 8 && n <= r.end - r.pos) {
-            val v = le64(r.pos); r.pos += 8; Some(v)
-          } else { r.skip(n); None }
+          if (n == 8) Some(r.le64()) else { r.skip(n); None }
         }.toVector
       }
       walkStruct(r, 0) { (id, tpe) =>

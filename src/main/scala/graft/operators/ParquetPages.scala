@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import ParquetFooter.{Reader, Malformed, walkStruct, listHeader, footerReader, Writer}
+import ParquetFooter.{walkStruct, listHeader, footerReader, Writer}
 
 /** Parquet DATA-PAGE decode — the layer BELOW the page index. q377
   * reads footers, q380 prunes row groups, q413/q414 prune and price
@@ -195,7 +195,7 @@ object ParquetPages {
     val out = new Array[Int](n)
     val byteW = (bitWidth + 7) / 8
     var produced = 0
-    val r = new Reader(b, off, end)
+    val r = new ByteCursor(b, off, end)
     while (produced < n) {
       val header = r.varint()
       if ((header & 1L) == 1L) { // bit-packed: groups of 8
@@ -249,19 +249,17 @@ object ParquetPages {
     */
   private[operators] def deltaBinaryPacked(buf: Array[Byte], off: Int,
       n: Int, width: Int): (Array[Long], Int) = {
-    val r = new Reader(buf, off, buf.length)
-    def varint(): Long = r.varint()
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
-    val blockSize = varint()
-    val miniPerBlock = varint()
-    val total = varint()
+    val r = new ByteCursor(buf, off, buf.length)
+    val blockSize = r.varint()
+    val miniPerBlock = r.varint()
+    val total = r.varint()
     if (blockSize <= 0 || blockSize % 128 != 0 || miniPerBlock <= 0 ||
       blockSize > MaxPageBytes || miniPerBlock > blockSize ||
       blockSize % miniPerBlock != 0) throw Malformed
     val perMini = (blockSize / miniPerBlock).toInt
     if (perMini % 8 != 0) throw Malformed
     if (total != n.toLong) throw Malformed // the page header already claims n
-    val first = zigzag() // written unconditionally, even for 0 values
+    val first = r.zigzag() // written unconditionally, even for 0 values
     if (n == 0) return (Array.emptyLongArray, r.pos)
     val out = new Array[Long](n)
     def clamp(v: Long): Long = if (width == 4) v.toInt.toLong else v
@@ -269,7 +267,7 @@ object ParquetPages {
     var produced = 1
     var prev = out(0)
     while (produced < n) {
-      val minDelta = zigzag()
+      val minDelta = r.zigzag()
       val widths = Array.fill(miniPerBlock.toInt)(r.u8())
       if (widths.exists(w0 => w0 > 64)) throw Malformed
       var m = 0
@@ -306,21 +304,15 @@ object ParquetPages {
     * 128, 4 miniblocks of 32 — parquet-mr's defaults.
     */
   def encodeDeltaBinaryPacked(values: Seq[Long], width: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
-    }
-    def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
-    varint(128L); varint(4L); varint(values.size.toLong)
-    if (values.isEmpty) { varint(0L); return out.toByteArray }
-    zigzag(values.head)
+    val out = new ByteSink()
+    out.varint(128L); out.varint(4L); out.varint(values.size.toLong)
+    if (values.isEmpty) { out.varint(0L); return out.toByteArray }
+    out.zigzag(values.head)
     var prev = values.head
     values.drop(1).grouped(128).foreach { block =>
       val deltas = block.map { v => val d = v - prev; prev = v; d }
       val minD = deltas.min
-      zigzag(minD)
+      out.zigzag(minD)
       val rel = deltas.map(_ - minD)
       val minis = rel.grouped(32).toSeq.padTo(4, Seq.empty[Long])
       val widths = minis.map(g =>
@@ -393,7 +385,7 @@ object ParquetPages {
       while (consumed < cm.numValues && !gated) {
         if (nPages + (if (dict == null) 0 else 1) >= MaxPages) throw Malformed
         // ---- page header (thrift compact, same walker as the footer)
-        val r = new Reader(bytes, pos, chunkEnd)
+        val r = new ByteCursor(bytes, pos, chunkEnd)
         var pType = -1L; var uncomp = -1L; var comp = -1L
         var dNum = -1L; var dEnc = -1L; var dDefEnc = -1L
         var dictNum = -1L; var dictEnc = -1L
@@ -526,8 +518,7 @@ object ParquetPages {
               if (dDefEnc != EncRle) { gated = true } // legacy BIT_PACKED
               else {
                 if (4 > buf.length - q) throw Malformed
-                val len = (buf(q) & 0xffL) | ((buf(q + 1) & 0xffL) << 8) |
-                  ((buf(q + 2) & 0xffL) << 16) | ((buf(q + 3) & 0xffL) << 24)
+                val len = Bytes.le32u(buf, q)
                 q += 4
                 if (len > buf.length - q) throw Malformed
                 val (defs, _) = rleHybrid(buf, q, q + len.toInt, 1, dNum.toInt)
@@ -705,8 +696,7 @@ object ParquetPages {
         var i = 0
         while (i < n) {
           if (4 > buf.length - q) throw Malformed
-          val len = (buf(q) & 0xffL) | ((buf(q + 1) & 0xffL) << 8) |
-            ((buf(q + 2) & 0xffL) << 16) | ((buf(q + 3) & 0xffL) << 24)
+          val len = Bytes.le32u(buf, q)
           q += 4
           if (len > buf.length - q) throw Malformed
           out(i) = java.util.Arrays.copyOfRange(buf, q, q + len.toInt)
@@ -779,7 +769,7 @@ object ParquetPages {
       }
       while (consumed < cm.numValues && !gated) {
         if (nPages + (if (dict == null) 0 else 1) >= MaxPages) throw Malformed
-        val r = new Reader(bytes, pos, chunkEnd)
+        val r = new ByteCursor(bytes, pos, chunkEnd)
         var pType = -1L; var uncomp = -1L; var comp = -1L
         var dNum = -1L; var dEnc = -1L; var dDefEnc = -1L
         var dictNum = -1L; var dictEnc = -1L
@@ -862,8 +852,7 @@ object ParquetPages {
               if (dDefEnc != EncRle) { gated = true }
               else {
                 if (4 > buf.length - q) throw Malformed
-                val len = (buf(q) & 0xffL) | ((buf(q + 1) & 0xffL) << 8) |
-                  ((buf(q + 2) & 0xffL) << 16) | ((buf(q + 3) & 0xffL) << 24)
+                val len = Bytes.le32u(buf, q)
                 q += 4
                 if (len > buf.length - q) throw Malformed
                 val (defs, _) = rleHybrid(buf, q, q + len.toInt, 1, dNum.toInt)
@@ -990,11 +979,8 @@ object ParquetPages {
     def compress(raw: Array[Byte]): Array[Byte] =
       if (codec == CodecSnappy) snappyLiteral(raw) else raw
     def plainBlob(vs: Seq[Array[Byte]]): Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      vs.foreach { v =>
-        (0 until 4).foreach(j => b.write((v.length >> (8 * j)) & 0xff))
-        b.write(v)
-      }
+      val b = new ByteSink()
+      vs.foreach(v => b.le32(v.length).raw(v))
       b.toByteArray
     }
     val metas = rowGroups.map { pages =>
@@ -1144,20 +1130,15 @@ object ParquetPages {
     * parquet-mr emits.
     */
   def encodeRleHybrid(values: Seq[Int], bitWidth: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
-    }
+    val out = new ByteSink()
     val byteW = (bitWidth + 7) / 8
     def rleRun(v: Int, count: Int): Unit = {
-      varint(count.toLong << 1)
+      out.varint(count.toLong << 1)
       (0 until byteW).foreach(j => out.write((v >> (8 * j)) & 0xff))
     }
     def packRun(vs: Seq[Int]): Unit = {
       val groups = (vs.size + 7) / 8
-      varint((groups.toLong << 1) | 1)
+      out.varint((groups.toLong << 1) | 1)
       val buf = new Array[Byte](groups * bitWidth)
       vs.zipWithIndex.foreach { case (v, i) =>
         var bit = 0
@@ -1233,15 +1214,13 @@ object ParquetPages {
       val dataOff = out.size().toLong
       pages.foreach { page =>
         val nonNull = page.flatten
-        val valsBody = new java.io.ByteArrayOutputStream()
+        val valsBody = new ByteSink()
         if (useDict) {
           val bw = math.max(1,
             32 - Integer.numberOfLeadingZeros(math.max(1, dict.length - 1)))
           valsBody.write(bw)
           valsBody.write(encodeRleHybrid(nonNull.map(dict.indexOf(_)), bw))
-        } else nonNull.foreach { v =>
-          (0 until 8).foreach(j => valsBody.write(((v >> (8 * j)) & 0xff).toInt))
-        }
+        } else nonNull.foreach(valsBody.le64)
         val defs = encodeRleHybrid(page.map(v => if (v.isDefined) 1 else 0), 1)
         val enc = if (useDict) EncRleDict.toLong else EncPlain.toLong
         if (pageV2) {

@@ -58,10 +58,7 @@ object SafeTensorsOps {
     }
     val header = "{" + entries.mkString(",") + "}"
     val hb = header.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val bos = new java.io.ByteArrayOutputStream()
-    var i = 0
-    while (i < 8) { bos.write(((hb.length.toLong >>> (8 * i)) & 0xff).toInt); i += 1 }
-    bos.write(hb)
+    val bos = new ByteSink().le64(hb.length.toLong).raw(hb)
     val dataLen = (off - dropData).toInt
     var j = 0
     while (j < dataLen) { bos.write((j * 37 + 11) % 256); j += 1 }
@@ -71,9 +68,7 @@ object SafeTensorsOps {
   def parse(bytes: Array[Byte]): StMeta = {
     val n = bytes.length.toLong
     if (n < 8) return StMeta(0, 0, 0L, 0L, 0L, 0, 0, 0, n)
-    var hlen = 0L
-    var i = 7
-    while (i >= 0) { hlen = (hlen << 8) | (bytes(i.toInt) & 0xffL); i -= 1 }
+    val hlen = Bytes.le64(bytes, 0)
     // `hlen > n - 8`, NOT `8 + hlen > n`: a length near Long.MaxValue
     // would wrap the addition negative and slip past the check
     if (hlen < 2 || hlen > n - 8) return StMeta(0, 0, 0L, 0L, 0L, 0, 0, 0, n - 8)

@@ -68,13 +68,8 @@ object SnappyFrameOps {
 
   def parse(bytes: Array[Byte]): SnappyMeta = {
     val n = bytes.length
-    def u24le(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) | ((bytes(p + 2) & 0xffL) << 16)
-    def u32le(p: Int): Int =
-      (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) |
-        ((bytes(p + 2) & 0xff) << 16) | ((bytes(p + 3) & 0xff) << 24)
     // stream identifier: ff 06 00 00 "sNaPpY"
-    if (n < 10 || (bytes(0) & 0xff) != 0xFF || u24le(1) != 6L ||
+    if (n < 10 || (bytes(0) & 0xff) != 0xFF || Bytes.le24(bytes, 1).toLong != 6L ||
         new String(bytes, 4, 6, "US-ASCII") != "sNaPpY")
       return Invalid.copy(trailingBytes = n.toLong)
     var pos = 10L
@@ -88,7 +83,7 @@ object SnappyFrameOps {
       if (pos + 4 > n) { halted = true }
       else {
         val t = bytes(pos.toInt) & 0xff
-        val len = u24le(pos.toInt + 1)
+        val len = Bytes.le24(bytes, pos.toInt + 1).toLong
         // payload must fit (subtraction form; len is attacker-controlled)
         if (len > n - pos - 4) halted = true
         else t match {
@@ -103,7 +98,7 @@ object SnappyFrameOps {
               if (r.ok == 1) {
                 rawOk += 1; rawBytes += r.decoded
                 nLit += r.nLiterals; nCopy += r.nCopies
-                val crc = u32le(pos.toInt + 4)
+                val crc = Bytes.le32(bytes, pos.toInt + 4)
                 val want = TfRecordOps.mask(
                   TfRecordOps.crc32c(r.out, 0, r.out.length))
                 if (crc == want) rawCrcOk += 1 else rawCrcBad += 1
@@ -113,7 +108,7 @@ object SnappyFrameOps {
           case 0x01 => // uncompressed data: CRC verifies right here
             if (len < 4 || len > MaxUncompressed) halted = true
             else {
-              val crc = u32le(pos.toInt + 4)
+              val crc = Bytes.le32(bytes, pos.toInt + 4)
               val want = TfRecordOps.mask(
                 TfRecordOps.crc32c(bytes, pos.toInt + 8, (len - 4).toInt))
               if (crc == want) crcOk += 1 else crcBad += 1
@@ -147,9 +142,7 @@ object SnappyFrameOps {
   def identifierChunk: Array[Byte] = chunk(0xFF, "sNaPpY".getBytes("US-ASCII"))
 
   private def chunk(t: Int, payload: Array[Byte]): Array[Byte] =
-    Array(t.toByte, (payload.length & 0xff).toByte,
-      ((payload.length >> 8) & 0xff).toByte,
-      ((payload.length >> 16) & 0xff).toByte) ++ payload
+    new ByteSink(4 + payload.length).u8(t).le24(payload.length).raw(payload).toByteArray
 
   /** Stream of `blocks` uncompressed-data chunks (deterministic bodies
     * of the given lengths, valid CRCs), `compressed` opaque chunks of
@@ -162,8 +155,7 @@ object SnappyFrameOps {
     uncLens.foreach { len =>
       val body = Array.tabulate(len)(i => ((i * 19 + 3) & 0xff).toByte)
       val crc = TfRecordOps.mask(TfRecordOps.crc32c(body, 0, body.length))
-      out.write(chunk(0x01, Array((crc & 0xff).toByte, ((crc >> 8) & 0xff).toByte,
-        ((crc >> 16) & 0xff).toByte, ((crc >> 24) & 0xff).toByte) ++ body))
+      out.write(chunk(0x01, new ByteSink(4 + len).le32(crc).raw(body).toByteArray))
     }
     compLens.foreach { len =>
       // fake CRC word + opaque bitstream bytes
@@ -206,8 +198,7 @@ object SnappyFrameOps {
     val body = SnappyRaw.decode(stream0, 0, stream0.length).out
     val crc0 = TfRecordOps.mask(TfRecordOps.crc32c(body, 0, body.length))
     val crc = if (flipCrc) crc0 ^ 0x5A else crc0
-    chunk(0x00, Array((crc & 0xff).toByte, ((crc >> 8) & 0xff).toByte,
-      ((crc >> 16) & 0xff).toByte, ((crc >> 24) & 0xff).toByte) ++ stream)
+    chunk(0x00, new ByteSink(4 + stream.length).le32(crc).raw(stream).toByteArray)
   }
 
   /** Raw-decode census over (id, framed bytes) — the q382 frame walk's

@@ -105,13 +105,12 @@ object SnappyRaw {
           if (!copy(offset, len)) return fail(declared, o, nLit, nCopy)
         case 2 =>
           if (p + 2 > end) return fail(declared, o, nLit, nCopy)
-          val offset = (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8)
+          val offset = Bytes.le16(bytes, p).toLong
           p += 2
           if (!copy(offset, (tag >> 2) + 1)) return fail(declared, o, nLit, nCopy)
         case _ =>
           if (p + 4 > end) return fail(declared, o, nLit, nCopy)
-          val offset = (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-            ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
+          val offset = Bytes.le32u(bytes, p)
           p += 4
           if (!copy(offset, (tag >> 2) + 1)) return fail(declared, o, nLit, nCopy)
       }
@@ -139,10 +138,7 @@ object SnappyRaw {
       case Lit(b) => b.length
       case Copy(_, l) => l
     }.sum
-    val out = new java.io.ByteArrayOutputStream()
-    var v = total.toLong
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
+    val out = new ByteSink().varint(total.toLong)
     ops.foreach {
       case Lit(b) =>
         // (0-1)<<2 would stamp the 4-byte-length tag form — a silently
@@ -153,7 +149,7 @@ object SnappyRaw {
         else {
           require(b.length <= 65536, "encoder: literal over 64 KiB")
           out.write(61 << 2)
-          out.write((b.length - 1) & 0xff); out.write(((b.length - 1) >> 8) & 0xff)
+          out.le16(b.length - 1)
         }
         out.write(b)
       case Copy(offset, len) =>
@@ -164,7 +160,7 @@ object SnappyRaw {
           out.write(offset & 0xff)
         } else {
           out.write(((len - 1) << 2) | 2)
-          out.write(offset & 0xff); out.write((offset >> 8) & 0xff)
+          out.le16(offset)
         }
     }
     out.toByteArray

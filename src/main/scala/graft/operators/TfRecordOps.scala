@@ -69,35 +69,14 @@ object TfRecordOps {
   def mask(crc: Int): Int =
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8.toInt)
 
-  private def putIntLE(bos: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    bos.write(v & 0xff); bos.write((v >>> 8) & 0xff)
-    bos.write((v >>> 16) & 0xff); bos.write((v >>> 24) & 0xff)
-  }
-
-  private def putLongLE(bos: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { bos.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
-
   /** Deterministic shard from a payload-length plan; filler bytes are
     * a closed function of (record index, offset) so corruption tests
     * can flip a known byte.
     */
-  def encodeSynthetic(payloadLens: Seq[Int]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    payloadLens.zipWithIndex.foreach { case (len, j) =>
-      val payload = Array.tabulate[Byte](len)(i => ((i * 29 + j * 13) % 256).toByte)
-      val lenBytes = {
-        val b = new java.io.ByteArrayOutputStream(); putLongLE(b, len.toLong)
-        b.toByteArray
-      }
-      bos.write(lenBytes)
-      putIntLE(bos, mask(crc32c(lenBytes, 0, 8)))
-      bos.write(payload)
-      putIntLE(bos, mask(crc32c(payload, 0, len)))
-    }
-    bos.toByteArray
-  }
+  def encodeSynthetic(payloadLens: Seq[Int]): Array[Byte] =
+    encodeShard(payloadLens.zipWithIndex.map { case (len, j) =>
+      Array.tabulate[Byte](len)(i => ((i * 29 + j * 13) % 256).toByte)
+    })
 
   /** Shared CRC-verified record walk: `onRecord(payloadOff, len)` per
     * accepted record, returns the stop position. `parse` and the
@@ -108,27 +87,19 @@ object TfRecordOps {
     */
   def walkRecords(bytes: Array[Byte])(onRecord: (Int, Int) => Unit): Int = {
     val n = bytes.length
-    def readIntLE(i: Int): Int =
-      (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8) |
-        ((bytes(i + 2) & 0xff) << 16) | ((bytes(i + 3) & 0xff) << 24)
-    def readLongLE(i: Int): Long = {
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (bytes(i + j) & 0xffL); j -= 1 }
-      v
-    }
     var pos = 0
     var ok = true
     while (ok && pos < n) {
       if (pos + 12 > n) ok = false
       else {
-        val len = readLongLE(pos)
-        val lenCrcOk = readIntLE(pos + 8) == mask(crc32c(bytes, pos, 8))
+        val len = Bytes.le64(bytes, pos)
+        val lenCrcOk = Bytes.le32(bytes, pos + 8) == mask(crc32c(bytes, pos, 8))
         // `len > n - pos - 16`, NOT `pos + 12 + len + 4 > n`: a crafted
         // length near Long.MaxValue (its CRC is trivially computable)
         // would wrap the addition negative, slip past the check, and
         // index at the length's low 32 bits
         if (!lenCrcOk || len < 0 || len > n - pos - 16) ok = false
-        else if (readIntLE(pos + 12 + len.toInt) !=
+        else if (Bytes.le32(bytes, pos + 12 + len.toInt) !=
                  mask(crc32c(bytes, pos + 12, len.toInt))) ok = false
         else {
           onRecord(pos + 12, len.toInt)
@@ -187,125 +158,96 @@ object TfRecordOps {
       floatValues: Long,
       int64Values: Long)
 
-  private[operators] object ProtoMalformed extends Exception with scala.util.control.NoStackTrace
+  /** A length-delimited proto field as its own cursor. */
+  private[operators] def lenDelimited(r: ByteCursor): ByteCursor = r.slice(r.varint())
 
-  private[operators] final class ProtoReader(val b: Array[Byte], var pos: Int, val end: Int) {
-    def varint(): Long = {
-      var shift = 0; var out = 0L; var i = 0
-      while (i < 10) {
-        if (pos >= end) throw ProtoMalformed
-        val v = b(pos) & 0xff; pos += 1
-        out |= (v & 0x7fL) << shift
-        if ((v & 0x80) == 0) return out
-        shift += 7; i += 1
-      }
-      throw ProtoMalformed
-    }
-    def lenDelimited(): (Int, Int) = {
-      val len = varint()
-      if (len < 0 || len > end - pos) throw ProtoMalformed
-      val off = pos; pos += len.toInt; (off, len.toInt)
-    }
-    def skipValue(wire: Int): Unit = wire match {
-      case 0 => varint(); ()
-      case 1 => if (end - pos < 8) throw ProtoMalformed else pos += 8
-      case 2 => lenDelimited(); ()
-      case 5 => if (end - pos < 4) throw ProtoMalformed else pos += 4
-      case _ => throw ProtoMalformed // groups (3/4) and invalid wiretypes
-    }
+  /** Skip one proto value of wire type `wire`; groups (3/4) and invalid
+    * wire types are malformed.
+    */
+  private[operators] def skipValue(r: ByteCursor, wire: Int): Unit = wire match {
+    case 0 => r.varint(); ()
+    case 1 => r.skip(8)
+    case 2 => r.skip(r.varint())
+    case 5 => r.skip(4)
+    case _ => throw Malformed
   }
 
-  /** Count the varints packed into [off, off+len); a varint overrunning
-    * the region is malformed.
-    */
-  private def countPackedVarints(b: Array[Byte], off: Int, len: Int): Long = {
-    var pos = off; val end = off + len
+  /** Count the varints packed into `c`; one overrunning it is malformed. */
+  private def countPackedVarints(c: ByteCursor): Long = {
     var n = 0L
-    while (pos < end) {
-      var i = 0
-      var done = false
-      while (!done) {
-        if (pos >= end || i >= 10) throw ProtoMalformed
-        done = (b(pos) & 0x80) == 0
-        pos += 1; i += 1
-      }
-      n += 1
-    }
+    while (c.hasMore) { c.varint(); n += 1 }
     n
   }
 
-  /** Parse one record payload as tf.Example; throws ProtoMalformed. */
+  /** Parse one record payload as tf.Example; throws Malformed. */
   private def parseExample(b: Array[Byte], off: Int, len: Int,
       acc: Array[Long]): Unit = {
-    val r = new ProtoReader(b, off, off + len)
+    val r = new ByteCursor(b, off, off + len)
     var nFeat = 0L; var nBytes = 0L; var nFloat = 0L; var nInt = 0L
     var bVals = 0L; var bLen = 0L; var fVals = 0L; var iVals = 0L
-    while (r.pos < r.end) {
+    while (r.hasMore) {
       val tag = r.varint()
       val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
       if (field == 1 && wire == 2) { // Example.features
-        val (fOff, fLen) = r.lenDelimited()
-        val fr = new ProtoReader(b, fOff, fOff + fLen)
-        while (fr.pos < fr.end) {
+        val fr = lenDelimited(r)
+        while (fr.hasMore) {
           val ftag = fr.varint()
           if ((ftag >>> 3).toInt == 1 && (ftag & 7).toInt == 2) { // map entry
             nFeat += 1
-            val (eOff, eLen) = fr.lenDelimited()
-            val er = new ProtoReader(b, eOff, eOff + eLen)
-            while (er.pos < er.end) {
+            val er = lenDelimited(fr)
+            while (er.hasMore) {
               val etag = er.varint()
               if ((etag >>> 3).toInt == 2 && (etag & 7).toInt == 2) { // Feature
-                val (vOff, vLen) = er.lenDelimited()
-                val vr = new ProtoReader(b, vOff, vOff + vLen)
-                while (vr.pos < vr.end) {
+                val vr = lenDelimited(er)
+                while (vr.hasMore) {
                   val vtag = vr.varint()
                   val vf = (vtag >>> 3).toInt; val vw = (vtag & 7).toInt
                   if (vf >= 1 && vf <= 3 && vw == 2) {
-                    val (lOff, lLen) = vr.lenDelimited()
-                    val lr = new ProtoReader(b, lOff, lOff + lLen)
+                    val lr = lenDelimited(vr)
                     vf match {
                       case 1 => // BytesList: repeated bytes value = 1
                         nBytes += 1
-                        while (lr.pos < lr.end) {
+                        while (lr.hasMore) {
                           val ltag = lr.varint()
                           if ((ltag >>> 3).toInt == 1 && (ltag & 7).toInt == 2) {
-                            val (_, sLen) = lr.lenDelimited()
+                            val sLen = lr.varint()
+                            lr.skip(sLen)
                             bVals += 1; bLen += sLen
-                          } else lr.skipValue((ltag & 7).toInt)
+                          } else skipValue(lr, (ltag & 7).toInt)
                         }
                       case 2 => // FloatList: packed (LEN) or repeated fixed32
                         nFloat += 1
-                        while (lr.pos < lr.end) {
+                        while (lr.hasMore) {
                           val ltag = lr.varint()
                           val lw = (ltag & 7).toInt
                           if ((ltag >>> 3).toInt == 1 && lw == 2) {
-                            val (_, pLen) = lr.lenDelimited()
-                            if (pLen % 4 != 0) throw ProtoMalformed
+                            val pLen = lr.varint()
+                            lr.skip(pLen)
+                            if (pLen % 4 != 0) throw Malformed
                             fVals += pLen / 4
                           } else if ((ltag >>> 3).toInt == 1 && lw == 5) {
-                            lr.skipValue(5); fVals += 1
-                          } else lr.skipValue(lw)
+                            skipValue(lr, 5); fVals += 1
+                          } else skipValue(lr, lw)
                         }
                       case _ => // Int64List: packed varints or repeated varint
                         nInt += 1
-                        while (lr.pos < lr.end) {
+                        while (lr.hasMore) {
                           val ltag = lr.varint()
                           val lw = (ltag & 7).toInt
                           if ((ltag >>> 3).toInt == 1 && lw == 2) {
-                            val (pOff, pLen) = lr.lenDelimited()
-                            iVals += countPackedVarints(b, pOff, pLen)
+                            iVals += countPackedVarints(lenDelimited(lr))
                           } else if ((ltag >>> 3).toInt == 1 && lw == 0) {
                             lr.varint(); iVals += 1
-                          } else lr.skipValue(lw)
+                          } else skipValue(lr, lw)
                         }
                     }
-                  } else vr.skipValue(vw)
+                  } else skipValue(vr, vw)
                 }
-              } else er.skipValue((etag & 7).toInt)
+              } else skipValue(er, (etag & 7).toInt)
             }
-          } else fr.skipValue((ftag & 7).toInt)
+          } else skipValue(fr, (ftag & 7).toInt)
         }
-      } else r.skipValue(wire)
+      } else skipValue(r, wire)
     }
     acc(0) += nFeat; acc(1) += nBytes; acc(2) += nFloat; acc(3) += nInt
     acc(4) += bVals; acc(5) += bLen; acc(6) += fVals; acc(7) += iVals
@@ -326,7 +268,7 @@ object TfRecordOps {
         parseExample(bytes, off, len, acc)
         nOk += 1
       } catch {
-        case ProtoMalformed =>
+        case Malformed =>
           System.arraycopy(snapshot, 0, acc, 0, 8)
           nBad += 1
         case _: ArrayIndexOutOfBoundsException =>
@@ -340,17 +282,10 @@ object TfRecordOps {
 
   // --- tf.Example builder (tests + the q379 oracle's replay) ---
 
-  private[operators] def pbVarint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-  private[operators] def pbLen(out: java.io.ByteArrayOutputStream, field: Int,
-      body: Array[Byte]): Unit = {
-    pbVarint(out, (field.toLong << 3) | 2)
-    pbVarint(out, body.length.toLong)
-    out.write(body)
-  }
+  private[operators] def pbTag(out: ByteSink, field: Int, wire: Int): ByteSink =
+    out.varint((field.toLong << 3) | wire)
+  private[operators] def pbLen(out: ByteSink, field: Int, body: Array[Byte]): Unit =
+    pbTag(out, field, 2).varint(body.length.toLong).raw(body)
 
   /** One tf.Example payload: `bytesVals` byte strings of `bytesLen`
     * each under key "txt", `nFloats` packed floats under "emb",
@@ -360,39 +295,35 @@ object TfRecordOps {
   def encodeExample(bytesVals: Int, bytesLen: Int, nFloats: Int,
       int64s: Seq[Long], unknownField: Boolean): Array[Byte] = {
     def feature(kindField: Int, body: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream(); pbLen(o, kindField, body); o.toByteArray
+      val o = new ByteSink(); pbLen(o, kindField, body); o.toByteArray
     }
     def mapEntry(key: String, feat: Array[Byte]): Array[Byte] = {
-      val o = new java.io.ByteArrayOutputStream()
+      val o = new ByteSink()
       pbLen(o, 1, key.getBytes("UTF-8")); pbLen(o, 2, feat); o.toByteArray
     }
-    val bl = new java.io.ByteArrayOutputStream()
+    val bl = new ByteSink()
     (0 until bytesVals).foreach { i =>
       pbLen(bl, 1, Array.tabulate(bytesLen)(j => ((j * 7 + i) & 0xff).toByte))
     }
-    val fl = new java.io.ByteArrayOutputStream()
+    val fl = new ByteSink()
     locally {
-      val packed = new java.io.ByteArrayOutputStream()
-      (0 until nFloats).foreach { i =>
-        val bits = java.lang.Float.floatToIntBits(i * 0.5f)
-        packed.write(bits & 0xff); packed.write((bits >> 8) & 0xff)
-        packed.write((bits >> 16) & 0xff); packed.write((bits >> 24) & 0xff)
-      }
+      val packed = new ByteSink()
+      (0 until nFloats).foreach(i => packed.le32(java.lang.Float.floatToIntBits(i * 0.5f)))
       pbLen(fl, 1, packed.toByteArray)
     }
-    val il = new java.io.ByteArrayOutputStream()
+    val il = new ByteSink()
     locally {
-      val packed = new java.io.ByteArrayOutputStream()
-      int64s.foreach(v => pbVarint(packed, v))
+      val packed = new ByteSink()
+      int64s.foreach(v => packed.varint(v))
       pbLen(il, 1, packed.toByteArray)
     }
-    val features = new java.io.ByteArrayOutputStream()
+    val features = new ByteSink()
     pbLen(features, 1, mapEntry("txt", feature(1, bl.toByteArray)))
     pbLen(features, 1, mapEntry("emb", feature(2, fl.toByteArray)))
     pbLen(features, 1, mapEntry("lbl", feature(3, il.toByteArray)))
-    val ex = new java.io.ByteArrayOutputStream()
+    val ex = new ByteSink()
     pbLen(ex, 1, features.toByteArray)
-    if (unknownField) { pbVarint(ex, (99L << 3) | 0); pbVarint(ex, 42L) }
+    if (unknownField) { ex.varint((99L << 3) | 0); ex.varint(42L) }
     ex.toByteArray
   }
 
@@ -400,16 +331,11 @@ object TfRecordOps {
     * whatever bytes — including deliberately non-proto ones).
     */
   def encodeShard(payloads: Seq[Array[Byte]]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
+    val bos = new ByteSink()
     payloads.foreach { payload =>
-      val lenBytes = {
-        val b = new java.io.ByteArrayOutputStream(); putLongLE(b, payload.length.toLong)
-        b.toByteArray
-      }
-      bos.write(lenBytes)
-      putIntLE(bos, mask(crc32c(lenBytes, 0, 8)))
-      bos.write(payload)
-      putIntLE(bos, mask(crc32c(payload, 0, payload.length)))
+      val lenBytes = new ByteSink(8).le64(payload.length.toLong).toByteArray
+      bos.raw(lenBytes).le32(mask(crc32c(lenBytes, 0, 8)))
+      bos.raw(payload).le32(mask(crc32c(payload, 0, payload.length)))
     }
     bos.toByteArray
   }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -72,55 +70,6 @@ object VideoCodec {
       s"every frame must be $width x $height")
     val stride = (width + 3) & ~3
     val frameBytes = stride * height
-
-    def chunk(tag: String, body: Array[Byte]): Array[Byte] = {
-      val bos = new ByteArrayOutputStream(8 + body.length + 1)
-      bos.write(tag.getBytes("US-ASCII")); le32(bos, body.length); bos.write(body)
-      if ((body.length & 1) == 1) bos.write(0) // RIFF word alignment
-      bos.toByteArray
-    }
-    def list(listType: String, bodies: Array[Byte]*): Array[Byte] = {
-      val inner = bodies.foldLeft(Array.empty[Byte])(_ ++ _)
-      chunk("LIST", listType.getBytes("US-ASCII") ++ inner)
-    }
-
-    val avih = {
-      val b = new ByteArrayOutputStream(56)
-      le32(b, 1000000 / fps)     // dwMicroSecPerFrame
-      le32(b, frameBytes * fps)  // dwMaxBytesPerSec
-      le32(b, 0); le32(b, 0)     // padding, flags
-      le32(b, frames.length)     // dwTotalFrames
-      le32(b, 0); le32(b, 1)     // initial frames, streams
-      le32(b, frameBytes)        // suggested buffer
-      le32(b, width); le32(b, height)
-      (0 until 4).foreach(_ => le32(b, 0))
-      b.toByteArray
-    }
-    val strh = {
-      val b = new ByteArrayOutputStream(56)
-      b.write("vids".getBytes("US-ASCII")); b.write("DIB ".getBytes("US-ASCII"))
-      le32(b, 0); le32(b, 0)     // flags, priority+language
-      le32(b, 0)                 // initial frames
-      le32(b, 1); le32(b, fps)   // scale, rate → fps
-      le32(b, 0); le32(b, frames.length)
-      le32(b, frameBytes); le32(b, -1) // suggested buffer, quality
-      le32(b, 0)                 // sample size
-      le32(b, 0); le32(b, 0)     // rcFrame
-      b.toByteArray
-    }
-    val strf = {
-      val b = new ByteArrayOutputStream(40 + 1024)
-      le32(b, 40)                // biSize
-      le32(b, width); le32(b, height) // positive height ⇒ bottom-up
-      le16(b, 1); le16(b, 8)     // planes, bits per pixel
-      le32(b, 0)                 // biCompression = BI_RGB (uncompressed)
-      le32(b, frameBytes)
-      le32(b, 0); le32(b, 0)     // pels per meter
-      le32(b, 256); le32(b, 0)   // colors used / important
-      var i = 0                  // grayscale palette: entry i = (i,i,i,0)
-      while (i < 256) { b.write(i); b.write(i); b.write(i); b.write(0); i += 1 }
-      b.toByteArray
-    }
     val frameChunks = frames.map { pix =>
       val body = new Array[Byte](frameBytes)
       var y = 0
@@ -130,21 +79,88 @@ object VideoCodec {
         while (x < width) { body(y * stride + x) = pix(srcRow * width + x).toByte; x += 1 }
         y += 1
       }
-      chunk("00db", body)
+      body
     }
-
-    val riffBody = "AVI ".getBytes("US-ASCII") ++
-      list("hdrl", chunk("avih", avih), list("strl", chunk("strh", strh), chunk("strf", strf))) ++
-      list("movi", frameChunks: _*)
-    val out = new ByteArrayOutputStream(8 + riffBody.length)
-    out.write("RIFF".getBytes("US-ASCII")); le32(out, riffBody.length); out.write(riffBody)
-    out.toByteArray
+    // biCompression = BI_RGB (uncompressed), frames as 00db chunks
+    avi(width, height, fps, "DIB ", 8, 0, frameBytes, grayPalette = true, "00db", frameChunks)
   }
 
-  private def le32(b: ByteArrayOutputStream, v: Int): Unit = {
-    b.write(v & 0xff); b.write((v >> 8) & 0xff); b.write((v >> 16) & 0xff); b.write((v >> 24) & 0xff)
+  /** A minimal valid RIFF/AVI around `frames`: `hdrl` (avih, then one
+    * video `strl` whose strh names `handler` and whose strf
+    * BITMAPINFOHEADER carries `bitCount`/`compression`, plus a 256-entry
+    * grayscale palette when asked) and a `movi` LIST of `frameTag`
+    * chunks. `bufSize` fills the suggested-buffer and image-size fields.
+    */
+  private def avi(width: Int, height: Int, fps: Int, handler: String,
+      bitCount: Int, compression: Int, bufSize: Int, grayPalette: Boolean,
+      frameTag: String, frames: Seq[Array[Byte]]): Array[Byte] = {
+    def chunk(tag: String, body: Array[Byte]): Array[Byte] =
+      new ByteSink(8 + body.length + 1).riffChunk(tag, body).toByteArray
+    def list(listType: String, bodies: Array[Byte]*): Array[Byte] = {
+      val inner = new ByteSink().ascii(listType)
+      bodies.foreach(inner.raw)
+      chunk("LIST", inner.toByteArray)
+    }
+    val avih = new ByteSink(56)
+      .le32(1000000 / fps)     // dwMicroSecPerFrame
+      .le32(bufSize * fps)     // dwMaxBytesPerSec
+      .le32(0).le32(0)         // padding, flags
+      .le32(frames.length)     // dwTotalFrames
+      .le32(0).le32(1)         // initial frames, streams
+      .le32(bufSize)           // suggested buffer
+      .le32(width).le32(height)
+      .le32(0).le32(0).le32(0).le32(0)
+    val strh = new ByteSink(56).ascii("vids").ascii(handler)
+      .le32(0).le32(0)         // flags, priority+language
+      .le32(0)                 // initial frames
+      .le32(1).le32(fps)       // scale, rate → fps
+      .le32(0).le32(frames.length)
+      .le32(bufSize).le32(-1)  // suggested buffer, quality
+      .le32(0)                 // sample size
+      .le32(0).le32(0)         // rcFrame
+    val strf = new ByteSink(40 + 1024)
+      .le32(40)                // biSize
+      .le32(width).le32(height) // positive height ⇒ bottom-up
+      .le16(1).le16(bitCount)  // planes, bits per pixel
+      .le32(compression)
+      .le32(bufSize)
+      .le32(0).le32(0)         // pels per meter
+      .le32(if (grayPalette) 256 else 0).le32(0) // colors used / important
+    if (grayPalette) { // entry i = (i,i,i,0)
+      var i = 0
+      while (i < 256) { strf.u8(i).u8(i).u8(i).u8(0); i += 1 }
+    }
+    val riffBody = new ByteSink().ascii("AVI ")
+      .raw(list("hdrl", chunk("avih", avih.toByteArray),
+        list("strl", chunk("strh", strh.toByteArray), chunk("strf", strf.toByteArray))))
+      .raw(list("movi", frames.map(chunk(frameTag, _)): _*))
+    chunk("RIFF", riffBody.toByteArray)
   }
-  private def le16(b: ByteArrayOutputStream, v: Int): Unit = { b.write(v & 0xff); b.write((v >> 8) & 0xff) }
+
+  /** The AVI chunk-tree walk shared by the three decoders: nested
+    * `LIST`s (at most [[MaxListDepth]] deep; `movi` marks frame
+    * territory), each `strf` (≥ 40 bytes) to `onStrf(pos)`, and each
+    * frame chunk `NNdc` (also `NNdb` when `db`) inside `movi` to
+    * `onFrame(pos, size)`. A visitor returning false, or any corrupt
+    * chunk, fails the walk; so does a header that is not RIFF/AVI.
+    */
+  private def walkAvi(bytes: Array[Byte], db: Boolean)(onStrf: Int => Unit)(
+      onFrame: (Int, Int) => Boolean): Boolean = {
+    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Boolean =
+      depth <= MaxListDepth && // deeper is adversarial nesting, not a real AVI
+        Bytes.riffChunks(bytes, from, until) { (pos, size) =>
+          if (Bytes.tag(bytes, pos, "LIST"))
+            size >= 4 && walk(pos + 12, pos + 8 + size,
+              inMovi || Bytes.tag(bytes, pos + 8, "movi"), depth + 1)
+          else if (Bytes.tag(bytes, pos, "strf")) size >= 40 && { onStrf(pos); true }
+          else if (inMovi && size > 0 && bytes(pos + 2) == 'd'.toByte &&
+              (bytes(pos + 3) == 'c'.toByte || db && bytes(pos + 3) == 'b'.toByte))
+            onFrame(pos, size)
+          else true
+        }
+    bytes.length >= 12 && Bytes.tag(bytes, 0, "RIFF") && Bytes.tag(bytes, 8, "AVI ") &&
+      walk(12, bytes.length, inMovi = false, depth = 0)
+  }
 
   /** Decode RIFF/AVI bytes to (width, height, frames of row-major
     * top-down 8-bit grayscale). Requires an uncompressed 8-bpp DIB
@@ -154,60 +170,34 @@ object VideoCodec {
     * undoes DIB's bottom-up row order and 4-byte row stride.
     */
   def decodeDibAvi(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Int]])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32i(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16i(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "AVI ")) return None
-
     var width = -1
     var height = -1
     var fmtOk = false
     val frames = Seq.newBuilder[Array[Int]]
     var nFrames = 0
-
-    // walk [from, until) at one nesting level; returns false on corruption
-    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Boolean = {
-      if (depth > MaxListDepth) return false // adversarial nesting, not a real AVI
-      var pos = from
-      while (pos + 8 <= until) {
-        val size = le32i(pos + 4)
-        if (size < 0 || size > until - pos - 8) return false
-        if (tag(pos, "LIST")) {
-          if (size < 4) return false
-          val sub = if (tag(pos + 8, "movi")) true else inMovi
-          if (!walk(pos + 12, pos + 8 + size, sub, depth + 1)) return false
-        } else if (tag(pos, "strf")) {
-          if (size < 40) return false
-          width = le32i(pos + 12)
-          height = le32i(pos + 16)
-          fmtOk = le16i(pos + 22) == 8 && le32i(pos + 24) == 0 && width > 0 && height > 0 &&
-            width.toLong * height <= MaxPixels
-        } else if (inMovi && size > 0 &&
-            bytes(pos + 2) == 'd'.toByte &&
-            (bytes(pos + 3) == 'b'.toByte || bytes(pos + 3) == 'c'.toByte)) {
-          // a frame chunk (NNdb/NNdc); format must be known by now
-          if (!fmtOk) return false
-          val stride = (width + 3) & ~3
-          if (size.toLong < stride.toLong * height) return false
-          val pix = new Array[Int](width * height)
-          var y = 0
-          while (y < height) {
-            val srcRow = height - 1 - y
-            var x = 0
-            while (x < width) { pix(y * width + x) = u8(pos + 8 + srcRow * stride + x); x += 1 }
-            y += 1
-          }
-          frames += pix
-          nFrames += 1
+    val ok = walkAvi(bytes, db = true) { pos =>
+      width = Bytes.le32(bytes, pos + 12)
+      height = Bytes.le32(bytes, pos + 16)
+      fmtOk = Bytes.le16(bytes, pos + 22) == 8 && Bytes.le32(bytes, pos + 24) == 0 &&
+        width > 0 && height > 0 && width.toLong * height <= MaxPixels
+    } { (pos, size) =>
+      // a frame chunk (NNdb/NNdc); format must be known by now
+      val stride = (width + 3) & ~3
+      fmtOk && size.toLong >= stride.toLong * height && {
+        val pix = new Array[Int](width * height)
+        var y = 0
+        while (y < height) {
+          val srcRow = height - 1 - y
+          var x = 0
+          while (x < width) { pix(y * width + x) = bytes(pos + 8 + srcRow * stride + x) & 0xff; x += 1 }
+          y += 1
         }
-        pos += 8 + size + (size & 1)
+        frames += pix
+        nFrames += 1
+        true
       }
-      true
     }
-    if (!walk(12, bytes.length, inMovi = false, depth = 0)) return None
-    if (!fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
+    if (!ok || !fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
   }
 
   /** BITMAPINFOHEADER biCompression value for Microsoft RLE8. */
@@ -230,22 +220,12 @@ object VideoCodec {
     require(fps > 0, s"fps must be positive, got $fps")
     require(frames.nonEmpty && frames.forall(_.length == width * height),
       s"every frame must be $width x $height")
-    def chunk(tag: String, body: Array[Byte]): Array[Byte] = {
-      val bos = new ByteArrayOutputStream(8 + body.length + 1)
-      bos.write(tag.getBytes("US-ASCII")); le32(bos, body.length); bos.write(body)
-      if ((body.length & 1) == 1) bos.write(0)
-      bos.toByteArray
-    }
-    def list(listType: String, bodies: Array[Byte]*): Array[Byte] = {
-      val inner = bodies.foldLeft(Array.empty[Byte])(_ ++ _)
-      chunk("LIST", listType.getBytes("US-ASCII") ++ inner)
-    }
 
     // encode one frame against the previous canvas (null ⇒ key frame:
     // every pixel is "changed"). Storage order is bottom-up: encoded
     // row r is top-down row height-1-r.
     def encodeFrame(pix: Array[Int], prev: Array[Int]): Array[Byte] = {
-      val b = new ByteArrayOutputStream(width * height / 4 + 16)
+      val b = new ByteSink(width * height / 4 + 16)
       var r = 0
       while (r < height) {
         val rowOff = (height - 1 - r) * width // top-down index of storage row r
@@ -291,47 +271,8 @@ object VideoCodec {
     val encoded = frames.zipWithIndex.map { case (f, i) =>
       encodeFrame(f, if (i == 0) null else frames(i - 1))
     }
-    val maxFrame = encoded.map(_.length).max
-    val avih = {
-      val b = new ByteArrayOutputStream(56)
-      le32(b, 1000000 / fps); le32(b, maxFrame * fps)
-      le32(b, 0); le32(b, 0)
-      le32(b, frames.length)
-      le32(b, 0); le32(b, 1)
-      le32(b, maxFrame)
-      le32(b, width); le32(b, height)
-      (0 until 4).foreach(_ => le32(b, 0))
-      b.toByteArray
-    }
-    val strh = {
-      val b = new ByteArrayOutputStream(56)
-      b.write("vids".getBytes("US-ASCII")); b.write("mrle".getBytes("US-ASCII"))
-      le32(b, 0); le32(b, 0); le32(b, 0)
-      le32(b, 1); le32(b, fps)
-      le32(b, 0); le32(b, frames.length)
-      le32(b, maxFrame); le32(b, -1)
-      le32(b, 0); le32(b, 0); le32(b, 0)
-      b.toByteArray
-    }
-    val strf = {
-      val b = new ByteArrayOutputStream(40 + 1024)
-      le32(b, 40)
-      le32(b, width); le32(b, height)
-      le16(b, 1); le16(b, 8)
-      le32(b, Rle8Compression)
-      le32(b, maxFrame)
-      le32(b, 0); le32(b, 0)
-      le32(b, 256); le32(b, 0)
-      var i = 0
-      while (i < 256) { b.write(i); b.write(i); b.write(i); b.write(0); i += 1 }
-      b.toByteArray
-    }
-    val riffBody = "AVI ".getBytes("US-ASCII") ++
-      list("hdrl", chunk("avih", avih), list("strl", chunk("strh", strh), chunk("strf", strf))) ++
-      list("movi", encoded.map(chunk("00dc", _)): _*)
-    val out = new ByteArrayOutputStream(8 + riffBody.length)
-    out.write("RIFF".getBytes("US-ASCII")); le32(out, riffBody.length); out.write(riffBody)
-    out.toByteArray
+    avi(width, height, fps, "mrle", 8, Rle8Compression, encoded.map(_.length).max,
+      grayPalette = true, "00dc", encoded)
   }
 
   /** Decode an RLE8 AVI to (width, height, frames of row-major
@@ -347,13 +288,6 @@ object VideoCodec {
     * fail the clip (None).
     */
   def decodeRle8Avi(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Int]])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32i(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def le16i(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "AVI ")) return None
-
     var width = -1
     var height = -1
     var fmtOk = false
@@ -367,7 +301,7 @@ object VideoCodec {
       var cx = 0
       var cr = 0 // storage row, bottom-up
       while (pos + 2 <= until) {
-        val b0 = u8(pos); val b1 = u8(pos + 1); pos += 2
+        val b0 = (bytes(pos) & 0xff); val b1 = (bytes(pos + 1) & 0xff); pos += 2
         if (b0 > 0) { // encoded run
           if (cr >= height || cx + b0 > width) return false
           var i = 0
@@ -387,13 +321,13 @@ object VideoCodec {
             return true
           case 2 => // delta: skip dx right, dy up (bottom-up rows)
             if (pos + 2 > until) return false
-            cx += u8(pos); cr += u8(pos + 1); pos += 2
+            cx += (bytes(pos) & 0xff); cr += (bytes(pos + 1) & 0xff); pos += 2
             if (cx > width || cr > height) return false
           case n => // absolute mode: n literal indices, word-aligned
             val padded = (n + 1) & ~1
             if (pos + padded > until || cr >= height || cx + n > width) return false
             var i = 0
-            while (i < n) { canvas(cr * width + cx + i) = u8(pos + i); i += 1 }
+            while (i < n) { canvas(cr * width + cx + i) = (bytes(pos + i) & 0xff); i += 1 }
             cx += n
             pos += padded
         }
@@ -401,34 +335,14 @@ object VideoCodec {
       false // ran out of bytes before end-of-bitmap
     }
 
-    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Boolean = {
-      if (depth > MaxListDepth) return false // adversarial nesting, not a real AVI
-      var pos = from
-      while (pos + 8 <= until) {
-        val size = le32i(pos + 4)
-        if (size < 0 || size > until - pos - 8) return false
-        if (tag(pos, "LIST")) {
-          if (size < 4) return false
-          val sub = if (tag(pos + 8, "movi")) true else inMovi
-          if (!walk(pos + 12, pos + 8 + size, sub, depth + 1)) return false
-        } else if (tag(pos, "strf")) {
-          if (size < 40) return false
-          width = le32i(pos + 12)
-          height = le32i(pos + 16)
-          fmtOk = le16i(pos + 22) == 8 && le32i(pos + 24) == Rle8Compression &&
-            width > 0 && height > 0 && width.toLong * height <= MaxPixels
-          if (fmtOk) canvas = new Array[Int](width * height)
-        } else if (inMovi && size > 0 &&
-            bytes(pos + 2) == 'd'.toByte && bytes(pos + 3) == 'c'.toByte) {
-          if (!fmtOk) return false
-          if (!decodeFrame(pos + 8, pos + 8 + size)) return false
-        }
-        pos += 8 + size + (size & 1)
-      }
-      true
-    }
-    if (!walk(12, bytes.length, inMovi = false, depth = 0)) return None
-    if (!fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
+    val ok = walkAvi(bytes, db = false) { pos =>
+      width = Bytes.le32(bytes, pos + 12)
+      height = Bytes.le32(bytes, pos + 16)
+      fmtOk = Bytes.le16(bytes, pos + 22) == 8 && Bytes.le32(bytes, pos + 24) == Rle8Compression &&
+        width > 0 && height > 0 && width.toLong * height <= MaxPixels
+      if (fmtOk) canvas = new Array[Int](width * height)
+    } { (pos, size) => fmtOk && decodeFrame(pos + 8, pos + 8 + size) }
+    if (!ok || !fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
   }
 
   /** 'MJPG' as the little-endian BITMAPINFOHEADER biCompression value. */
@@ -448,64 +362,19 @@ object VideoCodec {
     require(fps > 0, s"fps must be positive, got $fps")
     require(frames.nonEmpty && frames.forall(_.length == width * height),
       s"every frame must be $width x $height")
-    def chunk(tag: String, body: Array[Byte]): Array[Byte] = {
-      val bos = new ByteArrayOutputStream(8 + body.length + 1)
-      bos.write(tag.getBytes("US-ASCII")); le32(bos, body.length); bos.write(body)
-      if ((body.length & 1) == 1) bos.write(0) // RIFF word alignment
-      bos.toByteArray
-    }
-    def list(listType: String, bodies: Array[Byte]*): Array[Byte] = {
-      val inner = bodies.foldLeft(Array.empty[Byte])(_ ++ _)
-      chunk("LIST", listType.getBytes("US-ASCII") ++ inner)
-    }
     val jpegFrames = frames.map { pix =>
       val img = new java.awt.image.BufferedImage(width, height,
         java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
       val r = img.getRaster
       var i = 0
       while (i < pix.length) { r.setSample(i % width, i / width, 0, pix(i) & 0xff); i += 1 }
-      val bos = new ByteArrayOutputStream()
+      val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, "jpg", bos)
       bos.toByteArray
     }
-    val maxFrame = jpegFrames.map(_.length).max
-    val avih = {
-      val b = new ByteArrayOutputStream(56)
-      le32(b, 1000000 / fps); le32(b, maxFrame * fps)
-      le32(b, 0); le32(b, 0)
-      le32(b, frames.length)
-      le32(b, 0); le32(b, 1)
-      le32(b, maxFrame)
-      le32(b, width); le32(b, height)
-      (0 until 4).foreach(_ => le32(b, 0))
-      b.toByteArray
-    }
-    val strh = {
-      val b = new ByteArrayOutputStream(56)
-      b.write("vids".getBytes("US-ASCII")); b.write("MJPG".getBytes("US-ASCII"))
-      le32(b, 0); le32(b, 0); le32(b, 0)
-      le32(b, 1); le32(b, fps)
-      le32(b, 0); le32(b, frames.length)
-      le32(b, maxFrame); le32(b, -1)
-      le32(b, 0); le32(b, 0); le32(b, 0)
-      b.toByteArray
-    }
-    val strf = {
-      val b = new ByteArrayOutputStream(40)
-      le32(b, 40)
-      le32(b, width); le32(b, height)
-      le16(b, 1); le16(b, 24)      // planes, bits (MJPG convention)
-      le32(b, MjpgFourcc)          // biCompression = 'MJPG'
-      le32(b, maxFrame)
-      le32(b, 0); le32(b, 0); le32(b, 0); le32(b, 0)
-      b.toByteArray
-    }
-    val riffBody = "AVI ".getBytes("US-ASCII") ++
-      list("hdrl", chunk("avih", avih), list("strl", chunk("strh", strh), chunk("strf", strf))) ++
-      list("movi", jpegFrames.map(chunk("00dc", _)): _*)
-    val out = new ByteArrayOutputStream(8 + riffBody.length)
-    out.write("RIFF".getBytes("US-ASCII")); le32(out, riffBody.length); out.write(riffBody)
-    out.toByteArray
+    // planes, bits 24 (the MJPG convention), biCompression = 'MJPG'
+    avi(width, height, fps, "MJPG", 24, MjpgFourcc, jpegFrames.map(_.length).max,
+      grayPalette = false, "00dc", jpegFrames)
   }
 
   /** Decode a Motion-JPEG AVI to (width, height, frames of row-major
@@ -519,50 +388,29 @@ object VideoCodec {
     * (None), as does anything non-AVI/truncated.
     */
   def decodeMjpegAvi(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Int]])] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def le32i(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => bytes(i + j) == s.charAt(j).toByte)
-    if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "AVI ")) return None
     var width = -1
     var height = -1
     var fmtOk = false
     val frames = Seq.newBuilder[Array[Int]]
     var nFrames = 0
-    var corrupt = false
-    def walk(from: Int, until: Int, inMovi: Boolean, depth: Int): Boolean = {
-      if (depth > MaxListDepth) return false // adversarial nesting, not a real AVI
-      var pos = from
-      while (pos + 8 <= until) {
-        val size = le32i(pos + 4)
-        if (size < 0 || size > until - pos - 8) return false
-        if (tag(pos, "LIST")) {
-          if (size < 4) return false
-          val sub = if (tag(pos + 8, "movi")) true else inMovi
-          if (!walk(pos + 12, pos + 8 + size, sub, depth + 1)) return false
-        } else if (tag(pos, "strf")) {
-          if (size < 40) return false
-          width = le32i(pos + 12)
-          height = le32i(pos + 16)
-          fmtOk = le32i(pos + 24) == MjpgFourcc && width > 0 && height > 0 &&
-            width.toLong * height <= MaxPixels
-        } else if (inMovi && size > 0 &&
-            bytes(pos + 2) == 'd'.toByte && bytes(pos + 3) == 'c'.toByte) {
-          if (!fmtOk) return false
-          val payload = java.util.Arrays.copyOfRange(bytes, pos + 8, pos + 8 + size)
-          MultimodalCodec.decodeGray(payload) match {
-            case Some((w, h, pix)) if w == width && h == height =>
-              frames += pix
-              nFrames += 1
-            case _ => corrupt = true; return false
-          }
+    val ok = walkAvi(bytes, db = false) { pos =>
+      width = Bytes.le32(bytes, pos + 12)
+      height = Bytes.le32(bytes, pos + 16)
+      fmtOk = Bytes.le32(bytes, pos + 24) == MjpgFourcc && width > 0 && height > 0 &&
+        width.toLong * height <= MaxPixels
+    } { (pos, size) =>
+      fmtOk && {
+        val payload = java.util.Arrays.copyOfRange(bytes, pos + 8, pos + 8 + size)
+        MultimodalCodec.decodeGray(payload) match {
+          case Some((w, h, pix)) if w == width && h == height =>
+            frames += pix
+            nFrames += 1
+            true
+          case _ => false
         }
-        pos += 8 + size + (size & 1)
       }
-      true
     }
-    if (!walk(12, bytes.length, inMovi = false, depth = 0) || corrupt) return None
-    if (!fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
+    if (!ok || !fmtOk || nFrames == 0) None else Some((width, height, frames.result()))
   }
 
   /** Decode a payload column (DIB, RLE8, or Motion-JPEG AVI — one

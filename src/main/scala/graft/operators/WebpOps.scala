@@ -62,12 +62,6 @@ object WebpOps {
   private def invalid(n: Long, kind: String = "other", nChunks: Int = 0): WebpMeta =
     WebpMeta(0, kind, 0L, 0L, 0, 0, 0, 0L, 0, 0, 0, nChunks, 0L, n)
 
-  private def u16le(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def u24le(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) | ((b(p + 2) & 0xffL) << 16)
-  private def u32le(b: Array[Byte], p: Int): Long =
-    u24le(b, p) | ((b(p + 3) & 0xffL) << 24)
   private def fourcc(b: Array[Byte], p: Int): String =
     new String(Array(b(p), b(p + 1), b(p + 2), b(p + 3)), "US-ASCII")
 
@@ -75,7 +69,7 @@ object WebpOps {
     val n = bytes.length
     if (n < 12 || fourcc(bytes, 0) != "RIFF" || fourcc(bytes, 8) != "WEBP")
       return invalid(n)
-    val riffSize = u32le(bytes, 4)
+    val riffSize = Bytes.le32u(bytes, 4)
     // declared extent of the RIFF payload (counted from offset 8);
     // subtraction form: riffSize > n - 8 means the container is cut
     val truncated = riffSize > n.toLong - 8
@@ -91,7 +85,7 @@ object WebpOps {
 
     while (walkOk && pos + 8 <= end) {
       val cc = fourcc(bytes, pos.toInt)
-      val size = u32le(bytes, pos.toInt + 4)
+      val size = Bytes.le32u(bytes, pos.toInt + 4)
       // chunk body must fit the declared RIFF extent (subtraction form)
       if (size > end - pos - 8) { walkOk = false }
       else {
@@ -102,14 +96,14 @@ object WebpOps {
             case "VP8 " =>
               kind = "lossy"
               if (size >= 10) {
-                val tag = u24le(bytes, body.toInt)
+                val tag = Bytes.le24(bytes, body.toInt).toLong
                 val keyFrame = (tag & 1L) == 0L
                 partBytes = tag >> 5
                 val sc = body.toInt + 3
                 if (keyFrame && (bytes(sc) & 0xff) == 0x9D &&
                     (bytes(sc + 1) & 0xff) == 0x01 && (bytes(sc + 2) & 0xff) == 0x2A) {
-                  width = (u16le(bytes, sc + 3) & 0x3FFF).toLong
-                  height = (u16le(bytes, sc + 5) & 0x3FFF).toLong
+                  width = (Bytes.le16(bytes, sc + 3) & 0x3FFF).toLong
+                  height = (Bytes.le16(bytes, sc + 5) & 0x3FFF).toLong
                   nFrames = 1
                   semanticsOk = true
                 }
@@ -117,7 +111,7 @@ object WebpOps {
             case "VP8L" =>
               kind = "lossless"
               if (size >= 5 && (bytes(body.toInt) & 0xff) == 0x2F) {
-                val bits = u32le(bytes, body.toInt + 1)
+                val bits = Bytes.le32u(bytes, body.toInt + 1)
                 val version = (bits >> 29) & 7L
                 if (version == 0L) {
                   width = (bits & 0x3FFF) + 1
@@ -136,15 +130,15 @@ object WebpOps {
                 hasExif = (flags >> 3) & 1
                 hasXmp = (flags >> 2) & 1
                 hasAnim = (flags >> 1) & 1
-                width = u24le(bytes, body.toInt + 4) + 1
-                height = u24le(bytes, body.toInt + 7) + 1
+                width = Bytes.le24(bytes, body.toInt + 4).toLong + 1
+                height = Bytes.le24(bytes, body.toInt + 7).toLong + 1
                 semanticsOk = true
               }
             case _ => // unknown first chunk: kind stays "other"
           }
         } else if (cc == "ANMF" && size >= 16) {
           nFrames += 1
-          durationMs += u24le(bytes, body.toInt + 12)
+          durationMs += Bytes.le24(bytes, body.toInt + 12).toLong
         } else if ((cc == "VP8 " || cc == "VP8L") && kind == "extended" &&
             hasAnim == 0 && nFrames == 0) {
           // non-animated extended WebP (VP8X + optional ALPH + one image
@@ -172,19 +166,10 @@ object WebpOps {
   // ------------------------------------------------------------------
   // synthetic encoders (tests + the q374 oracle's closed-form replay)
 
-  private def le24(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def chunk(cc: String, body: Array[Byte]): Array[Byte] = {
-    val pad = if ((body.length & 1) == 1) Array(0.toByte) else Array.empty[Byte]
-    cc.getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body ++ pad
-  }
-  private def container(chunks: Array[Byte]): Array[Byte] = {
-    val payload = "WEBP".getBytes("US-ASCII") ++ chunks
-    "RIFF".getBytes("US-ASCII") ++ le32(payload.length.toLong) ++ payload
-  }
+  private def chunk(cc: String, body: Array[Byte]): Array[Byte] =
+    new ByteSink(9 + body.length).riffChunk(cc, body).toByteArray
+  private def container(chunks: Array[Byte]): Array[Byte] =
+    chunk("RIFF", new ByteSink(4 + chunks.length).ascii("WEBP").raw(chunks).toByteArray)
 
   /** Lossy VP8 key-frame payload: tag (partition size), start code,
     * 14-bit dims, `filler` opaque partition bytes.
@@ -193,10 +178,9 @@ object WebpOps {
     require(w >= 1 && w <= 0x3FFF && h >= 1 && h <= 0x3FFF, "dims are 14-bit")
     require(partSize >= 0 && partSize <= 0x7FFFF, "partition size is 19-bit")
     val tag = (partSize << 5) | (1L << 4) // keyframe (bit0=0), show_frame
-    le24(tag) ++ Array(0x9D.toByte, 0x01.toByte, 0x2A.toByte) ++
-      Array((w & 0xff).toByte, ((w >> 8) & 0x3f).toByte,
-        (h & 0xff).toByte, ((h >> 8) & 0x3f).toByte) ++
-      Array.tabulate(filler)(i => ((i * 31 + 7) & 0xff).toByte)
+    new ByteSink(10 + filler).le24(tag.toInt).u8(0x9D).u8(0x01).u8(0x2A)
+      .le16(w & 0x3fff).le16(h & 0x3fff)
+      .raw(Array.tabulate(filler)(i => ((i * 31 + 7) & 0xff).toByte)).toByteArray
   }
 
   /** Lossless VP8L payload: signature, packed dims/alpha/version bits,
@@ -206,8 +190,8 @@ object WebpOps {
     require(w >= 1 && w <= 0x4000 && h >= 1 && h <= 0x4000, "dims−1 are 14-bit")
     val bits = (w - 1).toLong | ((h - 1).toLong << 14) |
       (if (alpha) 1L << 28 else 0L)
-    Array(0x2F.toByte) ++ le32(bits) ++
-      Array.tabulate(filler)(i => ((i * 17 + 3) & 0xff).toByte)
+    new ByteSink(5 + filler).u8(0x2F).le32(bits)
+      .raw(Array.tabulate(filler)(i => ((i * 17 + 3) & 0xff).toByte)).toByteArray
   }
 
   def encodeLossy(w: Int, h: Int, partSize: Long, filler: Int): Array[Byte] =
@@ -226,13 +210,12 @@ object WebpOps {
     require(w >= 1 && w <= (1 << 24) && h >= 1 && h <= (1 << 24), "canvas dims are 24-bit")
     val flags = ((if (icc) 0x20 else 0) | (if (alpha) 0x10 else 0) |
       (if (exif) 0x08 else 0) | (if (xmp) 0x04 else 0) | 0x02).toByte
-    val vp8x = Array(flags, 0.toByte, 0.toByte, 0.toByte) ++
-      le24((w - 1).toLong) ++ le24((h - 1).toLong)
+    val vp8x = new ByteSink(10).u8(flags).u8(0).u8(0).u8(0).le24(w - 1).le24(h - 1).toByteArray
     val meta8 = Array.tabulate(8)(i => (i * 11 + 5).toByte)
-    val anim = le32(0xFFFFFFFFL) ++ Array(0.toByte, 0.toByte) // bg color, loop=0
+    val anim = new ByteSink(6).le32(0xFFFFFFFFL).le16(0).toByteArray // bg color, loop=0
     val anmfs = frames.map { case (dur, filler) =>
-      val hdr = le24(0L) ++ le24(0L) ++ le24((w - 1).toLong) ++ le24((h - 1).toLong) ++
-        le24(dur) ++ Array(0.toByte)
+      val hdr = new ByteSink(16).le24(0).le24(0).le24(w - 1).le24(h - 1)
+        .le24(dur.toInt).u8(0).toByteArray
       chunk("ANMF", hdr ++ chunk("VP8L", vp8lPayload(w, h, alpha, filler)))
     }
     container(
@@ -251,8 +234,7 @@ object WebpOps {
     require(w >= 1 && w <= (1 << 24) && h >= 1 && h <= (1 << 24), "canvas dims are 24-bit")
     val flags = ((if (icc) 0x20 else 0) | (if (alpha) 0x10 else 0) |
       (if (exif) 0x08 else 0) | (if (xmp) 0x04 else 0)).toByte
-    val vp8x = Array(flags, 0.toByte, 0.toByte, 0.toByte) ++
-      le24((w - 1).toLong) ++ le24((h - 1).toLong)
+    val vp8x = new ByteSink(10).u8(flags).u8(0).u8(0).u8(0).le24(w - 1).le24(h - 1).toByteArray
     val meta8 = Array.tabulate(8)(i => (i * 11 + 5).toByte)
     container(
       chunk("VP8X", vp8x) ++

@@ -48,79 +48,71 @@ object ZipOps {
     * must come from the EOCD, not signature scanning.
     */
   def encodeSynthetic(entries: Seq[(String, Int, Int, Int)]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >>> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      bos.write((v & 0xff).toInt); bos.write(((v >>> 8) & 0xff).toInt)
-      bos.write(((v >>> 16) & 0xff).toInt); bos.write(((v >>> 24) & 0xff).toInt)
-    }
+    val bos = new ByteSink()
     val offsets = new Array[Long](entries.length)
     entries.zipWithIndex.foreach { case ((name, method, csize, usize), j) =>
       offsets(j) = bos.size().toLong
-      w32(0x04034b50L); w16(20); w16(0); w16(method); w16(0); w16(0)
-      w32((j * 2654435761L) & 0xffffffffL) // deterministic fake CRC
-      w32(csize.toLong); w32(usize.toLong)
-      w16(name.length); w16(0)
+      bos.le32(0x04034b50L); bos.le16(20); bos.le16(0); bos.le16(method); bos.le16(0); bos.le16(0)
+      bos.le32((j * 2654435761L) & 0xffffffffL) // deterministic fake CRC
+      bos.le32(csize.toLong); bos.le32(usize.toLong)
+      bos.le16(name.length); bos.le16(0)
       bos.write(name.getBytes(Ascii))
       var i = 0
       while (i < csize) { bos.write(if (i % 97 == 0) 'P' else if (i % 97 == 1) 'K' else (i * 11 + j * 3) % 256); i += 1 }
     }
     val cdStart = bos.size().toLong
     entries.zipWithIndex.foreach { case ((name, method, csize, usize), j) =>
-      w32(0x02014b50L); w16(20); w16(20); w16(0); w16(method); w16(0); w16(0)
-      w32((j * 2654435761L) & 0xffffffffL)
-      w32(csize.toLong); w32(usize.toLong)
-      w16(name.length); w16(0); w16(0); w16(0); w16(0); w32(0)
-      w32(offsets(j))
+      bos.le32(0x02014b50L); bos.le16(20); bos.le16(20); bos.le16(0); bos.le16(method); bos.le16(0); bos.le16(0)
+      bos.le32((j * 2654435761L) & 0xffffffffL)
+      bos.le32(csize.toLong); bos.le32(usize.toLong)
+      bos.le16(name.length); bos.le16(0); bos.le16(0); bos.le16(0); bos.le16(0); bos.le32(0)
+      bos.le32(offsets(j))
       bos.write(name.getBytes(Ascii))
     }
     val cdSize = bos.size().toLong - cdStart
-    w32(0x06054b50L); w16(0); w16(0); w16(entries.length); w16(entries.length)
-    w32(cdSize); w32(cdStart); w16(0)
+    bos.le32(0x06054b50L); bos.le16(0); bos.le16(0); bos.le16(entries.length); bos.le16(entries.length)
+    bos.le32(cdSize); bos.le32(cdStart); bos.le16(0)
     bos.toByteArray
   }
 
   def parse(bytes: Array[Byte]): ZipMeta = {
     val n = bytes.length
-    def u16(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-    def u32(i: Int): Long = (bytes(i) & 0xffL) | ((bytes(i + 1) & 0xffL) << 8) |
-      ((bytes(i + 2) & 0xffL) << 16) | ((bytes(i + 3) & 0xffL) << 24)
     // EOCD: backward scan over the last 64 KiB + 22 (max comment)
     var eocd = -1
     var i = n - 22
     val stop = math.max(0, n - 22 - 65535)
     while (eocd < 0 && i >= stop) {
-      if (u32(i) == 0x06054b50L && i + 22 + u16(i + 20) == n) eocd = i
+      if (Bytes.le32u(bytes, i) == 0x06054b50L && i + 22 + Bytes.le16(bytes, i + 20) == n) eocd = i
       else i -= 1
     }
     if (eocd < 0)
       return ZipMeta(0, 0, 0, 0, 0, 0L, 0L, 0L, 0, n.toLong)
-    val nEntries = u16(eocd + 10)
-    val cdSize = u32(eocd + 12)
-    val cdOff = u32(eocd + 16)
+    val nEntries = Bytes.le16(bytes, eocd + 10)
+    val cdSize = Bytes.le32u(bytes, eocd + 12)
+    val cdOff = Bytes.le32u(bytes, eocd + 16)
     var pos = cdOff
     val cdEnd = cdOff + cdSize
     var parsed = 0; var nStored = 0; var nDeflated = 0; var nOther = 0
     var comp = 0L; var uncomp = 0L; var mismatch = 0
     var ok = cdEnd <= eocd && cdOff >= 0
     while (ok && parsed < nEntries && pos + 46 <= cdEnd) {
-      if (u32(pos.toInt) != 0x02014b50L) ok = false
+      if (Bytes.le32u(bytes, pos.toInt) != 0x02014b50L) ok = false
       else {
         val p = pos.toInt
-        val method = u16(p + 10)
-        val csize = u32(p + 20)
-        val usize = u32(p + 24)
-        val nameLen = u16(p + 28)
-        val extraLen = u16(p + 30)
-        val commentLen = u16(p + 32)
-        val localOff = u32(p + 42)
+        val method = Bytes.le16(bytes, p + 10)
+        val csize = Bytes.le32u(bytes, p + 20)
+        val usize = Bytes.le32u(bytes, p + 24)
+        val nameLen = Bytes.le16(bytes, p + 28)
+        val extraLen = Bytes.le16(bytes, p + 30)
+        val commentLen = Bytes.le16(bytes, p + 32)
+        val localOff = Bytes.le32u(bytes, p + 42)
         if (pos + 46 + nameLen + extraLen + commentLen > cdEnd) ok = false
         else {
           val name = new String(bytes, p + 46, nameLen, Ascii)
           // cross-check the local header at the recorded offset
           val lo = localOff.toInt
           val localOk = localOff + 30 + nameLen <= cdOff &&
-            u32(lo) == 0x04034b50L && u16(lo + 26) == nameLen &&
+            Bytes.le32u(bytes, lo) == 0x04034b50L && Bytes.le16(bytes, lo + 26) == nameLen &&
             new String(bytes, lo + 30, nameLen, Ascii) == name
           if (!localOk) mismatch += 1
           parsed += 1

@@ -135,21 +135,17 @@ object ZstdOps {
     require(rleLen >= 0 && rleLen <= 0x1FFFFF,
       s"rleLen $rleLen outside the 21-bit block-size field [0, ${0x1FFFFF}]")
     require(skippableLen >= 0, s"skippableLen $skippableLen negative")
-    val bos = new java.io.ByteArrayOutputStream()
-    def le32(v: Long): Unit = { var i = 0; while (i < 4) { bos.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-    def le64(v: Long): Unit = { var i = 0; while (i < 8) { bos.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-    def blockHeader(last: Boolean, tpe: Int, size: Int): Unit = {
-      val v = (if (last) 1 else 0) | (tpe << 1) | (size << 3)
-      bos.write(v & 0xff); bos.write((v >> 8) & 0xff); bos.write((v >> 16) & 0xff)
-    }
+    val bos = new ByteSink()
+    def blockHeader(last: Boolean, tpe: Int, size: Int): Unit =
+      bos.le24((if (last) 1 else 0) | (tpe << 1) | (size << 3))
     if (skippableLen > 0) {
-      le32(SkippableMin); le32(skippableLen.toLong)
+      bos.le32(SkippableMin); bos.le32(skippableLen.toLong)
       (0 until skippableLen).foreach(i => bos.write((i * 7 + 1) % 256))
     }
-    le32(FrameMagic)
+    bos.le32(FrameMagic)
     // FHD: FCS_flag=3 (8-byte size), single-segment, optional checksum
     bos.write(0xC0 | 0x20 | (if (withChecksum) 0x04 else 0))
-    le64(payload.length.toLong + rleLen)
+    bos.le64(payload.length.toLong + rleLen)
     val nChunks = (payload.length + blockSize - 1) / blockSize
     if (nChunks == 0 && rleLen == 0) blockHeader(last = true, 0, 0)
     else {
@@ -165,7 +161,7 @@ object ZstdOps {
     }
     if (withChecksum) {
       val content = payload ++ Array.fill(rleLen)('z'.toByte)
-      le32(xxh64Low32(content))
+      bos.le32(xxh64Low32(content))
     }
     bos.toByteArray
   }
@@ -181,27 +177,17 @@ object ZstdOps {
     var nLitRaw = 0; var nLitRle = 0; var nLitComp = 0; var nLitTreeless = 0
     var litRegen = 0L; var nLitMalformed = 0
     var halted = false
-    def le32(p: Long): Long = {
-      var v = 0L; var i = 3
-      while (i >= 0) { v = (v << 8) | (bytes((p + i).toInt) & 0xffL); i -= 1 }
-      v
-    }
-    def le64(p: Long): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (bytes((p + i).toInt) & 0xffL); i -= 1 }
-      v
-    }
     while (!halted && pos < n) {
       val frameStart = pos
       if (n - pos < 4) halted = true
       else {
-        val magic = le32(pos)
+        val magic = Bytes.le32u(bytes, pos.toInt)
         if (magic >= SkippableMin && magic <= SkippableMax) {
           // u32 size ≤ 2^32−1 can't wrap a Long, but still compare
           // against remaining space in subtraction form
           if (n - pos < 8) halted = true
           else {
-            val size = le32(pos + 4)
+            val size = Bytes.le32u(bytes, (pos + 4).toInt)
             if (size > n - pos - 8) halted = true
             else { pos += 8 + size; nSkippable += 1 }
           }
@@ -231,10 +217,9 @@ object ZstdOps {
                 fcs = fcsLen match {
                   case 0 => -1L
                   case 1 => bytes(p.toInt) & 0xffL
-                  case 2 => ((bytes(p.toInt) & 0xffL) |
-                    ((bytes(p.toInt + 1) & 0xffL) << 8)) + 256L
-                  case 4 => le32(p)
-                  case _ => le64(p)
+                  case 2 => Bytes.le16(bytes, p.toInt) + 256L
+                  case 4 => Bytes.le32u(bytes, p.toInt)
+                  case _ => Bytes.le64(bytes, p.toInt)
                 }
                 // an 8-byte FCS with the top bit set goes negative and
                 // would alias the -1 "absent" sentinel, silently skipping
@@ -255,8 +240,7 @@ object ZstdOps {
           while (ok && !last) {
             if (n - p < 3) ok = false
             else {
-              val h = (bytes(p.toInt) & 0xffL) | ((bytes(p.toInt + 1) & 0xffL) << 8) |
-                ((bytes(p.toInt + 2) & 0xffL) << 16)
+              val h = Bytes.le24(bytes, p.toInt).toLong
               p += 3
               last = (h & 1) != 0
               val tpe = ((h >> 1) & 3).toInt
@@ -304,7 +288,7 @@ object ZstdOps {
           var fCsOk = 0; var fCsBad = 0
           if (ok && checksumFlag) {
             if (n - p >= 4) {
-              val want = le32(p); p += 4
+              val want = Bytes.le32u(bytes, p.toInt); p += 4
               if (allDecodable) {
                 if (xxh64Low32(content.toByteArray) == want) fCsOk = 1 else fCsBad = 1
               }
@@ -362,9 +346,7 @@ object ZstdOps {
                             dictId: Int = 0): Array[Byte] = {
     require(blocks.nonEmpty, "a frame needs at least one block")
     require(dictId >= 0 && dictId <= 255, s"dictId must fit one byte, got $dictId")
-    val bos = new java.io.ByteArrayOutputStream()
-    var i = 0
-    while (i < 4) { bos.write(((FrameMagic >>> (8 * i)) & 0xff).toInt); i += 1 }
+    val bos = new ByteSink().le32(FrameMagic)
     // FHD: no FCS, not single-segment, no checksum; DID flag 01 when set
     bos.write(if (dictId > 0) 0x01 else 0x00)
     bos.write(0x58) // window descriptor (exponent 21 → 2 MiB; uninterpreted)

@@ -414,21 +414,15 @@ object ZstdSeq {
     val (hdrLen, nStreams, regen, comp) = sf match {
       case 0 | 1 =>
         if (end - off < 3) return None
-        val v = (b0 | ((bytes(off + 1) & 0xff) << 8) |
-          ((bytes(off + 2) & 0xff) << 16)) >>> 4
+        val v = Bytes.le24(bytes, off) >>> 4
         (3, if (sf == 0) 1 else 4, v & 0x3FF, (v >> 10) & 0x3FF)
       case 2 =>
         if (end - off < 4) return None
-        val v = ((b0 | ((bytes(off + 1) & 0xff) << 8) |
-          ((bytes(off + 2) & 0xff) << 16)).toLong |
-          ((bytes(off + 3) & 0xffL) << 24)) >>> 4
+        val v = Bytes.le32u(bytes, off) >>> 4
         (4, 4, (v & 0x3FFF).toInt, ((v >> 14) & 0x3FFF).toInt)
       case _ =>
         if (end - off < 5) return None
-        val v = ((b0 | ((bytes(off + 1) & 0xff) << 8) |
-          ((bytes(off + 2) & 0xff) << 16)).toLong |
-          ((bytes(off + 3) & 0xffL) << 24) |
-          ((bytes(off + 4) & 0xffL) << 32)) >>> 4
+        val v = (Bytes.le32u(bytes, off) | ((bytes(off + 4) & 0xffL) << 32)) >>> 4
         (5, 4, (v & 0x3FFFF).toInt, ((v >> 18) & 0x3FFFF).toInt)
     }
     if (regen > maxOut) return None
@@ -449,8 +443,7 @@ object ZstdSeq {
       } else {
         // 6-byte jump table: LE16 sizes of streams 1-3
         if (compEnd - p < 6) return None
-        def le16(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-        val (s1, s2, s3) = (le16(p), le16(p + 2), le16(p + 4))
+        val (s1, s2, s3) = (Bytes.le16(bytes, p), Bytes.le16(bytes, p + 2), Bytes.le16(bytes, p + 4))
         p += 6
         val streamTotal = compEnd - p
         if (s1 + s2 + s3 > streamTotal) return None
@@ -551,11 +544,10 @@ object ZstdSeq {
           if ((b0 & 4) == 0) (1, b0 >> 3)
           else if ((b0 & 8) == 0) {
             if (end - off < 2) return None
-            (2, ((b0 | ((bytes(off + 1) & 0xff) << 8)) >> 4))
+            (2, Bytes.le16(bytes, off) >> 4)
           } else {
             if (end - off < 3) return None
-            (3, ((b0 | ((bytes(off + 1) & 0xff) << 8) |
-              ((bytes(off + 2) & 0xff) << 16)) >> 4))
+            (3, Bytes.le24(bytes, off) >> 4)
           }
         if (regen > maxOut) return None
         p += litHdrLen
@@ -582,7 +574,7 @@ object ZstdSeq {
       nbSeq = ((s0 - 128) << 8) + (bytes(p + 1) & 0xff); p += 2
     } else {
       if (end - p < 3) return None
-      nbSeq = (bytes(p + 1) & 0xff) + ((bytes(p + 2) & 0xff) << 8) + 0x7F00
+      nbSeq = Bytes.le16(bytes, p + 1) + 0x7F00
       p += 3
     }
     if (nbSeq == 0)
@@ -737,11 +729,8 @@ object ZstdSeq {
     */
   def parseDictionary(bytes: Array[Byte]): Option[ZstdDictionary] = {
     val n = bytes.length
-    def le32(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
-    if (n < 8 || le32(0) != DictMagic) return None
-    val id = le32(4)
+    if (n < 8 || Bytes.le32u(bytes, 0) != DictMagic) return None
+    val id = Bytes.le32u(bytes, 4)
     var p = 8
     val hufOpt = readHufTable(bytes, p, n)
     if (hufOpt.isEmpty) return None
@@ -758,7 +747,7 @@ object ZstdSeq {
     val ml = fse(52, 9); if (ml.isEmpty) return None
     val ll = fse(35, 9); if (ll.isEmpty) return None
     if (n - p < 12) return None
-    val (r1, r2, r3) = (le32(p), le32(p + 4), le32(p + 8))
+    val (r1, r2, r3) = (Bytes.le32u(bytes, p), Bytes.le32u(bytes, p + 4), Bytes.le32u(bytes, p + 8))
     p += 12
     val content = java.util.Arrays.copyOfRange(bytes, p, n)
     // reps must be usable offsets: nonzero, within the seedable window
@@ -773,15 +762,13 @@ object ZstdSeq {
     * wire format.
     */
   def encodeDictionary(dictId: Long, content: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => out.write(((v >>> (8 * i)) & 0xff).toInt))
-    le32(DictMagic); le32(dictId)
+    val out = new ByteSink()
+    out.le32(DictMagic).le32(dictId)
     out.write(128); out.write(0x10) // huf: 1 explicit weight → 2 symbols, 1 bit
     // FSE ncount "all probability on symbol 0" at accuracy 5:
     // 4 bits accLog-5=0, then the 6-bit long-form count 63 → 33 → 32
     for (_ <- 0 until 3) { out.write(0xF0); out.write(0x03) }
-    le32(1L); le32(4L); le32(8L) // repeat offsets
+    out.le32(1L).le32(4L).le32(8L) // repeat offsets
     out.write(content)
     out.toByteArray
   }
@@ -850,10 +837,7 @@ object ZstdSeq {
   private def frameSeqCensusImpl(bytes: Array[Byte], maxOut: Int,
       dicts: Map[Long, ZstdDictionary]): (SeqCensus, Array[Byte]) = {
     val n = bytes.length
-    def le32(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
-    if (n < 6 || le32(0) != 0xFD2FB528L) return (InvalidCensus, null)
+    if (n < 6 || Bytes.le32u(bytes, 0) != 0xFD2FB528L) return (InvalidCensus, null)
     val fhd = bytes(4) & 0xff
     // Dictionary_ID_Flag (RFC 8878 §3.1.1.1.1): with the named
     // dictionary SUPPLIED the frame decodes against its seeded state;
@@ -879,8 +863,8 @@ object ZstdSeq {
     val dictId: Long = didLen match {
       case 0 => -1L
       case 1 => bytes(didPos) & 0xffL
-      case 2 => (bytes(didPos) & 0xffL) | ((bytes(didPos + 1) & 0xffL) << 8)
-      case _ => le32(didPos)
+      case 2 => Bytes.le16(bytes, didPos).toLong
+      case _ => Bytes.le32u(bytes, didPos)
     }
     val dict = if (didLen > 0) dicts.get(dictId) else None
     val dictGated = didLen > 0 && dict.isEmpty
@@ -899,8 +883,7 @@ object ZstdSeq {
     var last = false
     while (!last) {
       if (n - pos < 3) return (InvalidCensus, null)
-      val h = (bytes(pos) & 0xffL) | ((bytes(pos + 1) & 0xffL) << 8) |
-        ((bytes(pos + 2) & 0xffL) << 16)
+      val h = Bytes.le24(bytes, pos).toLong
       pos += 3
       last = (h & 1) != 0
       val tpe = ((h >> 1) & 3).toInt
@@ -960,7 +943,7 @@ object ZstdSeq {
     if (hasChecksum) {
       if (n - pos < 4) return (InvalidCensus, null)
       if (tracked && nUnsup == 0 && nFail == 0)
-        contentOk = if (ZstdOps.xxh64Low32(content.toByteArray) == le32(pos)) 1 else 0
+        contentOk = if (ZstdOps.xxh64Low32(content.toByteArray) == Bytes.le32u(bytes, pos)) 1 else 0
       pos += 4
     }
     (SeqCensus(if (pos == n) 1 else 0, nBlocks, nRaw, nRle, nComp,

@@ -2287,7 +2287,6 @@ object AnalyticsQueries {
     */
   val q340 = Q("q340_bradley_terry",
     (s, dir) => {
-      import s.implicits._
       val cells = Tables.load(s, dir, "orders")
         .selectExpr("o_orderkey % 8 AS a",
           "(o_orderkey % 8 + 1 + (o_orderkey div 8) % 7) % 8 AS b",

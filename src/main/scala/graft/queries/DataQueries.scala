@@ -1915,7 +1915,6 @@ object DataQueries {
 
   val q114 = Q("q114_cluster_canonical",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       // r16: fan once for BOTH consumers — minhashLshPairs fans its
       // own input anyway, and the quality-score pass otherwise fuses
       // into a one-task scan (424 ms single-task stage measured)

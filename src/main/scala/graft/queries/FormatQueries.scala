@@ -1,11 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
 import graft.Tables
-import graft.operators.{AvroOps, Lz4Ops, NalCensus, OrcOps, ParquetFooter, SnappyFrameOps, SnappyRaw, TfRecordOps, ZstdOps, ZstdSeq}
 
 /** Storage/codec format walkers: parquet footer + page index, ORC tail /
   * stripe stats / zone pruning, Avro OCF, TFRecord/tf.Example, snappy +

@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{DeltaLogOps, HudiOps, IcebergOps, ScaleOps}
+import graft.operators.{DeltaLogOps, HudiOps, IcebergOps}
 
 /** Lake-format metadata queries: Delta transaction-log census / prune /
   * incremental fold / checkpoint replay / deletion vectors / VACUUM +

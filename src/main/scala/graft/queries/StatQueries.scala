@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -20,7 +20,8 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.sparkContext.master == "local[4]")
     val core = spark.sparkContext.getConf
     assert(core.get("spark.shuffle.sort.bypassMergeThreshold") == "2")
-    assert(core.get("spark.local.dir").nonEmpty)
+    // set only when SPARK_LOCAL_DIRS, which Spark prefers, is absent
+    assert(core.getOption("spark.local.dir").isDefined == !sys.env.contains("SPARK_LOCAL_DIRS"))
     assert(sql.get("spark.sql.warehouse.dir").contains(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_warehouse").getAbsolutePath))
     assert(org.apache.logging.log4j.LogManager

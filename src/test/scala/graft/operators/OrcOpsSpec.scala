@@ -79,17 +79,17 @@ class OrcOpsSpec extends SparkSpec {
   }
 
   test("non-monotonic stripe offsets are flagged; truncated stats zero the census") {
-    def footerWith(body: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
-      val f = new java.io.ByteArrayOutputStream(); body(f); f.toByteArray
+    def footerWith(body: ByteSink => Unit): Array[Byte] = {
+      val f = new ByteSink(); body(f); f.toByteArray
     }
     def wrap(footer: Array[Byte]): Array[Byte] = {
-      val ps = new java.io.ByteArrayOutputStream()
-      TfRecordOps.pbVarint(ps, (1L << 3) | 0)
-      TfRecordOps.pbVarint(ps, footer.length.toLong)
-      TfRecordOps.pbVarint(ps, (2L << 3) | 0)
-      TfRecordOps.pbVarint(ps, 0L) // compression NONE
+      val ps = new ByteSink()
+      ps.varint((1L << 3) | 0)
+      ps.varint(footer.length.toLong)
+      ps.varint((2L << 3) | 0)
+      ps.varint(0L) // compression NONE
       TfRecordOps.pbLen(ps, 8000, "ORC".getBytes("US-ASCII"))
-      val out = new java.io.ByteArrayOutputStream()
+      val out = new ByteSink()
       out.write("ORC".getBytes("US-ASCII"))
       out.write(footer); out.write(ps.toByteArray); out.write(ps.size)
       out.toByteArray
@@ -97,9 +97,9 @@ class OrcOpsSpec extends SparkSpec {
     // two stripes at the SAME offset: walked fine, monotonic flag drops
     val dup = footerWith { f =>
       (1 to 2).foreach { _ =>
-        val s = new java.io.ByteArrayOutputStream()
-        TfRecordOps.pbVarint(s, (1L << 3) | 0); TfRecordOps.pbVarint(s, 5L)
-        TfRecordOps.pbVarint(s, (5L << 3) | 0); TfRecordOps.pbVarint(s, 10L)
+        val s = new ByteSink()
+        s.varint((1L << 3) | 0); s.varint(5L)
+        s.varint((5L << 3) | 0); s.varint(10L)
         TfRecordOps.pbLen(f, 3, s.toByteArray)
       }
     }
@@ -109,8 +109,8 @@ class OrcOpsSpec extends SparkSpec {
     // a ColumnStatistics whose declared length overruns the footer:
     // wire violation, census zeroed whole (stop-don't-guess)
     val cut = footerWith { f =>
-      TfRecordOps.pbVarint(f, (7L << 3) | 2)
-      TfRecordOps.pbVarint(f, 100L) // declares 100 bytes, none follow
+      f.varint((7L << 3) | 2)
+      f.varint(100L) // declares 100 bytes, none follow
     }
     assert(OrcOps.parse(wrap(cut)).valid == 0)
   }

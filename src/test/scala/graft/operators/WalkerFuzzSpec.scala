@@ -33,6 +33,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * Mutants that happen to stay well-formed just pass through — the
   * harness asserts robustness invariants, not specific counts (the
   * per-format specs pin those).
+  *
+  * Every walker reads through the shared byte layer (`Bytes.scala`:
+  * ByteCursor, BitCursor, the absolute reads, `riffChunks`), whose
+  * overruns all raise the one `Malformed` each walker maps to its
+  * fail-closed result; BytesSpec pins the layer's bounds directly, and
+  * this harness checks that each walker keeps the contract on top of
+  * it. The four WAV decoders (PCM, IMA ADPCM, µ-law, A-law) share one
+  * RIFF chunk walk, and each is fuzzed here.
   */
 class WalkerFuzzSpec extends AnyFunSuite {
 
@@ -381,6 +389,24 @@ class WalkerFuzzSpec extends AnyFunSuite {
       rnd => AudioCodec.encodePcmWav(8000, 1 + rnd.nextInt(2),
         Array.fill(8 + rnd.nextInt(400))(rnd.nextInt(65536).toShort)),
       b => (AudioCodec.decodePcmWav(b).map(_._3.length.toLong).getOrElse(0L), 0L),
+      appendStable = false),
+    Fuzzed("wav-adpcm",
+      rnd => {
+        val perBlock = 1 + rnd.nextInt(40)
+        AudioCodec.encodeImaAdpcmWav(8000, (0 until 1 + rnd.nextInt(4)).map { i =>
+          (rnd.nextInt(65536) - 32768, rnd.nextInt(89),
+            Array.fill(if (i == 0) perBlock else 1 + rnd.nextInt(perBlock))(rnd.nextInt(16)))
+        })
+      },
+      b => (AudioCodec.decodeImaAdpcmWav(b).map(_._3.length.toLong).getOrElse(0L), 0L),
+      appendStable = false),
+    Fuzzed("wav-mulaw",
+      rnd => AudioCodec.encodeMulawWav(8000, Array.fill(1 + rnd.nextInt(400))(rnd.nextInt(256))),
+      b => (AudioCodec.decodeMulawWav(b).map(_._3.length.toLong).getOrElse(0L), 0L),
+      appendStable = false),
+    Fuzzed("wav-alaw",
+      rnd => AudioCodec.encodeAlawWav(8000, Array.fill(1 + rnd.nextInt(400))(rnd.nextInt(256))),
+      b => (AudioCodec.decodeAlawWav(b).map(_._3.length.toLong).getOrElse(0L), 0L),
       appendStable = false),
     Fuzzed("avi-dib",
       rnd => {

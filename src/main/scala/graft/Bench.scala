@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
 object Bench {
@@ -63,8 +64,7 @@ object Bench {
       // measured 12 s here vs 1.4 s in a clean session before this.
       // Cleanup runs AFTER the 3 runs, so plan-matched cache reuse
       // between a query's own repeats (the warm min) is preserved.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      GraftSqlBridge.releaseAll(spark)
       name -> (if (good.nonEmpty) good.min else times.min)
     }
     // captured error strings (AnalysisException plan fragments) embed
@@ -165,8 +165,7 @@ object Bench {
             try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
             catch { case _: Throwable => None }
           }
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          spark.sharedState.cacheManager.clearCache()
+          GraftSqlBridge.releaseAll(spark)
           ts.minOption.map(t => short -> BaselineLedger.Ratio(
             (t * (l.calibRef / c)) / l.queries(short), t / l.queries(short)))
         }
@@ -952,10 +951,6 @@ object Bench {
         sfScale += ("sf_scale_gen_sec" -> genSec)
         val byShort = SparkEntry.queries.map { case (k, f) =>
           (k.indexOf('_') match { case -1 => k; case i => k.substring(0, i) }) -> f }
-        def drop(): Unit = {
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          spark.sharedState.cacheManager.clearCache()
-        }
         val budgetSec = 480.0
         var spent = 0.0
         var skipped = 0
@@ -963,9 +958,9 @@ object Bench {
           byShort.get(q) match {
             case Some(fn) if spent < budgetSec =>
               val t1 = sec(fn(spark, sfDir).count())
-              drop()
+              GraftSqlBridge.releaseAll(spark)
               val t10 = sec(fn(spark, scaleDir).count())
-              drop()
+              GraftSqlBridge.releaseAll(spark)
               spent += t1 + t10
               sfScale += (s"sf_scale_${q}_1x_sec" -> t1)
               sfScale += (s"sf_scale_${q}_10x_sec" -> t10)

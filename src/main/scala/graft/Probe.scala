@@ -67,8 +67,7 @@ object Probe {
       // same per-query cleanup as Bench: localCheckpoint blocks otherwise
       // accumulate across queries and block-manager pressure skews the
       // later measurements (q198 measured 15.9 s here vs 3.7 s clean)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      org.apache.spark.sql.graft.GraftSqlBridge.releaseAll(spark)
       println(f"PROBE ${q.name}: ${times.map(t => f"$t%.2f").mkString(" ")} s")
       if (showJobs) {
         import scala.jdk.CollectionConverters._

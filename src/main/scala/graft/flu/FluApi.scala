@@ -5,9 +5,11 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Live HTTP serving layer over the registered report views — the one
+/** Live HTTP serving layer over the registered batch — the one
   * reference runtime surface (api/app.py) the report SQLs alone don't
   * cover. Endpoints, response envelopes ({"data": [...], "summary":
   * {...}}), status codes, presentation formatting, the export
@@ -24,24 +26,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Built on the JDK's `com.sun.net.httpserver` (no new dependencies).
   * `/viewer` is behavior parity with original markup: a static page
-  * whose script drives the same report/export endpoints. This is
-  * a driver-side serving shim over already-small report relations, not
-  * a data path: every query it runs is bounded (LIMIT 20 / per-region
-  * rollup / LIMIT 1000), so collecting to the driver is the design.
+  * whose script drives the same report/export endpoints. Report and
+  * export bodies are rendered once per batch (`FluReports.registerViews`)
+  * from bounded queries over the pinned tables, then served from memory
+  * without a Spark job; `/health` runs `SELECT 1` on every request.
   */
 object FluApi {
 
-  /** Start the API over `spark`'s registered temp views. `port` 0 binds
-    * an ephemeral port (see `server.getAddress.getPort`). Caller stops
-    * it with `server.stop(0)`. The worker pool uses DAEMON threads:
-    * `HttpServer.stop` does not shut down its executor, so a non-daemon
-    * pool would outlive the server and hang JVM exit for any embedding
-    * app.
+  /** Start the API over `spark`'s registered batch, which must exist.
+    * `port` 0 binds an ephemeral port (see `server.getAddress.getPort`).
+    * Caller stops it with `server.stop(0)`. The worker pool uses DAEMON
+    * threads: `HttpServer.stop` does not shut down its executor, so a
+    * non-daemon pool would outlive the server and hang JVM exit for any
+    * embedding app.
     */
   def start(spark: SparkSession, port: Int = 5000): HttpServer = {
+    require(FluReports.isRegistered(spark),
+      "FluApi.start: no registered batch; call FluReports.registerViews first")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", exchange => route(spark, exchange))
-    // small pool: report queries are sub-second over bounded relations
+    // small pool: a request renders at most one bounded query, once per
+    // batch, and is otherwise served from memory
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
       (r: Runnable) => {
         val t = new Thread(r, "flu-api-worker")
@@ -57,15 +62,8 @@ object FluApi {
       case "/" => respondJson(ex, 200, home)
       case "/viewer" => respondHtml(ex, 200, viewerHtml)
       case "/health" => health(spark, ex)
-      case "/api/reports/weekly-trends" =>
-        report(ex, FluReports.formatWeeklyTrends(FluReports.weeklyTrends(spark)),
-          weeklySummary)
-      case "/api/reports/healthcare-impact" =>
-        report(ex, FluReports.formatHealthcareImpact(FluReports.healthcareImpact(spark)),
-          healthcareSummary)
-      case "/api/reports/historical-summary" =>
-        report(ex, FluReports.formatHistoricalSummary(FluReports.historicalSummary(spark)),
-          historicalSummary)
+      case ReportPath(name) if reports.contains(name) =>
+        respondJson(ex, 200, FluReports.answer(spark, name)(reportBody(spark, name)))
       case "/api/export/csv" => exportCsv(spark, ex)
       case other => respondJson(ex, 404, obj("error" -> s"not found: $other"))
     } catch {
@@ -76,6 +74,18 @@ object FluApi {
         try respondJson(ex, 500, obj("error" -> String.valueOf(e.getMessage)))
         catch { case _: Exception => () }
     } finally ex.close()
+
+  private val ReportPath = "/api/reports/([^/]+)".r
+
+  /** The report endpoints: dashboard title, formatted query, summary. */
+  private[flu] val reports = ListMap[String, (String, SparkSession => DataFrame,
+      (Seq[String], Seq[Seq[Any]]) => String)](
+    "weekly-trends" -> ("Weekly Flu Activity Trends",
+      s => FluReports.formatWeeklyTrends(FluReports.weeklyTrends(s)), weeklySummary _),
+    "healthcare-impact" -> ("Healthcare Impact by ACH Region",
+      s => FluReports.formatHealthcareImpact(FluReports.healthcareImpact(s)), healthcareSummary _),
+    "historical-summary" -> ("Historical Flu Season Summary",
+      s => FluReports.formatHistoricalSummary(FluReports.historicalSummary(s)), historicalSummary _))
 
   private val home: String = obj(
     "message" -> "Flu Data Pipeline API",
@@ -96,17 +106,12 @@ object FluApi {
     * summary-then-table layout, N/A for nulls).
     */
   private val viewerHtml: String = {
-    val tables = Seq("county_region", "temporal", "illness", "healthcare", "historics")
-    val reports = Seq(
-      "weekly-trends" -> "Weekly Flu Activity Trends",
-      "healthcare-impact" -> "Healthcare Impact by ACH Region",
-      "historical-summary" -> "Historical Flu Season Summary")
-    val exportButtons = tables.map(t =>
+    val exportButtons = FluReports.tableNames.map(t =>
       s"""<button class="exp" onclick="dl('$t')">$t</button>""").mkString("\n      ")
-    val reportCards = reports.map { case (key, title) =>
+    val reportCards = reports.map { case (key, (title, _, _)) =>
       s"""<div class="card" onclick="show('$key')"><h3>$title</h3></div>"""
     }.mkString("\n      ")
-    val titleMap = reports.map { case (k, t) => s"'$k':'$t'" }.mkString("{", ",", "}")
+    val titleMap = reports.map { case (k, (t, _, _)) => s"'$k':'$t'" }.mkString("{", ",", "}")
     s"""<!DOCTYPE html>
 <html>
 <head>
@@ -182,14 +187,16 @@ object FluApi {
           obj("status" -> "unhealthy", "error" -> String.valueOf(e.getMessage)))
     }
 
-  /** Shared report shape: formatted rows + an endpoint-specific summary. */
-  private def report(ex: HttpExchange, formatted: DataFrame,
-                     summary: (Seq[String], Seq[Seq[Any]]) => String): Unit = {
+  /** Report `name`'s body, rendered from a direct `FluReports` call:
+    * formatted rows + the endpoint-specific summary.
+    */
+  private[flu] def reportBody(spark: SparkSession, name: String): String = {
+    val (_, query, summary) = reports(name)
+    val formatted = query(spark)
     val cols = formatted.columns.toSeq
     val rows = formatted.collect().toSeq.map(_.toSeq)
     val data = rows.map(r => obj(cols.zip(r): _*))
-    respondJson(ex, 200,
-      s"""{"data": [${data.mkString(", ")}], "summary": ${summary(cols, rows)}}""")
+    s"""{"data": [${data.mkString(", ")}], "summary": ${summary(cols, rows)}}"""
   }
 
   /** api/app.py:245-250 — first (latest) row's week, formatted %, type. */
@@ -231,27 +238,32 @@ object FluApi {
     val table = Option(ex.getRequestURI.getQuery).getOrElse("")
       .split("&").map(_.split("=", 2))
       .collectFirst { case Array("table", v) => v }.getOrElse("")
-    val valid = Seq("county_region", "healthcare", "historics", "illness", "temporal")
-    if (!valid.contains(table)) {
-      respondJson(ex, 400,
-        obj("error" -> s"Invalid table. Choose from: ${valid.mkString(", ")}"))
+    if (!FluReports.tableNames.contains(table)) {
+      respondJson(ex, 400, obj("error" ->
+        s"Invalid table. Choose from: ${FluReports.tableNames.sorted.mkString(", ")}"))
     } else {
-      val df = FluReports.exportTable(spark, table)
-      val sb = new StringBuilder
-      sb.append(df.columns.map(csvField).mkString(",")).append("\r\n")
-      df.collect().foreach { row =>
-        sb.append(row.toSeq.map {
-          case null => "" // Python csv writes None as the empty field
-          case v => csvField(v.toString)
-        }.mkString(",")).append("\r\n")
-      }
-      val bytes = sb.toString.getBytes(StandardCharsets.UTF_8)
+      val bytes = FluReports.answer(spark, table)(exportBody(spark, table))
+        .getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "text/csv")
       ex.getResponseHeaders.set("Content-Disposition",
         s"attachment; filename=$table.csv")
       ex.sendResponseHeaders(200, bytes.length.toLong)
       ex.getResponseBody.write(bytes)
     }
+  }
+
+  /** Table `table`'s CSV export, rendered from a direct `FluReports` call. */
+  private[flu] def exportBody(spark: SparkSession, table: String): String = {
+    val df = FluReports.exportTable(spark, table)
+    val sb = new StringBuilder
+    sb.append(df.columns.map(csvField).mkString(",")).append("\r\n")
+    df.collect().foreach { row =>
+      sb.append(row.toSeq.map {
+        case null => "" // Python csv writes None as the empty field
+        case v => csvField(v.toString)
+      }.mkString(",")).append("\r\n")
+    }
+    sb.toString
   }
 
   // ------------------------------------------------------- plumbing

@@ -58,12 +58,10 @@ object FluDemo {
       Thread.currentThread.join() // worker pool is daemon; hold the JVM open
       return
     }
-    println("== weekly-trends ==")
-    FluReports.formatWeeklyTrends(FluReports.weeklyTrends(spark)).show(20, truncate = false)
-    println("== healthcare-impact ==")
-    FluReports.formatHealthcareImpact(FluReports.healthcareImpact(spark)).show(false)
-    println("== historical-summary ==")
-    FluReports.formatHistoricalSummary(FluReports.historicalSummary(spark)).show(false)
+    FluApi.reports.foreach { case (name, (_, query, _)) =>
+      println(s"== $name ==")
+      query(spark).show(20, truncate = false)
+    }
     println(s"== export illness rows: ${FluReports.exportTable(spark, "illness").count()}")
     spark.stop()
   }

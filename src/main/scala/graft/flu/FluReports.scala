@@ -1,7 +1,11 @@
 package graft.flu
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantReadWriteLock
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge.releaseCheckpoint
 
 /** The serving-layer query surface (reference: api/app.py): three canned
   * report SQLs, presentation formatting, and the capped CSV export.
@@ -11,9 +15,63 @@ import org.apache.spark.sql.functions._
   */
 object FluReports {
 
-  /** Register the five tables as temp views for spark.sql. */
-  def registerViews(tables: Map[String, DataFrame]): Unit =
-    tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+  /** The five served tables, in dashboard order: the export allowlist. */
+  val tableNames: Seq[String] = Seq("county_region", "temporal", "illness", "healthcare", "historics")
+
+  /** A served batch: its pinned tables and its answers by key (a report
+    * or an export table name).
+    */
+  private final class Batch(val pinned: Iterable[DataFrame]) {
+    val answers = new ConcurrentHashMap[String, Answer]
+  }
+
+  /** Rendered by the first request that reads it; concurrent first
+    * requests wait for that one, and a failed render is retried.
+    */
+  private final class Answer(render: => String) { lazy val body: String = render }
+
+  /** Answers render under the read lock and batches swap under the write
+    * lock, so no snapshot is released while an answer still reads it.
+    */
+  private val lock = new ReentrantReadWriteLock
+  private val batches = new ConcurrentHashMap[SparkSession, Batch]
+
+  /** Start a new batch on the tables' session. Each table is pinned
+    * once, as an eager local checkpoint, and registered as a temp view
+    * over the pinned copy; the session's previous batch is swapped out
+    * and its snapshot's blocks released. Until the next call, each report
+    * and export answer is rendered once and then served from the batch
+    * ([[answer]]). This is result caching: it is sound because a pinned
+    * snapshot cannot change, and an answer lives exactly as long as the
+    * snapshot it was computed from. Frames built over the previous
+    * batch's views cannot run after the swap.
+    */
+  def registerViews(tables: Map[String, DataFrame]): Unit = {
+    require(tables.nonEmpty, "registerViews: no tables")
+    val pinned = tables.map { case (name, df) => name -> df.localCheckpoint(true) }
+    lock.writeLock.lock()
+    try {
+      pinned.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      batches.keySet.removeIf(_.sparkContext.isStopped)
+      Option(batches.put(pinned.head._2.sparkSession, new Batch(pinned.values)))
+        .foreach(_.pinned.foreach(releaseCheckpoint))
+    } finally lock.writeLock.unlock()
+  }
+
+  /** Whether `spark` has a registered batch to serve. */
+  def isRegistered(spark: SparkSession): Boolean = batches.containsKey(spark)
+
+  /** Answer `key` of `spark`'s current batch: `render` runs on the first
+    * request for it in this batch and never again. Callers pass fixed
+    * keys only, so a batch holds at most one answer per report and table.
+    */
+  def answer(spark: SparkSession, key: String)(render: => String): String = {
+    lock.readLock.lock()
+    try Option(batches.get(spark))
+      .getOrElse(throw new IllegalStateException("no registered batch: call registerViews first"))
+      .answers.computeIfAbsent(key, _ => new Answer(render)).body
+    finally lock.readLock.unlock()
+  }
 
   /** Weekly flu activity trends (reference: api/app.py:219-233). */
   val weeklyTrendsSql: String = """
@@ -81,14 +139,11 @@ object FluReports {
     Seq("peak_ili_percent", "average_wili_percent", "peak_vs_avg_diff")
       .foldLeft(df)((d, c) => d.withColumn(c, format_string("%.2f%%", col(c))))
 
-  private val exportableTables =
-    Set("county_region", "temporal", "illness", "healthcare", "historics")
-
   /** Capped table export with the allowlist guard (reference:
     * api/app.py:348-378).
     */
   def exportTable(spark: SparkSession, table: String): DataFrame = {
-    require(exportableTables.contains(table), s"invalid table: $table")
+    require(tableNames.contains(table), s"invalid table: $table")
     spark.table(table).limit(1000)
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *  - `ofRows`: wrap a hand-built LogicalPlan in a DataFrame;
   *  - `expr`: recover the Catalyst expression behind a public Column
   *    (Spark 4 moved `Column.expr` behind the classic module);
-  *  - `releaseCheckpoint`: free a local checkpoint's blocks quietly.
+  *  - `releaseCheckpoint`: free a local checkpoint's blocks quietly;
+  *  - `releaseAll`: free every persistent RDD and cached relation.
   */
 object GraftSqlBridge {
 
@@ -35,6 +36,22 @@ object GraftSqlBridge {
       case r: org.apache.spark.sql.execution.LogicalRDD => sc.unpersistRDD(r.rdd.id, blocking = false)
       case _ =>
     }
+  }
+
+  /** Free every persistent RDD and every cached relation of `spark`:
+    * the per-query cleanup between benchmarked queries. Local
+    * checkpoints go through `SparkContext.unpersistRDD`, the quiet path
+    * `releaseCheckpoint` uses; other RDDs through `RDD.unpersist`, which
+    * also resets their storage level so a later reuse is not re-cached.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach { rdd =>
+      val local = rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]])
+      if (local) sc.unpersistRDD(rdd.id, blocking = false)
+      else rdd.unpersist(blocking = false)
+    }
+    spark.sharedState.cacheManager.clearCache()
   }
 
   /** Local checkpoint that KEEPS a hash partitioning (and optionally a

@@ -18,7 +18,6 @@ class CanarySpec extends SparkSpec {
   }
 
   test("a deliberately mis-decoded ts trips the canary") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("canary_bad").toString
     // copy every table, but write events with ts shrunk 1000x — exactly
     // what the round-6 div-1000 bug produced (micros treated as nanos)
@@ -46,7 +45,6 @@ class CanarySpec extends SparkSpec {
   }
 
   test("footer sniff decodes legacy unannotated INT64-nanos events identically") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("canary_legacy").toString
     // regenerate the pre-round-7 encoding: raw epoch nanos as plain LongType
     // (Spark writes LongType as unannotated INT64 — no timestamp logical type)

@@ -2,8 +2,14 @@ package graft.flu
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
@@ -19,6 +25,7 @@ class FluApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     server.stop(0)
+    spark.sparkContext.removeSparkListener(jobListener)
     super.afterAll()
   }
 
@@ -27,15 +34,48 @@ class FluApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def readCsv(path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
+  private def goldenTables: Map[String, DataFrame] = Map(
+    "county_region" -> readCsv(s"$goldenDir/county_region.csv", FluSchemas.countyRegion),
+    "temporal" -> readCsv(s"$goldenDir/temporal.csv", FluSchemas.temporal),
+    "illness" -> readCsv(s"$goldenDir/illness.csv", FluSchemas.illness),
+    "healthcare" -> readCsv(s"$goldenDir/healthcare.csv", FluSchemas.healthcare),
+    "historics" -> readCsv(s"$goldenDir/historic_flu.csv", FluSchemas.historics))
+
   private lazy val server = {
-    FluReports.registerViews(Map(
-      "county_region" -> readCsv(s"$goldenDir/county_region.csv", FluSchemas.countyRegion),
-      "temporal" -> readCsv(s"$goldenDir/temporal.csv", FluSchemas.temporal),
-      "illness" -> readCsv(s"$goldenDir/illness.csv", FluSchemas.illness),
-      "healthcare" -> readCsv(s"$goldenDir/healthcare.csv", FluSchemas.healthcare),
-      "historics" -> readCsv(s"$goldenDir/historic_flu.csv", FluSchemas.historics)))
+    FluReports.registerViews(goldenTables)
     FluApi.start(spark, 0) // ephemeral port
   }
+
+  /** Submission times (ms) of every Spark job, in listener-bus order. */
+  private val jobTimes = new ConcurrentLinkedQueue[Long]()
+  private lazy val jobListener = {
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobTimes.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
+
+  /** Sends `/health` and waits until the bus has delivered a job it
+    * started. The bus delivers in order, so every earlier job has been
+    * seen too. Returns the request's start time.
+    */
+  private def healthBarrier(): Long = {
+    val t0 = System.currentTimeMillis()
+    assert(get("/health")._1 == 200)
+    val deadline = t0 + 60000
+    while (!jobTimes.asScala.exists(_ >= t0) && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+    assert(jobTimes.asScala.exists(_ >= t0), "/health started no Spark job")
+    t0
+  }
+
+  private val reportPaths = FluApi.reports.keys.toSeq.map(name => s"/api/reports/$name")
+  private val exportPaths = FluReports.tableNames.map(t => s"/api/export/csv?table=$t")
+
+  /** Ids of the RDDs pinned under the registered views. */
+  private def pinnedIds(): Seq[Int] = FluReports.tableNames.flatMap(t =>
+    spark.table(t).queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id })
 
   private def get(path: String): (Int, String, Map[String, String]) = {
     val port = server.getAddress.getPort
@@ -162,5 +202,74 @@ class FluApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("unknown path is a 404") {
     assert(get("/api/nope")._1 == 404)
+  }
+
+  test("repeat report and export requests start no Spark job; /health always does") {
+    jobListener
+    (reportPaths ++ exportPaths).foreach(p => assert(get(p)._1 == 200, p))
+    healthBarrier()
+    Thread.sleep(5)
+    val t0 = System.currentTimeMillis()
+    (reportPaths :+ reportPaths.head).foreach(p => assert(get(p)._1 == 200, p))
+    exportPaths.foreach(p => assert(get(p)._1 == 200, p))
+    Thread.sleep(5)
+    val t1 = healthBarrier()
+    assert(jobTimes.asScala.count(t => t >= t0 && t < t1) == 0)
+  }
+
+  test("served bodies equal the bodies rendered from direct FluReports calls") {
+    FluApi.reports.keys.foreach { name =>
+      assert(get(s"/api/reports/$name")._2 == FluApi.reportBody(spark, name), name)
+    }
+    FluReports.tableNames.foreach { t =>
+      assert(get(s"/api/export/csv?table=$t")._2 == FluApi.exportBody(spark, t), t)
+    }
+  }
+
+  test("a new batch changes the served answers and releases the old snapshot") {
+    val before = get("/api/reports/weekly-trends")._2
+    val oldIds = pinnedIds()
+    assert(oldIds.size == FluReports.tableNames.size)
+    // drop a county that reports in the latest week
+    val county = spark.table("illness").orderBy(col("epiweek_id").desc)
+      .where(col("county_id").isNotNull).select("county_id").head().get(0)
+    val golden = goldenTables
+    FluReports.registerViews(golden.updated("illness",
+      golden("illness").where(not(col("county_id") <=> lit(county)))))
+    val persistent = spark.sparkContext.getPersistentRDDs
+    assert(oldIds.forall(id => !persistent.contains(id)), oldIds)
+    assert(pinnedIds().forall(persistent.contains))
+    val after = get("/api/reports/weekly-trends")._2
+    assert(after != before)
+    assert(after == FluApi.reportBody(spark, "weekly-trends"))
+    FluReports.registerViews(goldenTables)
+    assert(get("/api/reports/weekly-trends")._2 == before)
+  }
+
+  test("requests racing a new batch are all answered") {
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val start = new CountDownLatch(1)
+      val replies = (0 until 8).map { i =>
+        val path = if (i % 2 == 0) reportPaths(i % reportPaths.size) else exportPaths(i % exportPaths.size)
+        pool.submit(new Callable[Int] {
+          def call(): Int = { start.await(); get(path)._1 }
+        })
+      }
+      start.countDown()
+      FluReports.registerViews(goldenTables)
+      assert(replies.map(_.get(120, TimeUnit.SECONDS)).forall(_ == 200))
+    } finally pool.shutdown()
+  }
+
+  test("batches are per session, and the API needs one to start") {
+    val other = spark.newSession()
+    assertThrows[IllegalArgumentException](FluApi.start(other, 0))
+    val ids = pinnedIds()
+    FluReports.registerViews(Map("historics" ->
+      other.read.option("header", "true").schema(FluSchemas.historics)
+        .csv(s"$goldenDir/historic_flu.csv")))
+    assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+    assert(get("/api/reports/historical-summary")._1 == 200)
   }
 }

@@ -22,7 +22,6 @@ class OrcDataSpec extends SparkSpec {
     df.collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
 
   test("REAL Spark ORC decodes value-exact across codecs and RLEv2 shapes") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val n = 30000L
     val shapes = Seq(

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** ORC tail walker — the real-world pin first (Spark's own ORC writer,
@@ -188,11 +186,6 @@ class OrcOpsSpec extends SparkSpec {
     // hand-build a postscript declaring a footer larger than the file
     val out = new java.io.ByteArrayOutputStream()
     out.write("ORC".getBytes("US-ASCII"))
-    def vi(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
-    }
     val ps = new java.io.ByteArrayOutputStream()
     def pvi(v0: Long): Unit = {
       var v = v0

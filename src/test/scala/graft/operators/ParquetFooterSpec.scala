@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.SparkSpec
 
 /** Parquet footer walker — the real-world pin first (every testdata

@@ -20,7 +20,6 @@ class ParquetPagesSpec extends SparkSpec {
   }
 
   test("REAL parquet-mr chunk: snappy + dictionary + nulls hash-matches the engine's own read") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val n = 20000L
     // low-cardinality → dictionary-encoded throughout; nulls every 7th

@@ -97,7 +97,6 @@ class RelationalSpec extends SparkSpec {
 
   test("extendDictionaryBatchStep: codes frozen across micro-batches and a crashed swap recovers") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val dictPath = java.nio.file.Files.createTempDirectory("graft-dict").toString + "/dict"
     Relational.extendDictionaryBatchStep(
       Seq("web", "web", "wiki").toDF("source"), dictPath, "source", "code")

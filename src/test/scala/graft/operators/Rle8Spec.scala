@@ -130,7 +130,7 @@ class Rle8Spec extends SparkSpec {
     // with NegativeArraySizeException on the canvas allocation
     val frame = Array.tabulate(4 * 3)(i => i * 10 % 256)
     val avi = VideoCodec.encodeRle8Avi(4, 3, 10, Seq(frame))
-    var i = avi.indexOfSlice("strf".getBytes("US-ASCII"))
+    val i = avi.indexOfSlice("strf".getBytes("US-ASCII"))
     assert(i > 0, "no strf chunk in fixture")
     def putLe32(off: Int, v: Int): Unit = {
       avi(off) = (v & 0xff).toByte; avi(off + 1) = ((v >> 8) & 0xff).toByte

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** [[RobotsOps]] — longest-match fetchability semantics (q320). */

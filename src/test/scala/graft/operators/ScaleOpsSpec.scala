@@ -82,7 +82,6 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val warehouse = spark.conf.getOption("spark.sql.warehouse.dir")
     val l = Tables.load(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
     val o = Tables.load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     ScaleOps.writeBucketed(l, "b_lineitem", Seq("l_orderkey"), 4)
@@ -187,7 +186,6 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("replicateScaled: an offset below the source's max key is raised, never collides") {
-    import org.apache.spark.sql.functions._
     val src = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft-sfscale-off").toString
     // the requested offset is far below the source's max key — the

@@ -142,12 +142,6 @@ class TfRecordOpsSpec extends AnyFunSuite {
   test("tf.Example: non-packed encodings count the same values") {
     // hand-build a Feature with repeated fixed32 floats and repeated
     // varint int64s (pre-proto3 encodings real shards still carry)
-    val o = new java.io.ByteArrayOutputStream()
-    def vi(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { o.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      o.write(v.toInt)
-    }
     def len(field: Int, body: Array[Byte]): Array[Byte] = {
       val b = new java.io.ByteArrayOutputStream()
       def w(v0: Long): Unit = {
@@ -175,7 +169,6 @@ class TfRecordOpsSpec extends AnyFunSuite {
     val good = TfRecordOps.encodeExample(1, 5, 2, Seq(1L), unknownField = false)
     // find the packed float region (8 bytes of floats) and shrink the
     // declared FloatList packed length by 1 — simplest: rebuild by hand
-    val o = new java.io.ByteArrayOutputStream()
     def len(field: Int, body: Array[Byte]): Array[Byte] = {
       val b = new java.io.ByteArrayOutputStream()
       def w(v0: Long): Unit = {

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 

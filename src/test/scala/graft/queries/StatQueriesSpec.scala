@@ -199,7 +199,6 @@ class StatQueriesSpec extends SparkSpec {
       assert(est >= exact, s"CMS underestimated: $est < $exact on $row")
     }
     // mergeability: counter tables of two halves sum to the whole's
-    import spark.implicits._
     val coeffs = graft.operators.Dedup.minhashCoeffs(4)
     def cms(df: org.apache.spark.sql.DataFrame) = df
       .select(explode(call_function("graft_shingle_hash_list", col("text"), lit(1))).as("uh"))
@@ -475,7 +474,6 @@ class StatQueriesSpec extends SparkSpec {
   }
 
   test("q203: Benford digit counts partition each priority's orders") {
-    import org.apache.spark.sql.functions._
     val r = rows(graft.queries.StatQueries.q203.fn(spark, sf))
     assert(r.nonEmpty)
     val perPriority = graft.Tables.load(spark, sf, "orders")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.SparkSpec
-import graft.flu.{FluFeeds, FluOps, FluSchemas}
+import graft.flu.{FluFeeds, FluOps}
 
 /** Ingestion-shim gate: the snapshot-backed fetch path must produce
   * byte-identical star-schema tables to the in-memory fixture build

@@ -3,6 +3,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
+import graft.Json.{string => jstr}
+import graft.SparkEntry.shortName
+
+/** The graded sweep: every `SparkEntry.queries` entry timed best-of-3,
+  * plus the two calibration canaries the record is normalised by. The
+  * full record goes to `bench_out.json`; stdout carries one short line.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -24,22 +31,13 @@ object Bench {
     val maxQ = sys.env.get("SPARK_GRAFT_MAX_Q").map(_.toInt)
     def qNum(name: String): Int =
       name.drop(1).takeWhile(_.isDigit) match { case "" => Int.MaxValue; case d => d.toInt }
-    // SPARK_GRAFT_ONLY_Q=q385,q386 measures just those queries (prefix
-    // match) with calib-only extras — the freeze path for adding
+    // SPARK_GRAFT_ONLY_Q=q385,q386 measures just those queries (full
+    // name or exact qNN, SparkEntry.selects) — the freeze path for adding
     // newly-landed queries to baseline_queries.json without a full run
     val onlyQ = sys.env.get("SPARK_GRAFT_ONLY_Q")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    // exact qNN (or full-name) match, not startsWith: a bare prefix
-    // like q38 would otherwise also select q380–q389 and freeze
-    // unintended queries in the baseline workflow
-    def shortOf(n: String) = n.indexOf('_') match {
-      case -1 => n
-      case i => n.substring(0, i)
-    }
     val selected = (onlyQ, maxQ) match {
-      case (Some(ps), _) =>
-        SparkEntry.queries.filter { case (n, _) =>
-          ps.contains(n) || ps.contains(shortOf(n)) }
+      case (Some(ps), _) => SparkEntry.queries.filter { case (n, _) => SparkEntry.selects(ps)(n) }
       case (_, Some(m)) => SparkEntry.queries.filter { case (n, _) => qNum(n) <= m }
       case _ => SparkEntry.queries
     }
@@ -67,69 +65,31 @@ object Bench {
       GraftSqlBridge.releaseAll(spark)
       name -> (if (good.nonEmpty) good.min else times.min)
     }
-    // captured error strings (AnalysisException plan fragments) embed
-    // newlines/tabs — escape all control chars so the record stays one
-    // valid JSON line
-    def jstr(s: String) = s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }.mkString("\"", "", "\"")
-    // The driver stores only a bounded tail of captured output and parses
-    // the JSON record out of it, so the whole record must stay ONE line
-    // comfortably under that window: millisecond precision, and the
-    // documented short "qNN" keys (full names live in SparkEntry.queries /
-    // CORRECTNESS_r*.json; the qNN prefix is unique by construction).
-    def fmt(v: Double): String = {
-      val r = math.rint(v * 1000) / 1000
-      BigDecimal(r).underlying.stripTrailingZeros.toPlainString
-    }
-    def shortName(n: String) = n.indexOf('_') match {
-      case -1 => n
-      case i => n.substring(0, i)
-    }
-    val qs = results.map { case (k, v) => jstr(shortName(k)) + ":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(math.abs).sum else 0.0
-    val extras = measureExtras(spark, sfDir, errors)
-    val exJson = extras.map { case (k, v) => jstr(k) + ":" + fmt(v) }
-      .mkString(",\"extras\":{", ",", "}")
-    val errJson =
-      if (errors.isEmpty) ""
-      else errors.map { case (k, v) => jstr(shortName(k)) + ":" + jstr(v.take(80)) }
-        .mkString(",\"errors\":{", ",", "}")
-    // The driver keeps only a bounded tail of stdout, and the full
-    // 168-query record overflows it (BENCH_r01–r04 all landed with
-    // parsed:null, truncated mid-JSON). So the FULL record goes to a
-    // file, and stdout carries one SHORT schema-compliant line: totals,
-    // the calibration canary, the five slowest queries, and the path.
-    val fpJson = {
-      val rows = fp.rows.toSeq.sortBy(_._1)
-        .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-      val mt = mtimes.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-      s""","data_fp":{"rows":$rows,"ts_years":[${fp.tsMinYear},${fp.tsMaxYear}],"mtimes":$mt}"""
-    }
+    val calib = calibSec(spark)
+    // second canary axis: the CPU canary misses IO/scheduler
+    // contention (round-5 closing runs read 60.8 vs 79.3 s at
+    // IDENTICAL cpu calib). A fixed parquet scan+hash is
+    // shuffle-free but file- and task-dispatch-bound, so a run where
+    // calib_scan_sec inflates while calib_sec holds was taken under
+    // multi-core/IO load. Comparable within one SF only.
+    val calibScan = best3(Tables.load(spark, sfDir, "lineitem")
+      .select(bit_xor(xxhash64(col("l_orderkey"), col("l_quantity")))).collect())
     // per-query regression check against the frozen first-green ledger
     // (only when the run's scale factor matches the ledger's — a
     // sf0.001 smoke must not compare against sf0.1 baselines)
-    val calib0 = extras.collectFirst { case ("calib_sec", v) => v }.filter(_ > 0)
     val ledger = BaselineLedger.load().filter(l =>
-      new java.io.File(sfDir).getName == l.sf && calib0.isDefined)
+      new java.io.File(sfDir).getName == l.sf && calib > 0)
     // each query measured on BOTH axes (BaselineLedger.Ratio): the
     // calib-normalized ratio corrects for host load but inflates when
     // the start-of-run calibration read fast (r13: a 0.073 calib
     // multiplied every ratio by 1.23); the raw ratio inflates only
     // under real load. perf_weak requires both — spec-pinned.
+    def ratio(l: BaselineLedger.Ledger, short: String, t: Double, c: Double) =
+      BaselineLedger.Ratio((t * (l.calibRef / c)) / l.queries(short), t / l.queries(short))
     val vsBaseline: Seq[(String, BaselineLedger.Ratio)] = ledger.map { l =>
-      val scale = l.calibRef / calib0.get
       results.toSeq.collect {
         case (k, v) if v >= 0 && l.queries.contains(shortName(k)) =>
-          val base = l.queries(shortName(k))
-          shortName(k) -> BaselineLedger.Ratio((v * scale) / base, v / base)
+          shortName(k) -> ratio(l, shortName(k), v, calib)
       }
     }.getOrElse(Seq.empty)
     // In-record perf_weak RETRY pass (self-healing canonical record):
@@ -144,19 +104,15 @@ object Bench {
     // it re-runs once more after a cool-down, and the cleaner-calib
     // attempt is the one adjudicated — two loaded measurements must
     // not confirm a flag the host made (r13: retry calib 0.146 on a
-    // 0.080 floor kept seven load flags alive).
+    // 0.080 floor kept seven load flags alive). The quiet floor is
+    // BASELINE.md's 32-thread figure, scaled by the actual parallelism
+    // (the canary is one task per core, so its wall scales ~1/threads).
     val quietFloor =
       0.080 * (32.0 / math.max(1, spark.sparkContext.defaultParallelism))
     val flaggedFirst = vsBaseline.filter(_._2.weak)
-    val fullByShort = selected.keys.map(k => shortOf(k) -> k).toMap
-    def retryPass(l: BaselineLedger.Ledger):
-        (Map[String, BaselineLedger.Ratio], Double) = {
-      val c = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
-          .select(bit_xor(xxhash64(col("id")))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    val fullByShort = selected.keys.map(k => shortName(k) -> k).toMap
+    def retryPass(l: BaselineLedger.Ledger): (Map[String, BaselineLedger.Ratio], Double) = {
+      val c = calibSec(spark)
       val m = flaggedFirst.flatMap { case (short, _) =>
         fullByShort.get(short).flatMap { full =>
           val fn = selected(full)
@@ -166,913 +122,149 @@ object Bench {
             catch { case _: Throwable => None }
           }
           GraftSqlBridge.releaseAll(spark)
-          ts.minOption.map(t => short -> BaselineLedger.Ratio(
-            (t * (l.calibRef / c)) / l.queries(short), t / l.queries(short)))
+          ts.minOption.map(t => short -> ratio(l, short, t, c))
         }
       }.toMap
       (m, c)
     }
-    val (retryRatios, retryCalib, retryVoidN):
-        (Map[String, BaselineLedger.Ratio], Option[Double], Int) =
-      if (flaggedFirst.isEmpty) (Map.empty[String, BaselineLedger.Ratio], None, 0)
-      else {
-        val l = ledger.get // flaggedFirst nonEmpty implies ledger loaded
-        var (m, c) = retryPass(l)
-        var voids = 0
-        if (BaselineLedger.loadVoid(c, quietFloor)) {
-          voids += 1
-          Thread.sleep(20000) // cool-down: outlast the load burst
-          val (m2, c2) = retryPass(l)
-          if (c2 < c) { m = m2; c = c2 }
-          if (BaselineLedger.loadVoid(c, quietFloor)) voids += 1
-        }
-        (m, Some(c), voids)
+    val retry = ledger.filter(_ => flaggedFirst.nonEmpty).map { l =>
+      var (m, c) = retryPass(l)
+      var voids = 0
+      if (BaselineLedger.loadVoid(c, quietFloor)) {
+        voids += 1
+        Thread.sleep(20000) // cool-down: outlast the load burst
+        val (m2, c2) = retryPass(l)
+        if (c2 < c) { m = m2; c = c2 }
+        if (BaselineLedger.loadVoid(c, quietFloor)) voids += 1
       }
-    val perfWeak = BaselineLedger.adjudicate(vsBaseline, retryRatios)
-      .sortBy(-_._2)
-    val baselineMissing = ledger.map { l =>
-      results.keys.count(k => !l.queries.contains(shortName(k)))
+      Retry(flaggedFirst, m, c, voids)
     }
-    val vsJson =
-      if (vsBaseline.isEmpty) ""
-      else vsBaseline.map { case (k, r) => jstr(k) + ":" + fmt(r.norm) }
-        .mkString(",\"vs_baseline\":{", ",", "}")
-    // one-line record stays bounded: count + the 10 worst offenders
-    // retry evidence stamped next to the verdict: every first-pass
-    // flag gets its RAW ratio (the second adjudication axis) and its
-    // retry ratio (or is listed as retry-errored by absence — which
-    // keeps it flagged), plus the retry pass's own calibration and
-    // load-void count so the record is self-auditing
-    def retryEvidence(flags: Seq[(String, BaselineLedger.Ratio)]): String =
-      retryCalib.map(c => s""","retry_calib_sec":${fmt(c)}""").getOrElse("") +
-        s""","retry_load_void_n":$retryVoidN""" +
-        flags.map { case (k, r) => jstr(k) + ":" + fmt(r.raw) }
-          .mkString(",\"vs_baseline_raw\":{", ",", "}") +
-        BaselineLedger.retryFields(flags, retryRatios).map {
-          case (k, r) => jstr(k) + ":" + r.map(fmt).getOrElse("null")
-        }.mkString(",\"vs_baseline_retry\":{", ",", "}")
-    val retryJson =
-      if (flaggedFirst.isEmpty) "" else retryEvidence(flaggedFirst)
-    // bounded twin of retryJson for the short stdout line the driver
-    // captures: the 12 worst first-pass flags with their retry verdicts
-    val retryJsonShort =
-      if (flaggedFirst.isEmpty) ""
-      else retryEvidence(flaggedFirst.sortBy(-_._2.norm).take(12))
-    val perfWeakJson = ledger.map { _ =>
-      s""","perf_weak_n":${perfWeak.size}""" +
-        s""","perf_weak_retry_cleared_n":${flaggedFirst.size - perfWeak.size}""" +
-        s""","baseline_missing_n":${baselineMissing.get}""" +
-        perfWeak.take(10).map { case (k, r) => jstr(k) + ":" + fmt(r) }
-          .mkString(",\"perf_weak\":{", ",", "}")
-    }.getOrElse("")
-    val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$errJson$exJson$vsJson$retryJson$perfWeakJson$fpJson,"sf":${jstr(sfDir)}}"""
+    val verdict = ledger.map { l =>
+      val perfWeak = BaselineLedger.adjudicate(vsBaseline,
+        retry.fold(Map.empty[String, BaselineLedger.Ratio])(_.ratios)).sortBy(-_._2)
+      Verdict(perfWeak, flaggedFirst.size - perfWeak.size,
+        results.keys.count(k => !l.queries.contains(shortName(k))))
+    }
     val outPath = java.nio.file.Paths.get("bench_out.json").toAbsolutePath
+    val m = Measured(sfDir, results.toSeq, errors.toSeq, calib, calibScan, fp, mtimes,
+      outPath.toString, vsBaseline, retry, verdict)
     java.nio.file.Files.write(outPath,
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val calib = extras.collectFirst { case ("calib_sec", v) => v }
-    val calibScan = extras.collectFirst { case ("calib_scan_sec", v) => v }
-    // quiet-host calib is ~0.090 s (BASELINE.md); total_norm_sec rescales
-    // the total to that reference so rounds compare across host load
-    val norm = calib.filter(_ > 0).map(c => total * (0.090 / c))
-    // top-20, not top-5 (r16, additive): the r15 PERF geomean covered
-    // only 2 queries because consecutive rounds' top-5 sets barely
-    // overlap; 20 entries ≈ +300 bytes on the one-line record and give
-    // the next round per-query round-over-round visibility
-    val slowest = results.toSeq.sortBy(-_._2).take(20)
-      .map { case (k, v) => jstr(shortName(k)) + ":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_sec":${fmt(total)}""" +
-        calib.map(c => s""","calib_sec":${fmt(c)}""").getOrElse("") +
-        calibScan.map(c => s""","calib_scan_sec":${fmt(c)}""").getOrElse("") +
-        norm.map(n => s""","total_norm_sec":${fmt(n)}""").getOrElse("") +
-        s""","n_queries":${results.size},"n_errors":${errors.size}""" +
-        retryJsonShort + perfWeakJson +
-        s""","queries":$slowest,"full_record":${jstr(outPath.toString)},"sf":${jstr(sfDir)}}"""
-    println(line)
+      (fullRecord(m) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(line(m))
     spark.stop()
   }
 
-  /** Evidence runs outside the graded query total:
-    *
-    *   - load calibration canary: a fixed data-independent CPU-bound
-    *     job (sum of xxhash64 over range(2e8)). Its quiet-host time is
-    *     recorded in BASELINE.md; a run where calib_sec reads N× that
-    *     number was taken under N× external host load and every other
-    *     number in the record inflates accordingly. best-of-3.
-    *   - bucketed-layout delta: the same sort-merge fact⋈fact join
-    *     timed over the plain parquet layout (shuffle + sort both
-    *     sides) and over ScaleOps.writeBucketed tables (zero exchange,
-    *     zero sort) — the measured number behind ScaleOpsSpec's plan
-    *     assertion. Broadcast is disabled via merge-join hints so the
-    *     layouts, not the join strategy, are what differ.
-    *   - per-stage curation timings (rows + seconds per stage) for the
-    *     q49 pipeline on the documents table.
-    *   - z-order layout evidence: orders written round-robin vs
-    *     ScaleOps.writeZOrdered on (custkey, order day); recorded
-    *     numbers are the average per-file min/max SPAN on each dim —
-    *     the quantity file-skipping scales with. Both spans must
-    *     shrink together (single-column sort shrinks only one).
-    *   - skew-join strategy comparison on a PLANTED-skew layout (one
-    *     key holds ~25% of the fact side): the same join timed with
-    *     the manual q73 salt (AQE skew split off) and with
-    *     spark.sql.adaptive.skewJoin enabled at thresholds that
-    *     trigger on this data size — documenting when the engine's
-    *     runtime split can replace the explicit salt at scale.
-    *     Broadcast is disabled for both so the shuffle shape is what
-    *     differs.
+  private def best3(f: => Unit): Double = (1 to 3).map { _ =>
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }.min
+
+  /** Load calibration canary: a fixed data-independent CPU-bound job
+    * (bit_xor of xxhash64 over range(2e8), one task per core). Its
+    * quiet-host time is recorded in BASELINE.md; a run where calib_sec
+    * reads N× that number was taken under N× external host load and
+    * every other number in the record inflates accordingly. best-of-3.
+    * bit_xor, not sum: summing 2e8 full-range hashes overflows long
+    * under ANSI mode.
     */
-  private[graft] def measureExtras(spark: SparkSession, sfDir: String,
-      errors: scala.collection.mutable.LinkedHashMap[String, String]): Seq[(String, Double)] =
-    try {
-      def sec(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      def best2(f: => Unit): Double = math.min(sec(f), sec(f))
-      def best3(f: => Unit): Double = Seq(sec(f), sec(f), sec(f)).min
-      // median-of-3 with a dispersion field — every pairwise A/B
-      // comparison uses this so a loaded host shows up as DISPERSION in
-      // the record instead of silently inverting the claim the pair
-      // exists to prove (the r10 record, taken at ~65% load, inverted
-      // three quiet-record A/B results; nothing in the record said so)
-      def med3(f: => Unit): (Double, Double) = {
-        val ts = Seq(sec(f), sec(f), sec(f)).sorted
-        (ts(1), if (ts(1) > 0) (ts(2) - ts(0)) / ts(1) else 0.0)
-      }
-      // per-block load canary: the SAME data-independent CPU job as
-      // calib_sec, run immediately before each A/B block and stamped
-      // next to it. A block whose canary exceeds 1.25x the quiet floor
-      // carries <block>_flagged = 1 — the A/B numbers in that block
-      // were taken under load and must not be read as a design
-      // comparison. Best-of-2, not single-shot: a lone GC/JIT
-      // transient between blocks otherwise stamps a quiet host as
-      // loaded (measured: 0.34 s single-shot on a 0.08-floor host),
-      // and a spurious flag dilutes the real ones. Sustained external
-      // load inflates BOTH runs, so the flag still fires when it must.
-      // Quiet-host floor (BASELINE.md), measured at local[32]. The
-      // canary job is embarrassingly parallel (2e8 hashes, one task per
-      // core), so its wall time scales ~1/threads: a CPUS=8 smoke run
-      // reads ~4x the 32-thread floor on an idle host. Scale the floor
-      // by the actual parallelism so flags mean "external load", not
-      // "fewer threads than the record config".
-      val CalibFloorSec =
-        0.080 * (32.0 / math.max(1, spark.sparkContext.defaultParallelism))
-      // The canary exists to detect EXTERNAL host load, but run right
-      // after a shuffle-heavy block it also inherits the JVM's own GC
-      // debt (r11 quiet record: cc_chain32 stamped 0.149 on a 0.097
-      // host — a false flag on the very scale evidence the block
-      // exists to certify). Best-of-3, not an explicit System.gc():
-      // a forced full collection empirically INFLATES the next canary
-      // (measured 0.126 vs 0.095 on the same quiet host — G1's
-      // follow-up concurrent work steals cores), while a third run
-      // costs ~0.1 s and outlasts any single GC/JIT transient.
-      // Sustained external load inflates all three and still flags.
-      def blockCalib(): Double = best3(
-        spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
-          .select(bit_xor(xxhash64(col("id")))).collect())
-      val blockStamps = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      def stampBlock(name: String): Unit = {
-        val c = blockCalib()
-        blockStamps += (s"${name}_calib_sec" -> c)
-        blockStamps += (s"${name}_flagged" -> (if (c > 1.25 * CalibFloorSec) 1.0 else 0.0))
-      }
+  private def calibSec(spark: SparkSession): Double = best3(
+    spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
+      .select(bit_xor(xxhash64(col("id")))).collect())
 
-      // bit_xor, not sum: summing 2e8 full-range hashes overflows long
-      // under ANSI mode
-      val calib = (1 to 3).map { _ =>
-        sec(spark.range(0L, 200000000L, 1L, spark.sparkContext.defaultParallelism)
-          .select(bit_xor(xxhash64(col("id")))).collect())
-      }.min
-      // second canary axis: the CPU canary above misses IO/scheduler
-      // contention (round-5 closing runs read 60.8 vs 79.3 s at
-      // IDENTICAL cpu calib). A fixed parquet scan+hash is
-      // shuffle-free but file- and task-dispatch-bound, so a run where
-      // calib_scan_sec inflates while calib_sec holds was taken under
-      // multi-core/IO load. Comparable within one SF only.
-      val calibScan = (1 to 3).map { _ =>
-        sec(Tables.load(spark, sfDir, "lineitem")
-          .select(bit_xor(xxhash64(col("l_orderkey"), col("l_quantity")))).collect())
-      }.min
+  /** The post-sweep retry of first-pass perf_weak flags: the flags, their
+    * retry ratios (absent: the retry errored), the retry pass's own
+    * calibration and how many of its attempts read load-void. */
+  final case class Retry(flagged: Seq[(String, BaselineLedger.Ratio)],
+      ratios: Map[String, BaselineLedger.Ratio], calib: Double, loadVoidN: Int)
 
-      // subset-freeze fast path: a SPARK_GRAFT_ONLY_Q run exists to
-      // measure a few newly-landed queries for the baseline ledger —
-      // it needs calib (the freeze tool normalizes by it) but not the
-      // multi-minute A/B evidence blocks
-      if (sys.env.contains("SPARK_GRAFT_ONLY_Q"))
-        return Seq("calib_sec" -> calib, "calib_scan_sec" -> calibScan)
+  /** The ledger verdict: confirmed perf_weak ratios (worst first), how
+    * many first-pass flags the retry cleared, and how many measured
+    * queries the ledger does not cover. */
+  final case class Verdict(perfWeak: Seq[(String, Double)], retryClearedN: Int,
+      baselineMissingN: Int)
 
-      // Table names carry the JVM pid: the r9 driver bench lost its whole
-      // extras record to an "eagerly executed command failed" when a
-      // concurrent bench JVM (orphaned session run vs driver run) deleted
-      // the shared warehouse path mid-saveAsTable. Per-process names keep
-      // two benches from stomping each other; stale same-pid leftovers
-      // are still dropped.
-      val pid = ProcessHandle.current().pid()
-      val (tblLi, tblOr) = (s"bench_b_lineitem_$pid", s"bench_b_orders_$pid")
-      for (t <- Seq(tblLi, tblOr)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  /** Everything one run measured; [[fullRecord]] and [[line]] render it.
+    * `results` and `errors` are keyed by full query name; `retry` is
+    * present only when the ledger flagged something, `verdict` only when
+    * a ledger at this scale factor was loaded. */
+  final case class Measured(sfDir: String, results: Seq[(String, Double)],
+      errors: Seq[(String, String)], calib: Double, calibScan: Double,
+      fp: Canary.Fingerprint, mtimes: Seq[(String, Long)], fullRecordPath: String,
+      vsBaseline: Seq[(String, BaselineLedger.Ratio)],
+      retry: Option[Retry], verdict: Option[Verdict]) {
+    def total: Double = results.map(r => math.abs(r._2)).sum
+  }
 
-      val li = Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity")
-      val or = Tables.load(spark, sfDir, "orders").select("o_orderkey", "o_totalprice")
-      def joinAgg(l: org.apache.spark.sql.DataFrame, o: org.apache.spark.sql.DataFrame): Unit =
-        l.hint("merge")
-          .join(o.hint("merge"), l("l_orderkey") === o("o_orderkey"))
-          .agg(sum(col("l_quantity") * col("o_totalprice"))).count()
-      stampBlock("factjoin")
-      val (plainSec, plainDisp) = med3(joinAgg(li, or))
-      graft.operators.ScaleOps.writeBucketed(li, tblLi, Seq("l_orderkey"), 16)
-      graft.operators.ScaleOps.writeBucketed(or, tblOr, Seq("o_orderkey"), 16)
-      val bl = spark.table(tblLi)
-      val bo = spark.table(tblOr)
-      val (bucketedSec, bucketedDisp) = med3(joinAgg(bl, bo))
+  // The driver stores only a bounded tail of captured output and parses
+  // the JSON record out of it, so the whole record must stay ONE line
+  // comfortably under that window: millisecond precision, and the
+  // documented short "qNN" keys (full names live in SparkEntry.queries /
+  // CORRECTNESS_r*.json; the qNN prefix is unique by construction).
+  private def fmt(v: Double): String = {
+    val r = math.rint(v * 1000) / 1000
+    BigDecimal(r).underlying.stripTrailingZeros.toPlainString
+  }
 
-      val docs = Tables.load(spark, sfDir, "documents")
-      // best-of-2 per stage: one-shot counts on shared hardware carry
-      // 2-4x noise that previously read as a q49 regression. The eval
-      // split also times the q173 decontamination stage.
-      val evalSplit = Some(docs.filter(pmod(col("doc_id"), lit(97)) === 0))
-      def runStages() = graft.curation.CurationPipeline.stageTimings(
-        docs.filter(pmod(col("doc_id"), lit(97)) =!= 0), "doc_id", "text",
-        cfg = graft.curation.CurationPipeline.Config(maxEvalOverlap = 0.05,
-          // substring stage measured as a first-class pipeline member
-          // (r12 item 3): q383's parameters at the corpus scale
-          cutDupRuns = true, runGramK = 8, runMinTokens = 20),
-        evalDocs = evalSplit)
-      val run1 = runStages()
-      val run2 = runStages()
-      val stages = run1.zip(run2).flatMap { case ((name, rows, s1), (_, _, s2)) =>
-        Seq(s"curation_${name}_rows" -> rows.toDouble,
-          s"curation_${name}_sec" -> math.min(s1, s2))
-      }
-      // deep-chain connected components: a 32-edge path, the topology
-      // where round count is the whole story — min-label propagation
-      // needs diameter rounds, the alternating large/small-star form
-      // O(log n). Same outputs (both spec-pinned); the measured gap is
-      // the evidence behind choosing the alternating form at scale.
-      // rounds-to-convergence recorded via the onRound hooks so drift
-      // in convergence behavior is visible across rounds' records, not
-      // just inside specs
-      stampBlock("cc_chain32")
-      val chain = spark.range(0L, 32L)
-        .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-      var mlRounds = 0
-      val ccMinlabel = sec(
-        graft.operators.Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 64,
-          onRound = (r, _) => mlRounds = r).count())
-      var asRounds = 0
-      val ccAltstar = sec(
-        graft.operators.GraphOps.connectedComponentsAlternating(chain, "id_a", "id_b",
-          onRound = (r, _) => asRounds = r).count())
-      // k-means on a fixed 256-vector slice: rounds + final movement —
-      // the convergence-drift canary for the Lloyd loop
-      var kmRounds = 0
-      val emb = Tables.load(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding")).orderBy("vec_id").limit(256)
-        .localCheckpoint(false)
-      val kinit = emb.orderBy("vec_id").limit(4)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val kmSec = sec(graft.operators.KMeansOps.fit(emb, "vec_id", "embedding", kinit,
-        maxIter = 20, onRound = (r, _) => kmRounds = r).count())
+  private def obj[V](name: String, kvs: Seq[(String, V)])(v: V => String): String =
+    kvs.map { case (k, x) => jstr(k) + ":" + v(x) }.mkString(s",${jstr(name)}:{", ",", "}")
 
-      // ---- iterative-flagship SCALING EVIDENCE: the O(log n)-rounds /
-      // linear-per-round claims for the iterative operators, MEASURED at
-      // n vs 4n on deterministic synthetic inputs (sized independent of
-      // SF). Quadratic scaling would read as ~16x time at 4x input;
-      // log-round growth reads as rounds_4n − rounds_n ≈ 2; the PCA
-      // power rounds never touch n at all (they read only the d×d
-      // matrix), so their time at n and 4n should be statistically equal.
-      stampBlock("scaleprobe")
-      def chainCc(n: Long): (Double, Int) = {
-        var r = 0
-        val chain = spark.range(0L, n - 1)
-          .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-        val s = sec(graft.operators.GraphOps.connectedComponentsAlternating(
-          chain, "id_a", "id_b", onRound = (rr, _) => r = rr).count())
-        (s, r)
-      }
-      val (ccScaleNSec, ccScaleNRounds) = chainCc(100000L)
-      val (ccScale4nSec, ccScale4nRounds) = chainCc(400000L)
+  // retry evidence stamped next to the verdict: every first-pass flag
+  // gets its RAW ratio (the second adjudication axis) and its retry
+  // ratio (or is listed as retry-errored by null — which keeps it
+  // flagged), plus the retry pass's own calibration and load-void
+  // count so the record is self-auditing
+  private def retryJson(r: Retry, flags: Seq[(String, BaselineLedger.Ratio)]): String =
+    s""","retry_calib_sec":${fmt(r.calib)},"retry_load_void_n":${r.loadVoidN}""" +
+      obj("vs_baseline_raw", flags)(x => fmt(x.raw)) +
+      obj("vs_baseline_retry", BaselineLedger.retryFields(flags, r.ratios))(
+        _.map(fmt).getOrElse("null"))
 
-      def boruvkaAt(v: Long): (Double, Int) = {
-        var r = 0
-        val ring = spark.range(0L, v).select(col("id").as("a"),
-          pmod(col("id") + 1, lit(v)).as("b"))
-        val chords = spark.range(0L, 2 * v).select(
-          pmod(col("id") * 48271, lit(v)).as("a"),
-          pmod(col("id") * 69621 + 7, lit(v)).as("b"))
-        // weights: PSEUDORANDOM high bits (a monotone-in-id weight makes
-        // every min-edge pick point at low ids — the pick forest connects
-        // in one degenerate round and measures nothing), distinct low
-        // bits per directed pair (v ≤ 4096 keeps the pack collision-free)
-        val edges = ring.unionByName(chords)
-          .filter(col("a") =!= col("b"))
-          .withColumn("w",
-            pmod(xxhash64(col("a"), col("b")), lit(1000000L)) * lit(16777216L)
-              + col("a") * lit(4096L) + col("b"))
-        val s = sec(graft.operators.GraphOps.boruvkaMst(edges, "a", "b", "w",
-          onRound = (rr, _) => r = rr).count())
-        (s, r)
-      }
-      val (bvVSec, bvVRounds) = boruvkaAt(512L)
-      val (bv4vSec, bv4vRounds) = boruvkaAt(2048L)
+  // one-line record stays bounded: count + the 10 worst offenders
+  private def verdictJson(v: Verdict): String =
+    s""","perf_weak_n":${v.perfWeak.size},"perf_weak_retry_cleared_n":${v.retryClearedN}""" +
+      s""","baseline_missing_n":${v.baselineMissingN}""" +
+      obj("perf_weak", v.perfWeak.take(10))(fmt)
 
-      // PCA pipeline split (q192's shape, d=16): the Gram accumulation
-      // is the ONLY n-dependent stage (map-side combine onto d² cells);
-      // the power rounds read the d×d matrix alone.
-      def synthEmb(n: Long) = spark.range(0L, n).select(col("id"), expr(
-        "transform(sequence(0, 15), j -> CAST(sin(CAST(id * 31 + j * 7 AS DOUBLE)) AS FLOAT))")
-        .as("embedding"))
-      def gramOf(n: Long) = synthEmb(n)
-        .select(explode(call_function("graft_tri_products", col("embedding"))).as("p"))
-        .groupBy(col("p.i").as("i"), col("p.j").as("j"))
-        .agg((sum(col("p.pq")).cast("double") / 1e9 / n).as("a"))
-      val pcaGramNSec = sec(gramOf(100000L).count())
-      val pcaGram4nSec = sec(gramOf(400000L).count())
-      def power6(n: Long): Double = {
-        val cu = gramOf(n).localCheckpoint(false)
-        val amat = cu.select("i", "j", "a")
-          .union(cu.filter(col("i") =!= col("j"))
-            .select(col("j").as("i"), col("i").as("j"), col("a")))
-          .localCheckpoint(false)
-        amat.count() // materialize the checkpoint OUTSIDE the timer —
-        // the timed section must see only the d×d-matrix rounds
-        sec {
-          var v = cu.select(col("i")).distinct()
-            .select(col("i"), lit(0.25).as("v")).localCheckpoint(false)
-          for (_ <- 1 to 6) {
-            v = amat.join(v.select(col("i").as("j"), col("v")), Seq("j"))
-              .groupBy("i")
-              .agg((sum(expr("CAST(round(a * v * 1e15) AS BIGINT)"))
-                .cast("double") / 1e15).as("v"))
-              .localCheckpoint(false)
-          }
-          v.count()
-        }
-      }
-      // the power rounds are the "time flat in n" claim — the r10
-      // loaded record inverted it (5.67 vs 0.93 s for the SAME
-      // n-independent plan), so both points carry a 2-run dispersion
-      def min2(f: => Double): (Double, Double) = {
-        val a = f; val b = f; val lo = math.min(a, b)
-        (lo, if (lo > 0) math.abs(a - b) / lo else 0.0)
-      }
-      val (pcaPowerNSec, pcaPowerNDisp) = min2(power6(100000L))
-      val (pcaPower4nSec, pcaPower4nDisp) = min2(power6(400000L))
+  /** The full record written to `bench_out.json`: every query, errors,
+    * the calibration extras, ledger ratios and the data fingerprint. */
+  def fullRecord(m: Measured): String = {
+    val qs = m.results.map { case (k, v) => shortName(k) -> v }
+    val rows = m.fp.rows.toSeq.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + v }
+      .mkString("{", ",", "}")
+    val mt = m.mtimes.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(m.total)},"unit":"sec"""" +
+      obj("queries", qs)(fmt) +
+      (if (m.errors.isEmpty) ""
+       else obj("errors", m.errors.map { case (k, v) => shortName(k) -> v })(v => jstr(v.take(80)))) +
+      obj("extras", Seq("calib_sec" -> m.calib, "calib_scan_sec" -> m.calibScan))(fmt) +
+      (if (m.vsBaseline.isEmpty) "" else obj("vs_baseline", m.vsBaseline)(r => fmt(r.norm))) +
+      m.retry.fold("")(r => retryJson(r, r.flagged)) +
+      m.verdict.fold("")(verdictJson) +
+      s""","data_fp":{"rows":$rows,"ts_years":[${m.fp.tsMinYear},${m.fp.tsMaxYear}],"mtimes":$mt}""" +
+      s""","sf":${jstr(m.sfDir)}}"""
+  }
 
-      // z-order layout: per-file spans on both dims, plain vs morton
-      // (pid-suffixed for the same concurrent-bench reason as the tables)
-      val zdir = s"/tmp/graft_bench_zorder_$pid"
-      val zpath = new org.apache.hadoop.fs.Path(zdir)
-      zpath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(zpath, true)
-      val zo = Tables.load(spark, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("x"),
-          datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("y"))
-      zo.repartition(8).write.parquet(s"$zdir/plain")
-      graft.operators.ScaleOps.writeZOrdered(zo, Seq("x", "y"), s"$zdir/zord", 8)
-      def spans(path: String): (Double, Double) = {
-        val r = spark.read.parquet(path)
-          .groupBy(input_file_name())
-          .agg((max("x") - min("x")).cast("double").as("sx"),
-            (max("y") - min("y")).cast("double").as("sy"))
-          .agg(avg("sx"), avg("sy")).collect()(0)
-        (r.getDouble(0), r.getDouble(1))
-      }
-      val (plainX, plainY) = spans(s"$zdir/plain")
-      val (zordX, zordY) = spans(s"$zdir/zord")
-
-      // planted-skew join: collapse 1/4 of fact keys onto one hot key,
-      // dim side stays unique per key; broadcast off so both runs are
-      // genuine shuffle joins and the skew handling is what differs
-      val hotFact = Tables.load(spark, sfDir, "lineitem").select(
-        when(pmod(col("l_orderkey"), lit(4)) === 0, 0L)
-          .otherwise(col("l_orderkey")).as("k"),
-        col("l_quantity"))
-      val dimU = Tables.load(spark, sfDir, "orders").select(
-          when(pmod(col("o_orderkey"), lit(4)) === 0, 0L)
-            .otherwise(col("o_orderkey")).as("k"),
-          col("o_totalprice"))
-        .groupBy("k").agg(max("o_totalprice").as("o_totalprice"))
-      val skewConfs = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      val saved = skewConfs.map(k => k -> spark.conf.getOption(k))
-      stampBlock("skewjoin")
-      val ((manualSec, manualDisp), (aqeSec, aqeDisp)) =
-        try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-          val m = med3(
-            graft.operators.ScaleOps.saltedJoin(hotFact, dimU, Seq("k"), salts = 8)
-              .agg(sum(col("l_quantity") * col("o_totalprice"))).count())
-          spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-          spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-          spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-          spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-          val a = med3(
-            hotFact.join(dimU, Seq("k"))
-              .agg(sum(col("l_quantity") * col("o_totalprice"))).count())
-          (m, a)
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-
-      // sketch-pruned vs full-shuffle heavy hitters on the token stream:
-      // at this SF the vocabulary fits one partition, so the sketch's
-      // extra pass usually LOSES here — recorded anyway because the
-      // comparison harness (not the toy-scale winner) is the evidence;
-      // the crossover arrives when distinct-token count dwarfs memory
-      // and the full groupBy's shuffle does not fit (q185's scaladoc).
-      val tokAll = Tables.load(spark, sfDir, "documents")
-        .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("token"))
-      stampBlock("heavyhitters")
-      val (hhFullSec, hhFullDisp) = med3(
-        tokAll.groupBy("token").agg(count(lit(1)).as("cnt"))
-          .join(broadcast(tokAll.agg(count(lit(1)).as("n"))))
-          .filter(col("cnt") >= expr("n div 200")).count())
-      val (hhSketchSec, hhSketchDisp) = med3(
-        graft.SparkEntry.queries("q185_cms_heavy_hitters")(spark, sfDir).count())
-
-      // custom TopKPerKey operator vs the Window+rank route on the same
-      // fact relation: the Window plan shuffles EVERY row then sorts per
-      // partition; the custom plan shuffles ≤ k·|keys| candidates per
-      // map task. The measured gap is the evidence behind
-      // plans/TopKPerKey.scala (PlansSpec pins exactness + shuffle
-      // volume; this records wall-clock at the current SF).
-      val fact = Tables.load(spark, sfDir, "lineitem")
-        .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"))
-      stampBlock("topk")
-      val (topkWindowSec, topkWindowDisp) = med3 {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("l_partkey")
-          .orderBy(col("cents").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-        fact.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= 3).count()
-      }
-      val (topkCustomSec, topkCustomDisp) = med3(
-        graft.plans.TopKPerKey(fact, Seq("l_partkey"),
-          Seq(col("cents").desc, col("l_orderkey").asc, col("l_linenumber").asc), 3)
-          .count())
-
-      // exact top-1 cosine NN: the r9 chunked block-nested-loop
-      // (bounded chunk rows, chunk-id-only broadcast, map-side max_by)
-      // vs the full-table-broadcast + n²-row window route it replaced.
-      // At this SF the broadcast route can win on constants; the
-      // chunked shape is the one that still EXISTS at 100× (an 8 GB
-      // broadcast limit and an n²-row window do not) — recorded so the
-      // constant-factor cost of scale-correctness is a measured number,
-      // not a claim.
-      stampBlock("mutualnn")
-      val embNN = Tables.load(spark, sfDir, "embeddings")
-      val (nnChunkedSec, nnChunkedDisp) = med3(
-        graft.operators.Similarity.top1Exact(embNN, "vec_id", "embedding").count())
-      // the DEFAULT audit path: exact top-1 for the fixed 200-probe
-      // sample against the full index — O(S·n) vs the exact pass's
-      // O(n²); the ratio here is the measured cost of insisting on a
-      // full audit instead of the sampled one (grows linearly with n)
-      val (nnSampledSec, nnSampledDisp) = med3(
-        graft.operators.Similarity.top1ExactFor(
-          graft.operators.Similarity.auditProbes(embNN, "vec_id"),
-          embNN, "vec_id", "embedding").count())
-      val (nnBroadcastSec, nnBroadcastDisp) = med3 {
-        val e = embNN.select(col("vec_id"), col("embedding"),
-          sqrt(call_function("graft_dot", col("embedding"), col("embedding"))).as("na"))
-        val b = e.select(col("vec_id").as("nb"), col("embedding").as("eb"),
-          col("na").as("nn"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(desc("cos"), col("nb"))
-        e.join(broadcast(b), col("vec_id") =!= col("nb"))
-          .select(col("vec_id"), col("nb"),
-            (call_function("graft_dot", col("embedding"), col("eb"))
-              / (col("na") * col("nn"))).as("cos"))
-          .withColumn("_r", row_number().over(w)).filter(col("_r") === 1).count()
-      }
-
-      // CDC gear-chunking throughput: the compiled one-pass kernel over
-      // every document's full text (bytes/sec is the number a 100 TB
-      // chunk-dedup pass is budgeted with)
-      val cdcBytes = Tables.load(spark, sfDir, "documents")
-        .agg(sum(length(col("text")))).collect()(0).getLong(0)
-      val cdcSec = best2(
-        Tables.load(spark, sfDir, "documents")
-          .select(explode(call_function("graft_gear_chunks", col("text"), lit(6))))
-          .count())
-
-      // blocklist scan: the compiled Aho-Corasick one-pass kernel vs
-      // P independent split-count evaluations of the same 8 phrases —
-      // the per-byte work ratio a P-phrase policy filter pays without
-      // the automaton (grows with P; the kernel does not)
-      val blkPhrases = Seq("table", "fast table", "slow fast", "value part",
-        "spark", "order data", "row scan", "the")
-      val blkDocs = Tables.load(spark, sfDir, "documents")
-      stampBlock("blocklist")
-      val (blkAcSec, blkAcDisp) = med3(
-        blkDocs.select(expr(
-          s"aggregate(graft_multi_match(text, array(${blkPhrases.map(p => s"'$p'").mkString(",")})), 0, (a, x) -> a + x)").as("n"))
-          .agg(sum("n")).collect())
-      val (blkSplitSec, blkSplitDisp) = med3(
-        blkDocs.select(blkPhrases.map(p =>
-          (size(split(col("text"), java.util.regex.Pattern.quote(p))) - 1).as(s"c"))
-          .reduce(_ + _).as("n"))
-          .agg(sum("n")).collect())
-
-      // container-walk throughput: the TFRecord dual-CRC32C walk over a
-      // synthesized ~20 KB shard per document (MB/s is the number a
-      // 100 TB shard-triage pass is budgeted with — both checksums are
-      // verified per record, so this prices the honest walk, not a
-      // skip-ahead)
-      import spark.implicits._
-      val tfBlobs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val lens = (0 until 8).map(r => 2000 + (k * 37 + r * 13) % 500)
-            (id, graft.operators.TfRecordOps.encodeSynthetic(lens))
-          }
-        }
-        .toDF("doc_id", "payload")
-        .localCheckpoint(true) // price the walk, not the synthesis
-      val tfBytes = tfBlobs.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-      val tfWalkSec = best2(
-        graft.operators.TfRecordOps
-          .tfrecordFeatures(tfBlobs, "doc_id", "payload")
-          .agg(sum("n_records")).collect())
-      // one notch inward: the same shards' payloads parsed as protobuf
-      // tf.Example messages (q379) — prices frame walk + proto descent
-      val tfExBlobs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val ops = graft.operators.TfRecordOps
-            (id, ops.encodeShard((0 until 8).map(r => ops.encodeExample(
-              2, 200 + ((id + r) % 64).toInt, 16, Seq.tabulate(6)(i => (id + i) % 1000),
-              unknownField = false))))
-          }
-        }
-        .toDF("doc_id", "payload").localCheckpoint(true)
-      val tfExBytes = tfExBlobs.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-      val tfExSec = best2(
-        graft.operators.TfRecordOps.exampleFeatures(tfExBlobs, "doc_id", "payload")
-          .agg(sum("n_features")).collect())
-      // lake-format triage throughput: parquet footer (thrift compact
-      // descent, q377) and Avro OCF (metadata map + sync-checked block
-      // walk, q378) — the two walks a 100 TB catalog audit is priced on
-      val pqBlobs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            (id, graft.operators.ParquetFooter.encodeSynthetic(2,
-              (0 until 12).map(c => s"col_$c"), 6, 5000L, 1 << 20,
-              c => (c % 3) * 3, s"bench-$id", dataFiller = 4096))
-          }
-        }
-        .toDF("doc_id", "payload").localCheckpoint(true)
-      val pqBytes = pqBlobs.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-      val pqSec = best2(
-        graft.operators.ParquetFooter.footerFeatures(pqBlobs, "doc_id", "payload")
-          .agg(sum("n_column_chunks")).collect())
-      val avroBlobs = Tables.load(spark, sfDir, "documents")
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            (id, graft.operators.AvroOps.encodeSynthetic(
-              """{"type":"record","name":"b","fields":[]}""", "snappy",
-              Nil, Seq.fill(8)((500L, 2048)), syncSeed = id))
-          }
-        }
-        .toDF("doc_id", "payload").localCheckpoint(true)
-      val avroBytes = avroBlobs.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-      val avroSec = best2(
-        graft.operators.AvroOps.avroFeatures(avroBlobs, "doc_id", "payload")
-          .agg(sum("total_records")).collect())
-
-      // ---- production near-dup path scaling probe (r10 verdict item 7):
-      // minhashLshPairs (signatures → band buckets → equi-join →
-      // exact-Jaccard verify) at n vs 4n docs on an SF-independent
-      // synthetic corpus where each doc has exactly one planted twin
-      // (token stream keyed by id mod n/2). Candidate pairs must scale
-      // ~linearly (n/2 planted twins + band-collision noise) and wall
-      // ~linearly — a quadratic candidate stage would read ~16x pairs
-      // or wall at 4x input.
-      stampBlock("dedup_scale")
-      def dedupAt(n: Long): (Double, Long) = {
-        val docs = spark.range(0L, n).select(col("id").as("doc_id"),
-          expr(s"concat_ws(' ', transform(sequence(0, 29), " +
-            s"j -> concat('t', pmod(xxhash64(pmod(id, ${n / 2}) * 31 + j), 800))))")
-            .as("text"))
-          .localCheckpoint(false)
-        docs.count() // price the dedup pass, not the synthesis
-        var pairs = 0L
-        val s = sec {
-          pairs = graft.operators.Dedup.minhashLshPairs(
-            docs, "doc_id", "text", n = 5, k = 64, rowsPerBand = 8,
-            threshold = 0.7).count()
-        }
-        (s, pairs)
-      }
-      val (dedupNSec, dedupNPairs) = dedupAt(2000L)
-      val (dedup4nSec, dedup4nPairs) = dedupAt(8000L)
-
-      // ---- substring duplicate-run scaling probe (r11 verdict item 3):
-      // duplicateRuns (gram buckets → capped pair expansion → island
-      // arithmetic) at n vs 4n docs where each doc shares EXACTLY one
-      // 25-token span with its planted twin (span tokens keyed by
-      // id mod n/2, prefix/suffix salted by full id so nothing else
-      // matches). Maximal runs must come out exactly n/2 at both sizes
-      // (linear candidates — an uncapped quadratic stage would blow up
-      // 16x) and wall ~linearly.
-      stampBlock("substring_scale")
-      def runsAt(n: Long): (Double, Long) = {
-        val docs = spark.range(0L, n).select(col("id").as("doc_id"),
-          concat_ws(" ",
-            expr("concat_ws(' ', transform(sequence(0, 9), j -> concat('u', id, '_', j)))"),
-            expr(s"concat_ws(' ', transform(sequence(0, 24), j -> concat('s', pmod(id, ${n / 2}), '_', j)))"),
-            expr("concat_ws(' ', transform(sequence(10, 19), j -> concat('u', id, '_', j)))"))
-            .as("text"))
-          .localCheckpoint(false)
-        docs.count() // price the run extraction, not the synthesis
-        var runs = 0L
-        val s = sec {
-          val grams = docs.select(col("doc_id"),
-            posexplode(call_function("graft_shingle_hash_list", col("text"), lit(8)))
-              .as(Seq("pos", "h")))
-          runs = graft.operators.Dedup
-            .duplicateRuns(grams, "doc_id", k = 8, minTokens = 20).count()
-        }
-        (s, runs)
-      }
-      val (runsNSec, runsN) = runsAt(2000L)
-      val (runs4nSec, runs4n) = runsAt(8000L)
-
-      // ---- incremental vs full duplicate-run A/B: the q389 claim made
-      // measurable. 4000 docs in 200 groups of 20 sharing a 25-token
-      // span (gram buckets of 20 members → C(20,2) = 190 runs each);
-      // the last 10% of docs "just arrived", so 90% of buckets hold no
-      // new member and the incremental pass drops them BEFORE any
-      // occurrence list is collected. Run counts must agree exactly
-      // with the full pass restricted to new-touching runs; wall must
-      // favor the incremental pass (it enumerates a tenth of the runs).
-      stampBlock("incdup")
-      val incN = 4000L
-      val incGrams = {
-        val docs = spark.range(0L, incN).select(col("id").as("doc_id"),
-          concat_ws(" ",
-            expr("concat_ws(' ', transform(sequence(0, 9), j -> concat('u', id, '_', j)))"),
-            expr("concat_ws(' ', transform(sequence(0, 24), j -> concat('s', id div 20, '_', j)))"),
-            expr("concat_ws(' ', transform(sequence(10, 19), j -> concat('u', id, '_', j)))"))
-            .as("text"))
-          .localCheckpoint(false)
-        docs.count()
-        val g = docs.select(col("doc_id"),
-          posexplode(call_function("graft_shingle_hash_list", col("text"), lit(8)))
-            .as(Seq("pos", "h")))
-          .withColumn("is_new", col("doc_id") >= lit(incN * 9 / 10))
-          .localCheckpoint(false)
-        g.count() // price the dedup passes, not the hashing
-        g
-      }
-      var fullRuns = 0L; var incRuns = 0L
-      val incFullSec = sec {
-        fullRuns = graft.operators.Dedup
-          .duplicateRuns(incGrams, "doc_id", k = 8, minTokens = 20)
-          .filter(col("id_a") >= incN * 9 / 10 || col("id_b") >= incN * 9 / 10)
-          .count()
-      }
-      val incIncSec = sec {
-        incRuns = graft.operators.Dedup
-          .duplicateRunsIncremental(incGrams, "doc_id", "is_new",
-            k = 8, minTokens = 20).count()
-      }
-
-      // ---- winnowing vs MinHash-LSH candidate A/B (r11 verdict item 4):
-      // the two near-dup generators on the SAME planted-twin corpus
-      // (2000 docs, each with exactly one identical twin). Both should
-      // recover all 1000 twin pairs (recall 1.0), agree on the
-      // connected-components clustering, and the pair counts + walls
-      // quantify the trade (winnowing localizes shared RUNS; MinHash
-      // thresholds whole-doc Jaccard).
-      stampBlock("winnow_vs_minhash")
-      val wmN = 2000L
-      val wmDocs = spark.range(0L, wmN).select(col("id").as("doc_id"),
-        expr(s"concat_ws(' ', transform(sequence(0, 29), " +
-          s"j -> concat('t', pmod(xxhash64(pmod(id, ${wmN / 2}) * 31 + j), 800))))")
-          .as("text"))
-        .localCheckpoint(false)
-      wmDocs.count()
-      var mhPairs: org.apache.spark.sql.DataFrame = null
-      var wnPairs: org.apache.spark.sql.DataFrame = null
-      var mhCount = 0L
-      var wnCount = 0L
-      val wmMhSec = sec {
-        mhPairs = graft.operators.Dedup.minhashLshPairs(wmDocs, "doc_id", "text",
-          n = 5, k = 64, rowsPerBand = 8, threshold = 0.7).localCheckpoint(false)
-        mhCount = mhPairs.count()
-      }
-      val wmWnSec = sec {
-        wnPairs = graft.operators.Dedup.winnowPairs(wmDocs, "doc_id", "text",
-          k = 5, w = 5, minShared = 2).localCheckpoint(false)
-        wnCount = wnPairs.count()
-      }
-      def twinRecall(p: org.apache.spark.sql.DataFrame): Double =
-        p.filter(col("id_b") === col("id_a") + lit(wmN / 2)).count().toDouble / (wmN / 2)
-      val mhRecall = twinRecall(mhPairs)
-      val wnRecall = twinRecall(wnPairs)
-      // cluster agreement: CC labels from each pair set, singletons
-      // keeping their own id; fraction of docs with the same label
-      def labels(p: org.apache.spark.sql.DataFrame, out: String) =
-        graft.operators.Dedup.connectedComponents(p, "id_a", "id_b")
-          .select(col("id").as("doc_id"), col("cluster_id").as(out))
-      val agree = wmDocs.select("doc_id")
-        .join(labels(mhPairs, "_mh"), Seq("doc_id"), "left")
-        .join(labels(wnPairs, "_wn"), Seq("doc_id"), "left")
-        .select(avg(when(coalesce(col("_mh"), col("doc_id")) ===
-          coalesce(col("_wn"), col("doc_id")), 1.0).otherwise(0.0)).as("a"))
-        .collect()(0).getDouble(0)
-
-      // ---- recall-under-noise panel: the identical-twin A/B above
-      // can't separate the generators (both read 1.0); real near-dups
-      // differ. Same 1000 planted twin pairs, but each doc's token j
-      // is replaced by a doc-unique token with deterministic hash
-      // probability ~10% / ~20% — the generators' recall curves under
-      // growing edit distance are the numbers a corpus operator picks
-      // thresholds from.
-      stampBlock("neardup_recall")
-      def noisyRecall(noiseTenths: Int): (Double, Double) = {
-        val docs = spark.range(0L, wmN).select(col("id").as("doc_id"),
-          expr(s"concat_ws(' ', transform(sequence(0, 29), j -> " +
-            s"CASE WHEN pmod(xxhash64(id * 97 + j), 10) < $noiseTenths " +
-            s"THEN concat('z', id, '_', j) " +
-            s"ELSE concat('t', pmod(xxhash64(pmod(id, ${wmN / 2}) * 31 + j), 800)) END))")
-            .as("text"))
-          .localCheckpoint(false)
-        docs.count()
-        val mh = twinRecall(graft.operators.Dedup.minhashLshPairs(
-          docs, "doc_id", "text", n = 5, k = 64, rowsPerBand = 8, threshold = 0.3))
-        val wn = twinRecall(graft.operators.Dedup.winnowPairs(
-          docs, "doc_id", "text", k = 5, w = 5, minShared = 2))
-        (mh, wn)
-      }
-      val (mhR10, wnR10) = noisyRecall(1)
-      val (mhR20, wnR20) = noisyRecall(2)
-
-      // ---- sf-scale probe: the 10 most expensive queries run ONCE at
-      // the bench SF and once at a 10x replica (ScaleOps.replicateScaled
-      // — disjoint key-shifted copies, per-copy-varied text, so the
-      // probe measures engine cost growth on 10x volume with the
-      // SOURCE's per-entity structure). Stamped per query: both walls
-      // and the growth exponent log_10(t_10x / t_1x) — linear ~1,
-      // quadratic 2; the flagship plans all claim sub-quadratic and
-      // this is where that claim is MEASURED, not narrated. The
-      // replica is cached on disk across runs; a wall budget bounds
-      // the block and anything skipped is COUNTED (no silent caps).
-      stampBlock("sf_scale")
-      val sfScale = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      // own failure domain: a probe failure (disk-full replica write,
-      // query error at 10x) must cost THIS block, never the whole
-      // extras record the round's other evidence lives in
-      try {
-        val probe = Seq("q202", "q126", "q199", "q192", "q308",
-          "q306", "q307", "q209", "q190", "q288")
-        val factor = 10
-        val scaleDir = s"/tmp/graft_sfscale_${factor}x_" +
-          new java.io.File(sfDir).getName
-        val marker = new java.io.File(scaleDir + "/_DONE")
-        val genSec =
-          if (marker.exists) 0.0
-          else sec {
-            graft.operators.ScaleOps.replicateScaled(spark, sfDir, scaleDir, factor)
-            marker.createNewFile()
-          }
-        sfScale += ("sf_scale_gen_sec" -> genSec)
-        val byShort = SparkEntry.queries.map { case (k, f) =>
-          (k.indexOf('_') match { case -1 => k; case i => k.substring(0, i) }) -> f }
-        val budgetSec = 480.0
-        var spent = 0.0
-        var skipped = 0
-        probe.foreach { q =>
-          byShort.get(q) match {
-            case Some(fn) if spent < budgetSec =>
-              val t1 = sec(fn(spark, sfDir).count())
-              GraftSqlBridge.releaseAll(spark)
-              val t10 = sec(fn(spark, scaleDir).count())
-              GraftSqlBridge.releaseAll(spark)
-              spent += t1 + t10
-              sfScale += (s"sf_scale_${q}_1x_sec" -> t1)
-              sfScale += (s"sf_scale_${q}_10x_sec" -> t10)
-              sfScale += (s"sf_scale_${q}_exp" ->
-                math.log(t10 / t1) / math.log(factor.toDouble))
-            case _ => skipped += 1
-          }
-        }
-        sfScale += ("sf_scale_skipped_n" -> skipped.toDouble)
-      } catch {
-        case e: Throwable =>
-          errors.getOrElseUpdate("sf_scale", e.toString.take(200))
-          sfScale += ("sf_scale_error" -> 1.0)
-      }
-
-      Seq("calib_sec" -> calib,
-        "tfrecord_walk_sec" -> tfWalkSec,
-        "tfrecord_walk_mb" -> tfBytes / 1e6,
-        "tfexample_census_sec" -> tfExSec,
-        "tfexample_census_mb" -> tfExBytes / 1e6,
-        "parquet_footer_sec" -> pqSec,
-        "parquet_footer_mb" -> pqBytes / 1e6,
-        "avro_walk_sec" -> avroSec,
-        "avro_walk_mb" -> avroBytes / 1e6,
-        "blocklist_ac_sec" -> blkAcSec,
-        "blocklist_split8_sec" -> blkSplitSec,
-        "calib_scan_sec" -> calibScan,
-        "mutualnn_chunked_sec" -> nnChunkedSec,
-        "mutualnn_broadcast_sec" -> nnBroadcastSec,
-        "nn_audit_sampled_sec" -> nnSampledSec,
-        "cdc_chunk_sec" -> cdcSec,
-        "cdc_chunk_mb" -> cdcBytes / 1e6,
-        "factjoin_plain_sec" -> plainSec,
-        "factjoin_bucketed_sec" -> bucketedSec,
-        "cc_chain32_minlabel_sec" -> ccMinlabel,
-        "cc_chain32_altstar_sec" -> ccAltstar,
-        "cc_chain32_minlabel_rounds" -> mlRounds.toDouble,
-        "cc_chain32_altstar_rounds" -> asRounds.toDouble,
-        "cc_scale_chain100k_sec" -> ccScaleNSec,
-        "cc_scale_chain400k_sec" -> ccScale4nSec,
-        "cc_scale_chain100k_rounds" -> ccScaleNRounds.toDouble,
-        "cc_scale_chain400k_rounds" -> ccScale4nRounds.toDouble,
-        "boruvka_scale_v512_sec" -> bvVSec,
-        "boruvka_scale_v2048_sec" -> bv4vSec,
-        "boruvka_scale_v512_rounds" -> bvVRounds.toDouble,
-        "boruvka_scale_v2048_rounds" -> bv4vRounds.toDouble,
-        "pca_gram_n100k_sec" -> pcaGramNSec,
-        "pca_gram_n400k_sec" -> pcaGram4nSec,
-        "pca_power6_n100k_sec" -> pcaPowerNSec,
-        "pca_power6_n400k_sec" -> pcaPower4nSec,
-        "kmeans256_sec" -> kmSec,
-        "kmeans256_rounds" -> kmRounds.toDouble,
-        "zorder_plain_span_cust" -> plainX,
-        "zorder_plain_span_day" -> plainY,
-        "zorder_zord_span_cust" -> zordX,
-        "zorder_zord_span_day" -> zordY,
-        "skewjoin_manual_sec" -> manualSec,
-        "skewjoin_aqe_sec" -> aqeSec,
-        "heavyhitters_full_sec" -> hhFullSec,
-        "heavyhitters_sketch_sec" -> hhSketchSec,
-        "topk_window_sec" -> topkWindowSec,
-        "topk_custom_sec" -> topkCustomSec,
-        // dispersion fields for every A/B measurement (median-of-3 —
-        // (max-min)/median; 2-run |a-b|/min for the pca power points):
-        // a comparison whose dispersions overlap its A-vs-B gap is NOISE
-        "factjoin_plain_disp" -> plainDisp,
-        "factjoin_bucketed_disp" -> bucketedDisp,
-        "skewjoin_manual_disp" -> manualDisp,
-        "skewjoin_aqe_disp" -> aqeDisp,
-        "heavyhitters_full_disp" -> hhFullDisp,
-        "heavyhitters_sketch_disp" -> hhSketchDisp,
-        "topk_window_disp" -> topkWindowDisp,
-        "topk_custom_disp" -> topkCustomDisp,
-        "mutualnn_chunked_disp" -> nnChunkedDisp,
-        "mutualnn_broadcast_disp" -> nnBroadcastDisp,
-        "nn_audit_sampled_disp" -> nnSampledDisp,
-        "blocklist_ac_disp" -> blkAcDisp,
-        "blocklist_split8_disp" -> blkSplitDisp,
-        "pca_power6_n100k_disp" -> pcaPowerNDisp,
-        "pca_power6_n400k_disp" -> pcaPower4nDisp,
-        "dedup_scale_n2k_sec" -> dedupNSec,
-        "dedup_scale_n8k_sec" -> dedup4nSec,
-        "dedup_scale_n2k_pairs" -> dedupNPairs.toDouble,
-        "dedup_scale_n8k_pairs" -> dedup4nPairs.toDouble,
-        "substring_scale_n2k_sec" -> runsNSec,
-        "substring_scale_n8k_sec" -> runs4nSec,
-        "substring_scale_n2k_runs" -> runsN.toDouble,
-        "substring_scale_n8k_runs" -> runs4n.toDouble,
-        "incdup_full_sec" -> incFullSec,
-        "incdup_incremental_sec" -> incIncSec,
-        "incdup_full_runs" -> fullRuns.toDouble,
-        "incdup_incremental_runs" -> incRuns.toDouble,
-        "winnow_vs_minhash_minhash_sec" -> wmMhSec,
-        "winnow_vs_minhash_winnow_sec" -> wmWnSec,
-        "winnow_vs_minhash_minhash_pairs" -> mhCount.toDouble,
-        "winnow_vs_minhash_winnow_pairs" -> wnCount.toDouble,
-        "winnow_vs_minhash_minhash_twin_recall" -> mhRecall,
-        "winnow_vs_minhash_winnow_twin_recall" -> wnRecall,
-        "winnow_vs_minhash_cluster_agree" -> agree,
-        "neardup_recall_minhash_noise10" -> mhR10,
-        "neardup_recall_winnow_noise10" -> wnR10,
-        "neardup_recall_minhash_noise20" -> mhR20,
-        "neardup_recall_winnow_noise20" -> wnR20,
-        "extras_calib_floor_sec" -> CalibFloorSec) ++ sfScale ++ blockStamps ++ stages
-    } catch {
-      case e: Throwable =>
-        // record the innermost cause too — Spark wraps command failures in
-        // an opaque "[INTERNAL_ERROR] Eagerly executed command failed"
-        var root = e
-        while (root.getCause != null && (root.getCause ne root)) root = root.getCause
-        val msg = if (root eq e) e.toString else s"${e.toString} <- ${root.toString}"
-        errors.getOrElseUpdate("extras", msg.take(300))
-        Seq.empty
-    }
+  /** The one-line stdout record the driver parses. The full record
+    * overflows the driver's bounded stdout tail (BENCH_r01–r04 all
+    * landed with parsed:null, truncated mid-JSON), so this line carries
+    * totals, both canaries, ledger verdicts, the 20 slowest queries and
+    * the full record's path. Key order is pinned by BenchRecordSpec. */
+  def line(m: Measured): String = {
+    // quiet-host calib is ~0.090 s (BASELINE.md); total_norm_sec rescales
+    // the total to that reference so rounds compare across host load
+    val norm = Some(m.calib).filter(_ > 0).map(c => m.total * (0.090 / c))
+    // top-20, not top-5 (r16, additive): the r15 PERF geomean covered
+    // only 2 queries because consecutive rounds' top-5 sets barely
+    // overlap; 20 entries ≈ +300 bytes on the one-line record
+    val slowest = m.results.sortBy(-_._2).take(20).map { case (k, v) => shortName(k) -> v }
+    s"""{"metric":"total","value":${fmt(m.total)},"unit":"sec","total_sec":${fmt(m.total)}""" +
+      s""","calib_sec":${fmt(m.calib)},"calib_scan_sec":${fmt(m.calibScan)}""" +
+      norm.map(n => s""","total_norm_sec":${fmt(n)}""").getOrElse("") +
+      s""","n_queries":${m.results.size},"n_errors":${m.errors.size}""" +
+      // bounded twin of the full record's retry evidence: the 12 worst
+      // first-pass flags with their retry verdicts
+      m.retry.fold("")(r => retryJson(r, r.flagged.sortBy(-_._2.norm).take(12))) +
+      m.verdict.fold("")(verdictJson) +
+      obj("queries", slowest)(fmt) +
+      s""","full_record":${jstr(m.fullRecordPath)},"sf":${jstr(m.sfDir)}}"""
+  }
 }

@@ -51,11 +51,7 @@ object Probe {
           stageLog.add((si.stageId, si.numTasks, wall, tm.executorRunTime, detail))
         }
     })
-    // exact name or a qNN_ prefix boundary — a bare startsWith would make
-    // "q3" run q30..q38 alongside q3
-    for (n <- names;
-         q <- SparkEntry.allQueries.filter(q =>
-           q.name == n || q.name.startsWith(n + "_"))) {
+    for (q <- SparkEntry.allQueries.filter(q => SparkEntry.selects(names)(q.name))) {
       val times = (1 to 3).map { i =>
         if (showJobs && i == 3) { jobLog.clear(); stageLog.clear(); capture = true }
         val t0 = System.nanoTime()
@@ -91,11 +87,9 @@ object Probe {
             case Array(d, sfx) => (d, sfx)
             case Array(d) => (d, "plan")
           }
-          val short = q.name.indexOf('_') match {
-            case -1 => q.name; case i => q.name.substring(0, i) }
           val out = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          val p = java.nio.file.Paths.get(dir, s"${short}_$suffix.txt")
+          val p = java.nio.file.Paths.get(dir, s"${SparkEntry.shortName(q.name)}_$suffix.txt")
           java.nio.file.Files.createDirectories(p.getParent)
           java.nio.file.Files.write(p,
             out.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -42,4 +42,20 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
+
+  /** A query's short `qNN` name: everything before the first `_`. The
+    * record and ledger key; unique across `queries` (BaselineLedgerSpec).
+    */
+  def shortName(name: String): String = name.indexOf('_') match {
+    case -1 => name
+    case i => name.substring(0, i)
+  }
+
+  /** The query selector Bench (`SPARK_GRAFT_ONLY_Q`), Probe and Verify
+    * share: `name` is picked when a selector entry is its full name or
+    * its exact qNN. Not a bare prefix — `q3` would otherwise also pick
+    * q30–q39.
+    */
+  def selects(selector: Seq[String])(name: String): Boolean =
+    selector.exists(p => p == name || p == shortName(name))
 }

@@ -6,11 +6,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name prefixes for fast local
+    // optional 3rd arg: comma-separated full names or qNNs for fast local
     // iteration (driver always calls with 2 args → full run)
     val nameFilter: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(","); n => ps.exists(n.startsWith) }
-      else _ => true
+      if (args.length > 2) SparkEntry.selects(args(2).split(",").toSeq) else _ => true
     val spark = GraftSession.create()
     // Fail loudly BEFORE dumping anything if the testdata encoding
     // drifted (round-6 lesson: a silent ts mis-decode red-flagged 16
@@ -39,23 +38,10 @@ object Verify {
       .flatMap(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       .sortBy(_._1)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/failures.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Json.string(k)}: ${Json.string(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), obj(failures))
     System.err.println(s"[verify] ${failures.size}/${futures.size} failed")
     spark.stop()
   }

@@ -305,42 +305,6 @@ object CurationPipeline {
         curateBatchStep(b.toDF(), storePath, outPath, idCol, textCol, cfg, evalDocs)
       }
 
-  /** Per-stage rows + wall seconds (each stage timed by its own
-    * count() action, cumulative lineage per stage — audit/bench
-    * instrumentation, not the hot path; Bench publishes these into
-    * the round's BASELINE evidence).
-    */
-  def stageTimings(docs: DataFrame, idCol: String, textCol: String,
-                   cfg: Config = Config(),
-                   evalDocs: Option[DataFrame] = None): Seq[(String, Long, Double)] = {
-    def timed(name: String, df: DataFrame): (String, Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      (name, n, (System.nanoTime() - t0) / 1e9)
-    }
-    val q = docs.filter(TextAnalysis.qualityScore(col(textCol), cfg.stopwords) >= cfg.minQuality)
-    val l = q.filter(TextAnalysis.langId(col(textCol), cfg.markerSets).isin(cfg.allowedLangs: _*))
-    val e = dedupKeepFirst(
-      l.withColumn("_fp", TextAnalysis.contentFingerprint(col(textCol))),
-      Seq("_fp"), Seq(col(idCol).asc))
-    // doc-level stages timed WITHOUT the substring layer so its cost
-    // shows up only in its own row (cumulative lineage per stage)
-    val docCfg = cfg.copy(cutDupRuns = false)
-    Seq(
-      timed("input", docs),
-      timed("quality", q),
-      timed("language", l),
-      timed("exact_dedup", e),
-      timed("near_dedup", curate(docs, idCol, textCol, docCfg))) ++
-      evalDocs.map(ev =>
-        timed("decontam", curate(docs, idCol, textCol, docCfg, Some(ev)))).toSeq ++
-      (if (cfg.cutDupRuns)
-        Seq(timed("run_cut",
-          curate(docs, idCol, textCol, cfg, evalDocs)
-            .filter(col("n_runs_cut") > 0)))
-      else Seq.empty)
-  }
-
   /** Per-stage row counts (runs the pipeline stage by stage — four
     * actions; use for auditing, not in the hot path).
     */

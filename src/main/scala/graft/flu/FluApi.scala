@@ -9,6 +9,8 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Json.{string => jsonString}
+
 /** Live HTTP serving layer over the registered batch — the one
   * reference runtime surface (api/app.py) the report SQLs alone don't
   * cover. Endpoints, response envelopes ({"data": [...], "summary":
@@ -43,6 +45,12 @@ object FluApi {
   def start(spark: SparkSession, port: Int = 5000): HttpServer = {
     require(FluReports.isRegistered(spark),
       "FluApi.start: no registered batch; call FluReports.registerViews first")
+    // The JDK server writes headers and body as two segments; with Nagle
+    // on, the body waits for the client's delayed ACK of the headers, a
+    // ~40 ms floor under every answer served from memory. The property is
+    // read once, when the first server is created; a JVM-level setting wins.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", exchange => route(spark, exchange))
     // small pool: a request renders at most one bounded query, once per
@@ -303,17 +311,6 @@ object FluApi {
 
   private def jsonDouble(d: Double): String =
     if (d.isNaN || d.isInfinite) jsonString(d.toString) else d.toString
-
-  private def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** JSON object from ordered key/value pairs. */
   private def obj(kvs: (String, Any)*): String =

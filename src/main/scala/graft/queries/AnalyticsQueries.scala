@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.Q.duckHash64
 
 /** Round-8 batch 2 — applied analytics over the star schema: graph
   * locality (per-node clustering, partition modularity), customer
@@ -21,10 +22,6 @@ import graft.Tables
 object AnalyticsQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q245
 

@@ -16,6 +16,14 @@ final case class Q(name: String,
                    fn: (SparkSession, String) => DataFrame,
                    oracle: Option[String])
 
+object Q {
+
+  /** DuckDB twin of the md5-derived 60-bit hash (Hashing.hash64 /
+    * MinhashKernel), for oracle SQL. */
+  def duckHash64(e: String): String =
+    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
+}
+
 /** The relational operator surface from SURVEY.md §2, expressed on the
   * synthetic star schema (TESTDATA.md). Each query names the §2 operator
   * ids it exercises; oracle SQL is written in DuckDB dialect with the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Hashing
 import graft.operators.Dedup
+import graft.queries.Q.duckHash64
 
 /** Corpus-curation operators a training-data pipeline runs before any
   * model sees a byte: repetition-based quality signals (the Gopher
@@ -21,10 +22,6 @@ import graft.operators.Dedup
 object CorpusQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   /** q61 — repetition signals (Gopher-style quality filter): per
     * document, the fraction of word-bigram occurrences that belong to

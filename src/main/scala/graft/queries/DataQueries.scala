@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.Hashing
 import graft.operators.{AudioCodec, Dedup, MultimodalCodec, MultimodalStub, Similarity, TextCodec, VideoCodec, TextAnalysis => TA}
 import graft.operators.Relational.dedupKeepFirst
+import graft.queries.Q.duckHash64
 
 /** Training-data pipeline operators over the `documents` and
   * `embeddings` tables: text analysis, deduplication (exact, MinHash-LSH,
@@ -38,10 +39,6 @@ object DataQueries {
 
   private[queries] def duckCos(a: String, b: String): String =
     s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   private def duckList(xs: Seq[String]): String =
     xs.map(s => s"'$s'").mkString("[", ",", "]")

@@ -7,6 +7,7 @@ import graft.Tables
 import graft.functions.Hashing
 import graft.functions.ScalarFunctions.dsum
 import graft.operators.{AsOfJoin, Relational, TextAnalysis}
+import graft.queries.Q.duckHash64
 
 /** Event-stream and corpus-statistics operators a large-scale pipeline
   * needs beyond the reference surface: point-in-time (as-of) joins,
@@ -19,10 +20,6 @@ import graft.operators.{AsOfJoin, Relational, TextAnalysis}
   * bit-for-bit.
   */
 object EventQueries {
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   /** q54 — backward as-of join: each error event picks the same user's
     * most recent purchase at-or-before it (point-in-time lookup).

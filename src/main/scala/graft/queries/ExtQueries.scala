@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.operators.{Dedup, GraphOps, Similarity}
+import graft.queries.Q.duckHash64
 
 /** Round-4 batch — graph label-doubling, exact set-similarity join,
   * regression / χ² / skyline / PMI statistics, and CDC apply:
@@ -34,10 +35,6 @@ import graft.operators.{Dedup, GraphOps, Similarity}
 object ExtQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q126
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.operators.Dedup
+import graft.queries.Q.duckHash64
 
 /** Round-8 batch 1 — classical statistical inference at scale: the
   * hypothesis-test family (rank-sum, Welch, ANOVA, Brown-Forsythe,
@@ -27,10 +28,6 @@ import graft.operators.Dedup
 object InferQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q237
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Hashing, ScalarFunctions}
 import graft.operators.{Similarity, TextAnalysis => TA}
+import graft.queries.Q.duckHash64
 
 /** Round-3 batch 2 — cluster-engineering operators: the join/agg
   * machinery a 100 TB deployment leans on beyond the analytic surface.
@@ -29,9 +30,6 @@ object ScaleQueries {
 
   private def duckCos(a: String, b: String): String =
     s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
-
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
 

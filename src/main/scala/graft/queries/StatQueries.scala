@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Dedup, GraphOps}
+import graft.queries.Q.duckHash64
 
 /** Round-3 batch 3 — distribution and propagation operators: token
   * Shannon entropy (the repetitiveness/quality signal rule-based
@@ -24,10 +25,6 @@ import graft.operators.{Dedup, GraphOps}
 object StatQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64 / MinhashKernel). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   // --------------------------------------------------------------- q107
 
@@ -2320,7 +2317,7 @@ object StatQueries {
           .select(col("dst"), expr("r DIV deg").as("c"))
           .groupBy("dst").agg(sum("c").as("inflow"))
         ranks = contrib
-          .join(broadcast(seeds.withColumn("is_seed", lit(1L))),
+          .join(seeds.withColumn("is_seed", lit(1L)),
             col("dst") === col("v"), "full_outer")
           .crossJoin(broadcast(base))
           .select(coalesce(col("dst"), col("v")).as("v"),

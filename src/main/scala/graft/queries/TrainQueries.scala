@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Dedup, Similarity, TextAnalysis => TA}
+import graft.queries.Q.duckHash64
 
 /** Round-3 training-data operators: statistical quality signals
   * (n-gram language-model scoring), semantic deduplication over
@@ -22,10 +23,6 @@ import graft.operators.{Dedup, Similarity, TextAnalysis => TA}
 object TrainQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** md5-derived 60-bit hash (mirrors Hashing.hash64). */
-  private def duckHash64(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   private def duckDot(a: String, b: String): String =
     s"list_reduce(list_transform(range(1, len($a)+1), " +

@@ -10,11 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BaselineLedgerSpec extends AnyFunSuite {
 
-  private def shortName(n: String) = n.indexOf('_') match {
-    case -1 => n
-    case i => n.substring(0, i)
-  }
-
   test("ledger exists, is well-formed, and covers every registered query") {
     val ledger = BaselineLedger.load()
     assert(ledger.isDefined, s"${BaselineLedger.Path} missing - run Bench at the " +
@@ -24,7 +19,7 @@ class BaselineLedgerSpec extends AnyFunSuite {
     assert(l.sf == "sf0.1", "ledger is frozen at the driver's bench scale factor")
     assert(l.queries.nonEmpty && l.queries.values.forall(_ > 0),
       "baselines must be positive seconds")
-    val registered = SparkEntry.queries.keys.map(shortName).toSet
+    val registered = SparkEntry.queries.keys.map(SparkEntry.shortName).toSet
     val missing = registered -- l.queries.keySet
     assert(missing.isEmpty,
       s"queries without a frozen baseline (run freeze_baseline.py): ${missing.toSeq.sorted.mkString(",")}")

@@ -152,6 +152,10 @@ class FluApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(workers.forall(_.isDaemon), "API pool must not block JVM exit")
   }
 
+  test("the server sends with TCP_NODELAY (no delayed-ACK floor under memoized answers)") {
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+  }
+
   test("healthcare-impact formats three percent columns and sums counties") {
     val (status, body, _) = get("/api/reports/healthcare-impact")
     assert(status == 200, body)

@@ -185,7 +185,7 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("bench scaling generator: hashed weights give a multi-round Borůvka run") {
-    // mirrors Bench.boruvkaAt(512): ring + hashed chords, pseudorandom
+    // a Borůvka scaling-input generator: ring + hashed chords, pseudorandom
     // high bits. A monotone-in-id weight degenerates to ONE round (all
     // min-edges point at low ids — caught live in round 10); the hashed
     // form must take ≥2 and ≤ ⌈log₂ 512⌉ = 9 merge rounds, and still

@@ -65,7 +65,8 @@ def main(sfdir, outdir):
     prefixes = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     n_pass = n_fail = 0
     for name in sorted(oracle):
-        if prefixes and not any(name.startswith(p) for p in prefixes):
+        # full name or exact qNN, as Verify's selector (SparkEntry.selects)
+        if prefixes and not any(p in (name, name.split("_")[0]) for p in prefixes):
             continue
         sql = oracle[name]
         spark_tbl = load_spark(outdir, name)

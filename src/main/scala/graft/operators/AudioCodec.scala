@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Real audio decode over opaque `binary` payload columns — the audio
   * half of the codec step [[MultimodalStub]] stubs out, made real for
@@ -444,36 +443,28 @@ object AudioCodec {
     * (`%016x`, matching the image aHash formatting). One parser pass
     * per partition, map-only; undecodable payloads surface as rows.
     */
-  def decodeAudioFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          // one parser pass: PCM (tag 1), else IMA ADPCM (0x11), else
-          // G.711 µ-law (7) / A-law (6)
-          decodePcmWav(bytes).orElse(decodeImaAdpcmWav(bytes))
-            .orElse(decodeMulawWav(bytes)).orElse(decodeAlawWav(bytes)) match {
-            case Some((sr, _, s)) =>
-              var sumAbs = 0L
-              var peak = 0L
-              var zc = 0L
-              var i = 0
-              while (i < s.length) {
-                val v = s(i).toLong
-                val a = math.abs(v)
-                sumAbs += a
-                if (a > peak) peak = a
-                if (i > 0 && v * s(i - 1) < 0) zc += 1
-                i += 1
-              }
-              (id, true, sr, s.length.toLong, sumAbs, peak, zc, f"${envelopeHash64(s)}%016x")
-            case None => (id, false, 0, 0L, 0L, 0L, 0L, null: String)
+  def decodeAudioFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "decodable", "sample_rate", "n_samples",
+      "sum_abs", "peak_abs", "zero_crossings", "envelope_hex") { (id, bytes) =>
+      // one parser pass: PCM (tag 1), else IMA ADPCM (0x11), else
+      // G.711 µ-law (7) / A-law (6)
+      decodePcmWav(bytes).orElse(decodeImaAdpcmWav(bytes))
+        .orElse(decodeMulawWav(bytes)).orElse(decodeAlawWav(bytes)) match {
+        case Some((sr, _, s)) =>
+          var sumAbs = 0L
+          var peak = 0L
+          var zc = 0L
+          var i = 0
+          while (i < s.length) {
+            val v = s(i).toLong
+            val a = math.abs(v)
+            sumAbs += a
+            if (a > peak) peak = a
+            if (i > 0 && v * s(i - 1) < 0) zc += 1
+            i += 1
           }
-        }
+          (id, true, sr, s.length.toLong, sumAbs, peak, zc, f"${envelopeHash64(s)}%016x")
+        case None => (id, false, 0, 0L, 0L, 0L, 0L, null: String)
       }
-      .toDF(idCol, "decodable", "sample_rate", "n_samples", "sum_abs", "peak_abs",
-        "zero_crossings", "envelope_hex")
-  }
+    }
 }

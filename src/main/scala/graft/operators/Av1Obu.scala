@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** AV1 OBU walk + sequence-header DECODE — the q403 (H.264 SPS)
   * pattern applied to the other dominant web codec: an AV1 stream is
@@ -237,29 +236,20 @@ object Av1Obu {
     IvfMeta(1, nFramesHdr, walked, nObus, nSeq, nFrameObus, malformed, seq)
   }
 
-  /** Map-only census over (id, IVF bytes). */
-  def av1Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parseIvf(bytes)
-          (id, m.ivfOk.toLong, m.nFramesHdr, m.nFramesWalked.toLong,
-            m.nObus.toLong, m.nSeq.toLong, m.nFrameObus.toLong,
-            m.malformedFrame.toLong, m.seq.ok.toLong, m.seq.profile.toLong,
-            m.seq.level.toLong, m.seq.tier.toLong, m.seq.width, m.seq.height,
-            m.seq.bitDepth.toLong, m.seq.mono.toLong,
-            m.seq.superblock128.toLong, m.seq.stillPicture.toLong,
-            m.seq.reduced.toLong)
-        }
-      }
-      .toDF(idCol, "ivf_ok", "n_frames_hdr", "n_frames_walked", "n_obus",
-        "n_seq_hdrs", "n_frame_obus", "malformed_frame", "seq_ok", "profile",
-        "level", "tier", "width", "height", "bit_depth", "mono",
-        "superblock128", "still_picture", "reduced")
-  }
+  def av1Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "ivf_ok", "n_frames_hdr", "n_frames_walked",
+      "n_obus", "n_seq_hdrs", "n_frame_obus", "malformed_frame", "seq_ok", "profile",
+      "level", "tier", "width", "height", "bit_depth", "mono", "superblock128",
+      "still_picture", "reduced") { (id, bytes) =>
+      val m = parseIvf(bytes)
+      (id, m.ivfOk.toLong, m.nFramesHdr, m.nFramesWalked.toLong,
+        m.nObus.toLong, m.nSeq.toLong, m.nFrameObus.toLong,
+        m.malformedFrame.toLong, m.seq.ok.toLong, m.seq.profile.toLong,
+        m.seq.level.toLong, m.seq.tier.toLong, m.seq.width, m.seq.height,
+        m.seq.bitDepth.toLong, m.seq.mono.toLong,
+        m.seq.superblock128.toLong, m.seq.stillPicture.toLong,
+        m.seq.reduced.toLong)
+    }
 
   // ------------------------------------------------------------------
   // encoders (fixtures + the closed-form oracle)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Avro Object Container File census — the remaining big data-lake
   * container next to parquet (q377), ORC-era warehouses' row format
@@ -167,22 +166,13 @@ object AvroOps {
     out.toByteArray
   }
 
-  /** Census DataFrame over (id, avro-bytes) — map-only, zero shuffles. */
-  def avroFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.nMetaEntries.toLong, m.schemaLen, m.codec,
-            m.nBlocks.toLong, m.totalRecords, m.payloadBytes,
-            m.syncMismatch.toLong, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "n_meta_entries", "schema_len", "codec",
-        "n_blocks", "total_records", "payload_bytes", "sync_mismatch",
-        "trailing_bytes")
-  }
+  def avroFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "n_meta_entries", "schema_len",
+      "codec", "n_blocks", "total_records", "payload_bytes", "sync_mismatch",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.nMetaEntries.toLong, m.schemaLen, m.codec,
+        m.nBlocks.toLong, m.totalRecords, m.payloadBytes,
+        m.syncMismatch.toLong, m.trailingBytes)
+    }
 }

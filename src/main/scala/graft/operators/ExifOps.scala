@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** EXIF/TIFF IFD walker — the image-side provenance-and-PII triage
   * pass the codec family was missing: every JPEG a crawl ingests can
@@ -162,23 +161,14 @@ object ExifOps {
       (segEnd - 2).toLong, (n - segEnd).toLong, 0L)
   }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def exifFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.littleEndian.toLong, m.nIfd0Entries.toLong,
-            m.orientation.toLong, m.hasGps.toLong, m.hasExifIfd.toLong,
-            m.hasDateTime.toLong, m.hasMake.toLong, m.app1Bytes,
-            m.imageBytes, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "little_endian", "n_ifd0_entries", "orientation",
-        "has_gps", "has_exif_ifd", "has_datetime", "has_make", "app1_bytes",
-        "image_bytes", "trailing_bytes")
-  }
+  def exifFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "little_endian", "n_ifd0_entries",
+      "orientation", "has_gps", "has_exif_ifd", "has_datetime", "has_make",
+      "app1_bytes", "image_bytes", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.littleEndian.toLong, m.nIfd0Entries.toLong,
+        m.orientation.toLong, m.hasGps.toLong, m.hasExifIfd.toLong,
+        m.hasDateTime.toLong, m.hasMake.toLong, m.app1Bytes,
+        m.imageBytes, m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** FLAC metadata walker — completes the audio-triage family
   * ([[MpegAudio]] MP3/ADTS, [[OggOps]] Ogg, [[AudioCodec]] WAV/
@@ -125,23 +124,14 @@ object FlacOps {
         nBlocks, metaBytes, nPad, nVc, (n - pos).toLong, 0L)
   }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def flacFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.sampleRate.toLong, m.channels.toLong,
-            m.bitsPerSample.toLong, m.totalSamples, m.durationMs,
-            m.nMetaBlocks.toLong, m.metaBytes, m.nPadding.toLong,
-            m.nVorbisComment.toLong, m.audioBytes, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "sample_rate", "channels", "bits_per_sample",
-        "total_samples", "duration_ms", "n_meta_blocks", "meta_bytes",
-        "n_padding", "n_vorbis_comment", "audio_bytes", "trailing_bytes")
-  }
+  def flacFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "sample_rate", "channels",
+      "bits_per_sample", "total_samples", "duration_ms", "n_meta_blocks", "meta_bytes",
+      "n_padding", "n_vorbis_comment", "audio_bytes", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.sampleRate.toLong, m.channels.toLong,
+        m.bitsPerSample.toLong, m.totalSamples, m.durationMs,
+        m.nMetaBlocks.toLong, m.metaBytes, m.nPadding.toLong,
+        m.nVorbisComment.toLong, m.audioBytes, m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** GGUF header walker — the quantized-weights sibling of q355's
   * SafeTensors audit: the container llama.cpp-family runtimes mmap,
@@ -144,22 +143,14 @@ object GgufOps {
       kvBytes, nTensors.toInt, params, c.pos, n - c.pos)
   }
 
-  def ggufFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.version.toLong, m.nKv.toLong,
-            m.nKvString.toLong, m.nKvScalar.toLong, m.nKvArray.toLong,
-            m.kvBytes, m.nTensors.toLong, m.paramCount, m.headerBytes,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "version", "n_kv", "n_kv_string", "n_kv_scalar",
-        "n_kv_array", "kv_bytes", "n_tensors", "param_count", "header_bytes",
-        "trailing_bytes")
-  }
+  def ggufFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "version", "n_kv", "n_kv_string",
+      "n_kv_scalar", "n_kv_array", "kv_bytes", "n_tensors", "param_count",
+      "header_bytes", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.version.toLong, m.nKv.toLong,
+        m.nKvString.toLong, m.nKvScalar.toLong, m.nKvArray.toLong,
+        m.kvBytes, m.nTensors.toLong, m.paramCount, m.headerBytes,
+        m.trailingBytes)
+    }
 }

@@ -232,64 +232,49 @@ object IcebergOps {
   // ------------------------------------------------------------------
   // census DataFrames (map-only, zero shuffles)
 
-  def manifestCensus(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parseManifest(bytes)
-          val live = m.entries.filter(_.status != 2)
-          (id, m.valid.toLong, m.schemaOk.toLong, m.nBlocks.toLong,
-            m.nMalformedBlocks.toLong, m.entries.size.toLong,
-            m.entries.count(_.status == 1).toLong,
-            m.entries.count(_.status == 0).toLong,
-            m.entries.count(_.status == 2).toLong,
-            live.size.toLong,
-            live.map(_.recordCount).sum,
-            live.map(_.fileSize).sum,
-            live.map(_.partition).distinct.size.toLong,
-            live.count(_.bounds.isEmpty).toLong,
-            m.entries.count(_.snapshotId.isDefined).toLong,
-            // distinct snapshot ids among LIVE entries: a healthy
-            // single-writer manifest carries exactly one — the q400
-            // dual-write reconciliation's snapshot facet reads this
-            live.flatMap(_.snapshotId).distinct.size.toLong,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "schema_ok", "n_blocks", "n_malformed_blocks",
-        "n_entries", "n_added", "n_existing", "n_deleted", "n_live",
-        "live_rows", "live_bytes", "n_partitions", "n_no_bounds",
-        "n_with_snapshot", "n_snapshot_ids", "trailing_bytes")
-  }
+  def manifestCensus(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "schema_ok", "n_blocks",
+      "n_malformed_blocks", "n_entries", "n_added", "n_existing", "n_deleted", "n_live",
+      "live_rows", "live_bytes", "n_partitions", "n_no_bounds", "n_with_snapshot",
+      "n_snapshot_ids", "trailing_bytes") { (id, bytes) =>
+      val m = parseManifest(bytes)
+      val live = m.entries.filter(_.status != 2)
+      (id, m.valid.toLong, m.schemaOk.toLong, m.nBlocks.toLong,
+        m.nMalformedBlocks.toLong, m.entries.size.toLong,
+        m.entries.count(_.status == 1).toLong,
+        m.entries.count(_.status == 0).toLong,
+        m.entries.count(_.status == 2).toLong,
+        live.size.toLong,
+        live.map(_.recordCount).sum,
+        live.map(_.fileSize).sum,
+        live.map(_.partition).distinct.size.toLong,
+        live.count(_.bounds.isEmpty).toLong,
+        m.entries.count(_.snapshotId.isDefined).toLong,
+        // distinct snapshot ids among LIVE entries: a healthy
+        // single-writer manifest carries exactly one — the q400
+        // dual-write reconciliation's snapshot facet reads this
+        live.flatMap(_.snapshotId).distinct.size.toLong,
+        m.trailingBytes)
+    }
 
   /** Table-level prune audit over the manifest's live entries:
     * `x > threshold` zone prune via upper bounds (no bounds → scan,
     * counted separately) + partition-value prune.
     */
   def manifestPruneAudit(df: DataFrame, idCol: String, payloadCol: String,
-                         threshold: Long, partValue: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val live = parseManifest(bytes).entries.filter(_.status != 2)
-          val skippable = live.filter(_.bounds.exists(_.max <= threshold))
-          val scanned = live.filterNot(_.bounds.exists(_.max <= threshold))
-          (id, live.size.toLong, skippable.size.toLong, scanned.size.toLong,
-            scanned.filter(_.bounds.isDefined).map(_.recordCount).sum,
-            scanned.count(_.bounds.isEmpty).toLong,
-            live.count(_.partition == partValue).toLong,
-            live.count(_.partition != partValue).toLong)
-        }
-      }
-      .toDF(idCol, "n_live", "n_skippable", "n_scanned", "rows_scanned",
-        "n_scanned_no_bounds", "n_part_match", "n_part_pruned")
-  }
+                         threshold: Long, partValue: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_live", "n_skippable", "n_scanned",
+      "rows_scanned", "n_scanned_no_bounds", "n_part_match",
+      "n_part_pruned") { (id, bytes) =>
+      val live = parseManifest(bytes).entries.filter(_.status != 2)
+      val skippable = live.filter(_.bounds.exists(_.max <= threshold))
+      val scanned = live.filterNot(_.bounds.exists(_.max <= threshold))
+      (id, live.size.toLong, skippable.size.toLong, scanned.size.toLong,
+        scanned.filter(_.bounds.isDefined).map(_.recordCount).sum,
+        scanned.count(_.bounds.isEmpty).toLong,
+        live.count(_.partition == partValue).toLong,
+        live.count(_.partition != partValue).toLong)
+    }
 
   // ------------------------------------------------------------------
   // table-root descent (r13 verdict item 4): metadata.json →

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** ISO-BMFF (MP4/MOV/M4A) box walker — container triage for the
   * format that carries most of the world's video/audio, completing
@@ -117,21 +116,13 @@ object IsoBmff {
       maxDepth, if (halted) bytes.length - haltPos else 0L)
   }
 
-  /** Map-only dataset triage — the codec-family shape. */
-  def bmffFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.brand, m.nBoxes.toLong, m.nTracks.toLong, m.timescale,
-            m.duration, m.durationMs, m.mdatBytes, m.maxDepth.toLong,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "brand", "n_boxes", "n_tracks", "timescale", "duration",
-        "duration_ms", "mdat_bytes", "max_depth", "trailing_bytes")
-  }
+  def bmffFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "brand", "n_boxes", "n_tracks", "timescale",
+      "duration", "duration_ms", "mdat_bytes", "max_depth",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.brand, m.nBoxes.toLong, m.nTracks.toLong, m.timescale,
+        m.duration, m.durationMs, m.mdatBytes, m.maxDepth.toLong,
+        m.trailingBytes)
+    }
 }

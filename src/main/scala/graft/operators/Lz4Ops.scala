@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** LZ4 frame census + raw-block decode — the fourth ubiquitous member
   * of the compression-container family (gzip q194, zstd q366/q368,
@@ -457,27 +456,18 @@ object Lz4Ops {
   /** Census DataFrame over (id, lz4-frame bytes) — map-only, zero
     * shuffles.
     */
-  def lz4Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.hasBlockChecksum.toLong,
-            m.hasContentChecksum.toLong, m.blockMaxSize,
-            m.declaredContentSize, m.nCompressed.toLong, m.nStored.toLong,
-            m.storedBytes, m.decodedBytes, m.nDecodeFailed.toLong,
-            m.blockCrcOk.toLong, m.blockCrcBad.toLong,
-            m.contentCrcOk.toLong, m.contentSizeMatch.toLong,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "has_block_crc", "has_content_crc",
-        "block_max_size", "declared_size", "n_compressed", "n_stored",
-        "stored_bytes", "decoded_bytes", "n_decode_failed",
-        "block_crc_ok", "block_crc_bad", "content_crc_ok",
-        "content_size_match", "trailing_bytes")
-  }
+  def lz4Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "has_block_crc", "has_content_crc",
+      "block_max_size", "declared_size", "n_compressed", "n_stored", "stored_bytes",
+      "decoded_bytes", "n_decode_failed", "block_crc_ok", "block_crc_bad",
+      "content_crc_ok", "content_size_match", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.hasBlockChecksum.toLong,
+        m.hasContentChecksum.toLong, m.blockMaxSize,
+        m.declaredContentSize, m.nCompressed.toLong, m.nStored.toLong,
+        m.storedBytes, m.decodedBytes, m.nDecodeFailed.toLong,
+        m.blockCrcOk.toLong, m.blockCrcBad.toLong,
+        m.contentCrcOk.toLong, m.contentSizeMatch.toLong,
+        m.trailingBytes)
+    }
 }

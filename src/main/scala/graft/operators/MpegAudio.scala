@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** MPEG audio (MP3) frame-HEADER walk — metadata extraction for the
   * dominant lossy audio format without entropy decode.
@@ -229,41 +228,26 @@ object MpegAudio {
   /** Dataset-level ADTS metadata — same map-only shape as
     * [[mp3Features]].
     */
-  def adtsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parseAdts(bytes)
-          (id, m.sampleRate, m.profile, m.channelConfig, m.nFrames.toLong,
-            m.nRawBlocks, m.sumFrameBytes, m.nCrcFrames.toLong, m.durationUs,
-            m.trailingBytes.toLong)
-        }
-      }
-      .toDF(idCol, "sample_rate", "profile", "channel_config", "n_frames",
-        "n_raw_blocks", "sum_frame_bytes", "n_crc_frames", "duration_us",
-        "trailing_bytes")
-  }
+  def adtsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "sample_rate", "profile", "channel_config",
+      "n_frames", "n_raw_blocks", "sum_frame_bytes", "n_crc_frames", "duration_us",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parseAdts(bytes)
+      (id, m.sampleRate, m.profile, m.channelConfig, m.nFrames.toLong,
+        m.nRawBlocks, m.sumFrameBytes, m.nCrcFrames.toLong, m.durationUs,
+        m.trailingBytes.toLong)
+    }
 
   /** Dataset-level metadata extraction: one parser instance per
     * partition, map-only (zero shuffles) — the q177/q189 codec shape.
     */
-  def mp3Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.id3Bytes, m.sampleRate, m.nFrames.toLong, m.sumBitrateKbps,
-            m.nDistinctBitrates, m.nPadded.toLong, m.durationUs,
-            m.trailingBytes.toLong)
-        }
-      }
-      .toDF(idCol, "id3_bytes", "sample_rate", "n_frames", "sum_bitrate_kbps",
-        "n_distinct_bitrates", "n_padded", "duration_us", "trailing_bytes")
-  }
+  def mp3Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "id3_bytes", "sample_rate", "n_frames",
+      "sum_bitrate_kbps", "n_distinct_bitrates", "n_padded", "duration_us",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.id3Bytes, m.sampleRate, m.nFrames.toLong, m.sumBitrateKbps,
+        m.nDistinctBitrates, m.nPadded.toLong, m.durationUs,
+        m.trailingBytes.toLong)
+    }
 }

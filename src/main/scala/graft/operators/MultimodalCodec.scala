@@ -5,7 +5,6 @@ import java.awt.image.BufferedImage
 import javax.imageio.ImageIO
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Real JDK-native image decode over opaque `binary` payload columns —
   * the codec step [[MultimodalStub]] stubs out, made real for the one
@@ -229,28 +228,21 @@ object MultimodalCodec {
     * was skipped) / `undecodable` (no reader recognizes the bytes).
     */
   def decodeImageFeatures(df: DataFrame, idCol: String, payloadCol: String,
-                          maxPixels: Long = MaxPixels): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeGrayResult(bytes, maxPixels) match {
-            case Decoded(w, h, pix) =>
-              var total = 0L
-              var i = 0
-              while (i < pix.length) { total += pix(i); i += 1 }
-              (id, true, "ok", w, h, total, f"${aHash64(w, h, pix)}%016x")
-            case CapRejected(w, h) =>
-              (id, false, "cap_rejected", w, h, 0L, null: String)
-            case Undecodable =>
-              (id, false, "undecodable", 0, 0, 0L, null: String)
-          }
-        }
+                          maxPixels: Long = MaxPixels): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "decodable", "status", "width", "height",
+      "sum_gray", "ahash_hex") { (id, bytes) =>
+      decodeGrayResult(bytes, maxPixels) match {
+        case Decoded(w, h, pix) =>
+          var total = 0L
+          var i = 0
+          while (i < pix.length) { total += pix(i); i += 1 }
+          (id, true, "ok", w, h, total, f"${aHash64(w, h, pix)}%016x")
+        case CapRejected(w, h) =>
+          (id, false, "cap_rejected", w, h, 0L, null: String)
+        case Undecodable =>
+          (id, false, "undecodable", 0, 0, 0L, null: String)
       }
-      .toDF(idCol, "decodable", "status", "width", "height", "sum_gray", "ahash_hex")
-  }
+    }
 
   /** Decode + nearest-neighbor thumbnail: (idCol, width, height,
     * thumb_hex) where thumb_hex is the ow×oh resized grayscale pixels
@@ -259,21 +251,14 @@ object MultimodalCodec {
     * payloads yield a null thumb.
     */
   def thumbnail(df: DataFrame, idCol: String, payloadCol: String,
-                ow: Int, oh: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeGray(bytes) match {
-            case Some((w, h, pix)) =>
-              val t = resizeNearest(w, h, pix, ow, oh)
-              (id, w, h, t.map(p => f"$p%02x").mkString)
-            case None => (id, 0, 0, null: String)
-          }
-        }
+                ow: Int, oh: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "width", "height",
+      "thumb_hex") { (id, bytes) =>
+      decodeGray(bytes) match {
+        case Some((w, h, pix)) =>
+          val t = resizeNearest(w, h, pix, ow, oh)
+          (id, w, h, t.map(p => f"$p%02x").mkString)
+        case None => (id, 0, 0, null: String)
       }
-      .toDF(idCol, "width", "height", "thumb_hex")
-  }
+    }
 }

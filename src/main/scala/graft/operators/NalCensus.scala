@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** H.264/AVC Annex-B NAL-unit census — video triage without entropy
   * decode, the video member of the header-walk family ([[MpegAudio]]
@@ -311,50 +310,34 @@ object NalCensus {
     * sets (or with malformed/declined ones) report zeros with the ok/
     * gated flags naming the class.
     */
-  def spsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          var sps: Array[Byte] = null
-          var pps: Array[Byte] = null
-          var nNals = 0L
-          walkNals(bytes) { (ns, nalEnd, _) =>
-            nNals += 1
-            val t = bytes(ns) & 0x1f
-            if (t == 7 && sps == null) sps = rbspUnescape(bytes, ns + 1, nalEnd)
-            if (t == 8 && pps == null) pps = rbspUnescape(bytes, ns + 1, nalEnd)
-          }
-          val s = if (sps == null) SpsFail else parseSps(sps)
-          val (ppsOk, cabac) = if (pps == null) (0, 0) else parsePps(pps)
-          (id, nNals, s.ok.toLong, s.gated.toLong, s.profile.toLong,
-            s.level.toLong, s.chroma.toLong, s.bitDepth.toLong,
-            s.width.toLong, s.height.toLong, s.frameMbsOnly.toLong,
-            ppsOk.toLong, cabac.toLong)
-        }
+  def spsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_nals", "sps_ok", "sps_gated",
+      "profile_idc", "level_idc", "chroma_format", "bit_depth", "width", "height",
+      "frame_mbs_only", "pps_ok", "cabac") { (id, bytes) =>
+      var sps: Array[Byte] = null
+      var pps: Array[Byte] = null
+      var nNals = 0L
+      walkNals(bytes) { (ns, nalEnd, _) =>
+        nNals += 1
+        val t = bytes(ns) & 0x1f
+        if (t == 7 && sps == null) sps = rbspUnescape(bytes, ns + 1, nalEnd)
+        if (t == 8 && pps == null) pps = rbspUnescape(bytes, ns + 1, nalEnd)
       }
-      .toDF(idCol, "n_nals", "sps_ok", "sps_gated", "profile_idc", "level_idc",
-        "chroma_format", "bit_depth", "width", "height", "frame_mbs_only",
-        "pps_ok", "cabac")
-  }
+      val s = if (sps == null) SpsFail else parseSps(sps)
+      val (ppsOk, cabac) = if (pps == null) (0, 0) else parsePps(pps)
+      (id, nNals, s.ok.toLong, s.gated.toLong, s.profile.toLong,
+        s.level.toLong, s.chroma.toLong, s.bitDepth.toLong,
+        s.width.toLong, s.height.toLong, s.frameMbsOnly.toLong,
+        ppsOk.toLong, cabac.toLong)
+    }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def nalFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.nNals.toLong, m.nIdr.toLong, m.nSlice.toLong, m.nSps.toLong,
-            m.nPps.toLong, m.nSei.toLong, m.nOther.toLong, m.n4ByteStarts.toLong,
-            m.sumNalBytes, m.trailingBytes.toLong)
-        }
-      }
-      .toDF(idCol, "n_nals", "n_idr", "n_slice", "n_sps", "n_pps", "n_sei",
-        "n_other", "n_4byte_starts", "sum_nal_bytes", "trailing_bytes")
-  }
+  def nalFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_nals", "n_idr", "n_slice", "n_sps",
+      "n_pps", "n_sei", "n_other", "n_4byte_starts", "sum_nal_bytes",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.nNals.toLong, m.nIdr.toLong, m.nSlice.toLong, m.nSps.toLong,
+        m.nPps.toLong, m.nSei.toLong, m.nOther.toLong, m.n4ByteStarts.toLong,
+        m.sumNalBytes, m.trailingBytes.toLong)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Ogg page walker (RFC 3533) — the open-container member of the
   * audio-triage family ([[MpegAudio]] MP3/ADTS): Opus/Vorbis corpora
@@ -450,61 +449,34 @@ object OggOps {
       durUs, nMalformed, (bytes.length - pos).toLong)
   }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def opusTocFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = opusTocCensus(bytes)
-          (id, m.nAudioPackets.toLong, m.nSilk.toLong, m.nHybrid.toLong,
-            m.nCelt.toLong, m.nStereo.toLong, m.nCode3.toLong,
-            m.totalFrames, m.durationUs, m.nMalformed.toLong, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "n_audio_packets", "n_silk", "n_hybrid", "n_celt",
-        "n_stereo", "n_code3", "total_frames", "duration_us",
-        "n_malformed", "trailing_bytes")
-  }
+  def opusTocFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_audio_packets", "n_silk", "n_hybrid",
+      "n_celt", "n_stereo", "n_code3", "total_frames", "duration_us", "n_malformed",
+      "trailing_bytes") { (id, bytes) =>
+      val m = opusTocCensus(bytes)
+      (id, m.nAudioPackets.toLong, m.nSilk.toLong, m.nHybrid.toLong,
+        m.nCelt.toLong, m.nStereo.toLong, m.nCode3.toLong,
+        m.totalFrames, m.durationUs, m.nMalformed.toLong, m.trailingBytes)
+    }
 
-  /** Map-only codec census — the codec-family shape. */
-  def oggCodecFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = codecMeta(bytes)
-          (id, m.nStreams.toLong, m.nOpus.toLong, m.nVorbis.toLong,
-            m.nFlac.toLong, m.nOtherCodec.toLong, m.codecId.toLong,
-            m.channels.toLong, m.sampleRate, m.preSkip.toLong,
-            m.opusDurationMs, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "n_streams", "n_opus", "n_vorbis", "n_flac",
-        "n_other_codec", "codec_id", "channels", "sample_rate", "pre_skip",
-        "opus_duration_ms", "trailing_bytes")
-  }
+  def oggCodecFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_streams", "n_opus", "n_vorbis", "n_flac",
+      "n_other_codec", "codec_id", "channels", "sample_rate", "pre_skip",
+      "opus_duration_ms", "trailing_bytes") { (id, bytes) =>
+      val m = codecMeta(bytes)
+      (id, m.nStreams.toLong, m.nOpus.toLong, m.nVorbis.toLong,
+        m.nFlac.toLong, m.nOtherCodec.toLong, m.codecId.toLong,
+        m.channels.toLong, m.sampleRate, m.preSkip.toLong,
+        m.opusDurationMs, m.trailingBytes)
+    }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def oggFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.nPages.toLong, m.nBos.toLong, m.nEos.toLong, m.nContinued.toLong,
-            m.payloadBytes, m.headerBytes, m.lastGranule, m.durationMs,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "n_pages", "n_bos", "n_eos", "n_continued",
-        "payload_bytes", "header_bytes", "last_granule", "duration_ms",
-        "trailing_bytes")
-  }
+  def oggFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_pages", "n_bos", "n_eos", "n_continued",
+      "payload_bytes", "header_bytes", "last_granule", "duration_ms",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.nPages.toLong, m.nBos.toLong, m.nEos.toLong, m.nContinued.toLong,
+        m.payloadBytes, m.headerBytes, m.lastGranule, m.durationMs,
+        m.trailingBytes)
+    }
 }

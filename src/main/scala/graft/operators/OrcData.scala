@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import TfRecordOps.{lenDelimited, pbTag, skipValue}
 
@@ -736,39 +735,23 @@ object OrcData {
     * structure + length statistics. Map-only, zero shuffles.
     */
   def orcStringDecodeAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val d = decodeStringFile(bytes, colIdx)
-          (id, d.ok.toLong, d.gated.toLong, d.nStripes.toLong, d.nDictVals,
-            d.nValues, d.nNulls, d.sumLen, d.minLen, d.maxLen)
-        }
-      }
-      .toDF(idCol, "ok", "gated", "n_stripes", "n_dict_vals", "n_values",
-        "n_nulls", "sum_len", "min_len", "max_len")
-  }
+      colIdx: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "ok", "gated", "n_stripes", "n_dict_vals",
+      "n_values", "n_nulls", "sum_len", "min_len", "max_len") { (id, bytes) =>
+      val d = decodeStringFile(bytes, colIdx)
+      (id, d.ok.toLong, d.gated.toLong, d.nStripes.toLong, d.nDictVals,
+        d.nValues, d.nNulls, d.sumLen, d.minLen, d.maxLen)
+    }
 
   /** Census DataFrame over (id, ORC bytes): integer-column decode
     * truth. Map-only, zero shuffles; aggregates only.
     */
   def orcDecodeAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val d = decodeIntFile(bytes, colIdx)
-          (id, d.ok.toLong, d.gated.toLong, d.nStripes.toLong,
-            d.nValues, d.nNulls, d.minV, d.maxV, d.sum)
-        }
-      }
-      .toDF(idCol, "ok", "gated", "n_stripes", "n_values", "n_nulls",
-        "min_v", "max_v", "sum_v")
-  }
+      colIdx: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "ok", "gated", "n_stripes", "n_values",
+      "n_nulls", "min_v", "max_v", "sum_v") { (id, bytes) =>
+      val d = decodeIntFile(bytes, colIdx)
+      (id, d.ok.toLong, d.gated.toLong, d.nStripes.toLong,
+        d.nValues, d.nNulls, d.minV, d.maxV, d.sum)
+    }
 }

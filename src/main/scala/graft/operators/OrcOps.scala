@@ -3,7 +3,6 @@ package graft.operators
 import TfRecordOps.{lenDelimited, pbLen, pbTag, skipValue}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** ORC tail census — the third member of the columnar-lake trio
   * (parquet q377, Avro OCF q378): Hive-era warehouses and plenty of
@@ -267,23 +266,15 @@ object OrcOps {
     * ps_len/footer_len stay out of the projection: they depend on
     * varint widths no SQL oracle should re-derive (the q377 rule).
     */
-  def orcFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.compression, m.metadataLen,
-            m.writerVersion, m.footerParsed.toLong, m.nStripes.toLong,
-            m.numRows, m.stripeRows, m.nTypes.toLong, m.contentLength)
-        }
-      }
-      .toDF(idCol, "valid", "compression", "metadata_len",
-        "writer_version", "footer_parsed", "n_stripes", "num_rows",
-        "stripe_rows", "n_types", "content_length")
-  }
+  def orcFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "compression", "metadata_len",
+      "writer_version", "footer_parsed", "n_stripes", "num_rows", "stripe_rows",
+      "n_types", "content_length") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.compression, m.metadataLen,
+        m.writerVersion, m.footerParsed.toLong, m.nStripes.toLong,
+        m.numRows, m.stripeRows, m.nTypes.toLong, m.contentLength)
+    }
 
   /** Stripe-list + column-statistics census over (id, orc-bytes): the
     * q381 tail walk descended one level further (r11 verdict item 6) —
@@ -294,27 +285,18 @@ object OrcOps {
     * reaches in q377/q380. Map-only, zero shuffles; q381's projection
     * stays frozen (this is a separate census, not a schema change).
     */
-  def orcStripeStats(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.footerParsed.toLong, m.nStripes.toLong,
-            m.stripeIndexBytes, m.stripeDataBytes, m.stripeFooterBytes,
-            m.stripeRowsMin, m.stripeRowsMax, m.offsetsMonotonic.toLong,
-            m.nColStats.toLong, m.statValues, m.nHasNull.toLong,
-            m.nIntStats.toLong, m.intMin, m.intMax)
-        }
-      }
-      .toDF(idCol, "valid", "footer_parsed", "n_stripes",
-        "stripe_index_bytes", "stripe_data_bytes", "stripe_footer_bytes",
-        "stripe_rows_min", "stripe_rows_max", "offsets_monotonic",
-        "n_col_stats", "stat_values", "n_has_null",
-        "n_int_stats", "int_min", "int_max")
-  }
+  def orcStripeStats(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "footer_parsed", "n_stripes",
+      "stripe_index_bytes", "stripe_data_bytes", "stripe_footer_bytes",
+      "stripe_rows_min", "stripe_rows_max", "offsets_monotonic", "n_col_stats",
+      "stat_values", "n_has_null", "n_int_stats", "int_min", "int_max") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.footerParsed.toLong, m.nStripes.toLong,
+        m.stripeIndexBytes, m.stripeDataBytes, m.stripeFooterBytes,
+        m.stripeRowsMin, m.stripeRowsMax, m.offsetsMonotonic.toLong,
+        m.nColStats.toLong, m.statValues, m.nHasNull.toLong,
+        m.nIntStats.toLong, m.intMin, m.intMax)
+    }
 
   /** Per-stripe statistics for one column from the METADATA section —
     * the layer [[parse]] only sizes (PostScript.metadataLength): the
@@ -417,26 +399,18 @@ object OrcOps {
     * shuffles.
     */
   def orcPruneAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int, thresholdOf: Long => Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val t = thresholdOf(id)
-          val ss = stripeStatsCensus(bytes, colIdx)
-          val readable = ss.count(_._2 == 1)
-          val prunedGt = ss.count { case (_, has, _, mx) => has == 1 && mx <= t }
-          val prunedLt = ss.count { case (_, has, mn, _) => has == 1 && mn >= t }
-          val scannedGt = ss.collect {
-            case (rows, has, _, mx) if !(has == 1 && mx <= t) => rows
-          }.sum
-          (id, ss.size.toLong, readable.toLong, prunedGt.toLong,
-            prunedLt.toLong, scannedGt, t)
-        }
-      }
-      .toDF(idCol, "n_stripes", "n_readable", "pruned_gt", "pruned_lt",
-        "scanned_rows_gt", "threshold")
-  }
+      colIdx: Int, thresholdOf: Long => Long): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_stripes", "n_readable", "pruned_gt",
+      "pruned_lt", "scanned_rows_gt", "threshold") { (id, bytes) =>
+      val t = thresholdOf(id)
+      val ss = stripeStatsCensus(bytes, colIdx)
+      val readable = ss.count(_._2 == 1)
+      val prunedGt = ss.count { case (_, has, _, mx) => has == 1 && mx <= t }
+      val prunedLt = ss.count { case (_, has, mn, _) => has == 1 && mn >= t }
+      val scannedGt = ss.collect {
+        case (rows, has, _, mx) if !(has == 1 && mx <= t) => rows
+      }.sum
+      (id, ss.size.toLong, readable.toLong, prunedGt.toLong,
+        prunedLt.toLong, scannedGt, t)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Parquet footer census — the storage format this very engine (and
   * every corpus distribution from HF to internal lakes) ships data
@@ -787,42 +786,35 @@ object ParquetFooter {
     * without locations prune pages, not rows.
     */
   def pageRowsAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int, threshold: Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val rgs = pageRowsCensus(bytes, colIdx)
-          var rowsTotal = 0L; var skip = 0L; var unknown = 0L
-          var pagesRowed = 0L; var pagesUnknown = 0L
-          rgs.foreach { case (rgRows, pagesOpt, frOpt) =>
-            rowsTotal += rgRows
-            (pagesOpt, frOpt) match {
-              case (Some(pages), Some(fr)) =>
-                pagesRowed += pages.size
-                pages.indices.foreach { p =>
-                  val pRows =
-                    if (p < pages.size - 1) fr(p + 1) - fr(p)
-                    else rgRows - fr(p)
-                  val (np, _, hi, _) = pages(p)
-                  if (np || hi <= threshold) skip += pRows
-                }
-              case (Some(pages), None) =>
-                pagesUnknown += pages.size
-                unknown += rgRows
-              case _ =>
-                unknown += rgRows
+      colIdx: Int, threshold: Long): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_rgs", "n_pages_rowed",
+      "n_pages_rows_unknown", "rows_total", "rows_skippable_gt", "rows_scanned_gt",
+      "rows_unknown") { (id, bytes) =>
+      val rgs = pageRowsCensus(bytes, colIdx)
+      var rowsTotal = 0L; var skip = 0L; var unknown = 0L
+      var pagesRowed = 0L; var pagesUnknown = 0L
+      rgs.foreach { case (rgRows, pagesOpt, frOpt) =>
+        rowsTotal += rgRows
+        (pagesOpt, frOpt) match {
+          case (Some(pages), Some(fr)) =>
+            pagesRowed += pages.size
+            pages.indices.foreach { p =>
+              val pRows =
+                if (p < pages.size - 1) fr(p + 1) - fr(p)
+                else rgRows - fr(p)
+              val (np, _, hi, _) = pages(p)
+              if (np || hi <= threshold) skip += pRows
             }
-          }
-          (id, rgs.size.toLong, pagesRowed, pagesUnknown, rowsTotal,
-            skip, rowsTotal - skip, unknown)
+          case (Some(pages), None) =>
+            pagesUnknown += pages.size
+            unknown += rgRows
+          case _ =>
+            unknown += rgRows
         }
       }
-      .toDF(idCol, "n_rgs", "n_pages_rowed", "n_pages_rows_unknown",
-        "rows_total", "rows_skippable_gt", "rows_scanned_gt", "rows_unknown")
-  }
+      (id, rgs.size.toLong, pagesRowed, pagesUnknown, rowsTotal,
+        skip, rowsTotal - skip, unknown)
+    }
 
   /** Page-level prune audit over (id, parquet-bytes) — q380's
     * arithmetic one layer down. A NULL page is provably skippable for
@@ -834,36 +826,28 @@ object ParquetFooter {
     * down). Map-only, zero shuffles.
     */
   def pageIndexAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int, threshold: Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val rgs = pageIndexCensus(bytes, colIdx)
-          var indexed = 0L; var unreadable = 0L; var noIndex = 0L
-          var nPages = 0L; var nNull = 0L; var skip = 0L; var nullCt = 0L
-          rgs.foreach {
-            case None => noIndex += 1
-            case Some(None) => unreadable += 1
-            case Some(Some(pages)) =>
-              indexed += 1
-              nPages += pages.size
-              pages.foreach { case (np, _, hi, ct) =>
-                if (np) { nNull += 1; skip += 1 }
-                else if (hi <= threshold) skip += 1
-                nullCt += ct
-              }
+      colIdx: Int, threshold: Long): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_rgs", "n_indexed", "n_no_index",
+      "n_unreadable_idx", "n_pages", "n_null_pages", "pages_skippable_gt",
+      "pages_scanned_gt", "sum_null_counts") { (id, bytes) =>
+      val rgs = pageIndexCensus(bytes, colIdx)
+      var indexed = 0L; var unreadable = 0L; var noIndex = 0L
+      var nPages = 0L; var nNull = 0L; var skip = 0L; var nullCt = 0L
+      rgs.foreach {
+        case None => noIndex += 1
+        case Some(None) => unreadable += 1
+        case Some(Some(pages)) =>
+          indexed += 1
+          nPages += pages.size
+          pages.foreach { case (np, _, hi, ct) =>
+            if (np) { nNull += 1; skip += 1 }
+            else if (hi <= threshold) skip += 1
+            nullCt += ct
           }
-          (id, rgs.size.toLong, indexed, noIndex, unreadable,
-            nPages, nNull, skip, nPages - skip, nullCt)
-        }
       }
-      .toDF(idCol, "n_rgs", "n_indexed", "n_no_index", "n_unreadable_idx",
-        "n_pages", "n_null_pages", "pages_skippable_gt", "pages_scanned_gt",
-        "sum_null_counts")
-  }
+      (id, rgs.size.toLong, indexed, noIndex, unreadable,
+        nPages, nNull, skip, nPages - skip, nullCt)
+    }
 
   /** Zone-map pruning audit over (id, parquet-bytes): for each file,
     * how many row groups a predicate on the target column could SKIP
@@ -876,52 +860,36 @@ object ParquetFooter {
     * shuffles.
     */
   def pruneAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int, thresholdOf: Long => Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val t = thresholdOf(id)
-          val rgs = statsCensus(bytes, colIdx)
-          val readable = rgs.count(_._2 == 1)
-          val prunedGt = rgs.count { case (_, has, _, maxV, _) => has == 1 && maxV <= t }
-          val prunedLt = rgs.count { case (_, has, minV, _, _) => has == 1 && minV >= t }
-          val scannedGt = rgs.collect {
-            case (rows, has, _, maxV, _) if !(has == 1 && maxV <= t) => rows
-          }.sum
-          val nulls = rgs.map(_._5).sum
-          (id, rgs.size.toLong, readable.toLong, prunedGt.toLong,
-            prunedLt.toLong, scannedGt, nulls, t)
-        }
-      }
-      .toDF(idCol, "n_rgs", "n_readable", "pruned_gt", "pruned_lt",
-        "scanned_rows_gt", "sum_nulls", "threshold")
-  }
+      colIdx: Int, thresholdOf: Long => Long): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_rgs", "n_readable", "pruned_gt",
+      "pruned_lt", "scanned_rows_gt", "sum_nulls", "threshold") { (id, bytes) =>
+      val t = thresholdOf(id)
+      val rgs = statsCensus(bytes, colIdx)
+      val readable = rgs.count(_._2 == 1)
+      val prunedGt = rgs.count { case (_, has, _, maxV, _) => has == 1 && maxV <= t }
+      val prunedLt = rgs.count { case (_, has, minV, _, _) => has == 1 && minV >= t }
+      val scannedGt = rgs.collect {
+        case (rows, has, _, maxV, _) if !(has == 1 && maxV <= t) => rows
+      }.sum
+      val nulls = rgs.map(_._5).sum
+      (id, rgs.size.toLong, readable.toLong, prunedGt.toLong,
+        prunedLt.toLong, scannedGt, nulls, t)
+    }
 
   /** Census DataFrame over (id, parquet-bytes) — map-only, zero
     * shuffles. footer_len/data_bytes stay out of the projection: they
     * depend on varint widths no SQL oracle should re-derive.
     */
-  def footerFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.version, m.numRows, m.nSchema.toLong,
-            m.nLeaves.toLong, m.nRowGroups.toLong, m.nColumnChunks.toLong,
-            m.totalByteSize, m.rgNumRows, m.createdByLen.toLong,
-            m.nUncompressed.toLong, m.nSnappy.toLong, m.nGzip.toLong,
-            m.nZstd.toLong, m.nOtherCodec.toLong)
-        }
-      }
-      .toDF(idCol, "valid", "version", "num_rows", "n_schema", "n_leaves",
-        "n_row_groups", "n_column_chunks", "total_byte_size", "rg_num_rows",
-        "created_by_len", "n_uncompressed", "n_snappy", "n_gzip", "n_zstd",
-        "n_other_codec")
-  }
+  def footerFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "version", "num_rows", "n_schema",
+      "n_leaves", "n_row_groups", "n_column_chunks", "total_byte_size", "rg_num_rows",
+      "created_by_len", "n_uncompressed", "n_snappy", "n_gzip", "n_zstd",
+      "n_other_codec") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.version, m.numRows, m.nSchema.toLong,
+        m.nLeaves.toLong, m.nRowGroups.toLong, m.nColumnChunks.toLong,
+        m.totalByteSize, m.rgNumRows, m.createdByLen.toLong,
+        m.nUncompressed.toLong, m.nSnappy.toLong, m.nGzip.toLong,
+        m.nZstd.toLong, m.nOtherCodec.toLong)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import ParquetFooter.{walkStruct, listHeader, footerReader, Writer}
 
@@ -628,21 +627,13 @@ object ParquetPages {
     * (keepValues = false), so the operator is scan-shaped at 100 TB.
     */
   def pageDecodeAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val d = decodeInt64File(bytes, colIdx)
-          (id, d.ok.toLong, d.gated.toLong, d.nRgs.toLong, d.nPages.toLong,
-            d.nDictVals, d.nValues, d.nNulls, d.minV, d.maxV, d.sum)
-        }
-      }
-      .toDF(idCol, "ok", "gated", "n_rgs", "n_pages", "n_dict_vals",
-        "n_values", "n_nulls", "min_v", "max_v", "sum_v")
-  }
+      colIdx: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "ok", "gated", "n_rgs", "n_pages",
+      "n_dict_vals", "n_values", "n_nulls", "min_v", "max_v", "sum_v") { (id, bytes) =>
+      val d = decodeInt64File(bytes, colIdx)
+      (id, d.ok.toLong, d.gated.toLong, d.nRgs.toLong, d.nPages.toLong,
+        d.nDictVals, d.nValues, d.nNulls, d.minV, d.maxV, d.sum)
+    }
 
   // ------------------------------------------------------------------
   // BYTE_ARRAY (string/binary) columns — the other physical type the
@@ -952,21 +943,14 @@ object ParquetPages {
     * aggregates only.
     */
   def binaryDecodeAudit(df: DataFrame, idCol: String, payloadCol: String,
-      colIdx: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val d = decodeBinaryFile(bytes, colIdx)
-          (id, d.ok.toLong, d.gated.toLong, d.nRgs.toLong, d.nPages.toLong,
-            d.nDictVals, d.nValues, d.nNulls, d.sumLen, d.minLen, d.maxLen)
-        }
-      }
-      .toDF(idCol, "ok", "gated", "n_rgs", "n_pages", "n_dict_vals",
-        "n_values", "n_nulls", "sum_len", "min_len", "max_len")
-  }
+      colIdx: Int): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "ok", "gated", "n_rgs", "n_pages",
+      "n_dict_vals", "n_values", "n_nulls", "sum_len", "min_len",
+      "max_len") { (id, bytes) =>
+      val d = decodeBinaryFile(bytes, colIdx)
+      (id, d.ok.toLong, d.gated.toLong, d.nRgs.toLong, d.nPages.toLong,
+        d.nDictVals, d.nValues, d.nNulls, d.sumLen, d.minLen, d.maxLen)
+    }
 
   /** Synthetic single-BYTE_ARRAY-column file for the oracle/specs:
     * encoding 0 PLAIN / 8 RLE_DICTIONARY / 6 DELTA_LENGTH /

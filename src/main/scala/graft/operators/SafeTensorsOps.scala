@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** SafeTensors container auditor — the weights-file member of the
   * container family (q323 WARC, q324 tar, q353 TFRecord): the format
@@ -124,21 +123,13 @@ object SafeTensorsOps {
     }
   }
 
-  def safetensorsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.validJson.toLong, m.nTensors.toLong, m.paramCount,
-            m.headerBytes, m.dataBytes, m.nSizeMismatch.toLong,
-            m.contiguous.toLong, m.truncated.toLong, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid_json", "n_tensors", "param_count", "header_bytes",
-        "data_bytes", "n_size_mismatch", "contiguous", "truncated",
-        "trailing_bytes")
-  }
+  def safetensorsFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid_json", "n_tensors", "param_count",
+      "header_bytes", "data_bytes", "n_size_mismatch", "contiguous", "truncated",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.validJson.toLong, m.nTensors.toLong, m.paramCount,
+        m.headerBytes, m.dataBytes, m.nSizeMismatch.toLong,
+        m.contiguous.toLong, m.truncated.toLong, m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Snappy framing-format census — the codec the whole lake trio names
   * (parquet q377 / Avro q378 / ORC q381 all declare SNAPPY) in its
@@ -165,25 +164,16 @@ object SnappyFrameOps {
     out.toByteArray
   }
 
-  /** Census DataFrame over (id, framed bytes) — map-only, zero shuffles. */
-  def snappyFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.nCompressed.toLong, m.nUncompressed.toLong,
-            m.nPadding.toLong, m.nSkippable.toLong, m.uncompressedBytes,
-            m.compressedBytes, m.crcOk.toLong, m.crcBad.toLong,
-            m.stoppedUnskippable.toLong, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "n_compressed", "n_uncompressed", "n_padding",
-        "n_skippable", "uncompressed_bytes", "compressed_bytes", "crc_ok",
-        "crc_bad", "stopped_unskippable", "trailing_bytes")
-  }
+  def snappyFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "n_compressed", "n_uncompressed",
+      "n_padding", "n_skippable", "uncompressed_bytes", "compressed_bytes", "crc_ok",
+      "crc_bad", "stopped_unskippable", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.nCompressed.toLong, m.nUncompressed.toLong,
+        m.nPadding.toLong, m.nSkippable.toLong, m.uncompressedBytes,
+        m.compressedBytes, m.crcOk.toLong, m.crcBad.toLong,
+        m.stoppedUnskippable.toLong, m.trailingBytes)
+    }
 
   /** A REAL compressed data chunk (type 0x00): `ops` encoded as a raw
     * snappy bitstream with the masked CRC-32C of the decoded bytes in
@@ -208,22 +198,14 @@ object SnappyFrameOps {
     * and the literal/copy element mix. Map-only, zero shuffles;
     * [[snappyFeatures]]' projection stays frozen.
     */
-  def snappyDecodeFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.nCompressed.toLong, m.compressedBytes,
-            m.rawOk.toLong, m.rawFailed.toLong, m.rawBytes,
-            m.rawCrcOk.toLong, m.rawCrcBad.toLong,
-            m.nLiterals.toLong, m.nCopies.toLong)
-        }
-      }
-      .toDF(idCol, "valid", "n_compressed", "compressed_bytes",
-        "raw_ok", "raw_failed", "raw_bytes", "raw_crc_ok", "raw_crc_bad",
-        "n_literals", "n_copies")
-  }
+  def snappyDecodeFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "n_compressed", "compressed_bytes",
+      "raw_ok", "raw_failed", "raw_bytes", "raw_crc_ok", "raw_crc_bad", "n_literals",
+      "n_copies") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.nCompressed.toLong, m.compressedBytes,
+        m.rawOk.toLong, m.rawFailed.toLong, m.rawBytes,
+        m.rawCrcOk.toLong, m.rawCrcBad.toLong,
+        m.nLiterals.toLong, m.nCopies.toLong)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** POSIX ustar archive walker + WebDataset shard audit — the
   * multimodal-shard member of the container family ([[WarcOps]] crawl
@@ -159,22 +158,13 @@ object TarOps {
       fileBytes, padBytes, pos.toLong, (n - pos).toLong)
   }
 
-  /** Map-only dataset audit — the codec-family shape. */
   def tarFeatures(df: DataFrame, idCol: String, payloadCol: String,
-      requiredExts: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val req = requiredExts
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes, req)
-          (id, m.nEntries.toLong, m.nSamples.toLong, m.nCompleteSamples.toLong,
-            m.sumFileBytes, m.sumPaddingBytes, m.archiveBytes, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "n_entries", "n_samples", "n_complete_samples",
-        "sum_file_bytes", "sum_padding_bytes", "archive_bytes", "trailing_bytes")
-  }
+      requiredExts: Seq[String]): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_entries", "n_samples",
+      "n_complete_samples", "sum_file_bytes", "sum_padding_bytes", "archive_bytes",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes, requiredExts)
+      (id, m.nEntries.toLong, m.nSamples.toLong, m.nCompleteSamples.toLong,
+        m.sumFileBytes, m.sumPaddingBytes, m.archiveBytes, m.trailingBytes)
+    }
 }

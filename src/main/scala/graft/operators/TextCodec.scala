@@ -4,7 +4,6 @@ import java.io.ByteArrayOutputStream
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Real compressed-TEXT decode over opaque `binary` payload columns —
   * the text twin of the media codecs: web crawls, log archives, and
@@ -73,21 +72,13 @@ object TextCodec {
     * column had been stored plain.
     */
   def decodeTextPayloads(df: DataFrame, idCol: String, payloadCol: String,
-                         maxBytes: Int = MaxDecodedBytes): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          gunzipUtf8(bytes, maxBytes) match {
-            case Some(t) => (id, true, t)
-            case None    => (id, false, null: String)
-          }
-        }
+                         maxBytes: Int = MaxDecodedBytes): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "decodable", "text") { (id, bytes) =>
+      gunzipUtf8(bytes, maxBytes) match {
+        case Some(t) => (id, true, t)
+        case None    => (id, false, null: String)
       }
-      .toDF(idCol, "decodable", "text")
-  }
+    }
 
   // ---- UTF-8 structural validation (RFC 3629) — the byte-level twin
   // of the q350 mojibake census (which is a heuristic over DECODED
@@ -162,21 +153,12 @@ object TextCodec {
     Utf8Meta(cp, ascii, b2, b3, b4, overlong, surrogate, beyond, invalid, n.toLong)
   }
 
-  /** Map-only dataset audit — the codec-family shape. */
-  def utf8Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = utf8Audit(bytes)
-          (id, m.nCodepoints, m.nAscii, m.n2Byte, m.n3Byte, m.n4Byte,
-            m.nOverlong, m.nSurrogate, m.nBeyondMax, m.nInvalid, m.nBytes)
-        }
-      }
-      .toDF(idCol, "n_codepoints", "n_ascii", "n_2byte", "n_3byte",
-        "n_4byte", "n_overlong", "n_surrogate", "n_beyond_max",
-        "n_invalid", "n_bytes")
-  }
+  def utf8Features(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_codepoints", "n_ascii", "n_2byte",
+      "n_3byte", "n_4byte", "n_overlong", "n_surrogate", "n_beyond_max", "n_invalid",
+      "n_bytes") { (id, bytes) =>
+      val m = utf8Audit(bytes)
+      (id, m.nCodepoints, m.nAscii, m.n2Byte, m.n3Byte, m.n4Byte,
+        m.nOverlong, m.nSurrogate, m.nBeyondMax, m.nInvalid, m.nBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** TFRecord container walker — the training-shard member of the
   * container family (q323 WARC, q324 WebDataset tar, q332 ZIP): the
@@ -117,21 +116,13 @@ object TfRecordOps {
       (bytes.length - pos).toLong, pos == bytes.length)
   }
 
-  def tfrecordFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.nRecords.toLong, m.sumPayloadBytes, m.overheadBytes,
-            m.trailingBytes, if (m.cleanEof) 1L else 0L)
-        }
-      }
-      .toDF(idCol, "n_records", "sum_payload_bytes", "overhead_bytes",
-        "trailing_bytes", "clean_eof")
-  }
+  def tfrecordFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_records", "sum_payload_bytes",
+      "overhead_bytes", "trailing_bytes", "clean_eof") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.nRecords.toLong, m.sumPayloadBytes, m.overheadBytes,
+        m.trailingBytes, if (m.cleanEof) 1L else 0L)
+    }
 
   // ------------------------------------------------------------------
   // tf.Example protobuf census — one notch inward from the frame walk
@@ -340,22 +331,13 @@ object TfRecordOps {
     bos.toByteArray
   }
 
-  /** Census DataFrame over (id, shard-bytes) — map-only, zero shuffles. */
-  def exampleFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = exampleCensus(bytes)
-          (id, m.nExamples.toLong, m.nMalformed.toLong, m.nFeatures.toLong,
-            m.nBytesFeat.toLong, m.nFloatFeat.toLong, m.nInt64Feat.toLong,
-            m.bytesValues, m.bytesLen, m.floatValues, m.int64Values)
-        }
-      }
-      .toDF(idCol, "n_examples", "n_malformed", "n_features",
-        "n_bytes_feat", "n_float_feat", "n_int64_feat", "bytes_values",
-        "bytes_len", "float_values", "int64_values")
-  }
+  def exampleFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_examples", "n_malformed", "n_features",
+      "n_bytes_feat", "n_float_feat", "n_int64_feat", "bytes_values", "bytes_len",
+      "float_values", "int64_values") { (id, bytes) =>
+      val m = exampleCensus(bytes)
+      (id, m.nExamples.toLong, m.nMalformed.toLong, m.nFeatures.toLong,
+        m.nBytesFeat.toLong, m.nFloatFeat.toLong, m.nInt64Feat.toLong,
+        m.bytesValues, m.bytesLen, m.floatValues, m.int64Values)
+    }
 }

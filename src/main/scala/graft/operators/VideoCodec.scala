@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Real video decode over opaque `binary` payload columns — the video
   * half of the codec step [[MultimodalStub]] stubs out, made real for
@@ -423,38 +422,31 @@ object VideoCodec {
     * must keep wide margins (q182's fixtures are flat frames at luma
     * 30/220 — two orders of magnitude clear of every threshold).
     */
-  def decodeVideoLumaStats(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeDibAvi(bytes).orElse(decodeRle8Avi(bytes))
-            .orElse(decodeMjpegAvi(bytes)) match {
-            case Some((w, h, fs)) =>
-              val npx = w.toLong * h
-              var bright = 0L
-              fs.foreach { f =>
-                var s = 0L; var i = 0
-                while (i < f.length) { s += f(i); i += 1 }
-                if (s > 128L * npx) bright += 1
-              }
-              var motion = 0L
-              var t = 1
-              while (t < fs.length) {
-                val a = fs(t - 1); val b = fs(t)
-                var j = 0
-                while (j < b.length) { motion += math.abs(b(j) - a(j)); j += 1 }
-                t += 1
-              }
-              (id, true, fs.length.toLong, w, h, bright, motion)
-            case None => (id, false, 0L, 0, 0, 0L, 0L)
+  def decodeVideoLumaStats(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "decodable", "n_frames", "width", "height",
+      "bright_frames", "motion_abs") { (id, bytes) =>
+      decodeDibAvi(bytes).orElse(decodeRle8Avi(bytes))
+        .orElse(decodeMjpegAvi(bytes)) match {
+        case Some((w, h, fs)) =>
+          val npx = w.toLong * h
+          var bright = 0L
+          fs.foreach { f =>
+            var s = 0L; var i = 0
+            while (i < f.length) { s += f(i); i += 1 }
+            if (s > 128L * npx) bright += 1
           }
-        }
+          var motion = 0L
+          var t = 1
+          while (t < fs.length) {
+            val a = fs(t - 1); val b = fs(t)
+            var j = 0
+            while (j < b.length) { motion += math.abs(b(j) - a(j)); j += 1 }
+            t += 1
+          }
+          (id, true, fs.length.toLong, w, h, bright, motion)
+        case None => (id, false, 0L, 0, 0, 0L, 0L)
       }
-      .toDF(idCol, "decodable", "n_frames", "width", "height", "bright_frames", "motion_abs")
-  }
+    }
 
   /** Decode a payload column to per-clip video features: (idCol,
     * decodable, n_frames, width, height, sum_first, motion_abs).
@@ -464,32 +456,25 @@ object VideoCodec {
     * parser pass per partition, map-only; undecodable payloads
     * surface as rows.
     */
-  def decodeVideoFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          decodeDibAvi(bytes).orElse(decodeRle8Avi(bytes)) match {
-            case Some((w, h, fs)) =>
-              var sumFirst = 0L
-              val f0 = fs.head
-              var i = 0
-              while (i < f0.length) { sumFirst += f0(i); i += 1 }
-              var motion = 0L
-              var t = 1
-              while (t < fs.length) {
-                val a = fs(t - 1); val b = fs(t)
-                var j = 0
-                while (j < b.length) { motion += math.abs(b(j) - a(j)); j += 1 }
-                t += 1
-              }
-              (id, true, fs.length.toLong, w, h, sumFirst, motion)
-            case None => (id, false, 0L, 0, 0, 0L, 0L)
+  def decodeVideoFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "decodable", "n_frames", "width", "height",
+      "sum_first", "motion_abs") { (id, bytes) =>
+      decodeDibAvi(bytes).orElse(decodeRle8Avi(bytes)) match {
+        case Some((w, h, fs)) =>
+          var sumFirst = 0L
+          val f0 = fs.head
+          var i = 0
+          while (i < f0.length) { sumFirst += f0(i); i += 1 }
+          var motion = 0L
+          var t = 1
+          while (t < fs.length) {
+            val a = fs(t - 1); val b = fs(t)
+            var j = 0
+            while (j < b.length) { motion += math.abs(b(j) - a(j)); j += 1 }
+            t += 1
           }
-        }
+          (id, true, fs.length.toLong, w, h, sumFirst, motion)
+        case None => (id, false, 0L, 0, 0, 0L, 0L)
       }
-      .toDF(idCol, "decodable", "n_frames", "width", "height", "sum_first", "motion_abs")
-  }
+    }
 }

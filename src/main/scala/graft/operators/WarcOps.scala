@@ -249,22 +249,13 @@ object WarcOps {
       (n - pos).toLong)
   }
 
-  /** Map-only dataset census — the codec-family shape. */
-  def warcFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.nRecords.toLong, m.nWarcinfo.toLong, m.nRequest.toLong,
-            m.nResponse.toLong, m.nMetadata.toLong, m.nOther.toLong,
-            m.sumPayloadBytes, m.sumHeaderBytes, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "n_records", "n_warcinfo", "n_request", "n_response",
-        "n_metadata", "n_other", "sum_payload_bytes", "sum_header_bytes",
-        "trailing_bytes")
-  }
+  def warcFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "n_records", "n_warcinfo", "n_request",
+      "n_response", "n_metadata", "n_other", "sum_payload_bytes", "sum_header_bytes",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.nRecords.toLong, m.nWarcinfo.toLong, m.nRequest.toLong,
+        m.nResponse.toLong, m.nMetadata.toLong, m.nOther.toLong,
+        m.sumPayloadBytes, m.sumHeaderBytes, m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** WebP container census — the dominant modern web-image format
   * (Google WebP container spec / RFC 9649), closing the image-triage
@@ -244,23 +243,14 @@ object WebpOps {
         (if (xmp) chunk("XMP ", meta8) else Array.empty[Byte]))
   }
 
-  /** Census DataFrame over (id, webp-bytes) — map-only, zero shuffles. */
-  def webpFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.kind, m.width, m.height, m.hasAlpha.toLong,
-            m.hasAnim.toLong, m.nFrames.toLong, m.durationMs, m.hasExif.toLong,
-            m.hasIcc.toLong, m.hasXmp.toLong, m.nChunks.toLong,
-            m.lossyPartBytes, m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "kind", "width", "height", "has_alpha",
-        "has_anim", "n_frames", "duration_ms", "has_exif", "has_icc",
-        "has_xmp", "n_chunks", "lossy_part_bytes", "trailing_bytes")
-  }
+  def webpFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "kind", "width", "height",
+      "has_alpha", "has_anim", "n_frames", "duration_ms", "has_exif", "has_icc",
+      "has_xmp", "n_chunks", "lossy_part_bytes", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.kind, m.width, m.height, m.hasAlpha.toLong,
+        m.hasAnim.toLong, m.nFrames.toLong, m.durationMs, m.hasExif.toLong,
+        m.hasIcc.toLong, m.hasXmp.toLong, m.nChunks.toLong,
+        m.lossyPartBytes, m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** ZIP archive walker — the remaining ubiquitous dataset container
   * ([[TarOps]] WebDataset shards, [[WarcOps]] crawl archives): public
@@ -141,23 +140,14 @@ object ZipOps {
       mismatch, trailing)
   }
 
-  /** Map-only dataset audit — the codec-family shape. */
-  def zipFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.eocdFound.toLong, m.nEntries.toLong, m.nStored.toLong,
-            m.nDeflated.toLong, m.nOtherMethod.toLong, m.sumCompBytes,
-            m.sumUncompBytes, m.centralBytes, m.nLocalMismatch.toLong,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "eocd_found", "n_entries", "n_stored", "n_deflated",
-        "n_other_method", "sum_comp_bytes", "sum_uncomp_bytes", "central_bytes",
-        "n_local_mismatch", "trailing_bytes")
-  }
+  def zipFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "eocd_found", "n_entries", "n_stored",
+      "n_deflated", "n_other_method", "sum_comp_bytes", "sum_uncomp_bytes",
+      "central_bytes", "n_local_mismatch", "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.eocdFound.toLong, m.nEntries.toLong, m.nStored.toLong,
+        m.nDeflated.toLong, m.nOtherMethod.toLong, m.sumCompBytes,
+        m.sumUncompBytes, m.centralBytes, m.nLocalMismatch.toLong,
+        m.trailingBytes)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Zstandard frame walker (RFC 8878) — the compression-container
   * census completing the wire-format family (gzip decode in
@@ -360,28 +359,19 @@ object ZstdOps {
     bos.toByteArray
   }
 
-  /** Map-only dataset triage — the codec-family shape. */
-  def zstdFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val m = parse(bytes)
-          (id, m.valid.toLong, m.nFrames.toLong, m.nSkippable.toLong,
-            m.nRaw.toLong, m.nRle.toLong, m.nCompressed.toLong,
-            m.contentBytes, m.compressedBytes, m.checksumPresent.toLong,
-            m.checksumOk.toLong, m.checksumBad.toLong,
-            m.nLitRaw.toLong, m.nLitRle.toLong, m.nLitCompressed.toLong,
-            m.nLitTreeless.toLong, m.litRegenBytes, m.nLitMalformed.toLong,
-            m.trailingBytes)
-        }
-      }
-      .toDF(idCol, "valid", "n_frames", "n_skippable", "n_raw", "n_rle",
-        "n_compressed", "content_bytes", "compressed_bytes",
-        "checksum_present", "checksum_ok", "checksum_bad",
-        "lit_raw", "lit_rle", "lit_compressed", "lit_treeless",
-        "lit_regen_bytes", "lit_malformed", "trailing_bytes")
-  }
+  def zstdFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "n_frames", "n_skippable", "n_raw",
+      "n_rle", "n_compressed", "content_bytes", "compressed_bytes", "checksum_present",
+      "checksum_ok", "checksum_bad", "lit_raw", "lit_rle", "lit_compressed",
+      "lit_treeless", "lit_regen_bytes", "lit_malformed",
+      "trailing_bytes") { (id, bytes) =>
+      val m = parse(bytes)
+      (id, m.valid.toLong, m.nFrames.toLong, m.nSkippable.toLong,
+        m.nRaw.toLong, m.nRle.toLong, m.nCompressed.toLong,
+        m.contentBytes, m.compressedBytes, m.checksumPresent.toLong,
+        m.checksumOk.toLong, m.checksumBad.toLong,
+        m.nLitRaw.toLong, m.nLitRle.toLong, m.nLitCompressed.toLong,
+        m.nLitTreeless.toLong, m.litRegenBytes, m.nLitMalformed.toLong,
+        m.trailingBytes)
+    }
 }

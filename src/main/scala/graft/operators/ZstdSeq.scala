@@ -961,23 +961,14 @@ object ZstdSeq {
   def zstdSeqFeatures(df: org.apache.spark.sql.DataFrame, idCol: String,
                       payloadCol: String,
                       dicts: Map[Long, ZstdDictionary] = Map.empty):
-      org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val c = frameSeqCensus(bytes, dicts = dicts)
-          (id, c.valid.toLong, c.nBlocks.toLong, c.nRaw.toLong, c.nRle.toLong,
-            c.nCompressed.toLong, c.nDecoded.toLong, c.nUnsupported.toLong,
-            c.nFailed.toLong, c.decodedBytes, c.contentOk.toLong,
-            c.dictGated.toLong, c.dictUsed.toLong)
-        }
-      }
-      .toDF(idCol, "valid", "n_blocks", "n_raw", "n_rle", "n_compressed",
-        "n_decoded", "n_unsupported", "n_failed", "decoded_bytes", "content_ok",
-        "dict_gated", "dict_used")
-  }
+      org.apache.spark.sql.DataFrame =
+    Payloads.census(df, idCol, payloadCol, "valid", "n_blocks", "n_raw", "n_rle",
+      "n_compressed", "n_decoded", "n_unsupported", "n_failed", "decoded_bytes",
+      "content_ok", "dict_gated", "dict_used") { (id, bytes) =>
+      val c = frameSeqCensus(bytes, dicts = dicts)
+      (id, c.valid.toLong, c.nBlocks.toLong, c.nRaw.toLong, c.nRle.toLong,
+        c.nCompressed.toLong, c.nDecoded.toLong, c.nUnsupported.toLong,
+        c.nFailed.toLong, c.decodedBytes, c.contentOk.toLong,
+        c.dictGated.toLong, c.dictUsed.toLong)
+    }
 }

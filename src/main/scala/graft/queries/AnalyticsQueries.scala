@@ -1308,9 +1308,9 @@ object AnalyticsQueries {
                              vec_id
                     LIMIT 200),
       sims AS (SELECT a.vec_id, b.vec_id AS nb,
-                      ${DataQueries.duckDot("a.embedding", "b.embedding")}
-                        / (sqrt(${DataQueries.duckDot("a.embedding", "a.embedding")})
-                           * sqrt(${DataQueries.duckDot("b.embedding", "b.embedding")})) AS cos
+                      ${Q.duckDot("a.embedding", "b.embedding")}
+                        / (sqrt(${Q.duckDot("a.embedding", "a.embedding")})
+                           * sqrt(${Q.duckDot("b.embedding", "b.embedding")})) AS cos
                FROM embeddings a JOIN embeddings b
                  ON a.vec_id <> b.vec_id
                WHERE a.vec_id IN (SELECT vec_id FROM samp)),
@@ -1320,9 +1320,9 @@ object AnalyticsQueries {
                 FROM sims) WHERE r = 1),
       nbs AS (SELECT DISTINCT nb FROM t1s),
       sims2 AS (SELECT a.vec_id, b.vec_id AS nb,
-                       ${DataQueries.duckDot("a.embedding", "b.embedding")}
-                         / (sqrt(${DataQueries.duckDot("a.embedding", "a.embedding")})
-                            * sqrt(${DataQueries.duckDot("b.embedding", "b.embedding")})) AS cos
+                       ${Q.duckDot("a.embedding", "b.embedding")}
+                         / (sqrt(${Q.duckDot("a.embedding", "a.embedding")})
+                            * sqrt(${Q.duckDot("b.embedding", "b.embedding")})) AS cos
                 FROM embeddings a JOIN embeddings b
                   ON a.vec_id <> b.vec_id
                 WHERE a.vec_id IN (SELECT nb FROM nbs)),

@@ -22,6 +22,15 @@ object Q {
     * MinhashKernel), for oracle SQL. */
   def duckHash64(e: String): String =
     s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
+
+  /** Left-fold double dot product of two list columns — bit-identical
+    * to Similarity.dot (both fold products in index order). */
+  def duckDot(a: String, b: String): String =
+    s"list_reduce(list_transform(range(1, len($a)+1), " +
+      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
+
+  def duckCos(a: String, b: String): String =
+    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
 }
 
 /** The relational operator surface from SURVEY.md §2, expressed on the

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Hashing
-import graft.operators.{AudioCodec, Dedup, MultimodalCodec, MultimodalStub, Similarity, TextCodec, VideoCodec, TextAnalysis => TA}
+import graft.operators.{AudioCodec, Dedup, MultimodalCodec, MultimodalStub, Payloads, Similarity, TextCodec, VideoCodec, TextAnalysis => TA}
 import graft.operators.Relational.dedupKeepFirst
-import graft.queries.Q.duckHash64
+import graft.queries.Q.{duckCos, duckDot, duckHash64}
 
 /** Training-data pipeline operators over the `documents` and
   * `embeddings` tables: text analysis, deduplication (exact, MinHash-LSH,
@@ -30,15 +30,6 @@ object DataQueries {
   // ---- shared DuckDB SQL fragments (mirror the Scala operators) ----
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  /** Left-fold double dot product of two list columns — bit-identical
-    * to Similarity.dot (both fold products in index order). */
-  private[queries] def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private[queries] def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
 
   private def duckList(xs: Seq[String]): String =
     xs.map(s => s"'$s'").mkString("[", ",", "]")
@@ -1021,17 +1012,11 @@ object DataQueries {
     * bytes through the JDK's ImageIO writer — downstream queries must
     * run an actual PNG decode to get the pixels back.
     */
-  private def synthPngPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val (w, h, f) = synthCard(id)
-          (id, MultimodalCodec.encodeGrayPng(w, h, f))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthPngPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val (w, h, f) = synthCard(id)
+      MultimodalCodec.encodeGrayPng(w, h, f)
+    }
 
   /** q174 — media thumbnailing with a REAL codec: each document's
     * test-card is encoded to actual PNG bytes and decoded back through
@@ -1327,20 +1312,14 @@ object DataQueries {
     * RIFF/WAVE bytes — downstream queries must run an actual container
     * chunk-walk to get the samples back.
     */
-  private def synthWavPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  private def synthWavPayloads(s: SparkSession, dir: String): DataFrame =
     // unfanned (r16): the WAV encode+decode is ~100 samples/doc — the
     // fan-out exchange was pure fixed cost on these sub-second queries
     // (q178 flagged perf_weak at 2.1x its frozen baseline in r15)
-    Tables.docIds(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val (sr, samples) = synthWave(id)
-          (id, AudioCodec.encodePcmWav(sr, 1, samples))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+    Payloads.synth(Tables.docIds(s, dir)) { id =>
+      val (sr, samples) = synthWave(id)
+      AudioCodec.encodePcmWav(sr, 1, samples)
+    }
 
   /** q177 — audio decode with a REAL container parse: each document's
     * waveform is encoded to actual RIFF/WAVE bytes and decoded back
@@ -1420,23 +1399,17 @@ object DataQueries {
     * term so motion energy is nonzero and frame-order-sensitive.
     * pixel(x,y,t) = (k·37 + x·7 + y·13 + t·29) mod 211 — 8-bit safe.
     */
-  private def synthAviPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val w = 12 + k % 9
-          val h = 10 + k % 7
-          val f = 3 + k % 4
-          val frames = (0 until f).map(t =>
-            Array.tabulate(w * h)(i =>
-              (k * 37 + (i % w) * 7 + (i / w) * 13 + t * 29) % 211))
-          (id, VideoCodec.encodeDibAvi(w, h, 10, frames))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthAviPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val w = 12 + k % 9
+      val h = 10 + k % 7
+      val f = 3 + k % 4
+      val frames = (0 until f).map(t =>
+        Array.tabulate(w * h)(i =>
+          (k * 37 + (i % w) * 7 + (i / w) * 13 + t * 29) % 211))
+      VideoCodec.encodeDibAvi(w, h, 10, frames)
+    }
 
   /** q179 — video decode with a REAL container parse: each document's
     * clip is encoded to actual RIFF/AVI bytes (uncompressed 8-bit DIB
@@ -1480,22 +1453,16 @@ object DataQueries {
     * oracle replays the published step-table expansion sample by
     * sample in SQL and must land on identical integers.
     */
-  private def synthAdpcmPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val nn = 48 + k % 57
-          val sr = 8000 * (1 + k % 3)
-          val pred0 = (k * 127) % 1024 - 512
-          val idx0 = (k * 13) % 89
-          val nibbles = Array.tabulate(nn)(j => (k * 7 + j * 5) % 16)
-          (id, AudioCodec.encodeImaAdpcmWav(sr, Seq((pred0, idx0, nibbles))))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthAdpcmPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val nn = 48 + k % 57
+      val sr = 8000 * (1 + k % 3)
+      val pred0 = (k * 127) % 1024 - 512
+      val idx0 = (k * 13) % 89
+      val nibbles = Array.tabulate(nn)(j => (k * 7 + j * 5) % 16)
+      AudioCodec.encodeImaAdpcmWav(sr, Seq((pred0, idx0, nibbles)))
+    }
 
   /** q181 — REAL lossy-codec decode, oracle-gated: IMA ADPCM (WAV tag
     * 0x11) payloads run through [[AudioCodec.decodeImaAdpcmWav]]'s
@@ -1560,24 +1527,18 @@ object DataQueries {
     * static-motion test sit two orders of magnitude clear of the
     * compression error.
     */
-  private def synthMjpegPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val w = 16 + k % 9
-          val h = 12 + k % 7
-          val f = 3 + k % 4
-          val frames = (0 until f).map { t =>
-            val bright = k % 5 == 0 || (k + t) % 2 == 0
-            Array.fill(w * h)(if (bright) 220 else 30)
-          }
-          (id, VideoCodec.encodeMjpegAvi(w, h, 10, frames))
-        }
+  private def synthMjpegPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val w = 16 + k % 9
+      val h = 12 + k % 7
+      val f = 3 + k % 4
+      val frames = (0 until f).map { t =>
+        val bright = k % 5 == 0 || (k + t) % 2 == 0
+        Array.fill(w * h)(if (bright) 220 else 30)
       }
-      .toDF("doc_id", "payload")
-  }
+      VideoCodec.encodeMjpegAvi(w, h, 10, frames)
+    }
 
   /** q182 — REAL compressed-video decode, oracle-gated on structure:
     * Motion-JPEG AVI payloads (every frame an actual ImageIO JPEG —
@@ -1622,31 +1583,25 @@ object DataQueries {
     * (skipped pixel ⇒ wrong value ⇒ hash mismatch), i.e. real
     * inter-frame decode under an exact oracle.
     */
-  private def synthRle8Payloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val w = 12 + k % 9
-          val h = 10 + k % 7
-          val f = 3 + k % 4
-          val frames = new Array[Array[Int]](f)
-          frames(0) = Array.tabulate(w * h)(i =>
-            (k * 37 + (i % w) * 7 + (i / w) * 13) % 211)
-          var t = 1
-          while (t < f) {
-            frames(t) = frames(t - 1).clone()
-            val y = (t * 3 + k) % h
-            var x = 0
-            while (x < w) { frames(t)(y * w + x) = (k * 53 + x * 11 + t * 17) % 199; x += 1 }
-            t += 1
-          }
-          (id, VideoCodec.encodeRle8Avi(w, h, 10, frames.toSeq))
-        }
+  private def synthRle8Payloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val w = 12 + k % 9
+      val h = 10 + k % 7
+      val f = 3 + k % 4
+      val frames = new Array[Array[Int]](f)
+      frames(0) = Array.tabulate(w * h)(i =>
+        (k * 37 + (i % w) * 7 + (i / w) * 13) % 211)
+      var t = 1
+      while (t < f) {
+        frames(t) = frames(t - 1).clone()
+        val y = (t * 3 + k) % h
+        var x = 0
+        while (x < w) { frames(t)(y * w + x) = (k * 53 + x * 11 + t * 17) % 199; x += 1 }
+        t += 1
       }
-      .toDF("doc_id", "payload")
-  }
+      VideoCodec.encodeRle8Avi(w, h, 10, frames.toSeq)
+    }
 
   /** q188 — REAL inter-frame video decode, exactly oracle-gated:
     * Microsoft RLE8 AVI payloads (fourcc 'mrle', biCompression =
@@ -1698,20 +1653,14 @@ object DataQueries {
     * (b(j) = (k·11 + j·7) mod 256), wrapped in a real tag-7 WAV, so
     * the lossy codec's decode gates exactly.
     */
-  private def synthMulawPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val n = 48 + k % 57
-          val sr = 8000 * (1 + k % 3)
-          val ulaw = Array.tabulate(n)(j => (k * 11 + j * 7) % 256)
-          (id, AudioCodec.encodeMulawWav(sr, ulaw))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthMulawPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val n = 48 + k % 57
+      val sr = 8000 * (1 + k % 3)
+      val ulaw = Array.tabulate(n)(j => (k * 11 + j * 7) % 256)
+      AudioCodec.encodeMulawWav(sr, ulaw)
+    }
 
   /** q189 — G.711 µ-law decode, exactly oracle-gated: tag-7 WAV
     * payloads (PCMU — the telephone network's companding codec) run
@@ -1835,17 +1784,12 @@ object DataQueries {
     */
   val q195 = Q("q195_alaw_decode",
     (s, dir) => {
-      import s.implicits._
-      val gz = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val n = 48 + k % 57
-            val alaw = Array.tabulate(n)(j => (k * 13 + j * 11) % 256)
-            (id, AudioCodec.encodeAlawWav(8000, alaw))
-          }
-        }
-        .toDF("doc_id", "payload")
+      val gz = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val n = 48 + k % 57
+        val alaw = Array.tabulate(n)(j => (k * 13 + j * 11) % 256)
+        AudioCodec.encodeAlawWav(8000, alaw)
+      }
       AudioCodec.decodeAudioFeatures(gz, "doc_id", "payload")
         .select("doc_id", "sample_rate", "n_samples", "sum_abs", "peak_abs",
           "zero_crossings")
@@ -2325,19 +2269,13 @@ object DataQueries {
     * payload bytes are irrelevant by construction: the walker hops by
     * computed length and never scans them).
     */
-  private def synthMp3Payloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val frames = (0 until 5 + k % 9)
-            .map(j => (1 + (k + j) % 14, (k + j) % 2))
-          (id, graft.operators.MpegAudio.encodeSynthetic(k % 200, k % 3, frames))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthMp3Payloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val frames = (0 until 5 + k % 9)
+        .map(j => (1 + (k + j) % 14, (k + j) % 2))
+      graft.operators.MpegAudio.encodeSynthetic(k % 200, k % 3, frames)
+    }
 
   /** q314 — MP3 frame-header walk, exactly oracle-gated: triage
     * metadata (duration, bitrate plan, CBR/VBR, tag overhead) for the
@@ -2394,21 +2332,15 @@ object DataQueries {
     * (payload-length, CRC, raw-block) plan, filler payload the walker
     * never reads.
     */
-  private def synthAdtsPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val frames = (0 until 4 + k % 7).map { j =>
-            (30 + (k * 3 + j * 7) % 200, (k + j) % 3 == 0, (k + j) % 3)
-          }
-          (id, graft.operators.MpegAudio.encodeSyntheticAdts(
-            k % 13, k % 4, 1 + k % 6, frames))
-        }
+  private def synthAdtsPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val frames = (0 until 4 + k % 7).map { j =>
+        (30 + (k * 3 + j * 7) % 200, (k + j) % 3 == 0, (k + j) % 3)
       }
-      .toDF("doc_id", "payload")
-  }
+      graft.operators.MpegAudio.encodeSyntheticAdts(
+        k % 13, k % 4, 1 + k % 6, frames)
+    }
 
   /** q315 — ADTS/AAC header walk, exactly oracle-gated: the lossy-audio
     * triage pair is complete (q314 MP3 + this). ADTS is even cheaper
@@ -2464,24 +2396,18 @@ object DataQueries {
     * (4-byte) start codes front SPS/PPS/IDR, short elsewhere — the
     * realistic access-unit convention.
     */
-  private def synthNalPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          def len(t: Int, g: Int, sl: Int) = 20 + (k * 5 + g * 13 + sl * 11 + t) % 90
-          val plan = Seq((7, len(7, 0, 0), true), (8, len(8, 0, 0), true)) ++
-            (0 until 2 + k % 3).flatMap { g =>
-              (if ((k + g) % 2 == 0) Seq((6, len(6, g, 0), false)) else Nil) ++
-                Seq((5, len(5, g, 0), true)) ++
-                (1 to 1 + (k + g) % 4).map(sl => (1, len(1, g, sl), false))
-            }
-          (id, graft.operators.NalCensus.encodeSynthetic(plan))
+  private def synthNalPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      def len(t: Int, g: Int, sl: Int) = 20 + (k * 5 + g * 13 + sl * 11 + t) % 90
+      val plan = Seq((7, len(7, 0, 0), true), (8, len(8, 0, 0), true)) ++
+        (0 until 2 + k % 3).flatMap { g =>
+          (if ((k + g) % 2 == 0) Seq((6, len(6, g, 0), false)) else Nil) ++
+            Seq((5, len(5, g, 0), true)) ++
+            (1 to 1 + (k + g) % 4).map(sl => (1, len(1, g, sl), false))
         }
-      }
-      .toDF("doc_id", "payload")
-  }
+      graft.operators.NalCensus.encodeSynthetic(plan)
+    }
 
   /** q318 — H.264 Annex-B NAL census, exactly oracle-gated: the video
     * member of the header-walk triage family (q314 MP3, q315 ADTS).
@@ -2531,18 +2457,13 @@ object DataQueries {
     * functions of doc_id.
     */
   private def synthBmffPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        val brands = Array("isom", "mp42", "avc1", "M4A ")
-        it.map { id =>
-          val k = (id % 50).toInt
-          (id, graft.operators.IsoBmff.encodeSynthetic(
-            brands(k % 4), 600 * (1 + k % 5), 1000 + k * 37, 1 + k % 3,
-            100 + (k * 29) % 400))
-        }
-      }
-      .toDF("doc_id", "payload")
+    val brands = Array("isom", "mp42", "avc1", "M4A ")
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      graft.operators.IsoBmff.encodeSynthetic(
+        brands(k % 4), 600 * (1 + k % 5), 1000 + k * 37, 1 + k % 3,
+        100 + (k * 29) % 400)
+    }
   }
 
   /** q319 — ISO-BMFF (MP4) box-tree walk, exactly oracle-gated: the
@@ -2583,25 +2504,19 @@ object DataQueries {
     * functions of (k, pair), so the oracle replays the framing
     * arithmetic (header bytes = fixed field widths + value lengths).
     */
-  private def synthWarcPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val plan = Seq(("warcinfo", None: Option[String], 40 + (k * 7) % 50)) ++
-            (0 until 1 + k % 4).flatMap { p =>
-              val uri = s"http://ex$k.com/p$p"
-              Seq(("request", Some(uri), 30 + (k * 11 + p * 13) % 60),
-                ("response", Some(uri), 120 + (k * 17 + p * 29) % 400))
-            } ++
-            (if (k % 3 == 0) Seq(("metadata", None: Option[String], 25 + (k * 5) % 40))
-             else Nil)
-          (id, graft.operators.WarcOps.encodeSynthetic(plan))
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthWarcPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val plan = Seq(("warcinfo", None: Option[String], 40 + (k * 7) % 50)) ++
+        (0 until 1 + k % 4).flatMap { p =>
+          val uri = s"http://ex$k.com/p$p"
+          Seq(("request", Some(uri), 30 + (k * 11 + p * 13) % 60),
+            ("response", Some(uri), 120 + (k * 17 + p * 29) % 400))
+        } ++
+        (if (k % 3 == 0) Seq(("metadata", None: Option[String], 25 + (k * 5) % 40))
+         else Nil)
+      graft.operators.WarcOps.encodeSynthetic(plan)
+    }
 
   /** q323 — WARC record census, exactly oracle-gated: the container
     * member of the crawl-curation family (Common Crawl's storage
@@ -2654,24 +2569,18 @@ object DataQueries {
     * (k+s)%2==0 — payload lengths closed functions of (k, s), so the
     * oracle replays the 512-byte block arithmetic exactly.
     */
-  private def synthTarPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val files = (0 until 2 + k % 3).flatMap { sm =>
-            val base = s"s$k-$sm"
-            Seq(s"$base.jpg" -> (400 + (k * 31 + sm * 17) % 800),
-              s"$base.json" -> (60 + (k * 7 + sm * 5) % 100)) ++
-              (if ((k + sm) % 2 == 0) Seq(s"$base.txt" -> (30 + (k * 3 + sm * 11) % 50))
-               else Nil)
-          }
-          (id, graft.operators.TarOps.encodeSynthetic(files))
-        }
+  private def synthTarPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val files = (0 until 2 + k % 3).flatMap { sm =>
+        val base = s"s$k-$sm"
+        Seq(s"$base.jpg" -> (400 + (k * 31 + sm * 17) % 800),
+          s"$base.json" -> (60 + (k * 7 + sm * 5) % 100)) ++
+          (if ((k + sm) % 2 == 0) Seq(s"$base.txt" -> (30 + (k * 3 + sm * 11) % 50))
+           else Nil)
       }
-      .toDF("doc_id", "payload")
-  }
+      graft.operators.TarOps.encodeSynthetic(files)
+    }
 
   /** q324 — WebDataset tar-shard audit, exactly oracle-gated: the
     * multimodal-shard member of the container family (how image/text
@@ -2824,26 +2733,20 @@ object DataQueries {
     * all lengths closed functions of (k, p, s) so the oracle replays
     * the page plan with nested range-unnests.
     */
-  private def synthOggPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val nData = 3 + k % 4
-          val plan = Seq((2, 0L, Seq(19)), (0, 0L, Seq(30 + k % 20))) ++
-            (0 until nData).map { p =>
-              val cont = p > 0 && p < nData - 1 && (k + p) % 5 == 0
-              val hType = (if (p == nData - 1) 4 else 0) | (if (cont) 1 else 0)
-              val segs = (0 until 1 + (k + p) % 3)
-                .map(sg => 50 + (k * 7 + p * 11 + sg * 13) % 150)
-              (hType, 960L * (p + 1), segs)
-            }
-          (id, graft.operators.OggOps.encodeSynthetic(plan))
+  private def synthOggPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val nData = 3 + k % 4
+      val plan = Seq((2, 0L, Seq(19)), (0, 0L, Seq(30 + k % 20))) ++
+        (0 until nData).map { p =>
+          val cont = p > 0 && p < nData - 1 && (k + p) % 5 == 0
+          val hType = (if (p == nData - 1) 4 else 0) | (if (cont) 1 else 0)
+          val segs = (0 until 1 + (k + p) % 3)
+            .map(sg => 50 + (k * 7 + p * 11 + sg * 13) % 150)
+          (hType, 960L * (p + 1), segs)
         }
-      }
-      .toDF("doc_id", "payload")
-  }
+      graft.operators.OggOps.encodeSynthetic(plan)
+    }
 
   /** q329 — Ogg page census, exactly oracle-gated: the open-container
     * member of the audio-triage family (q314 MP3, q315 ADTS — this is
@@ -2893,23 +2796,17 @@ object DataQueries {
     * containing `PK` runs — discovery must come from the EOCD
     * backward scan, not signature hunting.
     */
-  private def synthZipPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val entries = (0 until 2 + k % 4).map { f =>
-            val usize = 100 + (k * 13 + f * 7) % 300
-            val stored = (k + f) % 3 == 0
-            val csize = if (stored) usize else usize * (40 + (k + f) % 30) / 100
-            (s"e$k-$f.txt", if (stored) 0 else 8, csize, usize)
-          }
-          (id, graft.operators.ZipOps.encodeSynthetic(entries))
-        }
+  private def synthZipPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val entries = (0 until 2 + k % 4).map { f =>
+        val usize = 100 + (k * 13 + f * 7) % 300
+        val stored = (k + f) % 3 == 0
+        val csize = if (stored) usize else usize * (40 + (k + f) % 30) / 100
+        (s"e$k-$f.txt", if (stored) 0 else 8, csize, usize)
       }
-      .toDF("doc_id", "payload")
-  }
+      graft.operators.ZipOps.encodeSynthetic(entries)
+    }
 
   /** q332 — ZIP archive audit, exactly oracle-gated: the last
     * ubiquitous dataset container (q323 WARC, q324 tar) — public
@@ -3038,21 +2935,16 @@ object DataQueries {
     */
   val q337 = Q("q337_flac_info",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          val rates = Array(8000, 16000, 22050, 24000, 32000, 44100, 48000)
-          it.map { id =>
-            val k = (id % 50).toInt
-            val extras =
-              (if (k % 2 == 0) Seq((1, 10 + k % 50)) else Nil) ++
-                (if (k % 3 == 0) Seq((4, 20 + k % 30)) else Nil)
-            (id, graft.operators.FlacOps.encodeSynthetic(
-              rates(k % 7), 1 + k % 2, 16, 480L * (k + 1) * (1 + k % 3),
-              extras, 100 + (k * 13) % 200))
-          }
-        }
-        .toDF("doc_id", "payload")
+      val rates = Array(8000, 16000, 22050, 24000, 32000, 44100, 48000)
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val extras =
+          (if (k % 2 == 0) Seq((1, 10 + k % 50)) else Nil) ++
+            (if (k % 3 == 0) Seq((4, 20 + k % 30)) else Nil)
+        graft.operators.FlacOps.encodeSynthetic(
+          rates(k % 7), 1 + k % 2, 16, 480L * (k + 1) * (1 + k % 3),
+          extras, 100 + (k * 13) % 200)
+      }
       graft.operators.FlacOps.flacFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -3097,22 +2989,17 @@ object DataQueries {
     */
   val q339 = Q("q339_exif_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 60).toInt
-            (id, graft.operators.ExifOps.encodeSynthetic(
-              littleEndian = k % 2 == 0,
-              orientation = 1 + k % 8,
-              withGps = k % 3 == 0,
-              withExifIfd = k % 4 == 0,
-              withDateTime = k % 5 == 0,
-              withMake = k % 7 < 3,
-              imageLen = 50 + (k * 11) % 150))
-          }
-        }
-        .toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 60).toInt
+        graft.operators.ExifOps.encodeSynthetic(
+          littleEndian = k % 2 == 0,
+          orientation = 1 + k % 8,
+          withGps = k % 3 == 0,
+          withExifIfd = k % 4 == 0,
+          withDateTime = k % 5 == 0,
+          withMake = k % 7 < 3,
+          imageLen = 50 + (k * 11) % 150)
+      }
       graft.operators.ExifOps.exifFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -3245,28 +3132,20 @@ object DataQueries {
     * bytes (truncated trailing CRC) — so the stop-don't-guess walk
     * has all three exits to prove.
     */
-  private def synthTfRecordPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val nRec = 1 + k % 5
-          val lens = (0 until nRec).map(r => 50 + (k * 13 + r * 7) % 200)
-          val blob = graft.operators.TfRecordOps.encodeSynthetic(lens)
-          val out =
-            if (k % 17 == 0) {
-              val flipped = blob.clone()
-              val off = blob.length - 4 - lens.last // last payload byte 0
-              flipped(off) = (flipped(off) ^ 0xFF).toByte
-              flipped
-            } else if (k % 19 == 0) blob.dropRight(4)
-            else blob
-          (id, out)
-        }
-      }
-      .toDF("doc_id", "payload")
-  }
+  private def synthTfRecordPayloads(s: SparkSession, dir: String): DataFrame =
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val nRec = 1 + k % 5
+      val lens = (0 until nRec).map(r => 50 + (k * 13 + r * 7) % 200)
+      val blob = graft.operators.TfRecordOps.encodeSynthetic(lens)
+      if (k % 17 == 0) {
+        val flipped = blob.clone()
+        val off = blob.length - 4 - lens.last // last payload byte 0
+        flipped(off) = (flipped(off) ^ 0xFF).toByte
+        flipped
+      } else if (k % 19 == 0) blob.dropRight(4)
+      else blob
+    }
 
   /** q353 — TFRecord shard census, exactly oracle-gated: the
     * training-shard member of the container family — the format TF
@@ -3322,22 +3201,16 @@ object DataQueries {
     * (truncated download).
     */
   private def synthSafeTensorsPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val dtypes = Array("F32", "F16", "I8")
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val plan = (0 until 1 + k % 4).map { r =>
-            (s"t$r", dtypes((k + r) % 3), Seq(8 + k % 5, 4 + r % 3))
-          }
-          val blob = graft.operators.SafeTensorsOps.encodeSynthetic(plan,
-            spanDelta = if (k % 17 == 0) 1L else 0L,
-            dropData = if (k % 17 != 0 && k % 19 == 0) 3 else 0)
-          (id, blob)
-        }
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      val plan = (0 until 1 + k % 4).map { r =>
+        (s"t$r", dtypes((k + r) % 3), Seq(8 + k % 5, 4 + r % 3))
       }
-      .toDF("doc_id", "payload")
+      graft.operators.SafeTensorsOps.encodeSynthetic(plan,
+        spanDelta = if (k % 17 == 0) 1L else 0L,
+        dropData = if (k % 17 != 0 && k % 19 == 0) 3 else 0)
+    }
   }
 
   /** q355 — SafeTensors header audit, exactly oracle-gated: the
@@ -3407,25 +3280,19 @@ object DataQueries {
     * 5 bytes (truncation inside the final tensor info).
     */
   private def synthGgufPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val archs = Array("llama", "gpt2", "phi3")
-    Tables.docIdsFanned(s, dir)
-      .mapPartitions { it =>
-        it.map { id =>
-          val k = (id % 50).toInt
-          val blob = graft.operators.GgufOps.encodeSynthetic(
-            kvStrings = Seq("general.architecture" -> archs(k % 3),
-              "general.name" -> s"m$k"),
-            kvScalars = (0 until 1 + k % 3).map(j => s"s$j" -> Array(4, 6, 10)((k + j) % 3)),
-            kvArrays = if (k % 2 == 0) Seq("arr" -> (3 + k % 4)) else Seq.empty,
-            tensors = (0 until 1 + k % 4).map(r =>
-              (s"blk.$r.w", Seq((8 + k % 5).toLong, (4 + r % 3).toLong), (k + r) % 3)),
-            dropTail = if (k % 17 != 0 && k % 19 == 0) 5 else 0,
-            badTypeAt = if (k % 17 == 0) 1 else -1)
-          (id, blob)
-        }
-      }
-      .toDF("doc_id", "payload")
+    Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+      val k = (id % 50).toInt
+      graft.operators.GgufOps.encodeSynthetic(
+        kvStrings = Seq("general.architecture" -> archs(k % 3),
+          "general.name" -> s"m$k"),
+        kvScalars = (0 until 1 + k % 3).map(j => s"s$j" -> Array(4, 6, 10)((k + j) % 3)),
+        kvArrays = if (k % 2 == 0) Seq("arr" -> (3 + k % 4)) else Seq.empty,
+        tensors = (0 until 1 + k % 4).map(r =>
+          (s"blk.$r.w", Seq((8 + k % 5).toLong, (4 + r % 3).toLong), (k + r) % 3)),
+        dropTail = if (k % 17 != 0 && k % 19 == 0) 5 else 0,
+        badTypeAt = if (k % 17 == 0) 1 else -1)
+    }
   }
 
   /** q358 — GGUF header census, exactly oracle-gated: the quantized-
@@ -3998,23 +3865,17 @@ object DataQueries {
     */
   val q367 = Q("q367_ogg_codec_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val ch = 1 + k % 2
-            val idPacket =
-              if (k % 3 < 2) graft.operators.OggOps.opusHeadPacket(ch, 100 + k, 48000L)
-              else graft.operators.OggOps.vorbisIdPacket(ch, 44100L)
-            val data = Array.tabulate(40 + k)(i => ((i * 7 + k) % 251).toByte)
-            val bytes = graft.operators.OggOps.encodeSyntheticPackets(Seq(
-              (2, 0L, idPacket),
-              (4, 960L * (1 + k % 4), data)))
-            (id, bytes)
-          }
-        }
-        .toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val ch = 1 + k % 2
+        val idPacket =
+          if (k % 3 < 2) graft.operators.OggOps.opusHeadPacket(ch, 100 + k, 48000L)
+          else graft.operators.OggOps.vorbisIdPacket(ch, 44100L)
+        val data = Array.tabulate(40 + k)(i => ((i * 7 + k) % 251).toByte)
+        graft.operators.OggOps.encodeSyntheticPackets(Seq(
+          (2, 0L, idPacket),
+          (4, 960L * (1 + k % 4), data)))
+      }
       graft.operators.OggOps.oggCodecFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -4053,27 +3914,23 @@ object DataQueries {
     */
   val q370 = Q("q370_utf8_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val bos = new java.io.ByteArrayOutputStream()
-            (0 until 30 + k).foreach(i => bos.write('a' + i % 26))
-            if (k % 5 == 0) bos.write(0x80) // stray continuation
-            (0 until k % 4).foreach { _ => bos.write(0xC3); bos.write(0xA9) } // é
-            if (k % 6 == 0) { bos.write(0xC0); bos.write(0x80) } // overlong NUL
-            (0 until k % 3).foreach { _ =>
-              bos.write(0xE2); bos.write(0x82); bos.write(0xAC) } // €
-            if (k % 7 == 0) { bos.write(0xED); bos.write(0xA0); bos.write(0x80) } // U+D800
-            (0 until k % 2).foreach { _ =>
-              bos.write(0xF0); bos.write(0x9F); bos.write(0x98); bos.write(0x80) } // 😀
-            if (k % 8 == 0) {
-              bos.write(0xF4); bos.write(0x90); bos.write(0x80); bos.write(0x80) } // U+110000
-            if (k % 9 == 0) { bos.write(0xE2); bos.write(0x82) } // truncated tail
-            (id, bos.toByteArray)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val bos = new java.io.ByteArrayOutputStream()
+        (0 until 30 + k).foreach(i => bos.write('a' + i % 26))
+        if (k % 5 == 0) bos.write(0x80) // stray continuation
+        (0 until k % 4).foreach { _ => bos.write(0xC3); bos.write(0xA9) } // é
+        if (k % 6 == 0) { bos.write(0xC0); bos.write(0x80) } // overlong NUL
+        (0 until k % 3).foreach { _ =>
+          bos.write(0xE2); bos.write(0x82); bos.write(0xAC) } // €
+        if (k % 7 == 0) { bos.write(0xED); bos.write(0xA0); bos.write(0x80) } // U+D800
+        (0 until k % 2).foreach { _ =>
+          bos.write(0xF0); bos.write(0x9F); bos.write(0x98); bos.write(0x80) } // 😀
+        if (k % 8 == 0) {
+          bos.write(0xF4); bos.write(0x90); bos.write(0x80); bos.write(0x80) } // U+110000
+        if (k % 9 == 0) { bos.write(0xE2); bos.write(0x82) } // truncated tail
+        bos.toByteArray
+      }
       graft.operators.TextCodec.utf8Features(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -4121,31 +3978,27 @@ object DataQueries {
     */
   val q369 = Q("q369_opus_toc_census",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.OggOps
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val nData = 3 + k % 4
-            val dataPages = (0 until nData).map { p =>
-              val config = (k + 7 * p) % 32
-              val stereo = (k + p) % 2
-              val code3 = (k + p) % 5 == 0
-              val toc = ((config << 3) | (stereo << 2) | (if (code3) 3 else 0)).toByte
-              val body =
-                if (code3) Array((2 + p % 3).toByte) ++ Array.fill(10)((p + 1).toByte)
-                else Array.fill(5 + p)((p + 2).toByte)
-              val hType = if (p == nData - 1) 4 else 0
-              (hType, 960L * (p + 1), toc +: body)
-            }
-            val pages = Seq(
-              (2, 0L, OggOps.opusHeadPacket(1 + k % 2, 312, 48000L)),
-              (0, 0L, "OpusTags".getBytes("US-ASCII") ++ Array.fill(8)(1.toByte))) ++
-              dataPages
-            (id, OggOps.encodeSyntheticPackets(pages))
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val nData = 3 + k % 4
+        val dataPages = (0 until nData).map { p =>
+          val config = (k + 7 * p) % 32
+          val stereo = (k + p) % 2
+          val code3 = (k + p) % 5 == 0
+          val toc = ((config << 3) | (stereo << 2) | (if (code3) 3 else 0)).toByte
+          val body =
+            if (code3) Array((2 + p % 3).toByte) ++ Array.fill(10)((p + 1).toByte)
+            else Array.fill(5 + p)((p + 2).toByte)
+          val hType = if (p == nData - 1) 4 else 0
+          (hType, 960L * (p + 1), toc +: body)
+        }
+        val pages = Seq(
+          (2, 0L, OggOps.opusHeadPacket(1 + k % 2, 312, 48000L)),
+          (0, 0L, "OpusTags".getBytes("US-ASCII") ++ Array.fill(8)(1.toByte))) ++
+          dataPages
+        OggOps.encodeSyntheticPackets(pages)
+      }
       graft.operators.OggOps.opusTocFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -4201,30 +4054,26 @@ object DataQueries {
     */
   val q368 = Q("q368_zstd_literals",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.ZstdOps
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val mal = id % 13 == 0
-            val rawBlock = (0, Array.tabulate(20 + k)(i => ((i * 7 + k) % 251).toByte))
-            val litRaw =
-              if (mal) (2, ZstdOps.literalsHeader(0, 2000) ++ Array.fill(10)(1.toByte))
-              else (2, ZstdOps.literalsHeader(0, 10 + k) ++
-                Array.fill(10 + k)(2.toByte) ++ Array.fill(5)(3.toByte))
-            val blocks = Seq(rawBlock, litRaw) ++
-              (if (k % 3 >= 1)
-                Seq((2, ZstdOps.literalsHeader(1, 100 + k) ++
-                  Array[Byte](9) ++ Array.fill(3)(4.toByte)))
-              else Nil) ++
-              (if (k % 3 == 2)
-                Seq((2, ZstdOps.literalsHeader(2, 200 + k, 30 + k) ++
-                  Array.fill(30 + k)(5.toByte)))
-              else Nil)
-            (id, ZstdOps.encodeFrameWithBlocks(blocks))
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val mal = id % 13 == 0
+        val rawBlock = (0, Array.tabulate(20 + k)(i => ((i * 7 + k) % 251).toByte))
+        val litRaw =
+          if (mal) (2, ZstdOps.literalsHeader(0, 2000) ++ Array.fill(10)(1.toByte))
+          else (2, ZstdOps.literalsHeader(0, 10 + k) ++
+            Array.fill(10 + k)(2.toByte) ++ Array.fill(5)(3.toByte))
+        val blocks = Seq(rawBlock, litRaw) ++
+          (if (k % 3 >= 1)
+            Seq((2, ZstdOps.literalsHeader(1, 100 + k) ++
+              Array[Byte](9) ++ Array.fill(3)(4.toByte)))
+          else Nil) ++
+          (if (k % 3 == 2)
+            Seq((2, ZstdOps.literalsHeader(2, 200 + k, 30 + k) ++
+              Array.fill(30 + k)(5.toByte)))
+          else Nil)
+        ZstdOps.encodeFrameWithBlocks(blocks)
+      }
       graft.operators.ZstdOps.zstdFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -4281,33 +4130,27 @@ object DataQueries {
     */
   val q374 = Q("q374_webp_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val w = graft.operators.WebpOps
-            val base = (id % 3) match {
-              case 0 => w.encodeLossy(16 + (id % 50).toInt, 16 + (id % 37).toInt,
-                5 + (id % 10), 2 * (id % 5).toInt)
-              case 1 => w.encodeLossless(16 + (id % 50).toInt, 16 + (id % 37).toInt,
-                id % 7 == 0, 1 + 2 * (id % 4).toInt)
-              case _ => w.encodeExtendedAnim(32 + (id % 100).toInt, 32 + (id % 80).toInt,
-                alpha = id % 7 == 0, exif = id % 4 == 0, icc = id % 5 == 0,
-                xmp = id % 6 == 0,
-                frames = Seq.fill(1 + (id % 3).toInt)(
-                  (40L + (id % 7) * 10, 1 + 2 * (id % 3).toInt)))
-            }
-            val out =
-              if (id % 17 == 0) base.take(6)
-              else if (id % 19 == 0) { val c = base.clone(); c(0) = (c(0) ^ 0xFF).toByte; c }
-              else if (id % 23 == 0 && id % 3 == 0) {
-                // zero the first VP8 start-code byte (offset 12 RIFF hdr
-                // + 8 chunk hdr + 3 frame tag)
-                val c = base.clone(); c(23) = 0x00.toByte; c
-              } else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val w = graft.operators.WebpOps
+        val base = (id % 3) match {
+          case 0 => w.encodeLossy(16 + (id % 50).toInt, 16 + (id % 37).toInt,
+            5 + (id % 10), 2 * (id % 5).toInt)
+          case 1 => w.encodeLossless(16 + (id % 50).toInt, 16 + (id % 37).toInt,
+            id % 7 == 0, 1 + 2 * (id % 4).toInt)
+          case _ => w.encodeExtendedAnim(32 + (id % 100).toInt, 32 + (id % 80).toInt,
+            alpha = id % 7 == 0, exif = id % 4 == 0, icc = id % 5 == 0,
+            xmp = id % 6 == 0,
+            frames = Seq.fill(1 + (id % 3).toInt)(
+              (40L + (id % 7) * 10, 1 + 2 * (id % 3).toInt)))
+        }
+        if (id % 17 == 0) base.take(6)
+        else if (id % 19 == 0) { val c = base.clone(); c(0) = (c(0) ^ 0xFF).toByte; c }
+        else if (id % 23 == 0 && id % 3 == 0) {
+          // zero the first VP8 start-code byte (offset 12 RIFF hdr
+          // + 8 chunk hdr + 3 frame tag)
+          val c = base.clone(); c(23) = 0x00.toByte; c
+        } else base
+      }
       graft.operators.WebpOps.webpFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },

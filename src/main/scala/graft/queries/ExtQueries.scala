@@ -620,7 +620,7 @@ object ExtQueries {
              FROM embeddings),
       q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0),
       pb AS (SELECT qv, unnest($probeList) AS p FROM q)
-      SELECT vec_id, ${DataQueries.duckCos("embedding", "qv")} AS cos_sim
+      SELECT vec_id, ${Q.duckCos("embedding", "qv")} AS cos_sim
       FROM b JOIN pb ON bucket = p
       ORDER BY cos_sim DESC, vec_id ASC LIMIT 10"""
     })
@@ -923,7 +923,7 @@ object ExtQueries {
              GROUP BY label, d),
       v AS (SELECT label, list(cv ORDER BY dim) AS vec FROM c GROUP BY label)
       SELECT a.label AS la, b.label AS lb,
-             ${DataQueries.duckCos("a.vec", "b.vec")} AS cos_sim
+             ${Q.duckCos("a.vec", "b.vec")} AS cos_sim
       FROM v a JOIN v b ON a.label < b.label
       ORDER BY la, lb"""))
 
@@ -1085,7 +1085,7 @@ object ExtQueries {
     },
     Some(s"""
       WITH q0 AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      a AS (SELECT vec_id, ${DataQueries.duckCos("embedding", "qv")} AS cs
+      a AS (SELECT vec_id, ${Q.duckCos("embedding", "qv")} AS cs
             FROM embeddings CROSS JOIN q0 WHERE vec_id <> 0),
       ta0 AS (SELECT vec_id, cs FROM a ORDER BY cs DESC, vec_id LIMIT 100),
       ta AS (SELECT vec_id, row_number() OVER (ORDER BY cs DESC, vec_id) AS ra FROM ta0),
@@ -1098,9 +1098,9 @@ object ExtQueries {
             FROM embeddings e JOIN sc ON e.vec_id = sc.vec_id),
       qd AS (SELECT dq AS qdq FROM d WHERE vec_id = 0),
       b AS (SELECT vec_id,
-              round(${DataQueries.duckDot("dq", "qdq")}
-                / (sqrt(${DataQueries.duckDot("dq", "dq")})
-                   * sqrt(${DataQueries.duckDot("qdq", "qdq")})), 6) AS cs
+              round(${Q.duckDot("dq", "qdq")}
+                / (sqrt(${Q.duckDot("dq", "dq")})
+                   * sqrt(${Q.duckDot("qdq", "qdq")})), 6) AS cs
             FROM d CROSS JOIN qd WHERE vec_id <> 0),
       tb0 AS (SELECT vec_id, cs FROM b ORDER BY cs DESC, vec_id LIMIT 100),
       tb AS (SELECT vec_id, row_number() OVER (ORDER BY cs DESC, vec_id) AS rb FROM tb0),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Payloads
 
 /** Storage/codec format walkers: parquet footer + page index, ORC tail /
   * stripe stats / zone pruning, Avro OCF, TFRecord/tf.Example, snappy +
@@ -33,32 +34,26 @@ object FormatQueries {
     */
   val q377 = Q("q377_parquet_footer_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val nCols = 1 + (id % 4).toInt
-            val base = graft.operators.ParquetFooter.encodeSynthetic(
-              version = 2,
-              colNames = (0 until nCols).map(c => s"c$c"),
-              nRowGroups = 1 + (id % 3).toInt,
-              rowsPerGroup = 100 + id % 50,
-              bytesPerGroup = 1000 + id % 100,
-              codecOf = c => ((id + c) % 8).toInt,
-              createdBy = s"graft-${id % 10}",
-              dataFiller = (id % 20).toInt)
-            val out =
-              if (id % 17 == 0) base.dropRight(3)
-              else if (id % 19 == 0) {
-                val c = base.clone()
-                for (i <- c.length - 8 until c.length - 4) c(i) = 0xFF.toByte
-                c
-              } else if (id % 23 == 0) {
-                val c = base.clone(); c(4 + (id % 20).toInt) = 0xFF.toByte; c
-              } else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val nCols = 1 + (id % 4).toInt
+        val base = graft.operators.ParquetFooter.encodeSynthetic(
+          version = 2,
+          colNames = (0 until nCols).map(c => s"c$c"),
+          nRowGroups = 1 + (id % 3).toInt,
+          rowsPerGroup = 100 + id % 50,
+          bytesPerGroup = 1000 + id % 100,
+          codecOf = c => ((id + c) % 8).toInt,
+          createdBy = s"graft-${id % 10}",
+          dataFiller = (id % 20).toInt)
+        if (id % 17 == 0) base.dropRight(3)
+        else if (id % 19 == 0) {
+          val c = base.clone()
+          for (i <- c.length - 8 until c.length - 4) c(i) = 0xFF.toByte
+          c
+        } else if (id % 23 == 0) {
+          val c = base.clone(); c(4 + (id % 20).toInt) = 0xFF.toByte; c
+        } else base
+      }
       graft.operators.ParquetFooter.footerFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -124,29 +119,23 @@ object FormatQueries {
     */
   val q378 = Q("q378_avro_ocf_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val codec = Seq("null", "deflate", "snappy", "zstandard")((id % 4).toInt)
-            val nb = 1 + (id % 4).toInt
-            val cnt = 10L + id % 6
-            val len = 40 + 2 * (id % 9).toInt
-            val base = graft.operators.AvroOps.encodeSynthetic(
-              schema = s"""{"type":"record","name":"r${id % 10}","fields":[]}""",
-              codec = codec,
-              extraMeta = if (id % 5 == 0) Seq("writer.id" -> s"w${id % 7}") else Nil,
-              blocks = Seq.fill(nb)((cnt, len)),
-              syncSeed = id)
-            val out =
-              if (id % 17 == 0) base.dropRight(5)
-              else if (id % 19 == 0) { val c = base.clone(); c(3) = 0x7F.toByte; c }
-              else if (id % 23 == 0) {
-                val c = base.clone(); c(c.length - 1) = (c(c.length - 1) ^ 0x5A).toByte; c
-              } else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val codec = Seq("null", "deflate", "snappy", "zstandard")((id % 4).toInt)
+        val nb = 1 + (id % 4).toInt
+        val cnt = 10L + id % 6
+        val len = 40 + 2 * (id % 9).toInt
+        val base = graft.operators.AvroOps.encodeSynthetic(
+          schema = s"""{"type":"record","name":"r${id % 10}","fields":[]}""",
+          codec = codec,
+          extraMeta = if (id % 5 == 0) Seq("writer.id" -> s"w${id % 7}") else Nil,
+          blocks = Seq.fill(nb)((cnt, len)),
+          syncSeed = id)
+        if (id % 17 == 0) base.dropRight(5)
+        else if (id % 19 == 0) { val c = base.clone(); c(3) = 0x7F.toByte; c }
+        else if (id % 23 == 0) {
+          val c = base.clone(); c(c.length - 1) = (c(c.length - 1) ^ 0x5A).toByte; c
+        } else base
+      }
       graft.operators.AvroOps.avroFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -206,24 +195,20 @@ object FormatQueries {
     */
   val q379 = Q("q379_tfexample_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val ops = graft.operators.TfRecordOps
-            val nr = 1 + (id % 3).toInt
-            val good = Seq.fill(nr)(ops.encodeExample(
-              bytesVals = 1 + (id % 2).toInt,
-              bytesLen = 5 + (id % 7).toInt,
-              nFloats = 2 + (id % 3).toInt,
-              int64s = (0 until 1 + (id % 4).toInt).map(i => (id + i) % 100),
-              unknownField = id % 19 == 0))
-            val payloads =
-              if (id % 17 == 0) good :+ Array(0xFF.toByte, 0xFF.toByte)
-              else good
-            (id, ops.encodeShard(payloads))
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val ops = graft.operators.TfRecordOps
+        val nr = 1 + (id % 3).toInt
+        val good = Seq.fill(nr)(ops.encodeExample(
+          bytesVals = 1 + (id % 2).toInt,
+          bytesLen = 5 + (id % 7).toInt,
+          nFloats = 2 + (id % 3).toInt,
+          int64s = (0 until 1 + (id % 4).toInt).map(i => (id + i) % 100),
+          unknownField = id % 19 == 0))
+        val payloads =
+          if (id % 17 == 0) good :+ Array(0xFF.toByte, 0xFF.toByte)
+          else good
+        ops.encodeShard(payloads)
+      }
       graft.operators.TfRecordOps.exampleFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -269,29 +254,24 @@ object FormatQueries {
     */
   val q380 = Q("q380_zone_map_pruning",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val nRgs = 1 + (id % 4).toInt
-            val base = graft.operators.ParquetFooter.encodeSynthetic(
-              version = 2,
-              colNames = Seq("ca", "cb", "cc"),
-              nRowGroups = nRgs,
-              rowsPerGroup = 100 + id % 10,
-              bytesPerGroup = 1000L,
-              codecOf = _ => 0,
-              createdBy = "graft",
-              dataFiller = (id % 16).toInt,
-              statsOf = Some((rg, c) => (
-                100L * rg + c,
-                100L * rg + 50 + (id % 20) + c,
-                (rg % 3).toLong,
-                if (id % 13 == 0) 4 else 8)))
-            val out = if (id % 17 == 0) base.dropRight(3) else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val nRgs = 1 + (id % 4).toInt
+        val base = graft.operators.ParquetFooter.encodeSynthetic(
+          version = 2,
+          colNames = Seq("ca", "cb", "cc"),
+          nRowGroups = nRgs,
+          rowsPerGroup = 100 + id % 10,
+          bytesPerGroup = 1000L,
+          codecOf = _ => 0,
+          createdBy = "graft",
+          dataFiller = (id % 16).toInt,
+          statsOf = Some((rg, c) => (
+            100L * rg + c,
+            100L * rg + 50 + (id % 20) + c,
+            (rg % 3).toLong,
+            if (id % 13 == 0) 4 else 8)))
+        if (id % 17 == 0) base.dropRight(3) else base
+      }
       graft.operators.ParquetFooter
         .pruneAudit(synth, "doc_id", "payload", colIdx = 1,
           thresholdOf = id => 100L * (id % (1 + id % 4)) + 60)
@@ -350,29 +330,23 @@ object FormatQueries {
     */
   val q381 = Q("q381_orc_tail_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val base = graft.operators.OrcOps.encodeSynthetic(
-              nStripes = 1 + (id % 3).toInt,
-              rowsPerStripe = 100 + id % 20,
-              nTypes = 1 + (id % 4).toInt,
-              compression = Seq(0L, 1L, 5L)((id % 3).toInt),
-              writerVersion = 7 + id % 3,
-              dataFiller = (id % 16).toInt)
-            val out =
-              if (id % 17 == 0) base.dropRight(2)
-              else if (id % 19 == 0) { val c = base.clone(); c(0) = 0x7F.toByte; c }
-              else if (id % 23 == 0) {
-                val c = base.clone()
-                val pl = c(c.length - 1) & 0xff
-                c(c.length - 1 - pl) = 0xFF.toByte
-                c
-              } else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val base = graft.operators.OrcOps.encodeSynthetic(
+          nStripes = 1 + (id % 3).toInt,
+          rowsPerStripe = 100 + id % 20,
+          nTypes = 1 + (id % 4).toInt,
+          compression = Seq(0L, 1L, 5L)((id % 3).toInt),
+          writerVersion = 7 + id % 3,
+          dataFiller = (id % 16).toInt)
+        if (id % 17 == 0) base.dropRight(2)
+        else if (id % 19 == 0) { val c = base.clone(); c(0) = 0x7F.toByte; c }
+        else if (id % 23 == 0) {
+          val c = base.clone()
+          val pl = c(c.length - 1) & 0xff
+          c(c.length - 1 - pl) = 0xFF.toByte
+          c
+        } else base
+      }
       graft.operators.OrcOps.orcFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -428,28 +402,24 @@ object FormatQueries {
     */
   val q385 = Q("q385_orc_stripe_stats",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val nc = 1 + (id % 4).toInt
-            val ns = 1 + (id % 3).toInt
-            val rps = 100 + id % 20
-            val stats = (0 until nc).map { j =>
-              graft.operators.OrcOps.ColStat(
-                ns * rps - j,
-                if (j % 2 == 0) Some((-(id % 7) - j, (id % 11) + 2L * j, id))
-                else None,
-                j % 3 == 0)
-            }
-            (id, graft.operators.OrcOps.encodeSynthetic(
-              nStripes = ns, rowsPerStripe = rps, nTypes = 1 + (id % 4).toInt,
-              compression = Seq(0L, 1L, 5L)((id % 3).toInt),
-              writerVersion = 7 + id % 3,
-              dataFiller = (id % 16).toInt,
-              colStats = stats))
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val nc = 1 + (id % 4).toInt
+        val ns = 1 + (id % 3).toInt
+        val rps = 100 + id % 20
+        val stats = (0 until nc).map { j =>
+          graft.operators.OrcOps.ColStat(
+            ns * rps - j,
+            if (j % 2 == 0) Some((-(id % 7) - j, (id % 11) + 2L * j, id))
+            else None,
+            j % 3 == 0)
+        }
+        graft.operators.OrcOps.encodeSynthetic(
+          nStripes = ns, rowsPerStripe = rps, nTypes = 1 + (id % 4).toInt,
+          compression = Seq(0L, 1L, 5L)((id % 3).toInt),
+          writerVersion = 7 + id % 3,
+          dataFiller = (id % 16).toInt,
+          colStats = stats)
+      }
       graft.operators.OrcOps.orcStripeStats(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -504,27 +474,23 @@ object FormatQueries {
     */
   val q388 = Q("q388_orc_zone_prune",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val ns = 1 + (id % 3).toInt
-            val rps = 100 + id % 20
-            val o = id % 7
-            val nStats = if (id % 25 == 0) ns - 1 else ns
-            val stats = (0 until nStats).map { j =>
-              Seq(graft.operators.OrcOps.ColStat(rps,
-                if (id % 9 == 0) None
-                else Some((o + 10L * j, o + 10L * j + 9, 0L)),
-                hasNull = false))
-            }
-            (id, graft.operators.OrcOps.encodeSynthetic(
-              nStripes = ns, rowsPerStripe = rps, nTypes = 2,
-              compression = 0L, writerVersion = 7,
-              dataFiller = (id % 16).toInt,
-              stripeStats = stats))
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val ns = 1 + (id % 3).toInt
+        val rps = 100 + id % 20
+        val o = id % 7
+        val nStats = if (id % 25 == 0) ns - 1 else ns
+        val stats = (0 until nStats).map { j =>
+          Seq(graft.operators.OrcOps.ColStat(rps,
+            if (id % 9 == 0) None
+            else Some((o + 10L * j, o + 10L * j + 9, 0L)),
+            hasNull = false))
+        }
+        graft.operators.OrcOps.encodeSynthetic(
+          nStripes = ns, rowsPerStripe = rps, nTypes = 2,
+          compression = 0L, writerVersion = 7,
+          dataFiller = (id % 16).toInt,
+          stripeStats = stats)
+      }
       graft.operators.OrcOps.orcPruneAudit(synth, "doc_id", "payload", 0,
         id => (id % 7) + 10L * (id % (1 + id % 3)) + 4)
         .orderBy("doc_id")
@@ -572,58 +538,54 @@ object FormatQueries {
     */
   val q390 = Q("q390_lz4_frame_census",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.Lz4Ops
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val a = 5 + (id % 7).toInt
-            val m = 4 + (id % 9).toInt
-            val b = 3 + (id % 5).toInt
-            val o1 = 1 + (id % 4).toInt
-            val c = 1 + (id % 2).toInt
-            val hasStored = id % 3 == 0
-            val r = 6 + (id % 5).toInt
-            val bc = id % 2 == 0
-            val cs = id % 4 == 0
-            val bad = id % 17 == 0
-            val corrupt = !bad && id % 19 == 0
-            val trunc = !bad && !corrupt && id % 23 == 0
-            def lit(bi: Int, j: Int, len: Int): Array[Byte] =
-              Array.tabulate(len)(x => ((id * 31 + bi * 17 + j * 7 + x) & 0xff).toByte)
-            // decoded content of one compressed block (match overlaps ok)
-            def blockContent(bi: Int): Array[Byte] = {
-              val l1 = lit(bi, 0, a); val l2 = lit(bi, 1, b)
-              val outBuf = new Array[Byte](a + m + b)
-              System.arraycopy(l1, 0, outBuf, 0, a)
-              var i = 0
-              while (i < m) { outBuf(a + i) = outBuf(a - o1 + i); i += 1 }
-              System.arraycopy(l2, 0, outBuf, a + m, b)
-              outBuf
-            }
-            def blockBytes(bi: Int): Array[Byte] = Lz4Ops.encodeBlock(Seq(
-              (lit(bi, 0, a), Some((o1, m))), (lit(bi, 1, b), None)))
-            val storedData = Array.tabulate(r)(x => ((id * 13 + x) & 0xff).toByte)
-            val blocks: Seq[Either[Array[Byte], Array[Byte]]] =
-              (0 until c).map { bi =>
-                val full = blockBytes(bi)
-                Left(if (trunc && bi == 0) full.dropRight(1) else full)
-              } ++ (if (hasStored) Seq(Right(storedData)) else Nil)
-            val content = (0 until c).map(blockContent).reduce(_ ++ _) ++
-              (if (hasStored) storedData else Array.empty[Byte])
-            val frame = Lz4Ops.encodeFrame(blocks, blockChecksum = bc,
-              contentBytes = if (cs) Some(content) else None,
-              declaredSize = if (cs) Some(content.length.toLong) else None)
-            if (bad) {
-              val hcPos = 6 + (if (cs) 8 else 0)
-              frame(hcPos) = (frame(hcPos) ^ 0x5A).toByte
-            } else if (corrupt) {
-              val litPos = 7 + (if (cs) 8 else 0) + 4 + 1
-              frame(litPos) = (frame(litPos) ^ 0x5A).toByte
-            }
-            (id, frame)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val a = 5 + (id % 7).toInt
+        val m = 4 + (id % 9).toInt
+        val b = 3 + (id % 5).toInt
+        val o1 = 1 + (id % 4).toInt
+        val c = 1 + (id % 2).toInt
+        val hasStored = id % 3 == 0
+        val r = 6 + (id % 5).toInt
+        val bc = id % 2 == 0
+        val cs = id % 4 == 0
+        val bad = id % 17 == 0
+        val corrupt = !bad && id % 19 == 0
+        val trunc = !bad && !corrupt && id % 23 == 0
+        def lit(bi: Int, j: Int, len: Int): Array[Byte] =
+          Array.tabulate(len)(x => ((id * 31 + bi * 17 + j * 7 + x) & 0xff).toByte)
+        // decoded content of one compressed block (match overlaps ok)
+        def blockContent(bi: Int): Array[Byte] = {
+          val l1 = lit(bi, 0, a); val l2 = lit(bi, 1, b)
+          val outBuf = new Array[Byte](a + m + b)
+          System.arraycopy(l1, 0, outBuf, 0, a)
+          var i = 0
+          while (i < m) { outBuf(a + i) = outBuf(a - o1 + i); i += 1 }
+          System.arraycopy(l2, 0, outBuf, a + m, b)
+          outBuf
+        }
+        def blockBytes(bi: Int): Array[Byte] = Lz4Ops.encodeBlock(Seq(
+          (lit(bi, 0, a), Some((o1, m))), (lit(bi, 1, b), None)))
+        val storedData = Array.tabulate(r)(x => ((id * 13 + x) & 0xff).toByte)
+        val blocks: Seq[Either[Array[Byte], Array[Byte]]] =
+          (0 until c).map { bi =>
+            val full = blockBytes(bi)
+            Left(if (trunc && bi == 0) full.dropRight(1) else full)
+          } ++ (if (hasStored) Seq(Right(storedData)) else Nil)
+        val content = (0 until c).map(blockContent).reduce(_ ++ _) ++
+          (if (hasStored) storedData else Array.empty[Byte])
+        val frame = Lz4Ops.encodeFrame(blocks, blockChecksum = bc,
+          contentBytes = if (cs) Some(content) else None,
+          declaredSize = if (cs) Some(content.length.toLong) else None)
+        if (bad) {
+          val hcPos = 6 + (if (cs) 8 else 0)
+          frame(hcPos) = (frame(hcPos) ^ 0x5A).toByte
+        } else if (corrupt) {
+          val litPos = 7 + (if (cs) 8 else 0) + 4 + 1
+          frame(litPos) = (frame(litPos) ^ 0x5A).toByte
+        }
+        frame
+      }
       graft.operators.Lz4Ops.lz4Features(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -694,25 +656,19 @@ object FormatQueries {
     */
   val q382 = Q("q382_snappy_framing_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val base = graft.operators.SnappyFrameOps.encodeSynthetic(
-              uncLens = Seq.fill(1 + (id % 3).toInt)(30 + 2 * (id % 10).toInt),
-              compLens = if (id % 2 == 1) Seq(20 + (id % 5).toInt) else Nil,
-              padLen = if (id % 4 == 0) 8 else 0)
-            val out =
-              if (id % 17 == 0) base.dropRight(3)
-              else if (id % 19 == 0) { val c = base.clone(); c(5) = 0x7F.toByte; c }
-              else if (id % 23 == 0) {
-                // flip one CRC byte of the first uncompressed chunk
-                // (offset 10 identifier + 4 chunk header)
-                val c = base.clone(); c(14) = (c(14) ^ 0x5A).toByte; c
-              } else base
-            (id, out)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val base = graft.operators.SnappyFrameOps.encodeSynthetic(
+          uncLens = Seq.fill(1 + (id % 3).toInt)(30 + 2 * (id % 10).toInt),
+          compLens = if (id % 2 == 1) Seq(20 + (id % 5).toInt) else Nil,
+          padLen = if (id % 4 == 0) 8 else 0)
+        if (id % 17 == 0) base.dropRight(3)
+        else if (id % 19 == 0) { val c = base.clone(); c(5) = 0x7F.toByte; c }
+        else if (id % 23 == 0) {
+          // flip one CRC byte of the first uncompressed chunk
+          // (offset 10 identifier + 4 chunk header)
+          val c = base.clone(); c(14) = (c(14) ^ 0x5A).toByte; c
+        } else base
+      }
       graft.operators.SnappyFrameOps.snappyFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -780,27 +736,23 @@ object FormatQueries {
     */
   val q387 = Q("q387_snappy_raw_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.{SnappyFrameOps, SnappyRaw}
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val c = 1 + (id % 3).toInt
-            val out = new java.io.ByteArrayOutputStream()
-            out.write(SnappyFrameOps.identifierChunk)
-            (0 until c).foreach { i =>
-              val a = 10 + ((id + i) % 7).toInt
-              val l = 4 + ((id + i) % 8).toInt
-              val ops = Seq(
-                SnappyRaw.Lit(Array.tabulate(a)(b => ((b * 31 + id) & 0xff).toByte)),
-                SnappyRaw.Copy(1 + ((id + i) % 5).toInt, l))
-              out.write(SnappyFrameOps.compressedChunk(ops,
-                flipCrc = id % 13 != 0 && id % 11 == 0 && i == 0,
-                truncate = id % 13 == 0 && i == 0))
-            }
-            (id, out.toByteArray)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val c = 1 + (id % 3).toInt
+        val out = new java.io.ByteArrayOutputStream()
+        out.write(SnappyFrameOps.identifierChunk)
+        (0 until c).foreach { i =>
+          val a = 10 + ((id + i) % 7).toInt
+          val l = 4 + ((id + i) % 8).toInt
+          val ops = Seq(
+            SnappyRaw.Lit(Array.tabulate(a)(b => ((b * 31 + id) & 0xff).toByte)),
+            SnappyRaw.Copy(1 + ((id + i) % 5).toInt, l))
+          out.write(SnappyFrameOps.compressedChunk(ops,
+            flipCrc = id % 13 != 0 && id % 11 == 0 && i == 0,
+            truncate = id % 13 == 0 && i == 0))
+        }
+        out.toByteArray
+      }
       graft.operators.SnappyFrameOps.snappyDecodeFeatures(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -854,7 +806,6 @@ object FormatQueries {
     */
   val q395 = Q("q395_zstd_seq_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.{ZstdOps, ZstdSeq}
       // real zstd -1 output for a 39-byte repetitive input: raw
       // literals + one predefined-FSE sequence (pinned in ZstdSeqSpec)
@@ -874,34 +825,29 @@ object FormatQueries {
       val treelessDict = ZstdOps.literalsHeader(3, 16, 10) ++
         Array[Byte](1, 0, 1, 0, 1, 0) ++
         Array[Byte](0x1a, 0x15, 0x10, 0x1f) ++ Array[Byte](0)
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            val raw = Array.tabulate(20 + k)(i => ((i * 13 + k) % 251).toByte)
-            val broken = predefBlock.clone()
-            broken(broken.length - 1) = 0 // bitstream marker erased
-            val frame =
-              if (k % 9 == 0 && k % 2 == 0)
-                // dictionary APPLIED: id 7 is in the supplied map
-                ZstdOps.encodeFrameWithBlocks(Seq(
-                  (0, raw), (2, dictRefBlock), (2, treelessDict)), dictId = 7)
-              else {
-                val blocks = Seq(
-                  (0, raw), (2, predefBlock), (2, rleModeBlock)) ++
-                  (if (k % 4 == 0) // treeless FIRST-use: spec-corrupt (no
-                    // prior Huffman table anywhere in the frame)
-                    Seq((2, ZstdOps.literalsHeader(3, 50, 10) ++ Array.fill(10)(7.toByte)))
-                  else Nil) ++
-                  (if (k % 5 == 0) Seq((2, broken)) else Nil)
-                // every 18th doc's frame declares an UNSUPPLIED id: a
-                // VALID frame still declined whole (dict_gated class)
-                ZstdOps.encodeFrameWithBlocks(blocks,
-                  dictId = if (k % 9 == 0) 8 else 0)
-              }
-            (id, frame)
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val raw = Array.tabulate(20 + k)(i => ((i * 13 + k) % 251).toByte)
+        val broken = predefBlock.clone()
+        broken(broken.length - 1) = 0 // bitstream marker erased
+        if (k % 9 == 0 && k % 2 == 0)
+          // dictionary APPLIED: id 7 is in the supplied map
+          ZstdOps.encodeFrameWithBlocks(Seq(
+            (0, raw), (2, dictRefBlock), (2, treelessDict)), dictId = 7)
+        else {
+          val blocks = Seq(
+            (0, raw), (2, predefBlock), (2, rleModeBlock)) ++
+            (if (k % 4 == 0) // treeless FIRST-use: spec-corrupt (no
+              // prior Huffman table anywhere in the frame)
+              Seq((2, ZstdOps.literalsHeader(3, 50, 10) ++ Array.fill(10)(7.toByte)))
+            else Nil) ++
+            (if (k % 5 == 0) Seq((2, broken)) else Nil)
+          // every 18th doc's frame declares an UNSUPPLIED id: a
+          // VALID frame still declined whole (dict_gated class)
+          ZstdOps.encodeFrameWithBlocks(blocks,
+            dictId = if (k % 9 == 0) 8 else 0)
+        }
+      }
       ZstdSeq.zstdSeqFeatures(synth, "doc_id", "payload",
           dicts = Map(7L -> dict))
         .orderBy("doc_id")
@@ -954,25 +900,23 @@ object FormatQueries {
     */
   val q414 = Q("q414_parquet_page_rows",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.ParquetFooter
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val nRG = 1 + k % 3
-          def nP(rg: Int) = 2 + (k + rg) % 3
-          def pagesOf(rg: Int): Seq[ParquetFooter.PageEntry] =
-            (0 until nP(rg)).map { p =>
-              val np = k % 7 == 0 && rg == 0 && p == 1
-              (np, 100L * rg + 10 * p, 100L * rg + 10 * p + 9, p.toLong)
-            }
-          def oiOf(rg: Int): Option[Seq[Long]] =
-            if (k % 9 == 0 && rg == 0) None
-            else Some((0 until nP(rg)).map(p => p.toLong * (1000L / nP(rg))))
-          (id, ParquetFooter.encodeSyntheticPaged(
-            (0 until 3).map(c => s"col_$c"), nRG, 1000L, colIdx = 1,
-            pagesOf, offsetIndexOf = Some(oiOf)))
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val nRG = 1 + k % 3
+        def nP(rg: Int) = 2 + (k + rg) % 3
+        def pagesOf(rg: Int): Seq[ParquetFooter.PageEntry] =
+          (0 until nP(rg)).map { p =>
+            val np = k % 7 == 0 && rg == 0 && p == 1
+            (np, 100L * rg + 10 * p, 100L * rg + 10 * p + 9, p.toLong)
+          }
+        def oiOf(rg: Int): Option[Seq[Long]] =
+          if (k % 9 == 0 && rg == 0) None
+          else Some((0 until nP(rg)).map(p => p.toLong * (1000L / nP(rg))))
+        ParquetFooter.encodeSyntheticPaged(
+          (0 until 3).map(c => s"col_$c"), nRG, 1000L, colIdx = 1,
+          pagesOf, offsetIndexOf = Some(oiOf))
+      }
       ParquetFooter.pageRowsAudit(synth, "doc_id", "payload",
           colIdx = 1, threshold = 25L)
         .orderBy("doc_id")
@@ -1021,21 +965,19 @@ object FormatQueries {
     */
   val q413 = Q("q413_parquet_page_index",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.ParquetFooter
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val nRG = 1 + k % 3
-          def pagesOf(rg: Int): Seq[ParquetFooter.PageEntry] =
-            (0 until (2 + (k + rg) % 3)).map { p =>
-              val np = k % 7 == 0 && rg == 0 && p == 1
-              (np, 100L * rg + 10 * p, 100L * rg + 10 * p + 9, p.toLong)
-            }
-          (id, ParquetFooter.encodeSyntheticPaged(
-            (0 until 4).map(c => s"col_$c"), nRG, 1000L, colIdx = 1,
-            pagesOf, badOffsetRg = if (k % 11 == 0) Some(0) else None))
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val nRG = 1 + k % 3
+        def pagesOf(rg: Int): Seq[ParquetFooter.PageEntry] =
+          (0 until (2 + (k + rg) % 3)).map { p =>
+            val np = k % 7 == 0 && rg == 0 && p == 1
+            (np, 100L * rg + 10 * p, 100L * rg + 10 * p + 9, p.toLong)
+          }
+        ParquetFooter.encodeSyntheticPaged(
+          (0 until 4).map(c => s"col_$c"), nRG, 1000L, colIdx = 1,
+          pagesOf, badOffsetRg = if (k % 11 == 0) Some(0) else None)
+      }
       ParquetFooter.pageIndexAudit(synth, "doc_id", "payload",
           colIdx = 1, threshold = 25L)
         .orderBy("doc_id")
@@ -1091,22 +1033,20 @@ object FormatQueries {
     */
   val q403 = Q("q403_h264_sps_dims",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.NalCensus
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val profile = if (k % 17 == 0 || k % 3 == 0) 100 else 66
-          val sps0 = NalCensus.encodeSps(profile, 30 + k % 21,
-            19 + k % 40, 14 + k % 30, frameMbsOnly = k % 5 != 0,
-            crop = if (k % 4 == 0) Some((0, 1, 0, 2)) else None,
-            scalingGate = k % 17 == 0)
-          val sps = if (k % 13 == 0) sps0.take(2) else sps0
-          val pps = NalCensus.encodePps(cabac = k % 2 == 1)
-          val filler = Array.tabulate(20 + k)(i => ((i * 31 + k) % 254 + 1).toByte)
-          (id, NalCensus.encodeNals(Seq(
-            (6, filler), (7, sps), (8, pps), (5, filler))))
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val profile = if (k % 17 == 0 || k % 3 == 0) 100 else 66
+        val sps0 = NalCensus.encodeSps(profile, 30 + k % 21,
+          19 + k % 40, 14 + k % 30, frameMbsOnly = k % 5 != 0,
+          crop = if (k % 4 == 0) Some((0, 1, 0, 2)) else None,
+          scalingGate = k % 17 == 0)
+        val sps = if (k % 13 == 0) sps0.take(2) else sps0
+        val pps = NalCensus.encodePps(cabac = k % 2 == 1)
+        val filler = Array.tabulate(20 + k)(i => ((i * 31 + k) % 254 + 1).toByte)
+        NalCensus.encodeNals(Seq(
+          (6, filler), (7, sps), (8, pps), (5, filler)))
+      }
       NalCensus.spsFeatures(synth, "doc_id", "payload").orderBy("doc_id")
     },
     Some("""
@@ -1154,7 +1094,6 @@ object FormatQueries {
     */
   val q396 = Q("q396_zstd_full_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.{ZstdOps, ZstdSeq}
       def hx(h: String) = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
       // a REAL trained dictionary (zstd --train over structured JSON
@@ -1232,27 +1171,24 @@ object FormatQueries {
         Array[Byte]((h & 0xff).toByte, ((h >> 8) & 0xff).toByte,
           ((h >> 16) & 0xff).toByte) ++ stream ++ Array[Byte](0)
       }
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions { it =>
-          it.map { id =>
-            val k = (id % 50).toInt
-            if (k % 7 == 0 && k % 2 == 1)
-              // the REAL `zstd -D` frame with its dictionary SUPPLIED:
-              // full decode, graded by the frame's own XXH64 checksum
-              (id, realFrame)
-            else {
-              val blocks = Seq(
-                (0, Array.tabulate(10 + k)(i => ((i * 11 + k) % 251).toByte)),
-                (2, if (k % 2 == 0) hufBlock else fseBlock)) ++
-                (if (k % 6 == 0) Seq((2, treeless)) else Nil)
-              // every 14th doc: an UNSUPPLIED dictionary id — the
-              // entropy blocks are declined whole (dict_gated), only
-              // the raw block counts
-              (id, ZstdOps.encodeFrameWithBlocks(blocks,
-                dictId = if (k % 7 == 0) 9 else 0))
-            }
-          }
-        }.toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        if (k % 7 == 0 && k % 2 == 1)
+          // the REAL `zstd -D` frame with its dictionary SUPPLIED:
+          // full decode, graded by the frame's own XXH64 checksum
+          realFrame
+        else {
+          val blocks = Seq(
+            (0, Array.tabulate(10 + k)(i => ((i * 11 + k) % 251).toByte)),
+            (2, if (k % 2 == 0) hufBlock else fseBlock)) ++
+            (if (k % 6 == 0) Seq((2, treeless)) else Nil)
+          // every 14th doc: an UNSUPPLIED dictionary id — the
+          // entropy blocks are declined whole (dict_gated), only
+          // the raw block counts
+          ZstdOps.encodeFrameWithBlocks(blocks,
+            dictId = if (k % 7 == 0) 9 else 0)
+        }
+      }
       ZstdSeq.zstdSeqFeatures(synth, "doc_id", "payload",
           dicts = Map(realDict.dictId -> realDict))
         .orderBy("doc_id")
@@ -1309,35 +1245,31 @@ object FormatQueries {
     */
   val q415 = Q("q415_parquet_page_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.ParquetPages
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val nRg = if (k % 7 == 0) 2 else 1
-          val n = 40 + k
-          def vals(r: Int): Seq[Option[Long]] =
-            (0 until n).map(i => if ((i + r) % 11 == 3) None
-              else Some((id + r * 5 + i * 3) % 23))
-          val pagesOf = (0 until nRg).map { r =>
-            val v = vals(r)
-            if (k % 3 == 0) Seq(v.take(n / 2), v.drop(n / 2)) else Seq(v)
-          }
-          val bytes =
-            if (k % 17 == 0)
-              ParquetPages.encodeInt64File(pagesOf, useDict = false,
-                codec = 0, truncate = 8)
-            else if (k % 13 == 0)
-              ParquetPages.encodeInt64File(pagesOf, useDict = false, codec = 2)
-            else
-              // every 19th doc writes DATA PAGE V2 (levels up front,
-              // values compressed alone) — same logical content, so
-              // the closed-form oracle is invariant across the page
-              // format, which is itself the pinned property
-              ParquetPages.encodeInt64File(pagesOf, useDict = k % 2 == 0,
-                codec = if (k % 5 == 0) 1 else 0, pageV2 = k % 19 == 0)
-          (id, bytes)
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val nRg = if (k % 7 == 0) 2 else 1
+        val n = 40 + k
+        def vals(r: Int): Seq[Option[Long]] =
+          (0 until n).map(i => if ((i + r) % 11 == 3) None
+            else Some((id + r * 5 + i * 3) % 23))
+        val pagesOf = (0 until nRg).map { r =>
+          val v = vals(r)
+          if (k % 3 == 0) Seq(v.take(n / 2), v.drop(n / 2)) else Seq(v)
+        }
+        if (k % 17 == 0)
+          ParquetPages.encodeInt64File(pagesOf, useDict = false,
+            codec = 0, truncate = 8)
+        else if (k % 13 == 0)
+          ParquetPages.encodeInt64File(pagesOf, useDict = false, codec = 2)
+        else
+          // every 19th doc writes DATA PAGE V2 (levels up front,
+          // values compressed alone) — same logical content, so
+          // the closed-form oracle is invariant across the page
+          // format, which is itself the pinned property
+          ParquetPages.encodeInt64File(pagesOf, useDict = k % 2 == 0,
+            codec = if (k % 5 == 0) 1 else 0, pageV2 = k % 19 == 0)
+      }
       ParquetPages.pageDecodeAudit(synth, "doc_id", "payload", colIdx = 0)
         .orderBy("doc_id")
     },
@@ -1400,34 +1332,32 @@ object FormatQueries {
     */
   val q419 = Q("q419_av1_seq_header",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.Av1Obu
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val p = k % 3
-          val bd = if (p == 2 && k % 2 == 0) 12 else if (k % 4 == 0) 10 else 8
-          val reduced = k % 6 == 0
-          val level = 5 + k % 10
-          val tier = if (level > 7 && !reduced) k % 2 else 0
-          val seqPayload = Av1Obu.encodeSeqHdr(p, level, tier,
-            64L + 4 * k, 36L + 2 * k, bd, mono = p != 1 && k % 5 == 0,
-            sb128 = k % 2 == 1, still = k % 7 == 0, reduced = reduced)
-          val seqObu = Av1Obu.encodeObu(1,
-            if (k % 13 == 0) seqPayload.take(2) else seqPayload)
-          val td = Av1Obu.encodeObu(2, Array.emptyByteArray)
-          val frame = Av1Obu.encodeObu(6,
-            Array.tabulate(10 + k)(i => ((i * 7 + k) % 251).toByte))
-          val frames =
-            if (k % 19 == 0)
-              Seq(td ++ seqObu ++ frame,
-                Array(0x80.toByte) ++ Array.fill(4)(0.toByte))
-            else if (k % 11 == 0) Seq(td ++ frame, td ++ seqObu ++ frame)
-            else Seq(td ++ seqObu ++ frame, td ++ frame)
-          val ivf = Av1Obu.encodeIvf(64 + 4 * k, 36 + 2 * k, frames)
-          if (k % 17 == 0) ivf(8) = 'X'.toByte
-          (id, ivf)
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val p = k % 3
+        val bd = if (p == 2 && k % 2 == 0) 12 else if (k % 4 == 0) 10 else 8
+        val reduced = k % 6 == 0
+        val level = 5 + k % 10
+        val tier = if (level > 7 && !reduced) k % 2 else 0
+        val seqPayload = Av1Obu.encodeSeqHdr(p, level, tier,
+          64L + 4 * k, 36L + 2 * k, bd, mono = p != 1 && k % 5 == 0,
+          sb128 = k % 2 == 1, still = k % 7 == 0, reduced = reduced)
+        val seqObu = Av1Obu.encodeObu(1,
+          if (k % 13 == 0) seqPayload.take(2) else seqPayload)
+        val td = Av1Obu.encodeObu(2, Array.emptyByteArray)
+        val frame = Av1Obu.encodeObu(6,
+          Array.tabulate(10 + k)(i => ((i * 7 + k) % 251).toByte))
+        val frames =
+          if (k % 19 == 0)
+            Seq(td ++ seqObu ++ frame,
+              Array(0x80.toByte) ++ Array.fill(4)(0.toByte))
+          else if (k % 11 == 0) Seq(td ++ frame, td ++ seqObu ++ frame)
+          else Seq(td ++ seqObu ++ frame, td ++ frame)
+        val ivf = Av1Obu.encodeIvf(64 + 4 * k, 36 + 2 * k, frames)
+        if (k % 17 == 0) ivf(8) = 'X'.toByte
+        ivf
+      }
       Av1Obu.av1Features(synth, "doc_id", "payload").orderBy("doc_id")
     },
     Some("""
@@ -1491,30 +1421,26 @@ object FormatQueries {
     */
   val q420 = Q("q420_parquet_string_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.ParquetPages
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val n = 30 + k
-          val enc = (k % 4) match {
-            case 0 => 0; case 1 => 8; case 2 => 6; case _ => 7
-          }
-          val vals: Seq[Option[Array[Byte]]] = (0 until n).map { i =>
-            if (i % 9 == 4) None
-            else Some(s"doc-${(id + 3 * i) % 23}".getBytes("UTF-8"))
-          }
-          val pages = if (k % 3 == 0) Seq(vals.take(n / 2), vals.drop(n / 2))
-            else Seq(vals)
-          val bytes =
-            if (k % 17 == 0)
-              ParquetPages.encodeBinaryFile(Seq(pages), 0, 0, truncate = 8)
-            else if (k % 13 == 0)
-              ParquetPages.encodeBinaryFile(Seq(pages), 0, codec = 2)
-            else ParquetPages.encodeBinaryFile(Seq(pages), enc,
-              codec = if (k % 5 == 0) 1 else 0)
-          (id, bytes)
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val n = 30 + k
+        val enc = (k % 4) match {
+          case 0 => 0; case 1 => 8; case 2 => 6; case _ => 7
+        }
+        val vals: Seq[Option[Array[Byte]]] = (0 until n).map { i =>
+          if (i % 9 == 4) None
+          else Some(s"doc-${(id + 3 * i) % 23}".getBytes("UTF-8"))
+        }
+        val pages = if (k % 3 == 0) Seq(vals.take(n / 2), vals.drop(n / 2))
+          else Seq(vals)
+        if (k % 17 == 0)
+          ParquetPages.encodeBinaryFile(Seq(pages), 0, 0, truncate = 8)
+        else if (k % 13 == 0)
+          ParquetPages.encodeBinaryFile(Seq(pages), 0, codec = 2)
+        else ParquetPages.encodeBinaryFile(Seq(pages), enc,
+          codec = if (k % 5 == 0) 1 else 0)
+      }
       ParquetPages.binaryDecodeAudit(synth, "doc_id", "payload", colIdx = 0)
         .orderBy("doc_id")
     },
@@ -1577,24 +1503,20 @@ object FormatQueries {
     */
   val q421 = Q("q421_orc_data_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.OrcData
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val n = 40 + k
-          val vals: Seq[Option[Long]] = (0 until n).map { i =>
-            if (k % 2 == 0 && i % 8 == 5) None
-            else if (k % 4 == 0) Some(id % 7 + 3L * i)
-            else Some((id + 5L * i) % 101 - 50)
-          }
-          val bytes =
-            if (k % 17 == 0) OrcData.encodeSyntheticOrc(vals, truncate = 8)
-            else if (k % 13 == 0)
-              OrcData.encodeSyntheticOrc(vals, codecStamp = 4L)
-            else OrcData.encodeSyntheticOrc(vals)
-          (id, bytes)
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val n = 40 + k
+        val vals: Seq[Option[Long]] = (0 until n).map { i =>
+          if (k % 2 == 0 && i % 8 == 5) None
+          else if (k % 4 == 0) Some(id % 7 + 3L * i)
+          else Some((id + 5L * i) % 101 - 50)
+        }
+        if (k % 17 == 0) OrcData.encodeSyntheticOrc(vals, truncate = 8)
+        else if (k % 13 == 0)
+          OrcData.encodeSyntheticOrc(vals, codecStamp = 4L)
+        else OrcData.encodeSyntheticOrc(vals)
+      }
       OrcData.orcDecodeAudit(synth, "doc_id", "payload", colIdx = 0)
         .orderBy("doc_id")
     },
@@ -1643,27 +1565,23 @@ object FormatQueries {
     */
   val q422 = Q("q422_orc_string_decode",
     (s, dir) => {
-      import s.implicits._
       import graft.operators.OrcData
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map { id =>
-          val k = (id % 50).toInt
-          val n = 30 + k
-          val vals: Seq[Option[Array[Byte]]] = (0 until n).map { i =>
-            if (i % 9 == 4) None
-            else Some(s"orc-${(id + 3 * i) % 23}".getBytes("UTF-8"))
-          }
-          val bytes =
-            if (k % 17 == 0)
-              OrcData.encodeSyntheticOrcStrings(vals, useDict = false,
-                truncate = 8)
-            else if (k % 13 == 0)
-              OrcData.encodeSyntheticOrcStrings(vals, useDict = false,
-                codecStamp = 4L)
-            else OrcData.encodeSyntheticOrcStrings(vals,
-              useDict = k % 2 == 1)
-          (id, bytes)
-        }).toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir)) { id =>
+        val k = (id % 50).toInt
+        val n = 30 + k
+        val vals: Seq[Option[Array[Byte]]] = (0 until n).map { i =>
+          if (i % 9 == 4) None
+          else Some(s"orc-${(id + 3 * i) % 23}".getBytes("UTF-8"))
+        }
+        if (k % 17 == 0)
+          OrcData.encodeSyntheticOrcStrings(vals, useDict = false,
+            truncate = 8)
+        else if (k % 13 == 0)
+          OrcData.encodeSyntheticOrcStrings(vals, useDict = false,
+            codecStamp = 4L)
+        else OrcData.encodeSyntheticOrcStrings(vals,
+          useDict = k % 2 == 1)
+      }
       OrcData.orcStringDecodeAudit(synth, "doc_id", "payload", colIdx = 0)
         .orderBy("doc_id")
     },

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{DeltaLogOps, HudiOps, IcebergOps}
+import graft.operators.{DeltaLogOps, HudiOps, IcebergOps, Payloads}
 
 /** Lake-format metadata queries: Delta transaction-log census / prune /
   * incremental fold / checkpoint replay / deletion vectors / VACUUM +
@@ -167,7 +167,7 @@ object LakeQueries {
       // the Iceberg twin of the SAME schedule: live slots per the
       // Delta history (m=0: 0..n0-1; m=1: 1..n0; m=2: 1..n0 plus f0
       // reborn as slot n0+1), one DELETED tombstone when m=1
-      val manifests = ids.mapPartitions(_.map { id =>
+      val manifests = Payloads.synth(ids) { id =>
         val k = id // the Delta synthetic keys on the FULL id
         val n0 = (2 + k % 5).toInt
         val m = (k % 3).toInt
@@ -188,8 +188,8 @@ object LakeQueries {
           if (k % 11 == 0) live.head.copy(snapshotId = Some(999L + k)) +: live.tail
           else live
         val tomb = if (m == 1) Seq(entry(0, "f0.parquet", 2)) else Seq.empty
-        (id, IcebergOps.encodeManifest(Seq(planted ++ tomb), syncSeed = k * 31L))
-      }).toDF("doc_id", "payload")
+        IcebergOps.encodeManifest(Seq(planted ++ tomb), syncSeed = k * 31L)
+      }
       val ice = IcebergOps.manifestCensus(manifests, "doc_id", "payload")
         .select(col("doc_id"),
           col("n_live").as("i_live"), col("live_bytes").as("i_bytes"),
@@ -252,11 +252,8 @@ object LakeQueries {
     */
   val q398 = Q("q398_iceberg_manifest_census",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map(id =>
-          (id, graft.operators.IcebergOps.syntheticManifest(id % 50))))
-        .toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir))(id =>
+        graft.operators.IcebergOps.syntheticManifest(id % 50))
       graft.operators.IcebergOps.manifestCensus(synth, "doc_id", "payload")
         .orderBy("doc_id")
     },
@@ -317,11 +314,8 @@ object LakeQueries {
     */
   val q399 = Q("q399_iceberg_manifest_prune",
     (s, dir) => {
-      import s.implicits._
-      val synth = Tables.docIdsFanned(s, dir)
-        .mapPartitions(_.map(id =>
-          (id, graft.operators.IcebergOps.syntheticManifest(id % 50))))
-        .toDF("doc_id", "payload")
+      val synth = Payloads.synth(Tables.docIdsFanned(s, dir))(id =>
+        graft.operators.IcebergOps.syntheticManifest(id % 50))
       graft.operators.IcebergOps
         .manifestPruneAudit(synth, "doc_id", "payload",
           threshold = 25L, partValue = 1)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Hashing, ScalarFunctions}
 import graft.operators.{Similarity, TextAnalysis => TA}
-import graft.queries.Q.duckHash64
+import graft.queries.Q.{duckCos, duckHash64}
 
 /** Round-3 batch 2 — cluster-engineering operators: the join/agg
   * machinery a 100 TB deployment leans on beyond the analytic surface.
@@ -23,13 +23,6 @@ import graft.queries.Q.duckHash64
   * already proves for q57/q77, and a total ORDER BY on every output.
   */
 object ScaleQueries {
-
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
 

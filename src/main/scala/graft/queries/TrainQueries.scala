@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Dedup, Similarity, TextAnalysis => TA}
-import graft.queries.Q.duckHash64
+import graft.queries.Q.{duckCos, duckDot, duckHash64}
 
 /** Round-3 training-data operators: statistical quality signals
   * (n-gram language-model scoring), semantic deduplication over
@@ -23,13 +23,6 @@ import graft.queries.Q.duckHash64
 object TrainQueries {
 
   private val duckTokens = "string_split_regex(trim(text), '\\s+')"
-
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, len($a)+1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  private def duckCos(a: String, b: String): String =
-    s"round(${duckDot(a, b)} / (sqrt(${duckDot(a, a)}) * sqrt(${duckDot(b, b)})), 6)"
 
   /** q77 — bigram language-model scoring: train an add-one-smoothed
     * bigram LM on the corpus itself, then score every document by its

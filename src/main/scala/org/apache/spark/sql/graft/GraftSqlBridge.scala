@@ -54,6 +54,25 @@ object GraftSqlBridge {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  /** Target rows per partition for size-derived checkpoint
+    * layouts. ~4M skinny rows ≈ 64-128 MB — the guide's partition-size
+    * band; the partition count then scales with the DATA, not with a
+    * local core count or a cluster constant.
+    */
+  private val RowsPerPartition = 4000000L
+
+  /** The parallelism FLOOR's minimum rows per partition. The
+    * r15 rows/4M derivation alone produced ONE partition for every
+    * sub-4M-row edge list, serializing each loop round's probe-side
+    * work on a many-core host (the r15 bench measured q199 3.96 → 6.47 s
+    * and ANTI-scaling, 8 cores beating 32). The floor keeps cores busy
+    * — up to defaultParallelism partitions — but never slices below
+    * `MinRowsPerPartition` rows each, so tiny loop states still avoid
+    * the 32×32 shuffle-file churn the size derivation exists to kill.
+    * At scale the rows/4M term dominates and the floor is inert.
+    */
+  private val MinRowsPerPartition = 16384L
+
   /** Local checkpoint that KEEPS a hash partitioning (and optionally a
     * per-partition sort) visible to the planner.
     *
@@ -76,25 +95,6 @@ object GraftSqlBridge {
     * produced is sound at any scale; it is the same claim
     * LogicalRDD.fromDataset makes when AQE is off.
     */
-  /** Conf key: target rows per partition for size-derived checkpoint
-    * layouts. ~4M skinny rows ≈ 64-128 MB — the guide's partition-size
-    * band; the partition count then scales with the DATA, not with a
-    * local core count or a cluster constant.
-    */
-  val RowsPerPartitionKey = "spark.graft.checkpoint.rowsPerPartition"
-
-  /** Conf key: the parallelism FLOOR's minimum rows per partition. The
-    * r15 rows/4M derivation alone produced ONE partition for every
-    * sub-4M-row edge list, serializing each loop round's probe-side
-    * work on a many-core host (the driver measured q199 3.96 → 6.47 s
-    * and ANTI-scaling, 8 cores beating 32). The floor keeps cores busy
-    * — up to defaultParallelism partitions — but never slices below
-    * `minRowsPerPartition` rows each, so tiny loop states still avoid
-    * the 32×32 shuffle-file churn the size derivation exists to kill.
-    * At scale the rows/4M term dominates and the floor is inert.
-    */
-  val MinRowsPerPartitionKey = "spark.graft.checkpoint.minRowsPerPartition"
-
   def localCheckpointByKey(df: DataFrame, keys: Seq[String],
                            sortWithin: Boolean = true,
                            numPartitions: Option[Int] = None): DataFrame = {
@@ -111,12 +111,10 @@ object GraftSqlBridge {
     val pre = df.localCheckpoint(false)
     val n = numPartitions.getOrElse {
       val rows = pre.count()
-      val perPart = spark.conf.get(RowsPerPartitionKey, "4000000").toLong
-      val minRows = spark.conf.get(MinRowsPerPartitionKey, "16384").toLong
       val cap = spark.sessionState.conf.numShufflePartitions.toLong * 64
-      val bySize = (rows + perPart - 1) / perPart
+      val bySize = (rows + RowsPerPartition - 1) / RowsPerPartition
       val floor = math.min(spark.sparkContext.defaultParallelism.toLong,
-        math.max(1L, (rows + minRows - 1) / minRows))
+        math.max(1L, (rows + MinRowsPerPartition - 1) / MinRowsPerPartition))
       math.max(floor, math.min(bySize, cap)).toInt
     }
     val re = pre.repartition(n, keys.map(col): _*)

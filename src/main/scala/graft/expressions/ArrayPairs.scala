@@ -140,7 +140,7 @@ object ArrayPairsKernel {
 /** `graft_pairs_long(arr)` → array<struct<a:bigint, b:bigint>>:
   * index-ordered 2-combinations (see [[ArrayPairsKernel]]).
   */
-case class ArrayPairsLong(child: Expression) extends UnaryExpression {
+case class ArrayPairsLong(child: Expression) extends UnaryExpression with CpuDenseKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -166,7 +166,7 @@ case class ArrayPairsLong(child: Expression) extends UnaryExpression {
 /** `graft_pairs_str(arr)` → array<struct<a:string, b:string>>:
   * index-ordered 2-combinations of a string array.
   */
-case class ArrayPairsString(child: Expression) extends UnaryExpression {
+case class ArrayPairsString(child: Expression) extends UnaryExpression with CpuDenseKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -192,7 +192,8 @@ case class ArrayPairsString(child: Expression) extends UnaryExpression {
 /** `graft_cross_long(a, b)` → array<struct<a:bigint, b:bigint>>: the
   * full cross of two long arrays (see [[ArrayPairsKernel.cross]]).
   */
-case class CrossPairsLong(left: Expression, right: Expression) extends BinaryExpression {
+case class CrossPairsLong(left: Expression, right: Expression)
+  extends BinaryExpression with CpuDenseKernel {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {

@@ -63,7 +63,7 @@ object ArrayTriplesKernel {
 /** `graft_triples(arr)` → array<struct<a:string, b:string, c:string>>:
   * index-ordered 3-combinations (see [[ArrayTriplesKernel]]).
   */
-case class ArrayTriples(child: Expression) extends UnaryExpression {
+case class ArrayTriples(child: Expression) extends UnaryExpression with CpuDenseKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Catalyst extension point: installs the engine's native expressions
-  * as SQL functions, the [[CartesianGuard]] optimizer rule and the
+  * as SQL functions, the [[CartesianGuard]] and
+  * [[graft.plans.ExpansionFanout]] optimizer rules and the
   * [[graft.plans.TopKStrategy]] planner strategy.
   *
   * One registration path: `spark.sql.extensions` names this class
@@ -20,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((ident, info, builder))
     }
     ext.injectOptimizerRule(_ => CartesianGuard)
+    ext.injectPreCBORule(graft.plans.ExpansionFanout(_))
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }
@@ -105,6 +107,8 @@ object GraftExtensions {
       val x = spark.experimental
       if (!x.extraOptimizations.contains(CartesianGuard))
         x.extraOptimizations = x.extraOptimizations :+ CartesianGuard
+      if (!x.extraOptimizations.exists(_.isInstanceOf[graft.plans.ExpansionFanout]))
+        x.extraOptimizations = x.extraOptimizations :+ graft.plans.ExpansionFanout(spark)
       if (!x.extraStrategies.contains(graft.plans.TopKStrategy))
         x.extraStrategies = x.extraStrategies :+ graft.plans.TopKStrategy
     }

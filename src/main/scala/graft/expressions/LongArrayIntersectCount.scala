@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * the probe side, unlike array_intersect's dedup.
   */
 case class LongArrayIntersectCount(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with CpuDenseKernel {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {

@@ -185,13 +185,9 @@ object Dedup {
       .filter(col("_bsz") > 1 && col("_bsz") <= maxBucket)
     val buckets = sized.groupBy(bucketCols.map(col): _*)
       .agg(sort_array(collect_list(col(idCol))).as("_ids"))
-    // r16: pin the expansion stage's parallelism — the aggregated
-    // bucket arrays are byte-small, so AQE coalesced the O(bucket²)
-    // pair explode onto 2 tasks (q114: 757 ms CPU on 2 tasks measured)
-    ScaleOps.fanExpansion(buckets, bucketCols.map(col): _*)
-      // compiled pair kernel (r15 opt): the interpreted transform/slice
-      // HOF chain copied the id-array tail once per outer index
-      .select(explode(call_function("graft_pairs_long", col("_ids"))).as("_p"))
+    // compiled pair kernel (r15 opt): the interpreted transform/slice
+    // HOF chain copied the id-array tail once per outer index
+    buckets.select(explode(call_function("graft_pairs_long", col("_ids"))).as("_p"))
       .select(col("_p.a").as("id_a"), col("_p.b").as("id_b"))
       // r16: the distinct's final aggregate merges the full pair
       // stream and AQE starves it too (pair keys are byte-small);
@@ -248,13 +244,8 @@ object Dedup {
       .select(bcols ++ Seq(col("_ca"), col("_cb"),
         slice(col("_ids"), col("_ca") * chunk + 1, lit(chunk)).as("_ia"),
         slice(col("_ids"), col("_cb") * chunk + 1, lit(chunk)).as("_ib")): _*)
-      // spread one bucket's chunk-pair grid across tasks — without this
-      // the bucket-key partitioning keeps the whole grid colocated.
-      // r16: explicit (AQE-exempt) count — the grid rows are byte-small
-      // and AQE coalesced the chunk² expansion onto 2-3 tasks (q128:
-      // 1.1 s CPU on 2 tasks measured)
-      .transform(d => ScaleOps.fanExpansion(d,
-        bcols ++ Seq(col("_ca"), col("_cb")): _*))
+      // the planner's ExpansionFanout spreads one bucket's chunk-pair
+      // grid across tasks before this expansion
       .select(explode(
         when(col("_ca") < col("_cb"), cross) // id-ordered chunks ⇒ a < b already
           .otherwise(tri)).as("_p"))
@@ -264,12 +255,12 @@ object Dedup {
       .distinct() // one pair, however many buckets matched
   }
 
-  /** All unordered member pairs (least, greatest) from each row's two id
-    * arrays, chunk-bounded like [[bucketPairsExact]]: used to expand a
-    * matched GROUP pair (two sets of exact-duplicate documents) into
-    * document pairs without one row ever holding |a|·|b| structs. Rows
-    * where `aCol` and `bCol` name the same column expand the triangular
-    * within-group pairs instead.
+  /** All unordered member pairs (least, greatest) from each row's two
+    * sorted long id arrays, chunk-bounded like [[bucketPairsExact]]:
+    * used to expand a matched GROUP pair (two sets of exact-duplicate
+    * documents) into document pairs without one row ever holding |a|·|b|
+    * structs. Rows where `aCol` and `bCol` name the same column expand
+    * the triangular within-group pairs instead.
     */
   def expandMemberPairs(df: DataFrame, aCol: String, bCol: String,
                         carry: Seq[String], chunk: Int = 256): DataFrame = {
@@ -293,24 +284,17 @@ object Dedup {
           .select(carry.map(col) ++ Seq(col("_ca"), col("_ia")) :+
             posexplode(slices(col(bCol))).as(Seq("_cb", "_ib")): _*)
       }
-    val tri = flatten(transform(
-      sequence(lit(1), size(col("_ia")) - 1),
-      i => transform(slice(col("_ia"), i + 1, size(col("_ia"))),
-        b => struct(element_at(col("_ia"), i).as("id_a"), b.as("id_b")))))
-    val cross = flatten(transform(col("_ia"),
-      a => transform(col("_ib"),
-        b => struct(least(a, b).as("id_a"), greatest(a, b).as("id_b")))))
-    val ordered = flatten(transform(col("_ia"),
-      a => transform(col("_ib"), b => struct(a.as("id_a"), b.as("id_b")))))
-    val pairsCol =
+    // compiled pair kernels, as in bucketPairsExact: id-ordered chunks
+    // make an off-diagonal within-group cell a plain cross
+    val cross = call_function("graft_cross_long", col("_ia"), col("_ib"))
+    val pairs =
       if (within)
-        when(col("_ca") < col("_cb"), ordered) // id-ordered chunks: a < b already
-          .when(size(col("_ia")) > 1, tri)
-          .otherwise(array().cast("array<struct<id_a:long,id_b:long>>"))
+        when(col("_ca") < col("_cb"), cross)
+          .otherwise(call_function("graft_pairs_long", col("_ia")))
       else cross
-    ScaleOps.fanExpansion(both, carry.map(col) ++ Seq(col("_ca"), col("_cb")): _*)
-      .select(carry.map(col) :+ explode(pairsCol).as("_p"): _*)
-      .select(carry.map(col) ++ Seq(col("_p.id_a").as("id_a"), col("_p.id_b").as("id_b")): _*)
+    both.select(carry.map(col) :+ explode(pairs).as("_p"): _*)
+      .select(carry.map(col) ++ Seq(least(col("_p.a"), col("_p.b")).as("id_a"),
+        greatest(col("_p.a"), col("_p.b")).as("id_b")): _*)
   }
 
   /** End-to-end MinHash-LSH near-duplicate pairs.
@@ -357,10 +341,6 @@ object Dedup {
     cand
       .join(hashed.select(col(idCol).as("id_a"), col("_sh").as("sh_a")), Seq("id_a"))
       .join(hashed.select(col(idCol).as("id_b"), col("_sh").as("sh_b")), Seq("id_b"))
-      // r16: pin the verification stage's parallelism — candidate keys
-      // are byte-small, so AQE coalesced the per-pair intersect-count
-      // onto 1-2 tasks (same starvation as q202's expansion)
-      .transform(d => ScaleOps.fanExpansion(d, col("id_a"), col("id_b")))
       .select(col("id_a"), col("id_b"), jaccardLongDistinct(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }

@@ -21,27 +21,27 @@ object ScaleOps {
     * does fire, the exchange moves exactly the scanned rows once,
     * keyed deterministically.
     *
-    * Two r16 guards (both measured costs of the r15 form):
-    *  - a frame with a SHUFFLE upstream (join/aggregate/window/sort/
-    *    repartition) is left alone without even consulting its RDD:
-    *    its parallelism was already decided by shuffle partitioning +
-    *    AQE, and `queryExecution.toRdd` on an ADAPTIVE plan EXECUTES
-    *    every upstream query stage at plan-build time — work the
-    *    caller's own action then recomputes (q176 paid its whole
-    *    batch-curation subtree twice for a partition-count probe);
-    *  - the RDD probe runs only on narrow lineage (scan/localCheckpoint
-    *    + per-row ops), where toRdd materializes nothing.
+    * The partition-count probe runs only when the optimized plan holds
+    * known-narrow nodes alone, where `toRdd` materializes nothing; any
+    * other node (a shuffle already decided the parallelism) leaves the
+    * frame as it is. On an ADAPTIVE plan `toRdd` EXECUTES every
+    * upstream query stage at plan-build time (q176 paid its whole
+    * batch-curation subtree twice for a partition-count probe). The
+    * decision needs the scan's physical partition count, which a
+    * logical optimizer rule cannot see, so this stays hand-placed.
     */
   def fanIfNarrow(df: DataFrame, key: Column): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
     val spark = df.sparkSession
     val want = spark.sparkContext.defaultParallelism
-    val shuffledUpstream = df.queryExecution.optimizedPlan.exists {
-      case _: Join | _: Aggregate | _: Window | _: Sort | _: GlobalLimit |
-           _: RepartitionOperation | _: Deduplicate => true
-      case _ => false
+    val shuffledOrUnknown = df.queryExecution.optimizedPlan.exists {
+      case _: Project | _: Filter | _: Generate | _: SubqueryAlias | _: LogicalRDD |
+           _: LogicalRelation | _: LocalRelation | _: Range => false
+      case _ => true
     }
-    if (shuffledUpstream) df
+    if (shuffledOrUnknown) df
     else {
       val have = df.queryExecution.toRdd.getNumPartitions
       // fan whenever the frame is materially below the core count —
@@ -54,39 +54,18 @@ object ScaleOps {
     }
   }
 
-  /** Pin a CPU-dense EXPANSION stage's parallelism. AQE sizes reduce
-    * stages by shuffle BYTES, so a stage whose input is byte-small but
-    * whose work is quadratic in it — pair/grid expansion over
-    * aggregated id arrays, per-tile similarity kernels — gets
-    * coalesced onto 2-6 tasks while carrying seconds of CPU (measured:
-    * q202's C(50,2) expansion ran 7.1 s of CPU on 3 tasks). An
-    * explicit partition count is AQE-EXEMPT, so the expansion keeps
-    * `max(defaultParallelism, spark.sql.shuffle.partitions)` tasks —
-    * the pre-coalesce granularity — at any scale; the extra exchange
-    * moves only the aggregated arrays once.
-    *
-    * Keyed on `xxhash64(keys)`, NOT the keys themselves: a repartition
-    * by the upstream groupBy key is recognized as already-satisfied
-    * and ELIDED by the optimizer (observed in the r16 q202 before-
-    * plan), silently re-exposing the starved stage.
-    */
-  def fanExpansion(df: DataFrame, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
-    val n = math.max(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    df.repartition(n, xxhash64(keys: _*))
-  }
-
-  /** [[fanExpansion]]'s sibling for a CPU-dense aggregate/window whose
-    * OWN exchange is the one AQE starves: an explicit-N repartition on
-    * the operator's exact key SATISFIES its clustering requirement, so
-    * no second exchange is added — the shuffle that was already there
-    * becomes AQE-EXEMPT and keeps `max(defaultParallelism,
+  /** Pin a CPU-dense aggregate/window whose OWN exchange is the one AQE
+    * starves (AQE sizes reduce stages by shuffle bytes): an explicit-N
+    * repartition on the operator's exact key SATISFIES its clustering
+    * requirement, so no second exchange is added — the existing shuffle
+    * becomes AQE-EXEMPT with `max(defaultParallelism,
     * spark.sql.shuffle.partitions)` reduce tasks. Trade-off stated
     * loudly: partial (map-side) aggregation no longer combines below
     * the exchange — use ONLY where the key is near-unique (pair
-    * distincts, array-keyed group collapse), where map-side combining
-    * never removed anything anyway.
+    * distincts, array-keyed group collapse). That precondition is key
+    * uniqueness, which a planner rule cannot see, so this stays a
+    * hand-placed hint; expansion kernels are pinned by
+    * [[graft.plans.ExpansionFanout]].
     */
   def pinKeyed(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession

@@ -92,12 +92,6 @@ object SetSimJoin {
       .join(gSlim.select(col("gid").as("id_b"), col("hs").as("hb"),
         col("sz").as("sb"), col("members").as("mb")), "id_b")
       .filter(col("sa") * den >= col("sb") * num && col("sb") * den >= col("sa") * num)
-      // r16: pin the verification stage's parallelism — the candidate
-      // rows are byte-small keys so AQE coalesced the stage onto 2
-      // tasks, but it runs graft_intersect_count over the two shingle
-      // arrays per pair (q128: 1.4 s CPU on 2 tasks measured). The
-      // exchange moves each surviving pair's arrays once.
-      .transform(d => ScaleOps.fanExpansion(d, col("id_a"), col("id_b")))
       .withColumn("_it",
         call_function("graft_intersect_count", col("ha"), col("hb")).cast("long"))
       .filter(col("_it") * den >= (col("sa") + col("sb") - col("_it")) * num)

@@ -44,10 +44,6 @@ object AnalyticsQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))
@@ -68,11 +64,7 @@ object AnalyticsQueries {
       val wedges = oriented.groupBy("u")
         .agg(sort_array(collect_list(col("w"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the wedge-expansion parallelism + compiled pair
-        // kernel (the interpreted transform/slice HOF chain copied the
-        // id-array tail once per outer index — the same swap the other
-        // pair paths got in r15; explode keeps the u carry column)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("u")))
+        // compiled pair kernel; explode keeps the u carry column
         .select(col("u"),
           explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .select(col("u"), col("p.a").as("pa"), col("p.b").as("pb"))
@@ -131,10 +123,6 @@ object AnalyticsQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))
@@ -1211,10 +1199,6 @@ object AnalyticsQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))
@@ -1772,8 +1756,6 @@ object AnalyticsQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("p_brand"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the expansion stage's parallelism (see ScaleOps)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_str", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("nij"))

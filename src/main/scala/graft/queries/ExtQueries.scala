@@ -557,8 +557,6 @@ object ExtQueries {
         // singleton baskets produce no pairs — and sequence(1, 0)
         // DESCENDS in Spark, so they must not reach the enumerator
         .filter(size(col("ids")) >= 2)
-        // r16: pin the expansion stage's parallelism (see ScaleOps)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .select(col("p.a").as("pa"), col("p.b").as("pb"))
         .groupBy("pa", "pb").agg(count(lit(1)).as("cnt"))
@@ -1888,10 +1886,6 @@ object ExtQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))
@@ -1912,8 +1906,6 @@ object ExtQueries {
       val wedges = oriented.groupBy("u")
         .agg(sort_array(collect_list(col("w"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the wedge-expansion stage's parallelism (see ScaleOps)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("u")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .select(col("p.a").as("pa"), col("p.b").as("pb"))
       val tri = wedges.join(pairs, Seq("pa", "pb"))
@@ -1967,10 +1959,6 @@ object ExtQueries {
       val pairCnt = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cab"))

@@ -1234,8 +1234,6 @@ object InferQueries {
         .groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("p_brand"))).as("ids"))
         .filter(size(col("ids")) >= 3)
-        // r16: pin the O(basket³) expansion's parallelism (see ScaleOps)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_triples", col("ids"))).as("t"))
         .groupBy(col("t.a").as("pa"), col("t.b").as("pb"), col("t.c").as("pc"))
         .agg(count(lit(1)).as("support"))

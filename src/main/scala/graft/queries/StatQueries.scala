@@ -867,8 +867,9 @@ object StatQueries {
         .select(col("p.i").as("i"), col("p.j").as("j"), col("p.pq").as("pq"))
         .groupBy("i", "j").agg(sum("pq").as("sxy"))
       // r16: the iteration state is a d-row vector over a d×d matrix —
-      // bounded by the embedding WIDTH, never the corpus (d ≤ 4096
-      // enforced below, the VERDICT-r15 scale guard). Collect both
+      // bounded by the embedding WIDTH, never the corpus (d ≤ 1024
+      // enforced below, BEFORE the d(d+1)/2 pq rows reach the driver:
+      // ~525k rows at the bound, where 4096 allowed ~8.4M). Collect both
       // aggregates once and run the 12 quantized rounds driver-side —
       // the public RowMatrix.computePrincipalComponents shape:
       // distribute the Gram accumulation (the only O(corpus) stage),
@@ -883,11 +884,11 @@ object StatQueries {
       // sums (order-free) — so the result is bit-identical; the
       // DuckDB oracle replays all 12 rounds independently and gates it.
       val dimRows = dims.select(col("i"), col("sx"), col("n")).collect()
+      val d = dimRows.length
+      require(d <= 1024,
+        s"q192_pca_power: embedding dim $d exceeds the driver-side d*d bound")
       val pqRows = pq.select(col("i").cast("long").as("i"),
         col("j").cast("long").as("j"), col("sxy")).collect()
-      val d = dimRows.length
-      require(d <= 4096,
-        s"q192_pca_power: embedding dim $d exceeds the driver-side d*d bound")
       val idx = dimRows.map(_.getLong(0)).sorted
       val pos = idx.zipWithIndex.toMap
       val sxA = new Array[Long](d)
@@ -895,7 +896,12 @@ object StatQueries {
       dimRows.foreach { r =>
         val p = pos(r.getLong(0)); sxA(p) = r.getLong(1); nA(p) = r.getLong(2)
       }
-      // Spark Round(double, 0) semantics, exactly
+      // Spark Round(double, 0) semantics, exactly, while |x| < 2^53.
+      // Above 2^53 it can diverge from the old CAST(round(x) AS BIGINT)
+      // path: BigDecimal(x) holds x's shortest decimal string, not its
+      // binary value; the old path went back through a double and
+      // recovered the binary value, .toLong keeps the string's digits
+      // (an error below one ulp of x). The oracle replay gates the data.
       def rnd(x: Double): Long =
         BigDecimal(x).setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
       val a = Array.ofDim[Double](d, d)
@@ -1152,21 +1158,6 @@ object StatQueries {
       // consumer)
       cs.groupBy("c").agg(count(lit(1)).as("dc"),
           call_function("graft_top_k_longs", col("sp"), lit(50)).as("ss"))
-        // r16: pin the EXPANSION stage's parallelism. The aggregated
-        // top-k buffers are byte-small (≤50 longs per customer), so
-        // AQE coalesced the post-exchange stage to 3 partitions — but
-        // that stage also runs the C(50,2) pair expansion + partial
-        // pair counts: 7.1 s of CPU measured on 3 tasks (2.47 s wall).
-        // An explicit (AQE-exempt) repartition of the tiny aggregated
-        // rows fans the CPU-dense stage to the cores; map-side top-k
-        // partials upstream are untouched. Bytes moved: one extra pass
-        // of |customers|·k longs — trivial beside the stage it fixes.
-        // Keyed on xxhash64(c), not c itself: partitioning by the
-        // groupBy key is recognized as already-satisfied and the
-        // exchange is ELIDED (observed in the r16 before-plan), which
-        // re-exposes the 3-task AQE coalesce. A deterministic hash of
-        // the key spreads identically and survives optimization.
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("c")))
         // dc = 1 customers hold one supplier and expand to zero pairs,
         // but ANSI mode still evaluates w on their rows — and ln(1)=0
         // would divide by zero. The guard value never reaches a pair.
@@ -2031,11 +2022,6 @@ object StatQueries {
       val pairs = op
         .groupBy("o").agg(
           call_function("graft_top_k_longs", col("p"), lit(50)).as("ps"))
-        // r16: same pinned fan as q202 — the pair-expansion stage is
-        // CPU-dense over byte-small aggregated buffers, and AQE's
-        // byte-driven coalescing starves it of tasks (xxhash64 so the
-        // exchange isn't elided as same-key-as-groupBy)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("o")))
         .select(explode(call_function("graft_pairs_long", col("ps"))).as("pr"))
         .groupBy(col("pr.a").as("x"), col("pr.b").as("y"))
         .agg(count(lit(1)).as("support"))
@@ -2287,10 +2273,6 @@ object StatQueries {
       val pairs = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the basket-pair expansion's parallelism (AQE
-        // coalesces the byte-small basket arrays onto 2-3 tasks while
-        // the stage carries the O(basket²) explode + partial counts)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))
         .agg(count(lit(1)).as("cnt"))
@@ -2397,8 +2379,6 @@ object StatQueries {
       val p0 = items.groupBy("l_orderkey")
         .agg(sort_array(collect_list(col("l_partkey"))).as("ids"))
         .filter(size(col("ids")) >= 2)
-        // r16: pin the expansion stage's parallelism (see ScaleOps)
-        .transform(d => graft.operators.ScaleOps.fanExpansion(d, col("l_orderkey")))
         // compiled pair kernel instead of the interpreted HOF chain
         .select(explode(call_function("graft_pairs_long", col("ids"))).as("p"))
         .groupBy(col("p.a").as("pa"), col("p.b").as("pb"))

@@ -43,6 +43,8 @@ class GraftSessionSpec extends SparkSpec {
     graft.expressions.GraftExtensions.register(spark)
     assert(x.extraOptimizations == rules)
     assert(x.extraStrategies == strategies)
+    // the expansion rule rides the extensions' pre-CBO hook instead
+    assert(!rules.exists(_.isInstanceOf[graft.plans.ExpansionFanout]))
   }
 
   test("sweepDeadOwners: a live owner's dir survives however old, a dead owner's goes") {

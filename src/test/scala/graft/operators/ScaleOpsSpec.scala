@@ -198,4 +198,31 @@ class ScaleOpsSpec extends SparkSpec {
         s"$t: replica keys must stay disjoint even with a too-small requested offset")
     }
   }
+
+  test("fanIfNarrow over a REBALANCE-hinted frame starts no Spark job") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def inGroup[T](tag: String)(body: => T): T = {
+      sc.setJobGroup(tag, tag)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(l)
+    try {
+      val df = spark.sql("SELECT /*+ REBALANCE */ id FROM range(1000)")
+      assert(inGroup("fan-probe")(ScaleOps.fanIfNarrow(df, col("id"))) eq df)
+      // the bus delivers in order: once the barrier job is seen, every
+      // job the probe started has been seen too
+      inGroup("fan-barrier")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 60000
+      while (!groups.contains("fan-barrier") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("fan-barrier"), "the barrier job never reached the listener")
+      assert(!groups.contains("fan-probe"), s"fanIfNarrow started jobs: $groups")
+    } finally sc.removeSparkListener(l)
+  }
 }

@@ -32,12 +32,11 @@ object Bench {
     def qNum(name: String): Int =
       name.drop(1).takeWhile(_.isDigit) match { case "" => Int.MaxValue; case d => d.toInt }
     // SPARK_GRAFT_ONLY_Q=q385,q386 measures just those queries (full
-    // name or exact qNN, SparkEntry.selects) — the freeze path for adding
+    // name or exact qNN, SparkEntry.selector) — the freeze path for adding
     // newly-landed queries to baseline_queries.json without a full run
-    val onlyQ = sys.env.get("SPARK_GRAFT_ONLY_Q")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val onlyQ = sys.env.get("SPARK_GRAFT_ONLY_Q").map(SparkEntry.selector)
     val selected = (onlyQ, maxQ) match {
-      case (Some(ps), _) => SparkEntry.queries.filter { case (n, _) => SparkEntry.selects(ps)(n) }
+      case (Some(picked), _) => SparkEntry.queries.filter { case (n, _) => picked(n) }
       case (_, Some(m)) => SparkEntry.queries.filter { case (n, _) => qNum(n) <= m }
       case _ => SparkEntry.queries
     }

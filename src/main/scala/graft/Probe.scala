@@ -17,7 +17,7 @@ package graft
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val picked = SparkEntry.selector(args(1))
     val flags = args.drop(2)
     val explain = flags.contains("explain")
     val showJobs = flags.contains("jobs")
@@ -51,7 +51,7 @@ object Probe {
           stageLog.add((si.stageId, si.numTasks, wall, tm.executorRunTime, detail))
         }
     })
-    for (q <- SparkEntry.allQueries.filter(q => SparkEntry.selects(names)(q.name))) {
+    for (q <- SparkEntry.allQueries.filter(q => picked(q.name))) {
       val times = (1 to 3).map { i =>
         if (showJobs && i == 3) { jobLog.clear(); stageLog.clear(); capture = true }
         val t0 = System.nanoTime()

@@ -58,4 +58,19 @@ object SparkEntry {
     */
   def selects(selector: Seq[String])(name: String): Boolean =
     selector.exists(p => p == name || p == shortName(name))
+
+  /** A comma-separated selector as Bench (`SPARK_GRAFT_ONLY_Q`), Probe and
+    * Verify take it, checked against the registry: an entry that picks
+    * no query (`q1` — the names are zero-padded `q01`) is an error that
+    * names it, never a silently smaller run.
+    */
+  def selector(spec: String): String => Boolean = {
+    val entries = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = allQueries.map(_.name)
+    val unmatched = entries.filterNot(e => names.exists(selects(Seq(e))))
+    if (unmatched.nonEmpty)
+      throw new IllegalArgumentException(
+        s"query selector entries match no query: ${unmatched.mkString(", ")}")
+    selects(entries)
+  }
 }

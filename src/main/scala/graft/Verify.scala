@@ -9,7 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated full names or qNNs for fast local
     // iteration (driver always calls with 2 args → full run)
     val nameFilter: String => Boolean =
-      if (args.length > 2) SparkEntry.selects(args(2).split(",").toSeq) else _ => true
+      if (args.length > 2) SparkEntry.selector(args(2)) else _ => true
     val spark = GraftSession.create()
     // Fail loudly BEFORE dumping anything if the testdata encoding
     // drifted (round-6 lesson: a silent ts mis-decode red-flagged 16

@@ -133,6 +133,26 @@ object DeltaLogOps {
       .drop("_rn", "is_add")
   }
 
+  /** The live-set aggregate over the latest action per (table, path)
+    * — `is_add`, `size`, `n_rows`, `pvals` per row: live and tombstoned
+    * file counts, live bytes and rows, live files without stats, live
+    * partitions. Every snapshot census groups by `tbl` with it.
+    */
+  private val liveSetAgg: Seq[Column] = Seq(
+    sum(col("is_add").cast("long")).as("n_live"),
+    sum((!col("is_add")).cast("long")).as("n_tombstones"),
+    sum(when(col("is_add"), col("size"))).as("live_bytes"),
+    sum(when(col("is_add"), col("n_rows"))).as("live_rows"),
+    sum((col("is_add") && col("n_rows").isNull).cast("long")).as("n_live_no_stats"),
+    count_distinct(when(col("is_add"), col("pvals"))).as("n_partitions"))
+
+  /** The live-set columns after the left join onto the table set, zero
+    * for a table with no live action.
+    */
+  private val liveSetCols: Seq[Column] =
+    Seq("n_live", "n_tombstones", "live_bytes", "live_rows", "n_live_no_stats",
+      "n_partitions").map(c => coalesce(col(c), lit(0L)).as(c))
+
   /** Snapshot census per table: versions, protocol, action tallies,
     * live-set size/bytes/rows, live partition count, and the honest
     * boundaries (`n_malformed` lines, `n_live_no_stats` files whose
@@ -166,26 +186,14 @@ object DeltaLogOps {
       .orderBy(col("ver").desc, col("is_add").desc)
     val state = acts.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
-      .groupBy("tbl").agg(
-        sum(col("is_add").cast("long")).as("n_live"),
-        sum((!col("is_add")).cast("long")).as("n_tombstones"),
-        sum(when(col("is_add"), col("size"))).as("live_bytes"),
-        sum(when(col("is_add"), col("n_rows"))).as("live_rows"),
-        sum((col("is_add") && col("n_rows").isNull).cast("long")).as("n_live_no_stats"),
-        count_distinct(when(col("is_add"), col("pvals"))).as("n_partitions"))
+      .groupBy("tbl").agg(liveSetAgg.head, liveSetAgg.tail: _*)
     lineAgg
       .join(state, Seq("tbl"), "left")
-      .select(col("tbl"),
+      .select((Seq(col("tbl"),
         col("n_lines"), col("n_versions"), col("n_malformed"),
         col("n_adds"), col("n_removes"),
         coalesce(col("min_reader"), lit(-1L)).as("min_reader"),
-        coalesce(col("min_writer"), lit(-1L)).as("min_writer"),
-        coalesce(col("n_live"), lit(0L)).as("n_live"),
-        coalesce(col("n_tombstones"), lit(0L)).as("n_tombstones"),
-        coalesce(col("live_bytes"), lit(0L)).as("live_bytes"),
-        coalesce(col("live_rows"), lit(0L)).as("live_rows"),
-        coalesce(col("n_live_no_stats"), lit(0L)).as("n_live_no_stats"),
-        coalesce(col("n_partitions"), lit(0L)).as("n_partitions"))
+        coalesce(col("min_writer"), lit(-1L)).as("min_writer")) ++ liveSetCols): _*)
   }
 
   /** Table-level prune audit over the reconstructed snapshot — the
@@ -306,28 +314,16 @@ object DeltaLogOps {
     val proto = state.filter(col("kind") === "proto")
       .select(col("tbl"), col("min_reader"), col("min_writer"))
     val live = state.filter(col("kind") === "act")
-      .groupBy("tbl").agg(
-        sum(col("is_add").cast("long")).as("n_live"),
-        sum((!col("is_add")).cast("long")).as("n_tombstones"),
-        sum(when(col("is_add"), col("size"))).as("live_bytes"),
-        sum(when(col("is_add"), col("n_rows"))).as("live_rows"),
-        sum((col("is_add") && col("n_rows").isNull).cast("long")).as("n_live_no_stats"),
-        count_distinct(when(col("is_add"), col("pvals"))).as("n_partitions"))
+      .groupBy("tbl").agg(liveSetAgg.head, liveSetAgg.tail: _*)
     tally
       .join(vers, Seq("tbl"), "left")
       .join(proto, Seq("tbl"), "left")
       .join(live, Seq("tbl"), "left")
-      .select(col("tbl"),
+      .select((Seq(col("tbl"),
         col("n_lines"), coalesce(col("n_versions"), lit(0L)).as("n_versions"),
         col("n_malformed"), col("n_adds"), col("n_removes"),
         coalesce(col("min_reader"), lit(-1L)).as("min_reader"),
-        coalesce(col("min_writer"), lit(-1L)).as("min_writer"),
-        coalesce(col("n_live"), lit(0L)).as("n_live"),
-        coalesce(col("n_tombstones"), lit(0L)).as("n_tombstones"),
-        coalesce(col("live_bytes"), lit(0L)).as("live_bytes"),
-        coalesce(col("live_rows"), lit(0L)).as("live_rows"),
-        coalesce(col("n_live_no_stats"), lit(0L)).as("n_live_no_stats"),
-        coalesce(col("n_partitions"), lit(0L)).as("n_partitions"))
+        coalesce(col("min_writer"), lit(-1L)).as("min_writer")) ++ liveSetCols): _*)
   }
 
   /** Continuous log replay: each micro-batch of arriving commit lines
@@ -677,13 +673,7 @@ object DeltaLogOps {
       .orderBy(col("ver").desc, col("is_add").desc)
     val state = acts.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
-      .groupBy("tbl").agg(
-        sum(col("is_add").cast("long")).as("n_live"),
-        sum((!col("is_add")).cast("long")).as("n_tombstones"),
-        sum(when(col("is_add"), col("size"))).as("live_bytes"),
-        sum(when(col("is_add"), col("n_rows"))).as("live_rows"),
-        sum((col("is_add") && col("n_rows").isNull).cast("long")).as("n_live_no_stats"),
-        count_distinct(when(col("is_add"), col("pvals"))).as("n_partitions"))
+      .groupBy("tbl").agg(liveSetAgg.head, liveSetAgg.tail: _*)
     // base table set: a fully-vacuumed quiet table exists ONLY in its
     // checkpoint; a never-checkpointed one only in the log
     val base = p.select(col("tbl"), col("ckpt_ver"))
@@ -694,7 +684,7 @@ object DeltaLogOps {
       .join(pre, Seq("tbl"), "left")
       .join(postTally, Seq("tbl"), "left")
       .join(state, Seq("tbl"), "left")
-      .select(col("tbl"),
+      .select((Seq(col("tbl"),
         col("ckpt_ver"),
         coalesce(col("n_ckpt_adds"), lit(0L)).as("n_ckpt_adds"),
         coalesce(col("n_ckpt_removes"), lit(0L)).as("n_ckpt_removes"),
@@ -707,13 +697,7 @@ object DeltaLogOps {
         coalesce(col("n_post_adds"), lit(0L)).as("n_post_adds"),
         coalesce(col("n_post_removes"), lit(0L)).as("n_post_removes"),
         coalesce(col("post_reader"), col("ckpt_reader"), lit(-1L)).as("min_reader"),
-        coalesce(col("post_writer"), col("ckpt_writer"), lit(-1L)).as("min_writer"),
-        coalesce(col("n_live"), lit(0L)).as("n_live"),
-        coalesce(col("n_tombstones"), lit(0L)).as("n_tombstones"),
-        coalesce(col("live_bytes"), lit(0L)).as("live_bytes"),
-        coalesce(col("live_rows"), lit(0L)).as("live_rows"),
-        coalesce(col("n_live_no_stats"), lit(0L)).as("n_live_no_stats"),
-        coalesce(col("n_partitions"), lit(0L)).as("n_partitions"))
+        coalesce(col("post_writer"), col("ckpt_writer"), lit(-1L)).as("min_writer")) ++ liveSetCols): _*)
   }
 
   /** `_last_checkpoint` pointer audit: the one-line JSON file at the

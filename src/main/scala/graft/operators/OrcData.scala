@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import TfRecordOps.{lenDelimited, pbTag, skipValue}
+import OrcOps.message
+import TfRecordOps.{lenDelimited, pbTag}
 
 /** ORC column DATA decode — the layer below [[OrcOps]]'s tail /
   * stripe-stats walk, mirroring what [[ParquetPages]] did for
@@ -51,7 +52,7 @@ object OrcData {
     * `codec`: 0 none (identity), 1 zlib, 2 snappy, 5 zstd; anything
     * else throws (gated by the caller before this point).
     */
-  private def deframe(bytes: Array[Byte], off: Int, end: Int,
+  private[operators] def deframe(bytes: Array[Byte], off: Int, end: Int,
       codec: Long): Array[Byte] = {
     if (codec == 0L) return java.util.Arrays.copyOfRange(bytes, off, end)
     val out = new java.io.ByteArrayOutputStream()
@@ -261,71 +262,15 @@ object OrcData {
   // structural failure
   private object GatedSignal extends Exception with scala.util.control.NoStackTrace
 
-  private final case class Tail(codec: Long,
-      stripes: Vector[(Long, Long, Long, Long, Long)], kinds: Vector[Long])
-
-  /** Postscript + footer walk shared by the int and string decoders:
-    * codec, stripe list, type kinds in preorder. Throws Malformed on
-    * structure, GatedSignal on an unsupported codec.
+  /** The tail as the column decoders read it ([[OrcOps.tail]]): codec and
+    * footer, with no postscript-magic check and any de-framed footer.
+    * Throws Malformed on structure, GatedSignal on an unsupported codec.
     */
-  private def parseTail(bytes: Array[Byte]): Tail = {
-    val n = bytes.length
-    if (n < 8 || bytes(0) != 'O' || bytes(1) != 'R' || bytes(2) != 'C')
-      throw Malformed
-    val psLen = bytes(n - 1) & 0xff
-    if (psLen < 1 || psLen > n - 4) throw Malformed
-    val ps = new ByteCursor(bytes, n - 1 - psLen, n - 1)
-    var footerLen = 0L; var codec = -1L
-    while (ps.hasMore) {
-      val t = ps.varint()
-      (((t >>> 3).toInt, (t & 7).toInt)) match {
-        case (1, 0) => footerLen = ps.varint()
-        case (2, 0) => codec = ps.varint()
-        case (_, w) => skipValue(ps, w)
-      }
-    }
-    if (codec < 0 || footerLen <= 0 ||
-      footerLen > n.toLong - 1 - psLen - 3) throw Malformed
-    if (codec != 0L && codec != 1L && codec != 2L && codec != 5L)
-      throw GatedSignal // lzo/lz4/other: declined
-    val fRaw = deframe(bytes, n - 1 - psLen - footerLen.toInt,
-      n - 1 - psLen, codec)
-    val f = new ByteCursor(fRaw, 0, fRaw.length)
-    val stripes = Vector.newBuilder[(Long, Long, Long, Long, Long)]
-    val kinds = Vector.newBuilder[Long]
-    while (f.hasMore) {
-      val t = f.varint()
-      (((t >>> 3).toInt, (t & 7).toInt)) match {
-        case (3, 2) =>
-          val s = lenDelimited(f)
-          var o = 0L; var il = 0L; var dl = 0L; var fl = 0L; var rows = 0L
-          while (s.hasMore) {
-            val st = s.varint()
-            (((st >>> 3).toInt, (st & 7).toInt)) match {
-              case (1, 0) => o = s.varint()
-              case (2, 0) => il = s.varint()
-              case (3, 0) => dl = s.varint()
-              case (4, 0) => fl = s.varint()
-              case (5, 0) => rows = s.varint()
-              case (_, w) => skipValue(s, w)
-            }
-          }
-          stripes += ((o, il, dl, fl, rows))
-        case (4, 2) =>
-          val ty = lenDelimited(f)
-          var kind = 0L
-          while (ty.hasMore) {
-            val tt = ty.varint()
-            (((tt >>> 3).toInt, (tt & 7).toInt)) match {
-              case (1, 0) => kind = ty.varint()
-              case (_, w) => skipValue(ty, w)
-            }
-          }
-          kinds += kind
-        case (_, w) => skipValue(f, w)
-      }
-    }
-    Tail(codec, stripes.result(), kinds.result())
+  private def readTail(bytes: Array[Byte]): (Long, OrcOps.Footer) = {
+    val t = OrcOps.tail(bytes).getOrElse(throw Malformed)
+    if (t.codec < 0 || t.footerLen <= 0 || !t.footerFits) throw Malformed
+    if (!OrcOps.Deframed(t.codec)) throw GatedSignal // lzo/lz4/other: declined
+    (t.codec, t.footer.filter(_.kindsOk).getOrElse(throw Malformed))
   }
 
   /** One stripe's footer: the stream directory (kind, column, length)
@@ -336,36 +281,29 @@ object OrcData {
     val sf = new ByteCursor(sfRaw, 0, sfRaw.length)
     val streams = Vector.newBuilder[(Long, Long, Long)]
     val encodings = Vector.newBuilder[(Long, Long)]
-    while (sf.hasMore) {
-      val t = sf.varint()
-      (((t >>> 3).toInt, (t & 7).toInt)) match {
-        case (1, 2) =>
-          val sr = lenDelimited(sf)
-          var kind = 0L; var colId = 0L; var length = 0L
-          while (sr.hasMore) {
-            val st = sr.varint()
-            (((st >>> 3).toInt, (st & 7).toInt)) match {
-              case (1, 0) => kind = sr.varint()
-              case (2, 0) => colId = sr.varint()
-              case (3, 0) => length = sr.varint()
-              case (_, w) => skipValue(sr, w)
-            }
-          }
-          streams += ((kind, colId, length))
-        case (2, 2) =>
-          val er = lenDelimited(sf)
-          var ek = 0L; var ds = 0L
-          while (er.hasMore) {
-            val et = er.varint()
-            (((et >>> 3).toInt, (et & 7).toInt)) match {
-              case (1, 0) => ek = er.varint()
-              case (2, 0) => ds = er.varint()
-              case (_, w) => skipValue(er, w)
-            }
-          }
-          encodings += ((ek, ds))
-        case (_, w) => skipValue(sf, w)
-      }
+    message(sf) {
+      case (1, 2) =>
+        val sr = lenDelimited(sf)
+        var kind = 0L; var colId = 0L; var length = 0L
+        message(sr) {
+          case (1, 0) => kind = sr.varint(); true
+          case (2, 0) => colId = sr.varint(); true
+          case (3, 0) => length = sr.varint(); true
+          case _ => false
+        }
+        streams += ((kind, colId, length))
+        true
+      case (2, 2) =>
+        val er = lenDelimited(sf)
+        var ek = 0L; var ds = 0L
+        message(er) {
+          case (1, 0) => ek = er.varint(); true
+          case (2, 0) => ds = er.varint(); true
+          case _ => false
+        }
+        encodings += ((ek, ds))
+        true
+      case _ => false
     }
     (streams.result(), encodings.result())
   }
@@ -392,57 +330,67 @@ object OrcData {
     out.result()
   }
 
-  /** Decode the `colIdx`-th TOP-LEVEL column (0-based among the root
-    * struct's children; ORC column ids are the tree preorder, so the
-    * target id is colIdx + 1 for a flat schema) of an ORC file.
+  /** The stripe loop both column decoders share, over the `colIdx`-th
+    * TOP-LEVEL column (0-based among the root struct's children; ORC
+    * column ids are the tree preorder, so the target id is colIdx + 1
+    * for a flat schema): the type gate, stripe bounds, the stripe
+    * footer's stream directory, the column's encoding gate, its
+    * streams, and the PRESENT decode with the null tally. `decode`
+    * gets the column's (encoding kind, dictionary size), its streams
+    * and the stripe's non-null count, and decodes and folds its values.
+    * Returns (stripes, non-null values, nulls); throws Malformed or
+    * GatedSignal.
+    */
+  private def walkStripes(bytes: Array[Byte], colIdx: Int, typeKinds: Set[Long],
+      encodings: Set[Long])(decode: ((Long, Long), Map[Long, Array[Byte]], Int) => Unit):
+      (Int, Long, Long) = {
+    val (codec, footer) = readTail(bytes)
+    // flat schema: root STRUCT (kind 12) + its leaves in preorder
+    if (footer.kinds.isEmpty || footer.kinds.head != 12L) throw GatedSignal
+    val targetCol = colIdx + 1
+    if (targetCol >= footer.kinds.size) throw Malformed
+    if (!typeKinds(footer.kinds(targetCol))) throw GatedSignal
+    var nVals = 0L; var nNulls = 0L
+    for (s <- footer.stripes) {
+      val dataEnd = s.offset + s.indexLength + s.dataLength
+      if (s.offset < 0 || s.footerLength <= 0 ||
+        dataEnd + s.footerLength > bytes.length.toLong) throw Malformed
+      val (streams, encs) = stripeDirectory(deframe(bytes, dataEnd.toInt,
+        (dataEnd + s.footerLength).toInt, codec))
+      if (targetCol >= encs.size) throw Malformed
+      if (!encodings(encs(targetCol)._1)) throw GatedSignal
+      val cs = columnStreams(bytes, codec, s.offset + s.indexLength, streams, targetCol)
+      val bools: Array[Boolean] = cs.get(0L) match {
+        case Some(present) => booleanRle(present, s.rows.toInt)
+        case None => Array.fill(s.rows.toInt)(true)
+      }
+      val nNonNull = bools.count(identity)
+      decode(encs(targetCol), cs, nNonNull)
+      nVals += nNonNull
+      nNulls += s.rows - nNonNull
+    }
+    (footer.stripes.size, nVals, nNulls)
+  }
+
+  /** Decode the `colIdx`-th top-level SHORT/INT/LONG column: DIRECT_V2
+    * (integer RLEv2) only — DIRECT (RLEv1) and DICTIONARY* are declined.
     */
   def decodeIntFile(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): OrcDecode = {
+    val fold = new ValueFold
+    val keep = if (keepValues) Array.newBuilder[Long] else null
     try {
-      val tail = parseTail(bytes)
-      // flat schema: root STRUCT (kind 12) + its leaves in preorder
-      if (tail.kinds.isEmpty || tail.kinds.head != 12L) return Gated
-      val targetCol = colIdx + 1
-      if (targetCol >= tail.kinds.size) return Bad
-      val k = tail.kinds(targetCol) // SHORT 2 / INT 3 / LONG 4
-      if (k != 2L && k != 3L && k != 4L) return Gated
-      var nVals = 0L; var nNulls = 0L
-      var minV = Long.MaxValue; var maxV = Long.MinValue; var sum = 0L
-      val keep = if (keepValues) Array.newBuilder[Long] else null
-      for ((sOff, sIdx, sData, sFoot, sRows) <- tail.stripes) {
-        if (sOff < 0 || sFoot <= 0 ||
-          sOff + sIdx + sData + sFoot > bytes.length.toLong) throw Malformed
-        val (streams, encodings) = stripeDirectory(deframe(bytes,
-          (sOff + sIdx + sData).toInt,
-          (sOff + sIdx + sData + sFoot).toInt, tail.codec))
-        if (targetCol >= encodings.size) throw Malformed
-        // DIRECT_V2 = 2 is the integer RLEv2 encoding; DIRECT (RLEv1)
-        // and DICTIONARY* are declined
-        if (encodings(targetCol)._1 != 2L) return Gated
-        val cs = columnStreams(bytes, tail.codec, sOff + sIdx, streams, targetCol)
-        val bools: Array[Boolean] = cs.get(0L) match {
-          case Some(present) => booleanRle(present, sRows.toInt)
-          case None => Array.fill(sRows.toInt)(true)
+      val (nStripes, nVals, nNulls) =
+        walkStripes(bytes, colIdx, Set(2L, 3L, 4L), Set(2L)) { (_, cs, nNonNull) =>
+          val vals =
+            if (nNonNull == 0) Array.emptyLongArray
+            else rleV2(cs.getOrElse(1L, throw Malformed), nNonNull, signed = true)
+          var i = 0
+          while (i < vals.length) { fold.add(vals(i)); i += 1 }
+          if (keep != null) keep ++= vals
         }
-        val nNonNull = bools.count(identity)
-        val vals =
-          if (nNonNull == 0) Array.emptyLongArray
-          else rleV2(cs.getOrElse(1L, throw Malformed), nNonNull, signed = true)
-        var i = 0
-        while (i < vals.length) {
-          val v = vals(i)
-          sum += v
-          if (v < minV) minV = v
-          if (v > maxV) maxV = v
-          i += 1
-        }
-        if (keep != null) keep ++= vals
-        nVals += nNonNull
-        nNulls += sRows - nNonNull
-      }
-      OrcDecode(1, 0, tail.stripes.size, nVals, nNulls,
-        if (nVals == 0) 0L else minV, if (nVals == 0) 0L else maxV, sum,
-        if (keep == null) null else keep.result())
+      OrcDecode(1, 0, nStripes, nVals, nNulls, fold.min(nVals), fold.max(nVals),
+        fold.total, if (keep == null) null else keep.result())
     } catch {
       case GatedSignal => Gated
       case Malformed => Bad
@@ -465,73 +413,47 @@ object OrcData {
 
   def decodeStringFile(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): OrcBinDecode = {
+    val fold = new ValueFold
+    var nDict = 0L
+    val keep = if (keepValues) Array.newBuilder[Array[Byte]] else null
+    def slice(blob: Array[Byte], lens: Array[Long]): Array[Array[Byte]] = {
+      var q = 0
+      lens.map { len =>
+        if (len < 0 || len > blob.length - q) throw Malformed
+        val v = java.util.Arrays.copyOfRange(blob, q, q + len.toInt)
+        q += len.toInt
+        v
+      }
+    }
     try {
-      val tail = parseTail(bytes)
-      if (tail.kinds.isEmpty || tail.kinds.head != 12L) return BinGatedOrc
-      val targetCol = colIdx + 1
-      if (targetCol >= tail.kinds.size) return BinBadOrc
-      val k = tail.kinds(targetCol) // STRING 7 / BINARY 8 / VARCHAR 16 / CHAR 17
-      if (k != 7L && k != 8L && k != 16L && k != 17L) return BinGatedOrc
-      var nVals = 0L; var nNulls = 0L; var nDict = 0L
-      var minLen = Long.MaxValue; var maxLen = Long.MinValue; var sumLen = 0L
-      val keep = if (keepValues) Array.newBuilder[Array[Byte]] else null
-      def slice(blob: Array[Byte], lens: Array[Long]): Array[Array[Byte]] = {
-        var q = 0
-        lens.map { len =>
-          if (len < 0 || len > blob.length - q) throw Malformed
-          val v = java.util.Arrays.copyOfRange(blob, q, q + len.toInt)
-          q += len.toInt
-          v
+      // STRING 7 / BINARY 8 / VARCHAR 16 / CHAR 17; DIRECT_V2 2 / DICTIONARY_V2 3
+      val (nStripes, nVals, nNulls) =
+        walkStripes(bytes, colIdx, Set(7L, 8L, 16L, 17L), Set(2L, 3L)) {
+          case ((encKind, dictSize), cs, nNonNull) =>
+            val vals: Array[Array[Byte]] =
+              if (nNonNull == 0) Array.empty
+              else if (encKind == 2L) { // DIRECT_V2: lengths slice the blob
+                val lens = rleV2(cs.getOrElse(2L, throw Malformed), nNonNull,
+                  signed = false)
+                slice(cs.getOrElse(1L, Array.emptyByteArray), lens)
+              } else { // DICTIONARY_V2
+                val dictLens = rleV2(cs.getOrElse(2L, throw Malformed),
+                  dictSize.toInt, signed = false)
+                val dict = slice(cs.getOrElse(3L, Array.emptyByteArray), dictLens)
+                nDict += dict.length
+                val idxs = rleV2(cs.getOrElse(1L, throw Malformed), nNonNull,
+                  signed = false)
+                idxs.map { i =>
+                  if (i < 0 || i >= dict.length) throw Malformed
+                  dict(i.toInt)
+                }
+              }
+            var i = 0
+            while (i < vals.length) { fold.add(vals(i).length.toLong); i += 1 }
+            if (keep != null) keep ++= vals
         }
-      }
-      for ((sOff, sIdx, sData, sFoot, sRows) <- tail.stripes) {
-        if (sOff < 0 || sFoot <= 0 ||
-          sOff + sIdx + sData + sFoot > bytes.length.toLong) throw Malformed
-        val (streams, encodings) = stripeDirectory(deframe(bytes,
-          (sOff + sIdx + sData).toInt,
-          (sOff + sIdx + sData + sFoot).toInt, tail.codec))
-        if (targetCol >= encodings.size) throw Malformed
-        val (encKind, dictSize) = encodings(targetCol)
-        if (encKind != 2L && encKind != 3L) return BinGatedOrc // v2 only
-        val cs = columnStreams(bytes, tail.codec, sOff + sIdx, streams, targetCol)
-        val bools: Array[Boolean] = cs.get(0L) match {
-          case Some(present) => booleanRle(present, sRows.toInt)
-          case None => Array.fill(sRows.toInt)(true)
-        }
-        val nNonNull = bools.count(identity)
-        val vals: Array[Array[Byte]] =
-          if (nNonNull == 0) Array.empty
-          else if (encKind == 2L) { // DIRECT_V2: lengths slice the blob
-            val lens = rleV2(cs.getOrElse(2L, throw Malformed), nNonNull,
-              signed = false)
-            slice(cs.getOrElse(1L, Array.emptyByteArray), lens)
-          } else { // DICTIONARY_V2
-            val dictLens = rleV2(cs.getOrElse(2L, throw Malformed),
-              dictSize.toInt, signed = false)
-            val dict = slice(cs.getOrElse(3L, Array.emptyByteArray), dictLens)
-            nDict += dict.length
-            val idxs = rleV2(cs.getOrElse(1L, throw Malformed), nNonNull,
-              signed = false)
-            idxs.map { i =>
-              if (i < 0 || i >= dict.length) throw Malformed
-              dict(i.toInt)
-            }
-          }
-        var i = 0
-        while (i < vals.length) {
-          val len = vals(i).length.toLong
-          sumLen += len
-          if (len < minLen) minLen = len
-          if (len > maxLen) maxLen = len
-          i += 1
-        }
-        if (keep != null) keep ++= vals
-        nVals += nNonNull
-        nNulls += sRows - nNonNull
-      }
-      OrcBinDecode(1, 0, tail.stripes.size, nDict, nVals, nNulls, sumLen,
-        if (nVals == 0) 0L else minLen, if (nVals == 0) 0L else maxLen,
-        if (keep == null) null else keep.result())
+      OrcBinDecode(1, 0, nStripes, nDict, nVals, nNulls, fold.total,
+        fold.min(nVals), fold.max(nVals), if (keep == null) null else keep.result())
     } catch {
       case GatedSignal => BinGatedOrc
       case Malformed => BinBadOrc

@@ -23,6 +23,10 @@ import org.apache.spark.sql.DataFrame
   * declared lengths) and sets `footer_parsed = 0` rather than
   * guessing at compressed bytes.
   *
+  * The postscript and footer are walked once, by [[tail]], for this
+  * census, [[stripeStatsCensus]] and [[OrcData]]'s column decoders;
+  * each applies its own acceptance rule to the [[Tail]] it returns.
+  *
   * Shares the protobuf wire machinery with the tf.Example census
   * (TfRecordOps.lenDelimited/skipValue over a ByteCursor): varint tags, structural skip of every
   * untargeted field — real writer footers carry statistics and
@@ -67,112 +71,197 @@ object OrcOps {
   private val Kinds = Map(0L -> "none", 1L -> "zlib", 2L -> "snappy",
     3L -> "lzo", 4L -> "lz4", 5L -> "zstd")
 
-  def parse(bytes: Array[Byte]): OrcMeta = {
+  /** The codecs whose compression chunks [[OrcData.deframe]] reads:
+    * none, zlib, snappy, zstd.
+    */
+  private[operators] val Deframed = Set(0L, 1L, 2L, 5L)
+
+  /** One StripeInformation: offset, the index/data/footer lengths and
+    * the row count (0 when absent; a repeated field keeps its last
+    * value).
+    */
+  final case class Stripe(offset: Long, indexLength: Long, dataLength: Long,
+      footerLength: Long, rows: Long)
+
+  /** Footer.statistics folded over every ColumnStatistics entry, as the
+    * tail census counts them: value counts summed, hasNull flags and
+    * IntegerStatistics counted, min-of-mins and max-of-maxes
+    * (Long.MaxValue / Long.MinValue when there are none).
+    */
+  final case class StatsFold(nColStats: Int, values: Long, nHasNull: Int,
+      nIntStats: Int, intMin: Long, intMax: Long)
+
+  /** The Footer, walked once. `stripeBytes` sums the stripes'
+    * (index, data, footer) lengths over every field occurrence and
+    * `offsetsMonotonic` holds iff every offset exceeds the one before.
+    * `kindsOk`/`statsOk` record a fault inside a Type or a
+    * ColumnStatistics message: the column decoders alone read the
+    * types and the tail census alone reads the statistics, so a fault
+    * there fails only that reader.
+    */
+  final case class Footer(contentLength: Long, numRows: Long,
+      stripes: Vector[Stripe], stripeBytes: (Long, Long, Long),
+      offsetsMonotonic: Boolean, kinds: Vector[Long], kindsOk: Boolean,
+      stats: StatsFold, statsOk: Boolean)
+
+  /** One ORC tail: the postscript fields (codec -1 when absent), whether
+    * the postscript carries the "ORC" magic, and the footer. The footer
+    * is read (de-framed first when compressed) only under a
+    * [[Deframed]] codec and a positive length that fits; None then
+    * means its wire or framing is broken. Each consumer applies its own
+    * rule to these facts: the tail census needs the magic and reads
+    * only an uncompressed footer, the column decoders skip the magic
+    * and read any de-framed one.
+    */
+  final case class Tail(fileLen: Int, psLen: Int, footerLen: Long, codec: Long,
+      metadataLen: Long, writerVersion: Long, magicOk: Boolean,
+      footer: Option[Footer]) {
+    /** The declared footer fits between the head magic and the postscript. */
+    def footerFits: Boolean = footerLen <= fileLen.toLong - 1 - psLen - 3
+    def footerStart: Int = fileLen - 1 - psLen - footerLen.toInt
+  }
+
+  /** Walk one protobuf message: `onField(field, wire)` reads a value it
+    * targets and returns true; every other value is skipped.
+    */
+  private[operators] def message(c: ByteCursor)(onField: (Int, Int) => Boolean): Unit =
+    while (c.hasMore) {
+      val t = c.varint()
+      val wire = (t & 7).toInt
+      if (!onField((t >>> 3).toInt, wire)) skipValue(c, wire)
+    }
+
+  /** The one postscript + footer walk. None = no head magic, a
+    * postscript length outside the buffer, or a postscript wire fault
+    * — every consumer's fail-closed zero.
+    */
+  def tail(bytes: Array[Byte]): Option[Tail] = {
     val n = bytes.length
-    if (n < 8 || bytes(0) != 'O' || bytes(1) != 'R' || bytes(2) != 'C')
-      return Invalid
+    if (n < 8 || !Bytes.tag(bytes, 0, "ORC")) return None
     val psLen = bytes(n - 1) & 0xff
     // postscript must fit after the head magic (subtraction form)
-    if (psLen < 1 || psLen > n - 4) return Invalid
+    if (psLen < 1 || psLen > n - 4) return None
     try {
       val ps = new ByteCursor(bytes, n - 1 - psLen, n - 1)
-      var footerLen = 0L; var comp = -1L; var metaLen = 0L
+      var footerLen = 0L; var codec = -1L; var metaLen = 0L
       var writerVer = 0L; var magicOk = false
-      while (ps.hasMore) {
-        val tag = ps.varint()
-        val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
-        (field, wire) match {
-          case (1, 0) => footerLen = ps.varint()
-          case (2, 0) => comp = ps.varint()
-          case (5, 0) => metaLen = ps.varint()
-          case (6, 0) => writerVer = ps.varint()
-          case (8000, 2) =>
-            val m = lenDelimited(ps)
-            magicOk = m.remaining == 3 && Bytes.tag(bytes, m.pos, "ORC")
-          case _ => skipValue(ps, wire)
-        }
+      message(ps) {
+        case (1, 0) => footerLen = ps.varint(); true
+        case (2, 0) => codec = ps.varint(); true
+        case (5, 0) => metaLen = ps.varint(); true
+        case (6, 0) => writerVer = ps.varint(); true
+        case (8000, 2) =>
+          val m = lenDelimited(ps)
+          magicOk = m.remaining == 3 && Bytes.tag(bytes, m.pos, "ORC")
+          true
+        case _ => false
       }
-      if (!magicOk || comp < 0) return Invalid
-      // footer precedes the postscript; must fit after the head magic
-      if (footerLen < 0 || footerLen > n.toLong - 1 - psLen - 3) return Invalid
-      val compression = Kinds.getOrElse(comp, "other")
-      var footerParsed = 0
-      var nStripes = 0; var numRows = 0L; var stripeRows = 0L
-      var nTypes = 0; var contentLen = 0L
-      var idxBytes = 0L; var dataBytes = 0L; var sfBytes = 0L
-      var rowsMin = Long.MaxValue; var rowsMax = 0L
-      var lastOffset = -1L; var monotonic = 1
-      var nStats = 0; var statVals = 0L; var nNull = 0
-      var nInt = 0; var iMin = Long.MaxValue; var iMax = Long.MinValue
-      if (comp == 0L && footerLen > 0) {
-        val fStart = n - 1 - psLen - footerLen.toInt
-        val f = new ByteCursor(bytes, fStart, fStart + footerLen.toInt)
-        while (f.hasMore) {
-          val tag = f.varint()
-          val field = (tag >>> 3).toInt; val wire = (tag & 7).toInt
-          (field, wire) match {
-            case (2, 0) => contentLen = f.varint()
-            case (3, 2) => // StripeInformation
-              nStripes += 1
-              val s = lenDelimited(f)
-              var rows = 0L
-              while (s.hasMore) {
-                val st = s.varint()
-                ((st >>> 3).toInt, (st & 7).toInt) match {
-                  case (1, 0) =>
-                    val o = s.varint()
-                    if (o <= lastOffset) monotonic = 0
-                    lastOffset = o
-                  case (2, 0) => idxBytes += s.varint()
-                  case (3, 0) => dataBytes += s.varint()
-                  case (4, 0) => sfBytes += s.varint()
-                  case (5, 0) => rows = s.varint()
-                  case (_, w) => skipValue(s, w)
-                }
-              }
-              stripeRows += rows
-              if (rows < rowsMin) rowsMin = rows
-              if (rows > rowsMax) rowsMax = rows
-            case (4, 2) => nTypes += 1; skipValue(f, 2)
-            case (6, 0) => numRows = f.varint()
-            case (7, 2) => // ColumnStatistics
-              nStats += 1
-              val c = lenDelimited(f)
-              while (c.hasMore) {
-                val ct = c.varint()
-                ((ct >>> 3).toInt, (ct & 7).toInt) match {
-                  case (1, 0) => statVals += c.varint()
-                  case (2, 2) => // IntegerStatistics {1 min, 2 max, 3 sum: sint64}
-                    nInt += 1
-                    val i = lenDelimited(c)
-                    while (i.hasMore) {
-                      val it = i.varint()
-                      ((it >>> 3).toInt, (it & 7).toInt) match {
-                        case (1, 0) => val v = i.zigzag(); if (v < iMin) iMin = v
-                        case (2, 0) => val v = i.zigzag(); if (v > iMax) iMax = v
-                        case (_, w) => skipValue(i, w)
-                      }
-                    }
-                  case (10, 0) => if (c.varint() != 0L) nNull += 1
-                  case (_, w) => skipValue(c, w)
-                }
-              }
-            case _ => skipValue(f, wire)
-          }
-        }
-        footerParsed = 1
-      }
-      OrcMeta(1, psLen, compression, footerLen, metaLen, writerVer,
-        footerParsed, nStripes, numRows, stripeRows, nTypes, contentLen,
-        n.toLong - 3 - 1 - psLen - footerLen,
-        idxBytes, dataBytes, sfBytes,
-        if (nStripes == 0) 0L else rowsMin, rowsMax,
-        monotonic, nStats, statVals, nNull, nInt,
-        if (nInt == 0 || iMin == Long.MaxValue) 0L else iMin,
-        if (nInt == 0 || iMax == Long.MinValue) 0L else iMax)
+      val t = Tail(n, psLen, footerLen, codec, metaLen, writerVer, magicOk, None)
+      if (!Deframed(codec) || footerLen <= 0 || !t.footerFits) Some(t)
+      else Some(t.copy(footer = readFooter(bytes, t)))
     } catch {
-      case Malformed => Invalid
-      case _: ArrayIndexOutOfBoundsException => Invalid
+      case Malformed => None
+      case _: ArrayIndexOutOfBoundsException => None
+    }
+  }
+
+  private def readFooter(bytes: Array[Byte], t: Tail): Option[Footer] =
+    try {
+      val (from, to) = (t.footerStart, t.fileLen - 1 - t.psLen)
+      Some(footerOf(
+        if (t.codec == 0L) new ByteCursor(bytes, from, to)
+        else new ByteCursor(OrcData.deframe(bytes, from, to, t.codec))))
+    } catch {
+      case Malformed => None
+      case _: ArrayIndexOutOfBoundsException => None
+      case _: NegativeArraySizeException => None
+    }
+
+  private def footerOf(f: ByteCursor): Footer = {
+    var contentLen = 0L; var numRows = 0L
+    val stripes = Vector.newBuilder[Stripe]
+    var idxBytes = 0L; var dataBytes = 0L; var sfBytes = 0L
+    var lastOffset = -1L; var monotonic = true
+    val kinds = Vector.newBuilder[Long]; var kindsOk = true
+    var nStats = 0; var statVals = 0L; var nNull = 0
+    var nInt = 0; var iMin = Long.MaxValue; var iMax = Long.MinValue; var statsOk = true
+    message(f) {
+      case (2, 0) => contentLen = f.varint(); true
+      case (3, 2) => // StripeInformation
+        val s = lenDelimited(f)
+        var o = 0L; var il = 0L; var dl = 0L; var fl = 0L; var rows = 0L
+        message(s) {
+          case (1, 0) =>
+            o = s.varint()
+            if (o <= lastOffset) monotonic = false
+            lastOffset = o
+            true
+          case (2, 0) => il = s.varint(); idxBytes += il; true
+          case (3, 0) => dl = s.varint(); dataBytes += dl; true
+          case (4, 0) => fl = s.varint(); sfBytes += fl; true
+          case (5, 0) => rows = s.varint(); true
+          case _ => false
+        }
+        stripes += Stripe(o, il, dl, fl, rows)
+        true
+      case (4, 2) => // Type
+        val ty = lenDelimited(f)
+        var kind = 0L
+        try message(ty) {
+          case (1, 0) => kind = ty.varint(); true
+          case _ => false
+        } catch { case Malformed => kindsOk = false }
+        kinds += kind
+        true
+      case (6, 0) => numRows = f.varint(); true
+      case (7, 2) => // ColumnStatistics
+        nStats += 1
+        val c = lenDelimited(f)
+        try message(c) {
+          case (1, 0) => statVals += c.varint(); true
+          case (2, 2) => // IntegerStatistics {1 min, 2 max, 3 sum: sint64}
+            nInt += 1
+            val i = lenDelimited(c)
+            message(i) {
+              case (1, 0) => val v = i.zigzag(); if (v < iMin) iMin = v; true
+              case (2, 0) => val v = i.zigzag(); if (v > iMax) iMax = v; true
+              case _ => false
+            }
+            true
+          case (10, 0) => if (c.varint() != 0L) nNull += 1; true
+          case _ => false
+        } catch { case Malformed => statsOk = false }
+        true
+      case _ => false
+    }
+    Footer(contentLen, numRows, stripes.result(), (idxBytes, dataBytes, sfBytes),
+      monotonic, kinds.result(), kindsOk,
+      StatsFold(nStats, statVals, nNull, nInt, iMin, iMax), statsOk)
+  }
+
+  def parse(bytes: Array[Byte]): OrcMeta = tail(bytes).fold(Invalid)(census)
+
+  /** The tail census's rule: the postscript magic and a fitting footer
+    * length are required; only an uncompressed footer is read, and a
+    * compressed file reports its postscript layer alone.
+    */
+  private def census(t: Tail): OrcMeta = {
+    if (!t.magicOk || t.codec < 0 || t.footerLen < 0 || !t.footerFits) return Invalid
+    val compression = Kinds.getOrElse(t.codec, "other")
+    val dataBytes = t.fileLen.toLong - 3 - 1 - t.psLen - t.footerLen
+    if (t.codec != 0L || t.footerLen == 0)
+      OrcMeta(1, t.psLen, compression, t.footerLen, t.metadataLen, t.writerVersion,
+        0, 0, 0L, 0L, 0, 0L, dataBytes, 0L, 0L, 0L, 0L, 0L, 1, 0, 0L, 0, 0, 0L, 0L)
+    else t.footer.filter(_.statsOk).fold(Invalid) { f =>
+      val rows = f.stripes.map(_.rows)
+      val s = f.stats
+      OrcMeta(1, t.psLen, compression, t.footerLen, t.metadataLen, t.writerVersion,
+        1, f.stripes.size, f.numRows, rows.sum, f.kinds.size, f.contentLength,
+        dataBytes, f.stripeBytes._1, f.stripeBytes._2, f.stripeBytes._3,
+        if (rows.isEmpty) 0L else rows.min, (0L +: rows).max,
+        if (f.offsetsMonotonic) 1 else 0, s.nColStats, s.values, s.nHasNull, s.nIntStats,
+        if (s.nIntStats == 0 || s.intMin == Long.MaxValue) 0L else s.intMin,
+        if (s.nIntStats == 0 || s.intMax == Long.MinValue) 0L else s.intMax)
     }
   }
 
@@ -311,76 +400,48 @@ object OrcOps {
     * (stop-don't-guess — a mismatched file prunes NOTHING).
     */
   def stripeStatsCensus(bytes: Array[Byte], colIdx: Int): Vector[(Long, Int, Long, Long)] = {
-    val m = parse(bytes)
+    val t = tail(bytes).getOrElse(return Vector.empty)
+    val m = census(t)
     if (m.valid != 1 || m.footerParsed != 1 || m.metadataLen <= 0)
       return Vector.empty
-    val n = bytes.length
+    // metadata section sits immediately before the footer
+    val fStart = t.footerStart
+    if (m.metadataLen > fStart.toLong - 3) return Vector.empty
     try {
-      // footer stripe rows, in order (parse only kept the extrema)
-      val fStart = n - 1 - m.psLen - m.footerLen.toInt
-      val f = new ByteCursor(bytes, fStart, fStart + m.footerLen.toInt)
-      val rows = Vector.newBuilder[Long]
-      while (f.hasMore) {
-        val tag = f.varint()
-        ((tag >>> 3).toInt, (tag & 7).toInt) match {
-          case (3, 2) =>
-            val s = lenDelimited(f)
-            var r = 0L
-            while (s.hasMore) {
-              val st = s.varint()
-              if ((st >>> 3).toInt == 5 && (st & 7).toInt == 0) r = s.varint()
-              else skipValue(s, (st & 7).toInt)
-            }
-            rows += r
-          case (_, w) => skipValue(f, w)
-        }
-      }
-      // metadata section sits immediately before the footer
-      if (m.metadataLen > fStart.toLong - 3) return Vector.empty
-      val mdStart = fStart - m.metadataLen.toInt
-      val md = new ByteCursor(bytes, mdStart, fStart)
+      val md = new ByteCursor(bytes, fStart - m.metadataLen.toInt, fStart)
       val stats = Vector.newBuilder[(Int, Long, Long)] // (has, min, max)
-      while (md.hasMore) {
-        val tag = md.varint()
-        ((tag >>> 3).toInt, (tag & 7).toInt) match {
-          case (1, 2) => // StripeStatistics
-            val ss = lenDelimited(md)
-            var ci = 0
-            var has = 0; var mn = 0L; var mx = 0L
-            while (ss.hasMore) {
-              val ct = ss.varint()
-              ((ct >>> 3).toInt, (ct & 7).toInt) match {
-                case (1, 2) => // ColumnStatistics
-                  val c = lenDelimited(ss)
-                  if (ci == colIdx) {
-                    while (c.hasMore) {
-                      val t2 = c.varint()
-                      ((t2 >>> 3).toInt, (t2 & 7).toInt) match {
-                        case (2, 2) =>
-                          val i = lenDelimited(c)
-                          var sawMin = false; var sawMax = false
-                          while (i.hasMore) {
-                            val it = i.varint()
-                            ((it >>> 3).toInt, (it & 7).toInt) match {
-                              case (1, 0) => mn = i.zigzag(); sawMin = true
-                              case (2, 0) => mx = i.zigzag(); sawMax = true
-                              case (_, w) => skipValue(i, w)
-                            }
-                          }
-                          if (sawMin && sawMax) has = 1
-                        case (_, w) => skipValue(c, w)
-                      }
-                    }
+      message(md) {
+        case (1, 2) => // StripeStatistics
+          val ss = lenDelimited(md)
+          var ci = 0
+          var has = 0; var mn = 0L; var mx = 0L
+          message(ss) {
+            case (1, 2) => // ColumnStatistics
+              val c = lenDelimited(ss)
+              if (ci == colIdx) message(c) {
+                case (2, 2) =>
+                  val i = lenDelimited(c)
+                  var sawMin = false; var sawMax = false
+                  message(i) {
+                    case (1, 0) => mn = i.zigzag(); sawMin = true; true
+                    case (2, 0) => mx = i.zigzag(); sawMax = true; true
+                    case _ => false
                   }
-                  ci += 1
-                case (_, w) => skipValue(ss, w)
+                  if (sawMin && sawMax) has = 1
+                  true
+                case _ => false
               }
-            }
-            stats += ((has, mn, mx))
-          case (_, w) => skipValue(md, w)
-        }
+              ci += 1
+              true
+            case _ => false
+          }
+          stats += ((has, mn, mx))
+          true
+        case _ => false
       }
-      val rs = rows.result(); val st = stats.result()
+      // stripe rows from the footer's stripe list (same order, per the spec)
+      val rs = t.footer.fold(Vector.empty[Long])(_.stripes.map(_.rows))
+      val st = stats.result()
       if (rs.length != st.length) Vector.empty
       else rs.zip(st).map { case (r, (h, mn, mx)) => (r, h, mn, mx) }
     } catch {

@@ -29,11 +29,16 @@ import org.apache.spark.sql.DataFrame
   * /root/testdata files in ParquetFooterSpec) and the synthetic
   * minimal footers the q377 oracle replays closed-form.
   *
-  * Targeted FileMetaData fields (parquet-format/src/main/thrift/
-  * parquet.thrift): 1 version, 2 schema (SchemaElement: field 1
-  * physical type marks a LEAF, field 4 name), 3 num_rows,
-  * 4 row_groups (RowGroup: 1 columns, 2 total_byte_size, 3 num_rows;
-  * ColumnChunk: 3 meta_data; ColumnMetaData: 4 codec), 6 created_by.
+  * The footer is walked once, by [[footer]], into a [[Footer]] model
+  * that this census, the zone-map and page-index censuses and
+  * [[ParquetPages.chunkMetas]] all read. Targeted FileMetaData fields
+  * (parquet-format/src/main/thrift/parquet.thrift): 1 version,
+  * 2 schema (SchemaElement: 1 physical type, 3 repetition,
+  * 5 num_children), 3 num_rows, 4 row_groups (RowGroup: 1 columns,
+  * 2 total_byte_size, 3 num_rows; ColumnChunk: 3 meta_data, 4/5 offset
+  * index, 6/7 column index; ColumnMetaData: 1 type, 4 codec,
+  * 5 num_values, 7 total_compressed_size, 9 data page offset,
+  * 11 dictionary page offset, 12 Statistics), 6 created_by.
   *
   * Fail-closed contract (house rules): footer length validated in
   * subtraction form against the buffer; varints capped at 10 bytes;
@@ -133,17 +138,59 @@ object ParquetFooter {
     }
   }
 
+  /** One SchemaElement: its physical type (-1 when absent), how many
+    * type fields it carries (the footer census counts each as a leaf),
+    * repetition and num_children (-1 when absent).
+    */
+  final case class Element(physType: Long, typeFields: Int, repetition: Long,
+      numChildren: Long)
+
+  /** One ColumnChunk: its ColumnMetaData fields (-1 when absent; every
+    * codec field in order, one in a valid file), the int64 zone map from Statistics —
+    * null_count and the 8-byte min/max (0 when absent), `readable` iff
+    * one Statistics struct carried both bounds at 8 bytes — and the
+    * column/offset index pointers (-1 when absent).
+    */
+  final case class Chunk(codecs: Vector[Long], physType: Long, numValues: Long,
+      totalCompressed: Long, dataOff: Long, dictOff: Long,
+      nullCount: Long, min: Long, max: Long, readable: Boolean,
+      columnIndexOff: Long, columnIndexLen: Long,
+      offsetIndexOff: Long, offsetIndexLen: Long)
+
+  /** One RowGroup: num_rows, and — for the footer census, which sums
+    * every occurrence — the sums of its num_rows and total_byte_size
+    * fields (one each in a valid file), then its chunks.
+    */
+  final case class RowGroup(numRows: Long, numRowsSum: Long, totalByteSize: Long,
+      chunks: Vector[Chunk])
+
+  /** The FileMetaData, walked once for every census. A repeated scalar
+    * field keeps its last value unless its struct above says otherwise;
+    * repeated lists concatenate.
+    * `schemaOk = false` records a schema list whose elements are not
+    * structs: the censuses that read the schema reject the file, the
+    * others never look at it.
+    */
+  final case class Footer(footerLen: Long, version: Long, numRows: Long,
+      createdByLen: Int, schema: Vector[Element], schemaOk: Boolean,
+      rowGroups: Vector[RowGroup])
+
   private val Invalid = FooterMeta(0, 0L, 0L, 0, 0, 0, 0, 0L, 0L, 0, 0, 0, 0, 0, 0, 0L, 0L)
 
-  /** ONE copy of the footer prologue for every entry point (parse,
-    * statsCensus): magic at both ends, u32le footer length, and the
-    * subtraction-form fit check. None = not a parquet file / cut
-    * footer — the callers' fail-closed zero.
+  /** The elements of one list<struct>, each read by `elem`. */
+  private def structs[A](r: ByteCursor)(elem: => A): Vector[A] = {
+    val (size, elemType) = listHeader(r)
+    if (elemType != 12) throw Malformed
+    Vector.fill(size.toInt)(elem)
+  }
+
+  /** The footer prologue: magic at both ends, u32le footer length, and
+    * the subtraction-form fit check. None = not a parquet file / cut
+    * footer.
     */
-  private[operators] def footerReader(bytes: Array[Byte]): Option[(ByteCursor, Long)] = {
+  private def footerReader(bytes: Array[Byte]): Option[(ByteCursor, Long)] = {
     val n = bytes.length
-    def magicAt(p: Int): Boolean =
-      bytes(p) == 'P' && bytes(p + 1) == 'A' && bytes(p + 2) == 'R' && bytes(p + 3) == '1'
+    def magicAt(p: Int): Boolean = Bytes.tag(bytes, p, "PAR1")
     if (n < 12 || !magicAt(0) || !magicAt(n - 4)) return None
     val footerLen = Bytes.le32u(bytes, n - 8)
     // footer must fit between the magics (subtraction form)
@@ -151,76 +198,33 @@ object ParquetFooter {
     else Some((new ByteCursor(bytes, n - 8 - footerLen.toInt, n - 8), footerLen))
   }
 
-  def parse(bytes: Array[Byte]): FooterMeta = {
-    val n = bytes.length
+  /** The one footer walk, which every census reads. None = not a
+    * parquet file, a cut footer or a wire fault — each census's
+    * fail-closed zero.
+    */
+  def footer(bytes: Array[Byte]): Option[Footer] = {
     val (r, footerLen) = footerReader(bytes) match {
       case Some(rf) => rf
-      case None => return Invalid
+      case None => return None
     }
     try {
-      var version = 0L; var numRows = 0L
-      var nSchema = 0; var nLeaves = 0
-      var nRgs = 0; var nChunks = 0
-      var totalBytes = 0L; var rgRows = 0L
-      var createdByLen = 0
-      val codecCounts = new Array[Int](8)
-      var nOther = 0
-
+      var version = 0L; var numRows = 0L; var createdByLen = 0
+      var schema = Vector.empty[Element]; var schemaOk = true
+      var rowGroups = Vector.empty[RowGroup]
       walkStruct(r, 0) { (id, tpe) =>
         (id, tpe) match {
           case (1, 5) => version = r.zigzag(); true
-          case (2, 9) => // schema: list<SchemaElement>
+          case (2, 9) =>
             val (size, elemType) = listHeader(r)
-            if (elemType != 12) throw Malformed
-            var i = 0L
-            while (i < size) {
-              nSchema += 1
-              walkStruct(r, 1) { (fid, ftpe) =>
-                if (fid == 1 && ftpe == 5) { r.zigzag(); nLeaves += 1; true }
-                else false
-              }
-              i += 1
+            if (elemType == 12) schema ++= Vector.fill(size.toInt)(element(r))
+            else { // skipped, as a census that ignores the schema skips it
+              schemaOk = false
+              var i = 0L
+              while (i < size) { skipValue(r, elemType, 2); i += 1 }
             }
             true
           case (3, 6) => numRows = r.zigzag(); true
-          case (4, 9) => // row_groups: list<RowGroup>
-            val (size, elemType) = listHeader(r)
-            if (elemType != 12) throw Malformed
-            var i = 0L
-            while (i < size) {
-              nRgs += 1
-              walkStruct(r, 1) { (fid, ftpe) =>
-                (fid, ftpe) match {
-                  case (1, 9) => // columns: list<ColumnChunk>
-                    val (csize, ctype) = listHeader(r)
-                    if (ctype != 12) throw Malformed
-                    var c = 0L
-                    while (c < csize) {
-                      nChunks += 1
-                      walkStruct(r, 2) { (cid, ctpe) =>
-                        if (cid == 3 && ctpe == 12) { // meta_data
-                          walkStruct(r, 3) { (mid, mtpe) =>
-                            if (mid == 4 && mtpe == 5) { // codec enum
-                              val codec = r.zigzag()
-                              if (codec >= 0 && codec < 8) codecCounts(codec.toInt) += 1
-                              else nOther += 1
-                              true
-                            } else false
-                          }
-                          true
-                        } else false
-                      }
-                      c += 1
-                    }
-                    true
-                  case (2, 6) => totalBytes += r.zigzag(); true
-                  case (3, 6) => rgRows += r.zigzag(); true
-                  case _ => false
-                }
-              }
-              i += 1
-            }
-            true
+          case (4, 9) => rowGroups ++= structs(r)(rowGroup(r)); true
           case (6, 8) =>
             val len = r.varint()
             r.skip(len)
@@ -229,15 +233,100 @@ object ParquetFooter {
           case _ => false
         }
       }
-      FooterMeta(1, version, numRows, nSchema, nLeaves, nRgs, nChunks,
-        totalBytes, rgRows, createdByLen,
-        codecCounts(0), codecCounts(1), codecCounts(2), codecCounts(6),
-        codecCounts(3) + codecCounts(4) + codecCounts(5) + codecCounts(7) + nOther,
-        footerLen, n.toLong - 12 - footerLen)
+      Some(Footer(footerLen, version, numRows, createdByLen, schema, schemaOk, rowGroups))
     } catch {
-      case Malformed => Invalid
-      case _: ArrayIndexOutOfBoundsException => Invalid
+      case Malformed => None
+      case _: ArrayIndexOutOfBoundsException => None
     }
+  }
+
+  private def element(r: ByteCursor): Element = {
+    var physType = -1L; var types = 0; var rep = -1L; var kids = -1L
+    walkStruct(r, 1) { (fid, ftpe) =>
+      (fid, ftpe) match {
+        case (1, 5) => physType = r.zigzag(); types += 1; true
+        case (3, 5) => rep = r.zigzag(); true
+        case (5, 5) => kids = r.zigzag(); true
+        case _ => false
+      }
+    }
+    Element(physType, types, rep, kids)
+  }
+
+  private def rowGroup(r: ByteCursor): RowGroup = {
+    var rows = 0L; var rowsSum = 0L; var byteSize = 0L; var chunks = Vector.empty[Chunk]
+    walkStruct(r, 1) { (fid, ftpe) =>
+      (fid, ftpe) match {
+        case (1, 9) => chunks ++= structs(r)(chunk(r)); true
+        case (2, 6) => byteSize += r.zigzag(); true
+        case (3, 6) => rows = r.zigzag(); rowsSum += rows; true
+        case _ => false
+      }
+    }
+    RowGroup(rows, rowsSum, byteSize, chunks)
+  }
+
+  private def chunk(r: ByteCursor): Chunk = {
+    var codecs = Vector.empty[Long]
+    var pt = -1L; var nv = -1L; var tot = -1L; var dataOff = -1L; var dictOff = -1L
+    var nulls = 0L; var minV = 0L; var maxV = 0L; var readable = false
+    var ciOff = -1L; var ciLen = -1L; var oiOff = -1L; var oiLen = -1L
+    walkStruct(r, 2) { (cid, ctpe) =>
+      (cid, ctpe) match {
+        case (3, 12) => // ColumnMetaData
+          walkStruct(r, 3) { (mid, mtpe) =>
+            (mid, mtpe) match {
+              case (1, 5) => pt = r.zigzag(); true
+              case (4, 5) => codecs :+= r.zigzag(); true
+              case (5, 6) => nv = r.zigzag(); true
+              case (7, 6) => tot = r.zigzag(); true
+              case (9, 6) => dataOff = r.zigzag(); true
+              case (11, 6) => dictOff = r.zigzag(); true
+              case (12, 12) => // Statistics
+                var sawMin = false; var sawMax = false
+                walkStruct(r, 4) { (sid, stpe) =>
+                  (sid, stpe) match {
+                    case (3, 6) => nulls = r.zigzag(); true
+                    case (5, 8) => // max_value
+                      val len = r.varint()
+                      if (len == 8) { maxV = r.le64(); sawMax = true } else r.skip(len)
+                      true
+                    case (6, 8) => // min_value
+                      val len = r.varint()
+                      if (len == 8) { minV = r.le64(); sawMin = true } else r.skip(len)
+                      true
+                    case _ => false
+                  }
+                }
+                if (sawMin && sawMax) readable = true
+                true
+              case _ => false
+            }
+          }
+          true
+        case (4, 6) => oiOff = r.zigzag(); true
+        case (5, 5) => oiLen = r.zigzag(); true
+        case (6, 6) => ciOff = r.zigzag(); true
+        case (7, 5) => ciLen = r.zigzag(); true
+        case _ => false
+      }
+    }
+    Chunk(codecs, pt, nv, tot, dataOff, dictOff, nulls, minV, maxV, readable,
+      ciOff, ciLen, oiOff, oiLen)
+  }
+
+  def parse(bytes: Array[Byte]): FooterMeta = footer(bytes) match {
+    case Some(f) if f.schemaOk =>
+      val chunks = f.rowGroups.flatMap(_.chunks)
+      val codecs = chunks.flatMap(_.codecs)
+      def count(c: Long): Int = codecs.count(_ == c)
+      FooterMeta(1, f.version, f.numRows, f.schema.size, f.schema.map(_.typeFields).sum,
+        f.rowGroups.size, chunks.size, f.rowGroups.map(_.totalByteSize).sum,
+        f.rowGroups.map(_.numRowsSum).sum, f.createdByLen,
+        count(0), count(1), count(2), count(6),
+        codecs.size - count(0) - count(1) - count(2) - count(6),
+        f.footerLen, bytes.length.toLong - 12 - f.footerLen)
+    case _ => Invalid
   }
 
   /** Per-row-group zone-map stats for one column (by chunk position):
@@ -248,75 +337,13 @@ object ParquetFooter {
     * conservative "cannot prune" verdict a planner must return.
     * Footer-level faults yield an EMPTY vector (fail-closed).
     */
-  def statsCensus(bytes: Array[Byte], colIdx: Int): Vector[(Long, Int, Long, Long, Long)] = {
-    val r = footerReader(bytes) match {
-      case Some((rf, _)) => rf
-      case None => return Vector.empty
-    }
-    try {
-      val out = Vector.newBuilder[(Long, Int, Long, Long, Long)]
-      walkStruct(r, 0) { (id, tpe) =>
-        if (id == 4 && tpe == 9) { // row_groups
-          val (size, elemType) = listHeader(r)
-          if (elemType != 12) throw Malformed
-          var i = 0L
-          while (i < size) {
-            var rgRows = 0L
-            var has = 0; var minV = 0L; var maxV = 0L; var nulls = 0L
-            walkStruct(r, 1) { (fid, ftpe) =>
-              (fid, ftpe) match {
-                case (1, 9) =>
-                  val (csize, ctype) = listHeader(r)
-                  if (ctype != 12) throw Malformed
-                  var c = 0L
-                  while (c < csize) {
-                    walkStruct(r, 2) { (cid, ctpe) =>
-                      if (cid == 3 && ctpe == 12 && c == colIdx.toLong) {
-                        walkStruct(r, 3) { (mid, mtpe) =>
-                          if (mid == 12 && mtpe == 12) { // Statistics
-                            var sawMin = false; var sawMax = false
-                            walkStruct(r, 4) { (sid, stpe) =>
-                              (sid, stpe) match {
-                                case (3, 6) => nulls = r.zigzag(); true
-                                case (5, 8) => // max_value
-                                  val len = r.varint()
-                                  if (len == 8) { maxV = r.le64(); sawMax = true }
-                                  else r.skip(len)
-                                  true
-                                case (6, 8) => // min_value
-                                  val len = r.varint()
-                                  if (len == 8) { minV = r.le64(); sawMin = true }
-                                  else r.skip(len)
-                                  true
-                                case _ => false
-                              }
-                            }
-                            if (sawMin && sawMax) has = 1
-                            true
-                          } else false
-                        }
-                        true
-                      } else false
-                    }
-                    c += 1
-                  }
-                  true
-                case (3, 6) => rgRows = r.zigzag(); true
-                case _ => false
-              }
-            }
-            out += ((rgRows, has, minV, maxV, nulls))
-            i += 1
-          }
-          true
-        } else false
+  def statsCensus(bytes: Array[Byte], colIdx: Int): Vector[(Long, Int, Long, Long, Long)] =
+    footer(bytes).fold(Vector.empty[(Long, Int, Long, Long, Long)])(_.rowGroups.map { rg =>
+      rg.chunks.lift(colIdx) match {
+        case Some(c) => (rg.numRows, if (c.readable) 1 else 0, c.min, c.max, c.nullCount)
+        case None => (rg.numRows, 0, 0L, 0L, 0L)
       }
-      out.result()
-    } catch {
-      case Malformed => Vector.empty
-      case _: ArrayIndexOutOfBoundsException => Vector.empty
-    }
-  }
+    })
 
   // ------------------------------------------------------------------
   // Thrift compact writer + synthetic footer (tests and the q377 oracle)
@@ -651,55 +678,10 @@ object ParquetFooter {
     * does but the blob is unreadable (declined whole), Some(Some(p)) =
     * the decoded pages.
     */
-  def pageIndexCensus(bytes: Array[Byte], colIdx: Int): Vector[Option[Option[Vector[PageEntry]]]] = {
-    val r = footerReader(bytes) match {
-      case Some((rf, _)) => rf
-      case None => return Vector.empty
-    }
-    try {
-      val ptrs = Vector.newBuilder[Option[(Long, Long)]]
-      walkStruct(r, 0) { (id, tpe) =>
-        if (id == 4 && tpe == 9) {
-          val (size, elemType) = listHeader(r)
-          if (elemType != 12) throw Malformed
-          var i = 0L
-          while (i < size) {
-            var ptr: Option[(Long, Long)] = None
-            walkStruct(r, 1) { (fid, ftpe) =>
-              if (fid == 1 && ftpe == 9) {
-                val (csize, ctype) = listHeader(r)
-                if (ctype != 12) throw Malformed
-                var c = 0L
-                while (c < csize) {
-                  var off = -1L; var len = -1L
-                  walkStruct(r, 2) { (cid, ctpe) =>
-                    (cid, ctpe) match {
-                      case (6, 6) => off = r.zigzag(); true
-                      case (7, 5) => len = r.zigzag(); true
-                      case _ => false
-                    }
-                  }
-                  if (c == colIdx.toLong && off >= 0 && len > 0)
-                    ptr = Some((off, len))
-                  c += 1
-                }
-                true
-              } else false
-            }
-            ptrs += ptr
-            i += 1
-          }
-          true
-        } else false
-      }
-      ptrs.result().map(_.map { case (off, len) =>
-        parseColumnIndex(bytes, off, len)
-      })
-    } catch {
-      case Malformed => Vector.empty
-      case _: ArrayIndexOutOfBoundsException => Vector.empty
-    }
-  }
+  def pageIndexCensus(bytes: Array[Byte], colIdx: Int): Vector[Option[Option[Vector[PageEntry]]]] =
+    footer(bytes).fold(Vector.empty[Option[Option[Vector[PageEntry]]]])(_.rowGroups.map(rg =>
+      rg.chunks.lift(colIdx).filter(c => c.columnIndexOff >= 0 && c.columnIndexLen > 0)
+        .map(c => parseColumnIndex(bytes, c.columnIndexOff, c.columnIndexLen))))
 
   /** Per-row-group PAGE-ROW data for `colIdx`: row-group rows, the
     * ColumnIndex pages (as in [[pageIndexCensus]]) and the
@@ -708,74 +690,23 @@ object ParquetFooter {
     * else declines to None, fail-closed.
     */
   def pageRowsCensus(bytes: Array[Byte], colIdx: Int):
-      Vector[(Long, Option[Vector[PageEntry]], Option[Vector[Long]])] = {
-    val r = footerReader(bytes) match {
-      case Some((rf, _)) => rf
-      case None => return Vector.empty
-    }
-    try {
-      val rows = Vector.newBuilder[(Long, Option[(Long, Long)], Option[(Long, Long)])]
-      walkStruct(r, 0) { (id, tpe) =>
-        if (id == 4 && tpe == 9) {
-          val (size, elemType) = listHeader(r)
-          if (elemType != 12) throw Malformed
-          var i = 0L
-          while (i < size) {
-            var ci: Option[(Long, Long)] = None
-            var oi: Option[(Long, Long)] = None
-            var rgRows = 0L
-            walkStruct(r, 1) { (fid, ftpe) =>
-              (fid, ftpe) match {
-                case (1, 9) =>
-                  val (csize, ctype) = listHeader(r)
-                  if (ctype != 12) throw Malformed
-                  var c = 0L
-                  while (c < csize) {
-                    var ciOff = -1L; var ciLen = -1L
-                    var oiOff = -1L; var oiLen = -1L
-                    walkStruct(r, 2) { (cid, ctpe) =>
-                      (cid, ctpe) match {
-                        case (4, 6) => oiOff = r.zigzag(); true
-                        case (5, 5) => oiLen = r.zigzag(); true
-                        case (6, 6) => ciOff = r.zigzag(); true
-                        case (7, 5) => ciLen = r.zigzag(); true
-                        case _ => false
-                      }
-                    }
-                    if (c == colIdx.toLong) {
-                      if (ciOff >= 0 && ciLen > 0) ci = Some((ciOff, ciLen))
-                      if (oiOff >= 0 && oiLen > 0) oi = Some((oiOff, oiLen))
-                    }
-                    c += 1
-                  }
-                  true
-                case (3, 6) => rgRows = r.zigzag(); true
-                case _ => false
-              }
-            }
-            rows += ((rgRows, ci, oi))
-            i += 1
-          }
-          true
-        } else false
-      }
-      rows.result().map { case (rgRows, ci, oi) =>
-        val pages = ci.flatMap { case (o, l) => parseColumnIndex(bytes, o, l) }
-        val firstRows = oi.flatMap { case (o, l) => parseOffsetIndex(bytes, o, l) }
+      Vector[(Long, Option[Vector[PageEntry]], Option[Vector[Long]])] =
+    footer(bytes).fold(Vector.empty[(Long, Option[Vector[PageEntry]], Option[Vector[Long]])])(
+      _.rowGroups.map { rg =>
+        val target = rg.chunks.lift(colIdx)
+        val pages = target.filter(c => c.columnIndexOff >= 0 && c.columnIndexLen > 0)
+          .flatMap(c => parseColumnIndex(bytes, c.columnIndexOff, c.columnIndexLen))
+        val firstRows = target.filter(c => c.offsetIndexOff >= 0 && c.offsetIndexLen > 0)
+          .flatMap(c => parseOffsetIndex(bytes, c.offsetIndexOff, c.offsetIndexLen))
           .filter { fr =>
             // consistency contract: one entry per page, starting at 0,
             // nondecreasing, inside the row group
             pages.exists(_.size == fr.size) && fr.headOption.contains(0L) &&
               fr.zip(fr.drop(1)).forall { case (a, b) => a <= b } &&
-              fr.lastOption.forall(_ <= rgRows)
+              fr.lastOption.forall(_ <= rg.numRows)
           }
-        (rgRows, pages, firstRows)
-      }
-    } catch {
-      case Malformed => Vector.empty
-      case _: ArrayIndexOutOfBoundsException => Vector.empty
-    }
-  }
+        (rg.numRows, pages, firstRows)
+      })
 
   /** Page-level ROW audit — the quantity a scan is actually billed in:
     * ColumnIndex bounds pick the skippable pages, OffsetIndex

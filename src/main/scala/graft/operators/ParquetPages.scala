@@ -2,7 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import ParquetFooter.{walkStruct, listHeader, footerReader, Writer}
+import ParquetFooter.{walkStruct, Writer}
+
+/** Min, max and sum of a column's decoded values (or their lengths) —
+  * the fold every decode census reports; min and max read 0 when no
+  * value was decoded.
+  */
+private[operators] final class ValueFold {
+  var lo = Long.MaxValue
+  var hi = Long.MinValue
+  var total = 0L
+  def add(x: Long): Unit = {
+    total += x
+    if (x < lo) lo = x
+    if (x > hi) hi = x
+  }
+  def min(nValues: Long): Long = if (nValues == 0) 0L else lo
+  def max(nValues: Long): Long = if (nValues == 0) 0L else hi
+}
 
 /** Parquet DATA-PAGE decode — the layer BELOW the page index. q377
   * reads footers, q380 prunes row groups, q413/q414 prune and price
@@ -80,103 +97,28 @@ object ParquetPages {
       dataOff: Long, dictOff: Long, totalCompressed: Long,
       maxDef: Int, flat: Boolean)
 
-  /** Footer walk → per-row-group [[ChunkMeta]] for the `colIdx`-th
-    * column chunk. Empty = not parquet / malformed footer
-    * (fail-closed).
+  /** Per-row-group [[ChunkMeta]] for the `colIdx`-th column chunk, from
+    * the one footer walk ([[ParquetFooter.footer]]). Empty = not
+    * parquet / malformed footer / a target chunk missing a field it
+    * needs (fail-closed).
     */
-  def chunkMetas(bytes: Array[Byte], colIdx: Int): Vector[ChunkMeta] = {
-    val r = footerReader(bytes) match {
-      case Some((rf, _)) => rf
-      case None => return Vector.empty
-    }
-    try {
-      var nSchema = 0
-      var nChildren = -1L // root's num_children
-      var leafSeen = 0
-      var repOfTarget = -1L
-      var repeatedSeen = false
-      val out = Vector.newBuilder[ChunkMeta]
-      walkStruct(r, 0) { (id, tpe) =>
-        (id, tpe) match {
-          case (2, 9) => // schema: list<SchemaElement>
-            val (size, elemType) = listHeader(r)
-            if (elemType != 12) throw Malformed
-            var i = 0L
-            while (i < size) {
-              var physType = -1L; var rep = -1L; var kids = -1L
-              walkStruct(r, 1) { (fid, ftpe) =>
-                (fid, ftpe) match {
-                  case (1, 5) => physType = r.zigzag(); true
-                  case (3, 5) => rep = r.zigzag(); true
-                  case (5, 5) => kids = r.zigzag(); true
-                  case _ => false
-                }
-              }
-              if (nSchema == 0) nChildren = kids
-              else if (physType >= 0) { // a leaf
-                if (rep == 2) repeatedSeen = true
-                if (leafSeen == colIdx) repOfTarget = math.max(rep, 0L)
-                leafSeen += 1
-              } else repeatedSeen = true // an inner group ⇒ nested
-              nSchema += 1
-              i += 1
-            }
-            true
-          case (4, 9) => // row_groups
-            val (size, elemType) = listHeader(r)
-            if (elemType != 12) throw Malformed
-            var i = 0L
-            while (i < size) {
-              walkStruct(r, 1) { (fid, ftpe) =>
-                if (fid == 1 && ftpe == 9) {
-                  val (csize, ctype) = listHeader(r)
-                  if (ctype != 12) throw Malformed
-                  var c = 0L
-                  while (c < csize) {
-                    var pt = -1L; var codec = -1L; var nv = -1L
-                    var dataOff = -1L; var dictOff = -1L; var tot = -1L
-                    walkStruct(r, 2) { (cid, ctpe) =>
-                      if (cid == 3 && ctpe == 12) { // meta_data
-                        walkStruct(r, 3) { (mid, mtpe) =>
-                          (mid, mtpe) match {
-                            case (1, 5) => pt = r.zigzag(); true
-                            case (4, 5) => codec = r.zigzag(); true
-                            case (5, 6) => nv = r.zigzag(); true
-                            case (7, 6) => tot = r.zigzag(); true
-                            case (9, 6) => dataOff = r.zigzag(); true
-                            case (11, 6) => dictOff = r.zigzag(); true
-                            case _ => false
-                          }
-                        }
-                        true
-                      } else false
-                    }
-                    if (c == colIdx.toLong) {
-                      if (pt < 0 || codec < 0 || nv < 0 || dataOff < 0 || tot < 0)
-                        throw Malformed
-                      // flat ⇔ the root's children are exactly the leaves
-                      // and none is REPEATED or an inner group
-                      val flat = !repeatedSeen && nChildren == (nSchema - 1).toLong
-                      out += ChunkMeta(pt.toInt, codec.toInt, nv, dataOff,
-                        dictOff, tot, if (repOfTarget == 1L) 1 else 0, flat)
-                    }
-                    c += 1
-                  }
-                  true
-                } else false
-              }
-              i += 1
-            }
-            true
-          case _ => false
-        }
+  def chunkMetas(bytes: Array[Byte], colIdx: Int): Vector[ChunkMeta] =
+    ParquetFooter.footer(bytes).filter(_.schemaOk).fold(Vector.empty[ChunkMeta]) { f =>
+      // flat ⇔ the root's children are exactly the leaves and none is
+      // REPEATED or an inner group
+      val (leaves, groups) = f.schema.drop(1).partition(_.physType >= 0)
+      val flat = groups.isEmpty && !leaves.exists(_.repetition == 2) &&
+        f.schema.headOption.fold(-1L)(_.numChildren) == f.schema.size - 1L
+      val maxDef = if (leaves.lift(colIdx).exists(_.repetition == 1)) 1 else 0
+      val cms = f.rowGroups.flatMap(_.chunks.lift(colIdx)).map { c =>
+        val codec = c.codecs.lastOption.getOrElse(-1L)
+        if (c.physType < 0 || codec < 0 || c.numValues < 0 || c.dataOff < 0 ||
+          c.totalCompressed < 0) None
+        else Some(ChunkMeta(c.physType.toInt, codec.toInt, c.numValues, c.dataOff,
+          c.dictOff, c.totalCompressed, maxDef, flat))
       }
-      out.result()
-    } catch {
-      case Malformed => Vector.empty
-      case _: ArrayIndexOutOfBoundsException => Vector.empty
+      if (cms.contains(None)) Vector.empty else cms.flatten
     }
-  }
 
   /** RLE/bit-packed hybrid decode: exactly `n` values of `bitWidth`
     * bits from `b[off, end)`. Runs alternate by the header varint's
@@ -349,41 +291,83 @@ object ParquetPages {
       nDictVals: Long, nValues: Long, nNulls: Long,
       minV: Long, maxV: Long, sum: Long, values: Array[Long])
 
-  private val Gated = ChunkDecode(0, 1, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-  private val Bad = ChunkDecode(0, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-
-  /** Decode one INT64 column chunk: dictionary page (when present)
-    * then every data page, def-levels and all. See the object doc for
-    * the gated-vs-malformed split.
+  /** Whole-file decode of the `colIdx`-th column: every row group's
+    * chunk, summed. One malformed chunk fails the FILE closed; one
+    * gated chunk gates it (counts zeroed either way — never a
+    * half-decoded census).
     */
-  def decodeInt64Chunk(bytes: Array[Byte], cm: ChunkMeta,
-      keepValues: Boolean = false): ChunkDecode = {
-    if (!cm.flat || (cm.physType != TInt64 && cm.physType != TInt32))
-      return Gated
+  final case class FileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
+      nDictVals: Long, nValues: Long, nNulls: Long,
+      minV: Long, maxV: Long, sum: Long, values: Array[Long])
+
+  final case class BinChunkDecode(ok: Int, gated: Int, nPages: Int,
+      nDictVals: Long, nValues: Long, nNulls: Long,
+      sumLen: Long, minLen: Long, maxLen: Long, values: Array[Array[Byte]])
+
+  final case class BinFileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
+      nDictVals: Long, nValues: Long, nNulls: Long,
+      sumLen: Long, minLen: Long, maxLen: Long, values: Array[Array[Byte]])
+
+  /** One chunk's (or file's) decode before it takes its type's result
+    * shape: `lo`/`hi`/`total` fold the values (INT) or their lengths
+    * (BYTE_ARRAY).
+    */
+  private final case class Tally[A](ok: Int, gated: Int, nPages: Int,
+      nDictVals: Long, nValues: Long, nNulls: Long,
+      lo: Long, hi: Long, total: Long, values: Array[A])
+
+  private def gatedTally[A]: Tally[A] = Tally(0, 1, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
+  private def badTally[A]: Tally[A] = Tally(0, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
+
+  /** One physical type's side of the page walk: the dictionary page and
+    * each data page's value section, decoded and folded into the
+    * tallies. The per-value loops live in the subclasses, over
+    * primitive arrays.
+    */
+  private abstract class PageValues[A] {
+    var nValues = 0L
+    var nNulls = 0L
+    val fold = new ValueFold
+    /** -1 until the dictionary page is read. */
+    def dictSize: Long
+    def dictionary(buf: Array[Byte], n: Long): Unit
+    /** Decode and fold one data page's `nNonNull` values at `buf[q..]`
+      * (`nLevels` rows, nulls included); false = an encoding this type
+      * declines.
+      */
+    def page(buf: Array[Byte], q: Int, enc: Long, nNonNull: Int, nLevels: Long): Boolean
+    def kept: Array[A]
+  }
+
+  /** How many levels are 1 (a flat column's non-null rows). */
+  private def ones(levels: Array[Int]): Int = {
+    var n = 0; var i = 0
+    while (i < levels.length) { if (levels(i) == 1) n += 1; i += 1 }
+    n
+  }
+
+  /** The page walk every physical type shares: page headers (the same
+    * Thrift Compact walker as the footer), codec decompression, the
+    * dictionary page, V1 definition levels, the V2 level split and its
+    * num_nulls check, the page cap and the gated classes. See the
+    * object doc for the gated-vs-malformed split.
+    */
+  private def walkChunk[A](bytes: Array[Byte], cm: ChunkMeta, v: PageValues[A]): Tally[A] = {
     if (cm.codec != CodecUncompressed && cm.codec != CodecSnappy &&
-      cm.codec != CodecZstd) return Gated
-    // INT32 decodes through the same path at width 4, sign-extended
-    val w = if (cm.physType == TInt32) 4 else 8
+      cm.codec != CodecZstd) return gatedTally
     val start =
       if (cm.dictOff >= 0 && cm.dictOff < cm.dataOff) cm.dictOff else cm.dataOff
     if (start < 0 || cm.totalCompressed <= 0 ||
-        start > bytes.length.toLong - cm.totalCompressed) return Bad
+        start > bytes.length.toLong - cm.totalCompressed) return badTally
     val chunkEnd = (start + cm.totalCompressed).toInt
     try {
-      var dict: Array[Long] = null
       var nPages = 0
       var consumed = 0L
-      var nNulls = 0L
-      var nVals = 0L
-      var minV = Long.MaxValue
-      var maxV = Long.MinValue
-      var sum = 0L
-      val keep = if (keepValues) Array.newBuilder[Long] else null
       var gated = false
       var pos = start.toInt
       while (consumed < cm.numValues && !gated) {
-        if (nPages + (if (dict == null) 0 else 1) >= MaxPages) throw Malformed
-        // ---- page header (thrift compact, same walker as the footer)
+        if (nPages + (if (v.dictSize < 0) 0 else 1) >= MaxPages) throw Malformed
+        // ---- page header
         val r = new ByteCursor(bytes, pos, chunkEnd)
         var pType = -1L; var uncomp = -1L; var comp = -1L
         var dNum = -1L; var dEnc = -1L; var dDefEnc = -1L
@@ -435,76 +419,29 @@ object ParquetPages {
             uncomp > MaxPageBytes || comp > chunkEnd - r.pos) throw Malformed
         val payloadOff = r.pos
         val payloadEnd = r.pos + comp.toInt
-        // ---- payload (decompressed to exactly uncompressed_page_size)
-        def payload(): Array[Byte] = cm.codec match {
-          case CodecUncompressed =>
-            if (comp != uncomp) throw Malformed
-            java.util.Arrays.copyOfRange(bytes, payloadOff, payloadEnd)
+        // ---- payload: [from, payloadEnd) decompressed to exactly `want` bytes
+        def inflate(from: Int, want: Long): Array[Byte] = cm.codec match {
           case CodecSnappy =>
-            val m = SnappyRaw.decode(bytes, payloadOff, payloadEnd,
-              maxOut = uncomp.toInt)
-            if (m.ok != 1 || m.decoded != uncomp) throw Malformed
+            val m = SnappyRaw.decode(bytes, from, payloadEnd, maxOut = want.toInt)
+            if (m.ok != 1 || m.decoded != want) throw Malformed
             m.out
-          case CodecZstd => // a page is ONE zstd frame ([[ZstdSeq]])
-            ZstdSeq.decodeFrame(
-                java.util.Arrays.copyOfRange(bytes, payloadOff, payloadEnd),
-                maxOut = uncomp.toInt)
-              .filter(_.length.toLong == uncomp)
+          case _ => // zstd: a page is ONE frame ([[ZstdSeq]])
+            ZstdSeq.decodeFrame(java.util.Arrays.copyOfRange(bytes, from, payloadEnd),
+                maxOut = want.toInt)
+              .filter(_.length.toLong == want)
               .getOrElse(throw Malformed)
         }
-        // w-byte little-endian, sign-extended (INT32/INT64 are signed)
-        def readLe(buf: Array[Byte], off: Int): Long = {
-          var v = 0L; var j = w - 1
-          while (j >= 0) { v = (v << 8) | (buf(off + j) & 0xffL); j -= 1 }
-          if (w == 4) v.toInt.toLong else v
+        def raw(from: Int): Array[Byte] = {
+          if (comp != uncomp) throw Malformed
+          java.util.Arrays.copyOfRange(bytes, from, payloadEnd)
         }
-        // value-section decode shared by V1 and V2 pages; null = a
-        // declined (gated) encoding
-        def decodeVals(buf: Array[Byte], q0: Int, enc: Long,
-            nNonNull: Int): Array[Long] = enc match {
-          case 0L => // PLAIN
-            if (nNonNull.toLong * w > buf.length - q0) throw Malformed
-            Array.tabulate(nNonNull)(i => readLe(buf, q0 + i * w))
-          case 2L | 8L => // PLAIN_DICTIONARY / RLE_DICTIONARY
-            if (dict == null) throw Malformed
-            if (q0 >= buf.length) throw Malformed
-            val bw = buf(q0) & 0xff
-            if (bw > 32) throw Malformed
-            val (idxs, _) = rleHybrid(buf, q0 + 1, buf.length, bw, nNonNull)
-            idxs.map { i =>
-              if (i < 0 || i >= dict.length) throw Malformed
-              dict(i)
-            }
-          case 5L => // DELTA_BINARY_PACKED (the V2 writer's int fallback)
-            deltaBinaryPacked(buf, q0, nNonNull, w)._1
-          case _ => null // DELTA_LENGTH/BYTE_ARRAY, BYTE_STREAM_SPLIT: declined
-        }
-        def accumulate(vals: Array[Long], total: Long, nNonNull: Int): Unit = {
-          var i = 0
-          while (i < vals.length) {
-            val v = vals(i)
-            sum += v
-            if (v < minV) minV = v
-            if (v > maxV) maxV = v
-            i += 1
-          }
-          if (keep != null) keep ++= vals
-          nVals += nNonNull
-          nNulls += total - nNonNull
-          consumed += total
-        }
+        def payload(): Array[Byte] =
+          if (cm.codec == CodecUncompressed) raw(payloadOff) else inflate(payloadOff, uncomp)
         pType match {
           case 2L => // dictionary page
-            if (dict != null || dictNum < 0) throw Malformed
+            if (v.dictSize >= 0 || dictNum < 0) throw Malformed
             if (dictEnc != EncPlain && dictEnc != EncPlainDict) throw Malformed
-            val buf = payload()
-            if (dictNum * w != buf.length.toLong) throw Malformed
-            dict = new Array[Long](dictNum.toInt)
-            var i = 0
-            while (i < dict.length) {
-              dict(i) = readLe(buf, i * w)
-              i += 1
-            }
+            v.dictionary(payload(), dictNum)
           case 0L => // data page V1
             if (dNum < 0 || dEnc < 0) throw Malformed
             nPages += 1
@@ -522,13 +459,12 @@ object ParquetPages {
                 if (len > buf.length - q) throw Malformed
                 val (defs, _) = rleHybrid(buf, q, q + len.toInt, 1, dNum.toInt)
                 q += len.toInt
-                nNonNull = defs.count(_ == 1)
+                nNonNull = ones(defs)
               }
             }
             if (!gated) {
-              val vals = decodeVals(buf, q, dEnc, nNonNull)
-              if (vals == null) gated = true
-              else accumulate(vals, dNum, nNonNull)
+              if (v.page(buf, q, dEnc, nNonNull, dNum)) consumed += dNum
+              else gated = true
             }
           case 3L => // data page V2: levels UNcompressed up front,
             // values (possibly compressed alone) after them
@@ -545,79 +481,135 @@ object ParquetPages {
               // must agree — a lying header is malformed, never trusted
               val (defs, _) = rleHybrid(bytes, payloadOff + v2RepLen.toInt,
                 payloadOff + lvlLen.toInt, 1, v2Num.toInt)
-              if (defs.count(_ == 1) != nNonNull) throw Malformed
+              if (ones(defs) != nNonNull) throw Malformed
             } else if (v2Nulls > 0 && v2DefLen == 0) throw Malformed
             val vStart = payloadOff + lvlLen.toInt
             val rawVals: Array[Byte] =
               if (v2Compressed && cm.codec != CodecUncompressed) {
                 val want = (uncomp - lvlLen).toInt
                 if (want < 0) throw Malformed
-                cm.codec match {
-                  case CodecSnappy =>
-                    val m = SnappyRaw.decode(bytes, vStart, payloadEnd,
-                      maxOut = want)
-                    if (m.ok != 1 || m.decoded != want.toLong) throw Malformed
-                    m.out
-                  case _ =>
-                    ZstdSeq.decodeFrame(
-                        java.util.Arrays.copyOfRange(bytes, vStart, payloadEnd),
-                        maxOut = want)
-                      .filter(_.length == want)
-                      .getOrElse(throw Malformed)
-                }
-              } else {
-                if (comp != uncomp) throw Malformed
-                java.util.Arrays.copyOfRange(bytes, vStart, payloadEnd)
-              }
-            val vals = decodeVals(rawVals, 0, v2Enc, nNonNull)
-            if (vals == null) gated = true
-            else accumulate(vals, v2Num, nNonNull)
+                inflate(vStart, want.toLong)
+              } else raw(vStart)
+            if (v.page(rawVals, 0, v2Enc, nNonNull, v2Num)) consumed += v2Num
+            else gated = true
           case _ => throw Malformed
         }
         pos = payloadEnd
       }
-      if (gated) Gated
-      else if (consumed != cm.numValues) Bad
-      else ChunkDecode(1, 0, nPages,
-        if (dict == null) 0L else dict.length.toLong, nVals, nNulls,
-        if (nVals == 0) 0L else minV, if (nVals == 0) 0L else maxV, sum,
-        if (keep == null) null else keep.result())
+      if (gated) gatedTally
+      else if (consumed != cm.numValues) badTally
+      else Tally(1, 0, nPages, math.max(v.dictSize, 0L), v.nValues, v.nNulls,
+        v.fold.min(v.nValues), v.fold.max(v.nValues), v.fold.total, v.kept)
     } catch {
-      case Malformed => Bad
-      case _: ArrayIndexOutOfBoundsException => Bad
-      case _: NegativeArraySizeException => Bad
+      case Malformed => badTally
+      case _: ArrayIndexOutOfBoundsException => badTally
+      case _: NegativeArraySizeException => badTally
     }
   }
 
-  /** Whole-file decode of the `colIdx`-th column: every row group's
-    * chunk, summed. One malformed chunk fails the FILE closed; one
-    * gated chunk gates it (counts zeroed either way — never a
-    * half-decoded census).
+  /** Every row group's `colIdx` chunk through `chunk`, folded into the
+    * file's tally: a gated chunk gates the file, else a failed one fails
+    * it; with `keepValues` the chunks' values concatenate in order.
+    * Also returns the chunk count.
     */
-  final case class FileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
-      nDictVals: Long, nValues: Long, nNulls: Long,
-      minV: Long, maxV: Long, sum: Long, values: Array[Long])
+  private def decodeFile[A: scala.reflect.ClassTag](bytes: Array[Byte], colIdx: Int,
+      keepValues: Boolean)(chunk: ChunkMeta => Tally[A]): (Int, Tally[A]) = {
+    val ts = chunkMetas(bytes, colIdx).map(chunk)
+    val file =
+      if (ts.exists(_.gated == 1)) gatedTally[A]
+      else if (ts.isEmpty || ts.exists(_.ok != 1)) badTally[A]
+      else {
+        val withVals = ts.filter(_.nValues > 0)
+        Tally(1, 0, ts.map(_.nPages).sum, ts.map(_.nDictVals).sum,
+          ts.map(_.nValues).sum, ts.map(_.nNulls).sum,
+          if (withVals.isEmpty) 0L else withVals.map(_.lo).min,
+          if (withVals.isEmpty) 0L else withVals.map(_.hi).max,
+          ts.map(_.total).sum,
+          if (keepValues) Array.concat(ts.map(_.values): _*) else null)
+      }
+    (ts.size, file)
+  }
+
+  /** INT64 (and INT32, at width 4, sign-extended) values: PLAIN,
+    * dictionary indices and DELTA_BINARY_PACKED.
+    */
+  private final class Int64Values(w: Int, keepValues: Boolean) extends PageValues[Long] {
+    private var dict: Array[Long] = null
+    private val keep = if (keepValues) Array.newBuilder[Long] else null
+    def dictSize: Long = if (dict == null) -1L else dict.length.toLong
+    def kept: Array[Long] = if (keep == null) null else keep.result()
+
+    // w-byte little-endian, sign-extended (INT32/INT64 are signed)
+    private def readLe(buf: Array[Byte], off: Int): Long = {
+      var v = 0L; var j = w - 1
+      while (j >= 0) { v = (v << 8) | (buf(off + j) & 0xffL); j -= 1 }
+      if (w == 4) v.toInt.toLong else v
+    }
+
+    def dictionary(buf: Array[Byte], n: Long): Unit = {
+      if (n * w != buf.length.toLong) throw Malformed
+      val d = new Array[Long](n.toInt)
+      var i = 0
+      while (i < d.length) { d(i) = readLe(buf, i * w); i += 1 }
+      dict = d
+    }
+
+    def page(buf: Array[Byte], q0: Int, enc: Long, nNonNull: Int, nLevels: Long): Boolean = {
+      val vals: Array[Long] = enc match {
+        case 0L => // PLAIN
+          if (nNonNull.toLong * w > buf.length - q0) throw Malformed
+          val out = new Array[Long](math.max(nNonNull, 0))
+          var i = 0
+          while (i < out.length) { out(i) = readLe(buf, q0 + i * w); i += 1 }
+          out
+        case 2L | 8L => // PLAIN_DICTIONARY / RLE_DICTIONARY
+          if (dict == null) throw Malformed
+          if (q0 >= buf.length) throw Malformed
+          val bw = buf(q0) & 0xff
+          if (bw > 32) throw Malformed
+          val (idxs, _) = rleHybrid(buf, q0 + 1, buf.length, bw, nNonNull)
+          val out = new Array[Long](idxs.length)
+          var i = 0
+          while (i < idxs.length) {
+            val k = idxs(i)
+            if (k < 0 || k >= dict.length) throw Malformed
+            out(i) = dict(k)
+            i += 1
+          }
+          out
+        case 5L => // DELTA_BINARY_PACKED (the V2 writer's int fallback)
+          deltaBinaryPacked(buf, q0, nNonNull, w)._1
+        case _ => return false // DELTA_LENGTH/BYTE_ARRAY, BYTE_STREAM_SPLIT: declined
+      }
+      var i = 0
+      while (i < vals.length) { fold.add(vals(i)); i += 1 }
+      if (keep != null) keep ++= vals
+      nValues += nNonNull
+      nNulls += nLevels - nNonNull
+      true
+    }
+  }
+
+  private def int64Tally(bytes: Array[Byte], cm: ChunkMeta, keepValues: Boolean): Tally[Long] =
+    if (!cm.flat || (cm.physType != TInt64 && cm.physType != TInt32)) gatedTally
+    else walkChunk(bytes, cm, new Int64Values(if (cm.physType == TInt32) 4 else 8, keepValues))
+
+  /** Decode one INT64 column chunk: dictionary page (when present)
+    * then every data page, def-levels and all. See the object doc for
+    * the gated-vs-malformed split.
+    */
+  def decodeInt64Chunk(bytes: Array[Byte], cm: ChunkMeta,
+      keepValues: Boolean = false): ChunkDecode = {
+    val t = int64Tally(bytes, cm, keepValues)
+    ChunkDecode(t.ok, t.gated, t.nPages, t.nDictVals, t.nValues, t.nNulls,
+      t.lo, t.hi, t.total, t.values)
+  }
 
   def decodeInt64File(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): FileDecode = {
-    val cms = chunkMetas(bytes, colIdx)
-    if (cms.isEmpty) return FileDecode(0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    val decodes = cms.map(decodeInt64Chunk(bytes, _, keepValues))
-    if (decodes.exists(_.gated == 1))
-      FileDecode(0, 1, cms.size, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    else if (decodes.exists(_.ok != 1))
-      FileDecode(0, 0, cms.size, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    else {
-      val withVals = decodes.filter(_.nValues > 0)
-      FileDecode(1, 0, cms.size, decodes.map(_.nPages).sum,
-        decodes.map(_.nDictVals).sum, decodes.map(_.nValues).sum,
-        decodes.map(_.nNulls).sum,
-        if (withVals.isEmpty) 0L else withVals.map(_.minV).min,
-        if (withVals.isEmpty) 0L else withVals.map(_.maxV).max,
-        decodes.map(_.sum).sum,
-        if (!keepValues) null else decodes.toArray.flatMap(d =>
-          Option(d.values).getOrElse(Array.emptyByteArray.map(_.toLong))))
-    }
+    val (nRgs, t) = decodeFile(bytes, colIdx, keepValues)(int64Tally(bytes, _, keepValues))
+    FileDecode(t.ok, t.gated, nRgs, t.nPages, t.nDictVals, t.nValues, t.nNulls,
+      t.lo, t.hi, t.total, t.values)
   }
 
   /** Census DataFrame over (id, parquet-bytes): per file, the decoded
@@ -643,89 +635,66 @@ object ParquetPages {
   // lengths · concatenated bytes) and DELTA_BYTE_ARRAY (delta-packed
   // PREFIX lengths · DELTA_LENGTH-coded suffixes; value = previous
   // value's prefix + suffix — front coding), both riding
-  // [[deltaBinaryPacked]].
+  // [[deltaBinaryPacked]]. The tallies fold value LENGTHS.
 
   private val TByteArray = 6
 
-  final case class BinChunkDecode(ok: Int, gated: Int, nPages: Int,
-      nDictVals: Long, nValues: Long, nNulls: Long,
-      sumLen: Long, minLen: Long, maxLen: Long, values: Array[Array[Byte]])
+  private final class BinaryValues(keepValues: Boolean) extends PageValues[Array[Byte]] {
+    private var dict: Array[Array[Byte]] = null
+    private val keep = if (keepValues) Array.newBuilder[Array[Byte]] else null
+    def dictSize: Long = if (dict == null) -1L else dict.length.toLong
+    def kept: Array[Array[Byte]] = if (keep == null) null else keep.result()
 
-  private val BinGated = BinChunkDecode(0, 1, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-  private val BinBad = BinChunkDecode(0, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
+    // `u32le length · bytes` × n, exact span consumption
+    private def readPlainValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
+      val out = new Array[Array[Byte]](n)
+      var q = off
+      var i = 0
+      while (i < n) {
+        if (4 > buf.length - q) throw Malformed
+        val len = Bytes.le32u(buf, q)
+        q += 4
+        if (len > buf.length - q) throw Malformed
+        out(i) = java.util.Arrays.copyOfRange(buf, q, q + len.toInt)
+        q += len.toInt
+        i += 1
+      }
+      out
+    }
+    private def deltaLengthValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
+      val (lens, dataStart) = deltaBinaryPacked(buf, off, n, 4)
+      var q = dataStart
+      Array.tabulate(n) { i =>
+        val len = lens(i)
+        if (len < 0 || len > buf.length - q) throw Malformed
+        val v = java.util.Arrays.copyOfRange(buf, q, q + len.toInt)
+        q += len.toInt
+        v
+      }
+    }
+    private def deltaByteArrayValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
+      val (prefixes, sufStart) = deltaBinaryPacked(buf, off, n, 4)
+      val suffixes = deltaLengthValues(buf, sufStart, n)
+      val out = new Array[Array[Byte]](n)
+      var i = 0
+      while (i < n) {
+        val p = prefixes(i)
+        if (p < 0 || (i == 0 && p != 0) ||
+          (i > 0 && p > out(i - 1).length)) throw Malformed
+        val v = new Array[Byte](p.toInt + suffixes(i).length)
+        if (i > 0) System.arraycopy(out(i - 1), 0, v, 0, p.toInt)
+        System.arraycopy(suffixes(i), 0, v, p.toInt, suffixes(i).length)
+        out(i) = v
+        i += 1
+      }
+      out
+    }
 
-  /** Decode one BYTE_ARRAY column chunk. Mirrors [[decodeInt64Chunk]]
-    * (same gated-vs-malformed split, same page walk); see the section
-    * comment for the value encodings covered.
-    */
-  def decodeBinaryChunk(bytes: Array[Byte], cm: ChunkMeta,
-      keepValues: Boolean = false): BinChunkDecode = {
-    if (!cm.flat || cm.physType != TByteArray) return BinGated
-    if (cm.codec != CodecUncompressed && cm.codec != CodecSnappy &&
-      cm.codec != CodecZstd) return BinGated
-    val start =
-      if (cm.dictOff >= 0 && cm.dictOff < cm.dataOff) cm.dictOff else cm.dataOff
-    if (start < 0 || cm.totalCompressed <= 0 ||
-        start > bytes.length.toLong - cm.totalCompressed) return BinBad
-    val chunkEnd = (start + cm.totalCompressed).toInt
-    try {
-      var dict: Array[Array[Byte]] = null
-      var nPages = 0
-      var consumed = 0L
-      var nNulls = 0L
-      var nVals = 0L
-      var minLen = Long.MaxValue
-      var maxLen = Long.MinValue
-      var sumLen = 0L
-      val keep = if (keepValues) Array.newBuilder[Array[Byte]] else null
-      var gated = false
-      var pos = start.toInt
-      // `u32le length · bytes` × n, exact span consumption
-      def readPlainValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
-        val out = new Array[Array[Byte]](n)
-        var q = off
-        var i = 0
-        while (i < n) {
-          if (4 > buf.length - q) throw Malformed
-          val len = Bytes.le32u(buf, q)
-          q += 4
-          if (len > buf.length - q) throw Malformed
-          out(i) = java.util.Arrays.copyOfRange(buf, q, q + len.toInt)
-          q += len.toInt
-          i += 1
-        }
-        out
-      }
-      def deltaLengthValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
-        val (lens, dataStart) = deltaBinaryPacked(buf, off, n, 4)
-        var q = dataStart
-        Array.tabulate(n) { i =>
-          val len = lens(i)
-          if (len < 0 || len > buf.length - q) throw Malformed
-          val v = java.util.Arrays.copyOfRange(buf, q, q + len.toInt)
-          q += len.toInt
-          v
-        }
-      }
-      def deltaByteArrayValues(buf: Array[Byte], off: Int, n: Int): Array[Array[Byte]] = {
-        val (prefixes, sufStart) = deltaBinaryPacked(buf, off, n, 4)
-        val suffixes = deltaLengthValues(buf, sufStart, n)
-        val out = new Array[Array[Byte]](n)
-        var i = 0
-        while (i < n) {
-          val p = prefixes(i)
-          if (p < 0 || (i == 0 && p != 0) ||
-            (i > 0 && p > out(i - 1).length)) throw Malformed
-          val v = new Array[Byte](p.toInt + suffixes(i).length)
-          if (i > 0) System.arraycopy(out(i - 1), 0, v, 0, p.toInt)
-          System.arraycopy(suffixes(i), 0, v, p.toInt, suffixes(i).length)
-          out(i) = v
-          i += 1
-        }
-        out
-      }
-      def decodeVals(buf: Array[Byte], q0: Int, enc: Long,
-          nNonNull: Int): Array[Array[Byte]] = enc match {
+    def dictionary(buf: Array[Byte], n: Long): Unit =
+      dict = readPlainValues(buf, 0, n.toInt)
+
+    def page(buf: Array[Byte], q0: Int, enc: Long, nNonNull: Int, nLevels: Long): Boolean = {
+      val vals: Array[Array[Byte]] = enc match {
         case 0L => readPlainValues(buf, q0, nNonNull)
         case 2L | 8L =>
           if (dict == null) throw Malformed
@@ -735,207 +704,50 @@ object ParquetPages {
             val bw = buf(q0) & 0xff
             if (bw > 32) throw Malformed
             val (idxs, _) = rleHybrid(buf, q0 + 1, buf.length, bw, nNonNull)
-            idxs.map { i =>
-              if (i < 0 || i >= dict.length) throw Malformed
-              dict(i)
+            val out = new Array[Array[Byte]](idxs.length)
+            var i = 0
+            while (i < idxs.length) {
+              val k = idxs(i)
+              if (k < 0 || k >= dict.length) throw Malformed
+              out(i) = dict(k)
+              i += 1
             }
+            out
           }
         case 6L => deltaLengthValues(buf, q0, nNonNull)
         case 7L => deltaByteArrayValues(buf, q0, nNonNull)
-        case _ => null // BYTE_STREAM_SPLIT etc: declined
+        case _ => return false // BYTE_STREAM_SPLIT etc: declined
       }
-      def accumulate(vals: Array[Array[Byte]], total: Long): Unit = {
-        var i = 0
-        while (i < vals.length) {
-          val len = vals(i).length.toLong
-          sumLen += len
-          if (len < minLen) minLen = len
-          if (len > maxLen) maxLen = len
-          i += 1
-        }
-        if (keep != null) keep ++= vals
-        nVals += vals.length
-        nNulls += total - vals.length
-        consumed += total
-      }
-      while (consumed < cm.numValues && !gated) {
-        if (nPages + (if (dict == null) 0 else 1) >= MaxPages) throw Malformed
-        val r = new ByteCursor(bytes, pos, chunkEnd)
-        var pType = -1L; var uncomp = -1L; var comp = -1L
-        var dNum = -1L; var dEnc = -1L; var dDefEnc = -1L
-        var dictNum = -1L; var dictEnc = -1L
-        var v2Num = -1L; var v2Nulls = -1L; var v2Enc = -1L
-        var v2DefLen = -1L; var v2RepLen = -1L; var v2Compressed = true
-        walkStruct(r, 0) { (id, tpe) =>
-          (id, tpe) match {
-            case (1, 5) => pType = r.zigzag(); true
-            case (2, 5) => uncomp = r.zigzag(); true
-            case (3, 5) => comp = r.zigzag(); true
-            case (5, 12) =>
-              walkStruct(r, 1) { (fid, ftpe) =>
-                (fid, ftpe) match {
-                  case (1, 5) => dNum = r.zigzag(); true
-                  case (2, 5) => dEnc = r.zigzag(); true
-                  case (3, 5) => dDefEnc = r.zigzag(); true
-                  case _ => false
-                }
-              }
-              true
-            case (7, 12) =>
-              walkStruct(r, 1) { (fid, ftpe) =>
-                (fid, ftpe) match {
-                  case (1, 5) => dictNum = r.zigzag(); true
-                  case (2, 5) => dictEnc = r.zigzag(); true
-                  case _ => false
-                }
-              }
-              true
-            case (8, 12) =>
-              walkStruct(r, 1) { (fid, ftpe) =>
-                (fid, ftpe) match {
-                  case (1, 5) => v2Num = r.zigzag(); true
-                  case (2, 5) => v2Nulls = r.zigzag(); true
-                  case (4, 5) => v2Enc = r.zigzag(); true
-                  case (5, 5) => v2DefLen = r.zigzag(); true
-                  case (6, 5) => v2RepLen = r.zigzag(); true
-                  case (7, 1) => v2Compressed = true; true
-                  case (7, 2) => v2Compressed = false; true
-                  case _ => false
-                }
-              }
-              true
-            case _ => false
-          }
-        }
-        if (pType < 0 || uncomp < 0 || comp < 0 ||
-            uncomp > MaxPageBytes || comp > chunkEnd - r.pos) throw Malformed
-        val payloadOff = r.pos
-        val payloadEnd = r.pos + comp.toInt
-        def payload(): Array[Byte] = cm.codec match {
-          case CodecUncompressed =>
-            if (comp != uncomp) throw Malformed
-            java.util.Arrays.copyOfRange(bytes, payloadOff, payloadEnd)
-          case CodecSnappy =>
-            val m = SnappyRaw.decode(bytes, payloadOff, payloadEnd,
-              maxOut = uncomp.toInt)
-            if (m.ok != 1 || m.decoded != uncomp) throw Malformed
-            m.out
-          case CodecZstd =>
-            ZstdSeq.decodeFrame(
-                java.util.Arrays.copyOfRange(bytes, payloadOff, payloadEnd),
-                maxOut = uncomp.toInt)
-              .filter(_.length.toLong == uncomp)
-              .getOrElse(throw Malformed)
-        }
-        pType match {
-          case 2L => // dictionary page: PLAIN byte arrays
-            if (dict != null || dictNum < 0) throw Malformed
-            if (dictEnc != EncPlain && dictEnc != EncPlainDict) throw Malformed
-            val buf = payload()
-            dict = readPlainValues(buf, 0, dictNum.toInt)
-          case 0L => // data page V1
-            if (dNum < 0 || dEnc < 0) throw Malformed
-            nPages += 1
-            val buf = payload()
-            var q = 0
-            var nNonNull = dNum.toInt
-            if (cm.maxDef == 1) {
-              if (dDefEnc != EncRle) { gated = true }
-              else {
-                if (4 > buf.length - q) throw Malformed
-                val len = Bytes.le32u(buf, q)
-                q += 4
-                if (len > buf.length - q) throw Malformed
-                val (defs, _) = rleHybrid(buf, q, q + len.toInt, 1, dNum.toInt)
-                q += len.toInt
-                nNonNull = defs.count(_ == 1)
-              }
-            }
-            if (!gated) {
-              val vals = decodeVals(buf, q, dEnc, nNonNull)
-              if (vals == null) gated = true
-              else accumulate(vals, dNum)
-            }
-          case 3L => // data page V2
-            if (v2Num < 0 || v2Enc < 0 || v2DefLen < 0 || v2RepLen < 0 ||
-              v2Nulls < 0) throw Malformed
-            nPages += 1
-            if (v2RepLen != 0) throw Malformed
-            val lvlLen = v2RepLen + v2DefLen
-            if (lvlLen > comp || lvlLen > uncomp) throw Malformed
-            val nNonNull = (v2Num - v2Nulls).toInt
-            if (nNonNull < 0) throw Malformed
-            if (cm.maxDef == 1 && v2DefLen > 0) {
-              val (defs, _) = rleHybrid(bytes, payloadOff + v2RepLen.toInt,
-                payloadOff + lvlLen.toInt, 1, v2Num.toInt)
-              if (defs.count(_ == 1) != nNonNull) throw Malformed
-            } else if (v2Nulls > 0 && v2DefLen == 0) throw Malformed
-            val vStart = payloadOff + lvlLen.toInt
-            val rawVals: Array[Byte] =
-              if (v2Compressed && cm.codec != CodecUncompressed) {
-                val want = (uncomp - lvlLen).toInt
-                if (want < 0) throw Malformed
-                cm.codec match {
-                  case CodecSnappy =>
-                    val m = SnappyRaw.decode(bytes, vStart, payloadEnd,
-                      maxOut = want)
-                    if (m.ok != 1 || m.decoded != want.toLong) throw Malformed
-                    m.out
-                  case _ =>
-                    ZstdSeq.decodeFrame(
-                        java.util.Arrays.copyOfRange(bytes, vStart, payloadEnd),
-                        maxOut = want)
-                      .filter(_.length == want)
-                      .getOrElse(throw Malformed)
-                }
-              } else {
-                if (comp != uncomp) throw Malformed
-                java.util.Arrays.copyOfRange(bytes, vStart, payloadEnd)
-              }
-            val vals = decodeVals(rawVals, 0, v2Enc, nNonNull)
-            if (vals == null) gated = true
-            else accumulate(vals, v2Num)
-          case _ => throw Malformed
-        }
-        pos = payloadEnd
-      }
-      if (gated) BinGated
-      else if (consumed != cm.numValues) BinBad
-      else BinChunkDecode(1, 0, nPages,
-        if (dict == null) 0L else dict.length.toLong, nVals, nNulls,
-        sumLen, if (nVals == 0) 0L else minLen, if (nVals == 0) 0L else maxLen,
-        if (keep == null) null else keep.result())
-    } catch {
-      case Malformed => BinBad
-      case _: ArrayIndexOutOfBoundsException => BinBad
-      case _: NegativeArraySizeException => BinBad
+      var i = 0
+      while (i < vals.length) { fold.add(vals(i).length.toLong); i += 1 }
+      if (keep != null) keep ++= vals
+      nValues += vals.length
+      nNulls += nLevels - vals.length
+      true
     }
   }
 
-  final case class BinFileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
-      nDictVals: Long, nValues: Long, nNulls: Long,
-      sumLen: Long, minLen: Long, maxLen: Long, values: Array[Array[Byte]])
+  private def binaryTally(bytes: Array[Byte], cm: ChunkMeta,
+      keepValues: Boolean): Tally[Array[Byte]] =
+    if (!cm.flat || cm.physType != TByteArray) gatedTally
+    else walkChunk(bytes, cm, new BinaryValues(keepValues))
+
+  /** Decode one BYTE_ARRAY column chunk: the same page walk as
+    * [[decodeInt64Chunk]]; see the section comment for the value
+    * encodings covered.
+    */
+  def decodeBinaryChunk(bytes: Array[Byte], cm: ChunkMeta,
+      keepValues: Boolean = false): BinChunkDecode = {
+    val t = binaryTally(bytes, cm, keepValues)
+    BinChunkDecode(t.ok, t.gated, t.nPages, t.nDictVals, t.nValues, t.nNulls,
+      t.total, t.lo, t.hi, t.values)
+  }
 
   def decodeBinaryFile(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): BinFileDecode = {
-    val cms = chunkMetas(bytes, colIdx)
-    if (cms.isEmpty)
-      return BinFileDecode(0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    val decodes = cms.map(decodeBinaryChunk(bytes, _, keepValues))
-    if (decodes.exists(_.gated == 1))
-      BinFileDecode(0, 1, cms.size, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    else if (decodes.exists(_.ok != 1))
-      BinFileDecode(0, 0, cms.size, 0, 0L, 0L, 0L, 0L, 0L, 0L, null)
-    else {
-      val withVals = decodes.filter(_.nValues > 0)
-      BinFileDecode(1, 0, cms.size, decodes.map(_.nPages).sum,
-        decodes.map(_.nDictVals).sum, decodes.map(_.nValues).sum,
-        decodes.map(_.nNulls).sum, decodes.map(_.sumLen).sum,
-        if (withVals.isEmpty) 0L else withVals.map(_.minLen).min,
-        if (withVals.isEmpty) 0L else withVals.map(_.maxLen).max,
-        if (!keepValues) null
-        else decodes.toArray.flatMap(d => Option(d.values).getOrElse(Array.empty)))
-    }
+    val (nRgs, t) = decodeFile(bytes, colIdx, keepValues)(binaryTally(bytes, _, keepValues))
+    BinFileDecode(t.ok, t.gated, nRgs, t.nPages, t.nDictVals, t.nValues, t.nNulls,
+      t.total, t.lo, t.hi, t.values)
   }
 
   /** Census DataFrame over (id, parquet-bytes) for a BYTE_ARRAY

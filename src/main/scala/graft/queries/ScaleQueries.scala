@@ -1127,8 +1127,8 @@ object ScaleQueries {
     * contribute 2⁴⁹ each, so `s_scaled` is order-independent and
     * engine-portable; only the final α·m²/S division (and the
     * small-range linear-counting branch m·ln(m/V), the q57-proven ln
-    * recipe) happens in doubles, with IDENTICAL expression text both
-    * sides. The exact side is the per-key distinct shuffle the sketch
+    * recipe) happens in doubles, the same expression both sides (the
+    * Spark side's literals D-suffixed, so they stay DOUBLE). The exact side is the per-key distinct shuffle the sketch
     * exists to avoid — run here precisely to measure the estimator.
     */
   val q375 = Q("q375_hll_audit",
@@ -1153,8 +1153,11 @@ object ScaleQueries {
           "CAST(4096 - n_present AS BIGINT) AS v_zero",
           "s_present + (4096 - n_present) * 562949953421312 AS s_scaled")
         .selectExpr("flag", "n_exact", "v_zero", "s_scaled",
-          """round(0.7213 / (1.0 + 1.079 / 4096.0) * 4096.0 * 4096.0
-            | * 562949953421312.0 / CAST(s_scaled AS DOUBLE), 4) AS est_raw"""
+          // D-suffixed: DOUBLE arithmetic, as the oracle evaluates the same
+          // text (bare literals are DECIMAL in Spark, and DECIMAL division
+          // rounds 1.079 / 4096.0 to 9 places)
+          """round(0.7213D / (1.0D + 1.079D / 4096.0D) * 4096.0D * 4096.0D
+            | * 562949953421312.0D / CAST(s_scaled AS DOUBLE), 4) AS est_raw"""
             .stripMargin)
         .selectExpr("flag", "n_exact", "v_zero", "s_scaled", "est_raw",
           """round(CASE WHEN est_raw <= 10240.0 AND v_zero > 0

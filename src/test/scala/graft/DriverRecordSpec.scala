@@ -25,6 +25,13 @@ class DriverRecordSpec extends AnyFunSuite {
     assert(picked.map(SparkEntry.shortName) == Seq("q38"))
   }
 
+  test("a selector entry that picks no query is an error naming it") {
+    val e = intercept[IllegalArgumentException](SparkEntry.selector("q01,q1,q38"))
+    assert(e.getMessage.endsWith(": q1"), e.getMessage)
+    val picked = SparkEntry.allQueries.map(_.name).filter(SparkEntry.selector(" q01 ,q38"))
+    assert(picked.map(SparkEntry.shortName) == Seq("q01", "q38"))
+  }
+
   test("Json.string escapes quote, backslash and every control char") {
     val s = "a\"b\\c\nd\re\tf\u0001g"
     assert(Json.string(s) == "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")

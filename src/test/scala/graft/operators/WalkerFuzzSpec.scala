@@ -44,6 +44,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WalkerFuzzSpec extends AnyFunSuite {
 
+  import FuzzInputs.{mutate, str}
+
   /** One walker under fuzz: a seeded valid-input generator, a total
     * parse function returning (recordCount, trailingBytes), and the
     * two monotonicity flags justified per-format above.
@@ -53,9 +55,6 @@ class WalkerFuzzSpec extends AnyFunSuite {
       gen: scala.util.Random => Array[Byte],
       parse: Array[Byte] => (Long, Long),
       appendStable: Boolean = true)
-
-  private def str(rnd: scala.util.Random, n: Int): String =
-    (0 until n).map(i => ('a' + rnd.nextInt(26)).toChar).mkString
 
   private val walkers: Seq[Fuzzed] = Seq(
     Fuzzed("warc",
@@ -192,12 +191,7 @@ class WalkerFuzzSpec extends AnyFunSuite {
         // while the walked prefix (the monotone quantity) is files
         (lm.files.size.toLong, 0L) }),
     Fuzzed("parquet-page-index",
-      rnd => ParquetFooter.encodeSyntheticPaged(
-        Seq("a", "b", "c"), 1 + rnd.nextInt(3), 10L + rnd.nextInt(100),
-        rnd.nextInt(3),
-        rg => (0 until 1 + rnd.nextInt(4)).map(p =>
-          (rnd.nextInt(5) == 0, rg * 100L + p * 10L, rg * 100L + p * 10L + 9,
-            rnd.nextInt(10).toLong))),
+      FuzzInputs.parquetPageIndex,
       b => {
         val rgs = ParquetFooter.pageIndexCensus(b, 0)
         (rgs.map {
@@ -278,14 +272,7 @@ class WalkerFuzzSpec extends AnyFunSuite {
         (m.ok.toLong + m.decoded + m.nSequences, 0L) },
       appendStable = false), // appended bytes violate exact consumption
     Fuzzed("orc-tail",
-      rnd => OrcOps.encodeSynthetic(1 + rnd.nextInt(4), (1 + rnd.nextInt(1000)).toLong,
-        1 + rnd.nextInt(6), Seq(0L, 0L, 1L, 2L, 5L)(rnd.nextInt(5)),
-        rnd.nextInt(10).toLong, rnd.nextInt(200),
-        colStats = (0 until rnd.nextInt(4)).map(_ =>
-          OrcOps.ColStat(rnd.nextInt(1000).toLong,
-            if (rnd.nextBoolean()) Some((rnd.nextLong(), rnd.nextLong(), rnd.nextLong()))
-            else None,
-            rnd.nextBoolean()))),
+      FuzzInputs.orcTail,
       b => { val m = OrcOps.parse(b)
         (m.nStripes.toLong + m.nTypes + m.valid + m.nColStats + m.nIntStats +
           m.offsetsMonotonic, 0L) },
@@ -306,50 +293,27 @@ class WalkerFuzzSpec extends AnyFunSuite {
         rnd.nextLong()),
       b => { val m = AvroOps.parse(b); (m.nMetaEntries.toLong + m.nBlocks, m.trailingBytes) }),
     Fuzzed("parquet-footer",
-      rnd => ParquetFooter.encodeSynthetic(1 + rnd.nextInt(2),
-        (0 until 1 + rnd.nextInt(20)).map(i => s"c$i"), 1 + rnd.nextInt(4),
-        (1 + rnd.nextInt(1000)).toLong, (1 + rnd.nextInt(100000)).toLong,
-        c => rnd.nextInt(9), s"w${rnd.nextInt(100)}", rnd.nextInt(300)),
+      FuzzInputs.parquetFooter,
       b => { val m = ParquetFooter.parse(b)
         (m.nSchema.toLong + m.nColumnChunks, math.max(0L, m.dataBytes)) },
       appendStable = false), // discovery starts at the file END, like ZIP
     Fuzzed("parquet-pages",
-      rnd => ParquetPages.encodeInt64File(
-        (0 until 1 + rnd.nextInt(3)).map { _ =>
-          (0 until 1 + rnd.nextInt(3)).map { _ =>
-            (0 until 1 + rnd.nextInt(60)).map(_ =>
-              if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(40).toLong))
-          }
-        },
-        useDict = rnd.nextBoolean(), codec = rnd.nextInt(2)),
+      FuzzInputs.parquetPages,
       b => { val d = ParquetPages.decodeInt64File(b, 0)
         (d.nValues + d.nNulls + d.nPages, 0L) },
       appendStable = false), // footer discovery starts at the file END
     Fuzzed("parquet-pages-binary",
-      rnd => ParquetPages.encodeBinaryFile(
-        Seq((0 until 1 + rnd.nextInt(3)).map { _ =>
-          (0 until 1 + rnd.nextInt(40)).map(_ =>
-            if (rnd.nextInt(5) == 0) None
-            else Some(str(rnd, rnd.nextInt(12)).getBytes("UTF-8")))
-        }),
-        encoding = Seq(0, 8, 6, 7)(rnd.nextInt(4)), codec = rnd.nextInt(2)),
+      FuzzInputs.parquetPagesBinary,
       b => { val d = ParquetPages.decodeBinaryFile(b, 0)
         (d.nValues + d.nNulls + d.nPages, 0L) },
       appendStable = false), // footer discovery starts at the file END
     Fuzzed("orc-data",
-      rnd => OrcData.encodeSyntheticOrc(
-        (0 until 1 + rnd.nextInt(200)).map(i =>
-          if (rnd.nextInt(6) == 0) None
-          else Some((rnd.nextInt(2000) - 1000).toLong))),
+      FuzzInputs.orcData,
       b => { val d = OrcData.decodeIntFile(b, 0)
         (d.nValues + d.nNulls + d.nStripes, 0L) },
       appendStable = false), // postscript discovery starts at the file END
     Fuzzed("orc-strings",
-      rnd => OrcData.encodeSyntheticOrcStrings(
-        (0 until 1 + rnd.nextInt(80)).map(_ =>
-          if (rnd.nextInt(6) == 0) None
-          else Some(str(rnd, rnd.nextInt(10)).getBytes("UTF-8"))),
-        useDict = rnd.nextBoolean()),
+      FuzzInputs.orcStrings,
       b => { val d = OrcData.decodeStringFile(b, 0)
         (d.nValues + d.nNulls + d.nStripes, 0L) },
       appendStable = false), // postscript discovery starts at the file END
@@ -432,58 +396,6 @@ class WalkerFuzzSpec extends AnyFunSuite {
       },
       b => (VideoCodec.decodeMjpegAvi(b).map(_._3.size.toLong).getOrElse(0L), 0L),
       appendStable = false))
-
-  /** Mutation kinds. Kind 2 is truncation, kind 3 is append — the two
-    * the monotonicity assertions key on.
-    */
-  private def mutate(rnd: scala.util.Random, base: Array[Byte]): (Int, Array[Byte]) = {
-    val n = base.length
-    val kind = rnd.nextInt(8)
-    val out: Array[Byte] = kind match {
-      case 0 if n > 0 => // single bit flip
-        val b = base.clone()
-        val p = rnd.nextInt(n)
-        b(p) = (b(p) ^ (1 << rnd.nextInt(8))).toByte
-        b
-      case 1 if n > 0 => // burst overwrite, 1–8 bytes
-        val b = base.clone()
-        val p = rnd.nextInt(n)
-        val len = math.min(1 + rnd.nextInt(8), n - p)
-        var i = 0
-        while (i < len) { b(p + i) = rnd.nextInt(256).toByte; i += 1 }
-        b
-      case 2 => // truncation (possibly to empty)
-        base.take(rnd.nextInt(n + 1))
-      case 3 => // garbage append, 1–64 bytes
-        base ++ Array.fill(1 + rnd.nextInt(64))(rnd.nextInt(256).toByte)
-      case 4 if n > 0 => // zero-fill window ≤16
-        val b = base.clone()
-        val p = rnd.nextInt(n)
-        val len = math.min(1 + rnd.nextInt(16), n - p)
-        java.util.Arrays.fill(b, p, p + len, 0.toByte)
-        b
-      case 5 if n > 0 => // 0xFF-fill window ≤8: the huge-length injection
-        val b = base.clone()
-        val p = rnd.nextInt(n)
-        val len = math.min(1 + rnd.nextInt(8), n - p)
-        java.util.Arrays.fill(b, p, p + len, 0xFF.toByte)
-        b
-      case 6 if n > 1 => // splice a slice over another position
-        val b = base.clone()
-        val from = rnd.nextInt(n)
-        val len = math.min(1 + rnd.nextInt(32), n - from)
-        val to = rnd.nextInt(n - len + 1)
-        System.arraycopy(base, from, b, to, len)
-        b
-      case _ if n > 0 => // header bit flip (first 16 bytes)
-        val b = base.clone()
-        val p = rnd.nextInt(math.min(16, n))
-        b(p) = (b(p) ^ (1 << rnd.nextInt(8))).toByte
-        b
-      case _ => base // n == 0 fallthrough for in-place kinds
-    }
-    (kind, out)
-  }
 
   private val Trials = 500
   private val WallBudgetNanos = 10L * 1000 * 1000 * 1000

@@ -5,9 +5,11 @@ package graft
   *
   *   runMain graft.Probe <sfDir> <name1,name2,...> [explain] [plans=<dir>:<suffix>] [jobs]
   *
-  * `plans=/root/repo/plans/r15:before` writes each query's
+  * `plans=plans/r15:before` writes each query's
   * `.explain("formatted")` output to `<dir>/<qNN>_<suffix>.txt` — the
-  * artifact the optimization rounds commit next to the code.
+  * artifact the optimization rounds commit next to the code. Given
+  * without `explain` or `jobs`, it plans each query once and times
+  * nothing.
   * `jobs` prints every Spark job's wall time and call site for the
   * third (warm) run, so per-round loop overhead is visible without the UI.
   *
@@ -51,33 +53,36 @@ object Probe {
           stageLog.add((si.stageId, si.numTasks, wall, tm.executorRunTime, detail))
         }
     })
+    val timed = explain || showJobs || plansTo.isEmpty
     for (q <- SparkEntry.allQueries.filter(q => picked(q.name))) {
-      val times = (1 to 3).map { i =>
-        if (showJobs && i == 3) { jobLog.clear(); stageLog.clear(); capture = true }
-        val t0 = System.nanoTime()
-        q.fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (showJobs && i == 3) capture = false
-        dt
-      }
-      // same per-query cleanup as Bench: localCheckpoint blocks otherwise
-      // accumulate across queries and block-manager pressure skews the
-      // later measurements (q198 measured 15.9 s here vs 3.7 s clean)
-      org.apache.spark.sql.graft.GraftSqlBridge.releaseAll(spark)
-      println(f"PROBE ${q.name}: ${times.map(t => f"$t%.2f").mkString(" ")} s")
-      if (showJobs) {
-        import scala.jdk.CollectionConverters._
-        val rows = jobLog.asScala.toSeq.sortBy(_._1)
-        val done = rows.collect { case (id, (d, s, e)) if e > 0 => (id, d, e - s) }
-        println(f"  jobs: ${done.size}, total ${done.map(_._3).sum} ms")
-        done.sortBy(-_._3).take(15).foreach { case (id, d, ms) =>
-          println(f"  job $id%4d ${ms}%6d ms  ${d.take(90)}") }
-        val stages = stageLog.toArray(Array.empty[(Int, Int, Long, Long, String)])
-        val (nst, ntask) = (stages.length, stages.map(_._2).sum)
-        println(f"  stages: $nst, tasks: $ntask, " +
-          f"stageWall ${stages.map(_._3).sum} ms, taskRun ${stages.map(_._4).sum} ms")
-        stages.sortBy(-_._4).take(10).foreach { case (id, n, w, r, nm) =>
-          println(f"  stage $id%4d wall $w%5d ms run $r%6d ms tasks $n%3d  $nm") }
+      if (timed) {
+        val times = (1 to 3).map { i =>
+          if (showJobs && i == 3) { jobLog.clear(); stageLog.clear(); capture = true }
+          val t0 = System.nanoTime()
+          q.fn(spark, sfDir).count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          if (showJobs && i == 3) capture = false
+          dt
+        }
+        // same per-query cleanup as Bench: localCheckpoint blocks otherwise
+        // accumulate across queries and block-manager pressure skews the
+        // later measurements (q198 measured 15.9 s here vs 3.7 s clean)
+        org.apache.spark.sql.graft.GraftSqlBridge.releaseAll(spark)
+        println(f"PROBE ${q.name}: ${times.map(t => f"$t%.2f").mkString(" ")} s")
+        if (showJobs) {
+          import scala.jdk.CollectionConverters._
+          val rows = jobLog.asScala.toSeq.sortBy(_._1)
+          val done = rows.collect { case (id, (d, s, e)) if e > 0 => (id, d, e - s) }
+          println(f"  jobs: ${done.size}, total ${done.map(_._3).sum} ms")
+          done.sortBy(-_._3).take(15).foreach { case (id, d, ms) =>
+            println(f"  job $id%4d ${ms}%6d ms  ${d.take(90)}") }
+          val stages = stageLog.toArray(Array.empty[(Int, Int, Long, Long, String)])
+          val (nst, ntask) = (stages.length, stages.map(_._2).sum)
+          println(f"  stages: $nst, tasks: $ntask, " +
+            f"stageWall ${stages.map(_._3).sum} ms, taskRun ${stages.map(_._4).sum} ms")
+          stages.sortBy(-_._4).take(10).foreach { case (id, n, w, r, nm) =>
+            println(f"  stage $id%4d wall $w%5d ms run $r%6d ms tasks $n%3d  $nm") }
+        }
       }
       if (explain || plansTo.isDefined) {
         val df = q.fn(spark, sfDir)
@@ -95,6 +100,7 @@ object Probe {
             out.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           println(s"  plan -> $p")
         }
+        if (!timed) org.apache.spark.sql.graft.GraftSqlBridge.releaseAll(spark)
       }
     }
     spark.stop()

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextAnalysis}
-import graft.operators.Relational.dedupKeepFirst
 
 /** End-to-end corpus curation: the composition a training-data pipeline
   * actually runs, built from the engine's operators —
@@ -50,9 +49,6 @@ object CurationPipeline {
       runGramK: Int = 4,
       runMinTokens: Int = 8,
       runMaxOccurrences: Int = 64)
-
-  final case class StageCounts(input: Long, afterQuality: Long,
-      afterLang: Long, afterExactDedup: Long, afterNearDedup: Long)
 
   /** Run the full curation over a corpus with (idCol: long, textCol:
     * string). Returns the curated frame (lazily composed — nothing runs
@@ -134,8 +130,7 @@ object CurationPipeline {
     * curated corpus. The eval guard runs only over the surviving
     * candidates (size-guarded broadcast via
     * [[Dedup.shingleOverlapVsEval]]). The tagged frame keeps `_fp` so
-    * callers can append survivors' fingerprints back to the store —
-    * which is exactly what [[streamCurate]] does per micro-batch.
+    * callers can append survivors' fingerprints back to the store.
     */
   def curateIncrementalTagged(batch: DataFrame, storeFps: DataFrame,
       idCol: String, textCol: String, cfg: Config = Config(),
@@ -210,116 +205,5 @@ object CurationPipeline {
         .withColumn("n_runs_cut", coalesce(col("n_runs_cut"), lit(0L)))
         .drop("_cut_text")
     }
-  }
-
-  /** The surviving rows of [[curateIncrementalTagged]] (original batch
-    * columns plus `_fp`).
-    */
-  def curateIncremental(batch: DataFrame, storeFps: DataFrame,
-      idCol: String, textCol: String, cfg: Config = Config(),
-      evalDocs: Option[DataFrame] = None,
-      storeGrams: Option[DataFrame] = None): DataFrame =
-    curateIncrementalTagged(batch, storeFps, idCol, textCol, cfg, evalDocs,
-        storeGrams)
-      .filter(col("outcome") === "kept").drop("outcome")
-
-  /** One-row survivorship report over a tagged batch — the q158-style
-    * audit artifact an incremental run ships with each batch.
-    */
-  def batchReport(tagged: DataFrame): DataFrame = {
-    val outcomes = Seq("quality_fail", "lang_fail", "store_dup",
-      "batch_dup", "contaminated", "kept")
-    val aggs = outcomes.map(o =>
-      sum(when(col("outcome") === o, 1L).otherwise(0L)).as(s"n_$o")) ++
-      // substring-layer tally, present when the batch ran with
-      // cutDupRuns: kept docs that had >= 1 duplicate span cut
-      (if (tagged.columns.contains("n_runs_cut"))
-        Seq(sum(when(col("outcome") === "kept" && col("n_runs_cut") > 0,
-          1L).otherwise(0L)).as("n_span_cut"))
-      else Seq.empty)
-    tagged.groupBy()
-      .agg(count(lit(1)).as("n_input"), aggs: _*)
-      .withColumn("removal_rate",
-        round(lit(1.0) - col("n_kept").cast("double") / col("n_input"), 6))
-  }
-
-  /** One micro-batch of [[streamCurate]]: read the on-disk fingerprint
-    * store, curate the batch against it, append survivors to `outPath`
-    * and their fingerprints to the store — so the NEXT batch sees them
-    * as `store_dup`. Exposed so batch/streaming parity is directly
-    * testable: a stream of N micro-batches produces exactly the
-    * survivor set of the equivalent one-shot runs.
-    */
-  def curateBatchStep(batch: DataFrame, storePath: String, outPath: String,
-      idCol: String, textCol: String, cfg: Config = Config(),
-      evalDocs: Option[DataFrame] = None): Unit = {
-    val spark = batch.sparkSession
-    val sp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val store =
-      if (fs.exists(sp)) spark.read.schema("_fp STRING").parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_fp",
-            org.apache.spark.sql.types.StringType))))
-    // the substring layer's standing state rides NEXT TO the
-    // fingerprint store: the positional gram stream of every kept
-    // doc's ORIGINAL text (pre-cut — the detection layer must see
-    // first-occurrence spans intact, or a span cut from batch N's
-    // loser would go undetected when batch N+2 repeats it)
-    val gramPath = storePath + "_grams"
-    val gp = new org.apache.hadoop.fs.Path(gramPath)
-    val storeGrams =
-      if (cfg.cutDupRuns && gp.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(gp))
-        Some(spark.read.parquet(gramPath))
-      else None
-    // two consumers (survivor rows + fingerprint append): materialize
-    // the tagging once instead of re-running the store join per sink
-    val kept = curateIncrementalTagged(batch, store, idCol, textCol, cfg,
-        evalDocs, storeGrams)
-      .filter(col("outcome") === "kept").drop("outcome")
-      .localCheckpoint(false)
-    kept.write.mode("append").parquet(outPath)
-    kept.select("_fp").write.mode("append").parquet(storePath)
-    if (cfg.cutDupRuns) {
-      batch.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
-        .select(col(idCol),
-          posexplode(call_function("graft_shingle_hash_list",
-            col(textCol), lit(cfg.runGramK))).as(Seq("pos", "h")))
-        .write.mode("append").parquet(gramPath)
-    }
-  }
-
-  /** Continuous curation: each micro-batch runs [[curateBatchStep]] —
-    * the batch/streaming unification where the stream IS a sequence of
-    * incremental batches sharing one fingerprint store. Caller
-    * starts/awaits the returned writer.
-    */
-  def streamCurate(stream: DataFrame, storePath: String, outPath: String,
-      idCol: String, textCol: String, cfg: Config = Config(),
-      evalDocs: Option[DataFrame] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        curateBatchStep(b.toDF(), storePath, outPath, idCol, textCol, cfg, evalDocs)
-      }
-
-  /** Per-stage row counts (runs the pipeline stage by stage — four
-    * actions; use for auditing, not in the hot path).
-    */
-  def stageCounts(docs: DataFrame, idCol: String, textCol: String,
-                  cfg: Config = Config()): StageCounts = {
-    val q = docs.filter(TextAnalysis.qualityScore(col(textCol), cfg.stopwords) >= cfg.minQuality)
-    val l = q.filter(TextAnalysis.langId(col(textCol), cfg.markerSets).isin(cfg.allowedLangs: _*))
-    val e = dedupKeepFirst(
-      l.withColumn("_fp", TextAnalysis.contentFingerprint(col(textCol))),
-      Seq("_fp"), Seq(col(idCol).asc))
-    StageCounts(
-      input = docs.count(),
-      afterQuality = q.count(),
-      afterLang = l.count(),
-      afterExactDedup = e.count(),
-      afterNearDedup = curate(docs, idCol, textCol, cfg).count())
   }
 }

@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass kernel behind the native MinHash expressions.
   *
-  * Bit-identical to the declarative pipeline it replaces
-  * (`Dedup.shingleHashes(Dedup.shingles(text, n))` and
-  * `Dedup.minhashBandHashes`) — same space-only trim, same
+  * Bit-identical to the declarative pipeline it replaces (Spark column
+  * functions, kept as the reference in DedupSimilaritySpec) — same
+  * space-only trim, same
   * `split("\s+", -1)`, same md5-60-bit hash (`Hashing.hash64`), same
   * affine family and band strings — but one compiled pass per row:
   * no per-shingle hex/conv round-trip, no interpreted higher-order
@@ -152,7 +152,7 @@ object MinhashKernel {
 
   /** k affine mins over the shingle hashes, cut into k/rowsPerBand
     * bands, each band hashed as md5("band<b>|m..|m..") — identical to
-    * Dedup.minhashBandHashes.
+    * the declarative band hashes in DedupSimilaritySpec.
     */
   def minhashBands(hashes: ArrayData, k: Int, rowsPerBand: Int): ArrayData = {
     val m = hashes.numElements()

@@ -272,23 +272,6 @@ object AudioCodec {
     (if ((u & 0x80) != 0) -mag else mag).toShort
   }
 
-  /** Compress one 16-bit linear sample to its µ-law byte (G.711 §B:
-    * clip to 32635, add bias 132, locate the segment, keep the top 4
-    * mantissa bits, complement). Inverse of [[mulawDecodeByte]] up to
-    * the codec's logarithmic quantization.
-    */
-  def mulawEncodeSample(sample: Int): Int = {
-    var s = sample
-    val sign = if (s < 0) { s = -s; 0x80 } else 0
-    if (s > 32635) s = 32635
-    s += 0x84
-    var exp = 7
-    var mask = 0x4000
-    while (exp > 0 && (s & mask) == 0) { exp -= 1; mask >>= 1 }
-    val mant = (s >> (exp + 3)) & 0x0f
-    ~(sign | (exp << 4) | mant) & 0xff
-  }
-
   /** Expand one A-law byte to its 16-bit linear sample (G.711 §A —
     * the European/international companding twin of µ-law, WAV format
     * tag 6). Even bits arrive inverted (XOR 0x55); sign bit 1 means
@@ -305,23 +288,6 @@ object AudioCodec {
       case n => (t + 0x108) << (n - 1)
     }
     (if ((a & 0x80) != 0) mag else -mag).toShort
-  }
-
-  /** Compress one 16-bit linear sample to its A-law byte (inverse of
-    * [[alawDecodeByte]] up to the codec's logarithmic quantization:
-    * segment e covers magnitudes [0x100·2^(e−1), 0x100·2^e) with a
-    * 2^(e+3) step, segment 0 is linear with step 16).
-    */
-  def alawEncodeSample(sample: Int): Int = {
-    var s = sample
-    val sign = if (s >= 0) 0x80 else { s = -s; 0 } // A-law: sign bit 1 = positive
-    if (s > 32767) s = 32767
-    var e = 0
-    while (e < 7 && s >= (0x100 << e)) e += 1
-    val mant =
-      if (e == 0) (s >> 4) & 0x0f
-      else ((s - (0x100 << (e - 1))) >> (e + 3)) & 0x0f
-    ((sign | (e << 4) | mant) ^ 0x55) & 0xff
   }
 
   /** Encode an A-law WAV (format tag 6, mono, 8 bits per sample)
@@ -394,19 +360,6 @@ object AudioCodec {
         false
       } else true
     }
-    out
-  }
-
-  /** Nearest-neighbor resample: output index `i` samples source
-    * `(i·n)/outN` — integer floor division, the 1-D twin of
-    * [[MultimodalCodec.resizeNearest]], replayed verbatim by oracles.
-    */
-  def resampleNearest(samples: Array[Short], outN: Int): Array[Short] = {
-    val n = samples.length
-    require(n > 0 || outN == 0, "cannot resample an empty clip to a nonzero length")
-    val out = new Array[Short](outN)
-    var i = 0
-    while (i < outN) { out(i) = samples(i * n / outN); i += 1 }
     out
   }
 

@@ -35,6 +35,8 @@ object Bytes {
     le32u(b, p) | (le32u(b, p + 4) << 32)
   @inline final def be16(b: Array[Byte], p: Int): Int =
     ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
+  @inline final def be24(b: Array[Byte], p: Int): Int =
+    ((b(p) & 0xff) << 16) | ((b(p + 1) & 0xff) << 8) | (b(p + 2) & 0xff)
   @inline final def be32(b: Array[Byte], p: Int): Int =
     ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) | ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
   /** Unsigned 32-bit big-endian, as a non-negative Long. */
@@ -170,6 +172,7 @@ class ByteSink(initial: Int = 64) extends ByteArrayOutputStream(initial) {
   def le32(v: Long): this.type = le16(v.toInt).le16((v >> 16).toInt)
   def le64(v: Long): this.type = le32(v).le32(v >>> 32)
   def be16(v: Int): this.type = u8(v >> 8).u8(v)
+  def be24(v: Int): this.type = u8(v >> 16).be16(v)
   def be32(v: Long): this.type = be16((v >> 16).toInt).be16(v.toInt)
   def be64(v: Long): this.type = be32(v >>> 32).be32(v)
   /** Unsigned LEB128. */

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
-import graft.operators.TextAnalysis.tokens
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard.
@@ -23,18 +22,6 @@ import graft.operators.TextAnalysis.tokens
   * affine family over one base hash, so each shingle is md5'd once.
   */
 object Dedup {
-
-  /** Word n-gram shingles. Documents shorter than n tokens contribute a
-    * single whole-text shingle so they still participate (and dedup with
-    * identical short docs).
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    val grams = transform(
-      sequence(lit(1), size(t) - (n - 1)),
-      i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k)): _*))
-    when(size(t) < n, array(concat_ws(" ", t))).otherwise(grams)
-  }
 
   /** Mersenne prime 2^31 - 1: the modulus of the affine min-hash
     * family. 31-bit hashes keep a*h + b inside a long — which is why
@@ -80,14 +67,6 @@ object Dedup {
       Hashing.hash64Local(s"mh-b-$j") % MinhashP)
   }
 
-  /** 31-bit base hashes of the distinct shingles (one md5 each). The
-    * outer distinct also collapses 31-bit collisions, so the result is
-    * guaranteed duplicate-free — jaccardDistinct relies on that.
-    */
-  def shingleHashes(shingleCol: Column): Column =
-    array_distinct(
-      transform(array_distinct(shingleCol), s => Hashing.hash64(s).bitwiseAND(lit(MinhashP))))
-
   /** MinHash signature via the affine family h_j(x) = (a_j·x + b_j)
     * mod p over the 31-bit shingle hashes. Returns an array of k longs.
     */
@@ -98,39 +77,6 @@ object Dedup {
     }: _*)
   }
 
-  /** LSH band hashes: the signature is cut into bands of `rowsPerBand`
-    * values; each band is hashed to one long. Two docs become candidates
-    * iff they agree on at least one band — P(candidate) ≈ 1-(1-j^r)^b
-    * for Jaccard j.
-    *
-    * NOTE: `element_at(sig, i)` on a signature *expression* would inline
-    * the whole k-min computation once per band slot (k× the work —
-    * higher-order functions are interpreted, so no common-subexpression
-    * reuse). Use [[minhashBandHashes]] to go straight from shingle
-    * hashes to band hashes with each min computed exactly once.
-    */
-  def lshBandHashes(sig: Column, rowsPerBand: Int, numBands: Int): Column =
-    array((0 until numBands).map { b =>
-      val bandVals = (0 until rowsPerBand)
-        .map(r => element_at(sig, b * rowsPerBand + r + 1).cast("string"))
-      Hashing.hash64(concat_ws("|", lit(s"band$b") +: bandVals: _*))
-    }: _*)
-
-  /** Fused shingle-hashes → band-hashes path: builds the k affine mins
-    * as standalone expressions, each referenced exactly once by its
-    * band. Identical values to lshBandHashes∘minhashSignature.
-    */
-  def minhashBandHashes(hashCol: Column, k: Int, rowsPerBand: Int): Column = {
-    val mins = minhashCoeffs(k).map { case (a, b) =>
-      array_min(transform(hashCol, h => (lit(a) * h + lit(b)) % lit(MinhashP)))
-    }
-    array((0 until k / rowsPerBand).map { b =>
-      val bandVals = (0 until rowsPerBand)
-        .map(r => mins(b * rowsPerBand + r).cast("string"))
-      Hashing.hash64(concat_ws("|", lit(s"band$b") +: bandVals: _*))
-    }: _*)
-  }
-
   /** Exact Jaccard similarity of two array columns (over distinct
     * elements), rounded to 6 dp.
     */
@@ -138,7 +84,7 @@ object Dedup {
     jaccardDistinct(array_distinct(a), array_distinct(b))
 
   /** Jaccard for inputs already known duplicate-free (e.g.
-    * shingleHashes output) — skips four array_distinct passes per pair,
+    * `graft_shingle_hashes` output) — skips four array_distinct passes per pair,
     * which dominate blocked all-pairs scans.
     */
   def jaccardDistinct(a: Column, b: Column): Column = {
@@ -322,10 +268,9 @@ object Dedup {
     // below (band generation + both verification joins) — without it the
     // md5 shingle-hash scan re-runs per reference (self-join recompute).
     // The native kernel expression computes text → distinct shingle
-    // hashes in one compiled pass — bit-identical to
-    // shingleHashes(shingles(text, n)) (DedupSimilaritySpec asserts it)
-    // but without the interpreted HOF pipeline and per-shingle
-    // hex→conv round-trip.
+    // hashes in one compiled pass — bit-identical to the declarative
+    // shingle-hash pipeline (DedupSimilaritySpec asserts it) but without
+    // the interpreted HOF pipeline and per-shingle hex→conv round-trip.
     val hashed = ScaleOps.fanIfNarrow(df, col(idCol))
       .select(keep :+
         call_function("graft_shingle_hashes", col(textCol), lit(n)).as("_sh"): _*)

@@ -326,64 +326,6 @@ object DeltaLogOps {
         coalesce(col("min_writer"), lit(-1L)).as("min_writer")) ++ liveSetCols): _*)
   }
 
-  /** Continuous log replay: each micro-batch of arriving commit lines
-    * folds into the parquet state store at `statePath` — the
-    * batch/streaming unification over the TABLE-format layer. Caller
-    * starts/awaits the returned writer.
-    */
-  def streamCensus(stream: DataFrame, statePath: String, tableCol: String,
-                   versionCol: String, lineCol: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = b.sparkSession
-        val sp = new org.apache.hadoop.fs.Path(statePath)
-        val tmp = new org.apache.hadoop.fs.Path(statePath + ".tmp")
-        val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = "_applied_batch" // underscore-prefixed: parquet reads skip it
-        def appliedId(dir: org.apache.hadoop.fs.Path): Long = {
-          val m = new org.apache.hadoop.fs.Path(dir, marker)
-          if (!fs.exists(m)) -1L
-          else {
-            val in = fs.open(m)
-            try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-            finally in.close()
-          }
-        }
-        // crash recovery: promote tmp only when BOTH the parquet
-        // _SUCCESS and the batch marker landed (the marker is written
-        // after the parquet commit, so a marker-less tmp is a partial
-        // write — drop it and refold from the intact prior state)
-        if (!fs.exists(sp) && fs.exists(tmp)) {
-          if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
-              fs.exists(new org.apache.hadoop.fs.Path(tmp, marker)))
-            fs.rename(tmp, sp)
-          else fs.delete(tmp, true)
-        }
-        // idempotence under foreachBatch retry: when the promoted
-        // state already folded this batchId (the driver died between
-        // delete(sp) and rename, or the sink re-delivers the last
-        // batch after a restart), folding again would double-count the
-        // tally rows — skip; the live-set columns were always safe via
-        // the row_number dedupe, the tallies were not.
-        if (!(fs.exists(sp) && appliedId(sp) == batchId)) {
-          val prior =
-            if (fs.exists(sp)) spark.read.schema(StateSchema).parquet(statePath)
-            else emptyState(spark)
-          // fold to a TEMP path, then swap: writing over statePath while
-          // the fold plan still reads it would delete the store mid-scan
-          // (a lazy localCheckpoint materializes nothing before the
-          // delete — only the tmp indirection is actually safe here)
-          foldBatch(prior, b.toDF(), tableCol, versionCol, lineCol)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val out = fs.create(new org.apache.hadoop.fs.Path(tmp, marker), true)
-          try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-          fs.delete(sp, true)
-          fs.rename(tmp, sp)
-        }
-        ()
-    }
-
   // ------------------------------------------------------------------
   // maintenance layer: VACUUM candidates + schema evolution
 
@@ -732,45 +674,6 @@ object DeltaLogOps {
         coalesce(col("n_records"), lit(0L)).as("size_actual"),
         coalesce(col("ptr_size") === col("n_records"), lit(false)).cast("long")
           .as("size_match"))
-  }
-
-  /** Seed the INCREMENTAL fold ([[foldBatch]]) from a checkpoint: the
-    * compact state's "act"/"proto"/"ver" rows come straight from the
-    * checkpoint records, tallies start zeroed (they count replayed
-    * lines — the q397 semantics). Subsequent `foldBatch` calls over
-    * post-checkpoint commits continue exactly as if the fold had
-    * replayed the vacuumed history (live-set equality spec-pinned).
-    */
-  def stateFromCheckpoint(ckpt: DataFrame, ckptTableCol: String,
-                          ckptVerCol: String): DataFrame = {
-    def widen(df: DataFrame): DataFrame =
-      df.select(StateSchema.fieldNames.map(f =>
-        if (df.columns.contains(f)) col(f) else lit(null).cast(
-          StateSchema(f).dataType).as(f)): _*)
-    val cp = ckpt.select(
-      col(ckptTableCol).as("tbl"),
-      col(ckptVerCol).cast("long").as("ver"),
-      col("add.path").as("add_path"),
-      col("remove.path").as("rm_path"),
-      col("protocol.minReaderVersion").cast("long").as("proto_r"),
-      col("protocol.minWriterVersion").cast("long").as("proto_w"),
-      col("add.size").cast("long").as("size"),
-      when(col("add.path").isNotNull,
-        canonPvals(to_json(col("add.partitionValues")))).as("pvals"),
-      get_json_object(col("add.stats"), "$.numRecords").cast("long").as("n_rows"))
-      .localCheckpoint(false)
-    val acts = widen(cp
-      .filter(col("add_path").isNotNull || col("rm_path").isNotNull)
-      .select(col("tbl"), lit("act").as("kind"),
-        coalesce(col("add_path"), col("rm_path")).as("path"),
-        col("ver"), col("add_path").isNotNull.as("is_add"),
-        col("size"), col("pvals"), col("n_rows")))
-    val proto = widen(cp.filter(col("proto_r").isNotNull)
-      .select(col("tbl"), lit("proto").as("kind"), col("ver"),
-        col("proto_r").as("min_reader"), col("proto_w").as("min_writer")))
-    val vers = widen(cp.select(col("tbl"), lit("ver").as("kind"), col("ver"))
-      .distinct())
-    acts.unionByName(proto).unionByName(vers)
   }
 
   // ------------------------------------------------------------------

@@ -46,30 +46,21 @@ object FlacOps {
     */
   def encodeSynthetic(sampleRate: Int, channels: Int, bits: Int,
       totalSamples: Long, extraBlocks: Seq[(Int, Int)], audioLen: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bos.write('f'); bos.write('L'); bos.write('a'); bos.write('C')
-    def blockHeader(t: Int, len: Int, last: Boolean): Unit = {
-      bos.write((if (last) 0x80 else 0) | (t & 0x7f))
-      bos.write((len >>> 16) & 0xff); bos.write((len >>> 8) & 0xff); bos.write(len & 0xff)
-    }
+    val out = new ByteSink().ascii("fLaC")
+    def blockHeader(t: Int, len: Int, last: Boolean): Unit =
+      out.u8((if (last) 0x80 else 0) | (t & 0x7f)).be24(len)
     blockHeader(0, 34, extraBlocks.isEmpty)
-    val si = new Array[Byte](34)
-    si(0) = 0x10; si(1) = 0; si(2) = 0x40; si(3) = 0 // min/max blocksize 4096/16384
-    // frame sizes 0 (unknown): bytes 4..9 stay zero
-    var packed = (sampleRate.toLong << 44) | ((channels - 1).toLong << 41) |
+    val packed = (sampleRate.toLong << 44) | ((channels - 1).toLong << 41) |
       ((bits - 1).toLong << 36) | (totalSamples & ((1L << 36) - 1))
-    var i = 17
-    while (i >= 10) { si(i) = (packed & 0xff).toByte; packed >>>= 8; i -= 1 }
-    // md5 bytes 18..33 stay zero (no decoded audio to hash)
-    bos.write(si)
+    // min/max blocksize 4096/16384, frame sizes 0 (unknown), the packed
+    // audio word, md5 zero (no decoded audio to hash)
+    out.be16(4096).be16(16384).raw(new Array[Byte](6)).be64(packed).raw(new Array[Byte](16))
     extraBlocks.zipWithIndex.foreach { case ((t, len), j) =>
       blockHeader(t, len, j == extraBlocks.length - 1)
-      var b = 0
-      while (b < len) { bos.write((b * 7 + t * 13) % 256); b += 1 }
+      (0 until len).foreach(b => out.u8(b * 7 + t * 13))
     }
-    var a = 0
-    while (a < audioLen) { bos.write((a * 31 + 5) % 256); a += 1 }
-    bos.toByteArray
+    (0 until audioLen).foreach(a => out.u8(a * 31 + 5))
+    out.toByteArray
   }
 
   def parse(bytes: Array[Byte]): FlacMeta = {
@@ -86,15 +77,12 @@ object FlacOps {
       val h = bytes(pos) & 0xff
       val t = h & 0x7f
       val isLast = (h & 0x80) != 0
-      val len = ((bytes(pos + 1) & 0xff) << 16) | ((bytes(pos + 2) & 0xff) << 8) |
-        (bytes(pos + 3) & 0xff)
+      val len = Bytes.be24(bytes, pos + 1)
       if (first && (t != 0 || len != 34)) ok = false // STREAMINFO must lead
       else if (pos + 4 + len > n) ok = false
       else {
         if (first) {
-          var packed = 0L
-          var i = 10
-          while (i <= 17) { packed = (packed << 8) | (bytes(pos + 4 + i) & 0xff); i += 1 }
+          val packed = Bytes.be64(bytes, pos + 14) // STREAMINFO bytes 10..17
           rate = (packed >>> 44).toInt
           ch = ((packed >>> 41) & 0x7).toInt + 1
           bits = ((packed >>> 36) & 0x1f).toInt + 1

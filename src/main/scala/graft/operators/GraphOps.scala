@@ -298,7 +298,7 @@ object GraphOps {
     * Scale: per round, one shuffle of the edge list keyed on the vote
     * target plus a groupBy on (node, label) with map-side partials;
     * state is one row per node. A fixed round budget (not convergence)
-    * bounds the cost, like [[pageRank]].
+    * bounds the cost.
     *
     * @param edges0 symmetrized edge list (both directions present).
     * @return (id, community) — community = the surviving label.
@@ -386,43 +386,5 @@ object GraphOps {
         .localCheckpoint(false)
       (next, improved.isEmpty)
     }.select(col("id"), col("dist"))
-  }
-
-  def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, d: Double = 0.85): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    // stationary edge list pre-partitioned+sorted on the join key (r15 opt)
-    val edges = org.apache.spark.sql.graft.GraftSqlBridge.localCheckpointByKey(
-      edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
-      Seq("src"))
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
-    val n = nodes.count()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
-
-    // fixed iteration budget, not a fixpoint test: the loop never
-    // "converges", it just runs its `iters` rounds and takes the state
-    FixpointLoop.iterateUntilFixpoint(nodes.withColumn("rank", lit(1.0 / n)),
-        iters, "pageRank", requireConvergence = false) { ranks =>
-      val withDeg = ranks.join(deg, ranks("id") === deg("src"), "left")
-        .select(col("id"), col("rank"), col("deg"))
-        .localCheckpoint(false)
-      val dangling = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0.0))).first().getDouble(0)
-      val contrib = edges
-        .join(withDeg.filter(col("deg").isNotNull), edges("src") === col("id"))
-        .select(col("dst"),
-          round(col("rank") / col("deg") * 1e12).cast("long").as("_c"))
-        .groupBy("dst").agg(sum("_c").as("_s"))
-      val next = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit((1.0 - d) / n)
-            + lit(d) * (coalesce(col("_s"), lit(0L)).cast("double") / 1e12
-              + lit(dangling / n))).as("rank"))
-        .localCheckpoint(false)
-      (next, false)
-    }
   }
 }

@@ -696,21 +696,6 @@ object IcebergOps {
         col("snap_ok"), col("path"), col("rows"), col("bytes"))
   }
 
-  /** Census AT each snapshot — the time-travel answer: per (table,
-    * snapshot), live file count / rows / bytes, zeroed when the
-    * snapshot is not fully enumerable (`snap_ok` = 0).
-    */
-  def snapshotCensusAll(sf: DataFrame): DataFrame =
-    sf.groupBy("tbl", "snap_id").agg(
-      first(col("parent_id")).as("parent_id"),
-      max(col("is_current").cast("long")).as("is_current"),
-      max(col("snap_ok").cast("long")).as("snap_ok"),
-      sum((col("snap_ok") && col("path").isNotNull).cast("long")).as("n_live"),
-      sum(when(col("snap_ok"), coalesce(col("rows"), lit(0L))).otherwise(0L))
-        .as("live_rows"),
-      sum(when(col("snap_ok"), coalesce(col("bytes"), lit(0L))).otherwise(0L))
-        .as("live_bytes"))
-
   /** Snapshot DIFF: current vs its parent, per table — files
     * added/removed by path-set difference, row deltas, and the two
     * lineage signatures an auditor keys on: `fast_forward` (identical

@@ -66,25 +66,6 @@ object MultimodalCodec {
     */
   val MaxPixels: Long = 1L << 24
 
-  /** Header-only dimension probe: (width, height) without decoding any
-    * pixel data, or None if no registered reader recognizes the bytes.
-    */
-  def probeDims(bytes: Array[Byte]): Option[(Int, Int)] =
-    try {
-      val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-      try {
-        val readers = ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val r = readers.next()
-          try {
-            r.setInput(iis)
-            Some((r.getWidth(0), r.getHeight(0)))
-          } finally r.dispose()
-        }
-      } finally iis.close()
-    } catch { case _: Exception => None }
-
   /** Decode image bytes (any ImageIO-registered format — PNG, GIF, BMP
     * in a stock JDK) to (width, height, row-major 8-bit grayscale).
     * Single-band images return their raw samples; multi-band collapse
@@ -95,9 +76,7 @@ object MultimodalCodec {
     * a parameter (default [[MaxPixels]], the ZstdOps.maxContentBytes
     * pattern) so corpora with legitimately large images — a 5000×4000
     * photo is 20M px, over the default — can raise it deliberately
-    * instead of silently losing rows; use [[probeDims]] to distinguish
-    * "rejected by cap" (dims probe fine, product over cap) from
-    * "undecodable" (no reader recognizes the bytes).
+    * instead of silently losing rows.
     */
   def decodeGray(bytes: Array[Byte],
                  maxPixels: Long = MaxPixels): Option[(Int, Int, Array[Int])] =
@@ -246,9 +225,8 @@ object MultimodalCodec {
 
   /** Decode + nearest-neighbor thumbnail: (idCol, width, height,
     * thumb_hex) where thumb_hex is the ow×oh resized grayscale pixels
-    * as 2-hex-chars each, row-major — the pixel-true replacement for
-    * [[MultimodalStub.resizeStub]]'s byte striding. Undecodable
-    * payloads yield a null thumb.
+    * as 2-hex-chars each, row-major (pixel-true, not a byte stride).
+    * Undecodable payloads yield a null thumb.
     */
   def thumbnail(df: DataFrame, idCol: String, payloadCol: String,
                 ow: Int, oh: Int): DataFrame =

@@ -38,11 +38,9 @@ object MultimodalStub {
   /** Feature extraction over binary payloads:
     * (id, n_bytes, header_hex = first 4 bytes, content_md5).
     *
-    * Default path: built-in expressions (`length`/`hex(substring)`/
-    * `md5` over the binary column) — fully whole-stage-codegen'd, one
-    * projection over the scan, no serialization boundary. Use
-    * [[extractFeaturesPartitioned]] only when the extraction genuinely
-    * needs imperative per-partition state (a codec context).
+    * Built-in expressions (`length`/`hex(substring)`/`md5` over the
+    * binary column) — fully whole-stage-codegen'd, one projection over
+    * the scan, no serialization boundary.
     */
   def extractFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
     df.select(
@@ -50,50 +48,4 @@ object MultimodalStub {
       length(col(payloadCol)).cast("long").as("n_bytes"),
       lower(hex(substring(col(payloadCol), 1, 4))).as("header_hex"),
       md5(col(payloadCol)).as("content_md5"))
-
-  /** Nearest-neighbor "resize" of a binary payload to `targetBytes`
-    * bytes — the codec-free stand-in for thumbnailing an image (or
-    * downsampling an audio clip): strided byte subsampling, position
-    * k picks byte 1 + ⌊(len−1)·k/(target−1)⌋, so the output is
-    * structure-preserving (similar payloads → similar thumbs),
-    * deterministic, and length-exact whether down- or up-sampling.
-    * Pure codegen'd expressions (a concat of computed-position
-    * substrs, no UDF); a real pipeline swaps this for the codec's
-    * scaler without touching callers. Empty payloads pass through.
-    */
-  def resizeStub(payload: org.apache.spark.sql.Column, targetBytes: Int): org.apache.spark.sql.Column = {
-    require(targetBytes >= 2, s"targetBytes must be >= 2, got $targetBytes")
-    val len = length(payload)
-    val picks = (0 until targetBytes).map { k =>
-      val pos = floor((len - 1).cast("double") * k / (targetBytes - 1)).cast("int") + 1
-      payload.substr(pos, lit(1))
-    }
-    when(len === 0, payload).otherwise(concat(picks: _*))
-  }
-
-  /** Per-partition (iterator) variant of [[extractFeatures]] — the
-    * codec-shaped path: batch-amortized setup (digest instance here;
-    * a real decoder's codec context / model handle in production),
-    * typed output schema, one pass per partition. Identical output to
-    * the expression form (MultimodalSpec asserts it); kept as the
-    * template a real decode step would drop into, not as the default.
-    */
-  def extractFeaturesPartitioned(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // one digest instance per partition — the batch-amortized setup
-        // a real decoder (codec context, model handle) would need
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, bytes) =>
-          md.reset()
-          val digest = md.digest(bytes).map("%02x".format(_)).mkString
-          val header = bytes.take(4).map("%02x".format(_)).mkString
-          (id, bytes.length.toLong, header, digest)
-        }
-      }
-      .toDF(idCol, "n_bytes", "header_hex", "content_md5")
-  }
 }

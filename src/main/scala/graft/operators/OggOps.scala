@@ -114,13 +114,8 @@ object OggOps {
             if (actual != stored) ok = false
             else {
               val hType = bytes(pos + 5) & 0xff
-              var g = 0L
-              i = 7
-              while (i >= 0) { g = (g << 8) | (bytes(pos + 6 + i) & 0xff); i -= 1 }
-              var serial = 0
-              i = 3
-              while (i >= 0) { serial = (serial << 8) | (bytes(pos + 14 + i) & 0xff); i -= 1 }
-              f(hType, g, serial, nSegs, pos + 27 + nSegs, payloadLen)
+              f(hType, Bytes.le64(bytes, pos + 6), Bytes.le32(bytes, pos + 14), nSegs,
+                pos + 27 + nSegs, payloadLen)
               pos += total
             }
           }

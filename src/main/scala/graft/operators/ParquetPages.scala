@@ -281,28 +281,17 @@ object ParquetPages {
     out.toByteArray
   }
 
-  /** Decode outcome for one column chunk (or a whole single-column
-    * file when summed). `values` holds the NON-NULL longs in row
+  /** Whole-file decode of the `colIdx`-th column: every row group's
+    * chunk, summed. One malformed chunk fails the FILE closed; one
+    * gated chunk gates it (counts zeroed either way — never a
+    * half-decoded census). `values` holds the NON-NULL longs in row
     * order — null unless `ok = 1` AND the decode was asked to keep
     * them (aggregate callers pass keepValues = false so a 100 TB
     * audit never buffers a chunk's values past its own aggregates).
     */
-  final case class ChunkDecode(ok: Int, gated: Int, nPages: Int,
-      nDictVals: Long, nValues: Long, nNulls: Long,
-      minV: Long, maxV: Long, sum: Long, values: Array[Long])
-
-  /** Whole-file decode of the `colIdx`-th column: every row group's
-    * chunk, summed. One malformed chunk fails the FILE closed; one
-    * gated chunk gates it (counts zeroed either way — never a
-    * half-decoded census).
-    */
   final case class FileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
       nDictVals: Long, nValues: Long, nNulls: Long,
       minV: Long, maxV: Long, sum: Long, values: Array[Long])
-
-  final case class BinChunkDecode(ok: Int, gated: Int, nPages: Int,
-      nDictVals: Long, nValues: Long, nNulls: Long,
-      sumLen: Long, minLen: Long, maxLen: Long, values: Array[Array[Byte]])
 
   final case class BinFileDecode(ok: Int, gated: Int, nRgs: Int, nPages: Int,
       nDictVals: Long, nValues: Long, nNulls: Long,
@@ -594,17 +583,6 @@ object ParquetPages {
     if (!cm.flat || (cm.physType != TInt64 && cm.physType != TInt32)) gatedTally
     else walkChunk(bytes, cm, new Int64Values(if (cm.physType == TInt32) 4 else 8, keepValues))
 
-  /** Decode one INT64 column chunk: dictionary page (when present)
-    * then every data page, def-levels and all. See the object doc for
-    * the gated-vs-malformed split.
-    */
-  def decodeInt64Chunk(bytes: Array[Byte], cm: ChunkMeta,
-      keepValues: Boolean = false): ChunkDecode = {
-    val t = int64Tally(bytes, cm, keepValues)
-    ChunkDecode(t.ok, t.gated, t.nPages, t.nDictVals, t.nValues, t.nNulls,
-      t.lo, t.hi, t.total, t.values)
-  }
-
   def decodeInt64File(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): FileDecode = {
     val (nRgs, t) = decodeFile(bytes, colIdx, keepValues)(int64Tally(bytes, _, keepValues))
@@ -731,17 +709,6 @@ object ParquetPages {
       keepValues: Boolean): Tally[Array[Byte]] =
     if (!cm.flat || cm.physType != TByteArray) gatedTally
     else walkChunk(bytes, cm, new BinaryValues(keepValues))
-
-  /** Decode one BYTE_ARRAY column chunk: the same page walk as
-    * [[decodeInt64Chunk]]; see the section comment for the value
-    * encodings covered.
-    */
-  def decodeBinaryChunk(bytes: Array[Byte], cm: ChunkMeta,
-      keepValues: Boolean = false): BinChunkDecode = {
-    val t = binaryTally(bytes, cm, keepValues)
-    BinChunkDecode(t.ok, t.gated, t.nPages, t.nDictVals, t.nValues, t.nNulls,
-      t.total, t.lo, t.hi, t.values)
-  }
 
   def decodeBinaryFile(bytes: Array[Byte], colIdx: Int,
       keepValues: Boolean = false): BinFileDecode = {

@@ -159,74 +159,6 @@ object Relational {
     spark.createDataFrame(out, schema)
   }
 
-  /** Extend a categorical dictionary with a new batch WITHOUT moving
-    * any existing code — the property that keeps embedding-table rows,
-    * serialized features, and downstream checkpoints valid across
-    * retraining runs (q186 builds the initial dictionary; this is its
-    * incremental twin). Categories already in `dict` keep their codes
-    * verbatim; unseen categories get contiguous codes after the current
-    * max, ordered by (batch frequency desc, value asc) — the same total
-    * order as the initial build, so "extend from empty" ≡ "build".
-    *
-    * Scale shape: one left-anti join to find unseen values (shuffle =
-    * batch cardinality), one rollup, id assignment via the
-    * zipWithIndexOrdered scale path, and the current max code rides a
-    * 1-row broadcast. The existing dictionary streams through
-    * untouched.
-    */
-  def extendDictionary(dict: DataFrame, data: DataFrame,
-                       valueCol: String, codeCol: String): DataFrame = {
-    val newCounts = data
-      .groupBy(col(valueCol)).agg(count(lit(1)).as("_n"))
-      .join(dict.select(col(valueCol)), Seq(valueCol), "left_anti")
-    val maxCode = dict.agg(coalesce(max(col(codeCol)), lit(0L)).as("_max"))
-    val assigned = zipWithIndexOrdered(
-        newCounts, "_idx", col("_n").desc, col(valueCol).asc)
-      .crossJoin(broadcast(maxCode))
-      .select(col(valueCol), (col("_max") + col("_idx")).as(codeCol))
-    dict.select(col(valueCol), col(codeCol).cast("long").as(codeCol))
-      .unionByName(assigned)
-  }
-
-  /** One incremental dictionary-maintenance step against a parquet
-    * store: read the dictionary at `dictPath` (empty on first batch),
-    * [[extendDictionary]] with this batch, and swap the full result
-    * back with the `_SUCCESS`-gated delete→rename protocol
-    * (StreamingOps.upsertBatch's crash discipline: a marker-less
-    * partial tmp is deleted, never promoted). The batch/streaming
-    * unification for vocabularies: the stream IS a sequence of
-    * incremental batches sharing one dictionary, and every code ever
-    * issued stays frozen across micro-batches, runs, and crashes.
-    */
-  def extendDictionaryBatchStep(batch: DataFrame, dictPath: String,
-                                valueCol: String, codeCol: String): Unit = {
-    val spark = batch.sparkSession
-    val cur = new org.apache.hadoop.fs.Path(dictPath)
-    val tmp = new org.apache.hadoop.fs.Path(dictPath + ".tmp")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur) && fs.exists(tmp)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) fs.rename(tmp, cur)
-      else fs.delete(tmp, true)
-    }
-    val dictSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(valueCol,
-        batch.schema(valueCol).dataType),
-      org.apache.spark.sql.types.StructField(codeCol,
-        org.apache.spark.sql.types.LongType)))
-    val dict =
-      if (fs.exists(cur)) spark.read.schema(dictSchema).parquet(dictPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dictSchema)
-    // materialize BEFORE the swap: the extended plan reads the current
-    // dictionary files, which the swap is about to delete
-    val extended = extendDictionary(dict, batch, valueCol, codeCol)
-      .localCheckpoint(true)
-    extended.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(cur, true)
-    fs.rename(tmp, cur)
-    ()
-  }
-
   /** One-shot column profiling — the `df.describe()` shape (reference
     * G9: dags/flu_data_airflow_v2.py:230) as ONE aggregation pass:
     * every statistic for every column computes in the same partial+final

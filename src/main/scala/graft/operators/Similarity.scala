@@ -24,18 +24,13 @@ import graft.functions.Hashing
   */
 object Similarity {
 
-  /** Dot product of two float-array columns: double products folded
-    * left-to-right. Double, not decimal: a decimal accumulator is ~4×
-    * slower, breaks into interpreted mode for wide vectors, and the
-    * fixed per-row fold order already makes doubles deterministic.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Same fold, as the native codegen'd expression (expressions.FloatDot)
-    * — bit-identical values, ~10× faster on wide embeddings. Resolves
+  /** Dot product of two float- or double-array columns: double products
+    * folded left to right, as the native codegen'd expression
+    * (expressions.FloatDot) — bit-identical to the same fold written
+    * with Spark's higher-order functions (FloatDotSpec), ~10× faster on
+    * wide embeddings. Double, not decimal: a decimal accumulator is ~4×
+    * slower, and the fixed per-row fold order already makes doubles
+    * deterministic. Resolves
     * on any session that has the engine installed (see
     * `GraftExtensions`).
     */
@@ -315,50 +310,5 @@ object Similarity {
     val bwd = top1.filter(col(idCol) > col("nb"))
       .select(col("nb").as("a"), col(idCol).as("b"))
     fwd.join(bwd, Seq("a", "b")).select(col("a"), col("b"), col("cos"))
-  }
-
-  /** SHORTLIST mutual-NN: the same reciprocal-best-match contract
-    * evaluated over banded hyperplane-LSH candidates instead of all
-    * pairs — the production path when vectors DO have near-dup
-    * structure (bitext mining, near-dup linking: mutual pairs sit at
-    * cosine ≫ background, where per-table collision probability
-    * (1-θ/π)^planes is high and `tables` independent families push
-    * recall → 1). Candidate generation is an equi-join on
-    * (table, bucket) with a hot-bucket cap (`maxBucket` smallest-id
-    * rows per bucket — the q202/bucketPairs discipline: no bucket ever
-    * fans out quadratically uncapped), so a stop-word-like hub bucket
-    * costs O(maxBucket²) pairs, not O(bucket²). Exactness is
-    * empirical-by-structure, pinned against [[top1Exact]] by spec on
-    * clustered fixtures; on structureless data use [[top1Exact]].
-    */
-  def mutualNNShortlist(vectors: DataFrame, idCol: String, vecCol: String,
-                        dim: Int, planes: Int, tables: Int,
-                        maxBucket: Int = 500): DataFrame = {
-    val withNorm = vectors.select(
-      col(idCol).cast("long").as("_id"), col(vecCol).as("_vec"),
-      sqrt(dotNative(col(vecCol), col(vecCol))).as("_nrm"))
-    val banded = withNorm.select(col("_id"), col("_vec"), col("_nrm"),
-      posexplode(array((0 until tables).map(t =>
-        hyperplaneBucketSeeded(col("_vec"), dim, planes, s"mnn$t")): _*))
-        .as(Seq("_tbl", "_bkt")))
-    val capped = banded.withColumn("_rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("_tbl", "_bkt").orderBy("_id")))
-      .filter(col("_rn") <= maxBucket).drop("_rn")
-    val a = capped.select(col("_tbl"), col("_bkt"), col("_id"),
-      col("_vec"), col("_nrm"))
-    val b = capped.select(col("_tbl"), col("_bkt"), col("_id").as("_nb"),
-      col("_vec").as("_eb"), col("_nrm").as("_nn"))
-    val cand = a.join(b, Seq("_tbl", "_bkt"))
-      .filter(col("_id") =!= col("_nb"))
-      .select(col("_id"), col("_nb"),
-        (dotNative(col("_vec"), col("_eb")) / (col("_nrm") * col("_nn"))).as("cos"))
-      .groupBy("_id", "_nb").agg(first("cos").as("cos")) // dedup multi-table hits
-    val top1 = cand
-      .groupBy(col("_id"))
-      .agg(call_function("graft_max_any",
-        struct(col("cos"), (-col("_nb")).as("negnb"))).as("_m"))
-      .select(col("_id").as(idCol), (-col("_m.negnb")).as("nb"), col("_m.cos").as("cos"))
-    mutualFromTop1(top1, idCol)
   }
 }

@@ -225,24 +225,6 @@ object WebpOps {
         (if (xmp) chunk("XMP ", meta8) else Array.empty[Byte]))
   }
 
-  /** Extended (VP8X) STILL: no animation flag, one VP8L image chunk as
-    * a sibling — the common alpha-still class in crawl corpora.
-    */
-  def encodeExtendedStill(w: Int, h: Int, alpha: Boolean,
-      exif: Boolean, icc: Boolean, xmp: Boolean, filler: Int): Array[Byte] = {
-    require(w >= 1 && w <= (1 << 24) && h >= 1 && h <= (1 << 24), "canvas dims are 24-bit")
-    val flags = ((if (icc) 0x20 else 0) | (if (alpha) 0x10 else 0) |
-      (if (exif) 0x08 else 0) | (if (xmp) 0x04 else 0)).toByte
-    val vp8x = new ByteSink(10).u8(flags).u8(0).u8(0).u8(0).le24(w - 1).le24(h - 1).toByteArray
-    val meta8 = Array.tabulate(8)(i => (i * 11 + 5).toByte)
-    container(
-      chunk("VP8X", vp8x) ++
-        (if (icc) chunk("ICCP", meta8) else Array.empty[Byte]) ++
-        chunk("VP8L", vp8lPayload(w, h, alpha, filler)) ++
-        (if (exif) chunk("EXIF", meta8) else Array.empty[Byte]) ++
-        (if (xmp) chunk("XMP ", meta8) else Array.empty[Byte]))
-  }
-
   def webpFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
     Payloads.census(df, idCol, payloadCol, "valid", "kind", "width", "height",
       "has_alpha", "has_anim", "n_frames", "duration_ms", "has_exif", "has_icc",

@@ -1273,11 +1273,7 @@ object AnalyticsQueries {
     * `spark.graft.exactNN=true`; each exact pass is the
     * block-nested-loop [[graft.operators.Similarity.top1ExactFor]]
     * (bounded chunk rows, chunk-ID-only broadcast, in-row local
-    * argmax, map-side-combined `max(struct)` global argmax). Where
-    * the data has near-dup structure the same mutuality contract runs
-    * over LSH shortlists instead —
-    * [[graft.operators.Similarity.mutualNNShortlist]], spec-pinned ≡
-    * brute force on clustered fixtures (MutualNNSpec).
+    * argmax, map-side-combined `max(struct)` global argmax).
     */
   val q268 = Q("q268_mutual_nn",
     (s, dir) => {

@@ -24,7 +24,7 @@ object Q {
     s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
 
   /** Left-fold double dot product of two list columns — bit-identical
-    * to Similarity.dot (both fold products in index order). */
+    * to Similarity.dotNative (both fold products in index order). */
   def duckDot(a: String, b: String): String =
     s"list_reduce(list_transform(range(1, len($a)+1), " +
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"

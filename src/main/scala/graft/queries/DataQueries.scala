@@ -360,8 +360,7 @@ object DataQueries {
 
   /** q42 — multimodal binary plumbing: opaque payload column + feature
     * extraction as codegen'd built-in expressions (decode step stubbed
-    * deterministically; see MultimodalStub — the per-partition codec
-    * shape survives as extractFeaturesPartitioned, identical output).
+    * deterministically; see MultimodalStub).
     * The oracle slices bytes (substr over the encoded BLOB), matching
     * Spark's binary substring even for multibyte text.
     */
@@ -1202,8 +1201,7 @@ object DataQueries {
     * This is q81's CDC shape promoted to the whole pipeline: the batch
     * shuffles once on the fingerprint (store join + keeper window share
     * the key); the 100 TB corpus itself is never re-read beyond the
-    * store's join side. The streaming twin (same code path per
-    * micro-batch) is pinned in StreamingSpec.
+    * store's join side.
     */
   val q176 = Q("q176_incremental_curation",
     (s, dir) => {

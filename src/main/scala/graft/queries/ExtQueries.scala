@@ -626,14 +626,12 @@ object ExtQueries {
   // --------------------------------------------------------------- q138
 
   /** q138 — time-windowed deduplication: the same (user, action) seen
-    * again inside the same clock hour counts once — the batch twin of
-    * StreamingOps.dedupWithinWatermark (retry storms, at-least-once
-    * delivery, double-fires). Keep-first is total-ordered by
+    * again inside the same clock hour counts once (retry storms,
+    * at-least-once delivery, double-fires). Keep-first is total-ordered by
     * (ts, event_id) so the survivor is unique on any partitioning.
     * One shuffle on the dedup key; the hour column rides the same
     * shuffle — at 100 TB the window bound is also what keeps the
-    * per-key state finite (exactly the argument the streaming twin's
-    * watermark makes).
+    * per-key state finite (the argument a streaming watermark makes).
     */
   val q138 = Q("q138_windowed_dedup",
     (s, dir) => {

@@ -366,8 +366,7 @@ object LakeQueries {
     * only grows, but each arriving commit costs one latest-wins
     * reduction over (state ∪ batch), never a history replay.
     * DeltaLogOpsSpec pins the fold ≡ batch identity and the
-    * compactness bound; StreamingSpec runs the same fold as the 17th
-    * streaming twin.
+    * compactness bound.
     */
   val q397 = Q("q397_delta_log_incremental",
     (s, dir) => {

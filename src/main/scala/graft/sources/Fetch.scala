@@ -81,7 +81,7 @@ object Fetch {
     *   `LocalRelation`, so planning cost does not grow with the feed.
     *   The body is split on line breaks, so multiline (embedded
     *   newline) CSV records are not supported here — land those as
-    *   files and use [[Sources.csv]] with `multiLine`.
+    *   files and read them with Spark's CSV reader and `multiLine`.
     */
   def csvFeed(spark: SparkSession, url: String, schema: StructType,
               transport: Transport, orderCol: Option[String] = None): DataFrame = {

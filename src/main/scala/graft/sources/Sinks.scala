@@ -22,20 +22,6 @@ object Sinks {
     out.write.mode("overwrite").option("header", "true").csv(path)
   }
 
-  /** Partitioned parquet — the engine's native sink. `partitionBy`
-    * columns become directory partitions that later scans prune.
-    */
-  def parquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** Partitioned ORC — the Hive-interchange twin of [[parquet]]. */
-  def orc(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
-
   /** Idempotent PK load: `ON CONFLICT (pk) DO NOTHING` ≡ keep the first
     * row per key under an explicit arrival order (reference K4:
     * dags/flu_data_airflow_v2.py:579-733; keep-first discussion SURVEY
@@ -43,12 +29,6 @@ object Sinks {
     */
   def upsertKeepFirst(df: DataFrame, pk: Seq[String], arrivalOrder: Column): DataFrame =
     dedupKeepFirst(df, pk, Seq(arrivalOrder))
-
-  /** PK uniqueness check to run after a load (the constraint Postgres
-    * enforced; reference DDL :486-546).
-    */
-  def pkViolations(df: DataFrame, pk: Seq[String]): Long =
-    df.groupBy(pk.map(col): _*).count().filter(col("count") > 1).count()
 
   /** JSONL training shards — the interchange format every LLM data
     * pipeline exports: one `shard=K/` directory per value of

@@ -20,17 +20,16 @@ class BytesDriftSpec extends AnyFunSuite {
   }
 
   test("only Bytes.scala defines byte and varint helpers") {
-    val helper = ("""\bdef\s+(u8|le16|le24|le32|le64|be16|be32|be64|""" +
+    val helper = ("""\bdef\s+(u8|le16|le24|le32|le64|be16|be24|be32|be64|""" +
       """u16le|u24le|u32le|varint|zigzag|avroLong)\b""").r.unanchored
     assert(SourceScan.offenders(main, allowed)(helper.matches).isEmpty)
   }
 
   test("only Payloads.scala builds or reads (id, payload) frames by hand") {
     // the sites whose shape is not Payloads': extractResponses emits many
-    // rows per payload, extractFeaturesPartitioned keeps one digest per
-    // partition, q194/q366 and the q394 WARC archives encode the
+    // rows per payload, q194/q366 and the q394 WARC archives encode the
     // documents' text, and q343's payload is a string
-    val local = Map("WarcOps.scala" -> 1, "MultimodalStub.scala" -> 1,
+    val local = Map("WarcOps.scala" -> 1,
       "DataQueries.scala" -> 2, "CorpusQueries.scala" -> 2)
     val hit = (l: String) =>
       l.contains(".as[(Long, Array[Byte])]") || l.contains("""toDF("doc_id", "payload")""")

@@ -1,25 +1,40 @@
 package graft.curation
 
+import org.apache.spark.sql.DataFrame
+
 import graft.{SparkSpec, Tables}
+import graft.operators.TextAnalysis
+import graft.operators.Relational.dedupKeepFirst
 
 class CurationPipelineSpec extends SparkSpec {
 
   import org.apache.spark.sql.functions._
   import spark.implicits._
 
+  /** Rows left after each stage — input, quality, language, exact
+    * dedup, near dup — composed one stage at a time (five actions).
+    */
+  private def stageCounts(docs: DataFrame, idCol: String, textCol: String,
+                          cfg: CurationPipeline.Config): Seq[Long] = {
+    val q = docs.filter(TextAnalysis.qualityScore(col(textCol), cfg.stopwords) >= cfg.minQuality)
+    val l = q.filter(TextAnalysis.langId(col(textCol), cfg.markerSets).isin(cfg.allowedLangs: _*))
+    val e = dedupKeepFirst(
+      l.withColumn("_fp", TextAnalysis.contentFingerprint(col(textCol))),
+      Seq("_fp"), Seq(col(idCol).asc))
+    Seq(docs.count(), q.count(), l.count(), e.count(),
+      CurationPipeline.curate(docs, idCol, textCol, cfg).count())
+  }
+
   test("stages shrink monotonically and deterministically on the synthetic corpus") {
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val c = CurationPipeline.stageCounts(docs, "doc_id", "text",
+    val c = stageCounts(docs, "doc_id", "text",
       CurationPipeline.Config(minQuality = 0.5, allowedLangs = Seq("en"),
         nearDupJaccard = 0.5))
-    assert(c.input == 500)
-    assert(c.afterQuality <= c.input)
-    assert(c.afterLang <= c.afterQuality)
-    assert(c.afterExactDedup <= c.afterLang)
-    assert(c.afterNearDedup <= c.afterExactDedup)
-    assert(c.afterNearDedup > 0)
+    assert(c.head == 500)
+    assert(c.zip(c.tail).forall { case (before, after) => after <= before }, c)
+    assert(c.last > 0)
     // deterministic: a second run returns identical counts
-    val c2 = CurationPipeline.stageCounts(docs, "doc_id", "text",
+    val c2 = stageCounts(docs, "doc_id", "text",
       CurationPipeline.Config(minQuality = 0.5, allowedLangs = Seq("en"),
         nearDupJaccard = 0.5))
     assert(c == c2)
@@ -41,25 +56,6 @@ class CurationPipelineSpec extends SparkSpec {
       .select("doc_id").orderBy("doc_id").as[Long].collect().toSeq
     assert(without == Seq(1L, 2L, 3L))
     assert(withEval == Seq(2L, 3L), s"contaminated doc 1 must drop: $withEval")
-  }
-
-  test("batchReport outcomes partition the batch and sum to n_input") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val isEval = pmod(col("doc_id"), lit(97)) === 0
-    val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0 && !isEval)
-    val store = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0 && !isEval)
-      .select(graft.operators.TextAnalysis.contentFingerprint(col("text")).as("_fp"))
-    val tagged = CurationPipeline.curateIncrementalTagged(
-      batch, store, "doc_id", "text",
-      CurationPipeline.Config(maxEvalOverlap = 0.05),
-      evalDocs = Some(docs.filter(isEval)))
-    // one tag per batch doc, no doc lost or duplicated by the joins
-    assert(tagged.count() == batch.count())
-    val r = CurationPipeline.batchReport(tagged).collect()(0)
-    val parts = (1 to 6).map(r.getLong)
-    assert(parts.sum == r.getLong(0), s"${parts.mkString("+")} != ${r.getLong(0)}")
-    assert(r.getLong(6) > 0) // n_kept
-    assert(r.getDouble(7) >= 0.0 && r.getDouble(7) <= 1.0)
   }
 
   test("near-dup removal keeps the lower id of a planted duplicate pair") {
@@ -102,7 +98,6 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("incremental substring stage: batch doc loses a span the STORE already holds") {
-    import graft.operators.TextAnalysis
     val storedText = "the a " + (1 to 10).map(i => s"w$i").mkString(" ") + " " + span10
     val stored = Seq((1L, storedText)).toDF("doc_id", "text")
     val storeFps = stored.select(
@@ -124,9 +119,5 @@ class CurationPipelineSpec extends SparkSpec {
     assert(byId(5L) == (("kept", "the a " + (1 to 10).map(i => s"x$i").mkString(" "), 1L)),
       s"batch doc must lose the stored span: ${byId(5L)}")
     assert(byId(6L)._1 == "kept" && byId(6L)._3 == 0L)
-    // the survivorship report carries the substring tally
-    val rep = CurationPipeline.batchReport(tagged).collect()(0)
-    assert(rep.getAs[Long]("n_span_cut") == 1L)
-    assert(rep.getAs[Long]("n_kept") == 2L)
   }
 }

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -9,10 +10,17 @@ class FloatDotSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** The reference fold the kernel reproduces: double products folded
+    * left to right by Spark's higher-order functions.
+    */
+  private def hof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   test("native dot is bit-identical to the HOF double left-fold") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val diff = emb.select(
-        (Similarity.dot(col("embedding"), col("embedding")) -
+        (hof(col("embedding"), col("embedding")) -
           Similarity.dotNative(col("embedding"), col("embedding"))).as("d"))
       .agg(max(abs(col("d")))).head.getDouble(0)
     assert(diff == 0.0) // exact, not approximate — same fold order
@@ -36,9 +44,6 @@ class FloatDotSpec extends SparkSpec {
     // r16: the kernel widened from float-only to float|double per side
     val df = Seq((Seq(1.5d, -2.25d, 3.125d), Seq(0.5f, 4.0f, -1.25f)))
       .toDF("d", "f")
-    val hof = (x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
     val row = df.select(
       (Similarity.dotNative(col("d"), col("d")) - hof(col("d"), col("d"))).as("dd"),
       (Similarity.dotNative(col("d"), col("f")) - hof(col("d"), col("f"))).as("df"),

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.Sinks
 
 /** End-to-end star-schema build on a hand-computed fixture that
   * exercises every semantic corner SURVEY §7.4 flags: multi-ACH
@@ -127,7 +126,7 @@ class FluPipelineSpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("flu-tables")
     try {
-      built.foreach { case (t, df) => Sinks.parquet(df, s"$dir/$t") }
+      built.foreach { case (t, df) => df.write.parquet(s"$dir/$t") }
       assert(FluOps.constraintViolations(built).values.forall(_ == 0L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     assert(evaluated.value == rawRhino.count(), "writes or checks re-read the feed")

@@ -49,14 +49,6 @@ class AudioCodecSpec extends SparkSpec {
     assert(AudioCodec.decodePcmWav(mulaw).isEmpty)
   }
 
-  test("resampleNearest picks integer floor-division source positions") {
-    val s = Array[Short](0, 1, 2, 3, 4, 5, 6, 7)
-    // 8 → 4: j*8/4 = {0,2,4,6}
-    assert(AudioCodec.resampleNearest(s, 4).toSeq == Seq[Short](0, 2, 4, 6))
-    // upsample 2 → 4: j*2/4 = {0,0,1,1}
-    assert(AudioCodec.resampleNearest(Array[Short](9, 5), 4).toSeq == Seq[Short](9, 9, 5, 5))
-  }
-
   test("envelopeHash64 is exactly invariant under uniform integer gain") {
     val base = Array.tabulate(100)(j => (((j * 37) % 401) - 200).toShort)
     def scaled(g: Int) = base.map(v => (v * g).toShort)

@@ -1,11 +1,11 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
 
 import scala.util.Random
 
 import graft.SparkSpec
+import graft.operators.CensusDigest.guarded
 
 /** Characterization of the Parquet and ORC censuses: every consumer of
   * the two layouts runs over one fixed corpus — the columnar fuzz
@@ -123,30 +123,6 @@ class ColumnarWalkGoldenSpec extends SparkSpec {
   private lazy val corpus: Vector[(String, Array[Byte])] =
     synthetic ++ sparkFiles ++ testdata
 
-  /** Canonical text of a census result: case classes and tuples by
-    * field, arrays by content, collections in order.
-    */
-  private def render(x: Any, sb: java.lang.StringBuilder): Unit = x match {
-    case null => sb.append("null")
-    case a: Array[Byte] => sb.append("b[").append(java.util.Arrays.toString(a)).append(']')
-    case a: Array[Long] => sb.append("l[").append(java.util.Arrays.toString(a)).append(']')
-    case a: Array[Int] => sb.append("i[").append(java.util.Arrays.toString(a)).append(']')
-    case a: Array[_] =>
-      sb.append("a[")
-      a.foreach { e => render(e, sb); sb.append(',') }
-      sb.append(']')
-    case s: String => sb.append('"').append(s).append('"')
-    case it: Iterable[_] =>
-      sb.append("[")
-      it.foreach { e => render(e, sb); sb.append(',') }
-      sb.append(']')
-    case p: Product =>
-      sb.append(p.productPrefix).append('(')
-      p.productIterator.foreach { e => render(e, sb); sb.append(',') }
-      sb.append(')')
-    case other => sb.append(other.toString)
-  }
-
   private val fileConsumers: Seq[(String, Array[Byte] => Any)] = Seq(
     "ParquetFooter.parse" -> (b => ParquetFooter.parse(b)),
     "OrcOps.parse" -> (b => OrcOps.parse(b)))
@@ -162,18 +138,7 @@ class ColumnarWalkGoldenSpec extends SparkSpec {
     "OrcData.decodeIntFile" -> ((b, c) => OrcData.decodeIntFile(b, c, keepValues = true)),
     "OrcData.decodeStringFile" -> ((b, c) => OrcData.decodeStringFile(b, c, keepValues = true)))
 
-  private def digest(run: Array[Byte] => Seq[Any]): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    corpus.foreach { case (name, bytes) =>
-      val sb = new java.lang.StringBuilder(name).append('=')
-      run(bytes).foreach { out => render(out, sb); sb.append(';') }
-      md.update(sb.append('\n').toString.getBytes("UTF-8"))
-    }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString
-  }
-
-  private def guarded(f: => Any): Any =
-    try f catch { case e: Throwable => s"threw ${e.getClass.getName}" }
+  private def digest(run: Array[Byte] => Seq[Any]): String = CensusDigest.digest(corpus)(run)
 
   /** Digests computed on the walkers as they stood before the four
     * layouts were each given one walk.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,9 +10,66 @@ class DedupSimilaritySpec extends SparkSpec {
 
   import spark.implicits._
 
+  // The declarative min-hash pipeline: Spark column functions that
+  // the compiled kernels (graft_shingle_hashes, graft_minhash_bands)
+  // must match bit for bit.
+
+  /** Word n-gram shingles. Documents shorter than n tokens contribute a
+    * single whole-text shingle so they still participate (and dedup with
+    * identical short docs).
+    */
+  private def shingles(text: Column, n: Int): Column = {
+    val t = TextAnalysis.tokens(text)
+    val grams = transform(
+      sequence(lit(1), size(t) - (n - 1)),
+      i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k)): _*))
+    when(size(t) < n, array(concat_ws(" ", t))).otherwise(grams)
+  }
+
+  /** 31-bit base hashes of the distinct shingles (one md5 each). The
+    * outer distinct also collapses 31-bit collisions, so the result is
+    * guaranteed duplicate-free — jaccardDistinct relies on that.
+    */
+  private def shingleHashes(shingleCol: Column): Column =
+    array_distinct(
+      transform(array_distinct(shingleCol), s => Hashing.hash64(s).bitwiseAND(lit(Dedup.MinhashP))))
+
+  /** LSH band hashes: the signature is cut into bands of `rowsPerBand`
+    * values; each band is hashed to one long. Two docs become candidates
+    * iff they agree on at least one band — P(candidate) ≈ 1-(1-j^r)^b
+    * for Jaccard j.
+    *
+    * NOTE: `element_at(sig, i)` on a signature *expression* would inline
+    * the whole k-min computation once per band slot (k× the work —
+    * higher-order functions are interpreted, so no common-subexpression
+    * reuse). Use [[minhashBandHashes]] to go straight from shingle
+    * hashes to band hashes with each min computed exactly once.
+    */
+  private def lshBandHashes(sig: Column, rowsPerBand: Int, numBands: Int): Column =
+    array((0 until numBands).map { b =>
+      val bandVals = (0 until rowsPerBand)
+        .map(r => element_at(sig, b * rowsPerBand + r + 1).cast("string"))
+      Hashing.hash64(concat_ws("|", lit(s"band$b") +: bandVals: _*))
+    }: _*)
+
+  /** Fused shingle-hashes → band-hashes path: builds the k affine mins
+    * as standalone expressions, each referenced exactly once by its
+    * band. Identical values to lshBandHashes∘minhashSignature.
+    */
+  private def minhashBandHashes(hashCol: Column, k: Int, rowsPerBand: Int): Column = {
+    val mins = Dedup.minhashCoeffs(k).map { case (a, b) =>
+      array_min(transform(hashCol, h => (lit(a) * h + lit(b)) % lit(Dedup.MinhashP)))
+    }
+    array((0 until k / rowsPerBand).map { b =>
+      val bandVals = (0 until rowsPerBand)
+        .map(r => mins(b * rowsPerBand + r).cast("string"))
+      Hashing.hash64(concat_ws("|", lit(s"band$b") +: bandVals: _*))
+    }: _*)
+  }
+
   test("shingles: word n-grams; short docs fall back to whole text") {
     val df = Seq("a b c d", "x").toDF("text")
-    val out = df.select(Dedup.shingles(col("text"), 2).as("g")).collect()
+    val out = df.select(shingles(col("text"), 2).as("g")).collect()
     assert(out(0).getSeq[String](0) == Seq("a b", "b c", "c d"))
     assert(out(1).getSeq[String](0) == Seq("x"))
   }
@@ -83,31 +141,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out(0).getString(3) == "5d41402abc4b2a76b9719d911017c592") // md5("hello")
   }
 
-  test("multimodal stub: partitioned (codec-shaped) variant matches the expression form") {
-    val df = MultimodalStub.attachPayload(
-      Seq((1L, "hello"), (2L, "wörld"), (3L, "")).toDF("doc_id", "text"),
-      "text", "payload")
-    val expr = MultimodalStub.extractFeatures(df, "doc_id", "payload")
-      .orderBy("doc_id").collect().toSeq
-    val part = MultimodalStub.extractFeaturesPartitioned(df, "doc_id", "payload")
-      .orderBy("doc_id").collect().toSeq
-    assert(expr == part)
-  }
-
-  test("multimodal stub: resizeStub nearest-neighbor samples down and up") {
-    val df = Seq((1L, "abcdefgh"), (2L, "ab"), (3L, "")).toDF("doc_id", "text")
-    val out = MultimodalStub.attachPayload(df, "text", "payload")
-      .select(col("doc_id"),
-        MultimodalStub.resizeStub(col("payload"), 4).cast("string").as("thumb"))
-      .orderBy("doc_id").collect()
-    // 8 bytes → 4: positions 1+floor(7k/3) = 1,3,5,8 → a,c,e,h
-    assert(out(0).getString(1) == "aceh", out(0).getString(1))
-    // 2 bytes → 4 upsamples: 1+floor(1*k/3) = 1,1,1,2 → a,a,a,b
-    assert(out(1).getString(1) == "aaab", out(1).getString(1))
-    // empty payload passes through
-    assert(out(2).getString(1) == "", out(2).getString(1))
-  }
-
   test("hot LSH bucket is capped: 10k identical docs don't explode, normal pairs survive") {
     // 10_000 identical docs → one band bucket of 10k ids; uncapped that's
     // ~50M pairs in a single straggler task. With the cap the bucket is
@@ -140,11 +173,11 @@ class DedupSimilaritySpec extends SparkSpec {
       // HOF-inlining trap documented at lshBandHashes), fused
       // expression, native kernel
       val both = docs.select(
-        Dedup.shingleHashes(Dedup.shingles(col("text"), 2)).as("expr_sh"),
+        shingleHashes(shingles(col("text"), 2)).as("expr_sh"),
         call_function("graft_shingle_hashes", col("text"), lit(2)).as("native_sh"))
         .select(col("expr_sh"), col("native_sh"),
-          Dedup.lshBandHashes(Dedup.minhashSignature(col("expr_sh"), k), r, k / r).as("naive_bands"),
-          Dedup.minhashBandHashes(col("expr_sh"), k, r).as("expr_bands"),
+          lshBandHashes(Dedup.minhashSignature(col("expr_sh"), k), r, k / r).as("naive_bands"),
+          minhashBandHashes(col("expr_sh"), k, r).as("expr_bands"),
           call_function("graft_minhash_bands", col("native_sh"), lit(k), lit(r)).as("native_bands"))
         .collect()
       both.foreach { row =>

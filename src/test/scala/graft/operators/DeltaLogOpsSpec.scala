@@ -354,30 +354,6 @@ class DeltaLogOpsSpec extends SparkSpec {
       out(5L).getAs[Long]("size_match") == 0)
   }
 
-  test("incremental fold seeded from a checkpoint continues a vacuumed history") {
-    // vacuumed classes WITH post-commits (censusFromState keys on the
-    // fold's tally rows, so a table must fold at least one line)
-    val ks = Seq(2L, 10L, 11L, 14L, 23L)
-    val liveCols = Seq("tbl", "n_live", "n_tombstones", "live_bytes",
-      "live_rows", "n_live_no_stats", "n_partitions", "min_reader", "min_writer")
-    val want = DeltaLogOps.snapshotCensus(
-        logDf(ks.flatMap(k =>
-          DeltaLogOps.syntheticLog(k).map { case (v, l) => (k, v, l) })),
-        "tbl", "ver", "line")
-      .select(liveCols.map(col): _*)
-    var state = DeltaLogOps.stateFromCheckpoint(ckptDf(ks), "tbl", "ckver")
-    for (v <- 1L to 2L) { // post-checkpoint commits arrive in order
-      val batch = ks.flatMap(k => DeltaLogOps.syntheticCheckpointed(k)._3
-        .collect { case (ver, l) if ver == v => (k, ver, l) })
-      if (batch.nonEmpty)
-        state = DeltaLogOps.foldBatch(state, logDf(batch), "tbl", "ver", "line")
-          .localCheckpoint(false)
-    }
-    val got = DeltaLogOps.censusFromState(state).select(liveCols.map(col): _*)
-    assert(got.except(want).count() == 0 && want.except(got).count() == 0,
-      "checkpoint-seeded fold must reach the same live set as the full replay")
-  }
-
   test("partition-values canonicalize: key order never splits a partition, in-log or across the checkpoint") {
     // two spellings of the SAME multi-key partition in one JSON log
     val log = logDf(Seq(

@@ -3,9 +3,10 @@ package graft.operators
 import scala.util.Random
 
 /** Seeded inputs shared by the walker specs: the mutation operators of
-  * [[WalkerFuzzSpec]] and the valid-input generators of the columnar
+  * [[WalkerFuzzSpec]], the valid-input generators of the columnar
   * formats (Parquet, ORC), which [[ColumnarWalkGoldenSpec]] replays
-  * through every census of those formats.
+  * through every census of those formats, and those of the Ogg and FLAC
+  * walkers, which [[AudioWalkGoldenSpec]] replays.
   */
 object FuzzInputs {
 
@@ -132,4 +133,41 @@ object FuzzInputs {
     "parquet-pages-binary" -> parquetPagesBinary,
     "orc-data" -> orcData,
     "orc-strings" -> orcStrings)
+
+  // ---- the Ogg and FLAC generators
+
+  def ogg(rnd: Random): Array[Byte] = {
+    val nPages = 1 + rnd.nextInt(5)
+    OggOps.encodeSynthetic((0 until nPages).map { p =>
+      val hType = if (p == 0) 2 else if (p == nPages - 1) 4 else Seq(0, 1)(rnd.nextInt(2))
+      (hType, p * 960L, (0 until 1 + rnd.nextInt(3)).map(_ => rnd.nextInt(255)))
+    })
+  }
+
+  def oggCodec(rnd: Random): Array[Byte] =
+    OggOps.encodeSyntheticPackets(Seq(
+      (2, 0L,
+        if (rnd.nextBoolean()) OggOps.opusHeadPacket(1 + rnd.nextInt(8), rnd.nextInt(1000), 48000L)
+        else OggOps.vorbisIdPacket(1 + rnd.nextInt(8), 8000L + rnd.nextInt(90000))),
+      (4, 960L * (1 + rnd.nextInt(5)),
+        Array.fill(rnd.nextInt(600))(rnd.nextInt(256).toByte))))
+
+  def opusToc(rnd: Random): Array[Byte] =
+    OggOps.encodeSyntheticPackets(Seq(
+      (2, 0L, OggOps.opusHeadPacket(1 + rnd.nextInt(2), rnd.nextInt(500), 48000L)),
+      (0, 0L, "OpusTags".getBytes("US-ASCII"))) ++
+      (0 until 1 + rnd.nextInt(4)).map { p =>
+        val toc = ((rnd.nextInt(32) << 3) | (rnd.nextInt(2) << 2) | rnd.nextInt(4)).toByte
+        (0, 960L * (p + 1), toc +: Array.fill(rnd.nextInt(300))(rnd.nextInt(256).toByte))
+      })
+
+  def flac(rnd: Random): Array[Byte] =
+    FlacOps.encodeSynthetic(8000 + rnd.nextInt(40000), 1 + rnd.nextInt(2),
+      8 + rnd.nextInt(17), rnd.nextInt(100000).toLong,
+      (0 until rnd.nextInt(3)).map(_ => (1 + rnd.nextInt(6), rnd.nextInt(120))),
+      rnd.nextInt(500))
+
+  /** The Ogg and FLAC generators, by their fuzz-harness names. */
+  val audio: Seq[(String, Random => Array[Byte])] = Seq(
+    "ogg" -> ogg, "ogg-codec" -> oggCodec, "opus-toc" -> opusToc, "flac" -> flac)
 }

@@ -143,19 +143,6 @@ class IcebergTableRootSpec extends SparkSpec {
       lists, "tbl", "path", "payload", mans, "tbl", "path", "payload")
   }
 
-  test("census-at-snapshot: every snapshot in the chain enumerates its own file set") {
-    val k = 4L // class 0: append chain {f0,f1} -> +f2 -> +f3
-    val c = IcebergOps.snapshotCensusAll(chainFrames(Seq(k)))
-      .orderBy("snap_id").collect()
-    assert(c.length == 3)
-    assert(c.map(_.getAs[Long]("n_live")).toSeq == Seq(2L, 3L, 4L))
-    assert(c.map(_.getAs[Long]("live_rows")).toSeq == Seq(22L, 36L, 52L))
-    assert(c.forall(_.getAs[Long]("snap_ok") == 1))
-    // parent links form the chain; exactly one current
-    assert(c.count(_.getAs[Long]("is_current") == 1) == 1)
-    assert(c(1).getAs[Long]("parent_id") == c(0).getAs[Long]("snap_id"))
-  }
-
   test("snapshot diff: append, fast-forward and rewrite signatures separate") {
     // k=4 class0 append, k=5 class1 fast-forward, k=6 class2 rewrite,
     // k=7 class3 delete
@@ -180,10 +167,5 @@ class IcebergTableRootSpec extends SparkSpec {
     assert(d.getAs[Long]("diff_ok") == 0 && d.getAs[Long]("cur_files") == 0)
     assert(d.getAs[Long]("n_added") == 0 && d.getAs[Long]("fast_forward") == 0,
       d.toString)
-    // and census-at-snapshot zeroes ONLY the broken snapshot
-    val c = IcebergOps.snapshotCensusAll(chainFrames(Seq(11L)))
-      .orderBy("snap_id").collect()
-    assert(c.map(_.getAs[Long]("snap_ok")).toSeq == Seq(1L, 1L, 0L))
-    assert(c(2).getAs[Long]("n_live") == 0 && c(1).getAs[Long]("n_live") == 3)
   }
 }

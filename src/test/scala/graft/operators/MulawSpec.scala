@@ -4,6 +4,41 @@ import graft.SparkSpec
 
 class MulawSpec extends SparkSpec {
 
+  /** Compress one 16-bit linear sample to its µ-law byte (G.711 §B:
+    * clip to 32635, add bias 132, locate the segment, keep the top 4
+    * mantissa bits, complement). Inverse of
+    * [[AudioCodec.mulawDecodeByte]] up to the codec's logarithmic
+    * quantization.
+    */
+  private def mulawEncodeSample(sample: Int): Int = {
+    var s = sample
+    val sign = if (s < 0) { s = -s; 0x80 } else 0
+    if (s > 32635) s = 32635
+    s += 0x84
+    var exp = 7
+    var mask = 0x4000
+    while (exp > 0 && (s & mask) == 0) { exp -= 1; mask >>= 1 }
+    val mant = (s >> (exp + 3)) & 0x0f
+    ~(sign | (exp << 4) | mant) & 0xff
+  }
+
+  /** Compress one 16-bit linear sample to its A-law byte (inverse of
+    * [[AudioCodec.alawDecodeByte]] up to the codec's logarithmic
+    * quantization: segment e covers magnitudes [0x100·2^(e−1),
+    * 0x100·2^e) with a 2^(e+3) step, segment 0 is linear with step 16).
+    */
+  private def alawEncodeSample(sample: Int): Int = {
+    var s = sample
+    val sign = if (s >= 0) 0x80 else { s = -s; 0 } // A-law: sign bit 1 = positive
+    if (s > 32767) s = 32767
+    var e = 0
+    while (e < 7 && s >= (0x100 << e)) e += 1
+    val mant =
+      if (e == 0) (s >> 4) & 0x0f
+      else ((s - (0x100 << (e - 1))) >> (e + 3)) & 0x0f
+    ((sign | (e << 4) | mant) ^ 0x55) & 0xff
+  }
+
   test("published G.711 corner values decode exactly") {
     // 0x00 ⇒ −32124 and 0x80 ⇒ +32124 are the table extremes every
     // published µ-law expander agrees on; 0xFF and 0x7F are the two
@@ -18,16 +53,16 @@ class MulawSpec extends SparkSpec {
     // 0x7F is the non-canonical "negative zero": it decodes to 0,
     // which re-encodes to the canonical zero 0xFF
     for (b <- 0 to 255 if b != 0x7F)
-      assert(AudioCodec.mulawEncodeSample(AudioCodec.mulawDecodeByte(b)) == b,
+      assert(mulawEncodeSample(AudioCodec.mulawDecodeByte(b)) == b,
         f"code 0x$b%02x")
-    assert(AudioCodec.mulawEncodeSample(AudioCodec.mulawDecodeByte(0x7F)) == 0xFF)
+    assert(mulawEncodeSample(AudioCodec.mulawDecodeByte(0x7F)) == 0xFF)
   }
 
   test("companding error stays within the segment's quantization step") {
     val rnd = new scala.util.Random(42)
     for (_ <- 0 until 2000) {
       val s = rnd.nextInt(65536) - 32768
-      val dec = AudioCodec.mulawDecodeByte(AudioCodec.mulawEncodeSample(s)).toInt
+      val dec = AudioCodec.mulawDecodeByte(mulawEncodeSample(s)).toInt
       // truncating encoder: error < 2^(exp+3) ≤ (|s|+132)/16, plus the
       // 32635 clip at the rails
       val bound = math.abs(s) / 16 + 133
@@ -68,7 +103,7 @@ class MulawSpec extends SparkSpec {
     // unlike µ-law, A-law has no redundant zero code: every byte is
     // canonical and must survive a decode/encode round-trip
     for (b <- 0 to 255)
-      assert(AudioCodec.alawEncodeSample(AudioCodec.alawDecodeByte(b)) == b,
+      assert(alawEncodeSample(AudioCodec.alawDecodeByte(b)) == b,
         f"code 0x$b%02x")
   }
 

@@ -75,53 +75,6 @@ class RelationalSpec extends SparkSpec {
     assert(!plan.contains("Expand"), plan)
   }
 
-  test("extendDictionary: existing codes frozen, new codes contiguous, extend-from-empty = build") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dict = Seq(("web", 1L), ("books", 2L), ("wiki", 3L)).toDF("source", "code")
-    val batch = Seq("wiki", "wiki", "arxiv", "arxiv", "arxiv", "code", "web")
-      .toDF("source")
-    val out = Relational.extendDictionary(dict, batch, "source", "code")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // untouched existing codes
-    assert(out("web") == 1L && out("books") == 2L && out("wiki") == 3L)
-    // new values after current max, by (freq desc, value asc): arxiv(3) then code(1)
-    assert(out("arxiv") == 4L && out("code") == 5L)
-    assert(out.size == 5)
-    // extending an EMPTY dictionary reproduces the initial build order
-    val empty = dict.filter(lit(false))
-    val built = Relational.extendDictionary(empty, batch, "source", "code")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(built == Map("wiki" -> 2L, "arxiv" -> 1L, "code" -> 3L, "web" -> 4L))
-  }
-
-  test("extendDictionaryBatchStep: codes frozen across micro-batches and a crashed swap recovers") {
-    import spark.implicits._
-    val dictPath = java.nio.file.Files.createTempDirectory("graft-dict").toString + "/dict"
-    Relational.extendDictionaryBatchStep(
-      Seq("web", "web", "wiki").toDF("source"), dictPath, "source", "code")
-    val d1 = spark.read.parquet(dictPath).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(d1 == Map("web" -> 1L, "wiki" -> 2L))
-    // batch 2: existing codes untouched, new value appended
-    Relational.extendDictionaryBatchStep(
-      Seq("wiki", "arxiv", "arxiv").toDF("source"), dictPath, "source", "code")
-    val d2 = spark.read.parquet(dictPath).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(d2 == Map("web" -> 1L, "wiki" -> 2L, "arxiv" -> 3L))
-    // crash simulation: a COMPLETED tmp next to a missing current dir is
-    // promoted on the next step; a marker-less partial tmp is discarded
-    val fs = new org.apache.hadoop.fs.Path(dictPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(dictPath),
-      new org.apache.hadoop.fs.Path(dictPath + ".tmp"))
-    Relational.extendDictionaryBatchStep(
-      Seq("code").toDF("source"), dictPath, "source", "code")
-    val d3 = spark.read.parquet(dictPath).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(d3 == Map("web" -> 1L, "wiki" -> 2L, "arxiv" -> 3L, "code" -> 4L))
-  }
-
   test("orderedPrefixSum equals the window route and is partition-invariant") {
     import spark.implicits._
     val rows = (1L to 300L).map(i => (i, (i * 7919) % 100 + 1)) // (id, value)

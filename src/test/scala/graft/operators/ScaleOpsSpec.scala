@@ -34,76 +34,6 @@ class ScaleOpsSpec extends SparkSpec {
       ScaleOps.saltedJoin(df, df, Seq("k"), salts = 2, joinType = jt)
   }
 
-  test("replicateScaled survives an EMPTY shifted table (null max folds, no NPE)") {
-    // an empty table's max key aggregates to null; the disjointness
-    // guard must fold it to the sentinel instead of NPE-ing the driver
-    val src = java.nio.file.Files.createTempDirectory("graft-repl-src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-repl-out").toString
-    for (t <- Tables.names) {
-      val df = Tables.load(spark, sf, t)
-      (if (t == "embeddings") df.limit(0) else df)
-        .write.mode("overwrite").parquet(s"$src/$t.parquet")
-    }
-    ScaleOps.replicateScaled(spark, src, out, factor = 1)
-    assert(spark.read.parquet(s"$out/embeddings.parquet").count() == 0)
-    assert(spark.read.parquet(s"$out/lineitem.parquet").count() ==
-      Tables.load(spark, sf, "lineitem").count())
-  }
-
-  test("writeZOrdered round-trips rows and shrinks per-file spans on BOTH dims vs plain layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toFile
-    val o = Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_custkey").as("x"),
-        datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("y"))
-    o.repartition(8).write.parquet(s"$dir/plain")
-    ScaleOps.writeZOrdered(o, Seq("x", "y"), s"$dir/zord", 8)
-
-    // same rows, no aux columns leaked
-    val back = spark.read.parquet(s"$dir/zord")
-    assert(back.columns.toSeq == Seq("o_orderkey", "x", "y"))
-    assert(back.orderBy("o_orderkey").collect().map(_.toSeq).toSeq ==
-      o.orderBy("o_orderkey").collect().map(_.toSeq).toSeq)
-
-    // layout evidence: average per-file (max-min) span on each dim
-    def avgSpans(path: String): (Double, Double) = {
-      val r = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg((max("x") - min("x")).cast("double").as("sx"),
-          (max("y") - min("y")).cast("double").as("sy"))
-        .agg(avg("sx"), avg("sy")).collect()(0)
-      (r.getDouble(0), r.getDouble(1))
-    }
-    val (px, py) = avgSpans(s"$dir/plain")
-    val (zx, zy) = avgSpans(s"$dir/zord")
-    // round-robin files span ~the full range on both dims; the morton
-    // clustering must cut both substantially at once
-    assert(zx < px * 0.6, s"x span $zx vs plain $px")
-    assert(zy < py * 0.6, s"y span $zy vs plain $py")
-  }
-
-  test("bucketed tables join without a shuffle exchange") {
-    val l = Tables.load(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
-    val o = Tables.load(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    ScaleOps.writeBucketed(l, "b_lineitem", Seq("l_orderkey"), 4)
-    ScaleOps.writeBucketed(o, "b_orders", Seq("o_orderkey"), 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      val joined = spark.table("b_lineitem")
-        .join(spark.table("b_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange hashpartitioning"), plan) // bucketing replaced the shuffle
-      assert(plan.contains("SelectedBucketsCount"), plan)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-    }
-  }
-
   test("compact: plans file count from metadata, preserves rows, hits the size target") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
@@ -130,44 +60,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(sizes.max < sizes.min * 2, s"uneven outputs: ${sizes.toSeq.sorted}")
   }
 
-  test("replicateScaled: factor-x rows, intact referential integrity, disjoint copies") {
-    import org.apache.spark.sql.functions._
-    val src = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft-sfscale").toString
-    ScaleOps.replicateScaled(spark, src, out, factor = 3)
-    // fact tables triple; dimension tables stay
-    for (t <- Seq("lineitem", "orders", "documents", "embeddings")) {
-      val n0 = graft.Tables.load(spark, src, t).count()
-      assert(graft.Tables.load(spark, out, t).count() == 3 * n0, t)
-    }
-    assert(graft.Tables.load(spark, out, "nation").count() ==
-      graft.Tables.load(spark, src, "nation").count())
-    // referential integrity WITHIN a copy: every scaled lineitem
-    // orderkey still joins a scaled order, same dangling fraction as
-    // the source (key shifting is consistent across both tables)
-    def orphanFrac(dir: String): Double = {
-      val li = graft.Tables.load(spark, dir, "lineitem").select("l_orderkey")
-      val or = graft.Tables.load(spark, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"))
-      li.join(or, Seq("l_orderkey"), "left_anti").count().toDouble / li.count()
-    }
-    assert(math.abs(orphanFrac(out) - orphanFrac(src)) < 1e-9,
-      "key shifting must preserve the join exactly, copy by copy")
-    // no key collides across copies
-    val custDistinct = graft.Tables.load(spark, out, "customer")
-      .select("c_custkey").distinct().count()
-    assert(custDistinct == 3 * graft.Tables.load(spark, src, "customer")
-      .select("c_custkey").distinct().count())
-    // document text is DISJOINT per copy (the dedup family must
-    // measure scale, not planted twins): exact-dup count does not grow
-    def dupTexts(dir: String): Long = {
-      val d = graft.Tables.load(spark, dir, "documents")
-      d.count() - d.select("text").distinct().count()
-    }
-    assert(dupTexts(out) == 3 * dupTexts(src),
-      "per-copy text variation must not create cross-copy twins")
-  }
-
   test("compactionPlan: path-ordered bins fill to target; an oversize file owns its group") {
     import spark.implicits._
     val files = Seq(
@@ -183,20 +75,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(out((1L, 5L)) == ((1L, 10L)))
     assert(out((2L, 0L)) == ((1L, 100L)))
     assert(out.size == 4)
-  }
-
-  test("replicateScaled: an offset below the source's max key is raised, never collides") {
-    val src = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft-sfscale-off").toString
-    // the requested offset is far below the source's max key — the
-    // derived effective offset must keep every copy's keys disjoint
-    ScaleOps.replicateScaled(spark, src, out, factor = 2, offset = 10L)
-    for (t <- Seq("orders", "documents")) {
-      val keyCol = if (t == "orders") "o_orderkey" else "doc_id"
-      val n0 = graft.Tables.load(spark, src, t).select(keyCol).distinct().count()
-      assert(graft.Tables.load(spark, out, t).select(keyCol).distinct().count() == 2 * n0,
-        s"$t: replica keys must stay disjoint even with a too-small requested offset")
-    }
   }
 
   test("fanIfNarrow over a REBALANCE-hinted frame starts no Spark job") {

@@ -77,38 +77,13 @@ class WalkerFuzzSpec extends AnyFunSuite {
       }),
       b => { val m = ZipOps.parse(b); (m.nEntries.toLong, m.trailingBytes) },
       appendStable = false), // EOCD discovery starts at the file END
-    Fuzzed("ogg",
-      rnd => {
-        val nPages = 1 + rnd.nextInt(5)
-        OggOps.encodeSynthetic((0 until nPages).map { p =>
-          val hType = if (p == 0) 2 else if (p == nPages - 1) 4 else Seq(0, 1)(rnd.nextInt(2))
-          (hType, p * 960L, (0 until 1 + rnd.nextInt(3)).map(_ => rnd.nextInt(255)))
-        })
-      },
+    Fuzzed("ogg", FuzzInputs.ogg,
       b => { val m = OggOps.parse(b); (m.nPages.toLong, m.trailingBytes) }),
-    Fuzzed("ogg-codec",
-      rnd => OggOps.encodeSyntheticPackets(Seq(
-        (2, 0L,
-          if (rnd.nextBoolean()) OggOps.opusHeadPacket(1 + rnd.nextInt(8), rnd.nextInt(1000), 48000L)
-          else OggOps.vorbisIdPacket(1 + rnd.nextInt(8), 8000L + rnd.nextInt(90000))),
-        (4, 960L * (1 + rnd.nextInt(5)),
-          Array.fill(rnd.nextInt(600))(rnd.nextInt(256).toByte)))),
+    Fuzzed("ogg-codec", FuzzInputs.oggCodec,
       b => { val m = OggOps.codecMeta(b); (m.nStreams.toLong, m.trailingBytes) }),
-    Fuzzed("opus-toc",
-      rnd => OggOps.encodeSyntheticPackets(Seq(
-        (2, 0L, OggOps.opusHeadPacket(1 + rnd.nextInt(2), rnd.nextInt(500), 48000L)),
-        (0, 0L, "OpusTags".getBytes("US-ASCII"))) ++
-        (0 until 1 + rnd.nextInt(4)).map { p =>
-          val toc = ((rnd.nextInt(32) << 3) | (rnd.nextInt(2) << 2) | rnd.nextInt(4)).toByte
-          (if (p == 0) 0 else 0, 960L * (p + 1),
-            toc +: Array.fill(rnd.nextInt(300))(rnd.nextInt(256).toByte))
-        }),
+    Fuzzed("opus-toc", FuzzInputs.opusToc,
       b => { val m = OggOps.opusTocCensus(b); (m.nAudioPackets.toLong, m.trailingBytes) }),
-    Fuzzed("flac",
-      rnd => FlacOps.encodeSynthetic(8000 + rnd.nextInt(40000), 1 + rnd.nextInt(2),
-        8 + rnd.nextInt(17), rnd.nextInt(100000).toLong,
-        (0 until rnd.nextInt(3)).map(_ => (1 + rnd.nextInt(6), rnd.nextInt(120))),
-        rnd.nextInt(500)),
+    Fuzzed("flac", FuzzInputs.flac,
       b => { val m = FlacOps.parse(b); (m.nMetaBlocks.toLong, m.trailingBytes) }),
     Fuzzed("bmff",
       rnd => IsoBmff.encodeSynthetic("isom", 1 + rnd.nextInt(48000),

@@ -9,6 +9,29 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WebpOpsSpec extends AnyFunSuite {
 
+  private def chunk(cc: String, body: Array[Byte]): Array[Byte] =
+    new ByteSink(9 + body.length).riffChunk(cc, body).toByteArray
+  private def container(chunks: Array[Byte]): Array[Byte] =
+    chunk("RIFF", new ByteSink(4 + chunks.length).ascii("WEBP").raw(chunks).toByteArray)
+
+  /** Extended (VP8X) STILL: no animation flag, one VP8L image chunk as
+    * a sibling — the common alpha-still class in crawl corpora.
+    */
+  private def encodeExtendedStill(w: Int, h: Int, alpha: Boolean,
+      exif: Boolean, icc: Boolean, xmp: Boolean, filler: Int): Array[Byte] = {
+    require(w >= 1 && w <= (1 << 24) && h >= 1 && h <= (1 << 24), "canvas dims are 24-bit")
+    val flags = ((if (icc) 0x20 else 0) | (if (alpha) 0x10 else 0) |
+      (if (exif) 0x08 else 0) | (if (xmp) 0x04 else 0)).toByte
+    val vp8x = new ByteSink(10).u8(flags).u8(0).u8(0).u8(0).le24(w - 1).le24(h - 1).toByteArray
+    val meta8 = Array.tabulate(8)(i => (i * 11 + 5).toByte)
+    container(
+      chunk("VP8X", vp8x) ++
+        (if (icc) chunk("ICCP", meta8) else Array.empty[Byte]) ++
+        chunk("VP8L", WebpOps.vp8lPayload(w, h, alpha, filler)) ++
+        (if (exif) chunk("EXIF", meta8) else Array.empty[Byte]) ++
+        (if (xmp) chunk("XMP ", meta8) else Array.empty[Byte]))
+  }
+
   test("lossy round-trip: kind, 14-bit dims, partition size, one chunk") {
     val m = WebpOps.parse(WebpOps.encodeLossy(640, 480, 1234L, 6))
     assert(m.valid == 1 && m.kind == "lossy")
@@ -42,7 +65,7 @@ class WebpOpsSpec extends AnyFunSuite {
   }
 
   test("extended STILL (no animation): one frame, flags intact") {
-    val m = WebpOps.parse(WebpOps.encodeExtendedStill(64, 48, alpha = true,
+    val m = WebpOps.parse(encodeExtendedStill(64, 48, alpha = true,
       exif = false, icc = true, xmp = false, filler = 2))
     assert(m.valid == 1 && m.kind == "extended")
     assert(m.hasAnim == 0 && m.nFrames == 1 && m.durationMs == 0L)

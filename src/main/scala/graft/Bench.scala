@@ -23,23 +23,11 @@ object Bench {
       val f = new java.io.File(s"$sfDir/$n.parquet")
       n -> (if (f.exists) f.lastModified / 1000 else -1L)
     }
-    // Optional subset cap for drift profiling (SPARK_GRAFT_MAX_Q=236
-    // keeps only queries whose number is ≤ 236): lets a "subset alone"
-    // run be compared against the same subset's times inside the full
-    // 313-query process to separate per-query regressions from
-    // cumulative JVM/bench-process pressure. Driver runs without it.
-    val maxQ = sys.env.get("SPARK_GRAFT_MAX_Q").map(_.toInt)
-    def qNum(name: String): Int =
-      name.drop(1).takeWhile(_.isDigit) match { case "" => Int.MaxValue; case d => d.toInt }
     // SPARK_GRAFT_ONLY_Q=q385,q386 measures just those queries (full
     // name or exact qNN, SparkEntry.selector) — the freeze path for adding
     // newly-landed queries to baseline_queries.json without a full run
-    val onlyQ = sys.env.get("SPARK_GRAFT_ONLY_Q").map(SparkEntry.selector)
-    val selected = (onlyQ, maxQ) match {
-      case (Some(picked), _) => SparkEntry.queries.filter { case (n, _) => picked(n) }
-      case (_, Some(m)) => SparkEntry.queries.filter { case (n, _) => qNum(n) <= m }
-      case _ => SparkEntry.queries
-    }
+    val selected = sys.env.get("SPARK_GRAFT_ONLY_Q").map(SparkEntry.selector)
+      .fold(SparkEntry.queries)(picked => SparkEntry.queries.filter { case (n, _) => picked(n) })
     // best-of-3: per-query times on shared hardware show 2-3x noise;
     // the minimum is the stable signal the round is graded on
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -40,7 +40,6 @@ object ExportDemo {
     val curated = timed("curate")(
       graft.curation.CurationPipeline.curate(
         docs.filter(pmod(col("doc_id"), lit(97)) =!= 0), "doc_id", "text",
-        cfg = graft.curation.CurationPipeline.Config(maxEvalOverlap = 0.05),
         evalDocs = Some(evalDocs))
         .localCheckpoint(false))
     val nCurated = curated.count()

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -28,69 +28,44 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "graft_dot"),
-      (children: Seq[Expression]) => FloatDot(children.head, children(1))),
-    (FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[LongArrayIntersectCount].getName, "graft_intersect_count"),
-      (children: Seq[Expression]) => LongArrayIntersectCount(children.head, children(1))),
-    (FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "graft_cms_estimate"),
-      (children: Seq[Expression]) => CmsEstimate(children.head, children(1))),
-    (FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[Expression]) => ShingleHashes(children.head, children(1),
-        if (children.size > 2) children(2)
-        else org.apache.spark.sql.catalyst.expressions.Literal(31))),
-    (FunctionIdentifier("graft_shingle_hash_list"),
-      new ExpressionInfo(classOf[ShingleHashList].getName, "graft_shingle_hash_list"),
-      (children: Seq[Expression]) => ShingleHashList(children.head, children(1))),
-    (FunctionIdentifier("graft_hash64"),
-      new ExpressionInfo(classOf[Hash64].getName, "graft_hash64"),
-      (children: Seq[Expression]) => Hash64(children.head)),
-    (FunctionIdentifier("graft_tri_products"),
-      new ExpressionInfo(classOf[TriQuantProducts].getName, "graft_tri_products"),
-      (children: Seq[Expression]) => TriQuantProducts(children.head)),
-    (FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)),
-    (FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children.head, children(1))),
-    (FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinhashBands].getName, "graft_minhash_bands"),
-      (children: Seq[Expression]) => MinhashBands(children.head, children(1), children(2))),
-    (FunctionIdentifier("graft_gear_chunks"),
-      new ExpressionInfo(classOf[GearChunks].getName, "graft_gear_chunks"),
-      (children: Seq[Expression]) => GearChunks(children.head, children(1))),
-    (FunctionIdentifier("graft_multi_match"),
-      new ExpressionInfo(classOf[MultiMatch].getName, "graft_multi_match"),
-      (children: Seq[Expression]) => MultiMatch(children.head, children(1))),
-    (FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[Simhash].getName, "graft_simhash"),
-      (children: Seq[Expression]) => Simhash(children.head, children(1))),
-    (FunctionIdentifier("graft_triples"),
-      new ExpressionInfo(classOf[ArrayTriples].getName, "graft_triples"),
-      (children: Seq[Expression]) => ArrayTriples(children.head)),
-    (FunctionIdentifier("graft_top_k_longs"),
-      new ExpressionInfo(classOf[TopKSmallestLongs].getName, "graft_top_k_longs"),
-      (children: Seq[Expression]) => TopKSmallestLongs(children.head, children(1))),
-    (FunctionIdentifier("graft_pairs_long"),
-      new ExpressionInfo(classOf[ArrayPairsLong].getName, "graft_pairs_long"),
-      (children: Seq[Expression]) => ArrayPairsLong(children.head)),
-    (FunctionIdentifier("graft_pairs_str"),
-      new ExpressionInfo(classOf[ArrayPairsString].getName, "graft_pairs_str"),
-      (children: Seq[Expression]) => ArrayPairsString(children.head)),
-    (FunctionIdentifier("graft_cross_long"),
-      new ExpressionInfo(classOf[CrossPairsLong].getName, "graft_cross_long"),
-      (children: Seq[Expression]) => CrossPairsLong(children.head, children(1))),
-    (FunctionIdentifier("graft_max_any"),
-      new ExpressionInfo(classOf[MaxAny].getName, "graft_max_any"),
-      (children: Seq[Expression]) => MaxAny(children.head)),
-    (FunctionIdentifier("graft_min_any"),
-      new ExpressionInfo(classOf[MinAny].getName, "graft_min_any"),
-      (children: Seq[Expression]) => MinAny(children.head)))
+  /** The engine's SQL functions: name, expression class, argument
+    * count, builder. The count is checked before the builder runs, so
+    * a wrong count fails analysis with a message naming the function
+    * and the count it takes — never an extra argument silently
+    * dropped or a bare index error.
+    */
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Class[_], Int, Seq[Expression] => Expression)](
+      ("graft_dot", classOf[FloatDot], 2, c => FloatDot(c(0), c(1))),
+      ("graft_intersect_count", classOf[LongArrayIntersectCount], 2, c => LongArrayIntersectCount(c(0), c(1))),
+      ("graft_cms_estimate", classOf[CmsEstimate], 2, c => CmsEstimate(c(0), c(1))),
+      ("graft_shingle_hashes", classOf[ShingleHashes], 2, c => ShingleHashes(c(0), c(1))),
+      ("graft_shingle_hash_list", classOf[ShingleHashList], 2, c => ShingleHashList(c(0), c(1))),
+      ("graft_hash64", classOf[Hash64], 1, c => Hash64(c(0))),
+      ("graft_tri_products", classOf[TriQuantProducts], 1, c => TriQuantProducts(c(0))),
+      ("graft_nfc", classOf[NfcNormalize], 1, c => NfcNormalize(c(0))),
+      ("graft_jaro_winkler", classOf[JaroWinkler], 2, c => JaroWinkler(c(0), c(1))),
+      ("graft_minhash_bands", classOf[MinhashBands], 3, c => MinhashBands(c(0), c(1), c(2))),
+      ("graft_gear_chunks", classOf[GearChunks], 2, c => GearChunks(c(0), c(1))),
+      ("graft_multi_match", classOf[MultiMatch], 2, c => MultiMatch(c(0), c(1))),
+      ("graft_simhash", classOf[Simhash], 2, c => Simhash(c(0), c(1))),
+      ("graft_triples", classOf[ArrayTriples], 1, c => ArrayTriples(c(0))),
+      ("graft_top_k_longs", classOf[TopKSmallestLongs], 2, c => TopKSmallestLongs(c(0), c(1))),
+      ("graft_pairs_long", classOf[ArrayPairsLong], 1, c => ArrayPairsLong(c(0))),
+      ("graft_pairs_str", classOf[ArrayPairsString], 1, c => ArrayPairsString(c(0))),
+      ("graft_cross_long", classOf[CrossPairsLong], 2, c => CrossPairsLong(c(0), c(1))),
+      ("graft_max_any", classOf[MaxAny], 1, c => MaxAny(c(0))),
+      ("graft_min_any", classOf[MinAny], 1, c => MinAny(c(0)))).map { case (name, cls, arity, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          if (children.size != arity)
+            throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+              "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+              "actualNum" -> children.size.toString,
+              "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+          build(children)
+        })
+    }
 
   /** Install the engine on a session built without
     * `spark.sql.extensions` (through the runtime `functionRegistry` and

@@ -51,23 +51,7 @@ object MinhashKernel {
     * first-occurrence order (= array_distinct semantics). Documents
     * shorter than n tokens contribute one whole-text shingle.
     */
-  def shingleHashes(text: UTF8String, n: Int): ArrayData =
-    shingleHashes(text, n, 31)
-
-  /** Width-parameterized form: hashes masked to `maskBits` bits
-    * (mask = 2^maskBits − 1; hash60 supplies up to 60). 31 bits is the
-    * default — compatible with the affine min-hash family's modulus —
-    * but a >10M-distinct-gram source crosses the 31-bit birthday bound
-    * (≈2¹⁵·⁵ grams for a 50% collision somewhere; ~2.3% expected
-    * colliding pairs at 10M grams), inflating exact containment and
-    * overlap counts. The conf `spark.graft.shingleBits`
-    * ([[graft.operators.Dedup.ShingleBitsKey]]) widens the EXACT-set
-    * family (q62/q128/q364 shapes) to ≥48 bits at that scale; the
-    * min-hash band machinery stays at 31 regardless (a·h + b with
-    * 48-bit h overflows a long).
-    */
-  def shingleHashes(text: UTF8String, n: Int, maskBits: Int): ArrayData = {
-    val mask = (1L << maskBits) - 1
+  def shingleHashes(text: UTF8String, n: Int): ArrayData = {
     val s = text.toString
     // Spark trim() strips 0x20 only (not general whitespace)
     var b = 0
@@ -81,14 +65,14 @@ object MinhashKernel {
       sb.setLength(0)
       var k = 0
       while (k < toks.length) { if (k > 0) sb.append(' '); sb.append(toks(k)); k += 1 }
-      seen.add(hash60(sb.toString) & mask)
+      seen.add(hash60(sb.toString) & P)
     } else {
       var i = 0
       while (i + n <= toks.length) {
         sb.setLength(0)
         var k = 0
         while (k < n) { if (k > 0) sb.append(' '); sb.append(toks(i + k)); k += 1 }
-        seen.add(hash60(sb.toString) & mask)
+        seen.add(hash60(sb.toString) & P)
         i += 1
       }
     }
@@ -186,48 +170,34 @@ object MinhashKernel {
   }
 }
 
-/** `graft_shingle_hashes(text, n[, maskBits])` → array<long>:
-  * distinct md5 hashes of the word n-gram shingles masked to
-  * `maskBits` bits (default 31), computed in one compiled pass (see
-  * [[MinhashKernel.shingleHashes]] — the width scaladoc there states
-  * the 31-bit birthday bound that motivates widening and why the
-  * min-hash band family stays at 31).
+/** `graft_shingle_hashes(text, n)` → array<long>: distinct 31-bit md5
+  * hashes of the word n-gram shingles, computed in one compiled pass
+  * (see [[MinhashKernel.shingleHashes]]).
   */
-case class ShingleHashes(first: Expression, second: Expression,
-                         third: Expression)
-  extends TernaryExpression {
+case class ShingleHashes(left: Expression, right: Expression)
+  extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType != StringType)
+    if (left.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(s"$prettyName: first argument must be string")
-    else if (second.dataType != IntegerType || !second.foldable)
+    else if (right.dataType != IntegerType || !right.foldable)
       TypeCheckResult.TypeCheckFailure(s"$prettyName: n must be an integer literal")
-    else if (third.dataType != IntegerType || !third.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName: maskBits must be an integer literal")
-    else {
-      val mb = third.eval().asInstanceOf[Int]
-      // ≤60: hash60 supplies 60 bits; ≥16: anything narrower collides
-      // on toy corpora and can only be a bug
-      if (mb < 16 || mb > 60)
-        TypeCheckResult.TypeCheckFailure(s"$prettyName: maskBits must be in [16, 60], got $mb")
-      else TypeCheckResult.TypeCheckSuccess
-    }
+    else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private lazy val n: Int = second.eval().asInstanceOf[Int]
-  private lazy val maskBits: Int = third.eval().asInstanceOf[Int]
+  private lazy val n: Int = right.eval().asInstanceOf[Int]
 
-  override protected def nullSafeEval(t: Any, nn: Any, mb: Any): Any =
-    MinhashKernel.shingleHashes(t.asInstanceOf[UTF8String], n, maskBits)
+  override protected def nullSafeEval(t: Any, nn: Any): Any =
+    MinhashKernel.shingleHashes(t.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, _, _) =>
-      s"${ev.value} = graft.expressions.MinhashKernel.shingleHashes($t, $n, $maskBits);")
+    nullSafeCodeGen(ctx, ev, (t, _) =>
+      s"${ev.value} = graft.expressions.MinhashKernel.shingleHashes($t, $n);")
 
   override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): ShingleHashes =
-    copy(first = newFirst, second = newSecond, third = newThird)
+      newLeft: Expression, newRight: Expression): ShingleHashes =
+    copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_shingle_hashes"
 }

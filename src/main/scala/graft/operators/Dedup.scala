@@ -24,38 +24,16 @@ import graft.functions.Hashing
 object Dedup {
 
   /** Mersenne prime 2^31 - 1: the modulus of the affine min-hash
-    * family. 31-bit hashes keep a*h + b inside a long — which is why
-    * the min-hash/LSH path PINS 31 bits regardless of
-    * [[ShingleBitsKey]] (the band hash is an approximation anyway;
-    * widening only matters where collisions inflate EXACT counts).
+    * family. 31-bit hashes keep a*h + b inside a long.
     */
   val MinhashP: Long = 2147483647L
 
-  /** Conf key widening the EXACT-set shingle family's hash space
-    * (contamination q62, set-similarity q128, containment q364).
-    * Default 31 bits; a >10M-distinct-gram source should set ≥48 —
-    * at 10M grams the 31-bit space expects ~23k colliding pairs
-    * (n²/2^(b+1)), each one a phantom shared gram in a containment or
-    * overlap count; at 48 bits the same corpus expects ~0.2. Read at
-    * plan-BUILD time (the auditProbes conf-capture discipline).
-    * External oracles must replay the same width — the committed
-    * oracle SQL replays [[DefaultShingleBits]]; non-default widths are
-    * spec-verified (ShingleWidthSpec) rather than driver-gated.
+  /** Width of the shingle-hash family (`graft_shingle_hashes`): md5's
+    * first 60 bits masked to 31, the width the min-hash family needs.
+    * External oracles replay the same mask ([[ShingleMask]]).
     */
-  val ShingleBitsKey = "spark.graft.shingleBits"
-  val DefaultShingleBits = 31
-  val DefaultShingleMask: Long = (1L << DefaultShingleBits) - 1
-
-  def shingleBits(spark: org.apache.spark.sql.SparkSession): Int = {
-    val b = spark.conf.get(ShingleBitsKey, DefaultShingleBits.toString).toInt
-    require(b >= 16 && b <= 60, s"$ShingleBitsKey must be in [16, 60], got $b")
-    b
-  }
-
-  /** The conf-widened distinct-shingle-hash column (compiled kernel). */
-  def shingleHashesWide(spark: org.apache.spark.sql.SparkSession,
-                        text: Column, n: Int): Column =
-    call_function("graft_shingle_hashes", text, lit(n), lit(shingleBits(spark)))
+  val ShingleBits = 31
+  val ShingleMask: Long = (1L << ShingleBits) - 1
 
   /** Hash-family coefficients, md5-derived at plan-build time so the
     * per-row cost is one md5 per shingle plus k long multiply-adds
@@ -370,25 +348,18 @@ object Dedup {
     * code path at every scale, and no eager job at plan construction
     * (an earlier version ran a limit-capped count() on every call —
     * a driver round-trip even when the result was never executed).
-    * `maxBroadcastEvalDocs` is retained for signature stability and as
-    * documentation of the intended boundedness contract; it no longer
-    * triggers any eager work.
     */
   def shingleOverlapVsEval(train: DataFrame, evalDocs: DataFrame,
-                           idCol: String, textCol: String, n: Int,
-                           maxBroadcastEvalDocs: Long): DataFrame = {
-    // conf-widened hash space (ShingleBitsKey): both sides MUST use the
-    // same width or overlap counts are meaningless
-    val sh = (c: Column) => shingleHashesWide(train.sparkSession, c, n)
+                           idCol: String, textCol: String, n: Int): DataFrame = {
+    val sh = (c: Column) => call_function("graft_shingle_hashes", c, lit(n))
     val evalGrams = evalDocs
       .select(explode(sh(col(textCol))).as("h"))
       .distinct()
       .withColumn("_hit", lit(1))
-    val evalSide = evalGrams
     ScaleOps.fanIfNarrow(train, col(idCol))
       .select(col(idCol),
         explode(sh(col(textCol))).as("h"))
-      .join(evalSide, Seq("h"), "left")
+      .join(evalGrams, Seq("h"), "left")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"), count(col("_hit")).as("n_overlap"))
       .withColumn("overlap_frac",

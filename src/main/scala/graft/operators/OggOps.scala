@@ -254,32 +254,20 @@ object OggOps {
   }
 
   /** A valid OpusHead identification packet (RFC 7845 §5.1). */
-  def opusHeadPacket(channels: Int, preSkip: Int, inputRate: Long): Array[Byte] = {
-    val b = new Array[Byte](19)
-    "OpusHead".getBytes("US-ASCII").copyToArray(b)
-    b(8) = 1
-    b(9) = channels.toByte
-    b(10) = (preSkip & 0xff).toByte; b(11) = ((preSkip >> 8) & 0xff).toByte
-    var i = 0
-    while (i < 4) { b(12 + i) = ((inputRate >>> (8 * i)) & 0xff).toByte; i += 1 }
-    // output gain 0, mapping family 0 (bytes 16..18 stay zero)
-    b
-  }
+  def opusHeadPacket(channels: Int, preSkip: Int, inputRate: Long): Array[Byte] =
+    new ByteSink(19).ascii("OpusHead").u8(1).u8(channels).le16(preSkip).le32(inputRate)
+      .le16(0).u8(0) // output gain 0, mapping family 0
+      .toByteArray
 
   /** A valid Vorbis identification packet (Vorbis I §4.2.2). */
-  def vorbisIdPacket(channels: Int, rate: Long): Array[Byte] = {
-    val b = new Array[Byte](30)
-    b(0) = 0x01
-    "vorbis".getBytes("US-ASCII").copyToArray(b, 1)
-    // version (4B) stays zero
-    b(11) = channels.toByte
-    var i = 0
-    while (i < 4) { b(12 + i) = ((rate >>> (8 * i)) & 0xff).toByte; i += 1 }
-    // bitrates (12B) stay zero
-    b(28) = ((8 << 4) | 11).toByte // blocksizes 2^8 / 2^11
-    b(29) = 0x01                   // framing flag
-    b
-  }
+  def vorbisIdPacket(channels: Int, rate: Long): Array[Byte] =
+    new ByteSink(30).u8(0x01).ascii("vorbis")
+      .le32(0)                       // version
+      .u8(channels).le32(rate)
+      .raw(new Array[Byte](12))      // bitrates
+      .u8((8 << 4) | 11)             // blocksizes 2^8 / 2^11
+      .u8(0x01)                      // framing flag
+      .toByteArray
 
   /** One raw page with an EXPLICIT segment table — the low-level
     * fixture builder (a non-terminal lacing run of 255s expresses a

@@ -737,8 +737,8 @@ object ParquetPages {
     */
   def encodeBinaryFile(rowGroups: Seq[Seq[Seq[Option[Array[Byte]]]]],
       encoding: Int, codec: Int, truncate: Int = 0): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("PAR1".getBytes("US-ASCII"))
+    val out = new ByteSink()
+    out.ascii("PAR1")
     def compress(raw: Array[Byte]): Array[Byte] =
       if (codec == CodecSnappy) snappyLiteral(raw) else raw
     def plainBlob(vs: Seq[Array[Byte]]): Array[Byte] = {
@@ -770,11 +770,9 @@ object ParquetPages {
       val dataOff = out.size().toLong
       pages.foreach { page =>
         val nonNull = page.flatten
-        val body = new java.io.ByteArrayOutputStream()
+        val body = new ByteSink()
         val defs = encodeRleHybrid(page.map(v => if (v.isDefined) 1 else 0), 1)
-        body.write(defs.length & 0xff); body.write((defs.length >> 8) & 0xff)
-        body.write((defs.length >> 16) & 0xff); body.write((defs.length >> 24) & 0xff)
-        body.write(defs)
+        body.le32(defs.length).raw(defs)
         encoding match {
           case 0 => body.write(plainBlob(nonNull))
           case 8 =>
@@ -852,11 +850,7 @@ object ParquetPages {
     w.field(4, 6, 8).str("graft-pages")
     w.stop()
     val footer = w.bytes
-    out.write(footer)
-    val len = footer.length
-    out.write(Array((len & 0xff).toByte, ((len >> 8) & 0xff).toByte,
-      ((len >> 16) & 0xff).toByte, ((len >> 24) & 0xff).toByte))
-    out.write("PAR1".getBytes("US-ASCII"))
+    out.raw(footer).le32(footer.length).ascii("PAR1")
     val b = out.toByteArray
     if (truncate > 0) b.take(math.max(0, b.length - truncate)) else b
   }
@@ -873,10 +867,7 @@ object ParquetPages {
     * round-trips it exactly.
     */
   def snappyLiteral(raw: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var v = raw.length.toLong
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
+    val out = new ByteSink().varint(raw.length.toLong)
     var p = 0
     while (p < raw.length) {
       val n = math.min(raw.length - p, 60)
@@ -944,8 +935,8 @@ object ParquetPages {
   def encodeInt64File(rowGroups: Seq[Seq[Seq[Option[Long]]]],
       useDict: Boolean, codec: Int, truncate: Int = 0,
       pageV2: Boolean = false): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("PAR1".getBytes("US-ASCII"))
+    val out = new ByteSink()
+    out.ascii("PAR1")
     def compress(raw: Array[Byte]): Array[Byte] =
       if (codec == CodecSnappy) snappyLiteral(raw) else raw
     // (numValues, dataOff, dictOff, totalCompressed) per row group
@@ -1006,11 +997,9 @@ object ParquetPages {
           w.stop()
           out.write(w.bytes); out.write(defs); out.write(valsComp)
         } else {
-          val body = new java.io.ByteArrayOutputStream()
+          val body = new ByteSink()
           // def levels: u32le length + width-1 hybrid
-          body.write(defs.length & 0xff); body.write((defs.length >> 8) & 0xff)
-          body.write((defs.length >> 16) & 0xff); body.write((defs.length >> 24) & 0xff)
-          body.write(defs)
+          body.le32(defs.length).raw(defs)
           body.write(valsBody.toByteArray)
           val raw = body.toByteArray
           val comp = compress(raw)
@@ -1065,11 +1054,7 @@ object ParquetPages {
     w.field(4, 6, 8).str("graft-pages")
     w.stop()
     val footer = w.bytes
-    out.write(footer)
-    val len = footer.length
-    out.write(Array((len & 0xff).toByte, ((len >> 8) & 0xff).toByte,
-      ((len >> 16) & 0xff).toByte, ((len >> 24) & 0xff).toByte))
-    out.write("PAR1".getBytes("US-ASCII"))
+    out.raw(footer).le32(footer.length).ascii("PAR1")
     val bytes = out.toByteArray
     if (truncate > 0) bytes.take(math.max(0, bytes.length - truncate)) else bytes
   }

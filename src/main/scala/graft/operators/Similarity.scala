@@ -144,14 +144,34 @@ object Similarity {
       .limit(k)
   }
 
-  /** EXACT all-pairs top-1 cosine neighbour per vector, as a
-    * distributed block-nested-loop — the scale-correct shape for the
-    * mutual-NN / reciprocal-best-match family when the data has no
-    * near-dup structure for LSH to exploit (exact kNN is O(n²) work
-    * no matter what; the engineering content is WHERE that work runs
-    * and what a task holds):
+  /** The probe set the NN recall audits run over: a deterministic
+    * fixed-count sample of 200 ids from the vector table — audit cost
+    * O(S·n), linear in the corpus for fixed S. The sample is the S
+    * smallest ids by the engine-portable md5 hash of `"nnsample:" + id`
+    * (ties by id) — content-independent, so every representation of
+    * the same corpus (full floats, int8-dequant, MRL-truncated) samples
+    * the SAME ids, and an external oracle replays the selection
+    * exactly. S ≥ n degenerates to the full table.
+    */
+  def auditProbes(vectors: DataFrame, idCol: String): DataFrame = {
+    val ids = vectors.select(col(idCol))
+      .orderBy(graft.functions.Hashing.hash64(
+        concat(lit("nnsample:"), col(idCol).cast("string"))), col(idCol))
+      .limit(AuditSampleSize) // TakeOrdered — bounded driver state
+    vectors.join(broadcast(ids), Seq(idCol)) // S-row broadcast semi-shape
+  }
+
+  /** Probe-sample size of [[auditProbes]]. */
+  val AuditSampleSize = 200
+
+  /** EXACT top-1 cosine neighbour over the FULL index `vectors` for
+    * each probe row, as a distributed block-nested-loop — the
+    * scale-correct shape for the mutual-NN / reciprocal-best-match
+    * family when the data has no near-dup structure for LSH to exploit
+    * (exact kNN is O(n²) work no matter what; the engineering content
+    * is WHERE that work runs and what a task holds):
     *
-    *  - the index side collapses into chunk rows of ≤ ~2·`chunkSize`
+    *  - the index side collapses into chunk rows of ≤ ~2·256
     *    (id, vec, norm) structs — BOUNDED row size, unlike a
     *    per-key collect of a whole blocking group;
     *  - the probe side replicates once per chunk via an equi-join on
@@ -167,70 +187,18 @@ object Similarity {
     *    hash aggregate with map-side partial combine (a window over
     *    n² rows would shuffle them all).
     *
-    * Ties break toward the smaller neighbour id. Output:
+    * Cost is O(|probes|·n) — linear in the corpus for a sampled probe
+    * set (recall audits sample the queries, never the index).
+    * `probes` must be a subset of `vectors` in (idCol, vecCol) —
+    * self-matches are excluded by id. Ties break toward the smaller
+    * neighbour id. Output:
     * (idCol, nb, cos) — one row per vector, cos UNROUNDED (callers
     * round at presentation; selection must compare full doubles).
     */
-  def top1Exact(vectors: DataFrame, idCol: String, vecCol: String,
-                chunkSize: Int = 256): DataFrame =
-    top1ExactFor(vectors, vectors, idCol, vecCol, chunkSize)
-
-  /** Conf key: `true` routes the NN recall-audit queries through the
-    * FULL exact all-pairs pass (O(n²) compute by contract — an audit
-    * you opt into, never the default at scale).
-    */
-  val ExactNNFlag = "spark.graft.exactNN"
-
-  /** Conf key: audit-sample size for the default (sampled-exact) path
-    * of the NN recall audits.
-    */
-  val NNSampleKey = "spark.graft.nnSampleSize"
-
-  /** The probe set the NN recall audits run over: by DEFAULT a
-    * deterministic fixed-count sample (`spark.graft.nnSampleSize`,
-    * default 200) of the vector table — audit cost O(S·n), linear in
-    * the corpus for fixed S — with the full exact all-pairs pass
-    * conf-gated behind `spark.graft.exactNN=true` (the
-    * q108/q160 exact/approx discipline, inverted because here the
-    * quadratic side is the opt-in). The sample is the S smallest ids
-    * by the engine-portable md5 hash of `"nnsample:" + id` (ties by
-    * id) — content-independent, so every representation of the same
-    * corpus (full floats, int8-dequant, MRL-truncated) samples the
-    * SAME ids, and an external oracle replays the selection exactly.
-    * S ≥ n degenerates to the full exact pass.
-    *
-    * Conf-capture semantics: `spark.graft.exactNN` / `nnSampleSize`
-    * are read ONCE, here, at DataFrame-BUILD time — a plan built under
-    * one conf keeps that sampling/gating even if the conf changes
-    * before execution (the gate decides plan SHAPE, which cannot be
-    * deferred to run time). Callers that need the decision pinned
-    * independently of session state pass `exact` / `sampleSize`
-    * explicitly; `None` defers to the conf.
-    */
-  def auditProbes(vectors: DataFrame, idCol: String,
-                  exact: Option[Boolean] = None,
-                  sampleSize: Option[Int] = None): DataFrame = {
-    val s = vectors.sparkSession
-    if (exact.getOrElse(s.conf.get(ExactNNFlag, "false") == "true")) vectors
-    else {
-      val size = sampleSize.getOrElse(s.conf.get(NNSampleKey, "200").toInt)
-      val ids = vectors.select(col(idCol))
-        .orderBy(graft.functions.Hashing.hash64(
-          concat(lit("nnsample:"), col(idCol).cast("string"))), col(idCol))
-        .limit(size) // TakeOrdered — bounded driver state
-      vectors.join(broadcast(ids), Seq(idCol)) // S-row broadcast semi-shape
-    }
-  }
-
-  /** [[top1Exact]] generalized to a probe subset: exact top-1 over
-    * the FULL index for each probe row only — O(|probes|·n) compute,
-    * the linear-in-corpus shape recall audits run at scale (sample
-    * the queries, never the index). `probes` must be a subset of
-    * `vectors` in (idCol, vecCol) — self-matches are excluded by id.
-    */
   def top1ExactFor(probes: DataFrame, vectors: DataFrame, idCol: String,
-                   vecCol: String, chunkSize: Int = 256): DataFrame = {
+                   vecCol: String): DataFrame = {
     val spark = vectors.sparkSession
+    val chunkSize = 256
     val n = vectors.count()
     // r16: floor the chunk count near the core count — the tile join
     // is keyed on _ck, so numChunks CAPS the stage's parallelism, and
@@ -270,45 +238,23 @@ object Similarity {
       .select(col("_id").as(idCol), (-col("_m.negnb")).as("nb"), col("_m.cos").as("cos"))
   }
 
-  /** Mutual nearest neighbours (reciprocal best match) from a top-1
-    * relation of shape (id, nb, cos): pairs (a, b), a < b, where each
-    * is the other's top-1. Linear — two filters and an equi-join on n
-    * rows.
+  /** Mutual-NN audit over the probe sample ([[auditProbes]]): exact
+    * top-1 for each sampled probe against the FULL index, then exact
+    * top-1 for each DISTINCT best-neighbour (≤ S ids — a bounded
+    * broadcast), and a pair (a, b) reports iff each is the other's
+    * exact top-1. Cost O(S·n) — linear in the corpus for the fixed
+    * audit sample. Output (a, b, cos), a < b, cos unrounded.
     */
-  /** Mutual-NN audit over the conf-resolved probe set
-    * ([[auditProbes]]): exact top-1 for each sampled probe against the
-    * FULL index, then exact top-1 for each DISTINCT best-neighbour
-    * (≤ S ids — a bounded broadcast), and a pair (a, b) reports iff
-    * each is the other's exact top-1. Default cost O(S·n) — linear in
-    * the corpus for the fixed audit sample; `spark.graft.exactNN=true`
-    * recovers the complete all-pairs mutual set via [[top1Exact]] +
-    * [[mutualFromTop1]]. Output (a, b, cos), a < b, cos unrounded.
-    */
-  def mutualNNAudit(vectors: DataFrame, idCol: String, vecCol: String,
-                    chunkSize: Int = 256): DataFrame = {
-    val s = vectors.sparkSession
-    if (s.conf.get(ExactNNFlag, "false") == "true")
-      mutualFromTop1(top1Exact(vectors, idCol, vecCol, chunkSize), idCol)
-    else {
-      val t1s = top1ExactFor(auditProbes(vectors, idCol), vectors,
-        idCol, vecCol, chunkSize)
-      val nbIds = t1s.select(col("nb").as(idCol)).distinct()
-      val t1b = top1ExactFor(vectors.join(broadcast(nbIds), Seq(idCol)),
-        vectors, idCol, vecCol, chunkSize)
-        .select(col(idCol).as("_bid"), col("nb").as("_bnb"))
-      // a sampled pair can surface from both endpoints — normalize and dedup
-      t1s.join(t1b, col("nb") === col("_bid") && col("_bnb") === col(idCol))
-        .select(least(col(idCol), col("nb")).as("a"),
-          greatest(col(idCol), col("nb")).as("b"), col("cos"))
-        .groupBy("a", "b").agg(max(col("cos")).as("cos"))
-    }
-  }
-
-  def mutualFromTop1(top1: DataFrame, idCol: String): DataFrame = {
-    val fwd = top1.filter(col(idCol) < col("nb"))
-      .select(col(idCol).as("a"), col("nb").as("b"), col("cos"))
-    val bwd = top1.filter(col(idCol) > col("nb"))
-      .select(col("nb").as("a"), col(idCol).as("b"))
-    fwd.join(bwd, Seq("a", "b")).select(col("a"), col("b"), col("cos"))
+  def mutualNNAudit(vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val t1s = top1ExactFor(auditProbes(vectors, idCol), vectors, idCol, vecCol)
+    val nbIds = t1s.select(col("nb").as(idCol)).distinct()
+    val t1b = top1ExactFor(vectors.join(broadcast(nbIds), Seq(idCol)),
+      vectors, idCol, vecCol)
+      .select(col(idCol).as("_bid"), col("nb").as("_bnb"))
+    // a sampled pair can surface from both endpoints — normalize and dedup
+    t1s.join(t1b, col("nb") === col("_bid") && col("_bnb") === col(idCol))
+      .select(least(col(idCol), col("nb")).as("a"),
+        greatest(col(idCol), col("nb")).as("b"), col("cos"))
+      .groupBy("a", "b").agg(max(col("cos")).as("cos"))
   }
 }

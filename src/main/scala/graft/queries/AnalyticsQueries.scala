@@ -1263,14 +1263,12 @@ object AnalyticsQueries {
     * where b is a's top cosine neighbor AND a is b's — the
     * reciprocal-best-match criterion behind bitext mining and
     * high-precision near-dup linking (one-sided NN chains through hub
-    * vectors; mutuality kills the hubs). DEFAULT path is the sampled
-    * audit ([[graft.operators.Similarity.mutualNNAudit]]): exact
-    * top-1 for a deterministic `spark.graft.nnSampleSize` (200)
-    * probe sample against the FULL index, then for their distinct
-    * best-neighbours, reporting pairs where each is the other's exact
-    * top-1 — O(S·n), linear in the corpus. The complete all-pairs
-    * mutual set (O(n²) by contract) is conf-gated behind
-    * `spark.graft.exactNN=true`; each exact pass is the
+    * vectors; mutuality kills the hubs). It runs as a sampled audit
+    * ([[graft.operators.Similarity.mutualNNAudit]]): exact top-1 for
+    * a deterministic 200-id probe sample against the FULL index, then
+    * for their distinct best-neighbours, reporting pairs where each
+    * is the other's exact top-1 — O(S·n), linear in the corpus. Each
+    * exact pass is the
     * block-nested-loop [[graft.operators.Similarity.top1ExactFor]]
     * (bounded chunk rows, chunk-ID-only broadcast, in-row local
     * argmax, map-side-combined `max(struct)` global argmax).

@@ -93,10 +93,9 @@ object CorpusQueries {
     * sf0.1; kernel form ~0.5 s).
     */
   def contaminationOverlap(docs: org.apache.spark.sql.DataFrame,
-                           evalPred: org.apache.spark.sql.Column,
-                           maxBroadcastEvalDocs: Long): org.apache.spark.sql.DataFrame =
+                           evalPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
     Dedup.shingleOverlapVsEval(docs.filter(!evalPred), docs.filter(evalPred),
-        "doc_id", "text", n = 3, maxBroadcastEvalDocs)
+        "doc_id", "text", n = 3)
       .filter(col("n_overlap") >= 1)
       .orderBy("doc_id")
 
@@ -109,7 +108,7 @@ object CorpusQueries {
   val q62 = Q("q62_contamination",
     (s, dir) =>
       contaminationOverlap(Tables.load(s, dir, "documents"),
-        pmod(col("doc_id"), lit(97)) === 0, maxBroadcastEvalDocs = 100000L),
+        pmod(col("doc_id"), lit(97)) === 0),
     Some(s"""
       WITH t AS (SELECT doc_id, $duckTokens AS w FROM documents),
       sh AS (SELECT doc_id,

@@ -19,13 +19,8 @@ import graft.queries.Q.{duckCos, duckDot, duckHash64}
   */
 object DataQueries {
 
-  private val stopwords = Seq("the", "a", "of", "and")
-  private val markerSets = Seq(
-    "en" -> Seq("the", "a"),
-    "de" -> Seq("der", "und", "das"),
-    "es" -> Seq("el", "los", "que"),
-    "fr" -> Seq("le", "la", "et"),
-    "zh" -> Seq("zh1", "zh2"))
+  private val stopwords = graft.curation.CurationPipeline.Stopwords
+  private val markerSets = graft.curation.CurationPipeline.MarkerSets
 
   // ---- shared DuckDB SQL fragments (mirror the Scala operators) ----
 
@@ -561,9 +556,7 @@ object DataQueries {
     */
   val q49 = Q("q49_curation",
     (s, dir) => graft.curation.CurationPipeline.curate(
-        Tables.load(s, dir, "documents"), "doc_id", "text",
-        graft.curation.CurationPipeline.Config(minQuality = 0.5,
-          allowedLangs = Seq("en"), nearDupJaccard = 0.5))
+        Tables.load(s, dir, "documents"), "doc_id", "text")
       .select("doc_id", "n_chars")
       .orderBy("doc_id"),
     Some {
@@ -1092,16 +1085,14 @@ object DataQueries {
     * — curated AND clean of benchmark leakage — exercising
     * `CurationPipeline.curate(evalDocs = …)` end-to-end against one
     * oracle. Eval docs ride raw (a benchmark is given as-is, never
-    * curated); the overlap join follows Dedup.shingleOverlapVsEval's
-    * size-guarded broadcast.
+    * curated); Dedup.shingleOverlapVsEval's overlap join lets AQE
+    * pick broadcast or shuffle from the eval grams' runtime size.
     */
   val q173 = Q("q173_curation_decontam",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       graft.curation.CurationPipeline.curate(
           docs.filter(pmod(col("doc_id"), lit(97)) =!= 0), "doc_id", "text",
-          graft.curation.CurationPipeline.Config(minQuality = 0.5,
-            allowedLangs = Seq("en"), nearDupJaccard = 0.5, maxEvalOverlap = 0.05),
           evalDocs = Some(docs.filter(pmod(col("doc_id"), lit(97)) === 0)))
         .select("doc_id", "n_chars")
         .orderBy("doc_id")
@@ -1212,7 +1203,6 @@ object DataQueries {
         .select(TA.contentFingerprint(col("text")).as("_fp"))
       graft.curation.CurationPipeline.curateIncrementalTagged(
           batch, store, "doc_id", "text",
-          graft.curation.CurationPipeline.Config(maxEvalOverlap = 0.05),
           evalDocs = Some(docs.filter(isEval)))
         .select(col("doc_id"), col("outcome"))
         .orderBy("doc_id")
@@ -3373,12 +3363,10 @@ object DataQueries {
     * the full 64 dims vs the first 16 and first 32 (`slice` — a
     * map-side transform), agreement per (label, dims) in exact micro
     * units plus the nano-quantized cosine mass of the truncated run.
-    * DEFAULT is the sampled audit: all three top-1 passes run over
-    * the deterministic `spark.graft.nnSampleSize` (200) probe sample
-    * against the FULL index ([[graft.operators.Similarity
+    * All three top-1 passes run over the deterministic 200-id probe
+    * sample against the FULL index ([[graft.operators.Similarity
     * .auditProbes]] — id-hashed, so every truncation level samples
-    * the SAME ids) — O(S·n); the full all-pairs audit is conf-gated
-    * behind `spark.graft.exactNN=true`. Each pass is q268's
+    * the SAME ids) — O(S·n). Each pass is q268's
     * block-nested-loop `top1ExactFor` (bounded chunks, chunk-ID-only
     * broadcast, map-side-combined argmax); ties break toward the
     * smaller id in both engines.
@@ -3464,13 +3452,11 @@ object DataQueries {
     * absmax int8 dequantized back to float) and compared;
     * `recall_micro` = agreement rate in exact micro units, plus the
     * nano-quantized cosine mass of both runs (how much similarity
-    * score the store gives up). DEFAULT is the sampled audit: both
-    * top-1 passes run over the deterministic
-    * `spark.graft.nnSampleSize` (200) probe sample against the FULL
-    * index ([[graft.operators.Similarity.auditProbes]] — the same ids
-    * under both representations, since the sample hashes ids, not
-    * content) — O(S·n), linear in the corpus; the full all-pairs
-    * audit is conf-gated behind `spark.graft.exactNN=true`. Each pass
+    * score the store gives up). Both top-1 passes run over the
+    * deterministic 200-id probe sample against the FULL index
+    * ([[graft.operators.Similarity.auditProbes]] — the same ids under
+    * both representations, since the sample hashes ids, not content)
+    * — O(S·n), linear in the corpus. Each pass
     * is the block-nested-loop shape of q268 ([[graft.operators
     * .Similarity.top1ExactFor]]: bounded chunk rows, broadcast of
     * chunk IDS only, in-row local argmax, map-side-combined
@@ -3710,22 +3696,17 @@ object DataQueries {
     * decontamination checks (q62/q196). Grams travel as the corpus-
     * standard 31-bit shingle hashes (the q62/q128 domain — never gram
     * strings); at ≫10M distinct grams per source the birthday bound
-    * inflates shared counts (~|g1|·|g2|/2³¹ expected collisions), so a
-    * deployment at that scale widens the kernel mask — the plan shape
-    * is unchanged. The join key is the gram hash, and a gram present
+    * inflates shared counts (~|g1|·|g2|/2³¹ expected collisions).
+    * The join key is the gram hash, and a gram present
     * in k sources fans out to k² ≤ |sources|² pairs — bounded by the
     * source-count square, NOT by document count, so the shape survives
     * any corpus size (one gram shuffle + one |sources|²-cell rollup).
     */
   val q364 = Q("q364_source_containment",
     (s, dir) => {
-      // conf-widened hash space (Dedup.ShingleBitsKey — the scaladoc
-      // there carries the birthday-bound arithmetic this query's own
-      // NOTE used to state); the oracle replays the 31-bit default,
-      // ShingleWidthSpec pins 31-vs-48-bit behavior
       val grams = Tables.load(s, dir, "documents")
         .select(col("source"),
-          explode(graft.operators.Dedup.shingleHashesWide(s, col("text"), 3)).as("h"))
+          explode(call_function("graft_shingle_hashes", col("text"), lit(3))).as("h"))
         .distinct()
       val tot = grams.groupBy("source").agg(count(lit(1)).as("n_grams"))
       val shared = grams.join(grams.select(col("source").as("source_b"), col("h")), "h")
@@ -3746,7 +3727,7 @@ object DataQueries {
                            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
                END AS g
              FROM t),
-      e AS (SELECT DISTINCT source, ${duckHash64("gg")} & ${Dedup.DefaultShingleMask} AS h
+      e AS (SELECT DISTINCT source, ${duckHash64("gg")} & ${Dedup.ShingleMask} AS h
             FROM (SELECT source, unnest(g) AS gg FROM sh)),
       tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n_grams FROM e GROUP BY source),
       shared AS (SELECT a.source AS source_a, b.source AS source_b,

@@ -153,10 +153,6 @@ object ExtQueries {
     */
   val q128 = Q("q128_setsim_join",
     (s, dir) => {
-      // conf-widened hash space (Dedup.ShingleBitsKey): exact set
-      // similarity is exactly where 31-bit collisions at >10M grams
-      // show up as phantom intersections; the committed oracle replays
-      // the 31-bit default, non-default widths are ShingleWidthSpec's
       // r16: fan the (unsplittable single-file) scan before the
       // shingle-hash kernel — the whole tokenize+hash pass otherwise
       // fuses into a one-task scan stage; no-op on multi-split sources
@@ -164,7 +160,7 @@ object ExtQueries {
           Tables.load(s, dir, "documents").select(col("doc_id"), col("text")),
           col("doc_id"))
         .select(col("doc_id"),
-          sort_array(Dedup.shingleHashesWide(s, col("text"), 3)).as("hs"))
+          sort_array(call_function("graft_shingle_hashes", col("text"), lit(3))).as("hs"))
       graft.operators.SetSimJoin.pairs(s, docs, 6, 10).orderBy("id_a", "id_b")
     },
     Some(s"""
@@ -1726,15 +1722,8 @@ object ExtQueries {
     * and the distribution-level complement to q111's scalar PSI
     * (PSI says "drifted", the grid says WHERE in the distribution).
     * One grouped percentile pass per cohort, then the nine-row
-    * relations join on decile index.
-    *
-    * The percentile is conf-gated: `spark.graft.approxPercentile=true`
-    * swaps the exact `percentile` (full per-group sort — the oracle
-    * shape) for `percentile_approx`'s mergeable KLL-style sketch at
-    * `spark.graft.approxPercentile.accuracy` (default 10000, ~1e-4
-    * rank error), the q52 precedent. At 100 TB the sketch is the only
-    * sane plan — fixed memory per group, one pass, no sort — so the
-    * switch is a runtime conf, not a code edit.
+    * relations join on decile index. The percentile is the exact
+    * `percentile` (full per-group sort — the oracle shape).
     */
   val q160 = Q("q160_qq_drift_grid",
     (s, dir) => {
@@ -1742,11 +1731,7 @@ object ExtQueries {
         .select(when(pmod(col("o_orderkey"), lit(2)) === 0, "a").otherwise("b").as("cohort"),
           col("o_totalprice").as("v"))
       val deciles = (1 to 9).map(_ / 10.0)
-      val approx = s.conf.get("spark.graft.approxPercentile", "false") == "true"
-      val acc = s.conf.get("spark.graft.approxPercentile.accuracy", "10000").toInt
-      val pctAgg =
-        if (approx) percentile_approx(col("v"), array(deciles.map(lit): _*), lit(acc))
-        else expr(s"percentile(v, array(${deciles.mkString(", ")}))")
+      val pctAgg = expr(s"percentile(v, array(${deciles.mkString(", ")}))")
       val q = o.groupBy("cohort").agg(pctAgg.as("qs"))
       val a = q.filter(col("cohort") === "a")
         .select(posexplode(col("qs")).as(Seq("i", "pa")))

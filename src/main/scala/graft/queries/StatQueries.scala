@@ -83,23 +83,13 @@ object StatQueries {
     * Plan shape: two grouped exact-percentile passes with a broadcast
     * join between them (group cardinality = |event_type|, tiny), then
     * one counting pass. Exact `percentile` buffers each group's values
-    * (fine at |group| ≤ a few hundred million rows / executor memory);
-    * the 100 TB path swaps both medians for the mergeable
-    * `percentile_approx` sketch with zero shape change — conf-gated
-    * exactly like q160: `spark.graft.approxPercentile=true` at
-    * `spark.graft.approxPercentile.accuracy` (default 10000, ~1e-4
-    * rank error), a runtime switch, not a code edit. Doubles compare,
-    * never accumulate, so cross-engine parity on the exact branch is
-    * exact (percentile parity proven by q50); the oracle gates the
-    * exact branch, StatQueriesSpec pins both.
+    * (fine at |group| ≤ a few hundred million rows / executor memory).
+    * Doubles compare, never accumulate, so cross-engine parity is
+    * exact (percentile parity proven by q50).
     */
   val q108 = Q("q108_mad_outliers",
     (s, dir) => {
-      val approx = s.conf.get("spark.graft.approxPercentile", "false") == "true"
-      val acc = s.conf.get("spark.graft.approxPercentile.accuracy", "10000").toInt
-      def median(c: String) =
-        if (approx) percentile_approx(col(c), lit(0.5), lit(acc))
-        else expr(s"percentile($c, 0.5)")
+      def median(c: String) = expr(s"percentile($c, 0.5)")
       val e = Tables.load(s, dir, "events").select(col("event_type"), col("value"))
       val med = e.groupBy("event_type")
         .agg(median("value").as("med"))

@@ -405,19 +405,16 @@ object TrainQueries {
     * global-window audit) runs over ~n/shardW ≈ √n shard rows and each
     * within-shard window over ~shardW ≈ √n rows, so at 10⁹ docs both
     * levels stay ~31k rows instead of a 10⁷-row level-1 relation at
-    * the old fixed width of 100. `spark.graft.shardWidth` overrides
-    * (e.g. to align shards with ingest partitions); the decomposition
-    * is exact at ANY width, so the oracle is width-independent — the
-    * driver gate at three scales exercises three different widths.
+    * the old fixed width of 100. The decomposition is exact at ANY
+    * width, so the oracle is width-independent — the driver gate at
+    * three scales exercises three different widths.
     */
   val q84 = Q("q84_sequence_pack",
     (s, dir) => {
       val ctx = 512L
       val docs = Tables.load(s, dir, "documents")
-      // one cheap metadata count at construction (parquet row count),
-      // only when the width isn't pinned by conf
-      val shardW = s.conf.getOption("spark.graft.shardWidth").map(_.toLong)
-        .getOrElse(math.max(1L, math.ceil(math.sqrt(docs.count().toDouble)).toLong))
+      // one cheap metadata count at construction (parquet row count)
+      val shardW = math.max(1L, math.ceil(math.sqrt(docs.count().toDouble)).toLong)
       val toks = docs
         .select(col("doc_id"), TA.tokenCount(col("text")).cast("long").as("n_tokens"))
         .withColumn("shard", (col("doc_id") / shardW).cast("long"))

@@ -37,6 +37,20 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
+  test("engine functions reject a wrong argument count at analysis, naming the function") {
+    val calls = Seq(
+      "graft_dot(array(1.0F), array(2.0F), array(3.0F))" -> ("graft_dot", 2, 3),
+      "graft_shingle_hashes('a b c d', 3, 48)" -> ("graft_shingle_hashes", 2, 3),
+      "graft_minhash_bands('a b c d', 2)" -> ("graft_minhash_bands", 3, 2),
+      "graft_hash64()" -> ("graft_hash64", 1, 0))
+    for ((call, (name, expected, actual)) <- calls) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call").queryExecution.analyzed)
+      assert(e.getMessage.contains(s"`$name` requires $expected parameters") &&
+        e.getMessage.contains(s"actual number is $actual"), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("register on a factory session installs nothing twice") {
     val x = spark.experimental
     val (rules, strategies) = (x.extraOptimizations, x.extraStrategies)

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
-/** Mutual-NN contract pins (VERDICT r8 item 2): the EXACT path
-  * ([[Similarity.top1Exact]], q268's engine) must reproduce a naive
+/** Mutual-NN contract pins (VERDICT r8 item 2): the exact top-1
+  * ([[Similarity.top1ExactFor]], q268's engine) must reproduce a naive
   * all-pairs argmax — same neighbour ids, same tie-breaks — while its
   * plan never broadcasts the vector table (the only broadcast is the
   * chunk-id grid).
@@ -41,7 +41,7 @@ class MutualNNSpec extends SparkSpec {
     val vecs = emb.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val expect = naiveTop1(vecs)
-    val got = Similarity.top1Exact(emb, "vec_id", "embedding", chunkSize = 7)
+    val got = ExactNN.top1Exact(emb, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(got.keySet == expect.keySet)
     got.foreach { case (id, (nb, cos)) =>
@@ -72,9 +72,9 @@ class MutualNNSpec extends SparkSpec {
   test("top1ExactFor on a probe subset ≡ top1Exact restricted to it") {
     val emb = Tables.load(spark, sf, "embeddings")
     val probes = emb.filter(col("vec_id") % 3 === 0)
-    val subset = Similarity.top1ExactFor(probes, emb, "vec_id", "embedding", chunkSize = 7)
+    val subset = Similarity.top1ExactFor(probes, emb, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val full = Similarity.top1Exact(emb, "vec_id", "embedding", chunkSize = 7)
+    val full = ExactNN.top1Exact(emb, "vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(subset.keySet == full.keySet.filter(_ % 3 == 0))
     subset.foreach { case (id, v) => assert(v == full(id), s"vec $id") }
@@ -82,51 +82,29 @@ class MutualNNSpec extends SparkSpec {
 
   test("sampled mutualNNAudit = full mutual set restricted to pairs touching the sample") {
     val emb = Tables.load(spark, sf, "embeddings")
-    val fullPairs = Similarity.mutualFromTop1(
-      Similarity.top1Exact(emb, "vec_id", "embedding"), "vec_id")
+    val fullPairs = ExactNN.mutualFromTop1(
+      ExactNN.top1Exact(emb, "vec_id", "embedding"), "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sampleIds = Similarity.auditProbes(emb, "vec_id")
-    // explicit params pin the decision independently of session conf
-    // (ADVICE r10: the conf is captured at plan-BUILD time, so a plan
-    // built under one conf keeps it — explicit args are the safe form)
-    val pinned = Similarity.auditProbes(emb, "vec_id", sampleSize = Some(20))
+    val ids = Similarity.auditProbes(emb, "vec_id")
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(pinned.size == 20)
-    assert(Similarity.auditProbes(emb, "vec_id", exact = Some(true)).count() == emb.count())
-    try {
-      spark.conf.set(Similarity.NNSampleKey, "20")
-      val ids = Similarity.auditProbes(emb, "vec_id")
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      assert(ids.size == 20, s"expected a 20-id sample, got ${ids.size}")
-      assert(pinned == ids, "explicit sampleSize must select the same md5-ordered ids as the conf")
-      val sampled = Similarity.mutualNNAudit(emb, "vec_id", "embedding")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val expect = fullPairs.filter { case (a, b) => ids(a) || ids(b) }
-      assert(sampled == expect,
-        s"sampled missed ${expect -- sampled}, invented ${sampled -- expect}")
-      // the conf-gated exact path recovers the complete mutual set
-      spark.conf.set(Similarity.ExactNNFlag, "true")
-      val exact = Similarity.mutualNNAudit(emb, "vec_id", "embedding")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(exact == fullPairs)
-    } finally {
-      spark.conf.unset(Similarity.NNSampleKey)
-      spark.conf.unset(Similarity.ExactNNFlag)
-    }
-    // default sample size: min(200, n) rows, deterministic
-    assert(sampleIds.count() == math.min(200L, emb.count()))
+    // min(200, n) md5-ordered ids, replayable off the engine
+    assert(ids.size == math.min(200L, emb.count()))
+    assert(ids == ExactNN.auditSample(emb.select("vec_id").collect().map(_.getLong(0)).toSeq))
+    val sampled = Similarity.mutualNNAudit(emb, "vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expect = fullPairs.filter { case (a, b) => ids(a) || ids(b) }
+    assert(expect.nonEmpty && expect != fullPairs, "the sample must be a proper, non-trivial subset")
+    assert(sampled == expect,
+      s"sampled missed ${expect -- sampled}, invented ${sampled -- expect}")
   }
 
   test("sampled mutualNNAudit is invariant under input partitioning") {
     val emb = Tables.load(spark, sf, "embeddings")
-    try {
-      spark.conf.set(Similarity.NNSampleKey, "30")
-      def run(df: org.apache.spark.sql.DataFrame) =
-        Similarity.mutualNNAudit(df, "vec_id", "embedding")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val base = run(emb.repartition(1))
-      assert(run(emb.repartition(5)) == base)
-      assert(run(emb.repartition(32)) == base)
-    } finally spark.conf.unset(Similarity.NNSampleKey)
+    def run(df: org.apache.spark.sql.DataFrame) =
+      Similarity.mutualNNAudit(df, "vec_id", "embedding")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val base = run(emb.repartition(1))
+    assert(run(emb.repartition(5)) == base)
+    assert(run(emb.repartition(32)) == base)
   }
 }

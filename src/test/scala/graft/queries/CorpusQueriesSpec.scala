@@ -15,7 +15,7 @@ class CorpusQueriesSpec extends SparkSpec {
       (i, (0 to 6).map(j => s"w${(i * 7 + j * 3) % 23}").mkString(" "))
     }.toDF("doc_id", "text")
     val pred = pmod(col("doc_id"), lit(10)) === 0
-    val out = CorpusQueries.contaminationOverlap(docs, pred, maxBroadcastEvalDocs = 1000L)
+    val out = CorpusQueries.contaminationOverlap(docs, pred)
     val rows = out.collect()
     assert(rows.nonEmpty, "spec needs actual shingle overlap")
     // broadcast-vs-shuffle is decided by ADAPTIVE execution from the
@@ -62,8 +62,7 @@ class CorpusQueriesSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, "a b c d e"), (1L, "a b c d e")).toDF("doc_id", "text")
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    CorpusQueries.contaminationOverlap(docs, col("doc_id") === 0L,
-      maxBroadcastEvalDocs = 3L) // NOT executed
+    CorpusQueries.contaminationOverlap(docs, col("doc_id") === 0L) // NOT executed
     val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(after == before,
       s"plan construction launched ${after - before} job(s); must be lazy")

@@ -634,12 +634,9 @@ class NewOpsReplaySpec extends SparkSpec {
   }
 
   test("q351: quantization recall matches a brute-force double replay") {
-    // replay the FULL audit math (the sampled default ≡ exact-restricted
-    // equivalence is pinned in MutualNNSpec)
-    spark.conf.set(graft.operators.Similarity.ExactNNFlag, "true")
-    val out =
-      try rows(DataQueries.q351.fn(spark, sf))
-      finally spark.conf.unset(graft.operators.Similarity.ExactNNFlag)
+    // brute force over the full index for the audit-sample probes
+    // (sampled ≡ exact-restricted is pinned in MutualNNSpec)
+    val out = rows(DataQueries.q351.fn(spark, sf))
     assert(out.nonEmpty)
     val vecs = Tables.load(spark, sf, "embeddings")
       .select("vec_id", "label", "embedding").collect()
@@ -665,7 +662,9 @@ class NewOpsReplaySpec extends SparkSpec {
       })
     }
     val (tf, tq) = (top1(vecs), top1(quant))
-    val byLabel = vecs.groupBy(_._2)
+    val sample = graft.operators.ExactNN.auditSample(vecs.map(_._1).toSeq)
+    val byLabel = vecs.filter(v => sample(v._1)).groupBy(_._2)
+    assert(out.map(_.head.asInstanceOf[Long]).toSet == byLabel.keySet)
     out.foreach { r =>
       val Seq(label, n, same, cf, cq, recall) = r.map(_.asInstanceOf[Long])
       val ids = byLabel(label).map(_._1)
@@ -754,10 +753,7 @@ class NewOpsReplaySpec extends SparkSpec {
   }
 
   test("q356: MRL truncation recall matches a brute-force replay") {
-    spark.conf.set(graft.operators.Similarity.ExactNNFlag, "true")
-    val out =
-      try rows(DataQueries.q356.fn(spark, sf))
-      finally spark.conf.unset(graft.operators.Similarity.ExactNNFlag)
+    val out = rows(DataQueries.q356.fn(spark, sf))
     assert(out.nonEmpty)
     val vecs = Tables.load(spark, sf, "embeddings")
       .select("vec_id", "label", "embedding").collect()
@@ -775,7 +771,9 @@ class NewOpsReplaySpec extends SparkSpec {
         id -> (best._2, best._1)
       }.toMap
     val full = top1(vecs.map(v => (v._1, v._3)))
-    val byLabel = vecs.groupBy(_._2)
+    val sample = graft.operators.ExactNN.auditSample(vecs.map(_._1).toSeq)
+    val byLabel = vecs.filter(v => sample(v._1)).groupBy(_._2)
+    assert(out.map(_.head.asInstanceOf[Long]).toSet == byLabel.keySet)
     Seq(16, 32).foreach { d =>
       val trunc = top1(vecs.map(v => (v._1, v._3.take(d))))
       out.filter(_(1).asInstanceOf[Long] == d.toLong).foreach { r =>

@@ -310,26 +310,6 @@ class StatQueriesSpec extends SparkSpec {
     assert(d >= 0.0 && d <= 1.0, s"KS distance $d out of range")
   }
 
-  test("q108 approx-percentile conf swap stays within sketch accuracy of the exact MAD fences") {
-    val exact = StatQueries.q108.fn(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
-    spark.conf.set("spark.graft.approxPercentile", "true")
-    try {
-      val approx = StatQueries.q108.fn(spark, sf).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
-      assert(approx.keySet == exact.keySet && approx.nonEmpty)
-      for ((et, (en, emed, emad, eout)) <- exact; (an, amed, amad, aout) = approx(et)) {
-        assert(an == en, s"$et n_events")
-        // accuracy 10000 on small per-type groups: the sketch's rank
-        // error keeps both medians within 2% of exact, and the outlier
-        // count (integer, fence-sensitive) within a few rows
-        assert(math.abs(amed - emed) <= 0.02 * math.max(1.0, math.abs(emed)), s"$et median: $amed vs $emed")
-        assert(math.abs(amad - emad) <= 0.02 * math.max(1.0, math.abs(emad)), s"$et mad: $amad vs $emad")
-        assert(math.abs(aout - eout) <= math.max(3L, eout / 20), s"$et outliers: $aout vs $eout")
-      }
-    } finally spark.conf.unset("spark.graft.approxPercentile")
-  }
-
   test("q114: one canonical per cluster, and it is the cluster's best doc") {
     val docs = graft.Tables.load(spark, sf, "documents")
     val pairs = graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text",

@@ -182,13 +182,23 @@ class TrainQueriesSpec extends SparkSpec {
     })
   }
 
-  test("q84: shard-width decomposition is exact at any width (conf override ≡ default √n)") {
-    val byDefault = TrainQueries.q84.fn(spark, sf).collect().map(_.toSeq)
-    spark.conf.set("spark.graft.shardWidth", "7")
-    try {
-      val byConf = TrainQueries.q84.fn(spark, sf).collect().map(_.toSeq)
-      assert(byConf.toSeq == byDefault.toSeq)
-    } finally spark.conf.unset("spark.graft.shardWidth")
+  test("q84: shard-width decomposition is exact at any width (a 49-doc corpus packs at width 7)") {
+    val nTokens = TrainQueries.q84.fn(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = java.nio.file.Files.createTempDirectory("q84-width").toString
+    graft.Tables.load(spark, sf, "documents").orderBy("doc_id").limit(49)
+      .write.parquet(s"$dir/documents.parquet")
+    val out = TrainQueries.q84.fn(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(out.map(_._1).toSeq == nTokens.keys.toSeq.sorted.take(49))
+    // replay: offsets are the prefix sums of n_tokens in doc_id order
+    var offset = 0L
+    out.foreach { case (id, n, o, first, last) =>
+      assert(n == nTokens(id), s"doc $id n_tokens")
+      assert(o == offset, s"doc $id offset")
+      assert(first == o / 512 && last == (o + math.max(n, 1L) - 1) / 512, s"doc $id seqs")
+      offset += n
+    }
   }
 
   test("q82: pairs are adjacent lowercase 2-grams ranked by count") {
